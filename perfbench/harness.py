@@ -4,11 +4,17 @@ A pass submits the workload's statements one at a time (a single-client
 closed loop: the next statement goes out only when the previous result
 has been collected). `spark.catalog.clearCache()` runs before every
 statement so no statement reads what an earlier one persisted.
+
+Set-up is timed from process start until the engine is ready: the
+program's import, the session with its JVM launch, the Engine with its
+function registry, and table registration. Input generation and the
+run stamp happen in between and are left out.
 """
 
 from __future__ import annotations
 
 import hashlib
+import importlib
 import json
 import math
 import os
@@ -20,8 +26,6 @@ import time
 
 import metrics as M
 from tracer import Tracer
-
-SETUPS = 3
 
 
 def _median(xs):
@@ -41,11 +45,14 @@ class Run:
         self.t_process = t_process
         self.tracer = Tracer() if trace else None
         self.stamp: dict = {}
-        self.captured: dict = {}
 
     # ------------------------------------------------------------------
     def execute(self) -> dict:
         st = self.stamp
+        # the program's import is the first part of set-up
+        for mod in ("session", "engine", "sources.tpch_full"):
+            importlib.import_module(f"incubator_impala_spark.{mod}")
+        st["import_s"] = time.perf_counter() - self.t_process
         st.update(workload=self.w.name, seed=self.seed, seconds=self.seconds,
                   trace=int(self.trace), pid=os.getpid(), cpus=self.cpus,
                   nproc=os.cpu_count(),
@@ -62,9 +69,8 @@ class Run:
         st["input_rows"] = sum(t["rows"] for t in manifest["tables"].values())
         st["input_bytes"] = sum(t["bytes"] for t in manifest["tables"].values())
         self.manifest = manifest
-        self._isolate_caches()
 
-        ctx = self._setups(data_dir, t_gen=st["gen_s"])
+        ctx = self._setup(data_dir)
         self.ctx = ctx
         spark = ctx.spark
         st["spark_version"] = spark.version
@@ -102,40 +108,21 @@ class Run:
         return self._result(cold, warm, traced, rss, gate)
 
     # ------------------------------------------------------------------
-    def _isolate_caches(self) -> None:
-        """The nested-TPC-H builders cache their derived tables under a
-        fixed /tmp path that outlives the process; point it at this
-        run's work directory so every run starts cold and writes stay
-        inside the checkout."""
-        from incubator_impala_spark.queries import nested_tpch
-
-        nested_tpch._NESTED_CACHE_ROOT = os.path.join(self.work, "nested")
-
-    def _setups(self, data_dir: str, t_gen: float):
-        times, layers = [], []
-        ctx = None
-        for i in range(SETUPS):
-            if ctx is not None:
-                ctx.spark.stop()
-            t0 = time.perf_counter()
-            if self.tracer:
-                root = len(self.tracer.spans)
-                self.tracer.install(M.setup_targets())
-                try:
-                    with self.tracer.span("setup"):
-                        ctx = self.w.setup(self.cpus, data_dir)
-                finally:
-                    self.tracer.uninstall()
-                layers.append(self.tracer.self_times(root))
-            else:
-                ctx = self.w.setup(self.cpus, data_dir)
-            t1 = time.perf_counter()
-            # the first set-up runs from process start (imports, JVM
-            # launch); input generation in between is not set-up
-            times.append(t1 - self.t_process - t_gen if i == 0 else t1 - t0)
-        self.stamp["setup_times_s"] = times
-        self.setup_times = times
-        self.setup_layers = layers
+    def _setup(self, data_dir: str):
+        t0 = time.perf_counter()
+        if self.tracer:
+            root = len(self.tracer.spans)
+            self.tracer.install(M.setup_targets())
+            try:
+                with self.tracer.span("setup"):
+                    ctx = self.w.setup(self.cpus, data_dir)
+            finally:
+                self.tracer.uninstall()
+            self.setup_layers = self.tracer.self_times(root)
+        else:
+            ctx = self.w.setup(self.cpus, data_dir)
+        self.stamp["engine_setup_s"] = time.perf_counter() - t0
+        self.setup_s = self.stamp["import_s"] + self.stamp["engine_setup_s"]
         return ctx
 
     def _pass(self, k: int, traced: bool, keep: bool) -> dict:
@@ -147,7 +134,7 @@ class Run:
             p["s"] = time.perf_counter() - t0
             return p
         tr = self.tracer
-        self._capture_install()
+        tr.kept.clear()
         tr.install(M.pass_targets())
         root = len(tr.spans)
         try:
@@ -155,7 +142,6 @@ class Run:
                 p = self._loop(k, stmts, traced=True, keep=keep)
         finally:
             tr.uninstall()
-            self._capture_uninstall()
             tr.stmt = None
         p["s"] = tr.spans[root].duration
         p["layers"] = tr.self_times(root)
@@ -223,32 +209,8 @@ class Run:
                 self.work, self.w.database(0))
 
     # -- operator counters (traced passes only) -------------------------
-    def _capture_install(self) -> None:
-        """Keep the LSH candidate and pair DataFrames a traced pass
-        builds, to count them after the pass."""
-        from incubator_impala_spark.operators import dedup
-
-        cap = self.captured
-        cap.clear()
-        self._cap_orig = []
-        for attr, key in (("lsh_candidate_pairs", "lsh_cand"),
-                          ("minhash_lsh_pairs", "lsh_pairs")):
-            fn = getattr(dedup, attr)
-            self._cap_orig.append((dedup, attr, fn))
-
-            def keep(*args, _fn=fn, _key=key, **kwargs):
-                cap[_key] = out = _fn(*args, **kwargs)
-                return out
-
-            setattr(dedup, attr, keep)
-
-    def _capture_uninstall(self) -> None:
-        while self._cap_orig:
-            owner, attr, fn = self._cap_orig.pop()
-            setattr(owner, attr, fn)
-
     def _count_operators(self) -> dict:
-        out = {key: df.count() for key, df in self.captured.items()}
+        out = {key: df.count() for key, df in self.tracer.kept.items()}
         self.ctx.spark.catalog.clearCache()
         return out
 
@@ -317,7 +279,7 @@ class Run:
                             "beyond": len(samples)
                             - math.ceil(tail_p / 100 * len(samples))}
         e2e = {
-            "setup_s": _median(self.setup_times),
+            "setup_s": self.setup_s,
             "first_pass_s": cold["s"],
             "pass_s": _median([p["s"] for p in warm]),
             "query_geomean_s": M.geomean(per_stmt.values()),
@@ -335,10 +297,9 @@ class Run:
                 "attempted": attempted, "failed": failed, "metrics": out}
 
     def _per_layer(self, warm, traced, rss) -> dict:
-        layer = {}
+        layer = {"program.import_s": self.stamp["import_s"]}
         for name in M.SETUP_LAYERS:
-            layer[name + "_s"] = _median(
-                [s.get(name, 0.0) for s in self.setup_layers])
+            layer[name + "_s"] = self.setup_layers.get(name, 0.0)
         # the traced pass of median length; its self times sum to it
         rep = sorted(traced, key=lambda p: p["s"])[(len(traced) - 1) // 2]
         for name in M.PASS_LAYERS:

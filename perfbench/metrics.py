@@ -15,8 +15,9 @@ END_TO_END = {
     "correct_frac": "fraction",
 }
 
-# spans around set-up calls; metric "<name>_s" is the median over the
-# set-ups of the span's self time
+# spans around set-up calls; metric "<name>_s" is the span's self time
+# in the run's one set-up. "program.import_s" is the time from process
+# start until the package is imported.
 SETUP_LAYERS = ["session.get_spark", "engine.init", "functions.register_all",
                 "sources.register"]
 
@@ -31,6 +32,7 @@ PASS_LAYERS = ["engine.sql", "dialect.translate", "spark.analyze",
 
 # per-layer metrics (printed by `--trace 1` runs), name -> unit
 PER_LAYER = {
+    "program.import_s": "s",
     **{f"{n}_s": "s" for n in SETUP_LAYERS},
     **{f"{n}_s": "s" for n in PASS_LAYERS},
     "bench.self_s": "s",
@@ -75,7 +77,9 @@ def pass_targets() -> list[tuple]:
     """Wrap points inside a pass. `engine.py` reaches dialect.translate,
     acid.prepare and acid.handle through their modules, `acid.py` calls
     its own write_rows through its module globals, and every caller
-    reaches SparkSession.sql through the session object."""
+    reaches SparkSession.sql through the session object. The two dedup
+    targets keep the candidate and pair DataFrames they return, to be
+    counted after the pass."""
     from pyspark.sql import SparkSession
 
     from incubator_impala_spark import engine
@@ -90,8 +94,8 @@ def pass_targets() -> list[tuple]:
         (f"{_PKG}.acid", "handle", "acid.handle"),
         (f"{_PKG}.acid", "write_rows", "acid.write_rows"),
         (SparkSession, "sql", "spark.analyze"),
-        (ops, "minhash_lsh_pairs", "operators.build"),
-        (ops, "lsh_candidate_pairs", "operators.build"),
+        (ops, "minhash_lsh_pairs", "operators.build", "lsh_pairs"),
+        (ops, "lsh_candidate_pairs", "operators.build", "lsh_cand"),
     ]
 
 

@@ -4,9 +4,9 @@
     python3 perfbench/run.py --workload adhoc_sql --seed 1 --seconds 5 --trace 0
 
 Runs from the root of a checkout. It generates the workload's inputs
-from the seed, sets the engine up three times, runs one cold pass, the
-workload's warm-up passes and then measured passes for `--seconds` (at
-least the workload's minimum), checks every statement's result against
+from the seed, sets the engine up once (timed from process start), runs
+one cold pass and then measured warm passes for `--seconds` (at least
+the workload's minimum), checks every statement's result against
 DuckDB, and prints one JSON line last:
 {"correct", "attempted", "failed", "metrics"}. With `--trace 0` the
 metrics are the end-to-end ones; with `--trace 1` warm passes alternate

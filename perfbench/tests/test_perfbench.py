@@ -106,13 +106,19 @@ def test_install_wraps_and_restores():
         def f(x):
             return x + 1
 
-    original = Owner.f
+        @staticmethod
+        def g(x):
+            return x * 2
+
+    original = Owner.f, Owner.g
     tr = Tracer()
-    tr.install([(Owner, "f", "owner.f")])
+    tr.install([(Owner, "f", "owner.f"), (Owner, "g", "owner.g", "doubled")])
     assert Owner.f(1) == 2
-    assert [s.name for s in tr.spans] == ["owner.f"]
+    assert Owner.g(3) == 6 and Owner.g(4) == 8
+    assert [s.name for s in tr.spans] == ["owner.f", "owner.g", "owner.g"]
+    assert tr.kept == {"doubled": 8}
     tr.uninstall()
-    assert Owner.f is original
+    assert (Owner.f, Owner.g) == original
 
 
 def test_tail_percentile_leaves_ten_samples():

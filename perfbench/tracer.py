@@ -5,7 +5,8 @@ function at the name its callers look it up by (a module attribute or a
 class attribute) with a wrapper that records a span around the call,
 and `Tracer.uninstall` puts the original back. A span is
 (name, start, end, parent, statement id); spans stay in memory until
-`dump` writes them out at the end of a run.
+`dump` writes them out at the end of a run. A target may also name a
+key under which the wrapper keeps the value the call last returned.
 
 Self time of a span is its duration minus the time its direct children
 cover. The driver runs every wrapped call on one thread and each call
@@ -54,6 +55,7 @@ class Tracer:
         self._stack: list[int] = []
         self._originals: list[tuple[object, str, object]] = []
         self.stmt: str | None = None
+        self.kept: dict[str, object] = {}
 
     @contextmanager
     def span(self, name: str):
@@ -71,25 +73,29 @@ class Tracer:
             if parent is not None:
                 self.spans[parent].child_time += sp.duration
 
-    def _wrapper(self, fn, name: str):
+    def _wrapper(self, fn, name: str, keep: str | None = None):
         tracer = self
 
         @functools.wraps(fn)
         def traced(*args, **kwargs):
             with tracer.span(name):
-                return fn(*args, **kwargs)
+                out = fn(*args, **kwargs)
+            if keep is not None:
+                tracer.kept[keep] = out
+            return out
 
         return traced
 
     def install(self, targets) -> None:
-        """Wrap each (owner, attribute, span name) target; `owner` is a
-        module path string or an object (class, module)."""
-        for owner, attr, name in targets:
+        """Wrap each (owner, attribute, span name[, keep]) target;
+        `owner` is a module path string or an object (class, module).
+        With `keep`, the call's last return value is `self.kept[keep]`."""
+        for owner, attr, name, *keep in targets:
             if isinstance(owner, str):
                 owner = importlib.import_module(owner)
             fn = getattr(owner, attr)
             self._originals.append((owner, attr, fn))
-            setattr(owner, attr, self._wrapper(fn, name))
+            setattr(owner, attr, self._wrapper(fn, name, *keep))
 
     def uninstall(self) -> None:
         while self._originals:

@@ -19,8 +19,7 @@ import gen
 # committed full-schema fixture (fixtures/tpch). A subset of the
 # reference's 125 texts: the whole corpus takes ~50 s per warm pass and
 # one run can afford ~3 s. TPC-DS texts are left out because registering
-# the 24 TPC-DS views costs ~2.5 s in each of the three set-ups
-# (README.md, "Budget").
+# the 24 TPC-DS views adds ~2.5 s to set-up (README.md, "Budget").
 ADHOC = ["1", "2", "3", "10", "18", "21"]
 
 # pipeline_etl, transform half: dedup and sketch entries of queries.QUERIES
