@@ -60,6 +60,7 @@ class Run:
                   loadavg_start=list(os.getloadavg()),
                   python=platform.python_version())
         st.update(_source_ids(self.root))
+        steal0 = M.cpu_ticks()
 
         t0 = time.perf_counter()
         data_dir = os.path.join(self.work, "data")
@@ -81,12 +82,16 @@ class Run:
         # cold pass: first execution of every statement in this process
         cold = self._pass(0, traced=False, keep=True)
         self.cold = cold
+        # unmeasured warm-up: the first warm passes of a young JVM are
+        # the slowest and vary most while the JIT compiles
+        self.warmup = [self._pass(k, traced=False, keep=False)
+                       for k in range(1, self.w.warmup_passes + 1)]
         # measured window. A traced run alternates untraced and traced
         # passes, starting and ending untraced, so a remaining warm-up
         # trend favours neither side.
         warm, traced = [], []
         t_window = time.perf_counter()
-        k = 1
+        k = self.w.warmup_passes + 1
         while True:
             use_trace = self.trace and len(warm) > len(traced)
             p = self._pass(k, traced=use_trace, keep=False)
@@ -103,6 +108,7 @@ class Run:
 
         rss = M.peak_rss_mb()
         st["rss_mb"] = rss
+        st["steal_frac"] = M.steal_frac(steal0)
         gate = self._oracle_gate()
         st["loadavg_end"] = list(os.getloadavg())
         return self._result(cold, warm, traced, rss, gate)
@@ -241,7 +247,7 @@ class Run:
                 ok.append(name)
         con.close()
         # every later execution must return what the checked one did
-        for p in self.warm + self.traced:
+        for p in self.warmup + self.warm + self.traced:
             for name, err in p["errors"].items():
                 bad.setdefault(name, err)
             for name, n in p["nrows"].items():
@@ -257,13 +263,14 @@ class Run:
     # -- metrics ------------------------------------------------------------
     def _result(self, cold, warm, traced, rss, gate) -> dict:
         st = self.stamp
-        passes = [cold] + warm + traced
+        passes = [cold] + self.warmup + warm + traced
         attempted = sum(len(p["lat"]) for p in passes)
         failed = sum(len(p["errors"]) for p in passes)
         # a statement that mismatched the oracle fails in every pass
         failed += sum(1 for p in passes for n in p["lat"]
                       if n in gate["bad"] and n not in p["errors"])
         st["pass_s"] = [p["s"] for p in warm]
+        st["warmup_pass_s"] = [p["s"] for p in self.warmup]
         st["traced_pass_s"] = [p["s"] for p in traced]
         st["first_pass_s"] = cold["s"]
         st["first_pass_stmt_s"] = cold["lat"]

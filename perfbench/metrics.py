@@ -213,3 +213,16 @@ def to_pandas(cols, rows):
     import pandas as pd
 
     return pd.DataFrame.from_records([tuple(r) for r in rows], columns=cols)
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs since boot, from /proc/stat."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    return f[7], sum(f)
+
+
+def steal_frac(since: tuple[int, int]) -> float:
+    """Share of CPU time the host took from this machine since `since`."""
+    steal, total = cpu_ticks()
+    return (steal - since[0]) / max(1, total - since[1])

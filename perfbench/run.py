@@ -5,8 +5,9 @@
 
 Runs from the root of a checkout. It generates the workload's inputs
 from the seed, sets the engine up once (timed from process start), runs
-one cold pass and then measured warm passes for `--seconds` (at least
-the workload's minimum), checks every statement's result against
+one cold pass, the workload's unmeasured warm-up passes, and then
+measured warm passes for `--seconds` (at least the workload's minimum
+count), checks every statement's result against
 DuckDB, and prints one JSON line last:
 {"correct", "attempted", "failed", "metrics"}. With `--trace 0` the
 metrics are the end-to-end ones; with `--trace 1` warm passes alternate
@@ -100,7 +101,10 @@ def main(argv=None) -> int:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
-    cpus = min(len(os.sched_getaffinity(0)), 4)
+    # half the cores for Spark's task threads: the JVM's JIT and GC
+    # threads, the Python workers and the driver need the rest, and a
+    # run with more runnable threads than cores times the scheduler
+    cpus = max(1, min(len(os.sched_getaffinity(0)) // 2, 4))
     tag = f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}"
     state = os.path.join(ROOT, ".perfbench")
     work = os.path.join(state, "work", tag)

@@ -137,6 +137,7 @@ sys.path.insert(0, {bench!r})
 import run, workloads
 workloads.SCALE = 0.001
 for w in workloads.WORKLOADS.values():
+    w.warmup_passes = 0
     w.min_warm_passes = 1
     w.trace_pairs = 1
 sys.exit(run.main(sys.argv[1:]))

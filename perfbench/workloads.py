@@ -78,7 +78,8 @@ class AdhocSql:
     name = "adhoc_sql"
     why = ("reference TPC-H texts via Engine.sql on small data: dialect, "
            "dispatch, analysis, planning and per-job overhead")
-    min_warm_passes = 3
+    warmup_passes = 2
+    min_warm_passes = 5
     trace_pairs = 2
 
     def make_inputs(self, seed: int, data_dir: str) -> dict:
@@ -120,7 +121,8 @@ class PipelineEtl:
     name = "pipeline_etl"
     why = ("MinHash dedup and KLL sketch operators over a generated corpus, "
            "then a DDL/DML load session: operators, UDFs, ACID, writes, stats")
-    min_warm_passes = 2
+    warmup_passes = 1
+    min_warm_passes = 3
     trace_pairs = 1
 
     def make_inputs(self, seed: int, data_dir: str) -> dict:
