@@ -49,7 +49,7 @@ BENCH_QUERIES = [
     "pipeline_corpus_curation",    # dedup ∩ quality ∩ split end-to-end
     "pipeline_dedup_clusters",     # iterative min-label CC (r4 promote)
     "pipeline_stratified_sample",  # per-stratum hash sampling (r4 promote)
-    "fn_sketch_kll",               # KLL quantile sketch UDAF + verify
+    "fn_sketch_kll",               # native KLL quantile sketch + verify
     "tpcds_q36_style_rollup_rank",  # rollup + grouping + windowed rank
     "tpcds_q51_style_cumulative_crossover",  # FOJ + cumulative windows
     "tpcds_q78_style_no_return_channel_ratio",  # anti join x2 + ratio

@@ -48,6 +48,60 @@ def _raise_keep_native():
     raise ValueError("keep native spelling")
 
 
+def _kll_points(args):
+    """Constant KLL probe points: variadic args, where a quoted
+    comma list ('0.25,0.5,0.75') contributes each of its items."""
+    pts = []
+    for x in (x.strip() for x in args):
+        if len(x) > 1 and x[0] == x[-1] == "'":
+            pts.extend(p.strip() for p in x[1:-1].split(","))
+        else:
+            pts.append(x)
+    return pts
+
+
+def _kll_ranks(a):
+    """Exclusive ranks of the split points a[1:] in sketch a[0], as an
+    array (see the -x note on the ds_kll_* macros)."""
+    pts = ", ".join(f"-cast({p} as double)" for p in _kll_points(a[1:]))
+    return (f"transform(kll_sketch_get_rank_double("
+            f"cast({a[0]} as binary), array({pts})), r -> 1d - r)")
+
+
+def _cxx_g(v):
+    """C++ default ostream text of double `v` (printf %g: 6
+    significant digits, trailing zeros dropped), the reference's
+    stringstream formatting in datasketches-common.cc. Java's %g keeps
+    the zeros, so they are stripped from the mantissa."""
+    return (f"regexp_replace(regexp_replace(format_string('%.6g', {v}), "
+            f"'([.][0-9]*?)0+(e|$)', '$1$2'), '[.](e|$)', '$1')")
+
+
+
+def _kll_stringify(sk):
+    """kll_sketch::to_string's fields (datasketches-functions-ir.cc:
+    209-221) on one line, so the row survives the test files'
+    row_regex verification. The native summary describes the -x
+    sketch, so min and max are negated and swapped back."""
+    def field(label):
+        return (f"regexp_extract(kll_sketch_to_string_double("
+                f"cast({sk} as binary)), '(?m)^ *{label} *: *(.*)$', 1)")
+
+    def negated(label):
+        return f"cast(-cast({field(label)} as double) as string)"
+
+    fields = [("K", field("K")), ("Epsilon", field("Epsilon")),
+              ("Epsilon PMF", field("Epsilon PMF")),
+              ("Empty", field("Empty")),
+              ("Estimation mode", field("Estimation Mode")),
+              ("N", field("N")), ("Levels", field("Levels")),
+              ("Retained items", field("Retained Items")),
+              ("Min value", negated("Max Item")),
+              ("Max value", negated("Min Item"))]
+    body = ", '; ', ".join(f"'{name} : ', {expr}" for name, expr in fields)
+    return (f"concat('### KLL sketch summary: ', {body}, "
+            f"' ### End sketch summary')")
+
 MACROS = {
     # conditional family (be/src/exprs/conditional-functions*.cc)
     "zeroifnull": lambda a: f"coalesce({a[0]}, 0)",
@@ -444,7 +498,8 @@ MACROS = {
     # HLL debug printers (impala_functions.py:936-942): the sketch
     # preamble + the reference's own CouponList/HllArray bound
     # formulas, reproduced over Spark's DataSketches binary in
-    # sketches.py (ds_hll_*_impl pandas UDFs).
+    # sketches.py (ds_hll_*_impl pandas UDFs, which read the sketch
+    # preamble no native exposes).
     "ds_hll_stringify": lambda a: (
         f"ds_hll_stringify_impl(cast({a[0]} as binary), "
         f"if(length(cast({a[0]} as binary)) < 8, null, "
@@ -457,21 +512,49 @@ MACROS = {
             f"hll_sketch_estimate(cast({s} as binary))), {kappa})"
         ))(a[0], a[1] if len(a) > 1 else "2")
     ),
-    # variadic quantile fractions -> one comma-joined string arg
+    # DataSketches KLL family (BuiltinsDb.java:1327-1374; scalar
+    # estimators be/src/exprs/datasketches-functions-ir.cc) on Spark
+    # 4.1's native DataSketches KLL, so sketches stay JVM-side and
+    # partially aggregate map-side. The natives rank INCLUSIVELY; the
+    # reference's get_rank/get_quantile are exclusive (less-than
+    # comparator, kll_sketch_impl.hpp:313-331). A sketch therefore
+    # holds -x: quantile(phi) = -q_incl(1 - phi) and rank(v) =
+    # 1 - r_incl(-v). Rank, quantile and split arguments must be
+    # constants (Spark raises NON_FOLDABLE_INPUT otherwise), so the
+    # list forms build literal arrays here. Sketches are BINARY and
+    # round-trip through STRING columns like the HLL ones; compaction
+    # is randomized, as in the reference's library, so estimates vary
+    # between runs once a sketch compacts. The aggregates return NULL
+    # over empty/all-NULL input (reference UDA finalize: no update ->
+    # NULL); the natives would return an empty sketch.
+    "ds_kll_sketch": lambda a: (
+        f"if(count({a[0]}) = 0, null, "
+        f"kll_sketch_agg_double(-cast({a[0]} as double)))"),
+    "ds_kll_union": lambda a: (
+        f"if(count({a[0]}) = 0, null, "
+        f"kll_merge_agg_double(cast({a[0]} as binary)))"),
+    "ds_kll_quantile": lambda a: (
+        f"(-kll_sketch_get_quantile_double(cast({a[0]} as binary), "
+        f"1d - cast({a[1]} as double)))"),
+    "ds_kll_rank": lambda a: (
+        f"(1d - kll_sketch_get_rank_double(cast({a[0]} as binary), "
+        f"-cast({a[1]} as double)))"),
+    "ds_kll_n": lambda a: f"kll_sketch_get_n_double(cast({a[0]} as binary))",
     "ds_kll_quantiles_as_string": lambda a: (
-        f"ds_kll_quantiles_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
-    ),
-    # variadic split points -> the comma-joined convention the kll
-    # string functions use (impala_functions.py:952-954)
+        f"array_join(transform(kll_sketch_get_quantile_double("
+        f"cast({a[0]} as binary), array("
+        + ", ".join(f"1d - cast({p} as double)" for p in _kll_points(a[1:]))
+        + f")), v -> {_cxx_g('-v')}), ',')"),
+    # CDF: the exclusive rank at each split point plus the trailing
+    # 1.0 (DataSketches get_CDF contract); PMF: successive differences
     "ds_kll_cdf_as_string": lambda a: (
-        f"ds_kll_cdf_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
-    ),
+        f"array_join(transform(concat({_kll_ranks(a)}, array(1d)), "
+        f"v -> {_cxx_g('v')}), ',')"),
     "ds_kll_pmf_as_string": lambda a: (
-        f"ds_kll_pmf_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
-    ),
+        f"array_join(zip_with(concat({_kll_ranks(a)}, array(1d)), "
+        f"concat(array(0d), {_kll_ranks(a)}), "
+        f"(hi, lo) -> {_cxx_g('hi - lo')}), ',')"),
+    "ds_kll_stringify": lambda a: _kll_stringify(a[0]),
     # histogram (BuiltinsDb.java:1001; HistogramFinalize,
     # aggregate-functions-ir.cc:1413-1435): min(n,100) values from the
     # sorted sample at indices (i+1)*max(n/100,1)-1 — reproduced

@@ -1,442 +1,23 @@
-"""Quantile sketches: the reference's ds_kll_* family, Spark-native.
+"""DataSketches HLL debug printers (ds_hll_stringify,
+ds_hll_estimate_bounds_as_string; impala_functions.py:936-942).
 
-Reference surface: ds_kll_sketch / ds_kll_union / ds_kll_quantile /
-ds_kll_rank / ds_kll_n (registrations
-fe/src/main/java/org/apache/impala/catalog/BuiltinsDb.java:1327-1374;
-scalar estimators be/src/exprs/datasketches-functions-ir.cc:1-223;
-aggregate plumbing be/src/exprs/aggregate-functions-ir.cc DsKll*).
-
-The Apache `datasketches` pip package is not available in this
-container, so the sketch is implemented here from the public KLL paper
-(Karnin, Lang, Liberty — "Optimal Quantile Approximation in Streams",
-FOCS 2016): a hierarchy of buffers where level i items carry weight
-2^i; a full level is sorted and every other item promoted upward.
-Rank error is O(1/k) with k=200 default (~1% — the same ballpark the
-reference documents for its KLL at default k).
-
-Serialization is a small struct-packed format — NOT binary-compatible
-with Apache DataSketches (documented divergence; the reference's
-sketches interoperate with Hive's). Mergeability is the property that
-matters at 100 TB: per-partition sketches merge associatively, so
-Spark's partial aggregation (map-side combine → reduce merge) gives
-one shuffle of ~KB-sized states instead of a global sort.
-
-Determinism note: compaction keeps a flip-flop parity bit (the paper
-uses a random coin; a deterministic alternating coin preserves the
-error bound's telescoping argument in practice and keeps results
-stable across retries, which matters for Spark task re-execution).
+Every other sketch function is a macro over Spark's native DataSketches
+functions (functions/registry.py): the ds_hll_* aggregates and
+estimates over hll_*, and the whole ds_kll_* family over kll_*_double.
+Only these two printers need the sketch preamble bytes, which no
+native exposes, so they stay pandas UDFs (ds_hll_*_impl).
 """
 
 from __future__ import annotations
 
-import math
-import struct
-
-_MAGIC = b"KLL1"
-
-
-class KllSketch:
-    """Floats-in, quantiles-out KLL sketch (weight-2^i level buffers)."""
-
-    def __init__(self, k: int = 200):
-        self.k = k
-        self.levels: list[list[float]] = [[]]
-        self.n = 0
-        self.min_v = math.inf
-        self.max_v = -math.inf
-        self._coin = 0
-
-    # -- capacity ----------------------------------------------------------
-    def _cap(self, level: int) -> int:
-        """Capacity of `level` given the current number of levels: the
-        topmost levels get ~k, lower levels shrink by (2/3)^depth with
-        a floor of 8 (the paper's c=2/3 schedule)."""
-        depth = len(self.levels) - 1 - level
-        return max(8, int(self.k * (2.0 / 3.0) ** depth))
-
-    def _total_cap(self) -> int:
-        return sum(self._cap(i) for i in range(len(self.levels)))
-
-    def _size(self) -> int:
-        return sum(len(b) for b in self.levels)
-
-    # -- updates -----------------------------------------------------------
-    def update(self, v: float) -> None:
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return
-        v = float(v)
-        self.levels[0].append(v)
-        self.n += 1
-        if v < self.min_v:
-            self.min_v = v
-        if v > self.max_v:
-            self.max_v = v
-        if self._size() > self._total_cap():
-            self._compress()
-
-    def update_many(self, values) -> None:
-        for v in values:
-            self.update(v)
-
-    def _compress(self) -> None:
-        for i, buf in enumerate(self.levels):
-            if len(buf) > self._cap(i):
-                buf.sort()
-                if i + 1 == len(self.levels):
-                    self.levels.append([])
-                offset = self._coin
-                self._coin ^= 1
-                if len(buf) % 2 == 1:
-                    # keep one leftover at this level so weights stay exact
-                    leftover, body = [buf[-1]], buf[:-1]
-                else:
-                    leftover, body = [], buf
-                self.levels[i + 1].extend(body[offset::2])
-                self.levels[i] = leftover
-                return
-        # nothing individually over capacity but total is: compact level 0
-        if self.levels[0]:
-            self.levels[0].sort()
-            if len(self.levels) == 1:
-                self.levels.append([])
-            body = self.levels[0]
-            if len(body) % 2 == 1:
-                self.levels[0], body = [body[-1]], body[:-1]
-            else:
-                self.levels[0] = []
-            offset = self._coin
-            self._coin ^= 1
-            self.levels[1].extend(body[offset::2])
-
-    # -- merge -------------------------------------------------------------
-    def merge(self, other: "KllSketch") -> "KllSketch":
-        if other.n == 0:
-            return self
-        while len(self.levels) < len(other.levels):
-            self.levels.append([])
-        for i, buf in enumerate(other.levels):
-            self.levels[i].extend(buf)
-        self.n += other.n
-        self.min_v = min(self.min_v, other.min_v)
-        self.max_v = max(self.max_v, other.max_v)
-        while self._size() > self._total_cap():
-            before = self._size()
-            self._compress()
-            if self._size() == before:  # safety: no progress
-                break
-        return self
-
-    # -- queries -----------------------------------------------------------
-    def _weighted_items(self) -> list[tuple[float, int]]:
-        out: list[tuple[float, int]] = []
-        for i, buf in enumerate(self.levels):
-            w = 1 << i
-            out.extend((v, w) for v in buf)
-        out.sort(key=lambda t: t[0])
-        return out
-
-    def quantile(self, q: float) -> float | None:
-        """The vendored DataSketches positional semantics
-        (kll_quantile_calculator_impl.hpp): pos = floor(phi*n) (n-1 at
-        phi=1), preceding-cumulative weights over the sorted weighted
-        items, answer = the item whose chunk contains pos (the LAST
-        item whose preceding-cumulative weight is <= pos); phi==0/1
-        short-circuit to min/max (kll_sketch_impl.hpp:259-269)."""
-        if self.n == 0:
-            return None
-        q = min(max(q, 0.0), 1.0)
-        if q == 0.0:
-            return self.min_v
-        if q == 1.0:
-            return self.max_v
-        items = self._weighted_items()
-        pos = int(math.floor(q * self.n))
-        if pos >= self.n:
-            pos = self.n - 1
-        preceding = 0
-        answer = items[-1][0]
-        for v, w in items:
-            if preceding > pos:
-                break
-            answer = v
-            preceding += w
-        return answer
-
-    def rank(self, v: float) -> float | None:
-        """Estimated fraction of items STRICTLY below v — the vendored
-        get_rank uses the less-than comparator
-        (kll_sketch_impl.hpp:313-331)."""
-        if self.n == 0:
-            return None
-        cum = sum(w for x, w in self._weighted_items() if x < v)
-        return cum / self.n
-
-    # -- serialization -----------------------------------------------------
-    def serialize(self) -> bytes:
-        parts = [
-            _MAGIC,
-            struct.pack(
-                "<iqddi", self.k, self.n,
-                self.min_v if self.n else 0.0,
-                self.max_v if self.n else 0.0,
-                len(self.levels),
-            ),
-        ]
-        for buf in self.levels:
-            parts.append(struct.pack("<i", len(buf)))
-            parts.append(struct.pack(f"<{len(buf)}d", *buf))
-        return b"".join(parts)
-
-    @classmethod
-    def deserialize(cls, data: bytes) -> "KllSketch":
-        if data[:4] != _MAGIC:
-            raise ValueError("not a KLL1 sketch")
-        k, n, mn, mx, n_levels = struct.unpack_from("<iqddi", data, 4)
-        sk = cls(k)
-        sk.n = n
-        sk.min_v = mn if n else math.inf
-        sk.max_v = mx if n else -math.inf
-        sk.levels = []
-        off = 4 + struct.calcsize("<iqddi")
-        for _ in range(n_levels):
-            (cnt,) = struct.unpack_from("<i", data, off)
-            off += 4
-            sk.levels.append(list(struct.unpack_from(f"<{cnt}d", data, off)))
-            off += 8 * cnt
-        if not sk.levels:
-            sk.levels = [[]]
-        return sk
-
-
-# ---------------------------------------------------------------------------
-# histogram / sampled_ndv helpers (operator-level, DataFrame-native)
-# ---------------------------------------------------------------------------
-
-
-def grouped_kll_sketches(df, key: str, value_col: str, k: int = 200):
-    """Per-group KLL sketches with PARTIAL (map-side) aggregation.
-
-    A pandas GROUPED_AGG UDAF plans as ArrowAggregatePython over a full
-    shuffle + sort of the raw rows, with ONE Python worker per group —
-    at 100 TB that funnels the whole fact through a handful of tasks
-    (r11, guide §4/§2.3). This helper restores the reference UDA's
-    Init/Update/Merge lifecycle: each input partition builds one sketch
-    per group locally (mapInPandas, iterator form — guide §4.5), and
-    only the ~KB serialized partials shuffle into the ds_kll_union
-    merge. Same quality bounds (KLL merge preserves the error
-    guarantee); realized quantiles may differ from the single-pass
-    sketch within those bounds.
-
-    Precondition: groups whose values are entirely NULL are absent
-    from the output (the single-pass UDAF would emit a NULL sketch);
-    callers that need the NULL-sketch row must outer-join it back.
-
-    Returns a DataFrame (key, sk) — one merged sketch per group.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _partials(it):
-        sks: dict = {}
-        for pdf in it:
-            for g, grp in pdf.groupby(key, sort=False, dropna=False):
-                vals = grp[value_col].dropna().astype(float)
-                if not len(vals):
-                    continue
-                sk = sks.get(g)
-                if sk is None:
-                    sks[g] = sk = KllSketch(k)
-                sk.update_many(vals.tolist())
-        if sks:
-            yield pd.DataFrame(
-                {key: list(sks.keys()),
-                 "sk": [s.serialize().hex() for s in sks.values()]}
-            )
-
-    key_type = dict(df.dtypes)[key]
-    parts = df.select(key, value_col).mapInPandas(
-        _partials, schema=f"{key} {key_type}, sk string"
-    )
-    return parts.groupBy(key).agg(F.expr("ds_kll_union(sk)").alias("sk"))
-
 
 def register(spark) -> None:
-    """Install the ds_kll_* SQL surface on the session.
-
-    Sketch values travel as hex STRINGs (the reference's sketch type is
-    StringVal too) so they survive any SQL surface; ds_kll_sketch /
-    ds_kll_union are pandas GROUPED_AGG UDAFs. NOTE (r11): Spark plans
-    a GROUPED_AGG UDAF as ArrowAggregatePython over a full shuffle of
-    the raw rows (no partial aggregation) — fine for the SQL surface's
-    ad-hoc use, but engine query paths that sketch a whole fact table
-    should use `grouped_kll_sketches` (map-side partial sketches +
-    ds_kll_union merge, the reference UDA's Init/Update/Merge
-    lifecycle, ~KB per group on the wire at 100 TB).
-    """
+    """Install the ds_hll_*_impl printer UDFs on the session."""
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def _kll_sketch_agg(v):
-        vals = v.dropna().astype(float).tolist()
-        if not vals:
-            # reference UDA finalize: no non-NULL update -> NULL
-            # (aggregate-functions-ir.cc DsKllFinalizeSketch)
-            return None
-        sk = KllSketch()
-        sk.update_many(vals)
-        return sk.serialize().hex()
-
-    _kll_sketch_agg.__annotations__ = {"v": pd.Series, "return": str}
-    kll_sketch = pandas_udf(_kll_sketch_agg, "string", PandasUDFType.GROUPED_AGG)
-
-    def _kll_union_agg(s):
-        hexes = [h for h in s.dropna() if h]
-        if not hexes:
-            return None  # same NULL-on-no-update contract as sketch()
-        out = KllSketch()
-        for h in hexes:
-            out = out.merge(KllSketch.deserialize(bytes.fromhex(h)))
-        return out.serialize().hex()
-
-    _kll_union_agg.__annotations__ = {"s": pd.Series, "return": str}
-    kll_union = pandas_udf(_kll_union_agg, "string", PandasUDFType.GROUPED_AGG)
-
-    def _kll_quantile(s, q):
-        return pd.Series(
-            [
-                None
-                if h is None
-                else KllSketch.deserialize(bytes.fromhex(h)).quantile(float(qq))
-                for h, qq in zip(s, q)
-            ],
-            dtype="float64",
-        )
-
-    _kll_quantile.__annotations__ = {
-        "s": pd.Series, "q": pd.Series, "return": pd.Series
-    }
-    kll_quantile = pandas_udf(_kll_quantile, "double")
-
-    def _kll_rank(s, v):
-        return pd.Series(
-            [
-                None
-                if h is None
-                else KllSketch.deserialize(bytes.fromhex(h)).rank(float(vv))
-                for h, vv in zip(s, v)
-            ],
-            dtype="float64",
-        )
-
-    _kll_rank.__annotations__ = {"s": pd.Series, "v": pd.Series, "return": pd.Series}
-    kll_rank = pandas_udf(_kll_rank, "double")
-
-    def _kll_n(s):
-        return pd.Series(
-            [
-                None if h is None else KllSketch.deserialize(bytes.fromhex(h)).n
-                for h in s
-            ],
-            dtype="Int64",
-        )
-
-    _kll_n.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    kll_n = pandas_udf(_kll_n, "long")
-
-    def _kll_quantiles_as_string(s, qs):
-        out = []
-        for h, qq in zip(s, qs):
-            if h is None:
-                out.append(None)
-                continue
-            sk = KllSketch.deserialize(bytes.fromhex(h))
-            vals = [sk.quantile(float(x)) for x in str(qq).split(",")]
-            # reference join/format: stringstream "," separator +
-            # C++ default double formatting (datasketches-common.cc:
-            # DsKllVectorResultToStringVal)
-            out.append(",".join(
-                "nan" if v is None else f"{v:g}" for v in vals))
-        return pd.Series(out, dtype="object")
-
-    _kll_quantiles_as_string.__annotations__ = {
-        "s": pd.Series, "qs": pd.Series, "return": pd.Series
-    }
-    kll_quantiles_as_string = pandas_udf(_kll_quantiles_as_string, "string")
-
-    def _kll_stringify(s):
-        out = []
-        for h in s:
-            if h is None:
-                out.append(None)
-                continue
-            sk = KllSketch.deserialize(bytes.fromhex(h))
-            # the reference prints kll_sketch::to_string(false,false)
-            # (datasketches-functions-ir.cc:209-221); field set kept,
-            # single-line so the row survives the test files'
-            # row_regex verification. Epsilon is the KLL normalized
-            # rank error bound 2.296/k^0.9433 (kll_helper get_eps),
-            # PMF variant 2.446/k^0.9433.
-            est_mode = sum(len(b) for b in sk.levels) < sk.n
-            out.append(
-                "### KLL sketch summary: "
-                f"K : {sk.k}; "
-                f"Epsilon : {2.296 / sk.k ** 0.9433 * 100:.3g}%; "
-                f"Epsilon PMF : {2.446 / sk.k ** 0.9433 * 100:.3g}%; "
-                f"Empty : {'true' if sk.n == 0 else 'false'}; "
-                f"Estimation mode : {'true' if est_mode else 'false'}; "
-                f"N : {sk.n}; "
-                f"Levels : {len(sk.levels)}; "
-                f"Retained items : {sum(len(b) for b in sk.levels)}; "
-                f"Min value : {sk.min_v if sk.n else 'nan'}; "
-                f"Max value : {sk.max_v if sk.n else 'nan'} "
-                "### End sketch summary")
-        return pd.Series(out, dtype="object")
-
-    _kll_stringify.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    kll_stringify = pandas_udf(_kll_stringify, "string")
-
-    def _cdf_points(sk, splits: str) -> list[float]:
-        """CDF at each split (inclusive rank, our KllSketch.rank
-        semantics) plus the trailing 1.0 — n+1 values like the
-        DataSketches get_CDF contract (reference registry:
-        ds_kll_cdf_as_string, impala_functions.py:954)."""
-        pts = [float(x) for x in str(splits).split(",")]
-        return [sk.rank(p) or 0.0 for p in pts] + [1.0]
-
-    def _kll_cdf_as_string(s, splits):
-        out = []
-        for h, sp in zip(s, splits):
-            if h is None:
-                out.append(None)
-                continue
-            sk = KllSketch.deserialize(bytes.fromhex(h))
-            out.append(",".join(f"{v:g}" for v in _cdf_points(sk, sp)))
-        return pd.Series(out, dtype="object")
-
-    _kll_cdf_as_string.__annotations__ = {
-        "s": pd.Series, "splits": pd.Series, "return": pd.Series
-    }
-    kll_cdf_as_string = pandas_udf(_kll_cdf_as_string, "string")
-
-    def _kll_pmf_as_string(s, splits):
-        out = []
-        for h, sp in zip(s, splits):
-            if h is None:
-                out.append(None)
-                continue
-            sk = KllSketch.deserialize(bytes.fromhex(h))
-            cdf = _cdf_points(sk, sp)
-            pmf = [cdf[0]] + [b - a for a, b in zip(cdf, cdf[1:])]
-            out.append(",".join(f"{v:g}" for v in pmf))
-        return pd.Series(out, dtype="object")
-
-    _kll_pmf_as_string.__annotations__ = {
-        "s": pd.Series, "splits": pd.Series, "return": pd.Series
-    }
-    kll_pmf_as_string = pandas_udf(_kll_pmf_as_string, "string")
-
-    # --- HLL debug printers over the DataSketches HLL binary that
-    # Spark's hll_sketch_agg emits (Spark embeds Apache DataSketches,
+    # The printers read the DataSketches HLL binary that Spark's
+    # hll_sketch_agg emits (Spark embeds Apache DataSketches,
     # the same library the reference vendors in be/src/thirdparty/
     # datasketches). The preamble layout (HllUtil.hpp): byte3 lgK,
     # byte6 LIST couponCount / HLL curMin, byte7 lo2bits curMode +
@@ -521,36 +102,4 @@ def register(spark) -> None:
     hll_stringify = pandas_udf(_hll_stringify, "string")
 
     spark.udf.register("ds_hll_bounds_impl", hll_bounds_as_string)
-    spark.udf.register("ds_kll_sketch_impl", kll_sketch)
-    spark.udf.register("ds_kll_union_impl", kll_union)
-    spark.udf.register("ds_kll_quantiles_impl", kll_quantiles_as_string)
     spark.udf.register("ds_hll_stringify_impl", hll_stringify)
-    spark.udf.register("ds_kll_sketch", kll_sketch)
-    spark.udf.register("ds_kll_union", kll_union)
-    spark.udf.register("ds_kll_quantile", kll_quantile)
-    spark.udf.register("ds_kll_rank", kll_rank)
-    spark.udf.register("ds_kll_n", kll_n)
-    spark.udf.register("ds_kll_quantiles_as_string", kll_quantiles_as_string)
-    spark.udf.register("ds_kll_stringify", kll_stringify)
-    spark.udf.register("ds_kll_cdf_impl", kll_cdf_as_string)
-    spark.udf.register("ds_kll_pmf_impl", kll_pmf_as_string)
-
-
-def sampled_ndv_estimate(d: int, f1: int, sample_n: int, fraction: float) -> int:
-    """Extrapolate NDV from a sample: Duj1 estimator (Haas et al.,
-    SIGMOD'95 — the same estimator family the reference's curve-fit
-    SampledNdvFinalize approximates, aggregate-functions-ir.cc:2100+):
-
-        D_hat = d / (1 - (1 - q) * f1 / n)
-
-    d = distinct values in sample, f1 = values seen exactly once,
-    n = sample row count, q = sampling fraction.
-    """
-    if sample_n == 0:
-        return 0
-    if fraction >= 1.0:
-        return d
-    denom = 1.0 - (1.0 - fraction) * f1 / sample_n
-    if denom <= 0:
-        denom = 1.0 / sample_n
-    return int(round(d / denom))

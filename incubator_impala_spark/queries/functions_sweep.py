@@ -544,8 +544,9 @@ def fn_uda_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # DataSketches KLL quantile family (BuiltinsDb.java:1327-1374;
-# datasketches-functions-ir.cc). The sketch itself is the pure-Python
-# KLL in functions/sketches.py (datasketches pip pkg absent in env).
+# datasketches-functions-ir.cc) — macros over Spark's native
+# DataSketches KLL (functions/registry.py), so the sketch is a JVM
+# aggregate with map-side partial aggregation.
 # Oracle contract: an estimator can't hash-match an exact engine, so
 # the entry returns *validated* quantile quality — the realized rank
 # of each estimated quantile must sit within 0.05 of its target (KLL
@@ -562,40 +563,29 @@ def fn_uda_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from incubator_impala_spark.functions import sketches
-
-    sketches.register(spark)
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # r11 (guide §4/§2.3): per-partition partial sketches + union merge
-    # instead of a GROUPED_AGG over the raw rows — the old plan
-    # shuffled every event row to ONE Python worker per event_type
-    # (ArrowAggregatePython after a full sort+exchange); now only ~KB
-    # serialized sketch partials cross the exchange. Quantile
-    # estimates stay within the KLL error bound the entry verifies.
-    sk = sketches.grouped_kll_sketches(ev, "event_type", "value")
-    est = sk.select(
-        "event_type",
-        F.expr("ds_kll_quantile(sk, 0.25d)").alias("q25"),
-        F.expr("ds_kll_quantile(sk, 0.50d)").alias("q50"),
-        F.expr("ds_kll_quantile(sk, 0.75d)").alias("q75"),
-    )
-    # LEFT join (r12, ADVICE r11): grouped_kll_sketches omits groups
-    # whose values are all NULL (and a NULL event_type key never
-    # matches an equi-join) — an inner join would silently drop those
-    # groups from the output, whereas the old GROUPED_AGG form and the
-    # oracle emit them. Left join keeps the row set identical for
-    # degenerate groups (their q* come back NULL, ok flags NULL).
-    joined = ev.join(F.broadcast(est), "event_type", "left")
-
-    def ok(q: str, target: float):
-        realized = F.avg((F.col("value") <= F.col(q)).cast("double"))
-        return (F.abs(realized - F.lit(target)) < 0.05).cast("int")
-
-    return joined.groupBy("event_type").agg(
-        ok("q25", 0.25).alias("q25_ok"),
-        ok("q50", 0.50).alias("q50_ok"),
-        ok("q75", 0.75).alias("q75_ok"),
-        F.count("*").alias("n_rows"),
+    """LEFT join: a group whose values are all NULL has a NULL sketch,
+    and a NULL event_type never equi-matches — both keep their row,
+    and their ok flags default to 1, as the oracle states them."""
+    return _engine_sql(
+        spark, sf_dir, ["events"],
+        """
+        SELECT e.event_type,
+          coalesce(CAST(abs(avg(CAST(e.value <= s.q25 AS DOUBLE)) - 0.25)
+                        < 0.05 AS INT), 1) AS q25_ok,
+          coalesce(CAST(abs(avg(CAST(e.value <= s.q50 AS DOUBLE)) - 0.5)
+                        < 0.05 AS INT), 1) AS q50_ok,
+          coalesce(CAST(abs(avg(CAST(e.value <= s.q75 AS DOUBLE)) - 0.75)
+                        < 0.05 AS INT), 1) AS q75_ok,
+          count(*) AS n_rows
+        FROM events e LEFT JOIN (
+          SELECT event_type, ds_kll_quantile(sk, 0.25) AS q25,
+                 ds_kll_quantile(sk, 0.5) AS q50,
+                 ds_kll_quantile(sk, 0.75) AS q75
+          FROM (SELECT event_type, ds_kll_sketch(value) AS sk
+                FROM events GROUP BY event_type) g
+        ) s ON e.event_type = s.event_type
+        GROUP BY e.event_type
+        """,
     )
 
 

@@ -15,7 +15,8 @@ Scale rationale (100 TB / 1000-executor target):
   filter propagation (bloom + min/max) from join builds to probe scans.
 - CBO + histogram stats: parity with COMPUTE STATS driven join ordering
   (`SingleNodePlanner.java:495` createCheapestJoinPlan).
-- shuffle partitions: 32 locally; on a real cluster AQE's
+- shuffle partitions: the session's core count (defaultParallelism,
+  set in configure_session); on a real cluster AQE's
   coalescePartitions makes the initial number a ceiling, not a fixed
   cost, so a large initialPartitionNum scales without re-tuning.
 """

@@ -84,7 +84,30 @@ def explain_formatted(df) -> str:
     return jqe.explainString(mode)
 
 
+_PARTITIONING = re.compile(r"\b(?:hash|range)partitioning\(")
+
+
+def _scrub_partition_count(text: str) -> str:
+    """hashpartitioning(k#x, 32) -> hashpartitioning(k#x, n) for each
+    partitioning call in `text`: the trailing count is the
+    shuffle width, which follows the core count (session.py), so a
+    golden plan must not pin it. Scans balanced parens because the
+    partitioning keys nest calls."""
+    m = _PARTITIONING.search(text)
+    if not m:
+        return text
+    depth, i = 1, m.end()
+    while depth and i < len(text):
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        i += 1
+    return (text[:m.start()] + re.sub(r", \d+\)$", ", n)", text[m.start():i])
+            + _scrub_partition_count(text[i:]))
+
+
 _SCRUBS = [
+    # shuffle width: hashpartitioning(..., 32) -> hashpartitioning(..., n)
+    (re.compile(_PARTITIONING.pattern + ".*"),
+     lambda m: _scrub_partition_count(m.group(0))),
     # expression / plan ids: l_orderkey#123L -> l_orderkey#xL
     (re.compile(r"#\d+"), "#x"),
     # lambda variable names carry a session-global counter

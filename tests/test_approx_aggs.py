@@ -104,8 +104,8 @@ def test_set_statement_through_sql(engine):
 
 
 # ---------------------------------------------------------------------------
-# ds_kll_* quantile-sketch family (BuiltinsDb.java:1327-1374) — the
-# pure-Python KLL in functions/sketches.py, SQL-registered.
+# ds_kll_* quantile-sketch family (BuiltinsDb.java:1327-1374) — macros
+# over Spark's native DataSketches KLL (functions/registry.py).
 # ---------------------------------------------------------------------------
 
 
@@ -147,29 +147,125 @@ def test_kll_union_mergeability(engine, li_view):
 
 
 def test_kll_rank_and_n(engine, li_view):
-    # NB: a pandas GROUPED_AGG can't share an Aggregate with JVM
-    # aggregates — sketch and exact stats come from separate subqueries
+    exact = engine.sql(
+        f"SELECT percentile(l_extendedprice, 0.5) AS med, "
+        f"count(l_extendedprice) AS n FROM {li_view}"
+    ).collect()[0]
     row = engine.sql(
         f"""
-        SELECT ds_kll_rank(sk, med) AS r, ds_kll_n(sk) AS n, exact_n
-        FROM (SELECT ds_kll_sketch(l_extendedprice) AS sk FROM {li_view}),
-             (SELECT percentile(l_extendedprice, 0.5) AS med,
-                     count(l_extendedprice) AS exact_n FROM {li_view})
+        SELECT ds_kll_rank(sk, {float(exact.med)!r}d) AS r, ds_kll_n(sk) AS n
+        FROM (SELECT ds_kll_sketch(l_extendedprice) AS sk FROM {li_view}) z
         """
     ).collect()[0]
-    assert row.n == row.exact_n
+    assert row.n == exact.n
     assert abs(row.r - 0.5) < 0.02
+    # rank points must be constants: a column argument is rejected at
+    # analysis, never evaluated row by row
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException,
+                       match="NON_FOLDABLE_INPUT.*kll_sketch_get_rank_double"):
+        engine.sql(
+            f"""
+            SELECT ds_kll_rank(sk, l_extendedprice) AS r
+            FROM (SELECT ds_kll_sketch(l_extendedprice) AS sk
+                  FROM {li_view}) z, {li_view}
+            """
+        ).collect()
 
 
-def test_kll_serialization_roundtrip():
-    from incubator_impala_spark.functions.sketches import KllSketch
+def test_kll_serialization_roundtrip(engine, li_view):
+    """A sketch stored in a parquet STRING column (the reference's
+    sketch column type) reads back byte for byte, answering quantile,
+    rank and n exactly as before it was stored."""
+    sk = engine.sql(
+        f"SELECT ds_kll_sketch(l_extendedprice) AS sk FROM {li_view}"
+    ).collect()[0].sk
+    lit = f"unhex('{bytes(sk).hex()}')"
+    probe = ("SELECT ds_kll_quantile(sk, 0.3d) AS q, "
+             "ds_kll_rank(sk, 50000d) AS r, ds_kll_n(sk) AS n, "
+             "CAST(sk AS BINARY) AS raw FROM {}")
+    engine.sql("DROP TABLE IF EXISTS kll_roundtrip")
+    engine.sql("CREATE TABLE kll_roundtrip (sk STRING) STORED AS PARQUET")
+    try:
+        engine.sql(f"INSERT INTO kll_roundtrip SELECT CAST({lit} AS STRING)")
+        stored = engine.sql(probe.format("kll_roundtrip")).collect()[0]
+    finally:
+        engine.sql("DROP TABLE IF EXISTS kll_roundtrip")
+    before = engine.sql(probe.format(f"(SELECT {lit} AS sk) z")).collect()[0]
+    assert bytes(stored.raw) == bytes(sk)
+    assert (stored.q, stored.r, stored.n) == (before.q, before.r, before.n)
 
-    sk = KllSketch(160)
-    sk.update_many(float(i % 997) for i in range(50000))
-    rt = KllSketch.deserialize(sk.serialize())
-    assert rt.n == sk.n
-    assert rt.quantile(0.3) == sk.quantile(0.3)
-    assert rt.rank(500.0) == sk.rank(500.0)
+
+def test_kll_exact_mode_semantics(engine):
+    """Below its first compaction a KLL sketch is exact, so the
+    reference's exclusive semantics give exact answers over {1,2,3,4}:
+    quantile(phi) is the item at floor(phi*n) and rank(v) counts items
+    strictly below v (kll_sketch_impl.hpp:259-331). A sketch of no
+    values is NULL, and so is every estimate over it."""
+    engine.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW kll_1234 AS "
+        "SELECT * FROM VALUES (1d), (2d), (3d), (4d) v(x)")
+    engine.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW kll_nulls AS "
+        "SELECT CAST(NULL AS DOUBLE) AS x FROM range(3)")
+    row = engine.sql(
+        """
+        SELECT ds_kll_quantile(sk, 0.5d) AS q, ds_kll_rank(sk, 2) AS r,
+               ds_kll_cdf_as_string(sk, 2) AS cdf,
+               ds_kll_pmf_as_string(sk, 2) AS pmf,
+               ds_kll_stringify(sk) AS info
+        FROM (SELECT ds_kll_sketch(x) AS sk FROM kll_1234) z
+        """
+    ).collect()[0]
+    assert (row.q, row.r, row.cdf, row.pmf) == (3.0, 0.25, "0.25,1",
+                                                 "0.25,0.75")
+    assert "N : 4;" in row.info
+    assert "Min value : 1.0; Max value : 4.0" in row.info
+    row = engine.sql(
+        """
+        SELECT sk IS NULL AS no_sketch, ds_kll_quantile(sk, 0.5d) AS q,
+               ds_kll_rank(sk, 2) AS r, ds_kll_n(sk) AS n
+        FROM (SELECT ds_kll_sketch(x) AS sk FROM kll_nulls) z
+        """
+    ).collect()[0]
+    assert row.no_sketch
+    assert (row.q, row.r, row.n) == (None, None, None)
+
+
+def test_fn_sketch_kll_degenerate_groups_match_oracle(spark, tmp_path):
+    """A group whose values are all NULL, and the NULL event_type
+    group, keep their rows with ok flags 1, as the oracle states them."""
+    import duckdb
+    import pandas as pd
+
+    from incubator_impala_spark.queries import ORACLE_SQL, QUERIES
+    from incubator_impala_spark.sources.tables import load_table
+    from incubator_impala_spark.testing.oracle import compare_frames
+
+    types = ["click"] * 40 + ["ghost"] * 3 + [None] * 3
+    values = [float(i) for i in range(40)] + [None] * 3 + [1.0, 2.0, None]
+    path = tmp_path / "events.parquet"
+    pd.DataFrame({
+        "event_id": range(len(types)),
+        "ts": pd.Series(pd.date_range("2024-01-01", periods=len(types),
+                                      freq="min")).astype("datetime64[us]"),
+        "user_id": [i % 5 for i in range(len(types))],
+        "event_type": types,
+        "value": values,
+        "props": ["{}"] * len(types),
+    }).to_parquet(path)
+    try:
+        got = QUERIES["fn_sketch_kll"](spark, str(tmp_path)).toPandas()
+    finally:
+        # the entry registers `events` as a temp view; restore the
+        # shared session's view of the standard tables
+        load_table(spark, SF_SMALL, "events").createOrReplaceTempView("events")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(ORACLE_SQL["fn_sketch_kll"]).df()
+    assert len(got) == 3
+    assert compare_frames(got, want) == []
 
 
 def test_sampled_ndv_operator_extrapolates(spark):

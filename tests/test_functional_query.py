@@ -1517,6 +1517,8 @@ def test_views_compatibility(functional_engine):
     assert n_pass >= 17, n_pass
 
 
+@pytest.mark.skipif(not os.path.isdir(QT_DIR),
+                    reason="reference workload texts not present")
 def test_invalid_header_rejected():
     """invalid_header.test: the reference's meta-contract
     (tests/query_test/test_invalid_test_header.py) — a .test file

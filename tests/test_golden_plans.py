@@ -40,7 +40,7 @@ def test_golden_plan(spark, name):
         plansnap.explain_formatted(QUERIES[name](spark, SF_SMALL))
     )
     with open(path) as f:
-        want = f.read()
+        want = plansnap.normalize(f.read())
     if got != want:
         diff = "\n".join(
             difflib.unified_diff(

@@ -164,7 +164,8 @@ def tpcds_duck():
 @pytest.mark.skipif(not os.path.isdir(TPCDS_DIR),
                     reason="reference workload texts not present")
 @pytest.mark.parametrize("dirname", _EXEC_FILES,
-                         ids=lambda t: t[1] + ("" if t[0].endswith("tpcds/queries") else "-unmod"))
+                         ids=[n + ("" if d.endswith("tpcds/queries") else "-unmod")
+                              for d, n in _EXEC_FILES])
 def test_tpcds_query_oracle(tpcds_engine, tpcds_duck, dirname):
     d, name = dirname
     """Oracle tier for the recorded-result-divergent files (r10,
