@@ -66,6 +66,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
+from incubator_impala_spark import dialect, sqlscan
+
 _SPARK_TYPES = {
     "int": "int", "integer": "int", "tinyint": "tinyint",
     "smallint": "smallint", "bigint": "bigint", "boolean": "boolean",
@@ -1120,8 +1122,6 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
 
 
 def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
-    from incubator_impala_spark import dialect
-
     dbg = getattr(engine, "debug_action", None)
     if not hive and dbg and \
             "FIS_FAIL_HDFS_TABLE_SINK_FLUSH_FINAL:FAIL" in dbg:
@@ -1133,13 +1133,13 @@ def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
         body = "select * from (" + body + ") __v"
     static: dict = {}
     dyn: list = []
-    for item in dialect._split_args(m.group("part") or ""):
+    for item in sqlscan.split_top(m.group("part") or ""):
         if "=" in item:
             k, v = item.split("=", 1)
             static[k.strip().strip("`").lower()] = \
                 v.strip().strip("'\"")
-        elif item.strip():
-            dyn.append(item.strip().strip("`").lower())
+        else:
+            dyn.append(item.strip("`").lower())
 
     def build_df():
         src = engine.spark.sql(engine.translate(body))
@@ -1572,15 +1572,13 @@ def _hive_plain_insert(engine, m: re.Match, stmt: str):
         # statement to engine.sql verbatim — reassembling it from
         # match groups would drop PARTITION clauses / column lists
         return engine.sql(stmt)
-    from incubator_impala_spark import dialect
-
     body = m.group("body") or "select 1"
     if re.match(r"(?is)^\s*values\b", body):
         body = "select * from (" + body + ") __v"
     df = spark.sql(engine.translate(body))
     target = spark.table(tbl)
     static: dict = {}
-    for item in dialect._split_args(m.group("part") or ""):
+    for item in sqlscan.split_top(m.group("part") or ""):
         if "=" in item:
             k, v = item.split("=", 1)
             static[k.strip().strip("`").lower()] = \
@@ -1673,61 +1671,23 @@ def _promote(engine, raw: str, props: dict):
 # ---------------------------------------------------------------------
 
 _ROWID_REF = re.compile(r"(?i)\brow__id\b")
-_LIT_RE = re.compile(r"'(?:[^']|'')*'|--[^\n]*")
 _BARE_STAR = re.compile(r"(?is)(?<![\w.`(])\*(?=\s*(?:,|from\b))")
-_CLAUSE_KW = ("where", "group", "having", "order", "limit",
-              "union", "intersect", "except")
-
-
-def _mask_literals(sql: str):
-    """Swap string literals / -- comments for placeholders so the
-    relation-name substitution and star expansion never rewrite text
-    inside them."""
-    lits: list = []
-
-    def rep(m):
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    return _LIT_RE.sub(rep, sql), lits
-
-
-def _unmask(sql: str, lits: list) -> str:
-    return re.sub(r"\x00(\d+)\x00",
-                  lambda m: lits[int(m.group(1))], sql)
+# the end of a FROM region: its scope's `)` or a clause keyword
+_REGION_END = re.compile(
+    r"\)|(?<![\w.`])(?:where|group|having|order|limit|union|intersect|"
+    r"except)\b", re.IGNORECASE)
 
 
 def _from_region(sql: str, pos: int) -> str:
     """The FROM-clause region governing the select-list position
-    ``pos``: scan forward at the star's paren depth to its FROM
-    keyword, then capture until the enclosing scope closes or a
-    top-level clause keyword starts."""
-    depth, i, n = 0, pos, len(sql)
-    start = None
-    while i < n:
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth < 0:
-                return sql[start:i] if start is not None else ""
-        elif depth == 0 and c.isalpha():
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            word = sql[i:j].lower()
-            boundary = i == 0 or not (sql[i - 1].isalnum()
-                                      or sql[i - 1] in "_.`")
-            if boundary and start is None and word == "from":
-                start = j
-            elif boundary and start is not None \
-                    and word in _CLAUSE_KW:
-                return sql[start:i]
-            i = j
-            continue
-        i += 1
-    return sql[start:] if start is not None else ""
+    ``pos``: at the star's paren depth, from its FROM keyword until
+    the enclosing scope closes or a top-level clause keyword starts."""
+    top = sqlscan.top_level(sql[pos:])
+    fm = re.search(r"(?<![\w.`])from\b", top, re.IGNORECASE)
+    if fm is None or ")" in top[:fm.start()]:
+        return ""
+    em = _REGION_END.search(top, fm.end())
+    return sql[pos + fm.end():pos + (em.start() if em else len(top))]
 
 
 def _expand_stars(sql: str, swapped: list) -> str:
@@ -1736,9 +1696,10 @@ def _expand_stars(sql: str, swapped: list) -> str:
     from-clause references exactly one swapped shadow relation, using
     that relation's data columns; any other star is left alone
     (Impala's ``*`` never expands the hidden row__id)."""
+    shadow_sql = sqlscan.shadow(sql)
     out, last = [], 0
-    for m in _BARE_STAR.finditer(sql):
-        region = _from_region(sql, m.end())
+    for m in _BARE_STAR.finditer(shadow_sql):
+        region = _from_region(shadow_sql, m.end())
         hits = [cols for shadow, cols in swapped
                 if cols and re.search(
                     rf"(?i)(?<![\w.`]){re.escape(shadow)}(?![\w.])",
@@ -1756,18 +1717,17 @@ def prepare(engine, sql_text: str) -> str:
     full-ACID relation for its row__id-bearing shadow view (Impala
     exposes row__id as a hidden virtual column — ``*`` never expands
     it, so bare stars over a swapped relation are expanded to the
-    data columns here).  String literals and comments are masked for
-    the whole pass, and star expansion is scoped to the select list
-    whose FROM clause actually references a swapped relation."""
+    data columns here).  Every match runs on the literal/comment-blind
+    shadow, and star expansion is scoped to the select list whose
+    FROM clause actually references a swapped relation."""
     if any(t.dirty for t in registry(engine).values()):
         refresh_views(engine)
-    masked, lits = _mask_literals(sql_text)
-    if not _ROWID_REF.search(masked):
+    if not _ROWID_REF.search(sqlscan.shadow(sql_text)):
         return sql_text
     shmap = shadows(engine)
     if not shmap:
         return sql_text
-    swapped = []
+    sql, swapped = sql_text, []
     for phys, shadow in shmap.items():
         t = registry(engine).get(phys)
         spellings = [phys]
@@ -1781,9 +1741,9 @@ def prepare(engine, sql_text: str) -> str:
         for sp in sorted(set(spellings), key=len, reverse=True):
             pat = re.compile(
                 rf"(?i)(?<![\w.`]){re.escape(sp)}(?![\w.])")
-            new_text = pat.sub(shadow, masked)
-            if new_text != masked:
-                masked = new_text
+            new_text = dialect._shadow_sub(pat, shadow, sql)
+            if new_text != sql:
+                sql = new_text
                 hit = True
         if hit:
             cols = ([c for c, _ in t.cols + t.pcols]
@@ -1792,8 +1752,8 @@ def prepare(engine, sql_text: str) -> str:
                                  {}).get(phys))
             swapped.append((shadow, cols))
     if swapped:
-        masked = _expand_stars(masked, swapped)
-    return _unmask(masked, lits)
+        sql = _expand_stars(sql, swapped)
+    return sql
 
 
 # ---------------------------------------------------------------------

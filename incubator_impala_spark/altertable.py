@@ -29,7 +29,7 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql import DataFrame, functions as F
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import sqlscan
 
 __all__ = ["handle"]
 
@@ -85,39 +85,6 @@ _SORT_BY = re.compile(
 def _summary(spark, text: str) -> DataFrame:
     return spark.createDataFrame([(text,)], "summary string")
 
-
-def _split_cols(text: str) -> list[str]:
-    """Split a column-definition list on top-level commas — unlike
-    dialect._split_args this also tracks ``<>`` generic depth
-    (``map<string,float>`` is one item)."""
-    items, cur, depth, angle, q = [], [], 0, 0, None
-    for c in text:
-        if q:
-            cur.append(c)
-            if c == q:
-                q = None
-        elif c in "'\"":
-            q = c
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif c == "<":
-            angle += 1
-            cur.append(c)
-        elif c == ">":
-            angle -= 1
-            cur.append(c)
-        elif c == "," and depth == 0 and angle == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    items.append("".join(cur))
-    return [x.strip() for x in items if x.strip()]
 
 
 def _col_def(item: str):
@@ -245,9 +212,7 @@ def _recreate(engine, tbl: str, exprs: list) -> None:
 def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
     """Partition spec with constant-folded values as SQL literals."""
     items = []
-    for item in dialect._split_args(spec):
-        if not item.strip():
-            continue
+    for item in sqlscan.split_top(spec):
         k, v = item.split("=", 1)
         v = v.strip()
         if not re.fullmatch(r"-?\d+(\.\d+)?|'(?:[^']|'')*'|NULL", v,
@@ -259,39 +224,6 @@ def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
                 if isinstance(row, str) else str(row)
         items.append((k.strip().strip("`"), v))
     return items
-
-
-def _drop_parts_by_predicate(engine, tbl: str, spec: str) -> int:
-    """DROP PARTITION with comparison predicates (``p < '1400-01-01',
-    q = 2`` — items are ANDed). Evaluates the predicate per catalog
-    partition (metadata-sized, not data-sized) and drops matches."""
-    import urllib.parse
-
-    spark = engine.spark
-    types = {c.name.lower(): c.dataType
-             for c in spark.catalog.listColumns(tbl) if c.isPartition}
-    pred = " AND ".join(
-        x for x in dialect._split_args(spec) if x.strip())
-    dropped = 0
-    for r in spark.sql(f"SHOW PARTITIONS {tbl}").collect():
-        kv = dict(x.split("=", 1) for x in r[0].split("/"))
-        assigns = ", ".join(
-            "CAST('{}' AS {}) AS `{}`".format(
-                urllib.parse.unquote(v).replace("'", "''"),
-                types.get(k.lower(), "string"), k)
-            for k, v in kv.items())
-        hit = spark.sql(
-            f"SELECT ({engine.translate(pred)}) "
-            f"FROM (SELECT {assigns})").collect()[0][0]
-        if hit:
-            sql_spec = ", ".join(
-                "`{}`='{}'".format(
-                    k, urllib.parse.unquote(v).replace("'", "''"))
-                for k, v in kv.items())
-            spark.sql(
-                f"ALTER TABLE {tbl} DROP PARTITION ({sql_spec})")
-            dropped += 1
-    return dropped
 
 
 def _drop_sort_col(engine, tbl: str, col: str) -> None:
@@ -320,7 +252,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
     if am:
         if "cols" in am.groupdict() and am.group("cols") is not None:
             defs = [_col_def(x)
-                    for x in _split_cols(am.group("cols"))]
+                    for x in sqlscan.split_top(am.group("cols"), angle=True)]
             ine = bool(am.group("ine1"))
         else:
             defs = [_col_def(am.group("col"))]
@@ -425,7 +357,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
     rm = _REPLACE_COLS.match(rest)
     if rm:
         defs = [_col_def(x)
-                for x in _split_cols(rm.group("cols"))]
+                for x in sqlscan.split_top(rm.group("cols"), angle=True)]
         ov = _overlay_for(engine, tbl)
         if ov is not None:
             from pyspark.sql.types import StructField, StructType

@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import re
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import sqlscan
 
 _CREATE = re.compile(
     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
@@ -155,7 +155,7 @@ def check_query(engine, sql_text: str) -> None:
     if re.match(r"(?is)^\s*(drop|create|alter|invalidate|refresh|"
                 r"describe|show|use)\b", sql_text):
         return  # only scans hit the scanner's stale-schema error
-    low = dialect._neutralize(sql_text).lower()
+    low = sqlscan.shadow(sql_text).lower()
     for name in stale:
         if re.search(rf"\b{re.escape(name)}\b", low):
             raise ValueError(STALE_MSG)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 import os
 import re
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import dialect, sqlscan
 from incubator_impala_spark.grants import GrantRegistry
 from incubator_impala_spark.functions.registry import (
     MACROS,
@@ -944,8 +944,7 @@ class Engine:
         cte_prefix = ""
         if re.match(r"^\s*with\b", ins_text, re.IGNORECASE):
             # INSERT at paren depth 0 after the CTE list
-            depth0 = dialect._strip_parens_preserving(
-                dialect._neutralize(ins_text))
+            depth0 = sqlscan.top_level(ins_text)
             im = re.search(r"\binsert\b", depth0, re.IGNORECASE)
             if im:
                 cte_prefix = ins_text[:im.start()].rstrip()
@@ -1496,7 +1495,7 @@ class Engine:
             for f in src.schema.fields)
         part = ""
         if m.group("part"):
-            items = dialect._split_args(m.group("part"))
+            items = sqlscan.split_top(m.group("part"))
             typed = [i for i in items if len(i.split()) >= 2]
             if typed:
                 cols_ddl += ", " + ", ".join(items)
@@ -1524,35 +1523,6 @@ class Engine:
                 pass
         return self.spark.createDataFrame(
             [("Table has been created.",)], "summary string")
-
-    @staticmethod
-    def _split_cols(colstr: str) -> list[str]:
-        """Split a column-definition list on top-level commas,
-        tracking <> nesting (struct<f1:int,f2:string>) alongside
-        parens and quotes."""
-        out, cur, depth, in_str = [], [], 0, None
-        for c in colstr:
-            if in_str:
-                cur.append(c)
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-                cur.append(c)
-            elif c in "(<[":
-                depth += 1
-                cur.append(c)
-            elif c in ")>]":
-                depth -= 1
-                cur.append(c)
-            elif c == "," and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(c)
-        if cur and "".join(cur).strip():
-            out.append("".join(cur).strip())
-        return out
 
     @staticmethod
     def _avro_type(sql_type: str) -> str:
@@ -1590,7 +1560,7 @@ class Engine:
             col_re = re.compile(
                 r"^\s*`?(?P<name>[A-Za-z_]\w*)`?\s+(?P<type>[\w()<>, ]+?)"
                 r"(?:\s+COMMENT\s+'(?:[^']|'')*')?\s*$", re.IGNORECASE)
-            for item in self._split_cols(coldefs):
+            for item in sqlscan.split_top(coldefs, angle=True):
                 cm = col_re.match(item)
                 cd_types.append(cm.group("type").strip() if cm else "")
         defs = []
@@ -1611,7 +1581,7 @@ class Engine:
         pclause = ""
         if part and part.strip():
             pnames = []
-            for item in self._split_cols(part):
+            for item in sqlscan.split_top(part, angle=True):
                 pm2 = re.match(r"\s*`?(\w+)`?\s+(\S+)", item)
                 if pm2:
                     defs.append(f"`{pm2.group(1)}` {pm2.group(2)}")
@@ -1641,7 +1611,7 @@ class Engine:
             r"(?:\s+COMMENT\s+'(?P<cm>(?:[^']|'')*)')?\s*$",
             re.IGNORECASE)
         defs = []
-        for item in self._split_cols(m.group("cols")):
+        for item in sqlscan.split_top(m.group("cols"), angle=True):
             cm = col_re.match(item)
             if not cm:
                 return None  # unparsed column def: fall through
@@ -1651,7 +1621,7 @@ class Engine:
                         f"{self._avro_type(cm.group('type'))} "
                         f"COMMENT '{comment}'")
         pnames = []
-        for item in self._split_cols(m.group("part") or ""):
+        for item in sqlscan.split_top(m.group("part") or "", angle=True):
             cm = col_re.match(item)
             if cm:
                 defs.append(f"`{cm.group('name')}` {cm.group('type')}")
@@ -1805,14 +1775,14 @@ class Engine:
                  if c.isPartition]
         static: dict[str, str] = {}
         dyn: list[str] = []
-        for item in dialect._split_args(m.group("part") or ""):
+        for item in sqlscan.split_top(m.group("part") or ""):
             if "=" in item:
                 k, v = item.split("=", 1)
                 # the value may be an Impala expression (char casts…)
                 static[k.strip().strip("`").lower()] = (
                     dialect.rewrite_char_casts(v.strip()))
-            elif item.strip():
-                dyn.append(item.strip().strip("`").lower())
+            else:
+                dyn.append(item.strip("`").lower())
         # columns the SELECT supplies, in order; with a column
         # permutation the dynamic partition keys append after the
         # listed columns (InsertStmt.java permutation rules)
@@ -2060,17 +2030,6 @@ class Engine:
         msg = (f"Loaded {len(files)} file(s). "
                f"Total files in destination location: {total}")
         return self.spark.createDataFrame([(msg,)], "summary string")
-
-    def create_java_function(self, name: str, class_name: str,
-                             return_type=None) -> None:
-        """Java UDF call-through — the reference's Hive-UDF bridge
-        (be/src/exprs/hive-udf-call.h; CreateUdfStmt.java). Classes
-        implementing org.apache.spark.sql.api.java.UDF* register here;
-        Hive GenericUDF classes go through the SQL form
-        `CREATE FUNCTION name LOCATION '..' SYMBOL='cls'` (translated
-        to CREATE TEMPORARY FUNCTION ... AS — needs a hive-catalog
-        session, spark.sql.catalogImplementation=hive)."""
-        self.spark.udf.registerJavaFunction(name, class_name, return_type)
 
     def explain(self, sql_text: str, mode: str = "formatted") -> str:
         """EXPLAIN surface (reference: sql-parser.cup:765-775)."""

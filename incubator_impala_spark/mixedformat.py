@@ -30,6 +30,7 @@ import re
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import partitions as _parts
+from incubator_impala_spark import sqlscan
 
 # declared (Spark simpleString) type -> acceptable Avro schema types.
 # TINYINT/SMALLINT are absent on purpose: Avro has no 8/16-bit ints,
@@ -92,12 +93,6 @@ def maybe_activate(engine, phys: str) -> None:
         register(engine, phys)
 
 
-def deactivate(engine, phys: str) -> None:
-    if getattr(engine, "mixed_tables", {}).pop(phys.lower(), None):
-        # dropTempView returns False when absent, no exception
-        engine.spark.catalog.dropTempView(phys.lower())
-
-
 _DML = re.compile(r"(?is)^\s*(insert|alter|drop|create|truncate|"
                   r"load|refresh|invalidate|compute|describe|show|"
                   r"upsert|update|delete)\b")
@@ -107,12 +102,10 @@ def refresh_views(engine, sql_text: str) -> None:
     """engine.sql pre-pass: SELECT statements get fresh dispatch
     views for every referenced mixed table; any other statement drops
     the shadow so it operates on the catalog object itself."""
-    from incubator_impala_spark import dialect
-
     mixed = getattr(engine, "mixed_tables", None)
     if not mixed:
         return
-    low = dialect._neutralize(sql_text).lower()
+    low = sqlscan.shadow(sql_text).lower()
     for phys in list(mixed):
         if not re.search(rf"\b{re.escape(phys)}\b", low):
             continue

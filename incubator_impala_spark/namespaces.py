@@ -14,7 +14,7 @@ is served by a lightweight namespace registry instead:
   name is the mangled ``db__name``.
 * ``resolve()`` rewrites qualified references to engine-owned dbs into
   the mangled physical names (literal-safe: matching runs on the
-  dialect's _neutralize shadow), so SELECT/INSERT/DESCRIBE statements
+  sqlscan shadow), so SELECT/INSERT/DESCRIBE statements
   flow through the normal engine path unchanged.
 * ``handle()`` intercepts the DDL statements themselves — CREATE/DROP
   DATABASE, CREATE/ALTER/DROP VIEW, RENAME, SHOW TABLES/DATABASES,
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import dialect, sqlscan
 
 __all__ = ["Namespaces"]
 
@@ -188,11 +188,11 @@ class Namespaces:
     def resolve(self, sql: str) -> str:
         """Rewrite ``db.obj`` (and, under USE, unqualified registered
         names) to mangled physical names. Matching runs on the
-        _neutralize shadow so string literals are never touched."""
+        sqlscan shadow so string literals are never touched."""
         if self.dbs:
             # identifier-preserving shadow: a registered db may be
             # spelled `parquet` (backquoted keyword)
-            shadow = dialect._neutralize_keep_idents(sql)
+            shadow = sqlscan.shadow(sql, idents=False)
             pat = re.compile(
                 r"(`?)\b(" + "|".join(map(re.escape, self.dbs)) +
                 r")\b\1\.(`?)([A-Za-z_]\w*)\3", re.IGNORECASE)
@@ -206,7 +206,7 @@ class Namespaces:
             sql = "".join(out)
         cur = self.current
         if cur and self.dbs.get(cur):
-            shadow = dialect._neutralize(sql)
+            shadow = sqlscan.shadow(sql)
             # Match a registered name standing alone (relation/identifier
             # position) OR used as a column qualifier (`t.x`, `t.*`) — the
             # qualifier must mangle together with the relation it refers
@@ -244,12 +244,6 @@ class Namespaces:
         if self.current and name.lower() in self.dbs.get(self.current, {}):
             return self.current, name.lower()
         return None, name.lower()
-
-    def _info(self, name: str) -> dict | None:
-        db, obj = self.split(name)
-        if db is not None:
-            return self.dbs[db].get(obj)
-        return None
 
     # -- statement handling ---------------------------------------------
 
@@ -546,7 +540,7 @@ class Namespaces:
         # base-column comments — CreateOrAlterViewStmtBase.java)
         sel = []
         cols = m.group("cols")
-        items = dialect._split_args(cols) if cols else None
+        items = sqlscan.split_top(cols) if cols else None
         for i, f0 in enumerate(df.schema.fields):
             # backtick-quote: derived-expression column names contain
             # dots/parens that F.col would parse as path steps

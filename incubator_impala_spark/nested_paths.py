@@ -47,6 +47,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import (ArrayType, DataType, DecimalType, MapType,
                                StructField, StructType)
 
+from incubator_impala_spark import sqlscan
+
 _IDENT = r"[A-Za-z_][A-Za-z_0-9]*"
 _PATH_ITEM = re.compile(
     rf"^\s*({_IDENT}(?:\.{_IDENT})+)(?:\s+(?:as\s+)?({_IDENT}))?\s*$",
@@ -63,9 +65,12 @@ _TABLE_ITEM = re.compile(
 _TABLE_ON_ITEM = re.compile(
     rf"^\s*({_IDENT})(?:\s+(?:as\s+)?({_IDENT}))?\s+on\s+.+$",
     re.IGNORECASE | re.DOTALL)
+_FROM_KW = re.compile(r"\bfrom\b", re.IGNORECASE)
+# a FROM item list ends at its scope's `)` or a clause keyword
 _FROM_END = re.compile(
-    r"\b(where|group|having|order|limit|offset|union|intersect|except|"
+    r"\)|\b(where|group|having|order|limit|offset|union|intersect|except|"
     r"minus|window)\b", re.IGNORECASE)
+_UNION = re.compile(r"\bunion(\s+(all|distinct))?\b", re.IGNORECASE)
 _JOINER = re.compile(
     r",|\b(?:(left|right|full|cross|inner)\s+)?(?:(outer|anti|semi)\s+)?"
     r"join\b", re.IGNORECASE)
@@ -321,86 +326,23 @@ def _build_lateral_chain(scope: "_Scope", steps: list, final_t,
 
 def _split_from_items(text: str) -> list[tuple[str, str]]:
     """[(joiner_text, item_text)] — joiner '' for the first item."""
-    items, cur, joiner, depth, i, n = [], [], "", 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            cur.append(text[i:j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if depth == 0:
-            m = _JOINER.match(text, i)
-            if m and not (text[i] not in "," and i > 0
-                          and (text[i - 1].isalnum() or text[i - 1] == "_")):
-                items.append((joiner, "".join(cur)))
-                cur, joiner = [], m.group(0)
-                i = m.end()
-                continue
-        cur.append(c)
-        i += 1
-    items.append((joiner, "".join(cur)))
+    items, joiner, pos = [], "", 0
+    for m in _JOINER.finditer(sqlscan.top_level(text)):
+        items.append((joiner, text[pos:m.start()]))
+        joiner, pos = text[m.start():m.end()], m.end()
+    items.append((joiner, text[pos:]))
     return items
 
 
 def _find_from_clauses(sql: str) -> list[tuple[int, int]]:
     """(start, end) spans of top-level FROM item lists (after the FROM
     keyword up to the clause terminator)."""
-    spans, i, n = [], 0, len(sql)
-    depth = 0
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "`":
-            # backtick-quoted identifiers may spell keywords
-            # (``m.`from``` in a select list is not the FROM clause)
-            i += 1
-            while i < n and sql[i] != "`":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and sql[i:i + 4].lower() == "from" \
-                and (i == 0 or not (sql[i - 1].isalnum()
-                                    or sql[i - 1] == "_")) \
-                and (i + 4 == n or not (sql[i + 4].isalnum()
-                                        or sql[i + 4] == "_")):
-            j, d2 = i + 4, 0
-            while j < n:
-                cj = sql[j]
-                if cj == "'":
-                    j += 1
-                    while j < n and sql[j] != "'":
-                        j += 1
-                elif cj == "`":
-                    j += 1
-                    while j < n and sql[j] != "`":
-                        j += 1
-                elif cj == "(":
-                    d2 += 1
-                elif cj == ")":
-                    if d2 == 0:
-                        break
-                    d2 -= 1
-                elif d2 == 0:
-                    m = _FROM_END.match(sql, j)
-                    if m and not (sql[j - 1].isalnum() or sql[j - 1] == "_"):
-                        break
-                j += 1
-            spans.append((i + 4, j))
-            i = j
-            continue
-        i += 1
+    top = sqlscan.top_level(sql)
+    spans, pos = [], 0
+    while fm := _FROM_KW.search(top, pos):
+        em = _FROM_END.search(top, fm.end())
+        pos = em.start() if em else len(sql)
+        spans.append((fm.end(), pos))
     return spans
 
 
@@ -430,58 +372,34 @@ def _rewrite_scope(scope: _Scope, sql: str) -> str:
 def _rewrite_subselects(scope: _Scope, text: str) -> str:
     """Recurse into parenthesized SELECTs outside FROM clauses
     (scalar/EXISTS subqueries may carry relative refs too)."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            out.append(text[i:j + 1])
-            i = j + 1
+    shadow = sqlscan.shadow(text)
+    out, pos = [], 0
+    while (i := shadow.find("(", pos)) >= 0:
+        j = sqlscan.close_paren(shadow, i)
+        if j < 0:
+            break
+        out.append(text[pos:i])
+        pos = j + 1
+        inner = text[i + 1:j]
+        if not re.match(r"\s*select\b", inner, re.IGNORECASE):
+            out.append("(" + _rewrite_subselects(scope, inner) + ")")
             continue
-        if c == "(":
-            depth, j = 0, i
-            while j < n:
-                if text[j] == "'":
-                    j += 1
-                    while j < n and text[j] != "'":
-                        j += 1
-                elif text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            inner = text[i + 1:j]
-            if re.match(r"\s*select\b", inner, re.IGNORECASE):
-                # row-local SubplanNode shapes first (EXISTS / scalar
-                # aggregate over a relative collection → HOF, no
-                # correlated subquery at all)
-                joined = "".join(out)
-                m_ex = re.search(r"(?is)\b(not\s+)?exists\s*$", joined)
-                repl = _subplan_where_expr(scope, inner,
-                                           exists_ctx=bool(m_ex))
-                if repl is not None:
-                    if m_ex:
-                        out = [joined[:m_ex.start()]
-                               + (m_ex.group(1) or "")]
-                        out.append(f"({repl})")
-                    else:
-                        out.append(f"({repl})")
-                    i = j + 1
-                    continue
-                sub = _Scope(scope.spark, scope)
-                out.append("(" + _rewrite_scope(sub, inner) + ")")
-                if sub.used_outer:
-                    scope.used_outer = True
-            else:
-                out.append("(" + _rewrite_subselects(scope, inner) + ")")
-            i = j + 1
+        # row-local SubplanNode shapes first (EXISTS / scalar
+        # aggregate over a relative collection → HOF, no
+        # correlated subquery at all)
+        joined = "".join(out)
+        m_ex = re.search(r"(?is)\b(not\s+)?exists\s*$", joined)
+        repl = _subplan_where_expr(scope, inner, exists_ctx=bool(m_ex))
+        if repl is not None:
+            if m_ex:
+                out = [joined[:m_ex.start()] + (m_ex.group(1) or "")]
+            out.append(f"({repl})")
             continue
-        out.append(c)
-        i += 1
+        sub = _Scope(scope.spark, scope)
+        out.append("(" + _rewrite_scope(sub, inner) + ")")
+        if sub.used_outer:
+            scope.used_outer = True
+    out.append(text[pos:])
     return "".join(out)
 
 
@@ -550,15 +468,9 @@ def _rewrite_item(scope: _Scope, item: str, joiner: str) -> tuple[str, str]:
     outer_join = bool(re.search(r"\b(left|full|outer)\b", joiner,
                                 re.IGNORECASE))
     if stripped.startswith("("):
-        depth, j = 0, 0
-        while j < len(stripped):
-            if stripped[j] == "(":
-                depth += 1
-            elif stripped[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = sqlscan.close_paren(stripped, 0)
+        if j < 0:  # unbalanced — leave untouched
+            return item, joiner
         inner, tail = stripped[1:j], stripped[j + 1:]
         alias = re.sub(r"(?i)^\s*as\s+", "", tail).strip()
         # row-local SubplanNode FROM shapes (filter/sort/limit/group
@@ -636,11 +548,9 @@ def _rewrite_item(scope: _Scope, item: str, joiner: str) -> tuple[str, str]:
                 # row-local — keep the pair-alias guard for those
                 other_refs = False
                 if pred is not None:
-                    from incubator_impala_spark import dialect as _d
-
                     shadow_p = re.sub(
                         rf"(?i)(?<![\w.`]){re.escape(var)}\.\w+",
-                        "", _d._neutralize(pred))
+                        "", sqlscan.shadow(pred))
                     other_refs = bool(re.search(
                         r"(?i)(?<![\w.`'])[A-Za-z_]\w*\s*\.\s*"
                         r"[A-Za-z_]", shadow_p))
@@ -887,21 +797,16 @@ _PATH_HINT = re.compile(
 # ---------------------------------------------------------------------------
 
 def _sub_outside_strings(text: str, fn) -> str:
-    """Apply fn to the segments of `text` outside single-quoted
-    string literals."""
-    out, i, n = [], 0, len(text)
-    start = 0
-    while i < n:
-        if text[i] == "'":
-            out.append(fn(text[start:i]))
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            out.append(text[i:j + 1])
-            i = j + 1
-            start = i
-            continue
-        i += 1
+    """Apply fn to the segments of `text` outside string literals."""
+    # the shadow keeps only the quotes that delimit literals (escaped
+    # quotes, comments and identifiers are blanked), so they pair up
+    # in order; an odd one opens a literal that runs to the end
+    quotes = [m.start() for m in re.finditer(r"['\"]", sqlscan.shadow(text))]
+    out, start = [], 0
+    for lo, hi in zip(quotes[::2], quotes[1::2] + [len(text) - 1]):
+        out.append(fn(text[start:lo]))
+        out.append(text[lo:hi + 1])
+        start = hi + 1
     out.append(fn(text[start:]))
     return "".join(out)
 
@@ -1138,29 +1043,11 @@ def _order_comparator(ordspec: str, alias: str | None,
 def _parse_union_branches(inner: str) -> list[tuple[str, str | None]]:
     """[(branch_text, union_mode_before)] — top-level UNION split;
     mode is 'all' or 'distinct' (bare UNION = distinct)."""
-    out, depth, i, n = [], 0, 0, len(inner)
-    start, mode = 0, None
-    while i < n:
-        c = inner[i]
-        if c == "'":
-            i += 1
-            while i < n and inner[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = re.match(r"union(\s+(all|distinct))?\b", inner[i:],
-                         re.IGNORECASE)
-            if m and not (i > 0 and (inner[i - 1].isalnum()
-                                     or inner[i - 1] == "_")):
-                out.append((inner[start:i], mode))
-                mode = (m.group(2) or "distinct").lower()
-                i += m.end()
-                start = i
-                continue
-        i += 1
+    out, start, mode = [], 0, None
+    for m in _UNION.finditer(sqlscan.top_level(inner)):
+        out.append((inner[start:m.start()], mode))
+        mode = (m.group(2) or "distinct").lower()
+        start = m.end()
     out.append((inner[start:], mode))
     return out
 
@@ -1300,7 +1187,7 @@ _RN_OVER_RE = re.compile(
 
 def _sel_items(sel: str) -> list[tuple[str, str | None]]:
     out = []
-    for item in _split_top_commas(sel):
+    for item in sqlscan.split_top(sel):
         im = re.match(r"(?is)^\s*(.*?)(?:\s+(?:as\s+)?"
                       r"([A-Za-z_]\w*))?\s*$", item)
         out.append((im.group(1), im.group(2)))
@@ -1648,11 +1535,10 @@ def _values_tuple_array(text: str, want_cols: list | None):
     else:
         rows_txt = m.group(1)
     rows = []
-    for row in _split_top_commas(rows_txt):
-        row = row.strip()
+    for row in sqlscan.split_top(rows_txt):
         if not (row.startswith("(") and row.endswith(")")):
             return None
-        vals = [v.strip() for v in _split_top_commas(row[1:-1])]
+        vals = sqlscan.split_top(row[1:-1])
         if sel_items is not None:
             # positional colN substitution through the select list
             out_vals = []
@@ -1730,22 +1616,6 @@ def _subplan_from_rel(scope: "_Scope", inner: str,
     proj = ", ".join(f"__si.{c} as {c}" for c in cols)
     return (f"(select {proj} from "
             f"(select posexplode({arr}) as (__sp, __si)))")
-
-
-def _split_top_commas(text: str) -> list[str]:
-    items, depth, cur = [], 0, []
-    for c in text:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    items.append("".join(cur))
-    return items
 
 
 def rewrite_collection_refs(spark: SparkSession, sql: str) -> str:

@@ -78,80 +78,33 @@ def _shingle_expr(n: int) -> str:
     )
 
 
-def shingle_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               n: int = 3) -> DataFrame:
-    """Distinct word-n-gram shingles per document; docs with fewer than
-    n tokens yield no rows. One row per (doc, shingle).
-
-    Plan shape matters here: tokenize ONCE into a projected array
-    column, then index it — inlining `split()` into the transform
-    lambda re-splits the text per shingle position, an O(tokens²)
-    blowup. The repartition spreads the CPU-dense explode across the
-    cluster even when the input is a handful of splits (hash on the
-    doc id — at 100 TB the scan already yields thousands of splits,
-    and the shuffle cost of id+text rows is trivial next to the
-    shingle explosion it parallelizes)."""
-    return (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
-        .repartition(_par(df), F.col(id_col))
-        .select(F.col(id_col), F.explode(F.expr(_shingle_expr(n))).alias("sh"))
-        .distinct()
-    )
-
-
 def shingle_arrays(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Per-document distinct shingle SET as an array column — the
-    map-only form of `shingle_df` (r11 optimization, guide §2.4): the
-    per-doc distinct is row-local (`array_distinct`), so no explode and
-    no global distinct shuffle are needed when downstream consumers
-    (minhash signatures, array-intersect verification) work per
-    document. Exactly the same shingle expression as `shingle_df`, so
-    the shingle multiset per doc is identical; `nsh` is the distinct
-    shingle count (== the exploded index's per-doc row count).
+    """Per-document distinct shingle SET as an array column (r11
+    optimization, guide §2.4): the per-doc distinct is row-local
+    (`array_distinct`), so no explode and no global distinct shuffle
+    are needed when downstream consumers (minhash signatures,
+    array-intersect verification) work per document; `nsh` is the
+    distinct shingle count.
 
     Docs with fewer than n tokens yield an EMPTY shingle array (and so
     NULL array_min signature slots downstream, dropping out of the
     candidate equi-join — see _shingle_expr).
 
-    The repartition spreads the CPU-dense hashing that follows across
-    the cluster even when the input is a handful of splits (same
-    rationale as shingle_df)."""
+    Plan shape matters here: tokenize ONCE into a projected array
+    column, then index it — inlining `split()` into the transform
+    lambda re-splits the text per shingle position, an O(tokens²)
+    blowup. The repartition spreads the CPU-dense hashing that follows
+    across the cluster even when the input is a handful of splits
+    (hash on the doc id — at 100 TB the scan already yields thousands
+    of splits, and the shuffle cost of id+text rows is trivial next
+    to the hashing it parallelizes)."""
     sh = f"array_distinct({_shingle_expr(n)})"
     return (
         df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
         .repartition(_par(df), F.col(id_col))
         .select(F.col(id_col), F.expr(sh).alias("shs"))
         .withColumn("nsh", F.size("shs"))
-    )
-
-
-def _jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard over candidate pairs via the shingle index."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("nsh"))
-    pairs = cand.select(F.col("d1").alias("ca"), F.col("d2").alias("cb"))
-    s1 = sh.select(F.col("doc_id").alias("sd1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("sd2"), F.col("sh").alias("sh2"))
-    common = (
-        pairs.join(s1, F.col("ca") == F.col("sd1"))
-        .join(s2, (F.col("cb") == F.col("sd2")) & (F.col("sh1") == F.col("sh2")))
-        .groupBy("ca", "cb")
-        .agg(F.count("*").alias("nc"))
-    )
-    z1 = sizes.select(F.col("doc_id").alias("zd1"), F.col("nsh").alias("n1"))
-    z2 = sizes.select(F.col("doc_id").alias("zd2"), F.col("nsh").alias("n2"))
-    return (
-        common.join(z1, F.col("ca") == F.col("zd1"))
-        .join(z2, F.col("cb") == F.col("zd2"))
-        .select(
-            F.col("ca").alias("d1"),
-            F.col("cb").alias("d2"),
-            (
-                F.col("nc").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("nc")).cast("double")
-            ).alias("jac"),
-        )
-        .where(F.col("jac") >= threshold)
     )
 
 
@@ -176,10 +129,9 @@ _MH_AB = [
     for h in range(MINHASH_K)
 ]
 # 15 hex chars of the digest -> 60-bit int, folded to 32 bits; all
-# terms non-negative so plain % matches across engines
-_MH_BASE = ("(cast(conv(substr(md5(sh), 1, 15), 16, 10) as bigint)"
-            " % 4294967296)")
-# DuckDB spelling of the same base (no conv(); 0x-prefixed cast)
+# terms non-negative so plain % matches across engines. DuckDB
+# spelling over the oracle's exploded `sh` column (no conv();
+# 0x-prefixed cast)
 _MH_BASE_DUCK = ("(cast(concat('0x', substr(md5(sh), 1, 15)) as bigint)"
                  " % 4294967296)")
 
@@ -192,16 +144,8 @@ def minhash_sig_exprs(base: str) -> list[str]:
     ]
 
 
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """k minhashes per doc from one md5 per shingle (see _MH_AB).
-    Value-stable everywhere md5 and 64-bit integer arithmetic are
-    standard."""
-    aggs = [F.expr(e) for e in minhash_sig_exprs(_MH_BASE)]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-# Per-element spelling of _MH_BASE for the array form (same arithmetic
-# over a lambda variable instead of the exploded `sh` column).
+# Spark spelling of the same base over one array element (a lambda
+# variable instead of the exploded `sh` column).
 _MH_BASE_ELEM = ("(cast(conv(substr(md5({v}), 1, 15), 16, 10) as bigint)"
                  " % 4294967296)")
 
@@ -210,9 +154,9 @@ def minhash_signatures_arrays(docsets: DataFrame) -> DataFrame:
     """k minhashes per doc computed MAP-ONLY from the per-doc shingle
     array (r11, guide §2.3/§2.4): one md5 per array element projected
     once (`_bases`), then k array_min folds — the same universal-hash
-    arithmetic as `minhash_signatures`, so h0..h15 (and every LSH
-    bucket derived from them) are bit-identical to the exploded
-    groupBy form, with ZERO aggregation exchange. Docs with fewer than
+    arithmetic as the oracle's `minhash_sig_exprs` groupBy, so h0..h15
+    (and every LSH bucket derived from them) are bit-identical to it,
+    with ZERO aggregation exchange. Docs with fewer than
     n tokens yield empty/NULL signature slots, which hash to NULL
     buckets and drop out of the candidate equi-join exactly as their
     absence from the exploded index did."""
@@ -588,15 +532,6 @@ def dot_product(a: str | Column, b: str | Column) -> Column:
 def vec_norm(a: str | Column) -> Column:
     """L2 norm with the same fold order as dot_product(a, a)."""
     return F.sqrt(dot_product(a, a))
-
-
-def cosine_sim(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity between two array<float/double> columns.
-
-    Per-pair form (recomputes both norms); the batch operators below
-    precompute per-row norms once instead — 3× less lambda eval with
-    bit-identical results (identical fold order either way)."""
-    return dot_product(a, b) / (vec_norm(a) * vec_norm(b))
 
 
 def embedding_dup_pairs(df: DataFrame, vec_col: str = "embedding",

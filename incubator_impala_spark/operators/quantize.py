@@ -41,11 +41,3 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
         .select(id_col, "scale", "qvec")
     )
 
-
-def dequantize(df: DataFrame, scale_col: str = "scale",
-               qvec_col: str = "qvec") -> DataFrame:
-    """Reconstruct approximate float vectors: x ≈ q * scale."""
-    return df.withColumn(
-        "vec_approx",
-        F.transform(F.col(qvec_col), lambda q: q.cast("double") * F.col(scale_col)),
-    )

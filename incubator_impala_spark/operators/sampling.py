@@ -53,16 +53,6 @@ def train_eval_split(df: DataFrame, key: str,
     return df.withColumn("split", F.when(is_eval, "eval").otherwise("train"))
 
 
-def sample_sql(key_expr: str, fraction: float) -> str:
-    """The same predicate as portable SQL (both Spark and DuckDB read
-    `substr(md5(..),1,8) < 'hex'` identically) — used by oracles and
-    by pushdown-friendly raw-SQL pipelines."""
-    return (
-        f"substr(md5(CAST({key_expr} AS STRING)), 1, {_PREFIX_WIDTH})"
-        f" < '{_threshold_hex(fraction)}'"
-    )
-
-
 def sampled_ndv(df: DataFrame, col: str, key: str,
                 fraction: float = 0.2) -> DataFrame:
     """NDV estimated from a deterministic hash sample, extrapolated to

@@ -87,10 +87,6 @@ def quality_score(col: str = "text") -> Column:
     )
 
 
-def has_cjk(col: str = "text") -> Column:
-    return F.col(col).rlike("[\\u4e00-\\u9fff]")
-
-
 def fingerprint(col: str = "text") -> Column:
     """Order-insensitive document fingerprint: md5 over the sorted
     token multiset (the classic "fingerprint" dedup key — catches

@@ -35,6 +35,8 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql import DataFrame
 
+from incubator_impala_spark import sqlscan
+
 _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -56,10 +58,7 @@ def _translate_pred(spec: str) -> str:
     comma-separated items AND together; `= NULL` / `= ''` match the
     default (NULL) partition."""
     items = []
-    for item in _split_commas(spec):
-        item = item.strip()
-        if not item:
-            continue
+    for item in sqlscan.split_top(spec):
         m = re.match(r"^(`?\w+`?)\s*=\s*(NULL|''|\"\")\s*$", item,
                      re.IGNORECASE)
         if m:
@@ -67,26 +66,6 @@ def _translate_pred(spec: str) -> str:
         else:
             items.append(f"({item})")
     return " AND ".join(items) if items else "true"
-
-
-def _split_commas(s: str) -> list[str]:
-    out, depth, q, start = [], 0, None, 0
-    for i, c in enumerate(s):
-        if q:
-            if c == q:
-                q = None
-            continue
-        if c in "'\"":
-            q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-    out.append(s[start:])
-    return out
 
 
 def match_partitions(engine, tbl: str, spec: str | None) -> list[dict]:

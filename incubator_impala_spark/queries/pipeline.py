@@ -46,7 +46,7 @@ def _register(name: str, oracle: str | None):
 # DuckDB SQL fragments mirroring the operator library
 # ---------------------------------------------------------------------------
 
-# word-3-gram shingles + per-doc shingle counts (dedup.shingle_df)
+# word-3-gram shingles + per-doc shingle counts (dedup.shingle_arrays)
 _SHINGLES_DUCK = """
     toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     idx AS (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
@@ -56,7 +56,8 @@ _SHINGLES_DUCK = """
     sizes AS (SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id)
 """
 
-# exact-Jaccard verification over a `cand(d1, d2)` CTE (dedup._jaccard_verify)
+# exact-Jaccard verification over a `cand(d1, d2)` CTE
+# (dedup._jaccard_verify_arrays)
 _JACCARD_VERIFY_DUCK = """
     common AS (
       SELECT c.d1, c.d2, count(*) AS nc
@@ -75,7 +76,7 @@ _JACCARD_VERIFY_DUCK = """
 
 def _cosine_duck(a: str, b: str) -> str:
     """DuckDB cosine with the exact accumulation order of
-    dedup.cosine_sim: per-element double products (exact for float
+    dedup.dot_product: per-element double products (exact for float
     inputs), sequential left-to-right fold — bit-identical to Spark."""
 
     def dot(x: str, y: str) -> str:

@@ -31,6 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from incubator_impala_spark import sqlscan
 from incubator_impala_spark.dialect import translate
 from incubator_impala_spark.sources.tpcds import (
     duckdb_oracle_sql,
@@ -44,25 +45,6 @@ QUERIES: dict = {}
 ORACLE_SQL: dict = {}
 
 
-def _balanced(text: str, start: int) -> int:
-    """Index just past the ')' matching the '(' at ``start``."""
-    depth, i = 0, start
-    while i < len(text):
-        c = text[i]
-        if c == "'":
-            i += 1
-            while i < len(text) and text[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError(f"unbalanced parens at {start}")
-
-
 def rewrite_avg(sql: str) -> str:
     """avg(x) -> (cast(sum(x) as double) / count(x)); windowed avg
     duplicates the window spec onto both the sum and the count."""
@@ -70,25 +52,24 @@ def rewrite_avg(sql: str) -> str:
     pat = re.compile(r"\bavg\s*\(", re.IGNORECASE)
     while True:
         m = pat.search(sql, i)
-        if not m:
+        close = sqlscan.close_paren(sql, m.end() - 1) if m else -1
+        if close < 0:
             out.append(sql[i:])
             return "".join(out)
         out.append(sql[i:m.start()])
-        open_paren = sql.index("(", m.start())
-        close = _balanced(sql, open_paren)
-        arg = rewrite_avg(sql[open_paren + 1:close - 1]).strip()
-        over_m = re.match(r"\s*over\s*\(", sql[close:], re.IGNORECASE)
-        if over_m:
-            w_open = close + over_m.end() - 1
-            w_close = _balanced(sql, w_open)
-            win = sql[w_open:w_close]
+        arg = rewrite_avg(sql[m.end():close]).strip()
+        over_m = re.match(r"\s*over\s*\(", sql[close + 1:], re.IGNORECASE)
+        w_open = close + over_m.end() if over_m else -1
+        w_close = sqlscan.close_paren(sql, w_open) if over_m else -1
+        if w_close >= 0:
+            win = sql[w_open:w_close + 1]
             out.append(
                 f"(cast(sum({arg}) over {win} as double)"
                 f" / count({arg}) over {win})")
-            i = w_close
+            i = w_close + 1
         else:
             out.append(f"(cast(sum({arg}) as double) / count({arg}))")
-            i = close
+            i = close + 1
 
 
 def _quoted_idents_to_backticks(sql: str) -> str:
@@ -108,19 +89,8 @@ def rewrite_div_double(sql: str) -> str:
     the rewrite is value-preserving there too.  Opt-in per query label
     (_DIV_TO_DOUBLE): only texts whose outputs carry full-precision
     decimal quotients need it."""
-    # collect '/' operator positions, skipping strings and /* */ comments
-    positions, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "/" and i + 1 < n and sql[i + 1] == "*":
-            i = sql.index("*/", i) + 1
-        elif c == "/":
-            positions.append(i)
-        i += 1
+    # '/' operator positions: outside strings and comments
+    positions = [m.start() for m in re.finditer("/", sqlscan.shadow(sql))]
     for pos in reversed(positions):
         j = pos - 1
         while j >= 0 and sql[j].isspace():
@@ -168,18 +138,17 @@ def rewrite_stddev_samp(sql: str) -> str:
     pat = re.compile(r"\bstddev_samp\s*\(", re.IGNORECASE)
     while True:
         m = pat.search(sql, i)
-        if not m:
+        close = sqlscan.close_paren(sql, m.end() - 1) if m else -1
+        if close < 0:
             out.append(sql[i:])
             return "".join(out)
         out.append(sql[i:m.start()])
-        open_paren = sql.index("(", m.start())
-        close = _balanced(sql, open_paren)
-        x = sql[open_paren + 1:close - 1].strip()
+        x = sql[m.end():close].strip()
         out.append(
             f"sqrt((cast(sum(({x})*({x})) as double)"
             f" - cast(sum({x}) as double) * sum({x}) / count({x}))"
             f" / (count({x}) - 1))")
-        i = close
+        i = close + 1
 
 
 _STDDEV_ALGEBRAIC = {"17"}

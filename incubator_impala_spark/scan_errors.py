@@ -31,6 +31,8 @@ from py4j.protocol import Py4JJavaError
 from pyarrow.lib import ArrowException
 from pyspark.errors import PySparkException
 
+from incubator_impala_spark import sqlscan
+
 # the typed failure surfaces of a corrupt-file probe: pyarrow decode
 # errors (ArrowInvalid/ArrowIOError subclass ArrowException) and
 # filesystem errors
@@ -698,42 +700,23 @@ def register_partition_plugin_check(engine, name: str,
     }
 
 
+# a WHERE clause runs to the next depth-0 terminator
+_WHERE_END = re.compile(
+    r"\)|;|\b(?:group\s+by|order\s+by|limit|having|union|intersect|"
+    r"except)\b", re.IGNORECASE)
+
+
 def _top_level_wheres(sql_text: str) -> list[str]:
     """Extract every paren-depth-0 WHERE clause from `sql_text`
     (one per UNION branch), sliced from the ORIGINAL text using the
     literal/comment-blind shadow for keyword positions — a literal
     containing 'where' or a subquery WHERE can't mis-scope the probe
     (ADVICE r9)."""
-    from incubator_impala_spark import dialect
-
-    shadow = dialect._neutralize(sql_text)
-    ends = (r"[()]|\b(?:group\s+by|order\s+by|limit|having|"
-            r"union|intersect|except)\b|;")
+    top = sqlscan.top_level(sql_text)
     out = []
-    depth = 0
-    for m in re.finditer(r"[()]|\bwhere\b", shadow, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            # clause runs to the next depth-0 terminator keyword
-            end = len(sql_text)
-            d2 = 0
-            for m2 in re.finditer(ends, shadow[m.end():],
-                                  re.I | re.S):
-                if m2.group(0) == "(":
-                    d2 += 1
-                elif m2.group(0) == ")":
-                    if d2 == 0:
-                        end = m.end() + m2.start()
-                        break
-                    d2 -= 1
-                elif d2 == 0:
-                    end = m.end() + m2.start()
-                    break
-            out.append(sql_text[m.end():end])
+    for m in re.finditer(r"\bwhere\b", top, re.IGNORECASE):
+        em = _WHERE_END.search(top, m.end())
+        out.append(sql_text[m.end():em.start() if em else len(sql_text)])
     return out
 
 
@@ -783,9 +766,7 @@ def check_query(engine, sql_text: str) -> None:
     # doesn't spuriously trigger the abort validation (ADVICE r8);
     # an INSERT's target clause is a sink, not a scan — strip it so
     # INSERT INTO <checked> SELECT ... doesn't trigger the validation
-    from incubator_impala_spark import dialect
-
-    low = dialect._neutralize(sql_text).lower()
+    low = sqlscan.shadow(sql_text).lower()
     low = re.sub(r"^\s*insert\s+(?:into|overwrite)\s+(?:table\s+)?"
                  r"[`\w.]+", " ", low)
     for name, info in checks.items():

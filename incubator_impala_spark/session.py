@@ -114,7 +114,6 @@ def get_spark(app_name: str = "incubator-impala-spark",
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
-        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

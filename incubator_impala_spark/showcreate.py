@@ -30,7 +30,7 @@ from pyspark.errors.exceptions.base import (
     PySparkException as _PYSPARK_ERR,
 )
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import dialect, sqlscan
 
 # minimal reserved set that forces quoting in rendered identifiers —
 # Impala quotes what the Hive lexer can't take bare (ToSqlUtils
@@ -90,19 +90,6 @@ _ROW_FORMAT = re.compile(
     r"(?:\s+lines\s+terminated\s+by\s+(?P<lin>'[^']*'))?")
 
 
-def _balanced(text: str, open_idx: int) -> int:
-    """Index of the ')' closing the '(' at open_idx (shadow text)."""
-    depth = 0
-    for j in range(open_idx, len(text)):
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    return -1
-
-
 def _parse_props(raw: str) -> dict:
     return dict(re.findall(r"'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'",
                            raw))
@@ -133,7 +120,7 @@ def _record_create(engine, sql_text: str) -> None:
         return
     if not hasattr(engine, "create_meta"):
         engine.create_meta = {}
-    shadow = dialect._neutralize(sql_text)
+    shadow = sqlscan.shadow(sql_text)
     rest_off = m.start("rest")
     rest_shadow = shadow[rest_off:]
     rest = sql_text[rest_off:]
@@ -145,7 +132,7 @@ def _record_create(engine, sql_text: str) -> None:
     cols_raw = None
     lead = re.match(r"\s*\(", rest_shadow)
     if lead:
-        close = _balanced(rest_shadow, lead.end() - 1)
+        close = sqlscan.close_paren(rest_shadow, lead.end() - 1)
         if close > 0:
             cols_raw = rest[lead.end():close]
             tail_shadow = rest_shadow[close + 1:]
@@ -162,7 +149,7 @@ def _record_create(engine, sql_text: str) -> None:
         meta["aliases"] = None
         if cols_raw is not None:
             meta["aliases"] = []
-            for item in dialect._split_args(cols_raw):
+            for item in sqlscan.split_top(cols_raw):
                 im = re.match(r"\s*(`?)([A-Za-z_]\w*)\1", item)
                 if im:
                     meta["aliases"].append(im.group(2))
@@ -173,7 +160,7 @@ def _record_create(engine, sql_text: str) -> None:
     # TABLE facets
     if cols_raw is not None:
         cols = []
-        for item in dialect._split_args(cols_raw):
+        for item in sqlscan.split_top(cols_raw):
             cm = re.match(
                 r"(?is)\s*(`?)(?P<name>[A-Za-z_]\w*)\1\s+"
                 r"(?P<type>[\s\S]+?)"
@@ -187,9 +174,9 @@ def _record_create(engine, sql_text: str) -> None:
         meta["columns"] = cols
     pm = re.search(r"(?is)\bpartitioned\s+by\s*\(", tail_shadow)
     if pm:
-        close = _balanced(tail_shadow, pm.end() - 1)
+        close = sqlscan.close_paren(tail_shadow, pm.end() - 1)
         parts = []
-        for item in dialect._split_args(tail[pm.end():close]):
+        for item in sqlscan.split_top(tail[pm.end():close]):
             toks = item.split()
             if not toks:
                 continue
@@ -207,7 +194,7 @@ def _record_create(engine, sql_text: str) -> None:
         r"(?is)\bsort\s+by\s+(?P<ord>lexical\s+|zorder\s+)?\(",
         tail_shadow)
     if sm:
-        close = _balanced(tail_shadow, sm.end() - 1)
+        close = sqlscan.close_paren(tail_shadow, sm.end() - 1)
         meta["sort_cols"] = [c.strip().strip("`") for c in
                              tail[sm.end():close].split(",")
                              if c.strip()]
@@ -217,7 +204,7 @@ def _record_create(engine, sql_text: str) -> None:
     # length-preserving paren strip blanks literals too, so the
     # keyword is found on the stripped text and the literal is read
     # from the original at the same offset.
-    top = dialect._strip_parens_preserving(tail_shadow)
+    top = sqlscan.top_level(tail_shadow)
     for cm in re.finditer(r"(?is)\bcomment\b", top):
         j = cm.end()
         while j < len(tail) and tail[j].isspace():
@@ -236,11 +223,10 @@ def _record_create(engine, sql_text: str) -> None:
         meta["format"] = fm.group(1).upper()
     tm = re.search(r"(?is)\btblproperties\s*\(", tail_shadow)
     if tm:
-        close = _balanced(tail_shadow, tm.end() - 1)
+        close = sqlscan.close_paren(tail_shadow, tm.end() - 1)
         meta["tblproperties"] = _parse_props(tail[tm.end():close])
     meta["ctas"] = bool(re.search(r"(?is)\bas\s+select\b",
-                                  dialect._strip_parens_preserving(
-                                      tail_shadow)))
+                                  sqlscan.top_level(tail_shadow)))
     engine.create_meta[meta_key(engine, m.group("name"))] = meta
 
 

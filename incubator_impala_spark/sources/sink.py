@@ -31,10 +31,6 @@ def configure_dynamic_overwrite(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
-def insert_into(df: DataFrame, table: str) -> None:
-    df.writeTo(table).append()
-
-
 def insert_overwrite(df: DataFrame, table: str) -> None:
     """Dynamic partition overwrite (only touched partitions replaced)."""
     configure_dynamic_overwrite(df.sparkSession)
@@ -55,15 +51,6 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
     if clustered_by:
         out = out.sortWithinPartitions(*clustered_by)
     out.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
-
-
-def compute_stats_sql(table: str, incremental: bool = False) -> str:
-    """Impala COMPUTE [INCREMENTAL] STATS → Spark ANALYZE TABLE.
-
-    (ComputeStatsStmt.java feeds Impala's cost model; Spark's CBO
-    reads the same shape of stats from ANALYZE ... FOR ALL COLUMNS.)
-    """
-    return f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR ALL COLUMNS"
 
 
 def compact_small_files(spark: SparkSession, path: str,

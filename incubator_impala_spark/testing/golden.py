@@ -25,6 +25,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from incubator_impala_spark import sqlscan
+
 
 @dataclass
 class GoldenCase:
@@ -44,25 +46,6 @@ class GoldenFile:
 _SECTION = re.compile(r"^----\s+(QUERY|RESULTS|TYPES|CATCH)\s*$")
 
 
-def _split_types(s: str) -> list[str]:
-    """Split a TYPES line on commas outside parens/angle brackets, so
-    `decimal(38,2)` and `array<int>` stay whole."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [t for t in out if t]
-
-
 def parse_test_file(path: str) -> GoldenFile:
     out = GoldenFile(path=path)
     cur: dict[str, list[str]] = {}
@@ -77,7 +60,8 @@ def parse_test_file(path: str) -> GoldenFile:
                     query=q,
                     results=[ln for ln in cur.get("RESULTS", [])] if "RESULTS" in cur else None,
                     types=(
-                        _split_types(",".join(cur["TYPES"]))
+                        sqlscan.split_top(",".join(cur["TYPES"]),
+                                          angle=True)
                         if "TYPES" in cur
                         else None
                     ),

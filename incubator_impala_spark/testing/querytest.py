@@ -908,20 +908,13 @@ def _strip_location(stmt: str, engine=None) -> str:
                   out)
 
 
-def _shadow_sub(pattern: str, repl: str, s: str) -> str:
-    """re.sub that matches on the dialect's _neutralize shadow, so
+def _shadow_sub(pattern: str, repl, s: str) -> str:
+    """re.sub that matches on the literal/comment-blind shadow, so
     string literals are never rewritten (ADVICE r5 applied to the
     harness's own table-name rewrites)."""
     from incubator_impala_spark import dialect
 
-    shadow = dialect._neutralize(s)
-    out, pos = [], 0
-    for m in re.finditer(pattern, shadow):
-        out.append(s[pos:m.start()])
-        out.append(m.expand(repl))
-        pos = m.end()
-    out.append(s[pos:])
-    return "".join(out)
+    return dialect._shadow_sub(re.compile(pattern), repl, s)
 
 
 def _strip_location_all(text: str) -> str:
@@ -976,21 +969,11 @@ def _rewrite_stmt(s: str, rewrite, table_rewrites: dict | None) -> str:
         if table_rewrites:
             keep: list[str] = []
 
-            def _protect(m: re.Match) -> str:
+            def _protect(m) -> str:
                 keep.append(m.group(0))
                 return f"__kq{len(keep) - 1}q__"
 
-            shadow = None
-            from incubator_impala_spark import dialect
-
-            shadow = dialect._neutralize(s)
-            out, pos = [], 0
-            for m in re.finditer(r"\bfunctional(_\w+)?\.", shadow):
-                out.append(s[pos:m.start()])
-                out.append(_protect(m))
-                pos = m.end()
-            out.append(s[pos:])
-            s = "".join(out)
+            s = _shadow_sub(r"\bfunctional(_\w+)?\.", _protect, s)
             for old, new in table_rewrites.items():
                 s = _shadow_sub(rf"\b{old}\b", new, s)
             for i, orig in enumerate(keep):
@@ -1003,7 +986,7 @@ def _rewrite_stmt(s: str, rewrite, table_rewrites: dict | None) -> str:
     s = _shadow_sub(r"\bfunctional(_\w+)?\.(?=[A-Za-z_`])",
                     "__fxref__", s)
     # backtick-quoted qualifiers are identifiers, not literals — the
-    # neutralize shadow masks them, so this one runs on the raw text
+    # shadow masks them, so this one runs on the raw text
     s = re.sub(r"`functional(_\w+)?`\.", "__fxref__", s)
     for old, new in (table_rewrites or {}).items():
         s = _shadow_sub(rf"\b{old}\b", new, s)

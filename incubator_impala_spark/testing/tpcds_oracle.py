@@ -39,6 +39,7 @@ from decimal import Decimal
 import duckdb
 import pandas as pd
 
+from incubator_impala_spark import sqlscan
 from incubator_impala_spark.sources.tpcds_ref import CACHE, TABLES
 
 # Impala resolves an unqualified ORDER BY name against the select
@@ -137,16 +138,8 @@ def _scan_primary(sql: str, shadow: str, pos: int) -> int:
     while i < n and sql[i].isspace():
         i += 1
     if i < n and shadow[i] == "(":
-        depth = 0
-        while i < n:
-            if shadow[i] == "(":
-                depth += 1
-            elif shadow[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i + 1
-            i += 1
-        return n
+        j = sqlscan.close_paren(shadow, i)
+        return j + 1 if j >= 0 else n
     if i < n and sql[i] == "'":
         # string literal: the shadow blanks its body, both quotes stay
         j = i + 1
@@ -170,30 +163,17 @@ def rewrite_between_compound(sql: str) -> str:
     """Impala's BetweenPredicate rewrite, applied where a bound casts
     to DATE/TIMESTAMP: `X between A and B` -> `(X >= A and X <= B)`
     so DuckDB coerces each comparison independently (module doc)."""
-    from incubator_impala_spark import dialect
-
     while True:
-        shadow = dialect._neutralize(sql)
+        shadow = sqlscan.shadow(sql)
         done = True
         for m in re.finditer(r"(?i)\bbetween\b", shadow):
             # separator: first AND at the between's own paren depth
-            depth = 0
-            sep = None
-            for m2 in re.finditer(r"[()]|(?i:\band\b)", shadow[m.end():]):
-                tok = m2.group(0)
-                if tok == "(":
-                    depth += 1
-                elif tok == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif depth == 0:
-                    sep = (m.end() + m2.start(), m.end() + m2.end())
-                    break
-            if sep is None:
+            am = re.search(r"\)|(?i:\band\b)",
+                           sqlscan.top_level(shadow[m.end():]))
+            if am is None or am.group() == ")":
                 continue
-            lo_a, lo_b = m.end(), sep[0]
-            hi_a = sep[1]
+            lo_a, lo_b = m.end(), m.end() + am.start()
+            hi_a = m.end() + am.end()
             hi_b = _scan_primary(sql, shadow, hi_a)
             lo = sql[lo_a:lo_b].strip()
             hi = sql[hi_a:hi_b].strip()
@@ -230,43 +210,19 @@ def rewrite_int_casts_trunc(sql: str) -> str:
     (dialect.rewrite_decimal_int_casts): a cast-to-integer whose
     argument holds a top-level `/` (the decimal-division idiom)."""
     from incubator_impala_spark.dialect import (
-        _CAST_OPEN,
         _INT_CAST_TAIL,
         _has_top_level_div,
+        _rewrite_casts,
     )
 
-    out, pos = [], 0
-    while True:
-        m = _CAST_OPEN.search(sql, pos)
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        depth, j = 0, m.end() - 1
-        while j < len(sql):
-            c = sql[j]
-            if c == "'":
-                j += 1
-                while j < len(sql) and sql[j] != "'":
-                    j += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        inner = sql[m.end():j]
-        tail = _INT_CAST_TAIL.search(inner)
-        if tail is None or not _has_top_level_div(inner[:tail.start()]):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        expr = rewrite_int_casts_trunc(inner[:tail.start()])
+    def build(expr: str, tail: re.Match) -> str | None:
+        if not _has_top_level_div(expr):
+            return None
         ty = tail.group(1).lower()
         ty = "int" if ty == "integer" else ty
-        out.append(sql[pos:m.start()])
-        out.append(f"cast(trunc({expr}) as {ty})")
-        pos = j + 1
+        return f"cast(trunc({rewrite_int_casts_trunc(expr)}) as {ty})"
+
+    return _rewrite_casts(sql, _INT_CAST_TAIL, build)
 
 
 def oracle_text(name: str, sql: str, decimal_v2: bool = True) -> str:

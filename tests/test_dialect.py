@@ -5,7 +5,7 @@ defaults, and end-to-end Engine.sql execution."""
 
 from __future__ import annotations
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import dialect, sqlscan
 from incubator_impala_spark.functions.registry import MACROS
 
 
@@ -25,6 +25,13 @@ def test_macro_nested_call():
 def test_macro_args_with_commas_in_parens():
     out = tr("SELECT isnull(f(a, b), g(c, d)) FROM t")
     assert out == "SELECT coalesce(f(a, b), g(c, d)) FROM t"
+    # a comma inside an escaped literal or a backtick identifier is
+    # not an argument separator
+    assert tr(r"SELECT zeroifnull('it\'s, x') FROM t") == \
+        r"SELECT coalesce('it\'s, x', 0) FROM t"
+    assert tr("SELECT zeroifnull(`a,b`) FROM t") == \
+        "SELECT coalesce(`a,b`, 0) FROM t"
+    assert sqlscan.split_top(r"p='a\'b,c', q=1") == [r"p='a\'b,c'", "q=1"]
 
 
 def test_macro_string_arg_with_paren():

@@ -50,6 +50,9 @@ def test_right_semi_commutes_single_relation():
 def test_right_semi_left_join_tree_untouched():
     sql = "select * from a join c on a.i=c.i right semi join b on a.x = b.x"
     assert rewrite_right_semi(sql) == sql
+    # the join keywords inside a string literal are data
+    sql = "select * from t where s = 'a right semi join b on c'"
+    assert rewrite_right_semi(sql) == sql
 
 
 def test_setop_precedence_left_assoc():
