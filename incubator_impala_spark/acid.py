@@ -1722,7 +1722,9 @@ def prepare(engine, sql_text: str) -> str:
     FROM clause actually references a swapped relation."""
     if any(t.dirty for t in registry(engine).values()):
         refresh_views(engine)
-    if not _ROWID_REF.search(sqlscan.shadow(sql_text)):
+    # backtick identifiers stay visible: `row__id` and a quoted table
+    # spelling are references, not literals
+    if not _ROWID_REF.search(sqlscan.shadow(sql_text, idents=False)):
         return sql_text
     shmap = shadows(engine)
     if not shmap:
@@ -1741,7 +1743,8 @@ def prepare(engine, sql_text: str) -> str:
         for sp in sorted(set(spellings), key=len, reverse=True):
             pat = re.compile(
                 rf"(?i)(?<![\w.`]){re.escape(sp)}(?![\w.])")
-            new_text = dialect._shadow_sub(pat, shadow, sql)
+            new_text = dialect._shadow_sub(
+                pat, shadow, sql, sqlscan.shadow(sql, idents=False))
             if new_text != sql:
                 sql = new_text
                 hit = True

@@ -82,6 +82,15 @@ def _shadow_sub(pattern: re.Pattern, repl, sql: str,
     return "".join(out)
 
 
+def _has_empty_arg(args: str) -> bool:
+    """True when an argument before the last top-level comma is blank
+    (`f(, x)`, `f(a,, b)`); comments count as blank, as in the lexer."""
+    sh = sqlscan.shadow(args)
+    cuts = [-1] + [i for i, c in enumerate(sqlscan.top_level(args))
+                   if c == ","]
+    return any(not sh[a + 1:b].strip() for a, b in zip(cuts, cuts[1:]))
+
+
 def rewrite_macro_calls(sql: str, name: str, template) -> str:
     """Replace every `name(args...)` with template(args) (balanced parens).
 
@@ -110,10 +119,14 @@ def rewrite_macro_calls(sql: str, name: str, template) -> str:
         # must be rewritten before templating (found by the dialect
         # fuzzer: zeroifnull(zeroifnull(a)) survived one pass)
         inner = rewrite_macro_calls(sql[m.end():close], name, template)
-        try:
-            replacement = template(sqlscan.split_top(inner))
-        except Exception:
-            replacement = sql[m.start():close + 1]
+        replacement = sql[m.start():close + 1]
+        # an empty argument (`f(, x)`, `f(a,, b)`) is malformed: keep
+        # the call for Spark to reject, as Impala does
+        if not _has_empty_arg(inner):
+            try:
+                replacement = template(sqlscan.split_top(inner))
+            except Exception:
+                pass
         out.append(sql[pos:m.start()])
         out.append(replacement)
         pos = close + 1

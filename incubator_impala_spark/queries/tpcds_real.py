@@ -61,7 +61,10 @@ def rewrite_avg(sql: str) -> str:
         over_m = re.match(r"\s*over\s*\(", sql[close + 1:], re.IGNORECASE)
         w_open = close + over_m.end() if over_m else -1
         w_close = sqlscan.close_paren(sql, w_open) if over_m else -1
-        if w_close >= 0:
+        if over_m and w_close < 0:  # unbalanced window: leave the rest
+            out.append(sql[m.start():])
+            return "".join(out)
+        if over_m:
             win = sql[w_open:w_close + 1]
             out.append(
                 f"(cast(sum({arg}) over {win} as double)"

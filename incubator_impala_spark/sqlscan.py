@@ -98,16 +98,16 @@ def close_paren(sql: str, open_idx: int) -> int:
     return -1
 
 
-def split_top(text: str, sep: str = ",", angle: bool = False) -> list[str]:
-    """Split `text` on `sep` outside parens, brackets, literals and
+def split_top(text: str, angle: bool = False) -> list[str]:
+    """Split `text` on commas outside parens, brackets, literals and
     comments; items come back stripped, empty ones dropped.
     ``angle=True`` also nests `<...>`, for type lists such as
     `struct<a:int,b:string>`."""
-    nest = r"[()\[\]<>]|" if angle else r"[()\[\]]|"
+    nest = r"[()\[\]<>,]" if angle else r"[()\[\],]"
     out, depth, start = [], 0, 0
-    for m in re.finditer(nest + re.escape(sep), shadow(text)):
+    for m in re.finditer(nest, shadow(text)):
         c = m.group()
-        if c == sep:
+        if c == ",":
             if depth == 0:
                 out.append(text[start:m.start()])
                 start = m.end()

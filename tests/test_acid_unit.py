@@ -140,6 +140,9 @@ def test_rowid_swap_masks_string_literals():
     # table spelling only inside a comment: no swap
     sql = "select row__id.rowid from other_tbl -- streaming"
     assert acid.prepare(eng, sql) == sql
+    # a backtick-quoted row__id is a reference, not a literal
+    assert "from streaming__acidrowid__" in acid.prepare(
+        eng, "select `row__id`.rowid from streaming")
 
 
 def test_rowid_star_expansion_scoped_to_acid_from_clause():

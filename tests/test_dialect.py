@@ -32,6 +32,10 @@ def test_macro_args_with_commas_in_parens():
     assert tr("SELECT zeroifnull(`a,b`) FROM t") == \
         "SELECT coalesce(`a,b`, 0) FROM t"
     assert sqlscan.split_top(r"p='a\'b,c', q=1") == [r"p='a\'b,c'", "q=1"]
+    # an empty argument is malformed: the call is left for Spark to
+    # reject, not templated over the remaining arguments
+    assert tr("SELECT zeroifnull(, x) FROM t") == \
+        "SELECT zeroifnull(, x) FROM t"
 
 
 def test_macro_string_arg_with_paren():
