@@ -67,6 +67,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark.session import rows_df
 
 _SPARK_TYPES = {
     "int": "int", "integer": "int", "tinyint": "tinyint",
@@ -285,7 +286,7 @@ def _empty_df(engine, t: AcidTable, with_rowid: bool = False):
         cols = ("row__id struct<operation:int,"
                 "originaltransaction:bigint,bucket:int,rowid:bigint,"
                 "currenttransaction:bigint>, " + cols)
-    return engine.spark.createDataFrame([], cols)
+    return rows_df(engine.spark, [], cols)
 
 
 # The engine's own full-ACID files store the five ACID columns
@@ -406,8 +407,9 @@ def _read_wrapped_acid(engine, t: AcidTable, files: list):
                                    else pd.Series([None] * len(tbl)))
                 yield pd.DataFrame(data)
 
-    paths = engine.spark.createDataFrame(
-        splits, "path string, stripe int").repartition(len(splits))
+    paths = rows_df(
+        engine.spark, splits, "path string, stripe int"
+    ).repartition(len(splits))
     return paths.mapInPandas(_decode, schema=out_schema)
 
 
@@ -469,8 +471,9 @@ def _read_original_acid(engine, t: AcidTable, leaf: str,
                                    else pd.Series([None] * n))
                 yield pd.DataFrame(data)
 
-    df = engine.spark.createDataFrame(
-        [(p,) for p in paths], "path string").repartition(len(paths))
+    df = rows_df(
+        engine.spark, [(p,) for p in paths], "path string"
+    ).repartition(len(paths))
     return df.mapInPandas(_decode, schema=out_schema)
 
 
@@ -887,7 +890,7 @@ def _parse_cols(text: str | None) -> list:
 
 
 def _summary(engine, text: str):
-    return engine.spark.createDataFrame([(text,)], "summary string")
+    return rows_df(engine.spark, [(text,)], "summary string")
 
 
 def _register(engine, display: str, phys: str, db: str | None,
@@ -998,7 +1001,7 @@ def handle(engine, sql_text: str):
         if t is not None:
             _refresh_snapshot(t)
             refresh_views(engine)
-            return engine.spark.createDataFrame([], "status string")
+            return rows_df(engine.spark, [], "status string")
     m = _SHOW_FILES.match(sql_text)
     if m:
         t = lookup(engine, m.group("tbl"))
@@ -1270,8 +1273,8 @@ def _show_files(engine, t: AcidTable, spec: str | None):
             path = "/".join(x for x in (suffix, rel) if x)
             rows.append((f"{_display_base(t)}/{path}",
                          _human(size), suffix))
-    return engine.spark.createDataFrame(
-        rows, "Path string, Size string, Partition string")
+    return rows_df(
+        engine.spark, rows, "Path string, Size string, Partition string")
 
 
 def _part_sort_key(t: AcidTable, suffix: str):
@@ -1303,9 +1306,9 @@ def _show_partitions(engine, t: AcidTable):
         files = _live_files(t, "", t.location)
         size = sum(s for _, s in files)
         nrows = getattr(engine, "table_numrows", {}).get(skey, -1)
-        return spark.createDataFrame(
-            [(nrows, len(files), _human(size), "NOT CACHED",
-              "NOT CACHED", fmt_disp, "false", _display_base(t))],
+        return rows_df(
+            spark, [(nrows, len(files), _human(size), "NOT CACHED",
+                     "NOT CACHED", fmt_disp, "false", _display_base(t))],
             "`#Rows` bigint, `#Files` bigint, Size string, "
             "`Bytes Cached` string, `Cache Replication` string, "
             "Format string, `Incremental stats` string, "
@@ -1334,7 +1337,7 @@ def _show_partitions(engine, t: AcidTable):
         "`Bytes Cached` string, `Cache Replication` string, "
         "Format string, `Incremental stats` string, "
         "Location string")
-    return spark.createDataFrame(rows, schema)
+    return rows_df(spark, rows, schema)
 
 
 def _compute_stats(engine, t: AcidTable, incremental: bool):

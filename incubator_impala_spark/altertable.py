@@ -30,6 +30,7 @@ from pyspark.errors.exceptions.base import (
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_impala_spark import sqlscan
+from incubator_impala_spark.session import rows_df
 
 __all__ = ["handle"]
 
@@ -83,7 +84,7 @@ _SORT_BY = re.compile(
 
 
 def _summary(spark, text: str) -> DataFrame:
-    return spark.createDataFrame([(text,)], "summary string")
+    return rows_df(spark, [(text,)], "summary string")
 
 
 

@@ -31,6 +31,7 @@ import json
 import re
 
 from incubator_impala_spark import sqlscan
+from incubator_impala_spark.session import rows_df
 
 _CREATE = re.compile(
     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
@@ -77,14 +78,12 @@ def handle(engine, sql_text: str):
             "partitions": [],
             "state": "text",
         }
-        return spark.createDataFrame(
-            [("Table has been created.",)], "summary string")
+        return rows_df(spark, [("Table has been created.",)], "summary string")
     m = _SET_FMT.match(sql_text)
     if m and _key(m.group("tbl")) in engine.avro_stale:
         info = engine.avro_stale[_key(m.group("tbl"))]
         info["state"] = "stale"
-        return spark.createDataFrame(
-            [("Updated table.",)], "summary string")
+        return rows_df(spark, [("Updated table.",)], "summary string")
     m = _ADD_PART.match(sql_text)
     if m and _key(m.group("tbl")) in engine.avro_stale:
         info = engine.avro_stale[_key(m.group("tbl"))]
@@ -93,14 +92,14 @@ def handle(engine, sql_text: str):
             for k, v in (x.split("=", 1)
                          for x in m.group("spec").split(",")))
         info["partitions"].append((spec, m.group("loc")))
-        return spark.createDataFrame(
-            [("New partition has been added to the table.",)],
+        return rows_df(
+            spark, [("New partition has been added to the table.",)],
             "summary string")
     m = _INVALIDATE.match(sql_text)
     if m and _key(m.group("tbl")) in engine.avro_stale:
         _materialize(engine, engine.avro_stale[_key(m.group("tbl"))],
                      _key(m.group("tbl")))
-        return spark.createDataFrame([], "status string")
+        return rows_df(spark, [], "status string")
     return None
 
 
@@ -140,7 +139,7 @@ def _materialize(engine, info: dict, name: str) -> None:
             spark_schema_for,
         )
 
-        out = spark.createDataFrame([], spark_schema_for(reader))
+        out = rows_df(spark, [], spark_schema_for(reader))
     out.createOrReplaceTempView(name)
     info["state"] = "loaded"
 

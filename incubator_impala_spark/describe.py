@@ -26,6 +26,8 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
+from incubator_impala_spark.session import rows_df
+
 
 def impala_type_str(dt: DataType, indent: int = 0) -> str:
     """The reference's type rendering: structs break across lines with
@@ -124,5 +126,4 @@ def describe_rows(spark, path: str) -> list[tuple[str, str, str]]:
 
 def describe_df(spark, path: str):
     rows = describe_rows(spark, path)
-    return spark.createDataFrame(
-        rows, "name string, type string, comment string")
+    return rows_df(spark, rows, "name string, type string, comment string")

@@ -147,17 +147,26 @@ _DIR_SUFFIX = re.compile(r"\b(ASC|DESC)\s*$", re.IGNORECASE)
 
 
 def _fix_order_item(item: str) -> str:
-    """Append Impala's default NULLS placement to one ORDER BY item."""
-    s = item.strip()
-    if not s or _NULLS_SUFFIX.search(s):
-        return s
-    m = _DIR_SUFFIX.search(s)
+    """Append Impala's default NULLS placement to one ORDER BY item.
+
+    The suffix goes after the expression and its direction, ahead of
+    any trailing comment; an item that ends in a `--` comment keeps a
+    line break after it, so the items and clauses that follow stay
+    outside the comment."""
+    sh = sqlscan.shadow(item)
+    code_sh = sh.rstrip()
+    code, tail = item[:len(code_sh)], item[len(code_sh):]
+    if tail and sqlscan.shadow(item + "x").endswith(" "):
+        tail += "\n"    # text appended here would be commented out
+    if not code or _NULLS_SUFFIX.search(code_sh):
+        return code + tail
+    m = _DIR_SUFFIX.search(code_sh)
     if m:
         nulls = "NULLS LAST" if m.group(1).upper() == "ASC" else "NULLS FIRST"
-        return f"{s} {nulls}"
+        return f"{code} {nulls}{tail}"
     # bare item: Impala implicit ASC defaults NULLS LAST
     # (OrderByElement.java:74-85); Spark implicit ASC is NULLS FIRST.
-    return f"{s} ASC NULLS LAST"
+    return f"{code} ASC NULLS LAST{tail}"
 
 
 def apply_impala_null_ordering(sql: str) -> str:

@@ -38,7 +38,7 @@ from incubator_impala_spark.functions.registry import (
     QUERY_OPTION_MAP,
     register_all,
 )
-from incubator_impala_spark.session import configure_session
+from incubator_impala_spark.session import configure_session, rows_df
 from incubator_impala_spark.sources.tables import register_tables
 
 _SET_STMT = re.compile(
@@ -531,8 +531,8 @@ class Engine:
             elif name == "PARQUET_FALLBACK_SCHEMA_RESOLUTION":
                 v = self.parquet_resolution.upper()
             rows.append((name, v, level))
-        return self.spark.createDataFrame(
-            rows, "option string, value string, level string")
+        return rows_df(
+            self.spark, rows, "option string, value string, level string")
 
     def hive_sql(self, sql_text: str) -> DataFrame:
         """Execute a statement as the minicluster's HIVE side would
@@ -560,8 +560,8 @@ class Engine:
 
             lines = impala_explain.render_explain(
                 self, m.group("body"), self.explain_level)
-            return self.spark.createDataFrame(
-                [(ln,) for ln in lines], "explain_string string")
+            return rows_df(
+                self.spark, [(ln,) for ln in lines], "explain_string string")
         if self.schema_overlays:
             self._refresh_overlays(sql_text)
         for name, ov in list(self.array_overlays.items()):
@@ -678,8 +678,8 @@ class Engine:
             meta.setdefault("tblproperties", {})[
                 "COLUMN_STATS_ACCURATE"] = \
                 '{\\"BASIC_STATS\\":\\"true\\"}'
-            return self.spark.createDataFrame(
-                [("Updated table stats.",)], "summary string")
+            return rows_df(
+                self.spark, [("Updated table stats.",)], "summary string")
         # namespace shim: engine-owned db references become physical
         # (mangled) names; db-scoped DDL returns its summary rows here
         sql_text = self.ns.resolve(sql_text)
@@ -766,8 +766,9 @@ class Engine:
                 if k in names:
                     st[names[k]] = float(v) if k == "avgsize" \
                         else int(v)
-            return self.spark.createDataFrame(
-                [("Column stats have been set.",)], "summary string")
+            return rows_df(
+                self.spark, [("Column stats have been set.",)],
+                "summary string")
         m = re.match(r"(?is)^\s*SHOW\s+FILES\s+IN\s+([A-Za-z_][\w.]*)"
                      r"(?:\s+PARTITION\s*\((?P<spec>(?:[^()]|"
                      r"\([^()]*\))*)\))?\s*;?\s*$", sql_text)
@@ -786,10 +787,9 @@ class Engine:
         if m and m.group(1).lower() in self.sort_props:
             base = self.spark.sql(f"DESCRIBE TABLE EXTENDED {m.group(1)}")
             cols, order = self.sort_props[m.group(1).lower()]
-            extra = self.spark.createDataFrame(
-                [("", "sort.columns".ljust(20),
-                  ",".join(cols).ljust(20)),
-                 ("", "sort.order".ljust(20), order.ljust(20))],
+            extra = rows_df(self.spark, [
+                ("", "sort.columns".ljust(20), ",".join(cols).ljust(20)),
+                ("", "sort.order".ljust(20), order.ljust(20))],
                 base.schema)
             return base.unionByName(extra)
         m = _COMPUTE_STATS_STMT.match(sql_text)
@@ -804,12 +804,12 @@ class Engine:
                 # the synthetic transactional struct on a full-ACID
                 # table (describe-path.test; Path.java ROW__ID
                 # registration — fixed five-field shape)
-                return self.spark.createDataFrame(
-                    [("operation", "int", ""),
-                     ("originaltransaction", "bigint", ""),
-                     ("bucket", "int", ""),
-                     ("rowid", "bigint", ""),
-                     ("currenttransaction", "bigint", "")],
+                return rows_df(self.spark, [
+                    ("operation", "int", ""),
+                    ("originaltransaction", "bigint", ""),
+                    ("bucket", "int", ""),
+                    ("rowid", "bigint", ""),
+                    ("currenttransaction", "bigint", "")],
                     "name string, type string, comment string")
             # db-qualifier conventions match the query path: functional
             # variants resolve to the flat fixture views
@@ -827,8 +827,8 @@ class Engine:
                 # so the summary count comes from the fresh table —
                 # parquet count(*) folds to footer row counts
                 n = self.spark.table(m.group("tbl")).count()
-            return self.spark.createDataFrame(
-                [(f"Inserted {n} row(s)",)], "summary string")
+            return rows_df(
+                self.spark, [(f"Inserted {n} row(s)",)], "summary string")
         m = _DROP_STATS_STMT.match(sql_text)
         if m:
             spec = {}
@@ -876,8 +876,8 @@ class Engine:
                 else:
                     seen.clear()
                     self.inc_parts.pop(m.group("tbl").lower(), None)
-            return self.spark.createDataFrame(
-                [("Stats have been dropped.",)], "summary string")
+            return rows_df(
+                self.spark, [("Stats have been dropped.",)], "summary string")
         lm = re.match(
             r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
             r"(?:IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
@@ -910,18 +910,19 @@ class Engine:
                 r"IF\s+NOT\s+EXISTS\s+([A-Za-z_][\w.]*)",
                 sql_text, re.IGNORECASE)
             if im and self.spark.catalog.tableExists(im.group(1)):
-                return self.spark.createDataFrame(
-                    [("Table already exists.",)], "summary string")
+                return rows_df(
+                    self.spark, [("Table already exists.",)], "summary string")
             self.spark.sql(self.translate(sql_text))
-            return self.spark.createDataFrame(
-                [("Table has been created.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table has been created.",)], "summary string")
         m = _TRUNCATE_STMT.match(sql_text)
         if m:
             tbl = m.group("tbl")
             if not self.spark.catalog.tableExists(tbl):
                 if m.group("ife"):
-                    return self.spark.createDataFrame(
-                        [("Table does not exist.",)], "summary string")
+                    return rows_df(
+                        self.spark, [("Table does not exist.",)],
+                        "summary string")
                 raise ValueError(f"Table does not exist: {tbl}")
             self.spark.sql(f"TRUNCATE TABLE {tbl}")
             # TRUNCATE drops the table AND column stats with the data
@@ -934,8 +935,8 @@ class Engine:
             self.stats_seen.pop(tbl.lower(), None)
             self.inc_parts.pop(tbl.lower(), None)
             getattr(self, "stats_computed", set()).discard(skey)
-            return self.spark.createDataFrame(
-                [("Table has been truncated.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table has been truncated.",)], "summary string")
         # INSERT detection runs on hint-stripped text (the reference
         # allows /*+ clustered,shuffle */ between the target and the
         # select) and handles the WITH-prefix form by folding the
@@ -1087,11 +1088,11 @@ class Engine:
                 int(st.get("max", size)),
                 float(st.get("avg", size)),
                 int(st.get("trues", -1)), int(st.get("falses", -1))))
-        return self.spark.createDataFrame(
-            rows, "`Column` string, Type string, "
-                  "`#Distinct Values` bigint, `#Nulls` bigint, "
-                  "`Max Size` bigint, `Avg Size` double, "
-                  "`#Trues` bigint, `#Falses` bigint")
+        return rows_df(
+            self.spark, rows, "`Column` string, Type string, "
+                              "`#Distinct Values` bigint, `#Nulls` bigint, "
+                              "`Max Size` bigint, `Avg Size` double, "
+                              "`#Trues` bigint, `#Falses` bigint")
 
     def _fill_part_rows(self, tbl: str, pcols: list) -> None:
         """Per-partition row counts in one grouped scan (what the
@@ -1399,9 +1400,10 @@ class Engine:
                 self.inc_parts.setdefault(key, set()).update(new)
                 self._fill_part_rows(tbl, pcols)
                 if n_parts == 0:
-                    return self.spark.createDataFrame(
-                        [("No partitions selected for incremental "
-                          "stats update.",)], "summary string")
+                    return rows_df(
+                        self.spark, [("No partitions selected for "
+                                      "incremental stats update.",)],
+                        "summary string")
             elif self._extrapolation_enabled(tbl):
                 # extrapolation tables store ONLY the table-level row
                 # count (ComputeStatsStmt: "Updated 1 partition(s)"),
@@ -1424,9 +1426,9 @@ class Engine:
                 # too (the reference's table stats carry #ROWS per
                 # partition after COMPUTE STATS — corrupt-stats.test)
                 self._fill_part_rows(tbl, pcols)
-        return self.spark.createDataFrame(
-            [(f"Updated {n_parts} partition(s) and "
-              f"{len(wanted)} column(s).",)], "summary string")
+        return rows_df(
+            self.spark, [(f"Updated {n_parts} partition(s) and "
+                          f"{len(wanted)} column(s).",)], "summary string")
 
     def _create_like_parquet(self, m: re.Match) -> DataFrame:
         """CREATE TABLE LIKE PARQUET|ORC 'file': clone the file
@@ -1444,8 +1446,8 @@ class Engine:
                   else self.spark.read.parquet)
         tbl, path = m.group("tbl"), m.group("path")
         if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return self.spark.createDataFrame(
-                [("Table already exists.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table already exists.",)], "summary string")
         if not os.path.exists(path):
             cands = []
             wh = self._resolve_fs_path(path)
@@ -1521,8 +1523,8 @@ class Engine:
                 ]).write.insertInto(tbl)
             except _SPARK_ANY:  # no staged data at the location
                 pass
-        return self.spark.createDataFrame(
-            [("Table has been created.",)], "summary string")
+        return rows_df(
+            self.spark, [("Table has been created.",)], "summary string")
 
     @staticmethod
     def _avro_type(sql_type: str) -> str:
@@ -1592,8 +1594,8 @@ class Engine:
             f"CREATE TABLE {tbl} ({', '.join(defs)}) "
             f"USING parquet{pclause}")
         self.avro_tables.add(self._stats_key(tbl))
-        return self.spark.createDataFrame(
-            [("Table has been created.",)], "summary string")
+        return rows_df(
+            self.spark, [("Table has been created.",)], "summary string")
 
     def _create_avro(self, m: re.Match) -> DataFrame:
         """CREATE TABLE ... STORED AS AVRO without an explicit Avro
@@ -1603,8 +1605,8 @@ class Engine:
         types and 'from deserializer' comments."""
         tbl = m.group("tbl")
         if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return self.spark.createDataFrame(
-                [("Table already exists.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table already exists.",)], "summary string")
         col_re = re.compile(
             r"^\s*(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s+"
             r"(?P<type>[\s\S]*?)"
@@ -1645,8 +1647,8 @@ class Engine:
 
                 avro_io.read_avro(self.spark, loc) \
                     .write.insertInto(tbl)
-        return self.spark.createDataFrame(
-            [("Table has been created.",)], "summary string")
+        return rows_df(
+            self.spark, [("Table has been created.",)], "summary string")
 
     def _create_like(self, m: re.Match) -> DataFrame:
         """CREATE TABLE LIKE: clone the source's schema and partition
@@ -1657,16 +1659,16 @@ class Engine:
         tbl = m.group("tbl")
         src = re.sub(r"^functional(_\w+)?\.", "", m.group("src"))
         if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return self.spark.createDataFrame(
-                [("Table already exists.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table already exists.",)], "summary string")
         if tbl.split(".")[-1].lower() == src.split(".")[-1].lower() \
                 and self.spark.catalog.tableExists(tbl):
             # self-LIKE of a template target (the harness resolves
             # `functional.X` to the local X): fresh-create semantics
             # without destroying the source — truncate in place
             self.spark.sql(f"TRUNCATE TABLE {tbl}")
-            return self.spark.createDataFrame(
-                [("Table has been created.",)], "summary string")
+            return rows_df(
+                self.spark, [("Table has been created.",)], "summary string")
         # explicit SORT BY was recorded by _CREATE_SORT before this
         # branch; otherwise the clone inherits the source's layout
         # (CreateTableLikeStmt copies sort.columns — IMPALA-4166)
@@ -1720,8 +1722,8 @@ class Engine:
             # files (the reference reads them in place) — populate the
             # clone with the source rows so reads match
             self.spark.table(src).write.insertInto(tbl)
-        return self.spark.createDataFrame(
-            [("Table has been created.",)], "summary string")
+        return rows_df(
+            self.spark, [("Table has been created.",)], "summary string")
 
     def _insert(self, m: re.Match, cte_prefix: str = "") -> DataFrame:
         """INSERT INTO/OVERWRITE via a DataFrame write, returning the
@@ -1900,8 +1902,7 @@ class Engine:
             self.spark.conf.set(
                 "spark.sql.parquet.compression.codec", prev_codec)
             final.unpersist()
-        return self.spark.createDataFrame(
-            rows, "__insert_summary__ string")
+        return rows_df(self.spark, rows, "__insert_summary__ string")
 
     def _table_provider(self, tbl: str) -> str | None:
         """Catalog provider ('parquet', 'csv', ...) of a persistent
@@ -2029,7 +2030,7 @@ class Engine:
             pass
         msg = (f"Loaded {len(files)} file(s). "
                f"Total files in destination location: {total}")
-        return self.spark.createDataFrame([(msg,)], "summary string")
+        return rows_df(self.spark, [(msg,)], "summary string")
 
     def explain(self, sql_text: str, mode: str = "formatted") -> str:
         """EXPLAIN surface (reference: sql-parser.cup:765-775)."""

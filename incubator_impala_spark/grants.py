@@ -27,6 +27,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from incubator_impala_spark.session import rows_df
+
 
 _PRIV = r"(?:ALL|ALTER|CREATE|DROP|INSERT|REFRESH|SELECT)"
 _OBJ = (
@@ -156,7 +158,7 @@ class GrantRegistry:
         m = SHOW_ROLES.match(sql) or SHOW_CURRENT_ROLES.match(sql)
         if m:
             rows = [(r,) for r in sorted(self.roles)]
-            return spark.createDataFrame(rows, "role_name string")
+            return rows_df(spark, rows, "role_name string")
         m = SHOW_ROLE_GRANT_GROUP.match(sql)
         if m:
             rows = [
@@ -165,7 +167,7 @@ class GrantRegistry:
                     self.group_roles.get(m.group("group").lower(), set())
                 )
             ]
-            return spark.createDataFrame(rows, "role_name string")
+            return rows_df(spark, rows, "role_name string")
         m = SHOW_GRANT.match(sql)
         if m:
             return self._show_grant(spark, m)
@@ -196,7 +198,7 @@ class GrantRegistry:
             "principal_type string, principal_name string, scope string, "
             "name string, privilege string, grant_option boolean"
         )
-        return spark.createDataFrame(rows, schema)
+        return rows_df(spark, rows, schema)
 
     @staticmethod
     def _status(spark):

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from incubator_impala_spark import partitions as _parts
 from incubator_impala_spark import sqlscan
+from incubator_impala_spark.session import rows_df
 
 # declared (Spark simpleString) type -> acceptable Avro schema types.
 # TINYINT/SMALLINT are absent on purpose: Avro has no 8/16-bit ints,
@@ -174,12 +175,12 @@ def build_view(engine, phys: str) -> None:
         files = _parts._files_in(loc)
         leg = None
         if not files:
-            leg = spark.createDataFrame([], data_ddl)
+            leg = rows_df(spark, [], data_ddl)
         elif fmt == "AVRO":
             msg = _avro_reconcile(engine, data_fields, loc)
             if msg:
                 bad_parts.append((kv, msg))
-                leg = spark.createDataFrame([], data_ddl)
+                leg = rows_df(spark, [], data_ddl)
             else:
                 leg = _read_avro_leg(engine, data_fields, data_ddl, loc)
         elif fmt == "PARQUET":

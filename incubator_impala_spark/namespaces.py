@@ -31,6 +31,7 @@ from __future__ import annotations
 import re
 
 from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark.session import rows_df
 
 __all__ = ["Namespaces"]
 
@@ -253,8 +254,7 @@ class Namespaces:
         spark = engine.spark
 
         def summary(*rows):
-            return spark.createDataFrame([(r,) for r in rows] or
-                                         [("",)][:0], "summary string")
+            return rows_df(spark, [(r,) for r in rows], "summary string")
 
         m = _CREATE_DB.match(sql_text)
         if m:
@@ -305,14 +305,12 @@ class Namespaces:
             names = sorted(set(self.dbs) | set(STANDING_DBS))
             rows = [(n, self.comments.get(n, STANDING_DBS.get(n, "")))
                     for n in names if pat is None or pat.match(n)]
-            return spark.createDataFrame(
-                rows, "name string, comment string") if rows else \
-                spark.createDataFrame([], "name string, comment string")
+            return rows_df(spark, rows, "name string, comment string")
         m = _USE.match(sql_text)
         if m:
             name = m.group("name").lower()
             self.current = name if name in self.dbs else None
-            return spark.createDataFrame([], "status string")
+            return rows_df(spark, [], "status string")
         m = _CREATE_FN.match(sql_text)
         if m:
             return self._create_fn(engine, m)
@@ -322,8 +320,8 @@ class Namespaces:
             if db == "_impala_builtins":
                 # built-in introspection by Impala signature is oos
                 # (this engine's builtins are Spark's); empty listing
-                return spark.createDataFrame(
-                    [], "`return type` string, signature string, "
+                return rows_df(
+                    spark, [], "`return type` string, signature string, "
                         "`binary type` string, `is persistent` string")
             if db not in self.fns and db not in self.dbs:
                 return None          # built-in listing: dialect path
@@ -343,8 +341,7 @@ class Namespaces:
                 rows.append((info["ret"], sig, info["binary"], "true"))
             schema = ("`return type` string, signature string, "
                       "`binary type` string, `is persistent` string")
-            return spark.createDataFrame(rows, schema) if rows else \
-                spark.createDataFrame([], schema)
+            return rows_df(spark, rows, schema)
         m = _DROP_FN.match(sql_text)
         if m:
             db, fname = self.split(m.group("name"))
@@ -384,9 +381,7 @@ class Namespaces:
             if m.group("pat") is not None:
                 pat = impala_pattern(m.group("pat"))
                 names = [n for n in names if pat.match(n)]
-            return spark.createDataFrame(
-                [(n,) for n in names], "name string") if names else \
-                spark.createDataFrame([], "name string")
+            return rows_df(spark, [(n,) for n in names], "name string")
         m = _RENAME.match(sql_text)
         if m:
             return self._rename(engine, m)
@@ -451,8 +446,8 @@ class Namespaces:
             if props:
                 rows.append(("Parameter: ", "", ""))
                 rows += [("", k, v) for k, v in sorted(props.items())]
-        return engine.spark.createDataFrame(
-            rows, "name string, location string, comment string")
+        return rows_df(
+            engine.spark, rows, "name string, location string, comment string")
 
     # -- object ops -----------------------------------------------------
 
@@ -474,8 +469,9 @@ class Namespaces:
         key = (fname, sig)
         if key in reg:
             if m.group("ine"):
-                return engine.spark.createDataFrame(
-                    [("Function already exists.",)], "summary string")
+                return rows_df(
+                    engine.spark, [("Function already exists.",)],
+                    "summary string")
             raise ValueError(f"Function already exists: {sig}")
         # Java UDF type surface (FunctionsUtil / AnalysisException in
         # the reference FE, pinned by java-udf.test blocks 35-36):
@@ -510,8 +506,8 @@ class Namespaces:
                 engine.spark.sql(
                     f"CREATE OR REPLACE TEMPORARY FUNCTION {fname} "
                     f"AS '{sym.group(1)}'")
-        return engine.spark.createDataFrame(
-            [("Function has been created.",)], "summary string")
+        return rows_df(
+            engine.spark, [("Function has been created.",)], "summary string")
 
     def _create_view(self, engine, m: re.Match):
         from pyspark.sql import functions as F
@@ -522,8 +518,8 @@ class Namespaces:
         alter = m.group("op").upper() == "ALTER"
         info = self.dbs[db].get(obj) if db is not None else None
         if not alter and info is not None and m.group("ine"):
-            return spark.createDataFrame(
-                [("View already exists.",)], "summary string")
+            return rows_df(
+                spark, [("View already exists.",)], "summary string")
         body = m.group("body").strip().rstrip(";")
         # functional fixture qualifiers resolve to the flat views
         # (same convention as the engine's DESCRIBE path); ns.resolve
@@ -569,7 +565,7 @@ class Namespaces:
             self.register(db, obj, "view", phys)
         msg = "View has been altered." if alter else \
             "View has been created."
-        return spark.createDataFrame([(msg,)], "summary string")
+        return rows_df(spark, [(msg,)], "summary string")
 
     def _rename(self, engine, m: re.Match):
         spark = engine.spark
@@ -629,8 +625,8 @@ class Namespaces:
         tn = getattr(engine, "table_numrows", None)
         if tn is not None and okey in tn:
             tn[nkey] = tn.pop(okey)
-        return spark.createDataFrame(
-            [("Renaming was successful.",)], "summary string")
+        return rows_df(
+            spark, [("Renaming was successful.",)], "summary string")
 
     def _drop_view(self, engine, m: re.Match):
         spark = engine.spark
@@ -639,23 +635,22 @@ class Namespaces:
         if info is None:
             phys = self.mangle(db, obj) if db is not None else obj
             if db is None and spark.catalog.dropTempView(phys):
-                return spark.createDataFrame(
-                    [("View has been dropped.",)], "summary string")
+                return rows_df(
+                    spark, [("View has been dropped.",)], "summary string")
             if m.group("ife"):
-                return spark.createDataFrame(
-                    [("View does not exist.",)], "summary string")
+                return rows_df(
+                    spark, [("View does not exist.",)], "summary string")
             raise ValueError(f"View does not exist: {m.group('name')}")
         if info.get("kind") == "table":
             if m.group("ife"):
-                return spark.createDataFrame(
-                    [("Drop view is not allowed on a table.",)],
+                return rows_df(
+                    spark, [("Drop view is not allowed on a table.",)],
                     "summary string")
             raise ValueError("DROP VIEW not allowed on a table: "
                              f"{m.group('name')}")
         self._drop_object(engine, db, obj, info)
         del self.dbs[db][obj]
-        return spark.createDataFrame(
-            [("View has been dropped.",)], "summary string")
+        return rows_df(spark, [("View has been dropped.",)], "summary string")
 
     def _drop_table(self, engine, m: re.Match):
         spark = engine.spark
@@ -665,8 +660,8 @@ class Namespaces:
         if db is not None and info is not None \
                 and info.get("kind") == "view":
             if m.group("ife"):
-                return spark.createDataFrame(
-                    [("Drop table is not allowed on a view.",)],
+                return rows_df(
+                    spark, [("Drop table is not allowed on a view.",)],
                     "summary string")
             raise ValueError("DROP TABLE not allowed on a view: "
                              f"{name}")
@@ -679,15 +674,14 @@ class Namespaces:
                     dbpart = name.split(".", 1)[0].lower()
                     if dbpart not in STANDING_DBS \
                             and not spark.catalog.databaseExists(dbpart):
-                        return spark.createDataFrame(
-                            [(f"Database does not exist: {dbpart}",)],
+                        return rows_df(
+                            spark, [(f"Database does not exist: {dbpart}",)],
                             "summary string")
-                return spark.createDataFrame(
-                    [("Table does not exist.",)], "summary string")
+                return rows_df(
+                    spark, [("Table does not exist.",)], "summary string")
             # fall through to Spark for its native error
             return None
         spark.sql(f"DROP TABLE {phys}")
         if db is not None:
             self.dbs[db].pop(obj, None)
-        return spark.createDataFrame(
-            [("Table has been dropped.",)], "summary string")
+        return rows_df(spark, [("Table has been dropped.",)], "summary string")

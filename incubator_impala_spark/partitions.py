@@ -36,6 +36,7 @@ from pyspark.errors.exceptions.base import (
 from pyspark.sql import DataFrame
 
 from incubator_impala_spark import sqlscan
+from incubator_impala_spark.session import rows_df
 
 _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
@@ -229,7 +230,7 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         + "`#Files` bigint, Size string, "
         "`Bytes Cached` string, `Cache Replication` string, "
         "Format string, `Incremental stats` string, Location string")
-    return spark.createDataFrame(rows, schema)
+    return rows_df(spark, rows, schema)
 
 
 def show_table_stats(engine, tbl: str) -> DataFrame:
@@ -253,11 +254,11 @@ def show_table_stats(engine, tbl: str) -> DataFrame:
            (_format_of(files) if files
             else _meta_format(engine, tbl)) or "TEXT", "false",
            _display_location(engine, tbl))
-    return spark.createDataFrame(
-        [row], "`#Rows` bigint, `#Files` bigint, Size string, "
-               "`Bytes Cached` string, `Cache Replication` string, "
-               "Format string, `Incremental stats` string, "
-               "Location string")
+    return rows_df(
+        spark, [row], "`#Rows` bigint, `#Files` bigint, Size string, "
+                      "`Bytes Cached` string, `Cache Replication` string, "
+                      "Format string, `Incremental stats` string, "
+                      "Location string")
 
 
 def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
@@ -277,5 +278,4 @@ def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
         for f, s in _files_in(engine._table_location(tbl)):
             rows.append((_display_location(engine, tbl, f),
                          _human(s), ""))
-    return spark.createDataFrame(
-        rows, "Path string, Size string, Partition string")
+    return rows_df(spark, rows, "Path string, Size string, Partition string")

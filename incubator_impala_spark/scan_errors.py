@@ -32,6 +32,7 @@ from pyarrow.lib import ArrowException
 from pyspark.errors import PySparkException
 
 from incubator_impala_spark import sqlscan
+from incubator_impala_spark.session import rows_df
 
 # the typed failure surfaces of a corrupt-file probe: pyarrow decode
 # errors (ArrowInvalid/ArrowIOError subclass ArrowException) and
@@ -533,7 +534,7 @@ def register_parquet_check(engine, name: str, paths: list[str],
                     <= _TS_MAX.toordinal()
                 rows.append((int96_to_datetime(nanos, jday)
                              if ok_time and ok_date else None,))
-        spark.createDataFrame(rows, schema) \
+        rows_df(spark, rows, schema) \
             .createOrReplaceTempView(name)
         return
     dfs = []
@@ -555,7 +556,7 @@ def register_parquet_check(engine, name: str, paths: list[str],
         for d in dfs[1:]:
             df = df.unionByName(d)
     else:
-        df = spark.createDataFrame([], schema)
+        df = rows_df(spark, [], schema)
     df.createOrReplaceTempView(name)
 
 
@@ -599,7 +600,7 @@ def register_orc_date_check(engine, name: str, paths: list[str],
         "kind": "parquet", "paths": paths, "check": "orc_date",
         "display_dir": display_dir, "ts_col": None, "msg": msg,
     }
-    engine.spark.createDataFrame(rows, f"{col} date") \
+    rows_df(engine.spark, rows, f"{col} date") \
         .createOrReplaceTempView(name)
 
 
@@ -645,8 +646,7 @@ def register_hive211_tz_check(engine, name: str, path: str,
             ts = int96_to_datetime(nanos, jday)
             rows.append((rid, ts.replace(tzinfo=utc).astimezone(tz)
                          .replace(tzinfo=None)))
-        engine.spark.createDataFrame(
-            rows, "id int, timestamp_col timestamp") \
+        rows_df(engine.spark, rows, "id int, timestamp_col timestamp") \
             .createOrReplaceTempView(name)
 
     if not hasattr(engine, "tz_check_views"):
@@ -732,8 +732,8 @@ def _partition_survives(spark, values: dict, where: str | None) -> bool:
     for k in values:
         where = re.sub(rf"(?i)\b\w+\s*\.\s*(?={re.escape(k)}\b)", "",
                        where)
-    df = spark.createDataFrame(
-        [tuple(values.values())],
+    df = rows_df(
+        spark, [tuple(values.values())],
         ", ".join(f"{k} int" if isinstance(v, int) else f"{k} string"
                   for k, v in values.items()))
     try:

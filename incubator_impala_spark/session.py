@@ -26,7 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.errors import PySparkException
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Confs that are safe (and required) to (re)apply at runtime on an
 # existing session — e.g. the driver's own SparkSession.
@@ -105,6 +106,32 @@ def configure_session(spark: SparkSession) -> SparkSession:
     except PySparkException:
         pass
     return spark
+
+
+def rows_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over rows built on the driver (DDL/DML summaries,
+    SHOW listings, small fixture tables).
+
+    `schema` is a DDL string or a StructType; each row is a tuple in
+    its field order. The rows go to the JVM as one Arrow table, so the
+    plan is a LocalRelation and collecting it runs no Spark job and
+    starts no Python worker — a Python list would be parallelized
+    into a Python RDD instead (the reference answers these statements
+    from the coordinator, without a query fragment). Naive datetimes
+    in a TIMESTAMP column are read as UTC, the session time zone that
+    `configure_session` sets.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) \
+        else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type)
+         for c, f in zip(cols, arrow, strict=True)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(app_name: str = "incubator-impala-spark",

@@ -31,6 +31,7 @@ from pyspark.errors.exceptions.base import (
 )
 
 from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark.session import rows_df
 
 # minimal reserved set that forces quoting in rendered identifiers —
 # Impala quotes what the Hive lexer can't take bare (ToSqlUtils
@@ -460,4 +461,4 @@ def handle(engine, sql_text: str):
     if m is None:
         return None
     text = render(engine, m.group("name"))
-    return engine.spark.createDataFrame([(text,)], "result string")
+    return rows_df(engine.spark, [(text,)], "result string")

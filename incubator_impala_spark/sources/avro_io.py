@@ -647,6 +647,8 @@ def read_avro(spark, path: str, reader_schema: dict | None = None,
     (`be/src/exec/hdfs-avro-scanner.cc`). Each file's writer schema is
     resolved against `reader_schema` (schema evolution); with no
     reader schema, the first file's header supplies it."""
+    from incubator_impala_spark.session import rows_df
+
     if reader_schema is None:
         splits = plan_avro_splits(path, split_bytes)
         with open(splits[0][0], "rb") as fh:
@@ -671,8 +673,8 @@ def read_avro(spark, path: str, reader_schema: dict | None = None,
                     else {n: [] for n in field_names}
                 )
 
-    split_df = spark.createDataFrame(
-        splits, schema="path string, start long, end long"
+    split_df = rows_df(
+        spark, splits, schema="path string, start long, end long"
     ).repartition(len(splits))
     return split_df.mapInPandas(_batches, schema=ddl)
 

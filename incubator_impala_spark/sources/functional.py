@@ -28,6 +28,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
+from incubator_impala_spark.session import rows_df
+
 try:
     from pyarrow.lib import ArrowException
 except ImportError:  # pragma: no cover
@@ -247,7 +249,7 @@ def register_functional(spark: SparkSession) -> None:
         "complex_nested_struct_col struct<f1: int, f2: "
         "array<struct<f11: bigint, f12: map<string, "
         "struct<f21: bigint>>>>>, year int, month int")
-    spark.createDataFrame([], _ACT_SCHEMA) \
+    rows_df(spark, [], _ACT_SCHEMA) \
         .createOrReplaceTempView("allcomplextypes")
     # multi-file layout variants carry the SAME rows as their base
     # table (the reference splits each partition into several files to
@@ -341,7 +343,7 @@ def _register_raw_text_tables(spark: SparkSession) -> None:
         if not os.path.exists(os.path.join(_REF_DATA, fname)):
             continue
         rows = parse_hive_text(fname, 4, sep, esc, line_sep, enc)
-        spark.createDataFrame(rows, four).selectExpr(
+        rows_df(spark, rows, four).selectExpr(
             "col1", "col2", "cast(col3 as int) col3",
             "cast(col4 as int) col4") \
             .createOrReplaceTempView(name)
@@ -351,17 +353,17 @@ def _register_raw_text_tables(spark: SparkSession) -> None:
               "cast(col_2 as double) col_2",
               "cast(col_3 as timestamp) col_3"]
     if os.path.exists(os.path.join(_REF_DATA, "table_no_newline.csv")):
-        nn = spark.createDataFrame(
-            parse_hive_text("table_no_newline.csv", 4, ",", None,
-                            "\n"), nn_schema).selectExpr(*nn_sel)
+        nn = rows_df(
+            spark, parse_hive_text("table_no_newline.csv", 4, ",", None,
+                                   "\n"), nn_schema).selectExpr(*nn_sel)
         nn.createOrReplaceTempView("table_no_newline")
         parts = [nn.select("*", F.lit(2010).alias("year"),
                            F.lit(3).alias("month"))]
         if os.path.exists(os.path.join(_REF_DATA,
                                        "table_missing_columns.csv")):
-            mc = spark.createDataFrame(
-                parse_hive_text("table_missing_columns.csv", 4, ",",
-                                None, "\n"), nn_schema) \
+            mc = rows_df(
+                spark, parse_hive_text("table_missing_columns.csv", 4,
+                                       ",", None, "\n"), nn_schema) \
                 .selectExpr(*nn_sel)
             parts.append(mc.select(
                 "*", F.lit(2015).alias("year"),
@@ -472,7 +474,7 @@ def _register_raw_parquet_tables(spark: SparkSession) -> None:
                     "spark.sql.parquet.enableVectorizedReader",
                     "false")
                 try:
-                    df = spark.createDataFrame(df.collect(), df.schema)
+                    df = rows_df(spark, df.collect(), df.schema)
                 finally:
                     spark.conf.set(
                         "spark.sql.parquet.enableVectorizedReader",
@@ -559,7 +561,7 @@ def _register_header_tables(spark: SparkSession) -> None:
                     continue
                 c1, c2 = line.split(",", 1)
                 rows.append((int(c1), float(c2)))
-        spark.createDataFrame(rows, "c1 int, c2 double") \
+        rows_df(spark, rows, "c1 int, c2 double") \
             .createOrReplaceTempView(tbl)
 
 
@@ -634,7 +636,7 @@ def register_tz_parquet_tables(spark: SparkSession,
         if names:
             fields = [f"{n} {f.split(' ', 1)[1]}"
                       for n, f in zip(names, fields)]
-        spark.createDataFrame(list(zip(*cols)), ", ".join(fields)) \
+        rows_df(spark, list(zip(*cols)), ", ".join(fields)) \
             .createOrReplaceTempView(name)
     # nano table: Spark timestamps are microsecond-precision, so the
     # sub-microsecond digits are truncated (the harness xfails the
@@ -651,9 +653,9 @@ def register_tz_parquet_tables(spark: SparkSession,
                      safe=False).to_pylist()
         loc = pc.cast(t.column("nanoNonUtc"), pa.timestamp("us"),
                       safe=False).to_pylist()
-        df = spark.createDataFrame(
-            [(r, u.replace(tzinfo=None), n)
-             for r, u, n in zip(raw, us, loc)],
+        df = rows_df(
+            spark, [(r, u.replace(tzinfo=None), n)
+                    for r, u, n in zip(raw, us, loc)],
             "rawvalue bigint, nanoutc timestamp, nanononutc timestamp")
         df = df.withColumn("nanoutc",
                            F.from_utc_timestamp("nanoutc", tz))
@@ -686,7 +688,7 @@ def _register_bad_parquet_table(spark: SparkSession) -> None:
                       if isinstance(v, bytes) else
                       (None if v is None else str(v)),)
                      for v in col]
-        spark.createDataFrame(rows, "field string") \
+        rows_df(spark, rows, "field string") \
             .createOrReplaceTempView("bad_parquet")
     except (*_REG_ERR, ArrowException):
         pass
@@ -759,19 +761,12 @@ def _register_overflow_table(spark: SparkSession) -> None:
                     to_dec(f[8], 38, 38)))
         except Exception:  # noqa: BLE001
             return
-        df = spark.createDataFrame(
-            rows,
+        rows_df(
+            spark, rows,
             "tinyint_col tinyint, smallint_col smallint, int_col int, "
             "bigint_col bigint, float_col float, double_col double, "
             "decimal0_col decimal(13,4), decimal1_col decimal(38,0), "
-            "decimal2_col decimal(38,38)")
-        # JVM-side re-cast pins the declared scale (the Python bridge
-        # can deliver 1E-38 at scale 39, which prints with a stray
-        # digit)
-        df.selectExpr(*[
-            f"cast({f.name} as {f.dataType.simpleString()}) as {f.name}"
-            for f in df.schema.fields]) \
-            .createOrReplaceTempView(view)
+            "decimal2_col decimal(38,38)").createOrReplaceTempView(view)
 
 
 def _register_decimal_rtf_tables(spark: SparkSession) -> None:
@@ -962,7 +957,7 @@ def _register_dateless_timestamp_tables(spark: SparkSession) -> None:
             # (Spark's cast fills in the CURRENT date for time-only
             # strings; the reference's parser requires a date part, so
             # gate on a leading yyyy-MM-dd)
-            spark.createDataFrame(rows, "t string") \
+            rows_df(spark, rows, "t string") \
                 .select(F.when(
                     F.col("t").rlike(r"^\d{4}-\d{1,2}-\d{1,2}"),
                     F.col("t").cast("timestamp")).alias("t")) \

@@ -86,6 +86,11 @@ def test_null_ordering_multi_item_mixed():
     assert "b DESC NULLS FIRST" in out
     assert out.count("NULLS FIRST") == 2  # explicit one untouched
     assert out.rstrip().endswith("LIMIT 5")
+    # a `--` comment ending an item: the suffix goes before it and the
+    # line break after it stays, so `, b` and LIMIT are not commented out
+    assert tr("select a, b from t order by a -- first key\n, b desc "
+              "limit 5") == ("select a, b from t order by a ASC NULLS LAST "
+                             "-- first key\n, b desc NULLS FIRST limit 5")
 
 
 def test_null_ordering_window_spec_stops_at_rows():

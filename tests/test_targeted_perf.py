@@ -34,6 +34,8 @@ from decimal import Decimal
 
 import pytest
 
+from incubator_impala_spark import sqlscan
+
 TP_DIR = "/root/reference/testdata/workloads/targeted-perf/queries"
 TS_DIR = "/root/reference/testdata/workloads/targeted-stress/queries"
 PR_DIR = "/root/reference/testdata/workloads/perf-regression/queries"
@@ -245,18 +247,6 @@ def _cells_eq(a, b) -> bool:
 _TOP_LIMIT = re.compile(r"(?is)\blimit\s+\d+\s*;?\s*$")
 
 
-def _strip_parens(sql: str) -> str:
-    out, depth = [], 0
-    for ch in sql:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            out.append(ch)
-    return "".join(out)
-
-
 @pytest.mark.skipif(not os.path.isdir(TP_DIR),
                     reason="reference workload texts not present")
 @pytest.mark.parametrize("dirkey,name", FILES,
@@ -331,7 +321,7 @@ def test_targeted_perf_file(tperf_engine, dirkey, name):
                 n_verified += 1
                 continue
             if mode == "count" or _TOP_LIMIT.search(
-                    _strip_parens(query)):
+                    sqlscan.top_level(query)):
                 got = df.count()
                 exp = con.execute(
                     "SELECT COUNT(*) FROM ("
