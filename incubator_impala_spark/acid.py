@@ -66,7 +66,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
-from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark import dialect, sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 _SPARK_TYPES = {
@@ -1031,15 +1031,7 @@ def _clear_stats(engine, t: AcidTable) -> None:
         if meta:
             meta.get("tblproperties", {}).pop(
                 "COLUMN_STATS_ACCURATE", None)
-    skey = engine._stats_key(t.phys)
-    for regs in (getattr(engine, "col_stats", {}),
-                 getattr(engine, "part_rows", {})):
-        for k in [k for k in regs if k[0] == skey]:
-            del regs[k]
-    getattr(engine, "table_numrows", {}).pop(skey, None)
-    getattr(engine, "stats_computed", set()).discard(skey)
-    getattr(engine, "stats_seen", {}).pop(t.phys.lower(), None)
-    getattr(engine, "inc_parts", {}).pop(t.phys.lower(), None)
+    stats.clear(engine, t.phys)
 
 
 def _drop(engine, t: AcidTable):
@@ -1297,15 +1289,13 @@ def _show_partitions(engine, t: AcidTable):
     from incubator_impala_spark.partitions import _human
 
     spark = engine.spark
-    skey = engine._stats_key(t.phys)
-    prows = getattr(engine, "part_rows", {})
-    inc = getattr(engine, "inc_parts", {}).get(t.phys.lower(), set())
+    rec = stats.get(engine, t.phys)
+    nrows = -1 if rec.rows is None else rec.rows
     fmt_disp = {"text": "TEXT", "orc": "ORC",
                 "parquet": "PARQUET"}[t.fmt]
     if not t.pcols:
         files = _live_files(t, "", t.location)
         size = sum(s for _, s in files)
-        nrows = getattr(engine, "table_numrows", {}).get(skey, -1)
         return rows_df(
             spark, [(nrows, len(files), _human(size), "NOT CACHED",
                      "NOT CACHED", fmt_disp, "false", _display_base(t))],
@@ -1324,11 +1314,10 @@ def _show_partitions(engine, t: AcidTable):
         kvs = dict(i.split("=", 1) for i in suffix.split("/"))
         rows.append(
             tuple(str(kvs.get(p, "NULL")) for p, _ in t.pcols)
-            + (prows.get((skey, suffix), -1), len(files),
+            + (rec.parts.get(suffix, -1), len(files),
                _human(size), "NOT CACHED", "NOT CACHED", fmt_disp,
-               "true" if suffix in inc else "false",
+               "true" if suffix in rec.incremental else "false",
                f"{_display_base(t)}/{suffix}"))
-    nrows = getattr(engine, "table_numrows", {}).get(skey, -1)
     rows.append(("Total",) + ("",) * (len(t.pcols) - 1)
                 + (nrows, tot_files, _human(tot_size), "0B",
                    "", "", "", ""))
@@ -1341,37 +1330,16 @@ def _show_partitions(engine, t: AcidTable):
 
 
 def _compute_stats(engine, t: AcidTable, incremental: bool):
-    """COMPUTE [INCREMENTAL] STATS over the visible snapshot: count +
-    per-column ndv/nulls/sizes into the engine's stats registries,
-    plus the per-partition row cover for the partition listing."""
+    """COMPUTE [INCREMENTAL] STATS over the visible snapshot: the
+    shared one-scan aggregate (stats.compute) into the table's stats
+    record, plus the per-partition row cover for the partition
+    listing."""
     refresh_views(engine)
-    spark = engine.spark
-    skey = engine._stats_key(t.phys)
-    df = spark.table(t.phys)
-    total = df.count()
-    engine.table_numrows[skey] = total
-    getattr(engine, "stats_computed", set()).add(skey)
-    sizes = {"int": 4, "bigint": 8, "smallint": 2, "tinyint": 1,
-             "boolean": 1, "float": 4, "double": 8, "date": 4,
-             "timestamp": 16}
-    for cname, cty in t.cols + t.pcols:
-        agg = df.agg(
-            F.approx_count_distinct(cname).alias("ndv")
-            if not getattr(engine, "exact_ndv", False)
-            else F.countDistinct(cname).alias("ndv"),
-            F.sum(F.when(F.col(cname).isNull(), 1)
-                  .otherwise(0)).alias("nulls"),
-            F.max(F.length(F.col(cname).cast("string")))
-            .alias("maxlen")).collect()[0]
-        st = {"ndv": int(agg["ndv"] or 0),
-              "nulls": int(agg["nulls"] or 0)}
-        if cty in sizes:
-            st["max"] = sizes[cty]
-            st["avg"] = float(sizes[cty])
-        else:
-            st["max"] = int(agg["maxlen"] or 0)
-            st["avg"] = float(agg["maxlen"] or 0)
-        engine.col_stats[(skey, cname.lower())] = st
+    df = engine.spark.table(t.phys)
+    rec = stats.record(engine, t.phys)
+    rec.rows = stats.compute(engine, t.phys, df,
+                             stats.scalar_columns(df.schema))
+    rec.computed = True
     if t.pcols:
         pnames = [p for p, _ in t.pcols]
         counts = {tuple(str(r[p]) for p in pnames): r["cnt"]
@@ -1381,11 +1349,10 @@ def _compute_stats(engine, t: AcidTable, incremental: bool):
         for suffix, _leaf in _leaf_dirs(t):
             kvs = dict(i.split("=", 1) for i in suffix.split("/"))
             key = tuple(str(kvs.get(p)) for p in pnames)
-            engine.part_rows[(skey, suffix)] = counts.get(key, 0)
+            rec.parts[suffix] = counts.get(key, 0)
             seen.add(suffix)
         if incremental:
-            engine.stats_seen[t.phys.lower()] = set(seen)
-            engine.inc_parts[t.phys.lower()] = set(seen)
+            rec.cover, rec.incremental = set(seen), set(seen)
     return _summary(
         engine, f"Updated 1 partition(s) and "
                 f"{len(t.cols)} column(s).")

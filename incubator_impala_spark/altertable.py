@@ -29,7 +29,7 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql import DataFrame, functions as F
 
-from incubator_impala_spark import sqlscan
+from incubator_impala_spark import sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 __all__ = ["handle"]
@@ -265,8 +265,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 spark, "No new column(s) have been added to the table.")
         if not new and not ine:
             raise ValueError(f"Column already exists: {defs[0][0]}")
-        if engine._stats_key(tbl) in getattr(engine, "avro_tables",
-                                             set()):
+        if stats.key(engine, tbl) in getattr(engine, "avro_tables", set()):
             # avro tables convert added columns through the Avro type
             # mapping (TINYINT/SMALLINT->INT, TIMESTAMP->STRING) and
             # default the comment to 'from deserializer'
@@ -437,13 +436,14 @@ def handle(engine, sql_text: str) -> DataFrame | None:
 
         matched = partitions.match_partitions(
             engine, tbl, engine.translate(pm.group("spec")))
-        key = engine._stats_key(tbl)
+        key = stats.key(engine, tbl)
+        prows = stats.get(engine, tbl).parts
         for kv in matched:
             spark.sql(f"ALTER TABLE {tbl} DROP PARTITION "
                       f"({partitions.drop_spec(kv)})")
             suffix = partitions.part_suffix(kv)
             engine.part_formats.pop((key, suffix), None)
-            engine.part_rows.pop((key, suffix), None)
+            prows.pop(suffix, None)
         return _summary(spark,
                         f"Dropped {len(matched)} partition(s).")
 
@@ -469,8 +469,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             except _PYSPARK_ERR:  # view / non-catalog relation
                 pass
             if nm:
-                engine.table_numrows[engine._stats_key(tbl)] = \
-                    int(nm.group(1))
+                stats.record(engine, tbl).rows = int(nm.group(1))
         if sm.group("spec"):
             from incubator_impala_spark import partitions
 
@@ -487,7 +486,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 from incubator_impala_spark import mixedformat
                 from incubator_impala_spark import partitions as _pt
 
-                key = engine._stats_key(tbl)
+                key = stats.key(engine, tbl)
                 if not hasattr(engine, "part_locations"):
                     engine.part_locations = {}
                 for kv in matched:
@@ -505,15 +504,13 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                            "specified partition." if matched
                     else "New location has been set.")
             if nm:
-                key = engine._stats_key(tbl)
+                prows = stats.record(engine, tbl).parts
                 for kv in matched:
-                    engine.part_rows[
-                        (key, partitions.part_suffix(kv))] = \
-                        int(nm.group(1))
+                    prows[partitions.part_suffix(kv)] = int(nm.group(1))
             fm = re.search(r"\bSET\s+FILEFORMAT\s+(\w+)", rest,
                            re.IGNORECASE)
             if fm:
-                key = engine._stats_key(tbl)
+                key = stats.key(engine, tbl)
                 disp = {"textfile": "TEXT", "sequencefile": "SEQUENCE",
                         "rcfile": "RC"}.get(fm.group(1).lower(),
                                             fm.group(1).upper())

@@ -20,17 +20,12 @@ _SPARK_ERR = (AnalysisException, Py4JJavaError)
 # analysis OR runtime Spark failure (collect()-driven stat probes)
 _SPARK_ANY = (PySparkException, Py4JJavaError)
 
-
-class _SkipStatsFill(Exception):
-    """Control-flow marker: a partition-scoped incremental COMPUTE
-    STATS does not refresh table-level column stats (the reference
-    fills those only on full computes)."""
 from pyspark.sql import DataFrame, SparkSession
 
 import os
 import re
 
-from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark import dialect, sqlscan, stats
 from incubator_impala_spark.grants import GrantRegistry
 from incubator_impala_spark.functions.registry import (
     MACROS,
@@ -252,13 +247,8 @@ class Engine:
         # recorded per table, surfaced as the reference's
         # sort.columns/sort.order property rows in DESCRIBE FORMATTED
         self.sort_props: dict[str, tuple[list, str]] = {}
-        # partitions already covered by COMPUTE INCREMENTAL STATS, per
-        # table — incremental runs count only partitions not yet seen
-        self.stats_seen: dict[str, set] = {}
-        # partitions whose stats came from COMPUTE INCREMENTAL STATS
-        # (the SHOW TABLE STATS 'Incremental stats' column; a full
-        # COMPUTE STATS replaces incremental stats — ComputeStatsStmt)
-        self.inc_parts: dict[str, set] = {}
+        # table and column stats, one record per table (stats.py)
+        self.table_stats: dict[str, stats.TableStats] = {}
         # EXPLAIN_LEVEL query option (0=minimal .. 3=verbose; the
         # reference's default is STANDARD — TExplainLevel)
         self.explain_level = 1
@@ -279,17 +269,11 @@ class Engine:
         # raw display values of session-SET options (SET ALL listing)
         self.option_display: dict[str, str] = {}
         # partition surface (partitions.py): per-partition fileformat
-        # overrides, incremental-stats row counts, table numRows
+        # overrides, keyed (stats.key, partition suffix)
         self.part_formats: dict[tuple[str, str], str] = {}
         # per-partition location overrides (ALTER ... PARTITION ...
         # SET LOCATION) — consumed by mixedformat dispatch views
         self.part_locations: dict[tuple[str, str], str] = {}
-        self.part_rows: dict[tuple[str, str], int] = {}
-        self.table_numrows: dict[str, int] = {}
-        # per-column stats (SHOW COLUMN STATS / ALTER SET COLUMN
-        # STATS / COMPUTE STATS): {(tbl, col): {ndv, nulls, max, avg,
-        # trues, falses}}
-        self.col_stats: dict[tuple[str, str], dict] = {}
         # EXACT_NDV session option (this engine's scale escape hatch,
         # DIALECT.md): False (default) plans ndv()/COMPUTE STATS NDV
         # on Spark's JVM HLL++ (approx_count_distinct — zero Python in
@@ -689,13 +673,11 @@ class Engine:
         if dm:
             # stats die with the table (and a recreate starts clean) —
             # BEFORE ns.handle, which serves registered-object drops
-            skey = self._stats_key(dm.group(1))
-            for reg in (self.col_stats, self.part_rows,
-                        self.part_formats, self.part_locations):
+            stats.clear(self, dm.group(1))
+            skey = stats.key(self, dm.group(1))
+            for reg in (self.part_formats, self.part_locations):
                 for k in [k for k in reg if k[0] == skey]:
                     del reg[k]
-            self.table_numrows.pop(skey, None)
-            getattr(self, "stats_computed", set()).discard(skey)
             # SORT BY layout metadata dies with the table too — a
             # recreate without SORT BY must not inherit it
             # (_CREATE_SORT re-records when the new DDL has one)
@@ -751,9 +733,8 @@ class Engine:
         if m:
             # AlterTableSetColumnStats.java: manual per-column stats;
             # -1 resets a value to unknown
-            key = (self._stats_key(m.group("tbl")),
-                   m.group("col").strip("`").lower())
-            st = self.col_stats.setdefault(key, {})
+            st = stats.record(self, m.group("tbl")).cols.setdefault(
+                m.group("col").strip("`").lower(), {})
             names = {"numdvs": "ndv", "numnulls": "nulls",
                      "maxsize": "max", "avgsize": "avg",
                      "numtrues": "trues", "numfalses": "falses"}
@@ -837,45 +818,30 @@ class Engine:
                     k, v = item.split("=", 1)
                     spec[k.strip().strip("`").lower()] = \
                         v.strip().strip("'\"")
-            skey = self._stats_key(m.group("tbl"))
+            rec = stats.get(self, m.group("tbl"))
             if not (m.group("part") or "").strip():
+                stats.clear(self, m.group("tbl"))
+            elif rec.cover is not None:
                 # a partition-scoped DROP INCREMENTAL STATS keeps the
-                # table-level column stats (only the partition cover
-                # is invalidated)
-                for k in [k for k in self.col_stats if k[0] == skey]:
-                    del self.col_stats[k]
-                self.table_numrows.pop(skey, None)
-                getattr(self, "stats_size", {}).pop(skey, None)
-                getattr(self, "stats_computed", set()).discard(skey)
-                for k in [k for k in self.part_rows if k[0] == skey]:
-                    del self.part_rows[k]
-            seen = self.stats_seen.get(m.group("tbl").lower())
-            if seen is not None:
-                if spec:
-                    dropped = {
-                        p for p in set(seen)
-                        if all(dict(x.split("=", 1)
-                                    for x in p.split("/")).get(k) == v
-                               for k, v in spec.items())}
-                    seen.difference_update(dropped)
-                    self.inc_parts.get(
-                        m.group("tbl").lower(), set()) \
-                        .difference_update(dropped)
-                    # the reference derives table-level column stats
-                    # by merging per-partition incremental sketches,
-                    # so shrinking the cover shifts them (DIALECT.md
-                    # incremental-colstats-aggregation, closed r8)
-                    try:
-                        pcols = [c.name for c in
-                                 self.spark.catalog.listColumns(
-                                     m.group("tbl")) if c.isPartition]
-                        self._refresh_incremental_colstats(
-                            m.group("tbl"), pcols)
-                    except (*_SPARK_ANY, KeyError):
-                        pass  # table dropped / cover emptied
-                else:
-                    seen.clear()
-                    self.inc_parts.pop(m.group("tbl").lower(), None)
+                # table-level stats; it shrinks the cover, and the
+                # reference derives table-level column stats by
+                # merging per-partition incremental sketches, so that
+                # shifts them (DIALECT.md
+                # incremental-colstats-aggregation, closed r8)
+                dropped = {
+                    p for p in rec.cover
+                    if all(dict(x.split("=", 1)
+                                for x in p.split("/")).get(k) == v
+                           for k, v in spec.items())}
+                rec.cover -= dropped
+                rec.incremental -= dropped
+                try:
+                    pcols = [c.name for c in
+                             self.spark.catalog.listColumns(
+                                 m.group("tbl")) if c.isPartition]
+                    stats.refresh_incremental(self, m.group("tbl"), pcols)
+                except (*_SPARK_ANY, KeyError):
+                    pass  # table dropped / cover emptied
             return rows_df(
                 self.spark, [("Stats have been dropped.",)], "summary string")
         lm = re.match(
@@ -926,15 +892,7 @@ class Engine:
                 raise ValueError(f"Table does not exist: {tbl}")
             self.spark.sql(f"TRUNCATE TABLE {tbl}")
             # TRUNCATE drops the table AND column stats with the data
-            # (TruncateStmt: "statistics are removed")
-            skey = self._stats_key(tbl)
-            for reg in (self.col_stats, self.part_rows):
-                for k in [k for k in reg if k[0] == skey]:
-                    del reg[k]
-            self.table_numrows.pop(skey, None)
-            self.stats_seen.pop(tbl.lower(), None)
-            self.inc_parts.pop(tbl.lower(), None)
-            getattr(self, "stats_computed", set()).discard(skey)
+            stats.clear(self, tbl)
             return rows_df(
                 self.spark, [("Table has been truncated.",)], "summary string")
         # INSERT detection runs on hint-stripped text (the reference
@@ -1011,7 +969,7 @@ class Engine:
         fixed-width types come from the type itself (the reference
         shows them without any stats computed); variable-width sizes
         and counts are -1 until COMPUTE STATS / SET COLUMN STATS."""
-        key = self._stats_key(tbl)
+        rec = stats.get(self, tbl)
         try:
             pcols = [c.name.lower()
                      for c in self.spark.catalog.listColumns(tbl)
@@ -1036,7 +994,7 @@ class Engine:
                     pstats[c0.lower()] = (
                         len(set(vals)),
                         sum(1 for v in vals if v is None))
-            elif key in getattr(self, "stats_computed", set()):
+            elif rec.computed:
                 # computed-but-empty partitioned table: the reference
                 # reports 0 partitions as 0, not unknown
                 for c0 in pcols:
@@ -1079,7 +1037,7 @@ class Engine:
                 size = int(re.match(r"(?i)char\((\d+)\)", raw).group(1))
             else:
                 size = -1
-            st = self.col_stats.get((key, f.name.lower()), {})
+            st = rec.cols.get(f.name.lower(), {})
             pdefault = pstats.get(f.name.lower(), (-1, -1))
             rows.append((
                 f.name.lower(), disp,
@@ -1093,131 +1051,6 @@ class Engine:
                               "`#Distinct Values` bigint, `#Nulls` bigint, "
                               "`Max Size` bigint, `Avg Size` double, "
                               "`#Trues` bigint, `#Falses` bigint")
-
-    def _fill_part_rows(self, tbl: str, pcols: list) -> None:
-        """Per-partition row counts in one grouped scan (what the
-        reference persists as each partition's #ROWS)."""
-        try:
-            from incubator_impala_spark import partitions
-
-            skey = self._stats_key(tbl)
-            # registered-but-empty partitions hold zero rows after a
-            # compute (the reference records 0, not 'unset')
-            for r in self.spark.sql(f"SHOW PARTITIONS {tbl}") \
-                    .collect():
-                self.part_rows[(skey, r[0])] = 0
-            for r in self.spark.sql(
-                    f"SELECT {', '.join(pcols)}, count(*) c "
-                    f"FROM {tbl} GROUP BY {', '.join(pcols)}") \
-                    .collect():
-                kv = {c: r[c] for c in pcols}
-                self.part_rows[
-                    (skey, partitions.part_suffix(kv))] = r["c"]
-        except _SPARK_ERR:
-            pass
-
-    def _refresh_incremental_colstats(self, tbl: str,
-                                      pcols: list) -> None:
-        """Table-level column stats from the incremental-stats COVER.
-
-        The reference merges per-partition incremental sketches, so
-        table-level column stats reflect exactly the partitions that
-        currently HAVE incremental stats (dropping one shifts NDV and
-        #Trues — compute-stats-incremental.test). This engine holds no
-        per-partition sketch store; it recomputes the merged values
-        with ONE scan restricted to the cover (partition-pruned, so
-        the cost tracks the covered data like the reference's merge
-        tracks its sketch count)."""
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
-        key = tbl.lower()
-        cover = self.stats_seen.get(key)
-        if cover is None:
-            return
-        skey = self._stats_key(tbl)
-        if not cover:
-            for k in [k for k in self.col_stats if k[0] == skey]:
-                del self.col_stats[k]
-            return
-        from urllib.parse import unquote
-
-        preds = []
-        for suffix in cover:
-            kvs = [x.split("=", 1) for x in suffix.split("/")]
-            conj = []
-            for k, v in kvs:
-                # directory spellings are URL-escaped and NULL is
-                # __HIVE_DEFAULT_PARTITION__ — compare against the
-                # real column values (ADVICE r8)
-                v = unquote(v)
-                if v == "__HIVE_DEFAULT_PARTITION__":
-                    conj.append(f"`{k}` IS NULL")
-                else:
-                    esc = v.replace("\\", "\\\\").replace("'", "\\'")
-                    conj.append(f"`{k}` = '{esc}'")
-            preds.append("(" + " AND ".join(conj) + ")")
-        where = " OR ".join(preds)
-        schema = self.spark.table(tbl).schema
-        types = {f.name: f.dataType.simpleString()
-                 for f in schema.fields}
-        wanted = [f.name for f in schema.fields
-                  if f.name not in pcols
-                  and not isinstance(f.dataType,
-                                     (ArrayType, MapType, StructType))]
-        df = self.spark.table(tbl).where(where)
-        row = self._stats_agg_df(tbl, wanted, types, df=df) \
-            .collect()[0]
-        nrows = row["__nrows__"]
-        for c in wanted:
-            st = self.col_stats.setdefault((skey, c.lower()), {})
-            st["ndv"] = min(row[f"ndv_{c}"], nrows)
-            st["nulls"] = row[f"nul_{c}"]
-            if types.get(c) == "boolean":
-                st["ndv"] = 2
-                st["trues"] = row[f"tru_{c}"]
-                st["falses"] = row[f"fls_{c}"]
-            elif types.get(c) == "string":
-                st["max"] = (row[f"max_{c}"] or -1) if nrows else 0
-                avg = row[f"avg_{c}"] if nrows else 0.0
-                import struct as _st
-
-                st["avg"] = -1 if avg is None else \
-                    _st.unpack("f", _st.pack("f", float(avg)))[0]
-
-    def _stats_agg_df(self, tbl: str, wanted: list, types: dict,
-                      df=None):
-        """The one-scan COMPUTE STATS aggregate (unexecuted).
-
-        NDV expression per EXACT_NDV (DIALECT.md): default = Spark's
-        JVM HLL++ (`approx_count_distinct`) so the whole stats scan
-        stays inside whole-stage codegen — zero Python in the plan at
-        any scale; EXACT_NDV=1 = the reference's precision-10 HLL
-        (functions/hll.py, pandas-UDF hash per value) for the
-        pinned-output parity surface (distinct-estimate /
-        compute-stats .test files). CBO only needs the estimate's
-        scale, so the JVM path is the 100 TB default."""
-        from pyspark.sql import functions as F
-
-        ndv_expr = (
-            (lambda c: f"impala_hll_est(collect_set("
-                       f"hll_slot_typed(`{c}`, typeof(`{c}`))))")
-            if self.exact_ndv else
-            (lambda c: f"approx_count_distinct(`{c}`, 0.023)"))
-        aggs = [F.count(F.lit(1)).alias("__nrows__")]
-        for c in wanted:
-            aggs += [F.expr(ndv_expr(c)).alias(f"ndv_{c}"),
-                     F.count(F.when(F.col(c).isNull(), 1))
-                     .alias(f"nul_{c}")]
-            if types.get(c) == "boolean":
-                aggs += [F.count(F.when(F.col(c), 1))
-                         .alias(f"tru_{c}"),
-                         F.count(F.when(~F.col(c), 1))
-                         .alias(f"fls_{c}")]
-            elif types.get(c) == "string":
-                aggs += [F.max(F.length(c)).alias(f"max_{c}"),
-                         F.avg(F.length(c)).alias(f"avg_{c}")]
-        base = df if df is not None else self.spark.table(tbl)
-        return base.agg(*aggs)
 
     def _extrapolation_enabled(self, tbl: str) -> bool:
         """FeFsTable.Utils.isStatsExtrapolationEnabled: the
@@ -1262,6 +1095,7 @@ class Engine:
         with fresh stats)."""
         tbl = m.group("tbl")
         cols_g = m.group("cols")
+        spec = (m.group("part") or "").strip()
         pcols = []
         try:
             pcols = [c.name
@@ -1269,18 +1103,8 @@ class Engine:
                      if c.isPartition]
         except _SPARK_ERR:
             pass
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
-        data_cols = [
-            f.name for f in self.spark.table(tbl).schema.fields
-            if f.name not in pcols
-            # stats cover scalar columns only (the reference skips
-            # collection/struct columns — ComputeStatsStmt)
-            and not isinstance(f.dataType,
-                               (ArrayType, MapType, StructType))]
-        if cols_g is None:
-            wanted = data_cols
-        else:
+        wanted = stats.scalar_columns(self.spark.table(tbl).schema, pcols)
+        if cols_g is not None:
             wanted = [c.strip().strip("`")
                       for c in cols_g.split(",") if c.strip()]
         try:
@@ -1294,57 +1118,23 @@ class Engine:
         except _SPARK_ERR:
             pass          # temp-view fixtures: stats are advisory
         # SHOW COLUMN STATS values: one scan with per-column
-        # aggregates (that IS compute stats' cost model); the NDV
-        # expression follows EXACT_NDV — see _stats_agg_df. A
-        # partition-scoped incremental compute does NOT refresh
-        # table-level column stats (the reference fills those only on
-        # full computes).
-        try:
-            if (m.group("part") or "").strip():
-                raise _SkipStatsFill  # partition-scoped: no fill
-            types = {f.name: f.dataType.simpleString()
-                     for f in self.spark.table(tbl).schema.fields}
-            row = self._stats_agg_df(tbl, wanted, types) \
-                .collect()[0]
-            skey = self._stats_key(tbl)
-            nrows = row["__nrows__"]
-            for c in wanted:
-                st = self.col_stats.setdefault(
-                    (skey, c.lower()), {})
-                # the reference caps the HLL estimate at the row
-                # count (ColumnStats); boolean NDV is the type's
-                # domain size regardless of data
-                st["ndv"] = min(row[f"ndv_{c}"], nrows)
-                st["nulls"] = row[f"nul_{c}"]
-                if types.get(c) == "boolean":
-                    st["ndv"] = 2
-                    st["trues"] = row[f"tru_{c}"]
-                    st["falses"] = row[f"fls_{c}"]
-                elif types.get(c) == "string":
-                    if nrows == 0:
-                        # an empty computed table reports sizes 0
-                        st["max"], st["avg"] = 0, 0.0
-                    else:
-                        st["max"] = row[f"max_{c}"] or -1
-                        # the reference stores avg size as FLOAT
-                        import struct as _st
-
-                        avg = row[f"avg_{c}"]
-                        st["avg"] = -1 if avg is None else \
-                            _st.unpack("f", _st.pack(
-                                "f", float(avg)))[0]
-            self.stats_computed = getattr(
-                self, "stats_computed", set())
-            self.stats_computed.add(skey)
-            self.table_numrows[skey] = nrows
-            # totalSize at compute time — the extrapolation base
-            # (extrapolated rows = numRows * bytes_now / bytes_then)
-            self.stats_size = getattr(self, "stats_size", {})
-            sz = self._table_bytes(tbl)
-            if sz is not None:
-                self.stats_size[skey] = sz
-        except (*_SPARK_ANY, _SkipStatsFill):
-            pass  # unloadable table, or partition-scoped skip
+        # aggregates (that IS compute stats' cost model; stats.compute).
+        # A partition-scoped compute does NOT refresh table-level
+        # column stats (the reference fills those only on full
+        # computes).
+        if not spec:
+            try:
+                nrows = stats.compute(self, tbl, self.spark.table(tbl),
+                                      wanted)
+                rec = stats.record(self, tbl)
+                rec.computed, rec.rows = True, nrows
+                # totalSize at compute time — the extrapolation base
+                # (extrapolated rows = numRows * bytes_now / bytes_then)
+                sz = self._table_bytes(tbl)
+                if sz is not None:
+                    rec.bytes = sz
+            except _SPARK_ANY:
+                pass  # unloadable table
         n_parts = 1
         if pcols:
             parts: set = set()
@@ -1353,52 +1143,41 @@ class Engine:
                     f"SHOW PARTITIONS {tbl}").collect()}
             except AnalysisException:  # unpartitioned table
                 pass
-            spec = (m.group("part") or "").strip()
-            key = tbl.lower()
+            rec = stats.record(self, tbl)
             if spec:
                 from incubator_impala_spark import partitions
 
                 matched = partitions.match_partitions(self, tbl, spec)
                 hit = {partitions.part_suffix(kv) for kv in matched}
                 n_parts = len(hit)
-                self.stats_seen.setdefault(key, set()).update(hit)
+                rec.cover = (rec.cover or set()) | hit
                 if m.group("inc"):
-                    self.inc_parts.setdefault(key, set()).update(hit)
+                    rec.incremental |= hit
                 # per-partition row counts (what the reference's
                 # incremental stats persist): one partition-pruned
                 # aggregate over the matched set
-                skey = self._stats_key(tbl)
-                pred = partitions._translate_pred(spec)
                 try:
-                    for r in self.spark.sql(
-                            f"SELECT {', '.join(pcols)}, count(*) c "
-                            f"FROM {tbl} WHERE {pred} "
-                            f"GROUP BY {', '.join(pcols)}").collect():
-                        kv = {c: r[c] for c in pcols}
-                        self.part_rows[
-                            (skey, partitions.part_suffix(kv))] = r["c"]
-                    # IMPALA-2199: a matched-but-empty partition gets
-                    # rows=0 recorded, not left unset
-                    for kv in matched:
-                        self.part_rows.setdefault(
-                            (skey, partitions.part_suffix(kv)), 0)
-                    self.table_numrows[skey] = sum(
-                        v for (t, _), v in self.part_rows.items()
-                        if t == skey)
+                    stats.count_partitions(
+                        self, tbl, pcols, hit,
+                        partitions._translate_pred(spec))
+                    rec.rows = sum(rec.parts.values())
                 except _SPARK_ANY:  # per-partition scan failed
                     pass
                 if m.group("inc"):
                     try:
-                        self._refresh_incremental_colstats(tbl, pcols)
+                        stats.refresh_incremental(self, tbl, pcols)
                     except (*_SPARK_ANY, KeyError):
                         pass  # sketch cover incomplete
-            elif m.group("inc") and key in self.stats_seen:
+            elif m.group("inc") and rec.cover is not None:
                 # incremental re-run: only partitions not yet covered
-                new = parts - self.stats_seen[key]
+                new = parts - rec.cover
                 n_parts = len(new)
-                self.stats_seen[key] = parts
-                self.inc_parts.setdefault(key, set()).update(new)
-                self._fill_part_rows(tbl, pcols)
+                rec.cover = parts
+                rec.incremental |= new
+                try:
+                    stats.count_partitions(self, tbl, pcols, parts)
+                except _SPARK_ERR:
+                    pass
                 if n_parts == 0:
                     return rows_df(
                         self.spark, [("No partitions selected for "
@@ -1410,22 +1189,21 @@ class Engine:
                 # never per-partition counts — SHOW TABLE STATS
                 # extrapolates them from file sizes instead
                 n_parts = 1
-                self.stats_seen[key] = parts
-                self.inc_parts[key] = set()
-                skey = self._stats_key(tbl)
-                for k in [k for k in self.part_rows if k[0] == skey]:
-                    del self.part_rows[k]
+                rec.cover, rec.incremental = parts, set()
+                rec.parts.clear()
             else:
                 n_parts = len(parts)
-                self.stats_seen[key] = parts
+                rec.cover = parts
                 # incremental compute marks every partition's cover;
                 # a full compute REPLACES incremental stats (flag off)
-                self.inc_parts[key] = \
-                    set(parts) if m.group("inc") else set()
+                rec.incremental = set(parts) if m.group("inc") else set()
                 # a full compute persists per-partition row counts
                 # too (the reference's table stats carry #ROWS per
                 # partition after COMPUTE STATS — corrupt-stats.test)
-                self._fill_part_rows(tbl, pcols)
+                try:
+                    stats.count_partitions(self, tbl, pcols, parts)
+                except _SPARK_ERR:
+                    pass
         return rows_df(
             self.spark, [(f"Updated {n_parts} partition(s) and "
                           f"{len(wanted)} column(s).",)], "summary string")
@@ -1593,7 +1371,7 @@ class Engine:
         self.spark.sql(
             f"CREATE TABLE {tbl} ({', '.join(defs)}) "
             f"USING parquet{pclause}")
-        self.avro_tables.add(self._stats_key(tbl))
+        self.avro_tables.add(stats.key(self, tbl))
         return rows_df(
             self.spark, [("Table has been created.",)], "summary string")
 
@@ -1632,7 +1410,7 @@ class Engine:
                 if pnames else "")
         self.spark.sql(f"CREATE TABLE {tbl} ({', '.join(defs)}) "
                        f"USING parquet{part}")
-        self.avro_tables.add(self._stats_key(tbl))
+        self.avro_tables.add(stats.key(self, tbl))
         # EXTERNAL ... LOCATION over existing avro container files:
         # adopt the data (avro-schema-changes.test
         # avro_alter_table_add_new_column over tinytable_avro)
@@ -1855,8 +1633,9 @@ class Engine:
             # (the next COMPUTE INCREMENTAL STATS recounts them)
             touched = {"/".join(f"{c}={fmt(r[c])}" for c in pcols)
                        for r in counts}
-            self.stats_seen.get(tbl.lower(), set()) \
-                .difference_update(touched)
+            cover = stats.get(self, tbl).cover
+            if cover is not None:
+                cover -= touched
         else:
             rows = [(f": {final.count()}",)]
         # tiny inserts write like the reference's single coordinator
@@ -1916,16 +1695,6 @@ class Engine:
         except AnalysisException:  # temp view or missing table
             pass
         return None
-
-    def _stats_key(self, name: str) -> str:
-        """Registry key for a table name: last path segment, with the
-        namespace shim's `db__name` mangling stripped so logical and
-        physical spellings share one entry."""
-        base = name.strip("`").split(".")[-1].lower()
-        for db in getattr(getattr(self, "ns", None), "dbs", {}) or {}:
-            if base.startswith(db.lower() + "__"):
-                return base[len(db) + 2:]
-        return base
 
     def _warehouse_dir(self) -> str:
         return re.sub(r"^file:", "", self.spark.conf.get(

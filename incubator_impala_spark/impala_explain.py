@@ -56,6 +56,8 @@ from pyspark.errors.exceptions.base import (
     PySparkException as _PYSPARK_ERR,
 )
 
+from incubator_impala_spark import stats
+
 # JVM-reflection probes walk py4j objects whose classes vary by plan
 # node — an absent method raises Py4JError/AttributeError, never
 # engine state corruption; this narrowed tuple replaces bare
@@ -591,12 +593,9 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
                      if c.isPartition]
         except (_PYSPARK_ERR, *_JVM_ERRS):  # not a catalog table
             return
-        key = engine._stats_key(flat)
-        rows = getattr(engine, "table_numrows", {}).get(key)
-        size = getattr(engine, "stats_size", {}).get(key)
-        colstats = any(k[0] == key
-                       for k in getattr(engine, "col_stats", {}))
-        si: dict = {"rows": rows, "size": size, "colstats": colstats,
+        rec = stats.get(engine, flat)
+        rows, size = rec.rows, rec.bytes
+        si: dict = {"rows": rows, "size": size, "colstats": bool(rec.cols),
                     "partitioned": bool(pcols)}
         sel_bytes = sum(os.path.getsize(f) for f in n.files
                         if os.path.exists(f))
@@ -607,9 +606,7 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
                 comps = [c for c in f.split(os.sep) if "=" in c]
                 if comps:
                     sel.add("/".join(comps))
-            part_rows = getattr(engine, "part_rows", {})
-            covered = {s: part_rows[(key, s)] for s in sel
-                       if (key, s) in part_rows}
+            covered = {s: rec.parts[s] for s in sel if s in rec.parts}
             si["n_sel"] = len(sel)
             si["n_with_rows"] = len(covered)
             if sel and len(covered) == len(sel):
@@ -1290,18 +1287,16 @@ def render_explain(engine, body_sql: str, level: int) -> list[str]:
     cur_db = getattr(getattr(engine, "ns", None), "current", None)
     for disp, flat, _a in cond.relations:
         try:
-            key = engine._stats_key(flat)
+            rec = stats.get(engine, flat)
             vals = []
-            tv = engine.table_numrows.get(key)
-            if tv is not None:
-                vals.append((tv, 1))
+            if rec.rows is not None:
+                vals.append((rec.rows, 1))
             from incubator_impala_spark import partitions as _parts
 
-            for (t, suffix), v in engine.part_rows.items():
-                if t == key:
-                    sz = sum(s for _, s in _parts._files_in(
-                        _parts._part_dir(engine, flat, suffix)))
-                    vals.append((v, sz))
+            for suffix, v in rec.parts.items():
+                sz = sum(s for _, s in _parts._files_in(
+                    _parts._part_dir(engine, flat, suffix)))
+                vals.append((v, sz))
             bad = any(v < -1 or (v == 0 and sz > 0)
                       for v, sz in vals)
             if bad:

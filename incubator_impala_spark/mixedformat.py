@@ -30,7 +30,7 @@ import re
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import partitions as _parts
-from incubator_impala_spark import sqlscan
+from incubator_impala_spark import sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 # declared (Spark simpleString) type -> acceptable Avro schema types.
@@ -83,7 +83,7 @@ def register(engine, phys: str) -> None:
 def maybe_activate(engine, phys: str) -> None:
     """Activate dispatch when any partition's format/location
     override diverges from the table base."""
-    key = engine._stats_key(phys)
+    key = stats.key(engine, phys)
     base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
     fmts = getattr(engine, "part_formats", {})
     locs = getattr(engine, "part_locations", {})
@@ -125,7 +125,7 @@ def refresh_views(engine, sql_text: str) -> None:
 
 def _effective(engine, phys: str, kv: dict) -> tuple[str, str]:
     """(format, location) for one partition after ALTER overrides."""
-    key = engine._stats_key(phys)
+    key = stats.key(engine, phys)
     suffix = _parts.part_suffix(kv)
     loc = getattr(engine, "part_locations", {}).get((key, suffix)) \
         or _parts._part_dir(engine, phys, suffix)
@@ -155,7 +155,7 @@ def build_view(engine, phys: str) -> None:
                          for f in data_fields)
     pcol_types = {f.name: f.dataType.simpleString()
                   for f in full.schema.fields if f.name in pcols}
-    key = engine._stats_key(phys)
+    key = stats.key(engine, phys)
     base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
     fmts = getattr(engine, "part_formats", {})
     locs = getattr(engine, "part_locations", {})

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark import dialect, sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 __all__ = ["Namespaces"]
@@ -612,19 +612,14 @@ class Namespaces:
             self.dbs[sdb].pop(sobj, None)
         if ddb is not None:
             self.register(ddb, dobj, info.get("kind", "table"), new)
-        # column/table stats follow the table through a rename
-        # (the catalog carries them in the reference)
-        okey = engine._stats_key(old)
-        nkey = engine._stats_key(new)
-        for reg_name in ("col_stats", "part_rows", "part_formats"):
-            reg = getattr(engine, reg_name, None)
-            if reg is not None:
-                for (t, c) in list(reg):
-                    if t == okey:
-                        reg[(nkey, c)] = reg.pop((t, c))
-        tn = getattr(engine, "table_numrows", None)
-        if tn is not None and okey in tn:
-            tn[nkey] = tn.pop(okey)
+        # stats and partition formats follow the table through a
+        # rename (the catalog carries them in the reference)
+        stats.rename(engine, old, new)
+        okey, nkey = stats.key(engine, old), stats.key(engine, new)
+        for (t, suffix) in list(engine.part_formats):
+            if t == okey:
+                engine.part_formats[(nkey, suffix)] = \
+                    engine.part_formats.pop((t, suffix))
         return rows_df(
             spark, [("Renaming was successful.",)], "summary string")
 

@@ -35,7 +35,7 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql import DataFrame
 
-from incubator_impala_spark import sqlscan
+from incubator_impala_spark import sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
@@ -174,12 +174,9 @@ def show_partitions(engine, tbl: str) -> DataFrame:
     parts = list_partitions(engine, tbl)
     parts.sort(key=lambda kv: [
         (v is not None, str(v)) for v in kv.values()])
-    key = getattr(engine, "_stats_key",
-                  lambda n: n.split(".")[-1].lower())(tbl)
+    key = stats.key(engine, tbl)
+    rec = stats.get(engine, tbl)
     fmts = getattr(engine, "part_formats", {})
-    prows = getattr(engine, "part_rows", {})
-    inc = getattr(engine, "inc_parts", {}).get(
-        tbl.strip("`").lower(), set())
     # stats-extrapolation tables carry an extra EXTRAP #ROWS column
     # (FeFsTable.Utils.getExtrapolatedNumRows: bytes * rows/totalSize)
     extrap_on = False
@@ -187,8 +184,7 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         extrap_on = engine._extrapolation_enabled(tbl)
     except (AttributeError, KeyError, _PYSPARK_ERR):  # no registry
         pass
-    nrows_stat = getattr(engine, "table_numrows", {}).get(key)
-    stat_bytes = getattr(engine, "stats_size", {}).get(key)
+    nrows_stat, stat_bytes = rec.rows, rec.bytes
 
     def _extrap(nbytes: int) -> int:
         if nbytes == 0:
@@ -208,20 +204,19 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         tot_size += size
         rows.append(
             tuple("NULL" if v is None else str(v) for v in kv.values())
-            + (prows.get((key, suffix), -1),)
+            + (rec.parts.get(suffix, -1),)
             + ((_extrap(size),) if extrap_on else ())
             + (len(files), _human(size),
                "NOT CACHED", "NOT CACHED",
                fmts.get((key, suffix),
                         (_format_of(files) if files
                          else _meta_format(engine, tbl)) or "TEXT"),
-               "true" if suffix in inc else "false",
+               "true" if suffix in rec.incremental else "false",
                _display_location(engine, tbl, suffix)))
-    nrows = getattr(engine, "table_numrows", {}).get(key, -1)
+    nrows = -1 if rec.rows is None else rec.rows
     rows.append(("Total",) + ("",) * (len(pcols) - 1)
                 + (nrows,)
-                + ((nrows if nrows is not None else -1,)
-                   if extrap_on else ())
+                + ((nrows,) if extrap_on else ())
                 + (tot_files, _human(tot_size), "0B",
                    "", "", "", ""))
     schema = ", ".join(f"`{c}` string" for c in pcols) + (
@@ -244,13 +239,11 @@ def show_table_stats(engine, tbl: str) -> DataFrame:
         pcols = []
     if pcols:
         return show_partitions(engine, tbl)
-    key = getattr(engine, "_stats_key",
-                  lambda n: n.split(".")[-1].lower())(tbl)
     files = _files_in(engine._table_location(tbl))
     size = sum(s for _, s in files)
-    nrows = getattr(engine, "table_numrows", {}).get(key, -1)
-    row = (nrows, len(files), _human(size), "NOT CACHED",
-           "NOT CACHED",
+    nrows = stats.get(engine, tbl).rows
+    row = (-1 if nrows is None else nrows, len(files), _human(size),
+           "NOT CACHED", "NOT CACHED",
            (_format_of(files) if files
             else _meta_format(engine, tbl)) or "TEXT", "false",
            _display_location(engine, tbl))

@@ -47,6 +47,8 @@ from dataclasses import dataclass, field
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
+from incubator_impala_spark import sqlscan, stats
+
 # catalog/DDL probe guard: Spark analysis errors + JVM-side failures
 # surfacing through the py4j bridge
 _SPARK_ERR = (AnalysisException, Py4JJavaError)
@@ -515,21 +517,13 @@ _VAR = re.compile(r"\$[A-Z][A-Z0-9_]*")
 
 
 def _split_statements(text: str) -> list[str]:
-    stmts, cur, in_q = [], [], None
-    for c in text:
-        if in_q:
-            cur.append(c)
-            if c == in_q:
-                in_q = None
-        elif c in ("'", '"'):
-            in_q = c
-            cur.append(c)
-        elif c == ";":
-            stmts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    stmts.append("".join(cur))
+    """Split `text` on the `;`s that end statements: a `;` inside a
+    literal, a backtick identifier or a comment does not count."""
+    stmts, start = [], 0
+    for m in re.finditer(";", sqlscan.shadow(text)):
+        stmts.append(text[start:m.start()])
+        start = m.end()
+    stmts.append(text[start:])
     return [s.strip() for s in stmts if s.strip()]
 
 
@@ -677,8 +671,7 @@ def run_blocks(engine, blocks: list[Block], *,
             except _SPARK_ERR:  # overlay view already gone
                 pass
             del engine.schema_overlays[tbl]
-    if hasattr(engine, "stats_seen"):
-        engine.stats_seen.clear()   # incremental-stats state per file
+    stats.forget_covers(engine)   # incremental-stats state per file
     for p in presets or []:
         # file-level startup flags (the reference runs some files with
         # impalad flags, e.g. -use_local_tz_for_unix_timestamp_conversions)

@@ -298,12 +298,13 @@ FILES: dict[str, tuple[int, dict[int, str]]] = {
     "create-table-like-file": (21, {}),
     # r8: table-level column stats now follow the incremental-stats
     # COVER (merged like the reference's per-partition sketches —
-    # engine._refresh_incremental_colstats), closing the
+    # stats.refresh_incremental), closing the
     # incremental-colstats-aggregation xfail; the listing blocks pin
     # the reference's canonical TEXT byte sizes (parquet here)
     # r9: the 'Incremental stats' column now renders the per-partition
-    # cover (engine.inc_parts), which was the REAL blocker for 6 of
-    # the listing blocks previously xfailed as default-format-bytes
+    # cover (the stats record's incremental set), which was the REAL
+    # blocker for 6 of the listing blocks previously xfailed as
+    # default-format-bytes
     "compute-stats-incremental": (26, dict(
         [(i, "default-format-bytes")
          for i in (2, 5, 7, 17, 21, 23, 28, 29, 30, 32)])),
@@ -606,8 +607,8 @@ FILES: dict[str, tuple[int, dict[int, str]]] = {
     # predicate partition specs + Impala SHOW PARTITIONS/FILES
     # listings (partitions.py)
     "partition-ddl-predicates-all-fs": (21, {}),
-    # SHOW COLUMN STATS / ALTER SET COLUMN STATS (engine col_stats
-    # registry; partition-key NDV derived from the key columns)
+    # SHOW COLUMN STATS / ALTER SET COLUMN STATS (stats.py column
+    # stats; partition-key NDV derived from the key columns)
     "alter-table-set-column-stats": (6, {}),
     # parquet page-index workload over the reference's own data files
     # (decimals_1_10, alltypes_tiny_pages, nested_decimals, ... —

@@ -77,8 +77,9 @@ def test_extrapolation_formula_bounds(eng):
     assert rows["2"] >= 1          # max(1, ...) floor
     # stored rows==0 with non-empty files: FeFsTable returns -1
     # ("unavailable"), not max(1, 0) == 1 (ADVICE r9)
-    key = eng._stats_key("xtst_extrap2")
-    eng.table_numrows[key] = 0
+    from incubator_impala_spark import stats
+
+    stats.record(eng, "xtst_extrap2").rows = 0
     rows0 = {r["j"]: r["Extrap #Rows"] for r in
              eng.sql("show table stats xtst_extrap2").collect()}
     assert rows0["2"] == -1, rows0
