@@ -1331,17 +1331,24 @@ def _show_partitions(engine, t: AcidTable):
 
 def _compute_stats(engine, t: AcidTable, incremental: bool):
     """COMPUTE [INCREMENTAL] STATS over the visible snapshot: the
-    shared one-scan aggregate (stats.compute) into the table's stats
-    record, plus the per-partition row cover for the partition
-    listing."""
+    shared one-scan aggregate (stats.compute) over the data columns
+    into the table's stats record, the partition keys' NDV/#Nulls
+    from the partition list (as a plain table shows them), plus the
+    per-partition row cover for the partition listing."""
+    from incubator_impala_spark.partitions import parse_suffix
+
     refresh_views(engine)
     df = engine.spark.table(t.phys)
     rec = stats.record(engine, t.phys)
+    pnames = [p for p, _ in t.pcols]
     rec.rows = stats.compute(engine, t.phys, df,
-                             stats.scalar_columns(df.schema))
+                             stats.scalar_columns(df.schema, pnames))
     rec.computed = True
     if t.pcols:
-        pnames = [p for p, _ in t.pcols]
+        plist = [parse_suffix(s) for s, _ in _leaf_dirs(t)]
+        keys = stats.key_stats(plist) or dict.fromkeys(pnames, (0, 0))
+        for p, (ndv, nulls) in keys.items():
+            rec.cols[p.lower()] = {"ndv": ndv, "nulls": nulls}
         counts = {tuple(str(r[p]) for p in pnames): r["cnt"]
                   for r in df.groupBy(*pnames)
                   .agg(F.count("*").alias("cnt")).collect()}

@@ -812,34 +812,34 @@ class Engine:
                 self.spark, [(f"Inserted {n} row(s)",)], "summary string")
         m = _DROP_STATS_STMT.match(sql_text)
         if m:
-            spec = {}
-            for item in (m.group("part") or "").split(","):
-                if "=" in item:
-                    k, v = item.split("=", 1)
-                    spec[k.strip().strip("`").lower()] = \
-                        v.strip().strip("'\"")
-            rec = stats.get(self, m.group("tbl"))
-            if not (m.group("part") or "").strip():
-                stats.clear(self, m.group("tbl"))
-            elif rec.cover is not None:
+            tbl, spec = m.group("tbl"), (m.group("part") or "").strip()
+            rec = stats.get(self, tbl)
+            if not spec:
+                stats.clear(self, tbl)
+            elif rec.cover:
                 # a partition-scoped DROP INCREMENTAL STATS keeps the
                 # table-level stats; it shrinks the cover, and the
                 # reference derives table-level column stats by
                 # merging per-partition incremental sketches, so that
                 # shifts them (DIALECT.md
-                # incremental-colstats-aggregation, closed r8)
-                dropped = {
-                    p for p in rec.cover
-                    if all(dict(x.split("=", 1)
-                                for x in p.split("/")).get(k) == v
-                           for k, v in spec.items())}
-                rec.cover -= dropped
-                rec.incremental -= dropped
+                # incremental-colstats-aggregation, closed r8). The
+                # partitions are chosen as COMPUTE chooses them.
+                from incubator_impala_spark import partitions
+
                 try:
-                    pcols = [c.name for c in
-                             self.spark.catalog.listColumns(
-                                 m.group("tbl")) if c.isPartition]
-                    stats.refresh_incremental(self, m.group("tbl"), pcols)
+                    hit = {partitions.part_suffix(kv) for kv in
+                           partitions.match_partitions(self, tbl, spec)}
+                    dropped = {
+                        p for p in rec.cover if p in hit or
+                        partitions.part_suffix(
+                            partitions.parse_suffix(p)) in hit}
+                    if dropped:
+                        rec.cover -= dropped
+                        rec.incremental -= dropped
+                        pcols = [c.name for c in
+                                 self.spark.catalog.listColumns(tbl)
+                                 if c.isPartition]
+                        stats.refresh_incremental(self, tbl, pcols)
                 except (*_SPARK_ANY, KeyError):
                     pass  # table dropped / cover emptied
             return rows_df(
@@ -979,9 +979,7 @@ class Engine:
         pstats: dict[str, tuple] = {}
         if pcols:
             # the reference knows partition-key NDV/nulls WITHOUT
-            # compute stats (catalog metadata): NDV counts distinct
-            # partition values INCLUDING the NULL partition, #Nulls
-            # counts NULL partitions
+            # compute stats (catalog metadata)
             from incubator_impala_spark import partitions as _parts
 
             try:
@@ -989,11 +987,7 @@ class Engine:
             except (*_SPARK_ERR, OSError):
                 plist = []
             if plist:
-                for c0 in plist[0]:
-                    vals = [kv.get(c0) for kv in plist]
-                    pstats[c0.lower()] = (
-                        len(set(vals)),
-                        sum(1 for v in vals if v is None))
+                pstats = stats.key_stats(plist)
             elif rec.computed:
                 # computed-but-empty partitioned table: the reference
                 # reports 0 partitions as 0, not unknown

@@ -43,15 +43,18 @@ _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 def list_partitions(engine, tbl: str) -> list[dict]:
     """[{col: value-or-None}] straight from the catalog."""
-    out = []
-    for r in engine.spark.sql(f"SHOW PARTITIONS {tbl}").collect():
-        kv = {}
-        for item in r[0].split("/"):
-            k, v = item.split("=", 1)
-            v = urllib.parse.unquote(v)
-            kv[k] = None if v == _NULL_DIR else v
-        out.append(kv)
-    return out
+    return [parse_suffix(r[0])
+            for r in engine.spark.sql(f"SHOW PARTITIONS {tbl}").collect()]
+
+
+def parse_suffix(suffix: str) -> dict:
+    """`k=v/k2=v2` directory spelling → {col: value-or-None}."""
+    kv = {}
+    for item in suffix.split("/"):
+        k, v = item.split("=", 1)
+        v = urllib.parse.unquote(v)
+        kv[k] = None if v == _NULL_DIR else v
+    return kv
 
 
 def _translate_pred(spec: str) -> str:

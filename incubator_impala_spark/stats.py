@@ -96,6 +96,16 @@ def scalar_columns(schema: StructType, exclude=()) -> list[str]:
             and not isinstance(f.dataType, (ArrayType, MapType, StructType))]
 
 
+def key_stats(parts: list[dict]) -> dict[str, tuple[int, int]]:
+    """Partition-key (NDV, #Nulls) from the partition list
+    ([{col: value-or-None}]), as the reference's catalog knows them:
+    NDV counts distinct partition values INCLUDING the NULL
+    partition, #Nulls counts NULL partitions."""
+    return {c.lower(): (len({kv.get(c) for kv in parts}),
+                        sum(kv.get(c) is None for kv in parts))
+            for c in (parts[0] if parts else ())}
+
+
 def agg_df(engine, df: DataFrame, wanted: list, types: dict) -> DataFrame:
     """The one-scan COMPUTE STATS aggregate over `df` (unexecuted).
 

@@ -13,9 +13,9 @@ its own export.
 
 For each end-to-end metric of `BENCHMARK.json` (per-layer ones with
 `--trace 1`) it prints both sides' median and quartiles, and in how
-many seeds the change was better, as `wins/pairs`. `--json FILE` also
-writes every run's metrics. A side's failed or incorrect run is
-reported and left out of its pair.
+many seeds the change was better, as `wins/pairs`. A side's failed or
+incorrect run is reported and left out of its pair. The exports live in
+a temporary directory that is removed when the run ends.
 
 Commit the change first, or pass a commit of the work tree made with
 `git add -A && git stash create`.
@@ -110,29 +110,23 @@ def main(argv=None) -> int:
     ap.add_argument("--seeds", required=True, help="e.g. 1301-1310 or 1,5,9")
     ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--workdir", help="where the exports go (default: a "
-                                      "new temporary directory)")
-    ap.add_argument("--json", help="write every run's metrics here")
     args = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     specs = bench["per_layer" if args.trace else "end_to_end"]
-    work = args.workdir or tempfile.mkdtemp(prefix="ab-")
     trees, names = {}, {}
-    for side in ("base", "change"):
-        trees[side] = os.path.join(work, side)
-        names[side] = _export(getattr(args, side), trees[side])
     runs: dict = {"base": [], "change": []}
-    for i, seed in enumerate(_seeds(args.seeds)):
-        order = ("base", "change") if i % 2 == 0 else ("change", "base")
-        for side in order:
-            runs[side].append(_run(trees[side], args, seed))
-        print(f"seed {seed}: {' then '.join(order)} done", file=sys.stderr)
+    with tempfile.TemporaryDirectory(prefix="ab-") as work:
+        for side in ("base", "change"):
+            trees[side] = os.path.join(work, side)
+            names[side] = _export(getattr(args, side), trees[side])
+        for i, seed in enumerate(_seeds(args.seeds)):
+            order = ("base", "change") if i % 2 == 0 else ("change", "base")
+            for side in order:
+                runs[side].append(_run(trees[side], args, seed))
+            print(f"seed {seed}: {' then '.join(order)} done",
+                  file=sys.stderr)
     report(specs, runs, names)
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump({"args": vars(args), "revisions": names,
-                       "runs": runs}, f, indent=1)
     return 0
 
 

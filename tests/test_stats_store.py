@@ -9,7 +9,11 @@ STATS:
 - an insert-only ACID table's COMPUTE STATS gives the values the same
   rows give in a plain parquet table (string Avg Size is the average,
   booleans get #Trues and #Falses);
-- incremental stats follow a rename, and die with a dropped table.
+- a partitioned insert-only ACID table's key columns get the values a
+  plain table's get, from the partition list;
+- incremental stats follow a rename, and die with a dropped table;
+- DROP INCREMENTAL STATS with a partition predicate drops the matched
+  partitions only.
 """
 
 from __future__ import annotations
@@ -98,6 +102,26 @@ def test_acid_compute_stats_matches_plain_table(eng):
         eng.sql(f"DROP TABLE {tbl}")
 
 
+def test_partitioned_acid_compute_stats_matches_plain_table(eng):
+    # the key column's NDV counts the NULL partition and #Nulls counts
+    # NULL partitions, not NULL rows; a string key has no sizes
+    rows = "(1, 'a', 'p'), (2, 'abcdef', 'qq'), (3, 'abc', NULL), " \
+           "(4, 'ab', NULL)"
+    cols = "(x INT, s STRING) PARTITIONED BY (y STRING) STORED AS PARQUET"
+    _recreate(eng, "sst_acidp", f"{cols} {_ACID}")
+    _recreate(eng, "sst_flatp", cols)
+    for tbl in ("sst_acidp", "sst_flatp"):
+        eng.sql(f"INSERT INTO {tbl} PARTITION (y) VALUES {rows}")
+        eng.sql(f"COMPUTE STATS {tbl}")
+    acid, flat = _col_stats(eng, "sst_acidp"), _col_stats(eng, "sst_flatp")
+    assert (acid["y"]["#Distinct Values"], acid["y"]["#Nulls"]) == (3, 1)
+    assert (acid["y"]["Max Size"], acid["y"]["Avg Size"]) == (-1, -1.0)
+    assert acid["s"]["Avg Size"] == 3.0
+    assert acid == flat
+    for tbl in ("sst_acidp", "sst_flatp"):
+        eng.sql(f"DROP TABLE {tbl}")
+
+
 def test_incremental_stats_follow_rename(eng):
     eng.sql("DROP TABLE IF EXISTS sst_ren2")
     _recreate(eng, "sst_ren", "(x INT) PARTITIONED BY (y INT) "
@@ -126,3 +150,20 @@ def test_dropped_table_takes_its_incremental_stats(eng):
     assert parts["1"]["#Rows"] == -1
     assert parts["Total"]["#Rows"] == -1
     eng.sql("DROP TABLE sst_drop")
+
+
+def test_drop_incremental_stats_by_predicate_keeps_other_partitions(eng):
+    _recreate(eng, "sst_pred", "(x INT) PARTITIONED BY (y INT) "
+                               "STORED AS PARQUET")
+    eng.sql("INSERT INTO sst_pred PARTITION (y) "
+            "VALUES (1, 1), (2, 1), (3, 5)")
+    eng.sql("COMPUTE INCREMENTAL STATS sst_pred")
+    eng.sql("DROP INCREMENTAL STATS sst_pred PARTITION (y < 3)")
+    parts = _part_stats(eng, "sst_pred")
+    assert parts["1"]["Incremental stats"] == "false"
+    assert parts["5"]["Incremental stats"] == "true"
+    # the table-level column stats are those of the partitions still
+    # covered: y=5 holds the one row x=3
+    x = _col_stats(eng, "sst_pred")["x"]
+    assert (x["#Distinct Values"], x["#Nulls"]) == (1, 0)
+    eng.sql("DROP TABLE sst_pred")
