@@ -4,7 +4,7 @@ A brand-new engine that re-expresses the query semantics and capability
 surface of Apache Impala (reference: timarmstrong/incubator-impala) on
 Spark SQL / DataFrame / Catalyst, plus net-new large-scale
 training-data-pipeline operators (dedup, similarity search, text
-analysis, multimodal plumbing) and Structured Streaming.
+analysis, multimodal plumbing, event-time windows).
 
 Design stance (see SURVEY.md):
 - declarative DataFrame/SQL plans; Catalyst + Tungsten pick physical

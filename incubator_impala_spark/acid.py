@@ -129,17 +129,15 @@ def lookup(engine, name: str) -> AcidTable | None:
     n = name.strip().strip("`").lower()
     if n in reg:
         return reg[n]
-    ns = getattr(engine, "ns", None)
-    if ns is not None:
-        if "." in n:
-            db, obj = n.split(".", 1)
-            cand = f"{db}__{obj}"
-            if cand in reg:
-                return reg[cand]
-        elif ns.current:
-            cand = f"{ns.current}__{n}"
-            if cand in reg:
-                return reg[cand]
+    if "." in n:
+        db, obj = n.split(".", 1)
+        cand = f"{db}__{obj}"
+        if cand in reg:
+            return reg[cand]
+    elif engine.ns.current:
+        cand = f"{engine.ns.current}__{n}"
+        if cand in reg:
+            return reg[cand]
     return None
 
 
@@ -266,11 +264,20 @@ def _schema_ddl(cols: list) -> str:
     return ", ".join(f"`{n}` {ty}" for n, ty in cols)
 
 
+def _read_schema(cols: list) -> str:
+    """Schema DDL for reading a table's files: Spark's file readers
+    take no CHAR(n)/VARCHAR(n), so those read as STRING (the write
+    cast already padded or bounded the values)."""
+    return _schema_ddl([
+        (n, re.sub(r"(?i)\b(?:var)?char\s*\(\s*\d+\s*\)", "string", ty))
+        for n, ty in cols])
+
+
 def _read_plain(engine, t: AcidTable, files: list):
     """Distributed read of insert-only data files in the table's
     declared format with the registry schema."""
     spark = engine.spark
-    schema = _schema_ddl(t.cols)
+    schema = _read_schema(t.cols)
     if t.fmt == "text":
         return (spark.read.schema(schema)
                 .options(sep="\x01", nullValue="\\N", emptyValue="")
@@ -281,7 +288,7 @@ def _read_plain(engine, t: AcidTable, files: list):
 
 
 def _empty_df(engine, t: AcidTable, with_rowid: bool = False):
-    cols = _schema_ddl(t.cols + t.pcols)
+    cols = _read_schema(t.cols + t.pcols)
     if with_rowid:
         cols = ("row__id struct<operation:int,"
                 "originaltransaction:bigint,bucket:int,rowid:bigint,"
@@ -367,7 +374,7 @@ def _read_wrapped_acid(engine, t: AcidTable, files: list):
     from pyarrow import orc as _pa_orc
 
     cols = list(t.cols)
-    out_schema = _schema_ddl(_ACID_FLAT + cols)
+    out_schema = _read_schema(_ACID_FLAT + cols)
     splits = []
     for p in files:
         for i in range(_pa_orc.ORCFile(p).nstripes):
@@ -432,7 +439,7 @@ def _read_original_acid(engine, t: AcidTable, leaf: str,
                 f"{os.path.join(leaf, rel)}")
         paths.append(os.path.join(leaf, rel))
     cols = list(t.cols)
-    out_schema = _schema_ddl(_ACID_FLAT + cols)
+    out_schema = _read_schema(_ACID_FLAT + cols)
 
     def _decode(it):
         import pandas as pd
@@ -509,7 +516,7 @@ def _read_leaf(engine, t: AcidTable, suffix: str, leaf: str,
         flat = [f for f in acid_files if f not in wrapped]
         if flat:
             dfs.append(spark.read.schema(
-                _schema_ddl(_ACID_FLAT + t.cols)).orc(flat))
+                _read_schema(_ACID_FLAT + t.cols)).orc(flat))
         if wrapped:
             dfs.append(_read_wrapped_acid(engine, t, wrapped))
         if origs:
@@ -870,8 +877,7 @@ def _is_transactional(engine, sql_text: str) -> tuple | None:
                 == "insert_only",)
     if props.get("transactional") == "false":
         return None
-    if getattr(engine, "default_transactional_type", None) \
-            == "insert_only":
+    if engine.default_transactional_type == "insert_only":
         return (True,)
     return None
 
@@ -906,8 +912,8 @@ def _register(engine, display: str, phys: str, db: str | None,
                   fmt=fmt)
     t.fixture = fixture
     registry(engine)[phys] = t
-    ns = getattr(engine, "ns", None)
-    if ns is not None and db and db in ns.dbs:
+    ns = engine.ns
+    if db and db in ns.dbs:
         ns.register(db, phys.split("__")[-1]
                     if "__" in phys else display.split(".")[-1].lower(),
                     "table", phys)
@@ -926,13 +932,11 @@ def _split_name(engine, raw: str) -> tuple:
     """(display, phys, db) for a name as it appears in resolved
     statement text."""
     n = raw.strip().strip("`")
-    ns = getattr(engine, "ns", None)
-    if ns is not None:
-        db, obj = ns.split(n)
-        if db is not None:
-            return f"{db}.{obj}", ns.phys(db, obj), db
-    cur = getattr(ns, "current", None) if ns is not None else None
-    return n, n.lower(), cur
+    ns = engine.ns
+    db, obj = ns.split(n)
+    if db is not None:
+        return f"{db}.{obj}", ns.phys(db, obj), db
+    return n, n.lower(), ns.current
 
 
 # ---------------------------------------------------------------------
@@ -1047,8 +1051,8 @@ def _drop(engine, t: AcidTable):
     shutil.rmtree(t.location, ignore_errors=True)
     reg.pop(t.phys, None)
     shadows(engine).pop(t.phys, None)
-    ns = getattr(engine, "ns", None)
-    if ns is not None and t.db and t.db in ns.dbs:
+    ns = engine.ns
+    if t.db and t.db in ns.dbs:
         ns.dbs[t.db].pop(t.phys.split("__")[-1], None)
         ns.dbs[t.db].pop(t.display.split(".")[-1].lower(), None)
     from incubator_impala_spark import showcreate
@@ -1117,7 +1121,7 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
 
 
 def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
-    dbg = getattr(engine, "debug_action", None)
+    dbg = engine.debug_action
     if not hive and dbg and \
             "FIS_FAIL_HDFS_TABLE_SINK_FLUSH_FINAL:FAIL" in dbg:
         w = _alloc(t)
@@ -1137,7 +1141,10 @@ def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
             dyn.append(item.strip("`").lower())
 
     def build_df():
+        # source columns by position: a generated name (`0.5`, `1.50`)
+        # or a repeated one does not resolve as a column reference
         src = engine.spark.sql(engine.translate(body))
+        src = src.toDF(*[f"_c{i}" for i in range(len(src.columns))])
         listed = [c.strip().strip("`").lower()
                   for c in (m.group("cols") or "").split(",")
                   if c.strip()]
@@ -1152,7 +1159,7 @@ def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
         sel = {}
         for i, name in enumerate(listed):
             if i < len(src.columns):
-                sel[name] = F.col(src.columns[i]) \
+                sel[name] = F.col(f"_c{i}") \
                     .cast(types.get(name, "string"))
         out = src.select(*[c.alias(n) for n, c in sel.items()]) \
             if sel else src
@@ -1374,8 +1381,7 @@ def hive_sql(engine, stmt: str):
     minicluster would: transactional writes allocate write ids in the
     shared 'metastore' registry WITHOUT advancing the engine's cached
     snapshot (visible only after REFRESH / INVALIDATE METADATA)."""
-    resolved = engine.ns.resolve(stmt) if hasattr(engine, "ns") \
-        else stmt
+    resolved = engine.ns.resolve(stmt)
     if re.match(r"(?is)^\s*create\s+(?:external\s+)?table\b",
                 resolved):
         flav = _is_transactional(engine, resolved)

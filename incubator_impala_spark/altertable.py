@@ -144,7 +144,7 @@ def _overlay_for(engine, tbl: str):
     # workload) exercises heavily — there the engine's documented
     # rewrite strategy applies. The schema-resolution workload, whose
     # semantics REQUIRE untouched data files, opts in per-file.
-    if not getattr(engine, "alter_in_place", False):
+    if not engine.alter_in_place:
         return None
     if _partition_cols(engine.spark, tbl):
         return None
@@ -265,7 +265,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 spark, "No new column(s) have been added to the table.")
         if not new and not ine:
             raise ValueError(f"Column already exists: {defs[0][0]}")
-        if stats.key(engine, tbl) in getattr(engine, "avro_tables", set()):
+        if stats.key(engine, tbl) in engine.avro_tables:
             # avro tables convert added columns through the Avro type
             # mapping (TINYINT/SMALLINT->INT, TIMESTAMP->STRING) and
             # default the comment to 'from deserializer'
@@ -487,8 +487,6 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 from incubator_impala_spark import partitions as _pt
 
                 key = stats.key(engine, tbl)
-                if not hasattr(engine, "part_locations"):
-                    engine.part_locations = {}
                 for kv in matched:
                     engine.part_locations[
                         (key, _pt.part_suffix(kv))] = \

@@ -25,12 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 import os
 import re
 
-from incubator_impala_spark import dialect, sqlscan, stats
+from incubator_impala_spark import dialect, options, sqlscan, stats
 from incubator_impala_spark.grants import GrantRegistry
 from incubator_impala_spark.functions.registry import (
     MACROS,
     MACROS_SCALE,
-    QUERY_OPTION_MAP,
     register_all,
 )
 from incubator_impala_spark.session import configure_session, rows_df
@@ -40,38 +39,6 @@ _SET_STMT = re.compile(
     r"^\s*SET\s+([A-Za-z_][\w.]*)\s*=\s*(.+?)\s*;?\s*$", re.IGNORECASE
 )
 _SET_ALL_STMT = re.compile(r"^\s*SET\s+ALL\s*;?\s*$", re.IGNORECASE)
-
-# SET ALL display registry — (name, default display, level), the
-# subset of be/src/service/query-options.h the workloads assert
-# (set.test VERIFY_IS_SUBSET). Values shown are Impala's defaults;
-# a session SET overrides the display.
-OPTION_DISPLAY_DEFAULTS = [
-    ("ABORT_ON_ERROR", "1", "REGULAR"),
-    ("BATCH_SIZE", "0", "DEVELOPMENT"),
-    ("BUFFER_POOL_LIMIT", "", "ADVANCED"),
-    ("DEBUG_ACTION", "", "DEVELOPMENT"),
-    ("DISABLE_CODEGEN", "0", "REGULAR"),
-    ("DISABLE_OUTERMOST_TOPN", "0", "DEVELOPMENT"),
-    ("EXPLAIN_LEVEL", "STANDARD", "REGULAR"),
-    ("HBASE_CACHE_BLOCKS", "0", "ADVANCED"),
-    ("HBASE_CACHING", "0", "ADVANCED"),
-    ("MAX_ERRORS", "100", "ADVANCED"),
-    ("MAX_SCAN_RANGE_LENGTH", "0", "DEVELOPMENT"),
-    ("MEM_LIMIT", "0", "REGULAR"),
-    ("NUM_NODES", "0", "DEVELOPMENT"),
-    ("NUM_SCANNER_THREADS", "0", "REGULAR"),
-    ("COMPRESSION_CODEC", "", "REGULAR"),
-    ("PARQUET_FILE_SIZE", "0", "ADVANCED"),
-    ("REQUEST_POOL", "", "REGULAR"),
-    ("SYNC_DDL", "0", "REGULAR"),
-    ("DEFAULT_FILE_FORMAT", "TEXT", "REGULAR"),
-    ("DISABLE_HDFS_NUM_ROWS_ESTIMATE", "0", "REGULAR"),
-    ("RUNTIME_FILTER_MODE", "GLOBAL", "REGULAR"),
-    ("PARQUET_FALLBACK_SCHEMA_RESOLUTION", "POSITION", "ADVANCED"),
-    ("TIMEZONE", "", "REGULAR"),
-]
-_EXPLAIN_LEVEL_NAMES = {0: "MINIMAL", 1: "STANDARD", 2: "EXTENDED",
-                        3: "VERBOSE"}
 
 # LOAD DATA INPATH 'p' [OVERWRITE] INTO TABLE t [PARTITION (k=v, ...)]
 # (reference fe/.../analysis/LoadDataStmt.java; grammar
@@ -229,15 +196,12 @@ class Engine:
         # GRANT/REVOKE/role veneer (no auth service in env; see
         # grants.py — accept-and-record, SHOW answers from the record)
         self.grants = GrantRegistry()
-        # NOW_STRING query option (the reference test harness's fake
-        # clock — used by FORMAT-cast century inference); None = wall
-        # clock
-        self.now = None
-        # query timezone + unixtime-conversion localization (reference
-        # `timezone` / `use_local_tz_for_unix_timestamp_conversions`
-        # query options; dialect.rewrite_local_tz)
-        self.tz = "UTC"
-        self.use_local_tz = False
+        # query options (options.py): each row's default, parsed
+        for opt in options.OPTIONS.values():
+            if opt.attr:
+                setattr(self, opt.attr, opt.parse(opt.default))
+        # raw display values of session-SET options (SET ALL listing)
+        self.option_display: dict[str, str] = {}
         from incubator_impala_spark.namespaces import Namespaces
 
         # db-scoped DDL surface (CREATE DATABASE / VIEW / SHOW TABLES
@@ -249,53 +213,18 @@ class Engine:
         self.sort_props: dict[str, tuple[list, str]] = {}
         # table and column stats, one record per table (stats.py)
         self.table_stats: dict[str, stats.TableStats] = {}
-        # EXPLAIN_LEVEL query option (0=minimal .. 3=verbose; the
-        # reference's default is STANDARD — TExplainLevel)
-        self.explain_level = 1
-        # PARQUET_TIMESTAMP_TYPE write option (TParquetTimestampType;
-        # reference hdfs-parquet-table-writer.cc int64 rounding) —
-        # INT64_MILLIS/NANOS change what a CTAS stores
-        self.parquet_ts_type = "INT96_NANOS"
-        # PARQUET_FALLBACK_SCHEMA_RESOLUTION (0=POSITION default,
-        # 1=NAME) + per-table metadata-only ALTER overlays
-        # (schema_resolution.py) — {physical name: {"location","logical"}}
-        self.parquet_resolution = "position"
-        self.alter_in_place = False
+        # per-table metadata-only ALTER overlays (schema_resolution.py)
+        # — {physical name: {"location","logical"}}
         self.schema_overlays: dict[str, dict] = {}
-        # PARQUET_ARRAY_RESOLUTION (array_resolution.py):
+        # PARQUET_ARRAY_RESOLUTION views (array_resolution.py):
         # {view name: {"location", "array_col", "elem_fields"}}
-        self.parquet_array_res = "two_level_then_three_level"
         self.array_overlays: dict[str, dict] = {}
-        # raw display values of session-SET options (SET ALL listing)
-        self.option_display: dict[str, str] = {}
         # partition surface (partitions.py): per-partition fileformat
         # overrides, keyed (stats.key, partition suffix)
         self.part_formats: dict[tuple[str, str], str] = {}
         # per-partition location overrides (ALTER ... PARTITION ...
         # SET LOCATION) — consumed by mixedformat dispatch views
         self.part_locations: dict[tuple[str, str], str] = {}
-        # EXACT_NDV session option (this engine's scale escape hatch,
-        # DIALECT.md): False (default) plans ndv()/COMPUTE STATS NDV
-        # on Spark's JVM HLL++ (approx_count_distinct — zero Python in
-        # the scan); True reproduces the reference's precision-10 HLL
-        # bit-for-bit (functions/hll.py) for the parity/test surface.
-        # CBO only needs the estimate's scale, so the JVM path is the
-        # right default for a 100 TB COMPUTE STATS.
-        self.exact_ndv = False
-        # DECIMAL_V2 (query-options.h, default true): False selects
-        # the legacy V1 CAST semantics — decimal→int truncates
-        # (Spark native) instead of the V2 rounding rewrite. V1's
-        # division/avg RESULT TYPING (smaller scale, last-digit
-        # truncation) is not emulated — documented DIALECT.md
-        # narrowing; the tpcds legacy corpus value-verifies against
-        # a V1-cast-adjusted DuckDB oracle regardless.
-        self.decimal_v2 = True
-        # ABORT_ON_ERROR / STRICT_MODE (query-options.h): scan-error
-        # contract over checked tables (scan_errors.py) — abort raises
-        # the reference-shaped message, continue skips/NULLs bad data
-        self.abort_on_error = False
-        self.strict_mode = False
-        self.compression_codec = None
         # engine-created avro-typed tables (type-mapping surface) and
         # the stale-avro-metadata registry (avro_stale.py)
         self.avro_tables: set[str] = set()
@@ -314,131 +243,27 @@ class Engine:
 
     def set_option(self, name: str, value: str) -> bool:
         """Impala SET <option>=<value> (118 options,
-        be/src/service/query-options.h). Mapped options become Spark
-        confs; Spark conf names pass through; everything else is
-        accepted and ignored (returns False)."""
-        key = name.lower()
-        disp = str(value).strip().strip("'\"")
-        if disp.lower() in ("true", "false"):
-            disp = "1" if disp.lower() == "true" else "0"
-        self.option_display[key.upper()] = disp
-        if key == "timezone":
-            self.tz = value.strip().strip("'\"") or "UTC"
-            # tz-converted scanner views (IMPALA-5050 int64 timestamp
-            # tables) follow the session option — metadata-only
-            # re-registration, no data movement
-            from incubator_impala_spark.sources import functional
-
-            if self.spark.conf.get(
-                    functional._REGISTERED_KEY, None) == "1":
-                functional.register_tz_parquet_tables(
-                    self.spark, self.tz)
-            # tz-converted checked views (scan_errors
-            # register_hive211_tz_check) also follow the session tz
-            for build in getattr(self, "tz_check_views",
-                                 {}).values():
-                build(self.tz)
-            return True
-        if key == "use_local_tz_for_unix_timestamp_conversions":
-            self.use_local_tz = str(value).strip().lower() in (
-                "1", "true")
-            return True
-        if key == "now_string":
-            import datetime as _dt
-
-            self.now = (_dt.datetime.fromisoformat(value.strip())
-                        if value.strip() else None)
-            return True
-        if key == "parquet_timestamp_type":
-            self.parquet_ts_type = str(value).strip().strip("'\"") \
-                .upper()
-            return True
-        if key == "appx_count_distinct":
-            # Impala rewrites COUNT(DISTINCT x) to NDV(x) under this
-            # option (AppxCountDistinctRule); ndv here is the
-            # reference-exact HLL (functions/hll.py)
-            self.appx_count_distinct = str(value).strip() \
-                .strip("'\"").lower() in ("1", "true")
-            return True
-        if key == "compression_codec":
-            # THdfsCompression names are all accepted at SET time
-            # (query-options.cc ParseUtil); the parquet writer
-            # validates its subset at INSERT
-            # (hdfs-parquet-table-writer.cc:1019-1027) — mirrored in
-            # _insert. ZSTD:<level> carries a compression level.
-            self.compression_codec = disp.lower().split(":")[0] or None
-            return True
-        if key in ("abort_on_error", "strict_mode"):
-            setattr(self, key, str(value).strip().strip("'\"")
-                    .lower() in ("1", "true"))
-            return True
-        if key == "exact_ndv":
-            self.exact_ndv = str(value).strip().strip("'\"") \
-                .lower() in ("1", "true")
-            return True
-        if key == "decimal_v2":
-            self.decimal_v2 = str(value).strip().strip("'\"") \
-                .lower() in ("1", "true")
-            return True
-        if key == "alter_schema_in_place":
-            self.alter_in_place = str(value).strip().strip("'\"") \
-                in ("1", "true", "TRUE", "True")
-            return True
-        if key == "debug_action":
-            # the two sink-abort actions the ACID corpus injects
-            # (acid-insert-fail.test); consumed by acid._insert_acid
-            self.debug_action = str(value).strip().strip("'\"") \
-                or None
-            return True
-        if key == "default_transactional_type":
-            # CREATE TABLE defaults to an insert-only ACID table
-            # under this option (query-options.h, CreateTableStmt);
-            # value validation matches ParseUtil (set.test)
-            v = str(value).strip().strip("'\"").lower()
-            if v not in ("none", "0", "insert_only", "1", ""):
-                raise ValueError(
-                    f"Invalid default transactional type: '{v}'. "
-                    "Valid values are NONE(0), INSERT_ONLY(1).")
-            self.default_transactional_type = \
-                "insert_only" if v in ("insert_only", "1") else None
-            return True
-        if key == "parquet_fallback_schema_resolution":
-            v = str(value).strip().strip("'\"").lower()
-            self.parquet_resolution = \
-                "name" if v in ("name", "1") else "position"
-            return True
-        if key == "parquet_array_resolution":
-            v = str(value).strip().strip("'\"").lower()
-            valid = {"three_level": "three_level", "0": "three_level",
-                     "two_level": "two_level", "1": "two_level",
-                     "two_level_then_three_level":
-                         "two_level_then_three_level",
-                     "2": "two_level_then_three_level"}
-            if v not in valid:
-                raise ValueError(
-                    f"Invalid parquet array resolution: '{v}'. Valid "
-                    "values are THREE_LEVEL(0), TWO_LEVEL(1), "
-                    "TWO_LEVEL_THEN_THREE_LEVEL(2).")
-            self.parquet_array_res = valid[v]
-            return True
-        if key == "explain_level":
-            levels = {"minimal": 0, "standard": 1, "extended": 2,
-                      "verbose": 3}
-            v = str(value).strip().strip("'\"").lower()
-            self.explain_level = levels.get(
-                v, int(v) if v.lstrip("-").isdigit() else 1)
-            return True
-        if key in QUERY_OPTION_MAP:
-            mapped = QUERY_OPTION_MAP[key](str(value))
-            if mapped is None:  # option value means "auto"/inapplicable
+        be/src/service/query-options.h). Options in options.OPTIONS
+        set their Engine attribute or Spark conf; Spark conf names
+        pass through; everything else is accepted and ignored
+        (returns False). An invalid value raises ValueError."""
+        text = str(value).strip().strip("'\"")
+        opt = options.OPTIONS.get(name.lower())
+        parsed = opt.parse(text) if opt else None
+        self.option_display[name.upper()] = \
+            {"true": "1", "false": "0"}.get(text.lower(), text)
+        if opt is None:
+            if name.startswith("spark."):
+                self.spark.conf.set(name, str(value))
                 return True
-            conf, v = mapped
-            self.spark.conf.set(conf, v)
-            return True
-        if name.startswith("spark."):
-            self.spark.conf.set(name, str(value))
-            return True
-        return False
+            return False
+        if opt.attr:
+            setattr(self, opt.attr, parsed)
+        elif opt.conf and parsed is not None:
+            self.spark.conf.set(opt.conf, parsed)
+        if opt.on_set:
+            opt.on_set(self)
+        return bool(opt.attr or opt.conf)
 
     def _ctas_ts_rewrite(self, m: "re.Match") -> str | None:
         """PARQUET_TIMESTAMP_TYPE write semantics for CTAS (reference
@@ -506,15 +331,11 @@ class Engine:
                 pass
 
     def _set_all(self) -> DataFrame:
-        rows = []
-        for name, default, level in OPTION_DISPLAY_DEFAULTS:
-            v = self.option_display.get(name, default)
-            if name == "EXPLAIN_LEVEL":
-                v = _EXPLAIN_LEVEL_NAMES.get(self.explain_level,
-                                             "STANDARD")
-            elif name == "PARQUET_FALLBACK_SCHEMA_RESOLUTION":
-                v = self.parquet_resolution.upper()
-            rows.append((name, v, level))
+        rows = [(o.name.upper(),
+                 o.render(getattr(self, o.attr)) if o.render else
+                 self.option_display.get(o.name.upper(), o.display),
+                 o.level)
+                for o in options.OPTIONS.values() if o.level]
         return rows_df(
             self.spark, rows, "option string, value string, level string")
 
@@ -684,7 +505,7 @@ class Engine:
             self.sort_props.pop(dm.group(1).lower(), None)
         if getattr(self, "acid_tables", None) is not None \
                 or "transactional" in sql_text.lower() \
-                or getattr(self, "default_transactional_type", None):
+                or self.default_transactional_type:
             # ACID statement surface (acid.py): transactional CREATEs
             # and every statement touching a registered ACID table
             from incubator_impala_spark import acid
@@ -695,17 +516,15 @@ class Engine:
         handled = self.ns.handle(self, sql_text)
         if handled is not None:
             return handled
-        if getattr(self, "avro_stale", None) is not None:
-            # stale-avro-metadata registry (avro_stale.py): its DDL
-            # runs BEFORE altertable (the registered tables exist
-            # only here, not in the Spark catalog)
-            from incubator_impala_spark import avro_stale
+        # stale-avro-metadata registry (avro_stale.py): its DDL runs
+        # BEFORE altertable (the registered tables exist only there,
+        # not in the Spark catalog)
+        from incubator_impala_spark import altertable, avro_stale
 
-            handled = avro_stale.handle(self, sql_text)
-            if handled is not None:
-                return handled
-            avro_stale.check_query(self, sql_text)
-        from incubator_impala_spark import altertable
+        handled = avro_stale.handle(self, sql_text)
+        if handled is not None:
+            return handled
+        avro_stale.check_query(self, sql_text)
 
         handled = altertable.handle(self, sql_text)
         if handled is not None:
@@ -926,7 +745,7 @@ class Engine:
         # dialect first (plan hints stripped, macros expanded), then
         # collection-path resolution on the cleaned text
         translated = self.translate(sql_text)
-        if getattr(self, "appx_count_distinct", False):
+        if self.appx_count_distinct:
             def _acd(a):
                 m2 = re.match(r"(?is)^\s*distinct\s+(.+)$", a[0]) \
                     if len(a) == 1 else None
@@ -1648,7 +1467,7 @@ class Engine:
         # 1019-1027; insert_parquet_invalid_codec.test pins the bzip2
         # reject); valid codecs flow to the parquet write conf
         pq_codec = None
-        cc = getattr(self, "compression_codec", None)
+        cc = self.compression_codec
         if cc:
             pq_map = {"none": "uncompressed", "default": "snappy",
                       "snappy": "snappy", "gzip": "gzip",

@@ -613,46 +613,6 @@ MACROS_SCALE = dict(
                    else f"approx_count_distinct({a[0]}, 0.02)"),
 )
 
-# ---------------------------------------------------------------------------
-# SET <option>=<value>: the reference exposes 118 query options
-# (be/src/service/query-options.h). The handful with Spark-conf
-# analogues map below; everything else is accepted and ignored, exactly
-# like the reference ignores options inapplicable to a given query.
-# Values pass through except where noted (callable).
-# ---------------------------------------------------------------------------
-QUERY_OPTION_MAP: dict = {
-    # query-options.h:60 — disable_codegen=true → whole-stage codegen off
-    "disable_codegen": lambda v: (
-        "spark.sql.codegen.wholeStage",
-        "false" if v.lower() in ("1", "true") else "true",
-    ),
-    # query-options.h:93 runtime_filter_mode=off disables bloom filters
-    "runtime_filter_mode": lambda v: (
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "false" if v.lower() == "off" else "true",
-    ),
-    # broadcast threshold in bytes (default_join_distribution_mode /
-    # broadcast_bytes_limit family)
-    "broadcast_bytes_limit": lambda v: (
-        "spark.sql.autoBroadcastJoinThreshold", v
-    ),
-    # parquet dictionary/stats pruning toggles map onto filter
-    # pushdown; Impala spells booleans 0/1, Spark wants true/false
-    "parquet_read_statistics": lambda v: (
-        "spark.sql.parquet.filterPushdown",
-        "true" if v.lower() in ("1", "true") else "false",
-    ),
-    # num_scanner_threads / mt_dop ≈ local parallelism → shuffle
-    # partitions. Impala's MT_DOP=0 means "auto" (query-options.h) —
-    # map it (and any non-positive/garbage value) to None = ignore,
-    # never to shuffle.partitions=0 which would break every shuffle.
-    "mt_dop": lambda v: (
-        ("spark.sql.shuffle.partitions", v)
-        if v.strip().lstrip("-").isdigit() and int(v) > 0
-        else None
-    ),
-}
-
 
 def register_all(spark: SparkSession) -> None:
     """Register Python-UDF gap functions on the session.

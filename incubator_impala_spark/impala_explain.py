@@ -565,7 +565,7 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
     pipeline computed stats, like the reference's loaded warehouse)."""
     spark = engine.spark
     flat_of = {disp: flat for disp, flat, _a in relations}
-    disable_est = getattr(engine, "option_display", {}).get(
+    disable_est = engine.option_display.get(
         "DISABLE_HDFS_NUM_ROWS_ESTIMATE") == "1"
 
     def walk(n: _Node) -> None:
@@ -576,14 +576,9 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
         flat = flat_of.get(n.table)
         if flat is None:
             flat = n.table
-            ns = getattr(engine, "ns", None)
-            if ns is not None:
-                try:
-                    db, obj = ns.split(n.table)
-                    if db:
-                        flat = ns.phys(db, obj)
-                except _JVM_ERRS:
-                    pass
+            db, obj = engine.ns.split(n.table)
+            if db:
+                flat = engine.ns.phys(db, obj)
         try:
             t = spark.catalog.getTable(flat)
             if (t.tableType or "").upper() not in (
@@ -1213,11 +1208,9 @@ def render_explain(engine, body_sql: str, level: int) -> list[str]:
     if _name(jplan) == "AdaptiveSparkPlanExec":
         # pre-AQE layout: exchanges present, placement deterministic
         jplan = jplan.initialPlan()
-    ns = getattr(engine, "ns", None)
-    cur_db = getattr(ns, "current", None)
-    cur_objs = frozenset(
-        getattr(ns, "dbs", {}).get(cur_db, {})) if cur_db else \
-        frozenset()
+    cur_db = engine.ns.current
+    cur_objs = frozenset(engine.ns.dbs.get(cur_db, {})) if cur_db \
+        else frozenset()
     cond = _Condenser(engine.spark, body_sql, qe.analyzed(),
                       cur_db=cur_db, cur_objs=cur_objs)
     try:
@@ -1284,7 +1277,7 @@ def render_explain(engine, body_sql: str, level: int) -> list[str]:
     # stored row count that is negative (other than the -1 'unset'
     # marker) or zero while the partition holds data bytes
     corrupt = []
-    cur_db = getattr(getattr(engine, "ns", None), "current", None)
+    cur_db = engine.ns.current
     for disp, flat, _a in cond.relations:
         try:
             rec = stats.get(engine, flat)

@@ -85,8 +85,7 @@ def maybe_activate(engine, phys: str) -> None:
     override diverges from the table base."""
     key = stats.key(engine, phys)
     base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
-    fmts = getattr(engine, "part_formats", {})
-    locs = getattr(engine, "part_locations", {})
+    fmts, locs = engine.part_formats, engine.part_locations
     diverges = any(k == key and v.upper() != base
                    for (k, _), v in fmts.items()) or \
         any(k == key for (k, _) in locs)
@@ -127,9 +126,9 @@ def _effective(engine, phys: str, kv: dict) -> tuple[str, str]:
     """(format, location) for one partition after ALTER overrides."""
     key = stats.key(engine, phys)
     suffix = _parts.part_suffix(kv)
-    loc = getattr(engine, "part_locations", {}).get((key, suffix)) \
+    loc = engine.part_locations.get((key, suffix)) \
         or _parts._part_dir(engine, phys, suffix)
-    fmt = getattr(engine, "part_formats", {}).get((key, suffix))
+    fmt = engine.part_formats.get((key, suffix))
     if not fmt:
         files = _parts._files_in(loc)
         fmt = (_parts._format_of(files) if files
@@ -157,8 +156,7 @@ def build_view(engine, phys: str) -> None:
                   for f in full.schema.fields if f.name in pcols}
     key = stats.key(engine, phys)
     base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
-    fmts = getattr(engine, "part_formats", {})
-    locs = getattr(engine, "part_locations", {})
+    fmts, locs = engine.part_formats, engine.part_locations
     # overridden partitions get a raw per-format read; everything
     # else stays ONE catalog-table leg (its own reader options,
     # partition pruning and stats intact — at 100 TB the override

@@ -1,22 +1,17 @@
-"""Time-window operators shared by batch and streaming plans.
+"""Event-time window operators: tumbling, sliding and session windows.
 
-The reference has NO streaming operators (SURVEY.md §2.10 — the only
-"streaming" term is its partial pre-aggregation node,
-`be/src/exec/streaming-aggregation-node.h:46`); this module is the
-net-new Structured-Streaming capability (SURVEY.md §7 M6). The same
-functions work on a batch DataFrame and a `readStream` DataFrame —
-Structured Streaming's core contract — so the DuckDB-oracled batch
-corpus (`queries/streaming_batch.py`) verifies exactly the plans the
-streaming jobs (`streaming/jobs.py`) run incrementally.
+The reference has no window-over-time operators (SURVEY.md §2.10 — its
+only "streaming" term is the partial pre-aggregation node,
+`be/src/exec/streaming-aggregation-node.h:46`). These are plain
+DataFrame plans over Spark's `window`/`session_window`, verified
+against DuckDB by the event-time corpus (`queries/streaming_batch.py`).
 
 Scale notes:
 - tumbling/sliding aggregation shuffles once on (window, keys) with
-  partial aggregation before the shuffle — the streaming analogue of
-  the reference's pre-agg → final-agg split.
+  partial aggregation before the shuffle — the reference's pre-agg →
+  final-agg split.
 - session windows require a shuffle on the session keys; Spark merges
   adjacent sessions within partitions (no global sort).
-- watermarks bound state: on a real cluster state store size is
-  O(open windows × keys), independent of total history.
 """
 
 from __future__ import annotations
@@ -25,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # value is DOUBLE in the source; aggregate it exactly as DECIMAL(14,2)
-# so batch/stream/oracle sums are identical regardless of add order.
+# so engine and oracle sums are identical regardless of add order.
 _DEC = "decimal(14,2)"
 
 

@@ -110,8 +110,7 @@ def drop_spec(kv: dict) -> str:
 
 
 def _display_location(engine, tbl: str, suffix: str = "") -> str:
-    db = getattr(getattr(engine, "ns", None), "current", None) \
-        or "default"
+    db = engine.ns.current or "default"
     name = tbl.split(".")[-1].lower()
     # the qscratch_ prefix is harness plumbing (a file-created table
     # shadowing a fixture name) — the displayed location carries the
@@ -179,7 +178,7 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         (v is not None, str(v)) for v in kv.values()])
     key = stats.key(engine, tbl)
     rec = stats.get(engine, tbl)
-    fmts = getattr(engine, "part_formats", {})
+    fmts = engine.part_formats
     # stats-extrapolation tables carry an extra EXTRAP #ROWS column
     # (FeFsTable.Utils.getExtrapolatedNumRows: bytes * rows/totalSize)
     extrap_on = False

@@ -1,13 +1,9 @@
-"""Event-time corpus over the `events` table — the batch-verified face
-of the Structured Streaming extension (SURVEY.md §2.10/§7 M6: the
-reference has no streaming at all, so this whole surface is net-new).
+"""Event-time corpus over the `events` table (SURVEY.md §2.10: the
+reference has no event-time windows, so this surface is net-new).
 
-Every windowing plan here is built from `streaming.windows`, which
-works identically on batch and `readStream` DataFrames; the streaming
-jobs in `streaming/jobs.py` run these exact plans incrementally, and
-`tests/test_streaming.py` asserts stream == batch. The DuckDB oracles
-restate the window semantics in plain SQL (epoch-aligned buckets,
-gaps-and-islands sessions, ASOF JOIN).
+Every windowing plan here is built from `operators.windows`. The
+DuckDB oracles restate the window semantics in plain SQL
+(epoch-aligned buckets, gaps-and-islands sessions, ASOF JOIN).
 
 Determinism: sums over `value` go through DECIMAL(14,2) so results
 don't depend on float add order; single trailing double divisions are
@@ -19,9 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from incubator_impala_spark.operators import windows
 from incubator_impala_spark.operators.asof import asof_join
 from incubator_impala_spark.sources.tables import load_table
-from incubator_impala_spark.streaming import windows
 
 QUERIES: dict = {}
 ORACLE_SQL: dict = {}

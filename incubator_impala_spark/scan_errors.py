@@ -652,7 +652,7 @@ def register_hive211_tz_check(engine, name: str, path: str,
     if not hasattr(engine, "tz_check_views"):
         engine.tz_check_views = {}
     engine.tz_check_views[name] = _build
-    _build(getattr(engine, "tz", "UTC"))
+    _build(engine.tz)
     if not hasattr(engine, "scan_checks"):
         engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
@@ -758,7 +758,7 @@ def check_query(engine, sql_text: str) -> None:
     checks = getattr(engine, "scan_checks", None)
     if not checks:
         return
-    abort = getattr(engine, "abort_on_error", False)
+    abort = engine.abort_on_error
     if not abort and not any(c.get("always") for c in checks.values()):
         return
     # match on the neutralized shadow (string literals and comments
@@ -808,7 +808,7 @@ def check_query(engine, sql_text: str) -> None:
                     raise ScanError(msg)
             continue
         if info["kind"] == "text":
-            if not getattr(engine, "strict_mode", False):
+            if not engine.strict_mode:
                 continue
             cols = {c for c in info["names"]
                     if re.search(rf"\b{c.lower()}\b", low)} or None

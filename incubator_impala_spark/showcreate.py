@@ -101,7 +101,7 @@ def meta_key(engine, name: str) -> str:
     name = name.strip().replace("`", "")
     if "." in name:
         return name.lower()
-    cur = getattr(getattr(engine, "ns", None), "current", None)
+    cur = engine.ns.current
     return f"{cur}.{name}".lower() if cur else name.lower()
 
 
@@ -244,18 +244,16 @@ def forget(engine, name: str) -> None:
 def _phys_name(engine, display: str) -> str:
     """Physical (catalog/temp-view) relation behind a display name."""
     name = display.replace("`", "")
-    ns = getattr(engine, "ns", None)
-    if ns is not None:
-        if "." in name:
-            db, obj = name.split(".", 1)
-            info = ns.dbs.get(db.lower(), {}).get(obj.lower()) \
-                if hasattr(ns, "dbs") else None
-            if info:
-                return info.get("phys") or name
-        elif ns.current:
-            info = ns.dbs.get(ns.current, {}).get(name.lower())
-            if info:
-                return info.get("phys") or name
+    ns = engine.ns
+    if "." in name:
+        db, obj = name.split(".", 1)
+        info = ns.dbs.get(db.lower(), {}).get(obj.lower())
+        if info:
+            return info.get("phys") or name
+    elif ns.current:
+        info = ns.dbs.get(ns.current, {}).get(name.lower())
+        if info:
+            return info.get("phys") or name
     # functional fixture qualifiers resolve to the flat views (same
     # convention as the engine's DESCRIBE path)
     return re.sub(r"(?i)^functional(_\w+)?\.", "", name)
@@ -391,7 +389,7 @@ def _render_table(engine, display: str, meta: dict | None) -> str:
     sort_cols, sort_order = meta.get("sort_cols"), \
         meta.get("sort_order")
     if not sort_cols:
-        sp = getattr(engine, "sort_props", {}).get(
+        sp = engine.sort_props.get(
             _phys_name(engine, display).lower())
         if sp:
             sort_cols, sort_order = sp

@@ -47,7 +47,7 @@ from dataclasses import dataclass, field
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
-from incubator_impala_spark import sqlscan, stats
+from incubator_impala_spark import options, sqlscan, stats
 
 # catalog/DDL probe guard: Spark analysis errors + JVM-side failures
 # surfacing through the py4j bridge
@@ -624,53 +624,39 @@ def run_blocks(engine, blocks: list[Block], *,
         # Spark's DPP/bloom runtime filters need no arrival wait
         b.query = b.query.replace("$RUNTIME_FILTER_WAIT_TIME_MS",
                                   "10000")
-    if hasattr(engine, "ns"):
-        engine.ns.current = None     # a prior file's USE must not leak
-    if hasattr(engine, "tz"):
-        engine.tz, engine.use_local_tz = "UTC", False
-    if hasattr(engine, "option_display"):
-        # the reference harness resets explicitly-SET query options
-        # between test files; SET ALL listings assume defaults
-        engine.option_display.clear()
-        engine.parquet_resolution = "position"
-        engine.explain_level = 1
-        engine.parquet_array_res = "two_level_then_three_level"
-        engine.appx_count_distinct = False
-        # the parity harness runs with the reference-exact HLL so
-        # pinned NDV outputs (distinct-estimate, compute-stats,
-        # SHOW COLUMN STATS) match verbatim; the engine default is
-        # the JVM approx_count_distinct scale path (DIALECT.md
-        # EXACT_NDV)
-        engine.exact_ndv = True
-        engine.abort_on_error = False
-        engine.strict_mode = False
-        engine.compression_codec = None
-        # a prior file's stale-avro registry views must not leak into
-        # this file's SHOW TABLES listings (show.test LIKE patterns)
-        for vname in list(getattr(engine, "avro_stale", {})):
-            engine.spark.catalog.dropTempView(vname)
-        if hasattr(engine, "avro_stale"):
-            engine.avro_stale.clear()
-        if getattr(engine, "acid_tables", None):
-            # a prior file's ACID tables must not leak (registry +
-            # temp views + managed dirs); fixtures stay
-            from incubator_impala_spark import acid
+    engine.ns.current = None     # a prior file's USE must not leak
+    # the reference harness resets explicitly-SET query options
+    # between test files; SET ALL listings assume defaults
+    for opt in options.OPTIONS.values():
+        if opt.attr:
+            engine.set_option(opt.name, opt.default)
+    engine.option_display.clear()
+    # the parity harness runs with the reference-exact HLL so pinned
+    # NDV outputs (distinct-estimate, compute-stats, SHOW COLUMN
+    # STATS) match verbatim; the engine default is the JVM
+    # approx_count_distinct scale path (DIALECT.md EXACT_NDV)
+    engine.exact_ndv = True
+    # a prior file's stale-avro registry views must not leak into
+    # this file's SHOW TABLES listings (show.test LIKE patterns)
+    for vname in engine.avro_stale:
+        engine.spark.catalog.dropTempView(vname)
+    engine.avro_stale.clear()
+    if getattr(engine, "acid_tables", None):
+        # a prior file's ACID tables must not leak (registry + temp
+        # views + managed dirs); fixtures stay
+        from incubator_impala_spark import acid
 
-            acid.reset(engine)
-        engine.debug_action = None
-        engine.default_transactional_type = None
-        # array_overlays are installed by the per-file SETUP hook
-        # (which runs BEFORE run_blocks), so they are not cleared
-        # here; each hook replaces its own entries
-    if hasattr(engine, "alter_in_place"):
-        # per-file opt-in (presets); must not leak across files
-        engine.alter_in_place = False
-        for tbl in list(getattr(engine, "schema_overlays", {})):
-            try:
-                engine.spark.catalog.dropTempView(tbl)
-            except _SPARK_ERR:  # overlay view already gone
-                pass
-            del engine.schema_overlays[tbl]
+        acid.reset(engine)
+    # array_overlays are installed by the per-file SETUP hook (which
+    # runs BEFORE run_blocks), so they are not cleared here; each hook
+    # replaces its own entries. Metadata-only ALTER overlays are
+    # per-file (alter_schema_in_place is reset above).
+    for tbl in engine.schema_overlays:
+        try:
+            engine.spark.catalog.dropTempView(tbl)
+        except _SPARK_ERR:  # overlay view already gone
+            pass
+    engine.schema_overlays.clear()
     stats.forget_covers(engine)   # incremental-stats state per file
     for p in presets or []:
         # file-level startup flags (the reference runs some files with
@@ -698,8 +684,7 @@ def run_blocks(engine, blocks: list[Block], *,
                 engine.sql(f"create database {name}")
         except _SPARK_ERR:  # pre-existing from an earlier file
             pass
-    if database and hasattr(engine, "ns") \
-            and database in engine.ns.dbs:
+    if database and database in engine.ns.dbs:
         # the runner connects with the unique db as the session
         # database (impala-shell -d): unqualified DDL targets it
         engine.ns.current = database
@@ -931,8 +916,7 @@ def _preclear_create(engine, s: str) -> None:
         # self-LIKE (template-target recreation): dropping first would
         # destroy the clone source; the engine truncates instead
         return
-    if hasattr(engine, "ns"):
-        name = engine.ns.resolve(name)
+    name = engine.ns.resolve(name)
     try:
         engine.spark.sql(f"DROP TABLE IF EXISTS {name}")
     except _SPARK_ERR:  # e.g. a temp view shadows the name
@@ -998,27 +982,6 @@ def _query_vars(text: str) -> bool:
     return _VAR.search(stripped) is not None
 
 
-# engine attrs behind each SET-able option (engine.set_option) — what
-# the per-block restore must put back
-_OPT_ATTRS = {
-    "timezone": ["tz"],
-    "use_local_tz_for_unix_timestamp_conversions": ["use_local_tz"],
-    "now_string": ["now"],
-    "parquet_timestamp_type": ["parquet_ts_type"],
-    "appx_count_distinct": ["appx_count_distinct"],
-    "alter_schema_in_place": ["alter_in_place"],
-    "parquet_fallback_schema_resolution": ["parquet_resolution"],
-    "parquet_array_resolution": ["parquet_array_res"],
-    "explain_level": ["explain_level"],
-    "exact_ndv": ["exact_ndv"],
-    "decimal_v2": ["decimal_v2"],
-    "abort_on_error": ["abort_on_error"],
-    "strict_mode": ["strict_mode"],
-    "compression_codec": ["compression_codec"],
-    "debug_action": ["debug_action"],
-    "default_transactional_type": ["default_transactional_type"],
-}
-
 _SET_NAME = re.compile(r"(?i)^\s*set\s+([A-Za-z_][\w.]*)\s*=")
 
 
@@ -1036,31 +999,15 @@ def _option_snapshot(engine, names: list) -> dict | None:
     reference's restore-to-defaults."""
     if not names:
         return None
-    from incubator_impala_spark.functions.registry import (
-        QUERY_OPTION_MAP,
-    )
-
-    snap: dict = {"attrs": {}, "confs": {}, "display": {}, "tz": None}
+    snap: dict = {"attrs": {}, "confs": {}, "display": {}}
     for raw in names:
-        n = raw.lower()
         snap["display"].setdefault(
-            n.upper(),
-            getattr(engine, "option_display", {}).get(n.upper()))
-        if n == "timezone":
-            # restored via set_option: changing tz re-registers the
-            # tz-converted scanner views (a side effect raw attr
-            # assignment would miss)
-            snap["tz"] = getattr(engine, "tz", "UTC")
-            continue
-        for a in _OPT_ATTRS.get(n, []):
-            if hasattr(engine, a):
-                snap["attrs"].setdefault(a, getattr(engine, a))
-        conf = None
-        if n in QUERY_OPTION_MAP:
-            mapped = QUERY_OPTION_MAP[n]("1")
-            conf = mapped[0] if mapped else None
-        elif raw.startswith("spark."):
-            conf = raw
+            raw.upper(), engine.option_display.get(raw.upper()))
+        opt = options.OPTIONS.get(raw.lower())
+        if opt and opt.attr:
+            snap["attrs"].setdefault(opt, getattr(engine, opt.attr))
+        conf = opt.conf if opt else (
+            raw if raw.startswith("spark.") else None)
         if conf and conf not in snap["confs"]:
             snap["confs"][conf] = engine.spark.conf.get(conf, None)
     return snap
@@ -1069,8 +1016,10 @@ def _option_snapshot(engine, names: list) -> dict | None:
 def _option_restore(engine, snap: dict | None) -> None:
     if not snap:
         return
-    for a, v in snap["attrs"].items():
-        setattr(engine, a, v)
+    for opt, v in snap["attrs"].items():
+        setattr(engine, opt.attr, v)
+        if opt.on_set:
+            opt.on_set(engine)
     for conf, v in snap["confs"].items():
         try:
             if v is None:
@@ -1079,18 +1028,11 @@ def _option_restore(engine, snap: dict | None) -> None:
                 engine.spark.conf.set(conf, v)
         except _SPARK_ERR:  # non-runtime-settable conf
             pass
-    if snap["tz"] is not None and hasattr(engine, "set_option"):
-        try:
-            engine.set_option("timezone", snap["tz"])
-        except (*_SPARK_ERR, ValueError, OSError):
-            engine.tz = snap["tz"]
-    od = getattr(engine, "option_display", None)
-    if od is not None:
-        for k, v in snap["display"].items():
-            if v is None:
-                od.pop(k, None)
-            else:
-                od[k] = v
+    for k, v in snap["display"].items():
+        if v is None:
+            engine.option_display.pop(k, None)
+        else:
+            engine.option_display[k] = v
 
 
 def _run_catch(engine, b: Block, rewrite, table_rewrites) \
@@ -1253,8 +1195,7 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
     # a block's SET NOW_STRING must not leak into later blocks (the
     # reference harness re-sets it per block; expected values of other
     # blocks assume the real clock is irrelevant)
-    if hasattr(engine, "now"):
-        engine.now = None
+    engine.now = None
     sql_stmts = [_rewrite_stmt(s, rewrite, table_rewrites)
                  for s in stmts]
     if re.search(r"\b(?!tpch_ref_|tpcds_ref_|tpch_(?:nested|masked)_"

@@ -8,8 +8,11 @@ the Engine SET option surface (query-options.h mapping)."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
+from incubator_impala_spark import options
 from tests.conftest import SF_SMALL
 
 
@@ -101,6 +104,117 @@ def test_set_statement_through_sql(engine):
         == "false"
     )
     engine.sql("SET runtime_filter_mode=GLOBAL")
+
+
+# one case per row of options.OPTIONS: (SET value, the attribute or
+# Spark conf value it sets — None for a display-only option, the SET
+# ALL value — None when SET ALL does not list the option)
+_OPTION_CASES = {
+    "abort_on_error": ("true", True, "1"),
+    "batch_size": ("1024", None, "1024"),
+    "buffer_pool_limit": ("10m", None, "10m"),
+    "debug_action": ("x", "x", "x"),
+    "disable_codegen": ("1", "false", "1"),
+    "disable_outermost_topn": ("1", None, "1"),
+    "explain_level": ("verbose", 3, "VERBOSE"),
+    "hbase_cache_blocks": ("true", None, "1"),
+    "hbase_caching": ("10", None, "10"),
+    "max_errors": ("5", None, "5"),
+    "max_scan_range_length": ("1m", None, "1m"),
+    "mem_limit": ("2g", None, "2g"),
+    "num_nodes": ("1", None, "1"),
+    "num_scanner_threads": ("2", None, "2"),
+    "compression_codec": ("ZSTD:3", "zstd", "ZSTD:3"),
+    "parquet_file_size": ("128m", None, "128m"),
+    "request_pool": ("pool_a", None, "pool_a"),
+    "sync_ddl": ("1", None, "1"),
+    "default_file_format": ("parquet", None, "parquet"),
+    "disable_hdfs_num_rows_estimate": ("true", None, "1"),
+    "runtime_filter_mode": ("OFF", "false", "OFF"),
+    "parquet_fallback_schema_resolution": ("1", "name", "NAME"),
+    "timezone": ("America/Los_Angeles", "America/Los_Angeles",
+                 "America/Los_Angeles"),
+    "use_local_tz_for_unix_timestamp_conversions": ("1", True, None),
+    "now_string": ("2011-01-01 09:00:00",
+                   datetime.datetime(2011, 1, 1, 9), None),
+    "parquet_timestamp_type": ("int64_millis", "INT64_MILLIS", None),
+    "appx_count_distinct": ("true", True, None),
+    "exact_ndv": ("0", False, None),
+    "decimal_v2": ("false", False, None),
+    "strict_mode": ("true", True, None),
+    "alter_schema_in_place": ("true", True, None),
+    "default_transactional_type": ("INSERT_ONLY", "insert_only", None),
+    "parquet_array_resolution": ("1", "two_level", None),
+    "broadcast_bytes_limit": ("1000", "1000", None),
+    "parquet_read_statistics": ("0", "false", None),
+    "mt_dop": ("3", "3", None),
+}
+
+
+def _option_value(engine, opt):
+    if opt.attr:
+        return getattr(engine, opt.attr)
+    return engine.spark.conf.get(opt.conf, None) if opt.conf else None
+
+
+@pytest.mark.parametrize("name", list(options.OPTIONS))
+def test_query_option_set_show_restore(engine, name):
+    """SET sets the row's attribute or conf, SET ALL shows the value,
+    and run_blocks' per-block restore undoes a block's SET."""
+    from incubator_impala_spark.testing.querytest import Block, run_blocks
+
+    opt = options.OPTIONS[name]
+    value, want, shown = _OPTION_CASES[name]
+    prev_ndv = engine.exact_ndv
+    prev_conf = engine.spark.conf.get(opt.conf, None) if opt.conf else None
+    try:
+        # run_blocks skips a block that turns DECIMAL_V2 off (V1 result
+        # typing is out of scope), so that file starts with it off and
+        # the block turns it on
+        presets, block_value = [], value
+        if name == "decimal_v2":
+            presets, block_value = ["SET DECIMAL_V2=false"], "true"
+        run_blocks(engine, [], presets=presets)   # the per-file reset
+        before = _option_value(engine, opt)
+        block = Block(index=0, query=f"SET {name.upper()}={block_value};\n"
+                      "select 1 as x", results=["1"], types=["TINYINT"],
+                      labels=None, verifier=None, has_catch=False,
+                      sections={})
+        assert [r.status for r in
+                run_blocks(engine, [block], presets=presets)] == ["pass"]
+        assert _option_value(engine, opt) == before
+        assert engine.option_display.get(name.upper()) == \
+            ("0" if presets else None)
+        assert engine.set_option(name.upper(), value) is \
+            bool(opt.attr or opt.conf)
+        assert _option_value(engine, opt) == want
+        rows = {r.option: r.value
+                for r in engine.sql("SET ALL").collect()}
+        assert rows.get(name.upper()) == shown
+    finally:
+        run_blocks(engine, [])
+        engine.exact_ndv = prev_ndv
+        if opt.conf and prev_conf is None:
+            engine.spark.conf.unset(opt.conf)
+        elif opt.conf:
+            engine.spark.conf.set(opt.conf, prev_conf)
+
+
+@pytest.mark.parametrize("name,msg", [
+    ("default_transactional_type",
+     "Invalid default transactional type: 'bogus'. "
+     "Valid values are NONE(0), INSERT_ONLY(1)."),
+    ("parquet_array_resolution",
+     "Invalid parquet array resolution: 'bogus'. Valid values are "
+     "THREE_LEVEL(0), TWO_LEVEL(1), TWO_LEVEL_THEN_THREE_LEVEL(2)."),
+])
+def test_query_option_rejects_invalid_value(engine, name, msg):
+    attr = options.OPTIONS[name].attr
+    before = getattr(engine, attr)
+    with pytest.raises(ValueError) as e:
+        engine.set_option(name, "BOGUS")
+    assert str(e.value) == msg
+    assert getattr(engine, attr) == before
 
 
 # ---------------------------------------------------------------------------

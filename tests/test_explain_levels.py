@@ -114,3 +114,12 @@ def test_level2_ledger_deterministic_values(lines, engine):
     from incubator_impala_spark.impala_explain import _fmt_card
 
     assert m.group(2) == _fmt_card(n), (m.group(2), n)
+
+
+def test_engine_explain_surface(engine):
+    """EXPLAIN <stmt> (sql-parser.cup:765-775) → formatted plan text
+    with the physical operators visible."""
+    txt = engine.explain(
+        "SELECT count(*) FROM lineitem WHERE l_quantity < 10"
+    )
+    assert "HashAggregate" in txt and "Scan parquet" in txt.replace("FileScan", "Scan parquet")

@@ -194,3 +194,29 @@ print("RCFILE_OK")
         timeout=300, cwd="/tmp",
     )
     assert "RCFILE_OK" in res.stdout, res.stderr[-2000:]
+
+
+def test_nanos_preserved_beyond_oracle(spark):
+    """When the events file carries TIMESTAMP(NANOS), the loader keeps
+    the raw sub-µs digits in ts_ns while DuckDB (and Spark's timestamp
+    types) truncate to µs — assert the nanos actually survive. Driver
+    data may instead ship µs-native timestamps; then ts_ns is derived
+    (x1000) and the sub-µs assertion is vacuous, but the ts/ts_ns
+    consistency contract must hold for both layouts."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from incubator_impala_spark.sources.tables import load_table
+
+    ev = load_table(spark, SF_SMALL, "events")
+    unit = pq.ParquetFile(f"{SF_SMALL}/events.parquet").schema_arrow.field(
+        "ts"
+    ).type.unit
+    if unit == "ns":
+        with_subus = ev.where((F.col("ts_ns") % 1000) != 0).count()
+        assert with_subus > 0
+    # and ts is exactly ts_ns truncated to µs under either layout
+    bad = ev.where(
+        F.unix_micros(F.col("ts").cast("timestamp")) != F.expr("ts_ns div 1000")
+    ).count()
+    assert bad == 0

@@ -1280,7 +1280,7 @@ def _setup_mt_dop(engine, db):
     """The mt_dop table: an alltypes clone (24 partitions, 11 data
     columns) computed under MT_DOP>0 — the multithreaded-scan path is
     Spark's native local parallelism (mt_dop maps to
-    shuffle.partitions, registry.QUERY_OPTION_MAP)."""
+    shuffle.partitions, options.OPTIONS)."""
     import shutil
 
     spark = engine.spark

@@ -2,9 +2,14 @@
 (SURVEY.md hard part #3): non-decimal division is DOUBLE and
 divide-by-zero yields NULL (not an error) outside ANSI mode;
 `DIV` is integer division; NULL ordering defaults are shimmed;
-null-safe equality (<=>) matches IS NOT DISTINCT FROM."""
+null-safe equality (<=>) matches IS NOT DISTINCT FROM; a scalar
+subquery that returns more than one row raises."""
 
 from __future__ import annotations
+
+import pytest
+
+from tests.conftest import SF_SMALL
 
 
 def _one(spark, expr: str):
@@ -64,3 +69,17 @@ def test_in_with_null_semantics(spark):
     # 1 IN (2, NULL) is NULL (UNKNOWN), which filters out
     assert _one(spark, "1 IN (2, NULL)") is None
     assert _one(spark, "2 IN (2, NULL)") is True
+
+
+def test_scalar_subquery_cardinality_check(spark):
+    """Uncorrelated scalar subquery returning >1 row must raise — the
+    reference guards this with CardinalityCheckNode
+    (be/src/exec/cardinality-check-node.h:33-40); Spark enforces the
+    same contract at runtime."""
+    from incubator_impala_spark.sources.tables import load_table
+
+    load_table(spark, SF_SMALL, "region").createOrReplaceTempView("region_cc")
+    with pytest.raises(Exception, match="(?i)more than one row|MULTI_VALUE"):
+        spark.sql(
+            "SELECT (SELECT r_name FROM region_cc) AS x"
+        ).collect()

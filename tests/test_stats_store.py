@@ -8,7 +8,7 @@ STATS:
   database, and `t`, `default.t` and `` `t` `` name one table;
 - an insert-only ACID table's COMPUTE STATS gives the values the same
   rows give in a plain parquet table (string Avg Size is the average,
-  booleans get #Trues and #Falses);
+  booleans get #Trues and #Falses), CHAR/VARCHAR columns included;
 - a partitioned insert-only ACID table's key columns get the values a
   plain table's get, from the partition list;
 - incremental stats follow a rename, and die with a dropped table;
@@ -17,6 +17,8 @@ STATS:
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 import pytest
 
@@ -83,22 +85,50 @@ def test_default_db_spellings_share_one_record(eng):
 
 
 def test_acid_compute_stats_matches_plain_table(eng):
-    rows = "(1, 'a', true), (2, 'abcdef', false), (3, 'abc', true), " \
-           "(4, 'ab', NULL)"
-    cols = "(x INT, s STRING, b BOOLEAN) STORED AS PARQUET"
+    # unaliased decimal literals name their source columns `1.50` and
+    # `0.5`: the insert takes source columns by position
+    rows = "(1, 'a', true, 1.50), (2, 'abcdef', false, NULL), " \
+           "(3, 'abc', true, NULL), (4, 'ab', NULL, NULL)"
+    cols = "(x INT, s STRING, b BOOLEAN, d DECIMAL(5,2)) STORED AS PARQUET"
     _recreate(eng, "sst_acid", f"{cols} {_ACID}")
     _recreate(eng, "sst_flat", cols)
     for tbl in ("sst_acid", "sst_flat"):
         eng.sql(f"INSERT INTO {tbl} VALUES {rows}")
+        eng.sql(f"INSERT INTO {tbl} SELECT 5, 'abc', NULL, 0.5")
         eng.sql(f"COMPUTE STATS {tbl}")
+    assert sorted(r.d for r in eng.sql("SELECT d FROM sst_acid").collect()
+                  if r.d is not None) == [Decimal("0.50"), Decimal("1.50")]
     acid, flat = _col_stats(eng, "sst_acid"), _col_stats(eng, "sst_flat")
     assert acid["s"]["Avg Size"] == 3.0
     assert acid["s"]["Max Size"] == 6
     assert (acid["b"]["#Trues"], acid["b"]["#Falses"]) == (2, 1)
-    assert (acid["b"]["#Distinct Values"], acid["b"]["#Nulls"]) == (2, 1)
+    assert (acid["b"]["#Distinct Values"], acid["b"]["#Nulls"]) == (2, 2)
+    assert (acid["d"]["#Distinct Values"], acid["d"]["#Nulls"]) == (2, 3)
     assert acid == flat
-    assert eng.sql("SHOW TABLE STATS sst_acid").collect()[0]["#Rows"] == 4
+    assert eng.sql("SHOW TABLE STATS sst_acid").collect()[0]["#Rows"] == 5
     for tbl in ("sst_acid", "sst_flat"):
+        eng.sql(f"DROP TABLE {tbl}")
+
+
+def test_acid_char_varchar_columns_read_and_compute_stats(eng):
+    # Spark's file readers take no CHAR(n)/VARCHAR(n) schema: the ACID
+    # view reads those columns as strings, with the plain table's values
+    cols = "(v VARCHAR(10), c CHAR(5)) STORED AS PARQUET"
+    _recreate(eng, "sst_acidv", f"{cols} {_ACID}")
+    _recreate(eng, "sst_flatv", cols)
+    for tbl in ("sst_acidv", "sst_flatv"):
+        eng.sql(f"INSERT INTO {tbl} SELECT CAST('ab' AS VARCHAR(10)), "
+                "CAST('ab' AS CHAR(5))")
+        eng.sql(f"COMPUTE STATS {tbl}")
+    rows = [tuple(r) for r in eng.sql("SELECT * FROM sst_acidv").collect()]
+    assert rows == [("ab", "ab   ")]
+    acid, flat = _col_stats(eng, "sst_acidv"), _col_stats(eng, "sst_flatv")
+    assert (acid["v"]["#Distinct Values"], acid["v"]["Max Size"]) == (1, 2)
+    for col in ("v", "c"):
+        acid[col].pop("Type"), flat[col].pop("Type")
+    assert acid == flat
+    assert eng.sql("SHOW TABLE STATS sst_acidv").collect()[0]["#Rows"] == 1
+    for tbl in ("sst_acidv", "sst_flatv"):
         eng.sql(f"DROP TABLE {tbl}")
 
 
