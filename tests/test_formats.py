@@ -199,7 +199,7 @@ print("RCFILE_OK")
 def test_nanos_preserved_beyond_oracle(spark):
     """When the events file carries TIMESTAMP(NANOS), the loader keeps
     the raw sub-µs digits in ts_ns while DuckDB (and Spark's timestamp
-    types) truncate to µs — assert the nanos actually survive. Driver
+    types) truncate to µs — assert the nanos actually survive. Other
     data may instead ship µs-native timestamps; then ts_ns is derived
     (x1000) and the sub-µs assertion is vacuous, but the ts/ts_ns
     consistency contract must hold for both layouts."""
