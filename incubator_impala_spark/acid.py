@@ -67,6 +67,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import dialect, sqlscan, stats
+from incubator_impala_spark.partitions import parse_suffix, partition_columns
 from incubator_impala_spark.session import rows_df
 
 _SPARK_TYPES = {
@@ -579,11 +580,22 @@ def build_view(engine, t: AcidTable, *, hw: int | None = None,
         if df is not None:
             parts.append(df)
     if not parts:
-        return _empty_df(engine, t,
-                         with_rowid and not t.insert_only)
-    out = parts[0]
-    for d in parts[1:]:
-        out = out.unionByName(d)
+        out = _empty_df(engine, t, with_rowid and not t.insert_only)
+    else:
+        out = parts[0]
+        for d in parts[1:]:
+            out = out.unionByName(d)
+    # CHAR(n)/VARCHAR(n) columns read as STRING (_read_schema); the
+    # view carries the declared type in the field metadata, as a
+    # catalog table's schema does, so the listings show it
+    declared = {n: re.sub(r"\s+", "", ty.lower())
+                for n, ty in t.cols + t.pcols
+                if re.match(r"(?i)(?:var)?char\s*\(", ty)}
+    if declared:
+        out = out.select([
+            F.col(c).alias(c, metadata={
+                "__CHAR_VARCHAR_TYPE_STRING": declared[c]})
+            if c in declared else F.col(c) for c in out.columns])
     return out
 
 
@@ -1339,34 +1351,25 @@ def _show_partitions(engine, t: AcidTable):
 def _compute_stats(engine, t: AcidTable, incremental: bool):
     """COMPUTE [INCREMENTAL] STATS over the visible snapshot: the
     shared one-scan aggregate (stats.compute) over the data columns
-    into the table's stats record, the partition keys' NDV/#Nulls
-    from the partition list (as a plain table shows them), plus the
-    per-partition row cover for the partition listing."""
-    from incubator_impala_spark.partitions import parse_suffix
-
+    into the table's stats record, with each partition leaf's row
+    count, and the partition keys' NDV/#Nulls from the partition list
+    (as a plain table shows them)."""
     refresh_views(engine)
     df = engine.spark.table(t.phys)
     rec = stats.record(engine, t.phys)
     pnames = [p for p, _ in t.pcols]
+    leaves = [s for s, _ in _leaf_dirs(t)]
     rec.rows = stats.compute(engine, t.phys, df,
-                             stats.scalar_columns(df.schema, pnames))
+                             stats.scalar_columns(df.schema, pnames),
+                             pnames, leaves)
     rec.computed = True
     if t.pcols:
-        plist = [parse_suffix(s) for s, _ in _leaf_dirs(t)]
-        keys = stats.key_stats(plist) or dict.fromkeys(pnames, (0, 0))
+        keys = stats.key_stats([parse_suffix(s) for s in leaves]) \
+            or dict.fromkeys(pnames, (0, 0))
         for p, (ndv, nulls) in keys.items():
             rec.cols[p.lower()] = {"ndv": ndv, "nulls": nulls}
-        counts = {tuple(str(r[p]) for p in pnames): r["cnt"]
-                  for r in df.groupBy(*pnames)
-                  .agg(F.count("*").alias("cnt")).collect()}
-        seen = set()
-        for suffix, _leaf in _leaf_dirs(t):
-            kvs = dict(i.split("=", 1) for i in suffix.split("/"))
-            key = tuple(str(kvs.get(p)) for p in pnames)
-            rec.parts[suffix] = counts.get(key, 0)
-            seen.add(suffix)
         if incremental:
-            rec.cover, rec.incremental = set(seen), set(seen)
+            rec.cover, rec.incremental = set(leaves), set(leaves)
     return _summary(
         engine, f"Updated 1 partition(s) and "
                 f"{len(t.cols)} column(s).")
@@ -1629,8 +1632,7 @@ def _promote(engine, raw: str, props: dict):
     spark = engine.spark
     tbl = phys if spark.catalog.tableExists(phys) else raw
     target = spark.table(tbl)
-    pnames = [c.name.lower() for c in spark.catalog.listColumns(tbl)
-              if c.isPartition]
+    pnames = [c.lower() for c in partition_columns(spark, tbl)]
     cols = [(f.name.lower(), f.dataType.simpleString())
             for f in target.schema.fields
             if f.name.lower() not in pnames]

@@ -102,9 +102,10 @@ def _col_def(item: str):
 
 
 def _partition_cols(spark, tbl: str) -> list[str]:
+    from incubator_impala_spark.partitions import partition_columns
+
     try:
-        return [c.name for c in spark.catalog.listColumns(tbl)
-                if c.isPartition]
+        return partition_columns(spark, tbl)
     except _PYSPARK_ERR:  # not a catalog table
         return []
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 import os
 import re
 
-from incubator_impala_spark import dialect, options, sqlscan, stats
+from incubator_impala_spark import dialect, options, partitions, sqlscan, stats
 from incubator_impala_spark.grants import GrantRegistry
 from incubator_impala_spark.functions.registry import (
     MACROS,
@@ -532,8 +532,6 @@ class Engine:
         m = re.match(r"(?is)^\s*SHOW\s+PARTITIONS\s+"
                      r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
         if m:
-            from incubator_impala_spark import partitions
-
             return partitions.show_partitions(self, m.group(1))
         m = re.match(r"(?is)^\s*SHOW\s+COLUMN\s+STATS\s+"
                      r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
@@ -542,8 +540,6 @@ class Engine:
         m = re.match(r"(?is)^\s*SHOW\s+TABLE\s+STATS\s+"
                      r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
         if m:
-            from incubator_impala_spark import partitions
-
             return partitions.show_table_stats(self, m.group(1))
         m = re.match(
             r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
@@ -573,8 +569,6 @@ class Engine:
                      r"(?:\s+PARTITION\s*\((?P<spec>(?:[^()]|"
                      r"\([^()]*\))*)\))?\s*;?\s*$", sql_text)
         if m:
-            from incubator_impala_spark import partitions
-
             return partitions.show_files(self, m.group(1),
                                          m.group("spec"))
         m = _CREATE_SORT.match(sql_text)
@@ -643,8 +637,6 @@ class Engine:
                 # shifts them (DIALECT.md
                 # incremental-colstats-aggregation, closed r8). The
                 # partitions are chosen as COMPUTE chooses them.
-                from incubator_impala_spark import partitions
-
                 try:
                     hit = {partitions.part_suffix(kv) for kv in
                            partitions.match_partitions(self, tbl, spec)}
@@ -655,10 +647,9 @@ class Engine:
                     if dropped:
                         rec.cover -= dropped
                         rec.incremental -= dropped
-                        pcols = [c.name for c in
-                                 self.spark.catalog.listColumns(tbl)
-                                 if c.isPartition]
-                        stats.refresh_incremental(self, tbl, pcols)
+                        stats.refresh_incremental(
+                            self, tbl,
+                            partitions.partition_columns(self.spark, tbl))
                 except (*_SPARK_ANY, KeyError):
                     pass  # table dropped / cover emptied
             return rows_df(
@@ -790,19 +781,16 @@ class Engine:
         and counts are -1 until COMPUTE STATS / SET COLUMN STATS."""
         rec = stats.get(self, tbl)
         try:
-            pcols = [c.name.lower()
-                     for c in self.spark.catalog.listColumns(tbl)
-                     if c.isPartition]
-        except AnalysisException:  # temp view / unknown table
+            pcols = [c.lower() for c in
+                     partitions.partition_columns(self.spark, tbl)]
+        except AnalysisException:  # unknown table
             pcols = []
         pstats: dict[str, tuple] = {}
         if pcols:
             # the reference knows partition-key NDV/nulls WITHOUT
             # compute stats (catalog metadata)
-            from incubator_impala_spark import partitions as _parts
-
             try:
-                plist = _parts.list_partitions(self, tbl)
+                plist = partitions.list_partitions(self, tbl)
             except (*_SPARK_ERR, OSError):
                 plist = []
             if plist:
@@ -911,9 +899,7 @@ class Engine:
         spec = (m.group("part") or "").strip()
         pcols = []
         try:
-            pcols = [c.name
-                     for c in self.spark.catalog.listColumns(tbl)
-                     if c.isPartition]
+            pcols = partitions.partition_columns(self.spark, tbl)
         except _SPARK_ERR:
             pass
         wanted = stats.scalar_columns(self.spark.table(tbl).schema, pcols)
@@ -930,15 +916,32 @@ class Engine:
                     f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
         except _SPARK_ERR:
             pass          # temp-view fixtures: stats are advisory
-        # SHOW COLUMN STATS values: one scan with per-column
-        # aggregates (that IS compute stats' cost model; stats.compute).
-        # A partition-scoped compute does NOT refresh table-level
-        # column stats (the reference fills those only on full
-        # computes).
-        if not spec:
-            try:
-                nrows = stats.compute(self, tbl, self.spark.table(tbl),
-                                      wanted)
+        parts = {r[0] for r in self.spark.sql(
+            f"SHOW PARTITIONS {tbl}").collect()} if pcols else set()
+        hit = {partitions.part_suffix(kv) for kv in
+               partitions.match_partitions(self, tbl, spec)} \
+            if spec and pcols else set()
+        rerun = bool(pcols and m.group("inc")
+                     and stats.get(self, tbl).cover is not None)
+        # extrapolation tables store ONLY the table-level row count
+        # (ComputeStatsStmt: "Updated 1 partition(s)"), never
+        # per-partition counts — SHOW TABLE STATS extrapolates them
+        # from file sizes instead
+        extrap = bool(pcols and not spec and not rerun
+                      and self._extrapolation_enabled(tbl))
+        # SHOW COLUMN STATS values and per-partition #Rows: one scan
+        # with per-column aggregates grouped by (partition) and ()
+        # (stats.compute). A partition-scoped compute counts its
+        # partitions' rows but does NOT refresh table-level column
+        # stats (the reference fills those only on full computes).
+        try:
+            if spec and pcols:
+                stats.compute(self, tbl, self.spark.table(tbl).where(
+                    partitions._translate_pred(spec)), [], pcols, hit)
+            elif not spec:
+                nrows = stats.compute(
+                    self, tbl, self.spark.table(tbl), wanted,
+                    [] if extrap else pcols, parts)
                 rec = stats.record(self, tbl)
                 rec.computed, rec.rows = True, nrows
                 # totalSize at compute time — the extrapolation base
@@ -946,61 +949,33 @@ class Engine:
                 sz = self._table_bytes(tbl)
                 if sz is not None:
                     rec.bytes = sz
-            except _SPARK_ANY:
-                pass  # unloadable table
+        except _SPARK_ANY:
+            pass  # unloadable table
         n_parts = 1
         if pcols:
-            parts: set = set()
-            try:
-                parts = {r[0] for r in self.spark.sql(
-                    f"SHOW PARTITIONS {tbl}").collect()}
-            except AnalysisException:  # unpartitioned table
-                pass
             rec = stats.record(self, tbl)
             if spec:
-                from incubator_impala_spark import partitions
-
-                matched = partitions.match_partitions(self, tbl, spec)
-                hit = {partitions.part_suffix(kv) for kv in matched}
                 n_parts = len(hit)
                 rec.cover = (rec.cover or set()) | hit
+                rec.rows = sum(rec.parts.values())
                 if m.group("inc"):
                     rec.incremental |= hit
-                # per-partition row counts (what the reference's
-                # incremental stats persist): one partition-pruned
-                # aggregate over the matched set
-                try:
-                    stats.count_partitions(
-                        self, tbl, pcols, hit,
-                        partitions._translate_pred(spec))
-                    rec.rows = sum(rec.parts.values())
-                except _SPARK_ANY:  # per-partition scan failed
-                    pass
-                if m.group("inc"):
                     try:
                         stats.refresh_incremental(self, tbl, pcols)
                     except (*_SPARK_ANY, KeyError):
                         pass  # sketch cover incomplete
-            elif m.group("inc") and rec.cover is not None:
+            elif rerun:
                 # incremental re-run: only partitions not yet covered
                 new = parts - rec.cover
                 n_parts = len(new)
                 rec.cover = parts
                 rec.incremental |= new
-                try:
-                    stats.count_partitions(self, tbl, pcols, parts)
-                except _SPARK_ERR:
-                    pass
                 if n_parts == 0:
                     return rows_df(
                         self.spark, [("No partitions selected for "
                                       "incremental stats update.",)],
                         "summary string")
-            elif self._extrapolation_enabled(tbl):
-                # extrapolation tables store ONLY the table-level row
-                # count (ComputeStatsStmt: "Updated 1 partition(s)"),
-                # never per-partition counts — SHOW TABLE STATS
-                # extrapolates them from file sizes instead
+            elif extrap:
                 n_parts = 1
                 rec.cover, rec.incremental = parts, set()
                 rec.parts.clear()
@@ -1010,13 +985,6 @@ class Engine:
                 # incremental compute marks every partition's cover;
                 # a full compute REPLACES incremental stats (flag off)
                 rec.incremental = set(parts) if m.group("inc") else set()
-                # a full compute persists per-partition row counts
-                # too (the reference's table stats carry #ROWS per
-                # partition after COMPUTE STATS — corrupt-stats.test)
-                try:
-                    stats.count_partitions(self, tbl, pcols, parts)
-                except _SPARK_ERR:
-                    pass
         return rows_df(
             self.spark, [(f"Updated {n_parts} partition(s) and "
                           f"{len(wanted)} column(s).",)], "summary string")
@@ -1278,13 +1246,8 @@ class Engine:
             pass
         if not created:
             df = self.spark.table(src)
-            pcols: list[str] = []
-            try:
-                pcols = [c.name
-                         for c in self.spark.catalog.listColumns(src)
-                         if c.isPartition]
-            except AnalysisException:  # temp views carry none
-                pass
+            # temp views carry none
+            pcols = partitions.partition_columns(self.spark, src)
             if not pcols:
                 from incubator_impala_spark.sources.functional import (
                     PARTITIONED_BY,
@@ -1364,8 +1327,7 @@ class Engine:
         tcols = target.columns
         ttypes = dict(zip(tcols, [f.dataType.simpleString()
                                   for f in target.schema.fields]))
-        pcols = [c.name for c in self.spark.catalog.listColumns(tbl)
-                 if c.isPartition]
+        pcols = partitions.partition_columns(self.spark, tbl)
         static: dict[str, str] = {}
         dyn: list[str] = []
         for item in sqlscan.split_top(m.group("part") or ""):
@@ -1412,8 +1374,12 @@ class Engine:
         # the source (also isolates self-inserts from the new data)
         final = final.persist()
         if pcols:
-            counts = (final.groupBy(*pcols).count()
-                      .orderBy(*pcols).collect())
+            # a few rows: sorted on the driver in Spark's ascending
+            # order (NULL first, NaN after every number)
+            counts = sorted(
+                final.groupBy(*pcols).count().collect(),
+                key=lambda r: [(r[c] is not None, r[c] != r[c], r[c])
+                               for c in pcols])
 
             def fmt(v):
                 # NULL and '' partition keys land in Hive's default

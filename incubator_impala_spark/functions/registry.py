@@ -604,8 +604,9 @@ MACROS = {
 # HLL above. The exact table is what the querytest parity harness and
 # distinct-estimate-sensitive paths enable via SET EXACT_NDV=1 — the
 # estimate differs slightly between the two HLLs, never the scale of
-# the answer. rsd 0.023 ≈ the precision-10 HLL's own error bound
-# (1.04/sqrt(1024)), so plans costed from either agree.
+# the answer. rsd 0.023 is Spark's precision 12 (p = ceil(2·log2(
+# 1.106/rsd)), 4096 registers), finer than the reference's precision
+# 10 (COMPUTE STATS uses rsd 0.04, which is p=10).
 MACROS_SCALE = dict(
     MACROS,
     ndv=lambda a: (f"approx_count_distinct({a[0]}, 0.023)"

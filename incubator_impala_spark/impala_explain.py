@@ -57,6 +57,7 @@ from pyspark.errors.exceptions.base import (
 )
 
 from incubator_impala_spark import stats
+from incubator_impala_spark.partitions import partition_columns
 
 # JVM-reflection probes walk py4j objects whose classes vary by plan
 # node — an absent method raises Py4JError/AttributeError, never
@@ -584,8 +585,7 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
             if (t.tableType or "").upper() not in (
                     "MANAGED", "EXTERNAL"):
                 return
-            pcols = [c.name for c in spark.catalog.listColumns(flat)
-                     if c.isPartition]
+            pcols = partition_columns(spark, flat)
         except (_PYSPARK_ERR, *_JVM_ERRS):  # not a catalog table
             return
         rec = stats.get(engine, flat)

@@ -143,8 +143,7 @@ def build_view(engine, phys: str) -> None:
     spark.catalog.dropTempView(phys)
     try:
         full = spark.table(phys)
-        pcols = [c.name for c in spark.catalog.listColumns(phys)
-                 if c.isPartition]
+        pcols = _parts.partition_columns(spark, phys)
     except AnalysisException:  # table dropped out from under us
         getattr(engine, "mixed_tables", {}).pop(phys, None)
         return

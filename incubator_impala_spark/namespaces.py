@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from incubator_impala_spark import dialect, sqlscan, stats
+from incubator_impala_spark import dialect, partitions, sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 __all__ = ["Namespaces"]
@@ -598,8 +598,7 @@ class Namespaces:
                     ignore_errors=True)
             spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
             try:
-                if any(c.isPartition
-                       for c in spark.catalog.listColumns(new)):
+                if partitions.partition_columns(spark, new):
                     # catalog rename loses partition entries; rebuild
                     spark.sql(f"MSCK REPAIR TABLE {new}")
             except Exception:  # noqa: BLE001

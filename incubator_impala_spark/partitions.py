@@ -26,6 +26,7 @@ path feeds straight back into LOAD DATA."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import urllib.parse
@@ -39,6 +40,22 @@ from incubator_impala_spark import sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_columns(spark, tbl: str) -> list[str]:
+    """The table's partition column names in declaration order, read
+    from the session catalog's table metadata: no Spark job (the
+    catalog API's column listing walks a Dataset and runs two). Empty
+    for a temp view; an unknown table raises AnalysisException."""
+    # `db.t` in one pair of backticks names db.t, as SHOW PARTITIONS
+    # spells it
+    name = re.sub(r"^`([^`]*)`$", r"\1", tbl.strip())
+    name = re.sub(r"(?i)^`?spark_catalog`?\.", "", name)
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTempViewOrPermanentTableMetadata(
+        state.sqlParser().parseTableIdentifier(name))
+    return [f["name"] for f in
+            json.loads(meta.partitionSchema().json())["fields"]]
 
 
 def list_partitions(engine, tbl: str) -> list[dict]:
@@ -79,8 +96,8 @@ def match_partitions(engine, tbl: str, spec: str | None) -> list[dict]:
     if not spec or not spec.strip() or not parts:
         return parts
     spark = engine.spark
-    types = {c.name.lower(): c.dataType
-             for c in spark.catalog.listColumns(tbl) if c.isPartition}
+    types = {f.name.lower(): f.dataType.simpleString()
+             for f in spark.table(tbl).schema.fields}
     rows = []
     for i, kv in enumerate(parts):
         assigns = ", ".join(
@@ -171,8 +188,7 @@ def _human(n: int) -> str:
 def show_partitions(engine, tbl: str) -> DataFrame:
     """Impala's SHOW PARTITIONS listing + 'Total' row."""
     spark = engine.spark
-    pcols = [c.name for c in spark.catalog.listColumns(
-        tbl.strip('`')) if c.isPartition]
+    pcols = partition_columns(spark, tbl)
     parts = list_partitions(engine, tbl)
     parts.sort(key=lambda kv: [
         (v is not None, str(v)) for v in kv.values()])
@@ -235,8 +251,7 @@ def show_table_stats(engine, tbl: str) -> DataFrame:
     (identical to SHOW PARTITIONS), one summary row otherwise."""
     spark = engine.spark
     try:
-        pcols = [c.name for c in spark.catalog.listColumns(
-            tbl.strip('`')) if c.isPartition]
+        pcols = partition_columns(spark, tbl)
     except _PYSPARK_ERR:  # not a catalog table
         pcols = []
     if pcols:
@@ -259,8 +274,7 @@ def show_table_stats(engine, tbl: str) -> DataFrame:
 def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
     """SHOW FILES IN t [PARTITION (pred)] — (Path, Size, Partition)."""
     spark = engine.spark
-    pcols = [c.name for c in spark.catalog.listColumns(
-        tbl.strip('`')) if c.isPartition]
+    pcols = partition_columns(spark, tbl)
     rows = []
     if pcols:
         for kv in match_partitions(engine, tbl, spec):

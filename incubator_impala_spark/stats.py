@@ -6,9 +6,9 @@ keeps them in `engine.table_stats`: one `TableStats` record per table,
 keyed by `key()`, the physical table with its database kept. So `t`,
 `default.t` and `` `t` `` share a record, and `a.t` and `b.t` do not.
 
-* `compute()`: the one COMPUTE STATS aggregate and fill, used by
+* `compute()`: the one COMPUTE STATS aggregate and fill (table-level
+  column stats and per-partition row counts in one scan), used by
   full, incremental, partition-scoped and ACID computes;
-* `count_partitions()`: the per-partition row counts;
 * `clear()`: DROP TABLE, TRUNCATE, DROP STATS and the ACID write path;
 * `rename()`: ALTER TABLE ... RENAME;
 * `get()` / `record()`: the lookups of SHOW COLUMN STATS, SHOW TABLE
@@ -106,22 +106,32 @@ def key_stats(parts: list[dict]) -> dict[str, tuple[int, int]]:
             for c in (parts[0] if parts else ())}
 
 
-def agg_df(engine, df: DataFrame, wanted: list, types: dict) -> DataFrame:
+def agg_df(engine, df: DataFrame, wanted: list, types: dict,
+           pcols=()) -> DataFrame:
     """The one-scan COMPUTE STATS aggregate over `df` (unexecuted).
 
-    NDV expression per EXACT_NDV (DIALECT.md): default = Spark's
-    JVM HLL++ (`approx_count_distinct`) so the whole stats scan
-    stays inside whole-stage codegen — zero Python in the plan at
-    any scale; EXACT_NDV=1 = the reference's precision-10 HLL
-    (functions/hll.py, pandas-UDF hash per value) for the
-    pinned-output parity surface (distinct-estimate /
-    compute-stats .test files). CBO only needs the estimate's
-    scale, so the JVM path is the 100 TB default."""
+    Without partition columns it is one row over the whole of `df`.
+    With them it groups by the sets (`pcols`) and (): one row per
+    partition and one grand-total row, told apart by `__gid__` (0 for
+    a partition). Every row carries the same aggregates, so the
+    grand total holds the table-level column stats and each partition
+    row its #Rows — the reference's per-partition and table-level
+    child queries in one scan. An empty `df` yields no grand-total
+    row.
+
+    NDV expression per EXACT_NDV (DIALECT.md): the default is Spark's
+    JVM HLL++ at the reference's precision 10 (`approx_count_distinct`
+    with rsd 0.04: Spark's p = ceil(2·log2(1.106/rsd)) = 10), so the
+    whole stats scan stays inside whole-stage codegen with no Python
+    in the plan; EXACT_NDV=1 is the reference's own precision-10 HLL
+    (functions/hll.py, a pandas-UDF hash per value) for the
+    pinned-output parity surface (distinct-estimate / compute-stats
+    .test files)."""
     ndv_expr = (
         (lambda c: f"impala_hll_est(collect_set("
                    f"hll_slot_typed(`{c}`, typeof(`{c}`))))")
         if engine.exact_ndv else
-        (lambda c: f"approx_count_distinct(`{c}`, 0.023)"))
+        (lambda c: f"approx_count_distinct(`{c}`, 0.04)"))
     aggs = [F.count(F.lit(1)).alias("__nrows__")]
     for c in wanted:
         aggs += [F.expr(ndv_expr(c)).alias(f"ndv_{c}"),
@@ -132,18 +142,38 @@ def agg_df(engine, df: DataFrame, wanted: list, types: dict) -> DataFrame:
         elif types.get(c) == "string":
             aggs += [F.max(F.length(c)).alias(f"max_{c}"),
                      F.avg(F.length(c)).alias(f"avg_{c}")]
-    return df.agg(*aggs)
+    if not pcols:
+        return df.agg(*aggs)
+    return df.groupingSets([list(pcols), []], *pcols).agg(
+        F.grouping_id().alias("__gid__"), *aggs)
 
 
-def compute(engine, name: str, df: DataFrame, wanted: list) -> int:
-    """Run `agg_df` over `df` and fill the stats of the `wanted`
-    columns into the table's record; returns the scanned row count."""
+def compute(engine, name: str, df: DataFrame, wanted: list,
+            pcols=(), listed=()) -> int:
+    """Run `agg_df` over `df`: fill the stats of the `wanted` columns
+    into the table's record and, given partition columns, each
+    partition's row count into `rec.parts` (what the reference
+    persists as each partition's #ROWS; a `listed` partition the scan
+    finds no rows in records 0, not 'unset' — IMPALA-2199). Returns
+    the scanned row count."""
+    from incubator_impala_spark.partitions import part_suffix
+
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    row = agg_df(engine, df, wanted, types).collect()[0]
+    agg = agg_df(engine, df, wanted, types, pcols)
+    rows = agg.collect()
+    rec = record(engine, name)
+    if pcols:
+        rec.parts.update(dict.fromkeys(listed, 0))
+        for r in rows:
+            if not r["__gid__"]:
+                rec.parts[part_suffix({c: r[c] for c in pcols})] = \
+                    r["__nrows__"]
+    # grouping sets emit no grand total over empty input: all zeros
+    row = next((r for r in rows if not pcols or r["__gid__"]), None) \
+        or dict.fromkeys(agg.columns, 0)
     nrows = row["__nrows__"]
-    cols = record(engine, name).cols
     for c in wanted:
-        st = cols.setdefault(c.lower(), {})
+        st = rec.cols.setdefault(c.lower(), {})
         # the reference caps the HLL estimate at the row count
         # (ColumnStats); boolean NDV is the type's domain size
         # regardless of data
@@ -161,24 +191,6 @@ def compute(engine, name: str, df: DataFrame, wanted: list) -> int:
             st["avg"] = -1 if avg is None else \
                 struct.unpack("f", struct.pack("f", float(avg)))[0]
     return nrows
-
-
-def count_partitions(engine, tbl: str, pcols: list, listed,
-                     where: str | None = None) -> None:
-    """Per-partition row counts in one grouped scan (what the
-    reference persists as each partition's #ROWS). A `listed`
-    partition the scan finds no rows in records 0, not 'unset'
-    (IMPALA-2199)."""
-    from incubator_impala_spark.partitions import part_suffix
-
-    parts = record(engine, tbl).parts
-    parts.update(dict.fromkeys(listed, 0))
-    cols = ", ".join(pcols)
-    filt = f"WHERE {where} " if where else ""
-    for r in engine.spark.sql(
-            f"SELECT {cols}, count(*) c FROM {tbl} {filt}GROUP BY {cols}") \
-            .collect():
-        parts[part_suffix({c: r[c] for c in pcols})] = r["c"]
 
 
 def refresh_incremental(engine, tbl: str, pcols: list) -> None:

@@ -72,26 +72,30 @@ def test_appx_count_distinct_respects_exact_ndv(scale_engine):
 
 def test_compute_stats_scan_has_no_python(scale_engine):
     """The default COMPUTE STATS aggregate plans entirely JVM-side
-    (no BatchEvalPython/ArrowEvalPython) — the judge's done-criterion
-    for the round-8 scale path."""
+    (no BatchEvalPython/ArrowEvalPython), ungrouped and grouped by
+    partition keys alike."""
     from incubator_impala_spark import stats
 
     lineitem = scale_engine.spark.table("lineitem")
     types = {f.name: f.dataType.simpleString()
              for f in lineitem.schema.fields}
-    wanted = [f.name for f in lineitem.schema.fields]
-    df = stats.agg_df(scale_engine, lineitem, wanted, types)
-    plan = _executed_plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "Python" not in plan, plan
-    # exact mode: same helper switches to the reference HLL
-    scale_engine.exact_ndv = True
-    try:
-        df2 = stats.agg_df(scale_engine, lineitem, ["l_suppkey"], types)
-        assert "Python" in _executed_plan(df2)
-    finally:
-        scale_engine.exact_ndv = False
+    for pcols in ((), ["l_returnflag", "l_linestatus"]):
+        wanted = [f.name for f in lineitem.schema.fields
+                  if f.name not in pcols]
+        df = stats.agg_df(scale_engine, lineitem, wanted, types, pcols)
+        plan = _executed_plan(df)
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
+        assert "Python" not in plan, plan
+        assert ("Expand" in plan) == bool(pcols), plan
+        # exact mode: same helper switches to the reference HLL
+        scale_engine.exact_ndv = True
+        try:
+            df2 = stats.agg_df(scale_engine, lineitem, ["l_suppkey"],
+                               types, pcols)
+            assert "Python" in _executed_plan(df2)
+        finally:
+            scale_engine.exact_ndv = False
 
 
 def test_compute_stats_fills_col_stats_in_scale_mode(scale_engine):
