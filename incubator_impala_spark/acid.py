@@ -117,16 +117,10 @@ class AcidTable:
 # registry plumbing
 # ---------------------------------------------------------------------
 
-def registry(engine) -> dict:
-    if not hasattr(engine, "acid_tables"):
-        engine.acid_tables = {}
-    return engine.acid_tables
-
-
 def lookup(engine, name: str) -> AcidTable | None:
     """Resolve a (possibly qualified / unresolved) spelling to a
     registered ACID table."""
-    reg = registry(engine)
+    reg = engine.acid_tables
     n = name.strip().strip("`").lower()
     if n in reg:
         return reg[n]
@@ -602,7 +596,7 @@ def build_view(engine, t: AcidTable, *, hw: int | None = None,
 def refresh_views(engine, force: bool = False) -> None:
     """Re-register temp views for dirty ACID tables (pre-statement
     hook, like mixedformat.refresh_views)."""
-    for t in registry(engine).values():
+    for t in engine.acid_tables.values():
         if not (t.dirty or force):
             continue
         try:
@@ -923,21 +917,15 @@ def _register(engine, display: str, phys: str, db: str | None,
                   cols=cols, pcols=pcols, insert_only=insert_only,
                   fmt=fmt)
     t.fixture = fixture
-    registry(engine)[phys] = t
+    engine.acid_tables[phys] = t
     ns = engine.ns
     if db and db in ns.dbs:
         ns.register(db, phys.split("__")[-1]
                     if "__" in phys else display.split(".")[-1].lower(),
                     "table", phys)
     if not t.insert_only:
-        shadows(engine)[phys] = _shadow_name(t.phys)
+        engine.acid_shadows[phys] = _shadow_name(t.phys)
     return t
-
-
-def shadows(engine) -> dict:
-    if not hasattr(engine, "acid_shadows"):
-        engine.acid_shadows = {}
-    return engine.acid_shadows
 
 
 def _split_name(engine, raw: str) -> tuple:
@@ -958,7 +946,7 @@ def _split_name(engine, raw: str) -> tuple:
 def handle(engine, sql_text: str):
     """Intercept ACID statements on the ns-resolved text; returns a
     summary DataFrame or None to fall through to the generic paths."""
-    reg = registry(engine)
+    reg = engine.acid_tables
     low = sql_text.lower()
     # CREATE (incl. CTAS) that makes a transactional table
     if re.match(r"(?is)^\s*create\s+(?:external\s+)?table\b", low):
@@ -1039,11 +1027,8 @@ def handle(engine, sql_text: str):
 def _clear_stats(engine, t: AcidTable) -> None:
     """Engine-side writes clear Hive's COLUMN_STATS_ACCURATE and the
     engine's own stats registries (clear-statsaccurate contract)."""
-    from incubator_impala_spark import showcreate
-
-    for key in (showcreate.meta_key(engine, t.display),
-                showcreate.meta_key(engine, t.phys)):
-        meta = getattr(engine, "create_meta", {}).get(key)
+    for name in (t.display, t.phys):
+        meta = stats.peek(engine, name).create
         if meta:
             meta.get("tblproperties", {}).pop(
                 "COLUMN_STATS_ACCURATE", None)
@@ -1051,7 +1036,7 @@ def _clear_stats(engine, t: AcidTable) -> None:
 
 
 def _drop(engine, t: AcidTable):
-    reg = registry(engine)
+    reg = engine.acid_tables
     spark = engine.spark
     from pyspark.errors.exceptions.base import PySparkException
 
@@ -1062,15 +1047,11 @@ def _drop(engine, t: AcidTable):
             pass
     shutil.rmtree(t.location, ignore_errors=True)
     reg.pop(t.phys, None)
-    shadows(engine).pop(t.phys, None)
+    engine.acid_shadows.pop(t.phys, None)
     ns = engine.ns
     if t.db and t.db in ns.dbs:
         ns.dbs[t.db].pop(t.phys.split("__")[-1], None)
         ns.dbs[t.db].pop(t.display.split(".")[-1].lower(), None)
-    from incubator_impala_spark import showcreate
-
-    showcreate.forget(engine, t.display)
-    showcreate.forget(engine, t.phys)
     return _summary(engine, "Table has been dropped.")
 
 
@@ -1079,7 +1060,7 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
     if not m:
         return None
     display, phys, db = _split_name(engine, m.group("tbl"))
-    if m.group("ine") and phys in registry(engine):
+    if m.group("ine") and phys in engine.acid_tables:
         return _summary(engine, "Table already exists.")
     fmt = (m.group("fmt") or "").lower()
     fmt = {"textfile": "text", "orc": "orc",
@@ -1221,7 +1202,7 @@ def _with_hive_views(engine, fn):
     """Run `fn` with every ACID table's view rebuilt at the HIVE
     snapshot (Hive reads all committed write ids, not the engine's
     cached list), restoring the engine views afterwards."""
-    reg = registry(engine)
+    reg = engine.acid_tables
     swapped = []
     try:
         for t in reg.values():
@@ -1330,9 +1311,10 @@ def _show_partitions(engine, t: AcidTable):
         size = sum(s for _, s in files)
         tot_files += len(files)
         tot_size += size
-        kvs = dict(i.split("=", 1) for i in suffix.split("/"))
+        kvs = parse_suffix(suffix)
         rows.append(
-            tuple(str(kvs.get(p, "NULL")) for p, _ in t.pcols)
+            tuple("NULL" if kvs.get(p) is None else str(kvs[p])
+                  for p, _ in t.pcols)
             + (rec.parts.get(suffix, -1), len(files),
                _human(size), "NOT CACHED", "NOT CACHED", fmt_disp,
                "true" if suffix in rec.incremental else "false",
@@ -1705,24 +1687,23 @@ def prepare(engine, sql_text: str) -> str:
     data columns here).  Every match runs on the literal/comment-blind
     shadow, and star expansion is scoped to the select list whose
     FROM clause actually references a swapped relation."""
-    if any(t.dirty for t in registry(engine).values()):
+    if any(t.dirty for t in engine.acid_tables.values()):
         refresh_views(engine)
     # backtick identifiers stay visible: `row__id` and a quoted table
     # spelling are references, not literals
     if not _ROWID_REF.search(sqlscan.shadow(sql_text, idents=False)):
         return sql_text
-    shmap = shadows(engine)
+    shmap = engine.acid_shadows
     if not shmap:
         return sql_text
     sql, swapped = sql_text, []
     for phys, shadow in shmap.items():
-        t = registry(engine).get(phys)
+        t = engine.acid_tables.get(phys)
         spellings = [phys]
         if t is not None:
             spellings.append(t.display)
             spellings.append(t.display.split(".")[-1])
-        for q in getattr(engine, "acid_fixture_quals",
-                         {}).get(phys, []):
+        for q in engine.acid_fixture_quals.get(phys, []):
             spellings.append(q)
         hit = False
         for sp in sorted(set(spellings), key=len, reverse=True):
@@ -1736,8 +1717,7 @@ def prepare(engine, sql_text: str) -> str:
         if hit:
             cols = ([c for c, _ in t.cols + t.pcols]
                     if t is not None
-                    else getattr(engine, "acid_fixture_cols",
-                                 {}).get(phys))
+                    else engine.acid_fixture_cols.get(phys))
             swapped.append((shadow, cols))
     if swapped:
         sql = _expand_stars(sql, swapped)
@@ -1763,11 +1743,9 @@ def register_fixture_acid(engine) -> None:
       rowId = ordinal within the file (full-acid-rowid.test values).
     """
     spark = engine.spark
-    reg = registry(engine)
-    quals = engine.acid_fixture_quals = getattr(
-        engine, "acid_fixture_quals", {})
-    fcols = engine.acid_fixture_cols = getattr(
-        engine, "acid_fixture_cols", {})
+    reg = engine.acid_tables
+    quals = engine.acid_fixture_quals
+    fcols = engine.acid_fixture_cols
     if "insert_only_transactional_table" not in reg:
         _register(engine, "functional.insert_only_transactional_table",
                   "insert_only_transactional_table", "functional",
@@ -1851,7 +1829,7 @@ def register_fixture_acid(engine) -> None:
         "CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT), "
         "'currenttransaction', CAST(0 AS BIGINT))", ap_cols)) \
         .createOrReplaceTempView("alltypes_promoted__acidrowid__")
-    shadows(engine)["alltypes_promoted"] = \
+    engine.acid_shadows["alltypes_promoted"] = \
         "alltypes_promoted__acidrowid__"
     quals["alltypes_promoted"] = [
         "functional_orc_def.alltypes_promoted",
@@ -1860,7 +1838,7 @@ def register_fixture_acid(engine) -> None:
     for name in ("alltypestiny", "complextypestbl",
                  "complextypestbl_deleted_rows",
                  "complextypestbl_minor_compacted"):
-        shadows(engine)[name] = f"{name}__acidrowid__"
+        engine.acid_shadows[name] = f"{name}__acidrowid__"
         quals[name] = [f"functional_orc_def.{name}",
                        f"functional.{name}"]
         fcols[name] = [f.name for f in
@@ -1910,7 +1888,7 @@ def register_fixture_acid(engine) -> None:
 def reset(engine, keep_fixtures: bool = True) -> None:
     """Per-test-file cleanup: drop non-fixture ACID tables and their
     views/dirs (the harness's hermetic-rerun contract)."""
-    reg = registry(engine)
+    reg = engine.acid_tables
     for phys in list(reg):
         t = reg[phys]
         if keep_fixtures and getattr(t, "fixture", False):

@@ -110,33 +110,17 @@ def _partition_cols(spark, tbl: str) -> list[str]:
         return []
 
 
-def _orphan_dir(spark, tbl: str) -> str:
-    """Warehouse directory a managed table named `tbl` would occupy —
-    default-db tables live at ``wh/<name>``, others at
-    ``wh/<db>.db/<name>``."""
-    import os
-
-    parts = tbl.split(".")
-    name = parts[-1].lower()
-    db = (parts[-2].lower() if len(parts) > 1
-          else (spark.catalog.currentDatabase() or "default"))
-    wh = re.sub(r"^file:", "", spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"))
-    return (os.path.join(wh, name) if db == "default"
-            else os.path.join(wh, f"{db}.db", name))
-
-
 def _overlay_for(engine, tbl: str):
-    """Existing or newly-eligible schema overlay for metadata-only
-    CHANGE/REPLACE COLUMNS (schema_resolution.py). Eligible: an
+    """The logical schema of the table's existing or newly-eligible
+    overlay for metadata-only CHANGE/REPLACE COLUMNS
+    (schema_resolution.py); None when not eligible. Eligible: an
     unpartitioned managed table whose directory holds parquet files —
     the reference never rewrites data for these ALTERs; the resolution
     mode decides what a scan sees."""
     import glob
     import os
 
-    key = tbl.lower()
-    ov = engine.schema_overlays.get(key)
+    ov = stats.peek(engine, tbl).overlay
     if ov is not None:
         return ov
     # Metadata-only ALTER is opt-in (SET ALTER_SCHEMA_IN_PLACE=1):
@@ -149,20 +133,19 @@ def _overlay_for(engine, tbl: str):
         return None
     if _partition_cols(engine.spark, tbl):
         return None
-    loc = _orphan_dir(engine.spark, tbl)
+    loc = engine._managed_dir(tbl)
     if not os.path.isdir(loc):
         return None
     files = [f for f in glob.glob(os.path.join(loc, "*"))
              if f.endswith((".parquet", ".parq"))]
     if not files:
         return None
-    return {"location": loc, "logical": engine.spark.table(tbl).schema}
+    return engine.spark.table(tbl).schema
 
 
-def _overlay_install(engine, tbl: str, ov: dict, logical) -> None:
-    ov["logical"] = logical
-    engine.schema_overlays[tbl.lower()] = ov
-    engine._refresh_overlays("")
+def _overlay_install(engine, tbl: str, logical) -> None:
+    stats.table(engine, tbl).overlay = logical
+    engine._refresh_overlays()
 
 
 def _parse_type(spark, typ: str):
@@ -186,12 +169,10 @@ def _recreate(engine, tbl: str, exprs: list) -> None:
     df = spark.table(tbl).select(exprs)
     tmp = f"{tbl}__alter_tmp"
     old = f"{tbl}__alter_old"
-    import shutil
-
     for scratch in (tmp, old):
         spark.sql(f"DROP TABLE IF EXISTS {scratch}")
         # orphan warehouse dir from a crashed prior run would collide
-        shutil.rmtree(_orphan_dir(spark, scratch), ignore_errors=True)
+        engine.clear_orphan(scratch)
     writer = df.write.format("parquet")
     # partition columns must survive the projection by name
     keep = [p for p in pcols if p in df.columns]
@@ -228,19 +209,13 @@ def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
     return items
 
 
-def _drop_sort_col(engine, tbl: str, col: str) -> None:
-    sp = engine.sort_props.get(tbl.lower())
-    if sp:
-        engine.sort_props[tbl.lower()] = (
-            [c for c in sp[0] if c.lower() != col.lower()], sp[1])
-
-
-def _rename_sort_col(engine, tbl: str, old: str, new: str) -> None:
-    sp = engine.sort_props.get(tbl.lower())
-    if sp:
-        engine.sort_props[tbl.lower()] = (
-            [new if c.lower() == old.lower() else c for c in sp[0]],
-            sp[1])
+def _map_sort_cols(engine, tbl: str, fn) -> None:
+    """The table's SORT BY columns through `fn`: a column's new name,
+    or None when the column is gone."""
+    rec = stats.peek(engine, tbl)
+    if rec.sort:
+        cols, order = rec.sort
+        rec.sort = ([fn(c) for c in cols if fn(c)], order)
 
 
 def handle(engine, sql_text: str) -> DataFrame | None:
@@ -266,7 +241,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 spark, "No new column(s) have been added to the table.")
         if not new and not ine:
             raise ValueError(f"Column already exists: {defs[0][0]}")
-        if stats.key(engine, tbl) in engine.avro_tables:
+        if stats.peek(engine, tbl).avro:
             # avro tables convert added columns through the Avro type
             # mapping (TINYINT/SMALLINT->INT, TIMESTAMP->STRING) and
             # default the comment to 'from deserializer'
@@ -290,7 +265,8 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         exprs = [F.col(f"`{f.name}`") for f in cols
                  if f.name.lower() != col.lower()]
         _recreate(engine, tbl, exprs)
-        _drop_sort_col(engine, tbl, col)
+        _map_sort_cols(engine, tbl, lambda c: None
+                       if c.lower() == col.lower() else c)
         return _summary(spark, "Column has been dropped.")
 
     cm = _CHANGE_COL.match(rest)
@@ -303,7 +279,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             from pyspark.sql.types import StructField, StructType
 
             fields, found = [], False
-            for f in ov["logical"].fields:
+            for f in ov.fields:
                 if f.name.lower() == old.lower():
                     found = True
                     fields.append(StructField(
@@ -312,8 +288,9 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                     fields.append(f)
             if not found:
                 raise ValueError(f"Column does not exist: {old}")
-            _overlay_install(engine, tbl, ov, StructType(fields))
-            _rename_sort_col(engine, tbl, old, new)
+            _overlay_install(engine, tbl, StructType(fields))
+            _map_sort_cols(engine, tbl, lambda c: new
+                           if c.lower() == old.lower() else c)
             return _summary(spark, "Column has been altered.")
         exprs = []
         found = False
@@ -337,7 +314,8 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         if not found:
             raise ValueError(f"Column does not exist: {old}")
         _recreate(engine, tbl, exprs)
-        _rename_sort_col(engine, tbl, old, new)
+        _map_sort_cols(engine, tbl, lambda c: new
+                       if c.lower() == old.lower() else c)
         return _summary(spark, "Column has been altered.")
 
     scm = _SET_COMMENT.match(rest)
@@ -367,7 +345,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 StructField(n, _parse_type(spark, t), True,
                             {"comment": c} if c is not None else {})
                 for n, t, c in defs])
-            _overlay_install(engine, tbl, ov, logical)
+            _overlay_install(engine, tbl, logical)
             return _summary(spark, "Table columns have been replaced.")
         pcols = _partition_cols(spark, tbl)
         fields = [f for f in spark.table(tbl).schema.fields
@@ -395,10 +373,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         # of the i-th data column, dropped columns fall out
         ren = {fields[i].name.lower(): defs[i][0]
                for i in range(min(len(fields), len(defs)))}
-        sp = engine.sort_props.get(tbl.lower())
-        if sp:
-            cols = [ren[c.lower()] for c in sp[0] if c.lower() in ren]
-            engine.sort_props[tbl.lower()] = (cols, sp[1])
+        _map_sort_cols(engine, tbl, lambda c: ren.get(c.lower()))
         return _summary(spark, "Table columns have been replaced.")
 
     n_specs = len(re.findall(r"\bPARTITION\s*\(", rest, re.IGNORECASE))
@@ -437,14 +412,14 @@ def handle(engine, sql_text: str) -> DataFrame | None:
 
         matched = partitions.match_partitions(
             engine, tbl, engine.translate(pm.group("spec")))
-        key = stats.key(engine, tbl)
-        prows = stats.get(engine, tbl).parts
+        rec = stats.peek(engine, tbl)
         for kv in matched:
             spark.sql(f"ALTER TABLE {tbl} DROP PARTITION "
                       f"({partitions.drop_spec(kv)})")
             suffix = partitions.part_suffix(kv)
-            engine.part_formats.pop((key, suffix), None)
-            prows.pop(suffix, None)
+            for overrides in (rec.formats, rec.locations,
+                              rec.stats.parts):
+                overrides.pop(suffix, None)
         return _summary(spark,
                         f"Dropped {len(matched)} partition(s).")
 
@@ -487,14 +462,12 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 from incubator_impala_spark import mixedformat
                 from incubator_impala_spark import partitions as _pt
 
-                key = stats.key(engine, tbl)
+                locs = stats.table(engine, tbl).locations
                 for kv in matched:
-                    engine.part_locations[
-                        (key, _pt.part_suffix(kv))] = \
+                    locs[_pt.part_suffix(kv)] = \
                         engine._resolve_fs_path(lp.group("loc"))
                 if matched:
-                    mixedformat.maybe_activate(
-                        engine, tbl.strip("`").split(".")[-1].lower())
+                    mixedformat.maybe_activate(engine, tbl)
                 # partition found → the reference's per-partition
                 # message; an empty match is a no-op with the
                 # table-level message (partition-ddl-predicates)
@@ -509,18 +482,16 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             fm = re.search(r"\bSET\s+FILEFORMAT\s+(\w+)", rest,
                            re.IGNORECASE)
             if fm:
-                key = stats.key(engine, tbl)
                 disp = {"textfile": "TEXT", "sequencefile": "SEQUENCE",
                         "rcfile": "RC"}.get(fm.group(1).lower(),
                                             fm.group(1).upper())
+                fmts = stats.table(engine, tbl).formats
                 for kv in matched:
-                    engine.part_formats[
-                        (key, partitions.part_suffix(kv))] = disp
+                    fmts[partitions.part_suffix(kv)] = disp
                 if matched:
                     from incubator_impala_spark import mixedformat
 
-                    mixedformat.maybe_activate(
-                        engine, tbl.strip("`").split(".")[-1].lower())
+                    mixedformat.maybe_activate(engine, tbl)
             return _summary(spark,
                             f"Updated {len(matched)} partition(s).")
         return _summary(spark, "Updated table.")
@@ -544,7 +515,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 raise ValueError(
                     f"AnalysisException: Could not find SORT BY "
                     f"column '{c}' in table.")
-        engine.sort_props[tbl.lower()] = (
+        stats.table(engine, tbl).sort = (
             cols, (sb.group("ord") or "LEXICAL").upper())
         return _summary(spark, "Updated table.")
 

@@ -95,9 +95,15 @@ _INSERT_STMT = re.compile(
     r"(?P<body>(?:SELECT|WITH|VALUES)\b[\s\S]*)?$",
     re.IGNORECASE,
 )
-# SORT BY on CREATE TABLE — captured for the sort_props registry
-# before the dialect strips it (write-layout metadata surfaced by
-# DESCRIBE FORMATTED)
+# CREATE/DROP of a table or view: the statements that replace an
+# object's catalog record (Engine._sql_create_drop)
+_CREATE_DROP = re.compile(
+    r"(?is)^\s*(?P<op>create|drop)\s+(?:external\s+)?"
+    r"(?P<kind>table|view)\s+(?P<ine>if\s+(?:not\s+)?exists\s+)?"
+    r"(?P<name>[`\w.]+)")
+# SORT BY on CREATE TABLE — recorded in the table's record, since the
+# dialect strips it (write-layout metadata surfaced by DESCRIBE
+# FORMATTED)
 _CREATE_SORT = re.compile(
     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)[\s\S]*?"
@@ -207,28 +213,25 @@ class Engine:
         # db-scoped DDL surface (CREATE DATABASE / VIEW / SHOW TABLES
         # ... with the reference's summary rows) — namespaces.py
         self.ns = Namespaces()
-        # SORT BY write-layout metadata (IMPALA-4166/IMPALA-10233):
-        # recorded per table, surfaced as the reference's
-        # sort.columns/sort.order property rows in DESCRIBE FORMATTED
-        self.sort_props: dict[str, tuple[list, str]] = {}
-        # table and column stats, one record per table (stats.py)
-        self.table_stats: dict[str, stats.TableStats] = {}
-        # per-table metadata-only ALTER overlays (schema_resolution.py)
-        # — {physical name: {"location","logical"}}
-        self.schema_overlays: dict[str, dict] = {}
+        # each table's catalog record (stats.py): stats, SORT BY,
+        # partition overrides, SHOW CREATE facets, schema overlay
+        self.tables: dict[str, stats.TableRecord] = {}
         # PARQUET_ARRAY_RESOLUTION views (array_resolution.py):
         # {view name: {"location", "array_col", "elem_fields"}}
         self.array_overlays: dict[str, dict] = {}
-        # partition surface (partitions.py): per-partition fileformat
-        # overrides, keyed (stats.key, partition suffix)
-        self.part_formats: dict[tuple[str, str], str] = {}
-        # per-partition location overrides (ALTER ... PARTITION ...
-        # SET LOCATION) — consumed by mixedformat dispatch views
-        self.part_locations: dict[tuple[str, str], str] = {}
-        # engine-created avro-typed tables (type-mapping surface) and
         # the stale-avro-metadata registry (avro_stale.py)
-        self.avro_tables: set[str] = set()
         self.avro_stale: dict[str, dict] = {}
+        # checked-table scan validation (scan_errors.py), {view name:
+        # check}, and the TIMEZONE-following checked views' builders
+        self.scan_checks: dict[str, dict] = {}
+        self.tz_check_views: dict[str, object] = {}
+        # ACID tables and their row__id shadow views (acid.py), by
+        # physical name, and the fixture qualifiers / columns of the
+        # shadows that stand for fixture tables
+        self.acid_tables: dict[str, object] = {}
+        self.acid_shadows: dict[str, str] = {}
+        self.acid_fixture_quals: dict[str, list] = {}
+        self.acid_fixture_cols: dict[str, list] = {}
         if sf_dir:
             register_tables(self.spark, sf_dir)
 
@@ -303,27 +306,20 @@ class Engine:
         return (f"{m.group('pre')} SELECT {', '.join(exprs)} "
                 f"FROM ({body}) __pqt_ts__")
 
-    def _refresh_overlays(self, sql_text: str) -> None:
+    def _refresh_overlays(self) -> None:
         """Re-project overlay tables (metadata-only ALTERed parquet
-        tables) under the CURRENT resolution mode; clean up overlays
-        whose table is being dropped."""
-        import re as _re
-
+        tables) under the CURRENT resolution mode."""
         from incubator_impala_spark import schema_resolution
 
-        dm = _re.match(r"(?is)\s*drop\s+table\s+(?:if\s+exists\s+)?"
-                       r"`?([\w.]+)`?", sql_text)
-        dropping = dm.group(1).split(".")[-1].lower() if dm else None
-        for tbl, ov in list(self.schema_overlays.items()):
-            if dropping and tbl.lower().endswith(dropping):
-                self.spark.catalog.dropTempView(tbl)
-                del self.schema_overlays[tbl]
+        for k, rec in self.tables.items():
+            if not rec.overlay:
                 continue
+            view = stats.view_name(k)
             try:
                 df = schema_resolution.resolve_overlay(
-                    self.spark, ov["location"], ov["logical"],
+                    self.spark, self._managed_dir(view), rec.overlay,
                     self.parquet_resolution)
-                df.createOrReplaceTempView(tbl)
+                df.createOrReplaceTempView(view)
             except (AnalysisException, ValueError, OSError):
                 # an unresolvable logical/file pairing under the
                 # CURRENT mode must not abort an unrelated statement;
@@ -367,8 +363,7 @@ class Engine:
                 self, m.group("body"), self.explain_level)
             return rows_df(
                 self.spark, [(ln,) for ln in lines], "explain_string string")
-        if self.schema_overlays:
-            self._refresh_overlays(sql_text)
+        self._refresh_overlays()
         for name, ov in list(self.array_overlays.items()):
             from incubator_impala_spark import array_resolution
 
@@ -380,14 +375,13 @@ class Engine:
                 ).createOrReplaceTempView(name)
             except (AnalysisException, ValueError, OSError):  # re-resolved next stmt
                 pass
-        if getattr(self, "acid_tables", None) \
-                or getattr(self, "acid_shadows", None):
+        if self.acid_tables or self.acid_shadows:
             # ACID snapshot views rebuild before the statement plans;
             # row__id references swap to the shadow views (acid.py)
             from incubator_impala_spark import acid
 
             sql_text = acid.prepare(self, sql_text)
-        if getattr(self, "mixed_tables", None):
+        if any(rec.mixed for rec in self.tables.values()):
             # per-partition mixed-format tables: SELECTs read through
             # a freshly-built dispatch view, DDL/DML drops the shadow
             # (mixedformat.refresh_views); must run before the scan
@@ -395,7 +389,7 @@ class Engine:
             from incubator_impala_spark import mixedformat
 
             mixedformat.refresh_views(self, sql_text)
-        if getattr(self, "scan_checks", None) and (
+        if self.scan_checks and (
                 self.abort_on_error
                 or any(c.get("always")
                        for c in self.scan_checks.values())):
@@ -415,46 +409,74 @@ class Engine:
         handled = showcreate.handle(self, sql_text)
         if handled is not None:
             return handled
-        if re.match(r"(?is)^\s*create\s+(?:external\s+)?"
-                    r"(?:table|view)\b", sql_text):
-            return self._sql_create_recorded(sql_text)
+        m = _CREATE_DROP.match(sql_text)
+        if m:
+            return self._sql_create_drop(m)
         return self._sql_stmt(sql_text)
 
-    def _sql_create_recorded(self, sql_text: str) -> DataFrame:
-        """Run a CREATE TABLE/VIEW, committing the SHOW CREATE facet
-        record only when the statement takes effect: a failed CREATE
-        must not clobber the live object's recorded definition, and an
-        IF NOT EXISTS no-op over an existing object keeps the
-        existing record (the reference reflects the actual catalog,
-        ToSqlUtils.getCreateTableSql renders live metadata)."""
+    def _sql_create_drop(self, m: re.Match) -> DataFrame:
+        """Run a CREATE or DROP of a table or view. It replaces the
+        object's catalog record (stats.py) only when it takes effect:
+        the record goes before the statement runs and comes back when
+        the statement fails or the dropped object is still there, and
+        an IF NOT EXISTS no-op over an existing object keeps it (the
+        reference reflects the actual catalog). A CREATE that takes effect records its SORT BY and
+        SHOW CREATE facets; a DROP TABLE first clears the warehouse
+        directory of a table the catalog does not know."""
         from incubator_impala_spark import showcreate
 
-        skip = False
-        if re.match(r"(?is)^\s*create\s+(?:external\s+)?"
-                    r"(?:table|view)\s+if\s+not\s+exists\b",
-                    sql_text):
+        sql_text = m.string
+        name = self.ns.resolve(m.group("name")).replace("`", "")
+        create = m.group("op").lower() == "create"
+        if create and m.group("ine"):
             try:
-                rm = re.match(
-                    r"(?is)^\s*create\s+(?:external\s+)?"
-                    r"(?:table|view)\s+if\s+not\s+exists\s+"
-                    r"(`?[\w.]+`?)", self.ns.resolve(sql_text))
-                skip = rm is not None and \
-                    self.spark.catalog.tableExists(
-                        rm.group(1).replace("`", ""))
-            except AnalysisException:  # unresolvable name: record
-                skip = False           # as before (best-effort)
-        out = self._sql_stmt(sql_text)
-        if not skip:
+                if self.spark.catalog.tableExists(name):
+                    return self._sql_stmt(sql_text)
+            except AnalysisException:  # unresolvable name: create
+                pass
+        elif not create and m.group("kind").lower() == "table":
+            self.clear_orphan(name)
+        old = stats.drop(self, name)
+        try:
+            out = self._sql_stmt(sql_text)
+        except Exception:
+            stats.put(self, name, old)
+            raise
+        if create:
+            sm = _CREATE_SORT.match(sql_text)
+            if sm:
+                cols = [c.strip().strip("`")
+                        for c in sm.group("cols").split(",") if c.strip()]
+                stats.table(self, sm.group("tbl")).sort = (
+                    cols, (sm.group("ord") or "LEXICAL").upper())
             showcreate.record_create(self, sql_text)
+        elif self.spark.catalog.tableExists(name):
+            # a DROP that left the object in place (DROP VIEW IF
+            # EXISTS naming a table)
+            stats.put(self, name, old)
         return out
 
-    def _sql_stmt(self, sql_text: str) -> DataFrame:
-        from incubator_impala_spark import showcreate
+    def clear_orphan(self, tbl: str) -> None:
+        """Remove the warehouse directory a managed table named `tbl`
+        would occupy when the catalog knows no such table: an aborted
+        earlier run leaves it, and Spark refuses to create or rename
+        a table onto it."""
+        import shutil
 
-        dv = re.match(r"(?is)^\s*drop\s+(?:table|view)\s+"
-                      r"(?:if\s+exists\s+)?`?([\w.]+)`?", sql_text)
-        if dv:
-            showcreate.forget(self, dv.group(1))
+        if not self.spark.catalog.tableExists(tbl):
+            shutil.rmtree(self._managed_dir(tbl), ignore_errors=True)
+
+    def _managed_dir(self, tbl: str) -> str:
+        """Warehouse directory of a managed table named `tbl`:
+        ``wh/<name>`` in the default database, ``wh/<db>.db/<name>``
+        in others."""
+        db, _, name = tbl.lower().rpartition(".")
+        db = db or self.spark.catalog.currentDatabase() or "default"
+        return os.path.join(self._warehouse_dir(),
+                            *([] if db == "default" else [f"{db}.db"]),
+                            name)
+
+    def _sql_stmt(self, sql_text: str) -> DataFrame:
         am = re.match(
             r"(?is)^\s*ANALYZE\s+TABLE\s+(?P<tbl>[\w.]+)\s*"
             r"(?:PARTITION\s*\([^)]*\)\s*)?"
@@ -473,14 +495,11 @@ class Engine:
                     f"FOR ALL COLUMNS"))
             except _SPARK_ERR:
                 pass
-            from incubator_impala_spark import showcreate
-
-            if not hasattr(self, "create_meta"):
-                self.create_meta = {}
-            meta = self.create_meta.setdefault(
-                showcreate.meta_key(self, tbl),
-                {"kind": "table", "external": True, "display": tbl})
-            meta.setdefault("tblproperties", {})[
+            rec = stats.table(self, tbl)
+            if rec.create is None:
+                rec.create = {"kind": "table", "external": True,
+                              "display": tbl}
+            rec.create.setdefault("tblproperties", {})[
                 "COLUMN_STATS_ACCURATE"] = \
                 '{\\"BASIC_STATS\\":\\"true\\"}'
             return rows_df(
@@ -488,23 +507,7 @@ class Engine:
         # namespace shim: engine-owned db references become physical
         # (mangled) names; db-scoped DDL returns its summary rows here
         sql_text = self.ns.resolve(sql_text)
-        dm = re.match(r"(?is)^\s*(?:drop|create)\s+(?:external\s+)?"
-                      r"table\s+(?:if\s+(?:not\s+)?exists\s+)?"
-                      r"`?([\w.]+)`?", sql_text)
-        if dm:
-            # stats die with the table (and a recreate starts clean) —
-            # BEFORE ns.handle, which serves registered-object drops
-            stats.clear(self, dm.group(1))
-            skey = stats.key(self, dm.group(1))
-            for reg in (self.part_formats, self.part_locations):
-                for k in [k for k in reg if k[0] == skey]:
-                    del reg[k]
-            # SORT BY layout metadata dies with the table too — a
-            # recreate without SORT BY must not inherit it
-            # (_CREATE_SORT re-records when the new DDL has one)
-            self.sort_props.pop(dm.group(1).lower(), None)
-        if getattr(self, "acid_tables", None) is not None \
-                or "transactional" in sql_text.lower() \
+        if self.acid_tables or "transactional" in sql_text.lower() \
                 or self.default_transactional_type:
             # ACID statement surface (acid.py): transactional CREATEs
             # and every statement touching a registered ACID table
@@ -571,16 +574,11 @@ class Engine:
         if m:
             return partitions.show_files(self, m.group(1),
                                          m.group("spec"))
-        m = _CREATE_SORT.match(sql_text)
-        if m:
-            cols = [c.strip().strip("`")
-                    for c in m.group("cols").split(",") if c.strip()]
-            self.sort_props[m.group("tbl").lower()] = (
-                cols, (m.group("ord") or "LEXICAL").upper())
         m = _DESCRIBE_FMT.match(sql_text)
-        if m and m.group(1).lower() in self.sort_props:
+        sort = m and stats.peek(self, m.group(1)).sort
+        if sort:
             base = self.spark.sql(f"DESCRIBE TABLE EXTENDED {m.group(1)}")
-            cols, order = self.sort_props[m.group(1).lower()]
+            cols, order = sort
             extra = rows_df(self.spark, [
                 ("", "sort.columns".ljust(20), ",".join(cols).ljust(20)),
                 ("", "sort.order".ljust(20), order.ljust(20))],
@@ -1134,11 +1132,7 @@ class Engine:
                 .replace("'", "''")
             defs.append(f"`{f['name']}` {typ} COMMENT '{comment}'")
         self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        import shutil as _sh
-
-        _sh.rmtree(os.path.join(
-            self._warehouse_dir(), tbl.split(".")[-1].lower()),
-            ignore_errors=True)
+        self.clear_orphan(tbl)
         pclause = ""
         if part and part.strip():
             pnames = []
@@ -1152,7 +1146,7 @@ class Engine:
         self.spark.sql(
             f"CREATE TABLE {tbl} ({', '.join(defs)}) "
             f"USING parquet{pclause}")
-        self.avro_tables.add(stats.key(self, tbl))
+        stats.table(self, tbl).avro = True
         return rows_df(
             self.spark, [("Table has been created.",)], "summary string")
 
@@ -1191,7 +1185,7 @@ class Engine:
                 if pnames else "")
         self.spark.sql(f"CREATE TABLE {tbl} ({', '.join(defs)}) "
                        f"USING parquet{part}")
-        self.avro_tables.add(stats.key(self, tbl))
+        stats.table(self, tbl).avro = True
         # EXTERNAL ... LOCATION over existing avro container files:
         # adopt the data (avro-schema-changes.test
         # avro_alter_table_add_new_column over tinytable_avro)
@@ -1228,12 +1222,12 @@ class Engine:
             self.spark.sql(f"TRUNCATE TABLE {tbl}")
             return rows_df(
                 self.spark, [("Table has been created.",)], "summary string")
-        # explicit SORT BY was recorded by _CREATE_SORT before this
-        # branch; otherwise the clone inherits the source's layout
-        # (CreateTableLikeStmt copies sort.columns — IMPALA-4166)
-        if tbl.lower() not in self.sort_props \
-                and src.lower() in self.sort_props:
-            self.sort_props[tbl.lower()] = self.sort_props[src.lower()]
+        # the clone inherits the source's layout (CreateTableLikeStmt
+        # copies sort.columns — IMPALA-4166); an explicit SORT BY is
+        # recorded over it once the CREATE succeeds
+        src_sort = stats.peek(self, src).sort
+        if src_sort:
+            stats.table(self, tbl).sort = src_sort
         created = False
         try:
             if self.spark.catalog.getTable(src).tableType \
@@ -1297,16 +1291,9 @@ class Engine:
         # the reference clears COLUMN_STATS_ACCURATE on INSERT
         # (clear-statsaccurate.test; CatalogOpExecutor unsets the
         # property Hive's ANALYZE set)
-        try:
-            from incubator_impala_spark import showcreate
-
-            meta = getattr(self, "create_meta", {}).get(
-                showcreate.meta_key(self, tbl))
-            if meta:
-                meta.get("tblproperties", {}).pop(
-                    "COLUMN_STATS_ACCURATE", None)
-        except (KeyError, AttributeError):  # malformed facet record
-            pass
+        meta = stats.peek(self, tbl).create
+        if meta:
+            meta.get("tblproperties", {}).pop("COLUMN_STATS_ACCURATE", None)
         overwrite = m.group("mode").upper() == "OVERWRITE"
         # `insert into t()` with no source: one all-default row
         # (InsertStmt with an empty permutation and no query)
@@ -1389,6 +1376,8 @@ class Engine:
                 # reference's summary)
                 if v is None or v == "":
                     return "__HIVE_DEFAULT_PARTITION__"
+                if v != v:
+                    return "NaN"   # Spark's directory spelling
                 if isinstance(v, str):
                     # Hive FileUtils.escapePathName's exact char set
                     # (space, +, etc. stay literal)

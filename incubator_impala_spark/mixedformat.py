@@ -72,25 +72,15 @@ def _avro_ok(simple: str, avro_type: str) -> bool:
     return avro_type in _DECL_TO_AVRO.get(simple, ())
 
 
-def register(engine, phys: str) -> None:
-    """Mark `phys` (physical/session-catalog name) as mixed-format
-    dispatched; views rebuild lazily per SELECT (refresh_views)."""
-    if not hasattr(engine, "mixed_tables"):
-        engine.mixed_tables = {}
-    engine.mixed_tables[phys.lower()] = True
-
-
-def maybe_activate(engine, phys: str) -> None:
+def maybe_activate(engine, tbl: str) -> None:
     """Activate dispatch when any partition's format/location
-    override diverges from the table base."""
-    key = stats.key(engine, phys)
-    base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
-    fmts, locs = engine.part_formats, engine.part_locations
-    diverges = any(k == key and v.upper() != base
-                   for (k, _), v in fmts.items()) or \
-        any(k == key for (k, _) in locs)
-    if diverges:
-        register(engine, phys)
+    override diverges from the table base; views rebuild lazily per
+    SELECT (refresh_views)."""
+    rec = stats.table(engine, tbl)
+    base = (_parts._meta_format(engine, tbl) or "PARQUET").upper()
+    if rec.locations or any(v.upper() != base
+                            for v in rec.formats.values()):
+        rec.mixed = True
 
 
 _DML = re.compile(r"(?is)^\s*(insert|alter|drop|create|truncate|"
@@ -102,33 +92,24 @@ def refresh_views(engine, sql_text: str) -> None:
     """engine.sql pre-pass: SELECT statements get fresh dispatch
     views for every referenced mixed table; any other statement drops
     the shadow so it operates on the catalog object itself."""
-    mixed = getattr(engine, "mixed_tables", None)
-    if not mixed:
-        return
     low = sqlscan.shadow(sql_text).lower()
-    for phys in list(mixed):
+    for k in [k for k, rec in engine.tables.items() if rec.mixed]:
+        phys = stats.view_name(k)
         if not re.search(rf"\b{re.escape(phys)}\b", low):
             continue
         if _DML.match(sql_text):
             engine.spark.catalog.dropTempView(phys)
-            if re.match(rf"(?is)^\s*drop\s+table\s+(if\s+exists\s+)?"
-                        rf"`?{re.escape(phys)}`?\b", sql_text):
-                mixed.pop(phys, None)
-                checks = getattr(engine, "scan_checks", {})
-                if checks.get(phys, {}).get("kind") == \
-                        "format_partition":
-                    checks.pop(phys)
             continue
         build_view(engine, phys)
 
 
 def _effective(engine, phys: str, kv: dict) -> tuple[str, str]:
     """(format, location) for one partition after ALTER overrides."""
-    key = stats.key(engine, phys)
+    rec = stats.peek(engine, phys)
     suffix = _parts.part_suffix(kv)
-    loc = engine.part_locations.get((key, suffix)) \
+    loc = rec.locations.get(suffix) \
         or _parts._part_dir(engine, phys, suffix)
-    fmt = engine.part_formats.get((key, suffix))
+    fmt = rec.formats.get(suffix)
     if not fmt:
         files = _parts._files_in(loc)
         fmt = (_parts._format_of(files) if files
@@ -145,7 +126,7 @@ def build_view(engine, phys: str) -> None:
         full = spark.table(phys)
         pcols = _parts.partition_columns(spark, phys)
     except AnalysisException:  # table dropped out from under us
-        getattr(engine, "mixed_tables", {}).pop(phys, None)
+        stats.peek(engine, phys).mixed = False
         return
     data_fields = [f for f in full.schema.fields
                    if f.name not in pcols]
@@ -153,9 +134,8 @@ def build_view(engine, phys: str) -> None:
                          for f in data_fields)
     pcol_types = {f.name: f.dataType.simpleString()
                   for f in full.schema.fields if f.name in pcols}
-    key = stats.key(engine, phys)
+    rec = stats.peek(engine, phys)
     base = (_parts._meta_format(engine, phys) or "PARQUET").upper()
-    fmts, locs = engine.part_formats, engine.part_locations
     # overridden partitions get a raw per-format read; everything
     # else stays ONE catalog-table leg (its own reader options,
     # partition pruning and stats intact — at 100 TB the override
@@ -164,8 +144,8 @@ def build_view(engine, phys: str) -> None:
     bad_parts: list[tuple[dict, str]] = []
     for kv in _parts.list_partitions(engine, phys):
         suffix = _parts.part_suffix(kv)
-        fmt = (fmts.get((key, suffix)) or base).upper()
-        if (key, suffix) not in locs and fmt == base:
+        fmt = (rec.formats.get(suffix) or base).upper()
+        if suffix not in rec.locations and fmt == base:
             continue
         over.append(kv)
         _, loc = _effective(engine, phys, kv)
@@ -205,9 +185,7 @@ def build_view(engine, phys: str) -> None:
     # pruning-aware reconciliation error for unresolvable partitions
     from incubator_impala_spark import scan_errors as se
 
-    checks = getattr(engine, "scan_checks", None)
-    if checks is None:
-        checks = engine.scan_checks = {}
+    checks = engine.scan_checks
     if bad_parts:
         checks[phys.lower()] = {
             "kind": "format_partition", "bad_parts": bad_parts,
@@ -215,7 +193,6 @@ def build_view(engine, phys: str) -> None:
         }
     elif checks.get(phys.lower(), {}).get("kind") == "format_partition":
         checks.pop(phys.lower())
-    _ = key  # (stats key reserved for future per-leg stat wiring)
 
 
 def _parts_pred(df, kvs: list[dict]):

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import PySparkException
+
 from incubator_impala_spark import dialect, partitions, sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
@@ -584,41 +586,34 @@ class Namespaces:
         else:
             ddb, dobj, new = None, dst.lower(), dst
         old = info.get("phys") or self.mangle(sdb, sobj)
+        # the table's record follows it through a rename (the catalog
+        # carries it in the reference). It comes off first, taking
+        # away any view that shadows `old`: Spark would rename that
+        # view in the table's place.
+        rec = stats.drop(engine, old)
+        try:
+            if info.get("kind") == "table":
+                engine.clear_orphan(new)
+                spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
+            else:
+                df = spark.table(old)
+                spark.catalog.dropTempView(old)
+                df.createOrReplaceTempView(new)
+        except PySparkException:
+            stats.put(engine, old, rec)
+            raise
+        stats.put(engine, new, rec)
         if info.get("kind") == "table":
-            if not spark.catalog.tableExists(new):
-                # clear an orphan warehouse dir left by an earlier
-                # aborted run — Spark refuses to rename onto it
-                import os
-                import shutil
-
-                wh = re.sub(r"^file:", "", spark.conf.get(
-                    "spark.sql.warehouse.dir", "spark-warehouse"))
-                shutil.rmtree(
-                    os.path.join(wh, new.split(".")[-1].lower()),
-                    ignore_errors=True)
-            spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
             try:
                 if partitions.partition_columns(spark, new):
                     # catalog rename loses partition entries; rebuild
                     spark.sql(f"MSCK REPAIR TABLE {new}")
             except Exception:  # noqa: BLE001
                 pass
-        else:
-            df = spark.table(old)
-            spark.catalog.dropTempView(old)
-            df.createOrReplaceTempView(new)
         if sdb is not None:
             self.dbs[sdb].pop(sobj, None)
         if ddb is not None:
             self.register(ddb, dobj, info.get("kind", "table"), new)
-        # stats and partition formats follow the table through a
-        # rename (the catalog carries them in the reference)
-        stats.rename(engine, old, new)
-        okey, nkey = stats.key(engine, old), stats.key(engine, new)
-        for (t, suffix) in list(engine.part_formats):
-            if t == okey:
-                engine.part_formats[(nkey, suffix)] = \
-                    engine.part_formats.pop((t, suffix))
         return rows_df(
             spark, [("Renaming was successful.",)], "summary string")
 

@@ -93,7 +93,7 @@ def _tz_views(engine) -> None:
 
     if engine.spark.conf.get(functional._REGISTERED_KEY, None) == "1":
         functional.register_tz_parquet_tables(engine.spark, engine.tz)
-    for build in getattr(engine, "tz_check_views", {}).values():
+    for build in engine.tz_check_views.values():
         build(engine.tz)
 
 

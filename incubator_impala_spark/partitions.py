@@ -139,15 +139,12 @@ def _display_location(engine, tbl: str, suffix: str = "") -> str:
 
 
 def _meta_format(engine, tbl: str) -> str | None:
-    """STORED AS spelling recorded at CREATE time (showcreate.py
-    facet registry) — authoritative when the table holds no files."""
-    key = tbl.strip('`').split('.')[-1].lower()
-    for k, meta in getattr(engine, "create_meta", {}).items():
-        if k.split(".")[-1] == key and meta.get("format"):
-            f = meta["format"].upper()
-            return {"TEXTFILE": "TEXT", "SEQUENCEFILE": "SEQUENCE",
-                    "RCFILE": "RC"}.get(f, f)
-    return None
+    """STORED AS spelling recorded at CREATE time (the table record's
+    SHOW CREATE facets) — authoritative when the table holds no
+    files."""
+    f = (stats.peek(engine, tbl).create or {}).get("format", "").upper()
+    return {"TEXTFILE": "TEXT", "SEQUENCEFILE": "SEQUENCE",
+            "RCFILE": "RC"}.get(f, f) or None
 
 
 def _format_of(files: list) -> str:
@@ -192,9 +189,8 @@ def show_partitions(engine, tbl: str) -> DataFrame:
     parts = list_partitions(engine, tbl)
     parts.sort(key=lambda kv: [
         (v is not None, str(v)) for v in kv.values()])
-    key = stats.key(engine, tbl)
-    rec = stats.get(engine, tbl)
-    fmts = engine.part_formats
+    table = stats.peek(engine, tbl)
+    rec = table.stats
     # stats-extrapolation tables carry an extra EXTRAP #ROWS column
     # (FeFsTable.Utils.getExtrapolatedNumRows: bytes * rows/totalSize)
     extrap_on = False
@@ -226,9 +222,9 @@ def show_partitions(engine, tbl: str) -> DataFrame:
             + ((_extrap(size),) if extrap_on else ())
             + (len(files), _human(size),
                "NOT CACHED", "NOT CACHED",
-               fmts.get((key, suffix),
-                        (_format_of(files) if files
-                         else _meta_format(engine, tbl)) or "TEXT"),
+               table.formats.get(suffix,
+                                 (_format_of(files) if files
+                                  else _meta_format(engine, tbl)) or "TEXT"),
                "true" if suffix in rec.incremental else "false",
                _display_location(engine, tbl, suffix)))
     nrows = -1 if rec.rows is None else rec.rows

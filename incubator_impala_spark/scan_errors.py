@@ -513,8 +513,6 @@ def register_parquet_check(engine, name: str, paths: list[str],
     skipped; out-of-range timestamps NULLed); ABORT_ON_ERROR=1 raises
     at query time from the engine hook."""
     spark = engine.spark
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
         "kind": "parquet", "paths": paths, "check": check,
         "display_dir": display_dir, "ts_col": ts_col,
@@ -578,8 +576,6 @@ def register_orc_date_check(engine, name: str, paths: list[str],
     version, masking both behaviors)."""
     import pyarrow.orc as po
 
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     rows, msg = [], None
     for p in paths:
         t = po.ORCFile(p).read()
@@ -649,12 +645,8 @@ def register_hive211_tz_check(engine, name: str, path: str,
         rows_df(engine.spark, rows, "id int, timestamp_col timestamp") \
             .createOrReplaceTempView(name)
 
-    if not hasattr(engine, "tz_check_views"):
-        engine.tz_check_views = {}
     engine.tz_check_views[name] = _build
     _build(engine.tz)
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
         "kind": "parquet", "paths": [path], "check": "ts_range",
         "display_dir": display_dir, "ts_col": "timestamp_col",
@@ -672,8 +664,6 @@ def register_magic_dir_check(engine, name: str, dir_path: str,
     and it fires regardless of ABORT_ON_ERROR (metadata errors are
     not maskable in the reference, hdfs-parquet-scanner.cc
     ProcessFooter)."""
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
         "kind": "magic_dir", "dir": dir_path,
         "display_dir": display_dir, "always": True,
@@ -693,8 +683,6 @@ def register_partition_plugin_check(engine, name: str,
 
     `bad_parts`: [(partition-key values, plugin name)], e.g.
     [({"year": 2009, "month": 3}, "LZ4")]."""
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
         "kind": "plugin_text", "bad_parts": bad_parts, "always": True,
     }
@@ -744,8 +732,6 @@ def _partition_survives(spark, values: dict, where: str | None) -> bool:
 
 def register_text_check(engine, name: str, path: str,
                         col_types: list[str], col_names: list[str]):
-    if not hasattr(engine, "scan_checks"):
-        engine.scan_checks = {}
     engine.scan_checks[name.lower()] = {
         "kind": "text", "path": path,
         "types": col_types, "names": col_names,
@@ -755,7 +741,7 @@ def register_text_check(engine, name: str, path: str,
 def check_query(engine, sql_text: str) -> None:
     """Engine hook: raise the reference-shaped scan error when an
     abort-mode query references a checked table."""
-    checks = getattr(engine, "scan_checks", None)
+    checks = engine.scan_checks
     if not checks:
         return
     abort = engine.abort_on_error

@@ -30,7 +30,7 @@ from pyspark.errors.exceptions.base import (
     PySparkException as _PYSPARK_ERR,
 )
 
-from incubator_impala_spark import dialect, sqlscan
+from incubator_impala_spark import dialect, sqlscan, stats
 from incubator_impala_spark.session import rows_df
 
 # minimal reserved set that forces quoting in rendered identifiers —
@@ -96,15 +96,6 @@ def _parse_props(raw: str) -> dict:
                            raw))
 
 
-def meta_key(engine, name: str) -> str:
-    """Canonical (db-qualified when known) lowercase key."""
-    name = name.strip().replace("`", "")
-    if "." in name:
-        return name.lower()
-    cur = engine.ns.current
-    return f"{cur}.{name}".lower() if cur else name.lower()
-
-
 def record_create(engine, sql_text: str) -> None:
     """Parse the Impala-form facets of a CREATE TABLE/VIEW and store
     them on the engine for later SHOW CREATE rendering. Never raises —
@@ -119,8 +110,6 @@ def _record_create(engine, sql_text: str) -> None:
     m = _CREATE_HEAD.match(sql_text)
     if m is None:
         return
-    if not hasattr(engine, "create_meta"):
-        engine.create_meta = {}
     shadow = sqlscan.shadow(sql_text)
     rest_off = m.start("rest")
     rest_shadow = shadow[rest_off:]
@@ -155,7 +144,7 @@ def _record_create(engine, sql_text: str) -> None:
                 if im:
                     meta["aliases"].append(im.group(2))
         meta["body"] = tail[am.end():].strip().rstrip(";")
-        engine.create_meta[meta_key(engine, m.group("name"))] = meta
+        stats.table(engine, m.group("name")).create = meta
         return
 
     # TABLE facets
@@ -228,12 +217,7 @@ def _record_create(engine, sql_text: str) -> None:
         meta["tblproperties"] = _parse_props(tail[tm.end():close])
     meta["ctas"] = bool(re.search(r"(?is)\bas\s+select\b",
                                   sqlscan.top_level(tail_shadow)))
-    engine.create_meta[meta_key(engine, m.group("name"))] = meta
-
-
-def forget(engine, name: str) -> None:
-    getattr(engine, "create_meta", {}).pop(meta_key(engine, name),
-                                           None)
+    stats.table(engine, m.group("name")).create = meta
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +297,8 @@ def _expand_view_body(engine, meta: dict, simple_name: str) -> str:
 
 def render(engine, name: str) -> str:
     """The SHOW CREATE statement text for `name` (table or view)."""
-    key = meta_key(engine, name)
-    meta = getattr(engine, "create_meta", {}).get(key)
+    rec = stats.peek(engine, name)
+    meta = rec.create
     display = name.replace("`", "")
     if meta is None and _is_fixture(display):
         # fixture views with reference-catalog text
@@ -331,7 +315,7 @@ def render(engine, name: str) -> str:
         simple = display.split(".")[-1]
         body = _expand_view_body(engine, meta, simple)
         return f"CREATE VIEW {_qualify(display)} AS\n{body}"
-    return _render_table(engine, display, meta)
+    return _render_table(engine, display, meta, rec.sort)
 
 
 def _qualify(display: str) -> str:
@@ -341,7 +325,8 @@ def _qualify(display: str) -> str:
     return quote_ident(display)
 
 
-def _render_table(engine, display: str, meta: dict | None) -> str:
+def _render_table(engine, display: str, meta: dict | None,
+                  sort: tuple[list, str] | None) -> str:
     spark = engine.spark
     phys = _phys_name(engine, display)
     schema = spark.table(phys).schema
@@ -388,11 +373,8 @@ def _render_table(engine, display: str, meta: dict | None) -> str:
         out.append(")")
     sort_cols, sort_order = meta.get("sort_cols"), \
         meta.get("sort_order")
-    if not sort_cols:
-        sp = engine.sort_props.get(
-            _phys_name(engine, display).lower())
-        if sp:
-            sort_cols, sort_order = sp
+    if not sort_cols and sort:
+        sort_cols, sort_order = sort
     if sort_cols:
         out.append(f"SORT BY {sort_order or 'LEXICAL'} "
                    f"({', '.join(sort_cols)})")

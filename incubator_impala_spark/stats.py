@@ -1,18 +1,22 @@
-"""Table and column statistics: one record per table, one key.
+"""The per-table catalog record: one record per table, one key.
 
-The reference keeps table and column stats in its catalog, and every
-statement reads or writes them there (Impala, CIDR 2015). This engine
-keeps them in `engine.table_stats`: one `TableStats` record per table,
-keyed by `key()`, the physical table with its database kept. So `t`,
-`default.t` and `` `t` `` share a record, and `a.t` and `b.t` do not.
+The reference keeps a table's metadata in one catalog object
+(`HdfsTable`): stats, sort order, per-partition formats and
+locations, the CREATE-time facets. DROP and RENAME act on that
+object as a whole (Impala, CIDR 2015). This engine keeps the same in
+`engine.tables`: one `TableRecord` per table, keyed by `key()`, the
+physical table with its database kept. So `t`, `default.t` and `` `t`
+`` share a record, and `a.t` and `b.t` do not.
 
+* `drop()` / `put()`: DROP TABLE/VIEW, a CREATE that takes effect,
+  ALTER TABLE ... RENAME, and the undo of a statement that fails;
+* `clear()`: TRUNCATE, DROP STATS and the ACID write path (stats only);
+* `table()` / `peek()`: the record, stored or read-only;
 * `compute()`: the one COMPUTE STATS aggregate and fill (table-level
   column stats and per-partition row counts in one scan), used by
   full, incremental, partition-scoped and ACID computes;
-* `clear()`: DROP TABLE, TRUNCATE, DROP STATS and the ACID write path;
-* `rename()`: ALTER TABLE ... RENAME;
-* `get()` / `record()`: the lookups of SHOW COLUMN STATS, SHOW TABLE
-  STATS, SHOW PARTITIONS and EXPLAIN.
+* `get()` / `record()`: the stats lookups of SHOW COLUMN STATS, SHOW
+  TABLE STATS, SHOW PARTITIONS and EXPLAIN.
 """
 
 from __future__ import annotations
@@ -44,48 +48,103 @@ class TableStats:
     incremental: set[str] = field(default_factory=set)
 
 
+@dataclass
+class TableRecord:
+    stats: TableStats = field(default_factory=TableStats)
+    # SORT BY write layout (IMPALA-4166): (columns, LEXICAL|ZORDER),
+    # DESCRIBE FORMATTED's sort.columns/sort.order rows
+    sort: tuple[list, str] | None = None
+    # ALTER ... PARTITION SET FILEFORMAT / SET LOCATION overrides,
+    # {partition suffix: display format / resolved path}
+    formats: dict[str, str] = field(default_factory=dict)
+    locations: dict[str, str] = field(default_factory=dict)
+    # created STORED AS AVRO: added columns take the Avro type mapping
+    avro: bool = False
+    # SHOW CREATE facets recorded at CREATE time (showcreate.py)
+    create: dict | None = None
+    # per-partition mixed-format scan dispatch is on (mixedformat.py)
+    mixed: bool = False
+    # logical schema of a metadata-only ALTER overlay, read from the
+    # table's files (schema_resolution.py)
+    overlay: StructType | None = None
+
+
 def key(engine, name: str) -> str:
     """`db.table` of a table spelling: backticks and the session
-    catalog dropped, an unqualified name in `default`, and an
-    engine-owned database's table under its physical name."""
+    catalog dropped, an unqualified name in `default` (or, under USE,
+    the registered object it resolves to), and an engine-owned
+    database's table under its physical name."""
     name = name.replace("`", "").strip().lower()
     if name.startswith("spark_catalog."):
         name = name[len("spark_catalog."):]
     db, _, tbl = name.rpartition(".")
+    if not db and tbl in engine.ns.dbs.get(engine.ns.current, ()):
+        db = engine.ns.current
     if db in engine.ns.dbs:
         return "default." + engine.ns.phys(db, tbl)
     return f"{db or 'default'}.{tbl}"
 
 
-def get(engine, name: str) -> TableStats:
+def view_name(k: str) -> str:
+    """The temp-view name that shadows the table of key `k` (overlay
+    and mixed-format views)."""
+    return k.removeprefix("default.")
+
+
+def peek(engine, name: str) -> TableRecord:
     """The table's record; an empty one (not stored) when it has none."""
-    return engine.table_stats.get(key(engine, name)) or TableStats()
+    return engine.tables.get(key(engine, name)) or TableRecord()
+
+
+def table(engine, name: str) -> TableRecord:
+    """The table's stored record, created on first write."""
+    return engine.tables.setdefault(key(engine, name), TableRecord())
+
+
+def get(engine, name: str) -> TableStats:
+    """The table's stats; empty ones (not stored) when it has none."""
+    return peek(engine, name).stats
 
 
 def record(engine, name: str) -> TableStats:
-    """The table's stored record, created on first write."""
-    return engine.table_stats.setdefault(key(engine, name), TableStats())
+    """The table's stored stats, created on first write."""
+    return table(engine, name).stats
 
 
 def clear(engine, name: str) -> None:
     """Forget every stat of the table (TruncateStmt: "statistics are
-    removed"; a dropped table's stats die with it)."""
-    engine.table_stats.pop(key(engine, name), None)
-
-
-def rename(engine, old: str, new: str) -> None:
-    """Stats follow the table through a rename (the catalog carries
-    them in the reference)."""
-    rec = engine.table_stats.pop(key(engine, old), None)
+    removed"); the rest of its record stays."""
+    rec = engine.tables.get(key(engine, name))
     if rec is not None:
-        engine.table_stats[key(engine, new)] = rec
+        rec.stats = TableStats()
 
 
-def forget_covers(engine) -> None:
-    """Drop every table's incremental cover, so the next incremental
-    compute counts all partitions again."""
-    for rec in engine.table_stats.values():
-        rec.cover = None
+def drop(engine, name: str) -> TableRecord | None:
+    """Remove the table's record (DROP, a CREATE that takes effect,
+    the old name of a RENAME), with the temp view an overlay or
+    mixed-format record shadows the table with and that view's
+    partition scan check; returns the record, for `put()`."""
+    k = key(engine, name)
+    rec = engine.tables.pop(k, None)
+    if rec is not None and (rec.overlay or rec.mixed):
+        view = view_name(k)
+        engine.spark.catalog.dropTempView(view)
+        if engine.scan_checks.get(view, {}).get("kind") == \
+                "format_partition":
+            del engine.scan_checks[view]
+    return rec
+
+
+def put(engine, name: str, rec: TableRecord | None) -> None:
+    """Store `rec` as the table's record, over anything recorded
+    since `drop()`; None leaves the table without one. A failed
+    statement puts its record back; a RENAME puts it under the new
+    name."""
+    k = key(engine, name)
+    if rec is None:
+        engine.tables.pop(k, None)
+    else:
+        engine.tables[k] = rec
 
 
 def scalar_columns(schema: StructType, exclude=()) -> list[str]:

@@ -641,7 +641,7 @@ def run_blocks(engine, blocks: list[Block], *,
     for vname in engine.avro_stale:
         engine.spark.catalog.dropTempView(vname)
     engine.avro_stale.clear()
-    if getattr(engine, "acid_tables", None):
+    if engine.acid_tables:
         # a prior file's ACID tables must not leak (registry + temp
         # views + managed dirs); fixtures stay
         from incubator_impala_spark import acid
@@ -649,28 +649,18 @@ def run_blocks(engine, blocks: list[Block], *,
         acid.reset(engine)
     # array_overlays are installed by the per-file SETUP hook (which
     # runs BEFORE run_blocks), so they are not cleared here; each hook
-    # replaces its own entries. Metadata-only ALTER overlays are
-    # per-file (alter_schema_in_place is reset above).
-    for tbl in engine.schema_overlays:
-        try:
-            engine.spark.catalog.dropTempView(tbl)
-        except _SPARK_ERR:  # overlay view already gone
-            pass
-    engine.schema_overlays.clear()
-    stats.forget_covers(engine)   # incremental-stats state per file
+    # replaces its own entries. Metadata-only ALTER overlays and
+    # incremental-stats covers are per-file (alter_schema_in_place is
+    # reset above).
+    for k, rec in engine.tables.items():
+        if rec.overlay:
+            engine.spark.catalog.dropTempView(stats.view_name(k))
+            rec.overlay = None
+        rec.stats.cover = None
+    # file-level startup flags (the reference runs some files with
+    # impalad flags, e.g. -use_local_tz_for_unix_timestamp_conversions);
+    # a preset DROP TABLE also clears an orphaned warehouse dir
     for p in presets or []:
-        # file-level startup flags (the reference runs some files with
-        # impalad flags, e.g. -use_local_tz_for_unix_timestamp_conversions)
-        dm = re.match(r"(?i)\s*drop\s+table\s+if\s+exists\s+([\w.]+)",
-                      p)
-        if dm:
-            # a crashed prior session can leave the warehouse dir of a
-            # preset-created table orphaned; the drop can't see it
-            wh = re.sub(r"^file:", "", engine.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"))
-            shutil.rmtree(os.path.join(
-                wh, dm.group(1).split(".")[-1].lower()),
-                ignore_errors=True)
         engine.sql(p)
     for name in sorted(dbs_used):
         try:

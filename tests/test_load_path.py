@@ -40,11 +40,8 @@ def _recreate(eng, tbl: str, ddl: str) -> None:
 
 
 def _part_rows(eng, tbl: str) -> dict:
-    """SHOW PARTITIONS #Rows of a table partitioned by `y`, by value
-    (an ACID table's listing spells the NULL partition by its
-    directory name)."""
-    return {r["y"].replace("__HIVE_DEFAULT_PARTITION__", "NULL"):
-            r["#Rows"]
+    """SHOW PARTITIONS #Rows of a table partitioned by `y`, by value."""
+    return {r["y"]: r["#Rows"]
             for r in eng.sql(f"SHOW PARTITIONS {tbl}").collect()}
 
 
@@ -179,7 +176,7 @@ def test_insert_summary_sorts_like_spark(eng):
         f"SELECT y FROM ({src}) GROUP BY y ORDER BY y").collect()]
     assert len(got) == len(want) == 4
     assert got[0].startswith("y=__HIVE_DEFAULT_PARTITION__/")
-    assert got[-1].lower() == "y=nan/: 1"
+    assert got[-1] == "y=NaN/: 1"
     assert [g.split("/")[0] for g in got[1:3]] == ["y=-1.5", "y=2.5"]
     assert want[0] is None and want[-1] != want[-1]
     eng.sql("DROP TABLE lp_sort")

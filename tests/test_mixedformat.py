@@ -46,8 +46,10 @@ def test_alter_fileformat_roundtrip(engine, avro_dir):
     from incubator_impala_spark import scan_errors as se
 
     _fresh(engine, "mixrt", "tinyint")
+    from incubator_impala_spark import stats
+
     # dispatch active, avro partition empty: original rows + types
-    assert engine.mixed_tables.get("mixrt")
+    assert stats.peek(engine, "mixrt").mixed
     rows = engine.sql("select * from mixrt").collect()
     assert [tuple(r) for r in rows] == [(1, 2, "a", 1)]
     # SHOW PARTITIONS reflects the per-partition format
@@ -68,7 +70,7 @@ def test_alter_fileformat_roundtrip(engine, avro_dir):
     assert engine.sql(
         "select count(*) c from mixrt where p = 1").collect()[0][0] == 1
     engine.sql("drop table mixrt")
-    assert "mixrt" not in getattr(engine, "mixed_tables", {})
+    assert stats.key(engine, "mixrt") not in engine.tables
 
 
 def test_compatible_avro_partition_union(engine, avro_dir):
@@ -79,5 +81,11 @@ def test_compatible_avro_partition_union(engine, avro_dir):
                   engine.sql("select * from mixok").collect())
     assert rows == [(1, 2, "a", 1), (9, 9, "x", 2)]
     # base partitions keep flowing through the catalog table (one
-    # pruned leg), only the overridden partition reads raw
-    engine.sql("drop table mixok")
+    # pruned leg), only the overridden partition reads raw; the
+    # location override and the dispatch follow a rename
+    engine.sql("drop table if exists mixok2")
+    engine.sql("alter table mixok rename to mixok2")
+    rows = sorted(tuple(r) for r in
+                  engine.sql("select * from mixok2").collect())
+    assert rows == [(1, 2, "a", 1), (9, 9, "x", 2)]
+    engine.sql("drop table mixok2")
