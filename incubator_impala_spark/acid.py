@@ -67,7 +67,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import dialect, sqlscan, stats
-from incubator_impala_spark.partitions import parse_suffix, partition_columns
+from incubator_impala_spark.partitions import partition_columns
 from incubator_impala_spark.session import rows_df
 
 _SPARK_TYPES = {
@@ -105,6 +105,7 @@ class AcidTable:
     has_originals: bool = False  # promoted table w/ pre-ACID files
     display_loc: str | None = None   # SHOW FILES base override
     dirty: bool = True
+    fixture: bool = False        # functional-dataset fixture: kept by reset
 
     def visible(self, w: int, hw: int | None = None,
                 exc: set | None = None) -> bool:
@@ -117,23 +118,11 @@ class AcidTable:
 # registry plumbing
 # ---------------------------------------------------------------------
 
-def lookup(engine, name: str) -> AcidTable | None:
-    """Resolve a (possibly qualified / unresolved) spelling to a
-    registered ACID table."""
-    reg = engine.acid_tables
-    n = name.strip().strip("`").lower()
-    if n in reg:
-        return reg[n]
-    if "." in n:
-        db, obj = n.split(".", 1)
-        cand = f"{db}__{obj}"
-        if cand in reg:
-            return reg[cand]
-    elif engine.ns.current:
-        cand = f"{engine.ns.current}__{n}"
-        if cand in reg:
-            return reg[cand]
-    return None
+def _tables(engine) -> list[AcidTable]:
+    """The registered ACID tables: the ACID state of the catalog
+    records that carry one."""
+    return [rec.acid for rec in engine.tables.values()
+            if rec.acid is not None]
 
 
 def _alloc(t: AcidTable) -> int:
@@ -162,7 +151,7 @@ def _refresh_snapshot(t: AcidTable) -> None:
 def commit_writeid(engine, name: str, w: int | None = None) -> None:
     """Commit the lowest open write id (Hive Streaming commit —
     the acid-row-validation driver's AcidTxn.commit_txn)."""
-    t = lookup(engine, name)
+    t = stats.peek(engine, name).acid
     if w is None:
         w = min(t.open_txns)
     t.open_txns.discard(w)
@@ -596,7 +585,7 @@ def build_view(engine, t: AcidTable, *, hw: int | None = None,
 def refresh_views(engine, force: bool = False) -> None:
     """Re-register temp views for dirty ACID tables (pre-statement
     hook, like mixedformat.refresh_views)."""
-    for t in engine.acid_tables.values():
+    for t in _tables(engine):
         if not (t.dirty or force):
             continue
         try:
@@ -824,20 +813,8 @@ _INSERT = re.compile(
 _TRUNCATE = re.compile(
     r"(?is)^\s*TRUNCATE\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
-_DROP_TBL = re.compile(
-    r"(?is)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*(?:PURGE\s*)?;?\s*$")
 _REFRESH = re.compile(
     r"(?is)^\s*(?:REFRESH|INVALIDATE\s+METADATA)\s+"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
-_SHOW_FILES = re.compile(
-    r"(?is)^\s*SHOW\s+FILES\s+IN\s+(?P<tbl>[A-Za-z_][\w.]*)"
-    r"(?:\s+PARTITION\s*\((?P<spec>[^)]*)\))?\s*;?\s*$")
-_SHOW_PARTS = re.compile(
-    r"(?is)^\s*SHOW\s+(?:PARTITIONS|TABLE\s+STATS)\s+"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
-_COMPUTE = re.compile(
-    r"(?is)^\s*COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\s+"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
 _ALTER = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\b")
@@ -915,16 +892,18 @@ def _register(engine, display: str, phys: str, db: str | None,
     os.makedirs(loc, exist_ok=True)
     t = AcidTable(display=display, phys=phys, db=db, location=loc,
                   cols=cols, pcols=pcols, insert_only=insert_only,
-                  fmt=fmt)
-    t.fixture = fixture
-    engine.acid_tables[phys] = t
+                  fmt=fmt, fixture=fixture)
+    rec = stats.table(engine, phys)
+    rec.acid = t
     ns = engine.ns
     if db and db in ns.dbs:
         ns.register(db, phys.split("__")[-1]
                     if "__" in phys else display.split(".")[-1].lower(),
                     "table", phys)
     if not t.insert_only:
-        engine.acid_shadows[phys] = _shadow_name(t.phys)
+        rec.rowid = (_shadow_name(phys),
+                     [display, display.split(".")[-1]],
+                     [c for c, _ in cols + pcols])
     return t
 
 
@@ -945,8 +924,11 @@ def _split_name(engine, raw: str) -> tuple:
 
 def handle(engine, sql_text: str):
     """Intercept ACID statements on the ns-resolved text; returns a
-    summary DataFrame or None to fall through to the generic paths."""
-    reg = engine.acid_tables
+    summary DataFrame or None to fall through to the generic paths.
+    DROP is the engine's (Engine._sql_create_drop takes the record off
+    and hands its ACID state to `_drop`); the listings and COMPUTE
+    STATS are the plain tables' (partitions.py, Engine._compute_stats)
+    over the snapshot's files."""
     low = sql_text.lower()
     # CREATE (incl. CTAS) that makes a transactional table
     if re.match(r"(?is)^\s*create\s+(?:external\s+)?table\b", low):
@@ -955,25 +937,25 @@ def handle(engine, sql_text: str):
             return _create(engine, sql_text, insert_only=flav[0],
                            hive=False)
         return None
-    if not reg:
+    if not _tables(engine):
         return None
     m = _ALTER.match(sql_text)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             raise ValueError(
                 "AnalysisException: ALTER TABLE not supported on "
                 f"transactional (ACID) table: {t.display}")
     m = _DROP_STATS.match(sql_text)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             raise ValueError(
                 "AnalysisException: DROP STATS not supported on "
                 f"transactional (ACID) table: {t.display}")
     m = _INSERT.match(sql_text)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             if not t.insert_only:
                 raise ValueError(
@@ -982,7 +964,7 @@ def handle(engine, sql_text: str):
             return _insert_acid(engine, t, m, hive=False)
     m = _TRUNCATE.match(sql_text)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             if not t.insert_only:
                 raise ValueError(
@@ -994,33 +976,13 @@ def handle(engine, sql_text: str):
             _clear_stats(engine, t)
             refresh_views(engine)
             return _summary(engine, "Table has been truncated.")
-    m = _DROP_TBL.match(sql_text)
-    if m:
-        t = lookup(engine, m.group("tbl"))
-        if t is not None:
-            return _drop(engine, t)
     m = _REFRESH.match(sql_text)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             _refresh_snapshot(t)
             refresh_views(engine)
             return rows_df(engine.spark, [], "status string")
-    m = _SHOW_FILES.match(sql_text)
-    if m:
-        t = lookup(engine, m.group("tbl"))
-        if t is not None:
-            return _show_files(engine, t, m.group("spec"))
-    m = _SHOW_PARTS.match(sql_text)
-    if m:
-        t = lookup(engine, m.group("tbl"))
-        if t is not None:
-            return _show_partitions(engine, t)
-    m = _COMPUTE.match(sql_text)
-    if m:
-        t = lookup(engine, m.group("tbl"))
-        if t is not None:
-            return _compute_stats(engine, t, bool(m.group("inc")))
     return None
 
 
@@ -1036,18 +998,19 @@ def _clear_stats(engine, t: AcidTable) -> None:
 
 
 def _drop(engine, t: AcidTable):
-    reg = engine.acid_tables
+    """DROP TABLE of an ACID table: its record (when still stored),
+    its snapshot and row__id views, its files and its database
+    entry."""
     spark = engine.spark
     from pyspark.errors.exceptions.base import PySparkException
 
+    stats.drop(engine, t.phys)
     for v in (t.phys, _shadow_name(t.phys)):
         try:
             spark.catalog.dropTempView(v)
         except PySparkException:  # view never materialized
             pass
     shutil.rmtree(t.location, ignore_errors=True)
-    reg.pop(t.phys, None)
-    engine.acid_shadows.pop(t.phys, None)
     ns = engine.ns
     if t.db and t.db in ns.dbs:
         ns.dbs[t.db].pop(t.phys.split("__")[-1], None)
@@ -1060,7 +1023,7 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
     if not m:
         return None
     display, phys, db = _split_name(engine, m.group("tbl"))
-    if m.group("ine") and phys in engine.acid_tables:
+    if m.group("ine") and stats.peek(engine, phys).acid is not None:
         return _summary(engine, "Table already exists.")
     fmt = (m.group("fmt") or "").lower()
     fmt = {"textfile": "text", "orc": "orc",
@@ -1202,10 +1165,9 @@ def _with_hive_views(engine, fn):
     """Run `fn` with every ACID table's view rebuilt at the HIVE
     snapshot (Hive reads all committed write ids, not the engine's
     cached list), restoring the engine views afterwards."""
-    reg = engine.acid_tables
     swapped = []
     try:
-        for t in reg.values():
+        for t in _tables(engine):
             hv = build_view(engine, t, hw=t.highwater,
                             exc=set(t.aborted) | set(t.open_txns))
             hv.createOrReplaceTempView(t.phys)
@@ -1232,7 +1194,7 @@ def _display_base(t: AcidTable) -> str:
             f"{t.db or 'default'}.db/{name}")
 
 
-def _live_files(t: AcidTable, suffix: str, leaf: str) -> list:
+def _live_files(t: AcidTable, leaf: str) -> list:
     """(relpath, size) of the snapshot-selected files in one leaf —
     SHOW FILES lists the valid selection, not raw directory contents
     (obsolete deltas under a newer base are invisible)."""
@@ -1243,118 +1205,6 @@ def _live_files(t: AcidTable, suffix: str, leaf: str) -> list:
         if os.path.isfile(p):
             out.append((rel, os.path.getsize(p)))
     return out
-
-
-def _show_files(engine, t: AcidTable, spec: str | None):
-    from incubator_impala_spark.partitions import _human
-
-    rows = []
-    for suffix, leaf in _leaf_dirs(t):
-        if spec and suffix:
-            kvs = dict(i.split("=", 1) for i in suffix.split("/"))
-            keep = True
-            for item in spec.split(","):
-                if "=" in item:
-                    k, v = item.split("=", 1)
-                    if kvs.get(k.strip().strip("`").lower()) != \
-                            v.strip().strip("'\""):
-                        keep = False
-            if not keep:
-                continue
-        for rel, size in _live_files(t, suffix, leaf):
-            path = "/".join(x for x in (suffix, rel) if x)
-            rows.append((f"{_display_base(t)}/{path}",
-                         _human(size), suffix))
-    return rows_df(
-        engine.spark, rows, "Path string, Size string, Partition string")
-
-
-def _part_sort_key(t: AcidTable, suffix: str):
-    kvs = dict(i.split("=", 1) for i in suffix.split("/")) \
-        if suffix else {}
-    out = []
-    for p, ty in t.pcols:
-        v = kvs.get(p)
-        if ty in ("int", "bigint", "smallint", "tinyint"):
-            try:
-                out.append((0, int(v), ""))
-                continue
-            except (TypeError, ValueError):
-                pass
-        out.append((1, 0, str(v)))
-    return out
-
-
-def _show_partitions(engine, t: AcidTable):
-    from incubator_impala_spark.partitions import _human
-
-    spark = engine.spark
-    rec = stats.get(engine, t.phys)
-    nrows = -1 if rec.rows is None else rec.rows
-    fmt_disp = {"text": "TEXT", "orc": "ORC",
-                "parquet": "PARQUET"}[t.fmt]
-    if not t.pcols:
-        files = _live_files(t, "", t.location)
-        size = sum(s for _, s in files)
-        return rows_df(
-            spark, [(nrows, len(files), _human(size), "NOT CACHED",
-                     "NOT CACHED", fmt_disp, "false", _display_base(t))],
-            "`#Rows` bigint, `#Files` bigint, Size string, "
-            "`Bytes Cached` string, `Cache Replication` string, "
-            "Format string, `Incremental stats` string, "
-            "Location string")
-    rows, tot_files, tot_size = [], 0, 0
-    leaves = sorted(_leaf_dirs(t),
-                    key=lambda sl: _part_sort_key(t, sl[0]))
-    for suffix, leaf in leaves:
-        files = _live_files(t, suffix, leaf)
-        size = sum(s for _, s in files)
-        tot_files += len(files)
-        tot_size += size
-        kvs = parse_suffix(suffix)
-        rows.append(
-            tuple("NULL" if kvs.get(p) is None else str(kvs[p])
-                  for p, _ in t.pcols)
-            + (rec.parts.get(suffix, -1), len(files),
-               _human(size), "NOT CACHED", "NOT CACHED", fmt_disp,
-               "true" if suffix in rec.incremental else "false",
-               f"{_display_base(t)}/{suffix}"))
-    rows.append(("Total",) + ("",) * (len(t.pcols) - 1)
-                + (nrows, tot_files, _human(tot_size), "0B",
-                   "", "", "", ""))
-    schema = ", ".join(f"`{p}` string" for p, _ in t.pcols) + (
-        ", `#Rows` bigint, `#Files` bigint, Size string, "
-        "`Bytes Cached` string, `Cache Replication` string, "
-        "Format string, `Incremental stats` string, "
-        "Location string")
-    return rows_df(spark, rows, schema)
-
-
-def _compute_stats(engine, t: AcidTable, incremental: bool):
-    """COMPUTE [INCREMENTAL] STATS over the visible snapshot: the
-    shared one-scan aggregate (stats.compute) over the data columns
-    into the table's stats record, with each partition leaf's row
-    count, and the partition keys' NDV/#Nulls from the partition list
-    (as a plain table shows them)."""
-    refresh_views(engine)
-    df = engine.spark.table(t.phys)
-    rec = stats.record(engine, t.phys)
-    pnames = [p for p, _ in t.pcols]
-    leaves = [s for s, _ in _leaf_dirs(t)]
-    rec.rows = stats.compute(engine, t.phys, df,
-                             stats.scalar_columns(df.schema, pnames),
-                             pnames, leaves)
-    rec.computed = True
-    if t.pcols:
-        keys = stats.key_stats([parse_suffix(s) for s in leaves]) \
-            or dict.fromkeys(pnames, (0, 0))
-        for p, (ndv, nulls) in keys.items():
-            rec.cols[p.lower()] = {"ndv": ndv, "nulls": nulls}
-        if incremental:
-            rec.cover, rec.incremental = set(leaves), set(leaves)
-    return _summary(
-        engine, f"Updated 1 partition(s) and "
-                f"{len(t.cols)} column(s).")
 
 
 # ---------------------------------------------------------------------
@@ -1383,7 +1233,7 @@ def hive_sql(engine, stmt: str):
             return _promote(engine, m.group("tbl"), props)
     m = _HIVE_COMPACT.match(resolved)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             suffix = None
             if m.group("spec"):
@@ -1398,7 +1248,7 @@ def hive_sql(engine, stmt: str):
             return _summary(engine, "Compaction enqueued.")
     m = _ADD_PART.match(resolved)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             kvs = {k.strip().strip("`").lower():
                    v.strip().strip("'\"")
@@ -1412,18 +1262,18 @@ def hive_sql(engine, stmt: str):
             return _summary(engine, "New partition has been added.")
     m = _HIVE_DELETE.match(resolved)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             return _hive_delete(engine, t, m.group("where"))
     m = _HIVE_UPDATE.match(resolved)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             return _hive_update(engine, t, m.group("sets"),
                                 m.group("where"))
     m = _INSERT.match(resolved)
     if m:
-        t = lookup(engine, m.group("tbl"))
+        t = stats.peek(engine, m.group("tbl")).acid
         if t is not None:
             return _insert_acid(engine, t, m, hive=True)
         # Hive INSERT into a plain table writes Hive-named files
@@ -1609,12 +1459,12 @@ def _promote(engine, raw: str, props: dict):
     become 'original files' (write id 0) and every later write is
     transactional (AcidUtils original-file semantics)."""
     display, phys, db = _split_name(engine, raw)
-    if lookup(engine, raw) is not None:
+    if stats.peek(engine, raw).acid is not None:
         return _summary(engine, "Updated table.")
     spark = engine.spark
     tbl = phys if spark.catalog.tableExists(phys) else raw
     target = spark.table(tbl)
-    pnames = [c.lower() for c in partition_columns(spark, tbl)]
+    pnames = [c.lower() for c in partition_columns(engine, tbl)]
     cols = [(f.name.lower(), f.dataType.simpleString())
             for f in target.schema.fields
             if f.name.lower() not in pnames]
@@ -1687,26 +1537,20 @@ def prepare(engine, sql_text: str) -> str:
     data columns here).  Every match runs on the literal/comment-blind
     shadow, and star expansion is scoped to the select list whose
     FROM clause actually references a swapped relation."""
-    if any(t.dirty for t in engine.acid_tables.values()):
+    if any(t.dirty for t in _tables(engine)):
         refresh_views(engine)
     # backtick identifiers stay visible: `row__id` and a quoted table
     # spelling are references, not literals
     if not _ROWID_REF.search(sqlscan.shadow(sql_text, idents=False)):
         return sql_text
-    shmap = engine.acid_shadows
-    if not shmap:
-        return sql_text
     sql, swapped = sql_text, []
-    for phys, shadow in shmap.items():
-        t = engine.acid_tables.get(phys)
-        spellings = [phys]
-        if t is not None:
-            spellings.append(t.display)
-            spellings.append(t.display.split(".")[-1])
-        for q in engine.acid_fixture_quals.get(phys, []):
-            spellings.append(q)
+    for k, rec in engine.tables.items():
+        if rec.rowid is None:
+            continue
+        shadow, spellings, cols = rec.rowid
         hit = False
-        for sp in sorted(set(spellings), key=len, reverse=True):
+        for sp in sorted({stats.view_name(k), *spellings}, key=len,
+                         reverse=True):
             pat = re.compile(
                 rf"(?i)(?<![\w.`]){re.escape(sp)}(?![\w.])")
             new_text = dialect._shadow_sub(
@@ -1715,9 +1559,6 @@ def prepare(engine, sql_text: str) -> str:
                 sql = new_text
                 hit = True
         if hit:
-            cols = ([c for c, _ in t.cols + t.pcols]
-                    if t is not None
-                    else engine.acid_fixture_cols.get(phys))
             swapped.append((shadow, cols))
     if swapped:
         sql = _expand_stars(sql, swapped)
@@ -1743,19 +1584,13 @@ def register_fixture_acid(engine) -> None:
       rowId = ordinal within the file (full-acid-rowid.test values).
     """
     spark = engine.spark
-    reg = engine.acid_tables
-    quals = engine.acid_fixture_quals
-    fcols = engine.acid_fixture_cols
-    if "insert_only_transactional_table" not in reg:
+    if stats.peek(engine, "insert_only_transactional_table").acid is None:
         _register(engine, "functional.insert_only_transactional_table",
                   "insert_only_transactional_table", "functional",
                   [("col1", "int")], [], True, "text", fixture=True)
-        t = _register(engine,
-                      "functional_orc_def.full_transactional_table",
-                      "full_transactional_table", "functional_orc_def",
-                      [("col1", "int")], [], False, "orc",
-                      fixture=True)
-        quals[t.phys] = ["functional_orc_def.full_transactional_table"]
+        _register(engine, "functional_orc_def.full_transactional_table",
+                  "full_transactional_table", "functional_orc_def",
+                  [("col1", "int")], [], False, "orc", fixture=True)
     refresh_views(engine)
     # views over the plain fixture relations
     spark.sql(
@@ -1829,26 +1664,12 @@ def register_fixture_acid(engine) -> None:
         "CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT), "
         "'currenttransaction', CAST(0 AS BIGINT))", ap_cols)) \
         .createOrReplaceTempView("alltypes_promoted__acidrowid__")
-    engine.acid_shadows["alltypes_promoted"] = \
-        "alltypes_promoted__acidrowid__"
-    quals["alltypes_promoted"] = [
-        "functional_orc_def.alltypes_promoted",
-        "functional.alltypes_promoted"]
-    fcols["alltypes_promoted"] = ap_cols
-    for name in ("alltypestiny", "complextypestbl",
-                 "complextypestbl_deleted_rows",
-                 "complextypestbl_minor_compacted"):
-        engine.acid_shadows[name] = f"{name}__acidrowid__"
-        quals[name] = [f"functional_orc_def.{name}",
-                       f"functional.{name}"]
-        fcols[name] = [f.name for f in
-                       spark.table(name).schema.fields]
     # complextypestbl_minor_compacted additionally exists as a REAL
     # minor-compacted layout on disk (acid.test lists its files):
     # the 8 single-row write ids merged into delta_1_8, preserving
     # each row's original/current write id — written once, then the
     # registered table reads from the files like any ACID table
-    if "complextypestbl_minor_compacted" not in reg:
+    if stats.peek(engine, "complextypestbl_minor_compacted").acid is None:
         loc = os.path.join(engine._warehouse_dir(), "managed",
                            "complextypestbl_minor_compacted_orc_def")
         ddir = os.path.join(loc, "delta_0000001_0000008_v0000009")
@@ -1883,14 +1704,19 @@ def register_fixture_acid(engine) -> None:
         t.highwater = t.snap_hw = 8
         t.dirty = True
         refresh_views(engine)
+    # the five fixture shadows answer to the functional qualifiers too
+    for name in ("alltypes_promoted", "alltypestiny", "complextypestbl",
+                 "complextypestbl_deleted_rows",
+                 "complextypestbl_minor_compacted"):
+        stats.table(engine, name).rowid = (
+            f"{name}__acidrowid__",
+            [f"functional_orc_def.{name}", f"functional.{name}"],
+            [f.name for f in spark.table(name).schema.fields])
 
 
 def reset(engine, keep_fixtures: bool = True) -> None:
     """Per-test-file cleanup: drop non-fixture ACID tables and their
     views/dirs (the harness's hermetic-rerun contract)."""
-    reg = engine.acid_tables
-    for phys in list(reg):
-        t = reg[phys]
-        if keep_fixtures and getattr(t, "fixture", False):
-            continue
-        _drop(engine, t)
+    for t in _tables(engine):
+        if not (keep_fixtures and t.fixture):
+            _drop(engine, t)

@@ -101,11 +101,11 @@ def _col_def(item: str):
             c.replace("''", "'") if c is not None else None)
 
 
-def _partition_cols(spark, tbl: str) -> list[str]:
+def _partition_cols(engine, tbl: str) -> list[str]:
     from incubator_impala_spark.partitions import partition_columns
 
     try:
-        return partition_columns(spark, tbl)
+        return partition_columns(engine, tbl)
     except _PYSPARK_ERR:  # not a catalog table
         return []
 
@@ -131,7 +131,7 @@ def _overlay_for(engine, tbl: str):
     # semantics REQUIRE untouched data files, opts in per-file.
     if not engine.alter_in_place:
         return None
-    if _partition_cols(engine.spark, tbl):
+    if _partition_cols(engine, tbl):
         return None
     loc = engine._managed_dir(tbl)
     if not os.path.isdir(loc):
@@ -165,7 +165,7 @@ def _recreate(engine, tbl: str, exprs: list) -> None:
     leaves the table under its original or ``__alter_old`` name, never
     lost."""
     spark = engine.spark
-    pcols = _partition_cols(spark, tbl)
+    pcols = _partition_cols(engine, tbl)
     df = spark.table(tbl).select(exprs)
     tmp = f"{tbl}__alter_tmp"
     old = f"{tbl}__alter_old"
@@ -347,7 +347,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 for n, t, c in defs])
             _overlay_install(engine, tbl, logical)
             return _summary(spark, "Table columns have been replaced.")
-        pcols = _partition_cols(spark, tbl)
+        pcols = _partition_cols(engine, tbl)
         fields = [f for f in spark.table(tbl).schema.fields
                   if f.name not in pcols]
         exprs = []

@@ -214,7 +214,8 @@ class Engine:
         # ... with the reference's summary rows) — namespaces.py
         self.ns = Namespaces()
         # each table's catalog record (stats.py): stats, SORT BY,
-        # partition overrides, SHOW CREATE facets, schema overlay
+        # partition overrides, SHOW CREATE facets, schema overlay, ACID
+        # state and row__id shadow
         self.tables: dict[str, stats.TableRecord] = {}
         # PARQUET_ARRAY_RESOLUTION views (array_resolution.py):
         # {view name: {"location", "array_col", "elem_fields"}}
@@ -225,13 +226,6 @@ class Engine:
         # check}, and the TIMEZONE-following checked views' builders
         self.scan_checks: dict[str, dict] = {}
         self.tz_check_views: dict[str, object] = {}
-        # ACID tables and their row__id shadow views (acid.py), by
-        # physical name, and the fixture qualifiers / columns of the
-        # shadows that stand for fixture tables
-        self.acid_tables: dict[str, object] = {}
-        self.acid_shadows: dict[str, str] = {}
-        self.acid_fixture_quals: dict[str, list] = {}
-        self.acid_fixture_cols: dict[str, list] = {}
         if sf_dir:
             register_tables(self.spark, sf_dir)
 
@@ -375,7 +369,7 @@ class Engine:
                 ).createOrReplaceTempView(name)
             except (AnalysisException, ValueError, OSError):  # re-resolved next stmt
                 pass
-        if self.acid_tables or self.acid_shadows:
+        if any(rec.acid or rec.rowid for rec in self.tables.values()):
             # ACID snapshot views rebuild before the statement plans;
             # row__id references swap to the shadow views (acid.py)
             from incubator_impala_spark import acid
@@ -420,9 +414,11 @@ class Engine:
         the record goes before the statement runs and comes back when
         the statement fails or the dropped object is still there, and
         an IF NOT EXISTS no-op over an existing object keeps it (the
-        reference reflects the actual catalog). A CREATE that takes effect records its SORT BY and
-        SHOW CREATE facets; a DROP TABLE first clears the warehouse
-        directory of a table the catalog does not know."""
+        reference reflects the actual catalog). A CREATE that takes
+        effect records its SORT BY and SHOW CREATE facets; a DROP TABLE
+        first clears the warehouse directory of a table the catalog
+        does not know. An ACID table is its record: its DROP removes
+        the views and files of the record taken off (acid._drop)."""
         from incubator_impala_spark import showcreate
 
         sql_text = m.string
@@ -430,13 +426,18 @@ class Engine:
         create = m.group("op").lower() == "create"
         if create and m.group("ine"):
             try:
-                if self.spark.catalog.tableExists(name):
+                if self.spark.catalog.tableExists(name) \
+                        or stats.peek(self, name).acid is not None:
                     return self._sql_stmt(sql_text)
             except AnalysisException:  # unresolvable name: create
                 pass
         elif not create and m.group("kind").lower() == "table":
             self.clear_orphan(name)
         old = stats.drop(self, name)
+        if not create and old is not None and old.acid is not None:
+            from incubator_impala_spark import acid
+
+            return acid._drop(self, old.acid)
         try:
             out = self._sql_stmt(sql_text)
         except Exception:
@@ -507,7 +508,8 @@ class Engine:
         # namespace shim: engine-owned db references become physical
         # (mangled) names; db-scoped DDL returns its summary rows here
         sql_text = self.ns.resolve(sql_text)
-        if self.acid_tables or "transactional" in sql_text.lower() \
+        if any(rec.acid for rec in self.tables.values()) \
+                or "transactional" in sql_text.lower() \
                 or self.default_transactional_type:
             # ACID statement surface (acid.py): transactional CREATEs
             # and every statement touching a registered ACID table
@@ -647,7 +649,7 @@ class Engine:
                         rec.incremental -= dropped
                         stats.refresh_incremental(
                             self, tbl,
-                            partitions.partition_columns(self.spark, tbl))
+                            partitions.partition_columns(self, tbl))
                 except (*_SPARK_ANY, KeyError):
                     pass  # table dropped / cover emptied
             return rows_df(
@@ -780,7 +782,7 @@ class Engine:
         rec = stats.get(self, tbl)
         try:
             pcols = [c.lower() for c in
-                     partitions.partition_columns(self.spark, tbl)]
+                     partitions.partition_columns(self, tbl)]
         except AnalysisException:  # unknown table
             pcols = []
         pstats: dict[str, tuple] = {}
@@ -891,13 +893,14 @@ class Engine:
         planner consumes) and returns the reference's summary row
         'Updated N partition(s) and M column(s).'
         (ComputeStatsStmt.java; N = partitions touched, M = columns
-        with fresh stats)."""
+        with fresh stats). An ACID table computes over its snapshot
+        view, with its partitions and location from its record."""
         tbl = m.group("tbl")
         cols_g = m.group("cols")
         spec = (m.group("part") or "").strip()
         pcols = []
         try:
-            pcols = partitions.partition_columns(self.spark, tbl)
+            pcols = partitions.partition_columns(self, tbl)
         except _SPARK_ERR:
             pass
         wanted = stats.scalar_columns(self.spark.table(tbl).schema, pcols)
@@ -914,8 +917,8 @@ class Engine:
                     f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
         except _SPARK_ERR:
             pass          # temp-view fixtures: stats are advisory
-        parts = {r[0] for r in self.spark.sql(
-            f"SHOW PARTITIONS {tbl}").collect()} if pcols else set()
+        parts = {raw for raw, _ in partitions._partitions(self, tbl)} \
+            if pcols else set()
         hit = {partitions.part_suffix(kv) for kv in
                partitions.match_partitions(self, tbl, spec)} \
             if spec and pcols else set()
@@ -1241,7 +1244,7 @@ class Engine:
         if not created:
             df = self.spark.table(src)
             # temp views carry none
-            pcols = partitions.partition_columns(self.spark, src)
+            pcols = partitions.partition_columns(self, src)
             if not pcols:
                 from incubator_impala_spark.sources.functional import (
                     PARTITIONED_BY,
@@ -1314,7 +1317,7 @@ class Engine:
         tcols = target.columns
         ttypes = dict(zip(tcols, [f.dataType.simpleString()
                                   for f in target.schema.fields]))
-        pcols = partitions.partition_columns(self.spark, tbl)
+        pcols = partitions.partition_columns(self, tbl)
         static: dict[str, str] = {}
         dyn: list[str] = []
         for item in sqlscan.split_top(m.group("part") or ""):
@@ -1493,6 +1496,9 @@ class Engine:
         return os.path.join(wh, rel)
 
     def _table_location(self, table: str) -> str:
+        t = stats.peek(self, table).acid
+        if t is not None:
+            return t.location
         for r in self.spark.sql(
                 f"DESCRIBE TABLE EXTENDED {table}").collect():
             if r["col_name"] == "Location":

@@ -585,7 +585,7 @@ def _annotate_catalog_stats(engine, root: _Node, relations) -> None:
             if (t.tableType or "").upper() not in (
                     "MANAGED", "EXTERNAL"):
                 return
-            pcols = partition_columns(spark, flat)
+            pcols = partition_columns(engine, flat)
         except (_PYSPARK_ERR, *_JVM_ERRS):  # not a catalog table
             return
         rec = stats.get(engine, flat)

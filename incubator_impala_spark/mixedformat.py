@@ -124,7 +124,7 @@ def build_view(engine, phys: str) -> None:
     spark.catalog.dropTempView(phys)
     try:
         full = spark.table(phys)
-        pcols = _parts.partition_columns(spark, phys)
+        pcols = _parts.partition_columns(engine, phys)
     except AnalysisException:  # table dropped out from under us
         stats.peek(engine, phys).mixed = False
         return

@@ -454,10 +454,14 @@ class Namespaces:
     # -- object ops -----------------------------------------------------
 
     def _drop_object(self, engine, db: str, obj: str, info: dict):
+        """Drop one object of `db` with its catalog record: a table
+        through the engine's DROP path (so an ACID table takes its
+        views and files along), a view here."""
         phys = info.get("phys") or self.mangle(db, obj)
         if info.get("kind") == "table":
-            engine.spark.sql(f"DROP TABLE IF EXISTS {phys}")
+            engine.sql(f"DROP TABLE IF EXISTS {phys}")
         else:
+            stats.drop(engine, phys)
             engine.spark.catalog.dropTempView(phys)
 
     def _create_fn(self, engine, m: re.Match):
@@ -605,7 +609,7 @@ class Namespaces:
         stats.put(engine, new, rec)
         if info.get("kind") == "table":
             try:
-                if partitions.partition_columns(spark, new):
+                if partitions.partition_columns(engine, new):
                     # catalog rename loses partition entries; rebuild
                     spark.sql(f"MSCK REPAIR TABLE {new}")
             except Exception:  # noqa: BLE001

@@ -30,11 +30,13 @@ import json
 import os
 import re
 import urllib.parse
+from decimal import Decimal, InvalidOperation
 
 from pyspark.errors.exceptions.base import (
     PySparkException as _PYSPARK_ERR,
 )
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from incubator_impala_spark import sqlscan, stats
 from incubator_impala_spark.session import rows_df
@@ -42,26 +44,75 @@ from incubator_impala_spark.session import rows_df
 _NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
-def partition_columns(spark, tbl: str) -> list[str]:
-    """The table's partition column names in declaration order, read
-    from the session catalog's table metadata: no Spark job (the
-    catalog API's column listing walks a Dataset and runs two). Empty
-    for a temp view; an unknown table raises AnalysisException."""
+def _key_fields(engine, tbl: str) -> list[tuple[str, str]]:
+    """(name, type) of the table's partition columns in declaration
+    order: an ACID table's from its record, any other's from the
+    session catalog's table metadata, with no Spark job (the catalog
+    API's column listing walks a Dataset and runs two). Empty for a
+    temp view; an unknown table raises AnalysisException."""
+    t = stats.peek(engine, tbl).acid
+    if t is not None:
+        return list(t.pcols)
     # `db.t` in one pair of backticks names db.t, as SHOW PARTITIONS
     # spells it
     name = re.sub(r"^`([^`]*)`$", r"\1", tbl.strip())
     name = re.sub(r"(?i)^`?spark_catalog`?\.", "", name)
-    state = spark._jsparkSession.sessionState()
+    state = engine.spark._jsparkSession.sessionState()
     meta = state.catalog().getTempViewOrPermanentTableMetadata(
         state.sqlParser().parseTableIdentifier(name))
-    return [f["name"] for f in
-            json.loads(meta.partitionSchema().json())["fields"]]
+    schema = StructType.fromJson(json.loads(meta.partitionSchema().json()))
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def partition_columns(engine, tbl: str) -> list[str]:
+    """The table's partition column names in declaration order."""
+    return [n for n, _ in _key_fields(engine, tbl)]
+
+
+def _typed(value: str, ty: str):
+    """A partition value as its key type orders it."""
+    if ty in ("tinyint", "smallint", "int", "bigint"):
+        return int(value)
+    if ty in ("float", "double"):
+        return float(value)
+    if ty.startswith("decimal"):
+        return Decimal(value)
+    return value
+
+
+def _partitions(engine, tbl: str) -> list[tuple[str, dict]]:
+    """(directory suffix, {col: value-or-None}) of each partition, in
+    the one listing order: typed key values, NULL last. An ACID
+    table's partitions are its snapshot's leaves, any other table's
+    the catalog's."""
+    t = stats.peek(engine, tbl).acid
+    if t is not None:
+        from incubator_impala_spark import acid
+
+        if not t.pcols:
+            raise ValueError(f"Table is not partitioned: {t.display}")
+        suffixes = [s for s, _ in acid._leaf_dirs(t)]
+    else:
+        suffixes = [r[0] for r in
+                    engine.spark.sql(f"SHOW PARTITIONS {tbl}").collect()]
+    types = dict(_key_fields(engine, tbl))
+
+    def order(item):
+        out = []
+        for c, v in item[1].items():
+            try:
+                out.append((v is None, 0, 0 if v is None
+                            else _typed(v, types.get(c, "string"))))
+            except (ValueError, InvalidOperation):  # not of its type
+                out.append((False, 1, v))
+        return out
+
+    return sorted(((s, parse_suffix(s)) for s in suffixes), key=order)
 
 
 def list_partitions(engine, tbl: str) -> list[dict]:
-    """[{col: value-or-None}] straight from the catalog."""
-    return [parse_suffix(r[0])
-            for r in engine.spark.sql(f"SHOW PARTITIONS {tbl}").collect()]
+    """[{col: value-or-None}] in listing order."""
+    return [kv for _, kv in _partitions(engine, tbl)]
 
 
 def parse_suffix(suffix: str) -> dict:
@@ -92,14 +143,18 @@ def _translate_pred(spec: str) -> str:
 def match_partitions(engine, tbl: str, spec: str | None) -> list[dict]:
     """Partitions of `tbl` whose key values satisfy `spec` (all of
     them when spec is None/empty). One inline-relation query total."""
-    parts = list_partitions(engine, tbl)
+    return [kv for _, kv in _match(engine, tbl, spec)]
+
+
+def _match(engine, tbl: str, spec: str | None) -> list[tuple[str, dict]]:
+    parts = _partitions(engine, tbl)
     if not spec or not spec.strip() or not parts:
         return parts
     spark = engine.spark
     types = {f.name.lower(): f.dataType.simpleString()
              for f in spark.table(tbl).schema.fields}
     rows = []
-    for i, kv in enumerate(parts):
+    for i, (_, kv) in enumerate(parts):
         assigns = ", ".join(
             ("CAST(NULL AS {t}) AS `{k}`" if v is None
              else "CAST('{v}' AS {t}) AS `{k}`").format(
@@ -182,15 +237,40 @@ def _human(n: int) -> str:
     return f"{n}B"
 
 
+def _source(engine, tbl: str):
+    """Where the listings read the table: (its directory, the files
+    of a partition directory as [(path under it, size)], the format
+    of a partition given its suffix and files, the display base of
+    its paths). An ACID table lists its snapshot's live files; any
+    other table its directory contents."""
+    rec = stats.peek(engine, tbl)
+    loc, t = engine._table_location(tbl), rec.acid
+    if t is not None:
+        from incubator_impala_spark import acid
+
+        return (loc, lambda d: acid._live_files(t, d),
+                lambda suffix, files: t.fmt.upper(), acid._display_base(t))
+
+    def fmt(suffix: str, files: list) -> str:
+        return rec.formats.get(suffix, (_format_of(files) if files
+                                        else _meta_format(engine, tbl))
+                               or "TEXT")
+
+    return loc, _files_in, fmt, _display_location(engine, tbl)
+
+
+_LISTING = ("`#Files` bigint, Size string, `Bytes Cached` string, "
+            "`Cache Replication` string, Format string, "
+            "`Incremental stats` string, Location string")
+
+
 def show_partitions(engine, tbl: str) -> DataFrame:
     """Impala's SHOW PARTITIONS listing + 'Total' row."""
     spark = engine.spark
-    pcols = partition_columns(spark, tbl)
-    parts = list_partitions(engine, tbl)
-    parts.sort(key=lambda kv: [
-        (v is not None, str(v)) for v in kv.values()])
-    table = stats.peek(engine, tbl)
-    rec = table.stats
+    pcols = partition_columns(engine, tbl)
+    parts = _partitions(engine, tbl)
+    loc, files_in, fmt, base = _source(engine, tbl)
+    rec = stats.get(engine, tbl)
     # stats-extrapolation tables carry an extra EXTRAP #ROWS column
     # (FeFsTable.Utils.getExtrapolatedNumRows: bytes * rows/totalSize)
     extrap_on = False
@@ -210,9 +290,9 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         return max(1, round(nbytes * nrows_stat / stat_bytes))
 
     rows, tot_files, tot_size = [], 0, 0
-    for kv in parts:
+    for raw, kv in parts:
         suffix = part_suffix(kv)
-        files = _files_in(_part_dir(engine, tbl, suffix))
+        files = files_in(os.path.join(loc, raw))
         size = sum(s for _, s in files)
         tot_files += len(files)
         tot_size += size
@@ -220,13 +300,10 @@ def show_partitions(engine, tbl: str) -> DataFrame:
             tuple("NULL" if v is None else str(v) for v in kv.values())
             + (rec.parts.get(suffix, -1),)
             + ((_extrap(size),) if extrap_on else ())
-            + (len(files), _human(size),
-               "NOT CACHED", "NOT CACHED",
-               table.formats.get(suffix,
-                                 (_format_of(files) if files
-                                  else _meta_format(engine, tbl)) or "TEXT"),
+            + (len(files), _human(size), "NOT CACHED", "NOT CACHED",
+               fmt(suffix, files),
                "true" if suffix in rec.incremental else "false",
-               _display_location(engine, tbl, suffix)))
+               f"{base}/{suffix}"))
     nrows = -1 if rec.rows is None else rec.rows
     rows.append(("Total",) + ("",) * (len(pcols) - 1)
                 + (nrows,)
@@ -235,52 +312,37 @@ def show_partitions(engine, tbl: str) -> DataFrame:
                    "", "", "", ""))
     schema = ", ".join(f"`{c}` string" for c in pcols) + (
         ", `#Rows` bigint, "
-        + ("`Extrap #Rows` bigint, " if extrap_on else "")
-        + "`#Files` bigint, Size string, "
-        "`Bytes Cached` string, `Cache Replication` string, "
-        "Format string, `Incremental stats` string, Location string")
+        + ("`Extrap #Rows` bigint, " if extrap_on else "") + _LISTING)
     return rows_df(spark, rows, schema)
 
 
 def show_table_stats(engine, tbl: str) -> DataFrame:
     """SHOW TABLE STATS: the partition listing for partitioned tables
     (identical to SHOW PARTITIONS), one summary row otherwise."""
-    spark = engine.spark
     try:
-        pcols = partition_columns(spark, tbl)
+        pcols = partition_columns(engine, tbl)
     except _PYSPARK_ERR:  # not a catalog table
         pcols = []
     if pcols:
         return show_partitions(engine, tbl)
-    files = _files_in(engine._table_location(tbl))
-    size = sum(s for _, s in files)
+    loc, files_in, fmt, base = _source(engine, tbl)
+    files = files_in(loc)
     nrows = stats.get(engine, tbl).rows
-    row = (-1 if nrows is None else nrows, len(files), _human(size),
-           "NOT CACHED", "NOT CACHED",
-           (_format_of(files) if files
-            else _meta_format(engine, tbl)) or "TEXT", "false",
-           _display_location(engine, tbl))
-    return rows_df(
-        spark, [row], "`#Rows` bigint, `#Files` bigint, Size string, "
-                      "`Bytes Cached` string, `Cache Replication` string, "
-                      "Format string, `Incremental stats` string, "
-                      "Location string")
+    row = (-1 if nrows is None else nrows, len(files),
+           _human(sum(s for _, s in files)), "NOT CACHED", "NOT CACHED",
+           fmt("", files), "false", base)
+    return rows_df(engine.spark, [row], "`#Rows` bigint, " + _LISTING)
 
 
 def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
     """SHOW FILES IN t [PARTITION (pred)] — (Path, Size, Partition)."""
-    spark = engine.spark
-    pcols = partition_columns(spark, tbl)
-    rows = []
-    if pcols:
-        for kv in match_partitions(engine, tbl, spec):
-            suffix = part_suffix(kv)
-            for f, s in _files_in(_part_dir(engine, tbl, suffix)):
-                rows.append((
-                    _display_location(engine, tbl, f"{suffix}/{f}"),
-                    _human(s), suffix))
-    else:
-        for f, s in _files_in(engine._table_location(tbl)):
-            rows.append((_display_location(engine, tbl, f),
-                         _human(s), ""))
-    return rows_df(spark, rows, "Path string, Size string, Partition string")
+    parts = (_match(engine, tbl, spec)
+             if partition_columns(engine, tbl) else [("", {})])
+    loc, files_in, _, base = _source(engine, tbl)
+    rows = [(f"{base}/{path}", _human(s), suffix)
+            for raw, kv in parts
+            for suffix in [part_suffix(kv)]
+            for f, s in files_in(os.path.join(loc, raw))
+            for path in ["/".join(x for x in (suffix, f) if x)]]
+    return rows_df(engine.spark, rows,
+                   "Path string, Size string, Partition string")

@@ -29,7 +29,7 @@ from incubator_impala_spark.queries.tpcds_real import (
 )
 from incubator_impala_spark.sources.tpch_full import (
     duckdb_oracle_sql,
-    register_tpch_full,
+    full_schema_views,
 )
 
 _SQL_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -77,9 +77,10 @@ def _register(label: str) -> None:
     def fn(spark: SparkSession, sf_dir: str, _t=text) -> DataFrame:
         # sf_dir intentionally unused: the full-schema fixture is its
         # own (fixed-size) dataset; the driver's subset tables cannot
-        # run these texts (no partsupp / commitdate / phone columns)
-        register_tpch_full(spark)
-        return spark.sql(translate(_t))
+        # run these texts (no partsupp / commitdate / phone columns),
+        # and keep their names once the text is analyzed
+        with full_schema_views(spark):
+            return spark.sql(translate(_t))
 
     fn.__name__ = name
     fn.__doc__ = (

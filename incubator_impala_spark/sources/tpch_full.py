@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import os
 import re
+import weakref
+from contextlib import contextmanager
 
 from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
@@ -54,6 +56,38 @@ def register_tpch_full(spark: SparkSession) -> None:
     for t in TPCH_TABLES:
         spark.read.parquet(table_path(t)).createOrReplaceTempView(t)
     spark.conf.set(_REGISTERED_KEY, "1")
+
+
+# per session: the fixture's temp views, to put back under the bare
+# names without reading the files again
+_FULL_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+@contextmanager
+def full_schema_views(spark: SparkSession):
+    """The full-schema fixture under the bare TPC-H names for the
+    body, with the session's own relations of those names back in
+    place afterwards: the driver's subset views share the names, and
+    a DataFrame built in the body keeps the fixture (Spark analyzes
+    it when it is built)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    saved = {t: catalog.getRawTempView(t) for t in TPCH_TABLES}
+    full = _FULL_VIEWS.get(spark)
+    if full is None:
+        register_tpch_full(spark)
+        full = _FULL_VIEWS[spark] = {
+            t: catalog.getRawTempView(t).get() for t in TPCH_TABLES}
+    else:
+        for t, view in full.items():
+            catalog.createTempView(t, view, True)
+    try:
+        yield
+    finally:
+        for t, view in saved.items():
+            if view.isDefined():
+                catalog.createTempView(t, view.get(), True)
+            else:
+                catalog.dropTempView(t)
 
 
 def referenced_tables(sql: str) -> list[str]:

@@ -9,7 +9,9 @@ physical table with its database kept. So `t`, `default.t` and `` `t`
 `` share a record, and `a.t` and `b.t` do not.
 
 * `drop()` / `put()`: DROP TABLE/VIEW, a CREATE that takes effect,
-  ALTER TABLE ... RENAME, and the undo of a statement that fails;
+  ALTER TABLE ... RENAME, and the undo of a statement that fails; a
+  transactional table's ACID state is part of its record, so dropping
+  the record is how an ACID table leaves the registry;
 * `clear()`: TRUNCATE, DROP STATS and the ACID write path (stats only);
 * `table()` / `peek()`: the record, stored or read-only;
 * `compute()`: the one COMPUTE STATS aggregate and fill (table-level
@@ -23,11 +25,15 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
+
+if TYPE_CHECKING:
+    from incubator_impala_spark.acid import AcidTable
 
 
 @dataclass
@@ -67,6 +73,12 @@ class TableRecord:
     # logical schema of a metadata-only ALTER overlay, read from the
     # table's files (schema_resolution.py)
     overlay: StructType | None = None
+    # a transactional table's ACID state (acid.py)
+    acid: AcidTable | None = None
+    # the row__id shadow standing for the table in a statement that
+    # names row__id: (shadow view, spellings besides the physical
+    # name, columns a bare `*` expands to)
+    rowid: tuple[str, list, list] | None = None
 
 
 def key(engine, name: str) -> str:

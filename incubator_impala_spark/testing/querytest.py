@@ -47,7 +47,7 @@ from dataclasses import dataclass, field
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
-from incubator_impala_spark import options, sqlscan, stats
+from incubator_impala_spark import acid, options, sqlscan, stats
 
 # catalog/DDL probe guard: Spark analysis errors + JVM-side failures
 # surfacing through the py4j bridge
@@ -641,12 +641,9 @@ def run_blocks(engine, blocks: list[Block], *,
     for vname in engine.avro_stale:
         engine.spark.catalog.dropTempView(vname)
     engine.avro_stale.clear()
-    if engine.acid_tables:
-        # a prior file's ACID tables must not leak (registry + temp
-        # views + managed dirs); fixtures stay
-        from incubator_impala_spark import acid
-
-        acid.reset(engine)
+    # a prior file's ACID tables must not leak (record + temp views +
+    # managed dirs); fixtures stay
+    acid.reset(engine)
     # array_overlays are installed by the per-file SETUP hook (which
     # runs BEFORE run_blocks), so they are not cleared here; each hook
     # replaces its own entries. Metadata-only ALTER overlays and
@@ -759,16 +756,7 @@ def run_blocks(engine, blocks: list[Block], *,
     except ImportError:  # functional fixture module absent
         pass
     for name in created:
-        try:
-            engine.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            wh = engine.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse")
-            shutil.rmtree(
-                os.path.join(re.sub(r"^file:", "", wh),
-                             name.split(".")[-1].lower()),
-                ignore_errors=True)
-        except (*_SPARK_ERR, OSError):  # unresolvable stale name
-            pass
+        _drop_leftover(engine, name)
     out: list[BlockResult] = []
     for b in blocks:
         if b.shell and not all(_emulate_shell(engine, sh, database)
@@ -906,17 +894,21 @@ def _preclear_create(engine, s: str) -> None:
         # self-LIKE (template-target recreation): dropping first would
         # destroy the clone source; the engine truncates instead
         return
-    name = engine.ns.resolve(name)
+    _drop_leftover(engine, name)
+
+
+def _drop_leftover(engine, name: str) -> None:
+    """Drop table `name` through the engine's DROP path (its catalog
+    record and any ACID state go with it), then clear the warehouse
+    directory a table of that name would occupy."""
     try:
-        engine.spark.sql(f"DROP TABLE IF EXISTS {name}")
-    except _SPARK_ERR:  # e.g. a temp view shadows the name
+        engine.sql(f"DROP TABLE IF EXISTS {name}")
+    except (*_SPARK_ERR, ValueError):  # unresolvable stale name
         pass
-    wh = engine.spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(
-        os.path.join(re.sub(r"^file:", "", wh),
-                     name.split(".")[-1].lower()),
-        ignore_errors=True)
+    try:
+        engine.clear_orphan(engine.ns.resolve(name))
+    except _SPARK_ERR:  # name not parseable as a table
+        pass
 
 
 def _rewrite_stmt(s: str, rewrite, table_rewrites: dict | None) -> str:

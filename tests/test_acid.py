@@ -180,7 +180,7 @@ def test_compaction_preserves_open_write_ids(acid_engine):
     """Hive compaction only covers committed write ids below the
     minimum OPEN id: a staged streaming delta with an open txn must
     survive the compactor's cleaner and become visible at commit."""
-    from incubator_impala_spark import acid
+    from incubator_impala_spark import acid, stats
 
     eng = acid_engine
     db = "qacid_compactopen"
@@ -192,7 +192,7 @@ def test_compaction_preserves_open_write_ids(acid_engine):
                 "tblproperties('transactional'='true')")
         eng.hive_sql("insert into opencomp values (1)")  # wid 1
         eng.sql("refresh opencomp")
-        t = acid.lookup(eng, "opencomp")
+        t = stats.peek(eng, "opencomp").acid
         # stage an engine-format delta for wid 2 and leave it OPEN
         w = acid._alloc(t)
         assert w == 2
@@ -222,7 +222,7 @@ def test_full_acid_ctas_rejected_engine_side(acid_engine):
     reference rejects it (InsertStmt.ensureTableNotFullAcid) and no
     table is created.  A Hive-side full-ACID CTAS works and its rows
     carry real (non-null) row__id values."""
-    from incubator_impala_spark import acid
+    from incubator_impala_spark import stats
 
     eng = acid_engine
     db = "qacid_ctasfull"
@@ -234,7 +234,7 @@ def test_full_acid_ctas_rejected_engine_side(acid_engine):
             eng.sql("create table ctasfull stored as orc "
                     "tblproperties('transactional'='true') "
                     "as select 1 as i")
-        assert acid.lookup(eng, "ctasfull") is None
+        assert stats.peek(eng, "ctasfull").acid is None
         eng.hive_sql("create table ctashive stored as orc "
                      "tblproperties('transactional'='true') "
                      "as select 7 as i")
@@ -254,7 +254,7 @@ def test_large_insert_only_write_keeps_parallelism(acid_engine):
     Hive-named file per task (the reference's per-node layout)."""
     import os as _os
 
-    from incubator_impala_spark import acid
+    from incubator_impala_spark import stats
 
     eng = acid_engine
     db = "qacid_bigwrite"
@@ -266,7 +266,7 @@ def test_large_insert_only_write_keeps_parallelism(acid_engine):
                 "tblproperties('transactional'='true',"
                 "'transactional_properties'='insert_only')")
         eng.sql("insert into bigins select id as i from range(5000)")
-        t = acid.lookup(eng, "bigins")
+        t = stats.peek(eng, "bigins").acid
         files = [f for f in _os.listdir(
             _os.path.join(t.location, "delta_1_1"))
             if not f.startswith((".", "_"))]
@@ -373,7 +373,7 @@ def test_acid_row_validation(acid_engine):
     """test_acid_row_validation.py: a Hive Streaming V2 side-file
     (write ids 1-2 in one delta_1_2 ORC) with both transactions OPEN;
     commit one txn between fragments and verify row validation."""
-    from incubator_impala_spark import acid
+    from incubator_impala_spark import acid, stats
     from incubator_impala_spark.testing import querytest as qt
 
     eng = acid_engine
@@ -383,7 +383,7 @@ def test_acid_row_validation(acid_engine):
     eng.ns.current = db
     eng.sql("CREATE TABLE streaming (a string, b string) "
             "STORED AS ORC TBLPROPERTIES('transactional'='true')")
-    t = acid.lookup(eng, "streaming")
+    t = stats.peek(eng, "streaming").acid
     delta = os.path.join(t.location, "delta_1_2")
     os.makedirs(delta, exist_ok=True)
     shutil.copy(os.path.join(REF_DATA, "streaming.orc"),

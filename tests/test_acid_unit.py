@@ -115,11 +115,15 @@ def test_compacted_base_dir_grammar(tmp_path):
 
 
 class _PrepEng:
+    """Catalog records carrying only row__id shadows."""
+
     def __init__(self, shadows_map, cols_map):
-        self.acid_tables = {}
-        self.acid_shadows = shadows_map
-        self.acid_fixture_quals = {}
-        self.acid_fixture_cols = cols_map
+        from incubator_impala_spark.stats import TableRecord
+
+        self.tables = {
+            f"default.{phys}": TableRecord(
+                rowid=(shadow, [], cols_map[phys]))
+            for phys, shadow in shadows_map.items()}
 
 
 def test_rowid_swap_masks_string_literals():
@@ -184,15 +188,10 @@ def test_rowid_star_expansion_is_select_list_only():
     stars (Impala's * never expands the hidden row__id), and must not
     touch count(*) or a multiplication operator."""
 
-    class _Eng:
-        acid_tables = {}
-        acid_shadows = {"streaming": "streaming__acidrowid__"}
-        acid_fixture_quals = {}
-        acid_fixture_cols = {"streaming": ["a", "b"]}
-
     from incubator_impala_spark import acid
 
-    eng = _Eng()
+    eng = _PrepEng({"streaming": "streaming__acidrowid__"},
+                   {"streaming": ["a", "b"]})
     out = acid.prepare(eng, "select row__id.*, * from streaming")
     assert "streaming__acidrowid__" in out
     assert re.search(r"row__id\.\*,\s*a, b\s+from", out)

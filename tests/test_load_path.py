@@ -145,21 +145,21 @@ def test_partition_columns_match_the_catalog_listing(eng, spark):
     listed = [c.name for c in spark.catalog.listColumns("lp_keys")
               if c.isPartition]
     (got, jobs) = _jobs(spark, lambda: partitions.partition_columns(
-        spark, "lp_keys"))
+        eng, "lp_keys"))
     assert got == listed == ["b", "a", "c"]
     assert jobs == 0
     for spelling in ("default.lp_keys", "`lp_keys`", "LP_KEYS",
                      "spark_catalog.default.lp_keys"):
-        assert partitions.partition_columns(spark, spelling) == listed
+        assert partitions.partition_columns(eng, spelling) == listed
     eng.sql("DROP TABLE lp_keys")
 
 
-def test_partition_columns_of_views_and_missing_tables(spark):
+def test_partition_columns_of_views_and_missing_tables(eng, spark):
     spark.sql("CREATE OR REPLACE TEMP VIEW lp_view AS SELECT 1 AS y")
-    assert partitions.partition_columns(spark, "lp_view") == []
+    assert partitions.partition_columns(eng, "lp_view") == []
     spark.catalog.dropTempView("lp_view")
     with pytest.raises(AnalysisException):
-        partitions.partition_columns(spark, "lp_no_such_table")
+        partitions.partition_columns(eng, "lp_no_such_table")
 
 
 def test_insert_summary_sorts_like_spark(eng):

@@ -10,7 +10,10 @@ STATS:
   rows give in a plain parquet table (string Avg Size is the average,
   booleans get #Trues and #Falses), CHAR/VARCHAR columns included;
 - a partitioned insert-only ACID table's key columns get the values a
-  plain table's get, from the partition list;
+  plain table's get, from the partition list, and its SHOW PARTITIONS,
+  SHOW TABLE STATS and COMPUTE [INCREMENTAL] STATS summaries match the
+  plain table's;
+- DROP DATABASE ... CASCADE drops an ACID table with its state;
 - incremental stats follow a rename, and die with a dropped table;
 - DROP INCREMENTAL STATS with a partition predicate drops the matched
   partitions only.
@@ -135,6 +138,13 @@ def test_acid_char_varchar_columns_read_and_compute_stats(eng):
         eng.sql(f"DROP TABLE {tbl}")
 
 
+def _listing(eng, stmt: str) -> list[dict]:
+    """The rows of a SHOW PARTITIONS / TABLE STATS statement, Location
+    dropped (it names each table's own directory)."""
+    return [{k: v for k, v in r.asDict().items() if k != "Location"}
+            for r in eng.sql(stmt).collect()]
+
+
 def test_partitioned_acid_compute_stats_matches_plain_table(eng):
     # the key column's NDV counts the NULL partition and #Nulls counts
     # NULL partitions, not NULL rows; a string key has no sizes
@@ -143,16 +153,102 @@ def test_partitioned_acid_compute_stats_matches_plain_table(eng):
     cols = "(x INT, s STRING) PARTITIONED BY (y STRING) STORED AS PARQUET"
     _recreate(eng, "sst_acidp", f"{cols} {_ACID}")
     _recreate(eng, "sst_flatp", cols)
+    summary = {}
     for tbl in ("sst_acidp", "sst_flatp"):
         eng.sql(f"INSERT INTO {tbl} PARTITION (y) VALUES {rows}")
-        eng.sql(f"COMPUTE STATS {tbl}")
+        summary[tbl] = eng.sql(f"COMPUTE STATS {tbl}").collect()[0][0]
+    assert summary["sst_acidp"] == summary["sst_flatp"] == \
+        "Updated 3 partition(s) and 2 column(s)."
     acid, flat = _col_stats(eng, "sst_acidp"), _col_stats(eng, "sst_flatp")
     assert (acid["y"]["#Distinct Values"], acid["y"]["#Nulls"]) == (3, 1)
     assert (acid["y"]["Max Size"], acid["y"]["Avg Size"]) == (-1, -1.0)
     assert acid["s"]["Avg Size"] == 3.0
     assert acid == flat
+    listing = _listing(eng, "SHOW PARTITIONS sst_acidp")
+    assert [r["y"] for r in listing] == ["p", "qq", "NULL", "Total"]
+    assert listing == _listing(eng, "SHOW PARTITIONS sst_flatp")
     for tbl in ("sst_acidp", "sst_flatp"):
         eng.sql(f"DROP TABLE {tbl}")
+
+
+def _int_keyed_pair(eng) -> tuple[str, str]:
+    """An insert-only ACID table and a plain one, each with rows in the
+    `y INT` partitions 2, 10 and NULL and no stats computed."""
+    rows = "(1, 2), (2, 10), (3, NULL), (4, 2)"
+    cols = "(x INT) PARTITIONED BY (y INT) STORED AS PARQUET"
+    _recreate(eng, "sst_acidi", f"{cols} {_ACID}")
+    _recreate(eng, "sst_flati", cols)
+    for tbl in ("sst_acidi", "sst_flati"):
+        eng.sql(f"INSERT INTO {tbl} PARTITION (y) VALUES {rows}")
+    return "sst_acidi", "sst_flati"
+
+
+def test_show_partitions_typed_order_null_last(eng):
+    for tbl in _int_keyed_pair(eng):
+        assert [r["y"] for r in _listing(eng, f"SHOW PARTITIONS {tbl}")] \
+            == ["2", "10", "NULL", "Total"], tbl
+        eng.sql(f"DROP TABLE {tbl}")
+
+
+def test_acid_key_stats_known_before_compute(eng):
+    # the catalog knows the key's NDV and #Nulls from the partition
+    # list; nothing is computed
+    for tbl in _int_keyed_pair(eng):
+        y = _col_stats(eng, tbl)["y"]
+        assert (y["#Distinct Values"], y["#Nulls"]) == (3, 1), tbl
+        eng.sql(f"DROP TABLE {tbl}")
+
+
+def test_acid_incremental_partition_compute(eng):
+    acid, flat = _int_keyed_pair(eng)
+    summary = {}
+    for tbl in (acid, flat):
+        summary[tbl] = eng.sql(f"COMPUTE INCREMENTAL STATS {tbl} "
+                               "PARTITION (y=2)").collect()[0][0]
+        part = _part_stats(eng, tbl)["2"]
+        assert (part["#Rows"], part["Incremental stats"]) == (2, "true"), \
+            tbl
+    assert summary[acid] == summary[flat] == \
+        "Updated 1 partition(s) and 1 column(s)."
+    assert _listing(eng, f"SHOW TABLE STATS {acid}") == \
+        _listing(eng, f"SHOW TABLE STATS {flat}")
+    for tbl in (acid, flat):
+        eng.sql(f"DROP TABLE {tbl}")
+
+
+def _cascade_acid_db(eng) -> None:
+    """sst_casc held the ACID tables a and b, each with rows 1 and 2,
+    and was dropped with CASCADE, then created again empty."""
+    eng.sql("DROP DATABASE IF EXISTS sst_casc CASCADE")
+    eng.sql("CREATE DATABASE sst_casc")
+    for t in ("a", "b"):
+        eng.sql(f"CREATE TABLE sst_casc.{t} (x INT) STORED AS PARQUET "
+                f"{_ACID}")
+        eng.sql(f"INSERT INTO sst_casc.{t} VALUES (1), (2)")
+    eng.sql("DROP DATABASE sst_casc CASCADE")
+    eng.sql("CREATE DATABASE sst_casc")
+
+
+def test_cascade_dropped_acid_rows_do_not_return(eng):
+    _cascade_acid_db(eng)
+    try:
+        eng.sql("CREATE TABLE sst_casc.a (x INT)")
+        eng.sql("INSERT INTO sst_casc.a VALUES (7)")
+        assert [r.x for r in eng.sql("SELECT x FROM sst_casc.a")
+                .collect()] == [7]
+    finally:
+        eng.sql("DROP DATABASE sst_casc CASCADE")
+
+
+def test_cascade_dropped_acid_name_can_be_created_again(eng):
+    _cascade_acid_db(eng)
+    try:
+        out = eng.sql("CREATE TABLE IF NOT EXISTS sst_casc.b (x INT) "
+                      f"STORED AS PARQUET {_ACID}").collect()[0][0]
+        assert out == "Table has been created."
+        assert eng.sql("SELECT x FROM sst_casc.b").collect() == []
+    finally:
+        eng.sql("DROP DATABASE sst_casc CASCADE")
 
 
 def test_incremental_stats_follow_rename(eng):
