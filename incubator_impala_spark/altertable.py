@@ -410,8 +410,8 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         # (AlterTableDropPartitionStmt); metadata-sized
         from incubator_impala_spark import partitions
 
-        matched = partitions.match_partitions(
-            engine, tbl, engine.translate(pm.group("spec")))
+        matched = [kv for _, kv in partitions.match_partitions(
+            engine, tbl, engine.translate(pm.group("spec")))]
         rec = stats.peek(engine, tbl)
         for kv in matched:
             spark.sql(f"ALTER TABLE {tbl} DROP PARTITION "
@@ -449,8 +449,8 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         if sm.group("spec"):
             from incubator_impala_spark import partitions
 
-            matched = partitions.match_partitions(
-                engine, tbl, engine.translate(sm.group("spec")))
+            matched = [kv for _, kv in partitions.match_partitions(
+                engine, tbl, engine.translate(sm.group("spec")))]
             lp = re.match(r"^\s*PARTITION\s*\([^)]*(?:\([^)]*\)[^)]*)*\)"
                           r"\s+SET\s+LOCATION\s+'(?P<loc>[^']*)'",
                           rest, re.IGNORECASE)

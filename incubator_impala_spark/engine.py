@@ -417,9 +417,12 @@ class Engine:
         reference reflects the actual catalog). A CREATE that takes
         effect records its SORT BY and SHOW CREATE facets; a DROP TABLE
         first clears the warehouse directory of a table the catalog
-        does not know. An ACID table is its record: its DROP removes
-        the views and files of the record taken off (acid._drop)."""
+        does not know. An ACID table is its record: its DROP TABLE
+        removes the views and files of the record taken off
+        (acid._drop), and a DROP VIEW naming it is refused with the
+        record in place, as for any table."""
         from incubator_impala_spark import showcreate
+        from incubator_impala_spark.namespaces import refuse_drop_view
 
         sql_text = m.string
         name = self.ns.resolve(m.group("name")).replace("`", "")
@@ -433,6 +436,9 @@ class Engine:
                 pass
         elif not create and m.group("kind").lower() == "table":
             self.clear_orphan(name)
+        elif not create and stats.peek(self, name).acid is not None:
+            return refuse_drop_view(self.spark, m.group("name"),
+                                    m.group("ine"))
         old = stats.drop(self, name)
         if not create and old is not None and old.acid is not None:
             from incubator_impala_spark import acid
@@ -638,7 +644,7 @@ class Engine:
                 # incremental-colstats-aggregation, closed r8). The
                 # partitions are chosen as COMPUTE chooses them.
                 try:
-                    hit = {partitions.part_suffix(kv) for kv in
+                    hit = {partitions.part_suffix(kv) for _, kv in
                            partitions.match_partitions(self, tbl, spec)}
                     dropped = {
                         p for p in rec.cover if p in hit or
@@ -790,7 +796,8 @@ class Engine:
             # the reference knows partition-key NDV/nulls WITHOUT
             # compute stats (catalog metadata)
             try:
-                plist = partitions.list_partitions(self, tbl)
+                plist = [kv for _, kv in
+                         partitions.list_partitions(self, tbl)]
             except (*_SPARK_ERR, OSError):
                 plist = []
             if plist:
@@ -917,9 +924,9 @@ class Engine:
                     f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
         except _SPARK_ERR:
             pass          # temp-view fixtures: stats are advisory
-        parts = {raw for raw, _ in partitions._partitions(self, tbl)} \
+        parts = {raw for raw, _ in partitions.list_partitions(self, tbl)} \
             if pcols else set()
-        hit = {partitions.part_suffix(kv) for kv in
+        hit = {partitions.part_suffix(kv) for _, kv in
                partitions.match_partitions(self, tbl, spec)} \
             if spec and pcols else set()
         rerun = bool(pcols and m.group("inc")

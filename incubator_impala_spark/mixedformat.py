@@ -142,7 +142,7 @@ def build_view(engine, phys: str) -> None:
     # set is a handful of partitions, the base leg is the fleet)
     over, legs = [], []
     bad_parts: list[tuple[dict, str]] = []
-    for kv in _parts.list_partitions(engine, phys):
+    for _, kv in _parts.list_partitions(engine, phys):
         suffix = _parts.part_suffix(kv)
         fmt = (rec.formats.get(suffix) or base).upper()
         if suffix not in rec.locations and fmt == base:

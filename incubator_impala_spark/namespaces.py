@@ -158,6 +158,15 @@ def impala_pattern(pat: str) -> "re.Pattern":
                       re.IGNORECASE)
 
 
+def refuse_drop_view(spark, name: str, if_exists):
+    """DROP VIEW naming a table leaves the table in place: an error,
+    or with IF EXISTS a summary row (CatalogOpExecutor)."""
+    if if_exists:
+        return rows_df(spark, [("Drop view is not allowed on a table.",)],
+                       "summary string")
+    raise ValueError(f"DROP VIEW not allowed on a table: {name}")
+
+
 class Namespaces:
     """Engine-owned database registry (see module docstring)."""
 
@@ -635,12 +644,7 @@ class Namespaces:
                     spark, [("View does not exist.",)], "summary string")
             raise ValueError(f"View does not exist: {m.group('name')}")
         if info.get("kind") == "table":
-            if m.group("ife"):
-                return rows_df(
-                    spark, [("Drop view is not allowed on a table.",)],
-                    "summary string")
-            raise ValueError("DROP VIEW not allowed on a table: "
-                             f"{m.group('name')}")
+            return refuse_drop_view(spark, m.group("name"), m.group("ife"))
         self._drop_object(engine, db, obj, info)
         del self.dbs[db][obj]
         return rows_df(spark, [("View has been dropped.",)], "summary string")

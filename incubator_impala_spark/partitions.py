@@ -27,6 +27,7 @@ path feeds straight back into LOAD DATA."""
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import urllib.parse
@@ -80,7 +81,7 @@ def _typed(value: str, ty: str):
     return value
 
 
-def _partitions(engine, tbl: str) -> list[tuple[str, dict]]:
+def list_partitions(engine, tbl: str) -> list[tuple[str, dict]]:
     """(directory suffix, {col: value-or-None}) of each partition, in
     the one listing order: typed key values, NULL last. An ACID
     table's partitions are its snapshot's leaves, any other table's
@@ -98,21 +99,20 @@ def _partitions(engine, tbl: str) -> list[tuple[str, dict]]:
     types = dict(_key_fields(engine, tbl))
 
     def order(item):
+        # per key: numbers, then NaN (above every number, as Spark
+        # sorts it), then values not of the key type, then NULL
         out = []
         for c, v in item[1].items():
             try:
-                out.append((v is None, 0, 0 if v is None
-                            else _typed(v, types.get(c, "string"))))
+                x = 0 if v is None else _typed(v, types.get(c, "string"))
             except (ValueError, InvalidOperation):  # not of its type
-                out.append((False, 1, v))
+                out.append((False, 2, v))
+                continue
+            nan = isinstance(x, float) and math.isnan(x)
+            out.append((v is None, int(nan), 0 if nan else x))
         return out
 
     return sorted(((s, parse_suffix(s)) for s in suffixes), key=order)
-
-
-def list_partitions(engine, tbl: str) -> list[dict]:
-    """[{col: value-or-None}] in listing order."""
-    return [kv for _, kv in _partitions(engine, tbl)]
 
 
 def parse_suffix(suffix: str) -> dict:
@@ -140,14 +140,12 @@ def _translate_pred(spec: str) -> str:
     return " AND ".join(items) if items else "true"
 
 
-def match_partitions(engine, tbl: str, spec: str | None) -> list[dict]:
-    """Partitions of `tbl` whose key values satisfy `spec` (all of
-    them when spec is None/empty). One inline-relation query total."""
-    return [kv for _, kv in _match(engine, tbl, spec)]
-
-
-def _match(engine, tbl: str, spec: str | None) -> list[tuple[str, dict]]:
-    parts = _partitions(engine, tbl)
+def match_partitions(engine, tbl: str,
+                     spec: str | None) -> list[tuple[str, dict]]:
+    """The listed partitions of `tbl` (list_partitions) whose key
+    values satisfy `spec` (all of them when spec is None/empty). One
+    inline-relation query total."""
+    parts = list_partitions(engine, tbl)
     if not spec or not spec.strip() or not parts:
         return parts
     spark = engine.spark
@@ -268,7 +266,7 @@ def show_partitions(engine, tbl: str) -> DataFrame:
     """Impala's SHOW PARTITIONS listing + 'Total' row."""
     spark = engine.spark
     pcols = partition_columns(engine, tbl)
-    parts = _partitions(engine, tbl)
+    parts = list_partitions(engine, tbl)
     loc, files_in, fmt, base = _source(engine, tbl)
     rec = stats.get(engine, tbl)
     # stats-extrapolation tables carry an extra EXTRAP #ROWS column
@@ -336,7 +334,7 @@ def show_table_stats(engine, tbl: str) -> DataFrame:
 
 def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
     """SHOW FILES IN t [PARTITION (pred)] — (Path, Size, Partition)."""
-    parts = (_match(engine, tbl, spec)
+    parts = (match_partitions(engine, tbl, spec)
              if partition_columns(engine, tbl) else [("", {})])
     loc, files_in, _, base = _source(engine, tbl)
     rows = [(f"{base}/{path}", _human(s), suffix)

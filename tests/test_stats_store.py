@@ -13,7 +13,10 @@ STATS:
   plain table's get, from the partition list, and its SHOW PARTITIONS,
   SHOW TABLE STATS and COMPUTE [INCREMENTAL] STATS summaries match the
   plain table's;
-- DROP DATABASE ... CASCADE drops an ACID table with its state;
+- partitions list in typed key order, NaN above every number and
+  NULL last, for ACID and plain tables alike;
+- DROP DATABASE ... CASCADE drops an ACID table with its state, and
+  a DROP VIEW naming an ACID table is refused and keeps its rows;
 - incremental stats follow a rename, and die with a dropped table;
 - DROP INCREMENTAL STATS with a partition predicate drops the matched
   partitions only.
@@ -188,6 +191,21 @@ def test_show_partitions_typed_order_null_last(eng):
         assert [r["y"] for r in _listing(eng, f"SHOW PARTITIONS {tbl}")] \
             == ["2", "10", "NULL", "Total"], tbl
         eng.sql(f"DROP TABLE {tbl}")
+    # NaN compares false both ways: it gets its own place, above the
+    # numbers, and the next key orders the NaN partitions
+    nan = "CAST('NaN' AS DOUBLE)"
+    rows = f"(1, {nan}, 2), (2, {nan}, 10), (3, 10, 2), (4, -1, 10), " \
+           "(5, NULL, 2), (6, 2.5, 2)"
+    cols = "(x INT) PARTITIONED BY (y DOUBLE, z INT) STORED AS PARQUET"
+    for tbl, ddl in (("sst_acidd", f"{cols} {_ACID}"),
+                     ("sst_flatd", cols)):
+        _recreate(eng, tbl, ddl)
+        eng.sql(f"INSERT INTO {tbl} PARTITION (y, z) VALUES {rows}")
+        assert [(r["y"], r["z"]) for r in
+                _listing(eng, f"SHOW PARTITIONS {tbl}")][:-1] == [
+            ("-1.0", "10"), ("2.5", "2"), ("10.0", "2"), ("NaN", "2"),
+            ("NaN", "10"), ("NULL", "2")], tbl
+        eng.sql(f"DROP TABLE {tbl}")
 
 
 def test_acid_key_stats_known_before_compute(eng):
@@ -238,6 +256,20 @@ def test_cascade_dropped_acid_rows_do_not_return(eng):
                 .collect()] == [7]
     finally:
         eng.sql("DROP DATABASE sst_casc CASCADE")
+
+
+def test_drop_view_naming_an_acid_table_keeps_it(eng):
+    for tbl in ("sst_a.acidv", "sst_acidv"):
+        _recreate(eng, tbl, f"(x INT) STORED AS PARQUET {_ACID}")
+        eng.sql(f"INSERT INTO {tbl} VALUES (1), (2)")
+        assert eng.sql(f"DROP VIEW IF EXISTS {tbl}").collect()[0][0] \
+            == "Drop view is not allowed on a table.", tbl
+        with pytest.raises(Exception,
+                           match="DROP VIEW not allowed on a table"):
+            eng.sql(f"DROP VIEW {tbl}")
+        assert sorted(r.x for r in eng.sql(f"SELECT x FROM {tbl}")
+                      .collect()) == [1, 2], tbl
+        eng.sql(f"DROP TABLE {tbl}")
 
 
 def test_cascade_dropped_acid_name_can_be_created_again(eng):
