@@ -67,8 +67,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from incubator_impala_spark import dialect, sqlscan, stats
+from incubator_impala_spark.namespaces import refuse_drop_view
 from incubator_impala_spark.partitions import partition_columns
-from incubator_impala_spark.session import rows_df
+from incubator_impala_spark.session import rows_df, summary
 
 _SPARK_TYPES = {
     "int": "int", "integer": "int", "tinyint": "tinyint",
@@ -792,10 +793,11 @@ def compact(engine, t: AcidTable, suffix: str | None) -> None:
 # statement grammar
 # ---------------------------------------------------------------------
 
+# What follows a statement head (statements.py matches the heads)
 _TBLPROPS = re.compile(r"(?is)\bTBLPROPERTIES\s*\((?P<kv>[^)]*)\)")
+# CREATE [EXTERNAL] TABLE
 _CREATE_TBL = re.compile(
-    r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
+    r"(?is)\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
     r"(?:\((?P<cols>[^()]*(?:\([^()]*\)[^()]*)*)\)\s*)?"
     r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
     r"(?:CLUSTERED\s+BY[^)]*\)\s*INTO\s+\d+\s+BUCKETS\s*)?"
@@ -804,41 +806,26 @@ _CREATE_TBL = re.compile(
     r"(?:LOCATION\s+'[^']*'\s*)?"
     r"(?:TBLPROPERTIES\s*\([^)]*\)\s*)?"
     r"(?:(?P<ctas>AS\b[\s\S]*))?;?\s*$")
-_INSERT = re.compile(
-    r"(?is)^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
-    r"(?:PARTITION\s*\((?P<part>(?:[^()]|\([^()]*\))*)\)\s*)?"
-    r"(?P<body>(?:SELECT|WITH|VALUES)\b[\s\S]*)?$")
-_TRUNCATE = re.compile(
-    r"(?is)^\s*TRUNCATE\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
-_REFRESH = re.compile(
-    r"(?is)^\s*(?:REFRESH|INVALIDATE\s+METADATA)\s+"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$")
-_ALTER = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\b")
-_DROP_STATS = re.compile(
-    r"(?is)^\s*DROP\s+(?:INCREMENTAL\s+)?STATS\s+"
-    r"(?P<tbl>[A-Za-z_][\w.]*)")
+# ALTER TABLE (Hive side)
 _HIVE_SET_PROPS = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
+    r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
     r"SET\s+TBLPROPERTIES\s*\((?P<kv>[^)]*)\)\s*;?\s*$")
 _HIVE_COMPACT = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
+    r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
     r"(?:PARTITION\s*\((?P<spec>[^)]*)\)\s*)?"
     r"COMPACT\s+'(?P<kind>major|minor)'(?:\s+AND\s+WAIT)?\s*;?\s*$")
-_HIVE_DELETE = re.compile(
-    r"(?is)^\s*DELETE\s+FROM\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:WHERE\s+(?P<where>[\s\S]*?))?\s*;?\s*$")
-_HIVE_UPDATE = re.compile(
-    r"(?is)^\s*UPDATE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
-    r"SET\s+(?P<sets>[\s\S]*?)"
-    r"(?:\s+WHERE\s+(?P<where>[\s\S]*?))?\s*;?\s*$")
 _ADD_PART = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
+    r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
     r"ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION\s*"
     r"\((?P<spec>[^)]*)\)\s*;?\s*$")
+# DELETE and UPDATE (Hive side)
+_HIVE_DELETE = re.compile(
+    r"(?is)\s+FROM\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
+    r"(?:WHERE\s+(?P<where>[\s\S]*?))?\s*;?\s*$")
+_HIVE_UPDATE = re.compile(
+    r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
+    r"SET\s+(?P<sets>[\s\S]*?)"
+    r"(?:\s+WHERE\s+(?P<where>[\s\S]*?))?\s*;?\s*$")
 
 
 def _props_of(sql_text: str) -> dict:
@@ -877,9 +864,6 @@ def _parse_cols(text: str | None) -> list:
         cols.append((name, _SPARK_TYPES.get(ty, ty)))
     return cols
 
-
-def _summary(engine, text: str):
-    return rows_df(engine.spark, [(text,)], "summary string")
 
 
 def _register(engine, display: str, phys: str, db: str | None,
@@ -922,68 +906,44 @@ def _split_name(engine, raw: str) -> tuple:
 # engine-side handler
 # ---------------------------------------------------------------------
 
-def handle(engine, sql_text: str):
-    """Intercept ACID statements on the ns-resolved text; returns a
-    summary DataFrame or None to fall through to the generic paths.
-    DROP is the engine's (Engine._sql_create_drop takes the record off
-    and hands its ACID state to `_drop`); the listings and COMPUTE
-    STATS are the plain tables' (partitions.py, Engine._compute_stats)
-    over the snapshot's files."""
-    low = sql_text.lower()
-    # CREATE (incl. CTAS) that makes a transactional table
-    if re.match(r"(?is)^\s*create\s+(?:external\s+)?table\b", low):
-        flav = _is_transactional(engine, sql_text)
-        if flav is not None:
-            return _create(engine, sql_text, insert_only=flav[0],
-                           hive=False)
-        return None
-    if not _tables(engine):
-        return None
-    m = _ALTER.match(sql_text)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            raise ValueError(
-                "AnalysisException: ALTER TABLE not supported on "
-                f"transactional (ACID) table: {t.display}")
-    m = _DROP_STATS.match(sql_text)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            raise ValueError(
-                "AnalysisException: DROP STATS not supported on "
-                f"transactional (ACID) table: {t.display}")
-    m = _INSERT.match(sql_text)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            if not t.insert_only:
-                raise ValueError(
-                    "AnalysisException: INSERT not supported on "
-                    f"full transactional (ACID) table: {t.display}")
-            return _insert_acid(engine, t, m, hive=False)
-    m = _TRUNCATE.match(sql_text)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            if not t.insert_only:
-                raise ValueError(
-                    "AnalysisException: TRUNCATE not supported on "
-                    f"full transactional (ACID) table: {t.display}")
-            w = _alloc(t)
-            _engine_commit(t, w)
-            write_truncate(engine, t, w)
-            _clear_stats(engine, t)
-            refresh_views(engine)
-            return _summary(engine, "Table has been truncated.")
-    m = _REFRESH.match(sql_text)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            _refresh_snapshot(t)
-            refresh_views(engine)
-            return rows_df(engine.spark, [], "status string")
-    return None
+def handle(engine, stmt, ins=None):
+    """The ACID rows of the statement table (statements.py): a CREATE
+    TABLE that makes a transactional table (None for any other
+    CREATE), and the INSERT (its parts `ins`), TRUNCATE, REFRESH, DROP
+    TABLE, ALTER TABLE and DROP STATS of a table whose record holds
+    ACID state (a DROP VIEW naming it is refused). The listings and
+    COMPUTE STATS are the plain tables' (partitions.py,
+    Engine._compute_stats) over the snapshot's files."""
+    if stmt.kind == "create_table":
+        flav = _is_transactional(engine, stmt.tail)
+        return None if flav is None else _create(
+            engine, stmt, insert_only=flav[0], hive=False)
+    t = stmt.acid
+    if stmt.kind in ("alter_table", "drop_stats"):
+        what = "ALTER TABLE" if stmt.kind == "alter_table" else "DROP STATS"
+        raise ValueError(f"AnalysisException: {what} not supported on "
+                         f"transactional (ACID) table: {t.display}")
+    if stmt.kind == "drop_table":
+        return _drop(engine, t)
+    if stmt.kind == "drop_view":
+        # DROP VIEW naming a table leaves it in place, as for any table
+        return refuse_drop_view(engine.spark, stmt.target, stmt.group("ine"))
+    if stmt.kind == "refresh":
+        _refresh_snapshot(t)
+        refresh_views(engine)
+        return rows_df(engine.spark, [], "status string")
+    if not t.insert_only:
+        raise ValueError(
+            f"AnalysisException: {stmt.kind.upper()} not supported on "
+            f"full transactional (ACID) table: {t.display}")
+    if stmt.kind == "insert":
+        return _insert_acid(engine, t, ins, hive=False)
+    w = _alloc(t)
+    _engine_commit(t, w)
+    write_truncate(engine, t, w)
+    _clear_stats(engine, t)
+    refresh_views(engine)
+    return summary(engine.spark, "Table has been truncated.")
 
 
 def _clear_stats(engine, t: AcidTable) -> None:
@@ -998,9 +958,8 @@ def _clear_stats(engine, t: AcidTable) -> None:
 
 
 def _drop(engine, t: AcidTable):
-    """DROP TABLE of an ACID table: its record (when still stored),
-    its snapshot and row__id views, its files and its database
-    entry."""
+    """DROP TABLE of an ACID table: its record, its snapshot and
+    row__id views, its files and its database entry."""
     spark = engine.spark
     from pyspark.errors.exceptions.base import PySparkException
 
@@ -1015,16 +974,16 @@ def _drop(engine, t: AcidTable):
     if t.db and t.db in ns.dbs:
         ns.dbs[t.db].pop(t.phys.split("__")[-1], None)
         ns.dbs[t.db].pop(t.display.split(".")[-1].lower(), None)
-    return _summary(engine, "Table has been dropped.")
+    return summary(engine.spark, "Table has been dropped.")
 
 
-def _create(engine, sql_text: str, insert_only: bool, hive: bool):
-    m = _CREATE_TBL.match(sql_text)
+def _create(engine, stmt, insert_only: bool, hive: bool):
+    m = _CREATE_TBL.match(stmt.tail)
     if not m:
         return None
     display, phys, db = _split_name(engine, m.group("tbl"))
     if m.group("ine") and stats.peek(engine, phys).acid is not None:
-        return _summary(engine, "Table already exists.")
+        return summary(engine.spark, "Table already exists.")
     fmt = (m.group("fmt") or "").lower()
     fmt = {"textfile": "text", "orc": "orc",
            "parquet": "parquet", "": ""}.get(fmt, fmt)
@@ -1063,7 +1022,7 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
             *[c for c, _ in cols + pcols]), w, overwrite=False,
             acid_cols=not t.insert_only, nrows=n)
         refresh_views(engine)
-        return _summary(engine, f"Inserted {n} row(s)")
+        return summary(engine.spark, f"Inserted {n} row(s)")
     cols = _parse_cols(m.group("cols"))
     pcols = _parse_cols(m.group("part"))
     _register(engine, display, phys, db, cols, pcols,
@@ -1072,38 +1031,28 @@ def _create(engine, sql_text: str, insert_only: bool, hive: bool):
     if hive:
         from incubator_impala_spark import showcreate
 
-        showcreate.record_create(engine, sql_text)
-    return _summary(engine, "Table has been created.")
+        showcreate.record_create(engine, stmt)
+    return summary(engine.spark, "Table has been created.")
 
 
-def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
+def _insert_acid(engine, t: AcidTable, ins, hive: bool):
+    """INSERT (its parts `ins`, statements.Insert) into an insert-only
+    ACID table: one new delta under a fresh write id."""
     dbg = engine.debug_action
     if not hive and dbg and \
             "FIS_FAIL_HDFS_TABLE_SINK_FLUSH_FINAL:FAIL" in dbg:
         w = _alloc(t)
         t.aborted.add(w)
         raise ValueError(f"Query aborted:Debug Action: {dbg}")
-    body = m.group("body") or "select 1 as __dummy__"
-    if re.match(r"(?is)^\s*values\b", body):
-        body = "select * from (" + body + ") __v"
-    static: dict = {}
-    dyn: list = []
-    for item in sqlscan.split_top(m.group("part") or ""):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            static[k.strip().strip("`").lower()] = \
-                v.strip().strip("'\"")
-        else:
-            dyn.append(item.strip("`").lower())
+    static = {k: v.strip("'\"") for k, v in ins.static.items()}
+    dyn = ins.dyn
 
     def build_df():
         # source columns by position: a generated name (`0.5`, `1.50`)
         # or a repeated one does not resolve as a column reference
-        src = engine.spark.sql(engine.translate(body))
+        src = engine.spark.sql(engine.translate(ins.body))
         src = src.toDF(*[f"_c{i}" for i in range(len(src.columns))])
-        listed = [c.strip().strip("`").lower()
-                  for c in (m.group("cols") or "").split(",")
-                  if c.strip()]
+        listed = list(ins.cols or [])
         pnames = [p for p, _ in t.pcols]
         types = dict(t.cols + t.pcols)
         if not listed:
@@ -1136,7 +1085,7 @@ def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
         df = _with_hive_views(engine, build_df)
     else:
         df = build_df()
-    overwrite = m.group("mode").upper() == "OVERWRITE"
+    overwrite = ins.overwrite
     w = _alloc(t)
     static_leaf = None
     if t.pcols and static and all(
@@ -1158,7 +1107,7 @@ def _insert_acid(engine, t: AcidTable, m: re.Match, hive: bool):
         _engine_commit(t, w)
         _clear_stats(engine, t)
     refresh_views(engine)
-    return _summary(engine, f"Inserted {n} row(s)")
+    return summary(engine.spark, f"Inserted {n} row(s)")
 
 
 def _with_hive_views(engine, fn):
@@ -1211,77 +1160,68 @@ def _live_files(t: AcidTable, leaf: str) -> list:
 # Hive shim
 # ---------------------------------------------------------------------
 
-def hive_sql(engine, stmt: str):
+def hive_sql(engine, text: str):
     """Execute one statement as the Hive side of the reference's
     minicluster would: transactional writes allocate write ids in the
     shared 'metastore' registry WITHOUT advancing the engine's cached
     snapshot (visible only after REFRESH / INVALIDATE METADATA)."""
-    resolved = engine.ns.resolve(stmt)
-    if re.match(r"(?is)^\s*create\s+(?:external\s+)?table\b",
-                resolved):
-        flav = _is_transactional(engine, resolved)
+    from incubator_impala_spark import statements
+
+    stmt = statements.classify(engine, engine.ns.resolve(text))
+    t, tail = stmt.acid, stmt.tail
+    if stmt.kind == "create_table":
+        flav = _is_transactional(engine, tail)
         if flav is not None:
-            out = _create(engine, resolved, insert_only=flav[0],
-                          hive=True)
+            out = _create(engine, stmt, insert_only=flav[0], hive=True)
             if out is not None:
                 return out
-    m = _HIVE_SET_PROPS.match(resolved)
-    if m:
-        props = {k.lower(): v.lower() for k, v in re.findall(
-            r"'([^']*)'\s*=\s*'([^']*)'", m.group("kv"))}
-        if props.get("transactional") == "true":
-            return _promote(engine, m.group("tbl"), props)
-    m = _HIVE_COMPACT.match(resolved)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
+    elif stmt.kind == "alter_table":
+        m = _HIVE_SET_PROPS.match(tail)
+        if m:
+            props = {k.lower(): v.lower() for k, v in re.findall(
+                r"'([^']*)'\s*=\s*'([^']*)'", m.group("kv"))}
+            if props.get("transactional") == "true":
+                return _promote(engine, m.group("tbl"), props)
+        m = _HIVE_COMPACT.match(tail)
+        if m and t is not None:
             suffix = None
             if m.group("spec"):
-                kvs = {k.strip().strip("`").lower():
-                       v.strip().strip("'\"")
-                       for k, v in (i.split("=", 1)
-                                    for i in m.group("spec")
-                                    .split(","))}
-                suffix = "/".join(f"{p}={kvs[p]}"
-                                  for p, _ in t.pcols if p in kvs)
+                suffix = _spec_suffix(t, m.group("spec"))
             compact(engine, t, suffix)
-            return _summary(engine, "Compaction enqueued.")
-    m = _ADD_PART.match(resolved)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            kvs = {k.strip().strip("`").lower():
-                   v.strip().strip("'\"")
-                   for k, v in (i.split("=", 1)
-                                for i in m.group("spec").split(","))}
-            suffix = "/".join(f"{p}={kvs[p]}"
-                              for p, _ in t.pcols if p in kvs)
+            return summary(engine.spark, "Compaction enqueued.")
+        m = _ADD_PART.match(tail)
+        if m and t is not None:
+            suffix = _spec_suffix(t, m.group("spec"))
             t.partitions.add(suffix)
-            os.makedirs(os.path.join(t.location, suffix),
-                        exist_ok=True)
-            return _summary(engine, "New partition has been added.")
-    m = _HIVE_DELETE.match(resolved)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
+            os.makedirs(os.path.join(t.location, suffix), exist_ok=True)
+            return summary(engine.spark, "New partition has been added.")
+    elif stmt.kind == "delete" and t is not None:
+        m = _HIVE_DELETE.match(tail)
+        if m:
             return _hive_delete(engine, t, m.group("where"))
-    m = _HIVE_UPDATE.match(resolved)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
+    elif stmt.kind == "update" and t is not None:
+        m = _HIVE_UPDATE.match(tail)
+        if m:
             return _hive_update(engine, t, m.group("sets"),
                                 m.group("where"))
-    m = _INSERT.match(resolved)
-    if m:
-        t = stats.peek(engine, m.group("tbl")).acid
-        if t is not None:
-            return _insert_acid(engine, t, m, hive=True)
-        # Hive INSERT into a plain table writes Hive-named files
-        # (0000NN_0, _copy_M on collision) straight into the table
-        # directory — the original-file layout a later ACID upgrade
-        # inherits (acid-negative's test_promotion_fail shape)
-        return _hive_plain_insert(engine, m, stmt)
-    return engine.sql(stmt)
+    elif stmt.kind == "insert":
+        ins = statements.parse_insert(stmt.resolved)
+        if ins is not None:
+            if t is not None:
+                return _insert_acid(engine, t, ins, hive=True)
+            # Hive INSERT into a plain table writes Hive-named files
+            # (0000NN_0, _copy_M on collision) straight into the table
+            # directory — the original-file layout a later ACID upgrade
+            # inherits (acid-negative's test_promotion_fail shape)
+            return _hive_plain_insert(engine, ins, text)
+    return engine.sql(text)
+
+
+def _spec_suffix(t: AcidTable, spec: str) -> str:
+    """The leaf directory of a `k=v, ...` partition spec."""
+    kvs = {k.strip().strip("`").lower(): v.strip().strip("'\"")
+           for k, v in (i.split("=", 1) for i in spec.split(","))}
+    return "/".join(f"{p}={kvs[p]}" for p, _ in t.pcols if p in kvs)
 
 
 def _hive_visible(t: AcidTable) -> tuple:
@@ -1319,7 +1259,7 @@ def _hive_delete(engine, t: AcidTable, where: str | None):
         _move_leaf_files(tmp, dest)
         shutil.rmtree(tmp, ignore_errors=True)
     t.dirty = True
-    return _summary(engine, "Deleted rows.")
+    return summary(engine.spark, "Deleted rows.")
 
 
 def _hive_update(engine, t: AcidTable, sets: str,
@@ -1376,31 +1316,23 @@ def _hive_update(engine, t: AcidTable, sets: str,
         write_rows(engine, t, new_rows, w, overwrite=False,
                    acid_cols=True)
     t.dirty = True
-    return _summary(engine, "Updated rows.")
+    return summary(engine.spark, "Updated rows.")
 
 
-def _hive_plain_insert(engine, m: re.Match, stmt: str):
-    """Hive INSERT into a non-ACID table: write Hive-named files
-    (0000NN_0 / _copy_M) into the table's directory so a later ACID
-    upgrade sees them as original files."""
+def _hive_plain_insert(engine, ins, stmt: str):
+    """Hive INSERT (its parts `ins`, statements.Insert) into a non-ACID
+    table: write Hive-named files (0000NN_0 / _copy_M) into the table's
+    directory so a later ACID upgrade sees them as original files."""
     spark = engine.spark
-    tbl = m.group("tbl")
+    tbl = ins.tbl
     if not spark.catalog.tableExists(tbl):
         # non-catalog target (temp-view-backed): hand the ORIGINAL
         # statement to engine.sql verbatim — reassembling it from
         # match groups would drop PARTITION clauses / column lists
         return engine.sql(stmt)
-    body = m.group("body") or "select 1"
-    if re.match(r"(?is)^\s*values\b", body):
-        body = "select * from (" + body + ") __v"
-    df = spark.sql(engine.translate(body))
+    df = spark.sql(engine.translate(ins.body))
     target = spark.table(tbl)
-    static: dict = {}
-    for item in sqlscan.split_top(m.group("part") or ""):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            static[k.strip().strip("`").lower()] = \
-                v.strip().strip("'\"")
+    static = {k: v.strip("'\"") for k, v in ins.static.items()}
     cols = [c for c in target.columns if c.lower() not in static]
     df = df.toDF(*cols[:len(df.columns)])
     types = {f.name: f.dataType for f in target.schema.fields}
@@ -1435,22 +1367,14 @@ def _hive_plain_insert(engine, m: re.Match, stmt: str):
         n += 1
     shutil.rmtree(tmp, ignore_errors=True)
     spark.catalog.refreshTable(tbl)
-    return _summary(engine, "Inserted rows.")
+    return summary(engine.spark, "Inserted rows.")
 
 
 def _table_provider(engine, tbl: str) -> str:
-    from pyspark.errors.exceptions.base import PySparkException
-
-    try:
-        for r in engine.spark.sql(
-                f"DESCRIBE TABLE EXTENDED {tbl}").collect():
-            if r["col_name"] == "Provider":
-                p = r["data_type"].lower()
-                return {"orc": "orc", "csv": "csv",
-                        "text": "csv"}.get(p, "parquet")
-    except PySparkException:  # unresolvable: default provider
-        pass
-    return "parquet"
+    """The writer format of a plain table's files (parquet when the
+    catalog names none)."""
+    return {"orc": "orc", "csv": "csv", "text": "csv"}.get(
+        engine._table_provider(tbl) or "", "parquet")
 
 
 def _promote(engine, raw: str, props: dict):
@@ -1460,7 +1384,7 @@ def _promote(engine, raw: str, props: dict):
     transactional (AcidUtils original-file semantics)."""
     display, phys, db = _split_name(engine, raw)
     if stats.peek(engine, raw).acid is not None:
-        return _summary(engine, "Updated table.")
+        return summary(engine.spark, "Updated table.")
     spark = engine.spark
     tbl = phys if spark.catalog.tableExists(phys) else raw
     target = spark.table(tbl)
@@ -1480,7 +1404,7 @@ def _promote(engine, raw: str, props: dict):
                   location=engine._table_location(tbl))
     t.has_originals = True
     t.dirty = True
-    return _summary(engine, "Updated table.")
+    return summary(engine.spark, "Updated table.")
 
 
 # ---------------------------------------------------------------------

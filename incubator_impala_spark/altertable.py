@@ -30,13 +30,13 @@ from pyspark.errors.exceptions.base import (
 from pyspark.sql import DataFrame, functions as F
 
 from incubator_impala_spark import sqlscan, stats
-from incubator_impala_spark.session import rows_df
+from incubator_impala_spark.session import summary
 
 __all__ = ["handle"]
 
-_ALTER = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+(?P<rest>[\s\S]+)$",
-    re.IGNORECASE)
+# what follows ALTER TABLE (statements.py matches the head)
+_TARGET = re.compile(
+    r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s+(?P<rest>[\s\S]+)$", re.IGNORECASE)
 
 _ADD_COLS = re.compile(
     r"^ADD\s+(?P<ine1>IF\s+NOT\s+EXISTS\s+)?COLUMNS\s*"
@@ -78,13 +78,7 @@ _SET_META = re.compile(
     r"(?:TBLPROPERTIES|SERDEPROPERTIES|FILEFORMAT|ROW\s+FORMAT|"
     r"LOCATION|CACHED|UNCACHED|OWNER)\b[\s\S]*$",
     re.IGNORECASE)
-_SORT_BY = re.compile(
-    r"^SORT\s+BY\s*(?:ZORDER\s*|LEXICAL\s*)?\([\s\S]*?\)\s*;?\s*$",
-    re.IGNORECASE)
 
-
-def _summary(spark, text: str) -> DataFrame:
-    return rows_df(spark, [(text,)], "summary string")
 
 
 
@@ -218,8 +212,8 @@ def _map_sort_cols(engine, tbl: str, fn) -> None:
         rec.sort = ([fn(c) for c in cols if fn(c)], order)
 
 
-def handle(engine, sql_text: str) -> DataFrame | None:
-    m = _ALTER.match(sql_text)
+def handle(engine, stmt) -> DataFrame | None:
+    m = _TARGET.match(stmt.tail)
     if m is None:
         return None
     spark = engine.spark
@@ -237,7 +231,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         existing = {c.lower() for c in spark.table(tbl).columns}
         new = [d for d in defs if d[0].lower() not in existing]
         if ine and not new:
-            return _summary(
+            return summary(
                 spark, "No new column(s) have been added to the table.")
         if not new and not ine:
             raise ValueError(f"Column already exists: {defs[0][0]}")
@@ -253,7 +247,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             f"`{n}` {t}" + (f" COMMENT '{c}'" if c is not None else "")
             for n, t, c in new)
         spark.sql(f"ALTER TABLE {tbl} ADD COLUMNS ({ddl})")
-        return _summary(
+        return summary(
             spark, "New column(s) have been added to the table.")
 
     dm = _DROP_COL.match(rest)
@@ -267,7 +261,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         _recreate(engine, tbl, exprs)
         _map_sort_cols(engine, tbl, lambda c: None
                        if c.lower() == col.lower() else c)
-        return _summary(spark, "Column has been dropped.")
+        return summary(spark, "Column has been dropped.")
 
     cm = _CHANGE_COL.match(rest)
     if cm:
@@ -291,7 +285,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             _overlay_install(engine, tbl, StructType(fields))
             _map_sort_cols(engine, tbl, lambda c: new
                            if c.lower() == old.lower() else c)
-            return _summary(spark, "Column has been altered.")
+            return summary(spark, "Column has been altered.")
         exprs = []
         found = False
         df0 = spark.table(tbl)
@@ -316,7 +310,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         _recreate(engine, tbl, exprs)
         _map_sort_cols(engine, tbl, lambda c: new
                        if c.lower() == old.lower() else c)
-        return _summary(spark, "Column has been altered.")
+        return summary(spark, "Column has been altered.")
 
     scm = _SET_COMMENT.match(rest)
     if scm:
@@ -331,7 +325,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             else:
                 exprs.append(F.col(f"`{f.name}`"))
         _recreate(engine, tbl, exprs)
-        return _summary(spark, "Column has been altered.")
+        return summary(spark, "Column has been altered.")
 
     rm = _REPLACE_COLS.match(rest)
     if rm:
@@ -346,7 +340,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                             {"comment": c} if c is not None else {})
                 for n, t, c in defs])
             _overlay_install(engine, tbl, logical)
-            return _summary(spark, "Table columns have been replaced.")
+            return summary(spark, "Table columns have been replaced.")
         pcols = _partition_cols(engine, tbl)
         fields = [f for f in spark.table(tbl).schema.fields
                   if f.name not in pcols]
@@ -374,7 +368,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         ren = {fields[i].name.lower(): defs[i][0]
                for i in range(min(len(fields), len(defs)))}
         _map_sort_cols(engine, tbl, lambda c: ren.get(c.lower()))
-        return _summary(spark, "Table columns have been replaced.")
+        return summary(spark, "Table columns have been replaced.")
 
     n_specs = len(re.findall(r"\bPARTITION\s*\(", rest, re.IGNORECASE))
     pm = _ADD_PART.match(rest) if n_specs <= 1 else None
@@ -393,14 +387,14 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             kw = "IF NOT EXISTS " if ine else ""
             spark.sql(
                 f"ALTER TABLE {tbl} ADD {kw}PARTITION ({sql_spec})")
-        return _summary(
+        return summary(
             spark, "New partition has been added to the table.")
     if pm:
         spec = _fold_spec(engine, pm.group("spec"))
         sql_spec = ", ".join(f"`{k}`={v}" for k, v in spec)
         ine = "IF NOT EXISTS " if pm.group("ine") else ""
         spark.sql(f"ALTER TABLE {tbl} ADD {ine}PARTITION ({sql_spec})")
-        return _summary(
+        return summary(
             spark, "New partition has been added to the table.")
 
     pm = _DROP_PART.match(rest)
@@ -410,17 +404,16 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         # (AlterTableDropPartitionStmt); metadata-sized
         from incubator_impala_spark import partitions
 
-        matched = [kv for _, kv in partitions.match_partitions(
-            engine, tbl, engine.translate(pm.group("spec")))]
+        matched = partitions.match_partitions(
+            engine, tbl, engine.translate(pm.group("spec")))
         rec = stats.peek(engine, tbl)
-        for kv in matched:
+        for suffix, kv in matched:
             spark.sql(f"ALTER TABLE {tbl} DROP PARTITION "
                       f"({partitions.drop_spec(kv)})")
-            suffix = partitions.part_suffix(kv)
             for overrides in (rec.formats, rec.locations,
                               rec.stats.parts):
                 overrides.pop(suffix, None)
-        return _summary(spark,
+        return summary(spark,
                         f"Dropped {len(matched)} partition(s).")
 
     sm = _SET_META.match(rest)
@@ -431,7 +424,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
             # (AvroSchemaUtils.reconcileSchemas); these tables are
             # metadata-only, so recreate under the new literal
             engine.create_avro_from_literal(tbl, lm.group(1), None)
-            return _summary(spark, "Updated table.")
+            return summary(spark, "Updated table.")
         # stats-bearing properties: Hive/Impala stats live in
         # numRows tblproperties; ALTER SET with a (possibly corrupt —
         # 0 or negative) value feeds SHOW TABLE STATS and the
@@ -449,7 +442,7 @@ def handle(engine, sql_text: str) -> DataFrame | None:
         if sm.group("spec"):
             from incubator_impala_spark import partitions
 
-            matched = [kv for _, kv in partitions.match_partitions(
+            matched = [p for p, _ in partitions.match_partitions(
                 engine, tbl, engine.translate(sm.group("spec")))]
             lp = re.match(r"^\s*PARTITION\s*\([^)]*(?:\([^)]*\)[^)]*)*\)"
                           r"\s+SET\s+LOCATION\s+'(?P<loc>[^']*)'",
@@ -460,25 +453,23 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                 # keeps location per partition) and resolved against
                 # the warehouse root like LOAD DATA paths
                 from incubator_impala_spark import mixedformat
-                from incubator_impala_spark import partitions as _pt
 
                 locs = stats.table(engine, tbl).locations
-                for kv in matched:
-                    locs[_pt.part_suffix(kv)] = \
-                        engine._resolve_fs_path(lp.group("loc"))
+                for suffix in matched:
+                    locs[suffix] = engine._resolve_fs_path(lp.group("loc"))
                 if matched:
                     mixedformat.maybe_activate(engine, tbl)
                 # partition found → the reference's per-partition
                 # message; an empty match is a no-op with the
                 # table-level message (partition-ddl-predicates)
-                return _summary(
+                return summary(
                     spark, "New location has been set for the "
                            "specified partition." if matched
                     else "New location has been set.")
             if nm:
                 prows = stats.record(engine, tbl).parts
-                for kv in matched:
-                    prows[partitions.part_suffix(kv)] = int(nm.group(1))
+                for suffix in matched:
+                    prows[suffix] = int(nm.group(1))
             fm = re.search(r"\bSET\s+FILEFORMAT\s+(\w+)", rest,
                            re.IGNORECASE)
             if fm:
@@ -486,15 +477,15 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                         "rcfile": "RC"}.get(fm.group(1).lower(),
                                             fm.group(1).upper())
                 fmts = stats.table(engine, tbl).formats
-                for kv in matched:
-                    fmts[partitions.part_suffix(kv)] = disp
+                for suffix in matched:
+                    fmts[suffix] = disp
                 if matched:
                     from incubator_impala_spark import mixedformat
 
                     mixedformat.maybe_activate(engine, tbl)
-            return _summary(spark,
+            return summary(spark,
                             f"Updated {len(matched)} partition(s).")
-        return _summary(spark, "Updated table.")
+        return summary(spark, "Updated table.")
 
     sb = re.match(r"^SORT\s+BY\s*(?P<ord>ZORDER|LEXICAL)?\s*"
                   r"\((?P<cols>[\s\S]*?)\)\s*;?\s*$", rest,
@@ -517,6 +508,6 @@ def handle(engine, sql_text: str) -> DataFrame | None:
                     f"column '{c}' in table.")
         stats.table(engine, tbl).sort = (
             cols, (sb.group("ord") or "LEXICAL").upper())
-        return _summary(spark, "Updated table.")
+        return summary(spark, "Updated table.")
 
     return None

@@ -31,10 +31,12 @@ import json
 import re
 
 from incubator_impala_spark import sqlscan
-from incubator_impala_spark.session import rows_df
+from incubator_impala_spark.session import rows_df, summary
 
+# what follows CREATE [EXTERNAL] TABLE, ALTER TABLE and REFRESH /
+# INVALIDATE METADATA (statements.py matches the heads)
 _CREATE = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
+    r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
     r"\((?P<cols>[\s\S]*?)\)\s*"
     r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
     r"(?:LOCATION\s+'(?P<loc>[^']*)'\s*)?"
@@ -42,18 +44,15 @@ _CREATE = re.compile(
     r"'(?P<url>[^']*)'\s*\)\s*;?\s*$",
     re.IGNORECASE)
 _SET_FMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
+    r"\s+[A-Za-z_][\w.]*\s+"
     r"(?:PARTITION\s*\([^)]*\)\s+)?SET\s+FILEFORMAT\s+AVRO\s*;?\s*$",
     re.IGNORECASE)
 _ADD_PART = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
+    r"\s+[A-Za-z_][\w.]*\s+"
     r"ADD\s+PARTITION\s*\((?P<spec>[^)]*)\)\s*"
     r"(?:LOCATION\s+'(?P<loc>[^']*)')?\s*;?\s*$",
     re.IGNORECASE)
-_INVALIDATE = re.compile(
-    r"^\s*(?:INVALIDATE\s+METADATA|REFRESH)\s+"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$",
-    re.IGNORECASE)
+_TABLE = re.compile(r"\s+[A-Za-z_][\w.]*\s*;?\s*$")
 
 STALE_MSG = ("Missing Avro schema in scan node. This could be due to "
              "stale metadata.")
@@ -63,44 +62,50 @@ def _key(tbl: str) -> str:
     return tbl.strip("`").split(".")[-1].lower()
 
 
-def handle(engine, sql_text: str):
-    """Intercept the registry's DDL statements; returns a summary
-    DataFrame or None to fall through."""
-    spark = engine.spark
-    m = _CREATE.match(sql_text)
-    if m:
-        engine.avro_stale[_key(m.group("tbl"))] = {
-            "display": m.group("tbl"),
-            "cols": m.group("cols"),
-            "part": m.group("part"),
-            "location": m.group("loc"),
-            "url": m.group("url"),
-            "partitions": [],
-            "state": "text",
-        }
-        return rows_df(spark, [("Table has been created.",)], "summary string")
-    m = _SET_FMT.match(sql_text)
-    if m and _key(m.group("tbl")) in engine.avro_stale:
-        info = engine.avro_stale[_key(m.group("tbl"))]
+def create(engine, tail: str):
+    """CREATE TABLE ... TBLPROPERTIES ('avro.schema.url'=...): a new
+    registry entry, still text; None for any other CREATE."""
+    m = _CREATE.match(tail)
+    if m is None:
+        return None
+    engine.avro_stale[_key(m.group("tbl"))] = {
+        "display": m.group("tbl"),
+        "cols": m.group("cols"),
+        "part": m.group("part"),
+        "location": m.group("loc"),
+        "url": m.group("url"),
+        "partitions": [],
+        "state": "text",
+    }
+    return summary(engine.spark, "Table has been created.")
+
+
+def alter(engine, stmt):
+    """ALTER TABLE SET FILEFORMAT AVRO (the entry goes stale) or ADD
+    PARTITION of a registered table; None otherwise."""
+    info = engine.avro_stale.get(_key(engine.ns.resolve(stmt.target or "")))
+    if info is not None and _SET_FMT.match(stmt.tail):
         info["state"] = "stale"
-        return rows_df(spark, [("Updated table.",)], "summary string")
-    m = _ADD_PART.match(sql_text)
-    if m and _key(m.group("tbl")) in engine.avro_stale:
-        info = engine.avro_stale[_key(m.group("tbl"))]
-        spec = dict(
-            (k.strip().strip("`").lower(), v.strip().strip("'\""))
-            for k, v in (x.split("=", 1)
-                         for x in m.group("spec").split(",")))
-        info["partitions"].append((spec, m.group("loc")))
-        return rows_df(
-            spark, [("New partition has been added to the table.",)],
-            "summary string")
-    m = _INVALIDATE.match(sql_text)
-    if m and _key(m.group("tbl")) in engine.avro_stale:
-        _materialize(engine, engine.avro_stale[_key(m.group("tbl"))],
-                     _key(m.group("tbl")))
-        return rows_df(spark, [], "status string")
-    return None
+        return summary(engine.spark, "Updated table.")
+    m = info is not None and _ADD_PART.match(stmt.tail)
+    if not m:
+        return None
+    spec = dict(
+        (k.strip().strip("`").lower(), v.strip().strip("'\""))
+        for k, v in (x.split("=", 1) for x in m.group("spec").split(",")))
+    info["partitions"].append((spec, m.group("loc")))
+    return summary(engine.spark,
+                   "New partition has been added to the table.")
+
+
+def refresh(engine, stmt):
+    """REFRESH / INVALIDATE METADATA of a registered table: load it
+    under its current state; None otherwise."""
+    key = _key(engine.ns.resolve(stmt.target or ""))
+    if key not in engine.avro_stale or not _TABLE.match(stmt.tail):
+        return None
+    _materialize(engine, engine.avro_stale[key], key)
+    return rows_df(engine.spark, [], "status string")
 
 
 def _materialize(engine, info: dict, name: str) -> None:
@@ -145,15 +150,13 @@ def _materialize(engine, info: dict, name: str) -> None:
 
 
 def check_query(engine, sql_text: str) -> None:
-    """Raise the stale-metadata error when a query references a
-    stale entry (neutralized shadow — literals/comments blanked)."""
+    """Raise the stale-metadata error when a statement that reads or
+    writes rows references a stale entry (neutralized shadow —
+    literals/comments blanked); DDL never reaches the scanner."""
     stale = {k for k, v in engine.avro_stale.items()
              if v["state"] == "stale"}
     if not stale:
         return
-    if re.match(r"(?is)^\s*(drop|create|alter|invalidate|refresh|"
-                r"describe|show|use)\b", sql_text):
-        return  # only scans hit the scanner's stale-schema error
     low = sqlscan.shadow(sql_text).lower()
     for name in stale:
         if re.search(rf"\b{re.escape(name)}\b", low):

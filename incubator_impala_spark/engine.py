@@ -25,136 +25,64 @@ from pyspark.sql import DataFrame, SparkSession
 import os
 import re
 
-from incubator_impala_spark import dialect, options, partitions, sqlscan, stats
+from incubator_impala_spark import (
+    dialect, options, partitions, sqlscan, statements, stats)
 from incubator_impala_spark.grants import GrantRegistry
 from incubator_impala_spark.functions.registry import (
     MACROS,
     MACROS_SCALE,
     register_all,
 )
-from incubator_impala_spark.session import configure_session, rows_df
+from incubator_impala_spark.session import configure_session, rows_df, summary
 from incubator_impala_spark.sources.tables import register_tables
 
-_SET_STMT = re.compile(
-    r"^\s*SET\s+([A-Za-z_][\w.]*)\s*=\s*(.+?)\s*;?\s*$", re.IGNORECASE
-)
-_SET_ALL_STMT = re.compile(r"^\s*SET\s+ALL\s*;?\s*$", re.IGNORECASE)
-
-# LOAD DATA INPATH 'p' [OVERWRITE] INTO TABLE t [PARTITION (k=v, ...)]
-# (reference fe/.../analysis/LoadDataStmt.java; grammar
-# sql-parser.cup load_stmt). The reference *moves files* into the
-# table directory; Spark's native LOAD DATA only supports Hive tables,
-# so for datasource tables the veneer reads the staged files with the
-# table's own format and appends (or overwrites the target partition)
-# — same observable result, and the write goes through the normal
-# distributed sink path.
-_LOAD_DATA = re.compile(
-    r"^\s*LOAD\s+DATA\s+INPATH\s+'(?P<path>[^']+)'\s+"
-    r"(?P<over>OVERWRITE\s+)?INTO\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:PARTITION\s*\((?P<part>[^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
+# What follows the head of a statement (statements.py matches the
+# heads).
 # plain DESCRIBE <path> — Impala's three-column column listing incl.
 # paths into complex types (describe.py). FORMATTED/EXTENDED keep the
 # Spark extended-describe mapping in dialect._SIMPLE_STMTS.
 _DESCRIBE_PATH = re.compile(
-    r"^\s*DESCRIBE\s+(?!FORMATTED\b|EXTENDED\b|TABLE\b|DATABASE\b)"
+    r"\s+(?!FORMATTED\b|EXTENDED\b|TABLE\b|DATABASE\b)"
     r"((?:`[^`]+`|[A-Za-z_]\w*)(?:\.(?:`[^`]+`|[A-Za-z_]\w*))*)\s*;?\s*$",
     re.IGNORECASE,
 )
-# non-CTAS CREATE TABLE returns the reference's DDL summary row
-# (impala-shell surface: 'Table has been created.')
-_CREATE_TABLE_PLAIN = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\b(?![\s\S]*\bAS\s+SELECT\b)"
-    r"[\s\S]*$",
-    re.IGNORECASE,
-)
-# CTAS returns 'Inserted N row(s)' (ComputeStatsStmt-adjacent DDL
-# summaries; impala-shell surface). N comes from Spark's own
-# DataWritingCommand metric — no extra job.
-_CTAS_STMT = re.compile(
-    r"^\s*(?P<pre>CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+_DESCRIBE_FMT = re.compile(
+    r"\s+FORMATTED\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.IGNORECASE)
+# ANALYZE TABLE t [PARTITION (..)] COMPUTE STATISTICS FOR COLUMNS
+_ANALYZE = re.compile(
+    r"\s+TABLE\s+(?P<tbl>[\w.]+)\s*(?:PARTITION\s*\([^)]*\)\s*)?"
+    r"COMPUTE\s+STATISTICS\s+FOR\s+COLUMNS\s*;?\s*$", re.IGNORECASE)
+_SET_COLUMN_STATS = re.compile(
+    r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s+SET\s+COLUMN\s+STATS\s+"
+    r"(?P<col>`?\w+`?)\s*\((?P<kv>[^)]*)\)\s*;?\s*$", re.IGNORECASE)
+# The CREATE TABLE variants, what follows CREATE [EXTERNAL] TABLE.
+# CTAS returns 'Inserted N row(s)' (impala-shell surface). N comes
+# from Spark's own DataWritingCommand metric — no extra job.
+_CTAS = re.compile(
+    r"(?P<pre>\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)[\s\S]*?\bAS)\s*"
     r"(?P<body>\(?\s*(?:SELECT|WITH)\b[\s\S]*)$",
     re.IGNORECASE,
 )
-# INSERT INTO/OVERWRITE with optional column permutation and PARTITION
-# clause (reference InsertStmt.java). Routed through a DataFrame write
-# so the reference's per-partition row-count summary (`year=2009/
-# month=4/: 25` rows, `: N` unpartitioned) can be returned.
-_INSERT_STMT = re.compile(
-    r"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
-    # static partition values may be expressions with nested calls —
-    # two paren levels covers cast('x' as char(5))
-    r"(?:PARTITION\s*\((?P<part>(?:[^()]|\((?:[^()]|\([^()]*\))*\))*)\)"
-    r"\s*)?"
-    r"(?P<body>(?:SELECT|WITH|VALUES)\b[\s\S]*)?$",
-    re.IGNORECASE,
-)
-# CREATE/DROP of a table or view: the statements that replace an
-# object's catalog record (Engine._sql_create_drop)
-_CREATE_DROP = re.compile(
-    r"(?is)^\s*(?P<op>create|drop)\s+(?:external\s+)?"
-    r"(?P<kind>table|view)\s+(?P<ine>if\s+(?:not\s+)?exists\s+)?"
-    r"(?P<name>[`\w.]+)")
-# SORT BY on CREATE TABLE — recorded in the table's record, since the
-# dialect strips it (write-layout metadata surfaced by DESCRIBE
-# FORMATTED)
-_CREATE_SORT = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)[\s\S]*?"
-    r"\bSORT\s+BY\s*(?P<ord>ZORDER|LEXICAL)?\s*\((?P<cols>[^)]*)\)",
-    re.IGNORECASE,
-)
-_DESCRIBE_FMT = re.compile(
-    r"^\s*DESCRIBE\s+FORMATTED\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-# COMPUTE [INCREMENTAL] STATS t [(col, ...)] [PARTITION (spec)] —
-# ComputeStatsStmt.java; summary 'Updated N partition(s) and M
-# column(s).' (incremental: only new/targeted partitions count)
-_COMPUTE_STATS_STMT = re.compile(
-    r"^\s*COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\s+"
-    r"(?P<tbl>`[\w.]+`|[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
-    r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$",
-    re.IGNORECASE,
-)
+_AS_SELECT = re.compile(r"\bAS\s+SELECT\b", re.IGNORECASE)
+_AVRO_LITERAL = re.compile(
+    r"(?is)\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
+    r"(?:\((?P<cols>[\s\S]*?)\)\s*)?"
+    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
+    r"(?:STORED\s+AS\s+AVRO\b|WITH\s+SERDEPROPERTIES\b)"
+    r"[\s\S]*?avro\.schema\.literal'\s*=\s*'(?P<lit>[^']*)'"
+    r"[\s\S]*$")
 # CREATE TABLE t LIKE PARQUET 'path' — schema inferred from the file
 # footer (CreateTableLikeFileStmt.java). Unreachable warehouse paths
 # fall back to a basename lookup in the reference's testdata dirs.
 _CREATE_LIKE_PARQUET = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s+LIKE\s+(?P<fmt>PARQUET|ORC)\s+"
     r"'(?P<path>[^']+)'"
     r"(?:\s+PARTITIONED\s+BY\s*\((?P<part>[^)]*)\))?"
     r"(?:\s+STORED\s+AS\s+\w+)?"
     r"(?:\s+LOCATION\s+'(?P<loc>[^']+)')?"
     r"[\s\S]*$",
-    re.IGNORECASE,
-)
-# DROP [INCREMENTAL] STATS t [PARTITION (spec)] — clears the
-# incremental-stats cover so the next compute recounts
-_DROP_STATS_STMT = re.compile(
-    r"^\s*DROP\s+(?:INCREMENTAL\s+)?STATS\s+(?P<tbl>[A-Za-z_][\w.]*)"
-    r"\s*(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$",
-    re.IGNORECASE,
-)
-# EXPLAIN <query> — rendered in the reference's plan-text format
-# (impala_explain.py; explain-level0/1.test pin the grammar)
-_EXPLAIN_STMT = re.compile(
-    r"^\s*EXPLAIN\s+(?P<body>(?:select|with|values|insert|create)"
-    r"\b[\s\S]*)$",
-    re.IGNORECASE,
-)
-_TRUNCATE_STMT = re.compile(
-    r"^\s*TRUNCATE\s+(?:TABLE\s+)?(?P<ife>IF\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$",
     re.IGNORECASE,
 )
 # CREATE TABLE t (cols) ... STORED AS AVRO with no explicit Avro
@@ -165,20 +93,24 @@ _TRUNCATE_STMT = re.compile(
 # INT, TIMESTAMP -> STRING; CHAR/VARCHAR/DECIMAL/complex preserved),
 # stamping 'from deserializer' on columns without an explicit comment.
 _CREATE_AVRO = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
     r"\((?P<cols>[\s\S]*?)\)\s*"
     r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
     r"STORED\s+AS\s+AVRO\b(?P<tail>[\s\S]*)$",
     re.IGNORECASE,
 )
+# one `name type [COMMENT 'c']` column definition
+_AVRO_COL = re.compile(
+    r"^\s*(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s+(?P<type>[\s\S]*?)"
+    r"(?:\s+COMMENT\s+'(?P<cm>(?:[^']|'')*)')?\s*$", re.IGNORECASE)
 
 # CREATE TABLE t LIKE src [STORED AS fmt] — clone schema + partition
 # spec, no data (CreateTableLikeStmt.java). The fixture relations are
 # temp views, so the clone is built from the source schema rather than
 # Spark's native LIKE (which requires a catalog table).
 _CREATE_LIKE = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s+"
     r"(?:SORT\s+BY\s*(?:ZORDER\s*|LEXICAL\s*)?\([^)]*\)\s*)?"
     r"LIKE\s+(?P<src>[A-Za-z_][\w.]*)"
@@ -262,7 +194,7 @@ class Engine:
             opt.on_set(self)
         return bool(opt.attr or opt.conf)
 
-    def _ctas_ts_rewrite(self, m: "re.Match") -> str | None:
+    def _ctas_ts_rewrite(self, pre: str, body: str) -> str | None:
         """PARQUET_TIMESTAMP_TYPE write semantics for CTAS (reference
         be/src/exec/parquet/hdfs-parquet-table-writer.cc: INT64_MILLIS
         truncates to milliseconds; INT64_NANOS stores NULL outside the
@@ -274,7 +206,6 @@ class Engine:
             return None
         from pyspark.sql.types import TimestampType
 
-        body = m.group("body")
         try:
             schema = self.spark.sql(self.translate(
                 f"SELECT * FROM ({body}) __pqt_probe__")).schema
@@ -297,13 +228,14 @@ class Engine:
                     f"TIMESTAMP'1677-09-21 00:12:43.145225' AND "
                     f"TIMESTAMP'2262-04-11 23:47:16.854775' "
                     f"THEN {q} END AS {q}")
-        return (f"{m.group('pre')} SELECT {', '.join(exprs)} "
+        return (f"{pre} SELECT {', '.join(exprs)} "
                 f"FROM ({body}) __pqt_ts__")
 
     def _refresh_overlays(self) -> None:
         """Re-project overlay tables (metadata-only ALTERed parquet
-        tables) under the CURRENT resolution mode."""
-        from incubator_impala_spark import schema_resolution
+        tables) and PARQUET_ARRAY_RESOLUTION views under the CURRENT
+        resolution modes."""
+        from incubator_impala_spark import array_resolution, schema_resolution
 
         for k, rec in self.tables.items():
             if not rec.overlay:
@@ -318,6 +250,16 @@ class Engine:
                 # an unresolvable logical/file pairing under the
                 # CURRENT mode must not abort an unrelated statement;
                 # the next mode change re-resolves
+                pass
+        for name, ov in list(self.array_overlays.items()):
+            try:
+                array_resolution.resolve_array_view(
+                    self.spark, ov["location"], ov["array_col"],
+                    ov["elem_fields"], self.parquet_resolution,
+                    self.parquet_array_res,
+                ).createOrReplaceTempView(name)
+            except (AnalysisException, ValueError, OSError):
+                # re-resolved on the next statement
                 pass
 
     def _set_all(self) -> DataFrame:
@@ -340,128 +282,12 @@ class Engine:
         return acid.hive_sql(self, sql_text)
 
     def sql(self, sql_text: str) -> DataFrame:
-        if _SET_ALL_STMT.match(sql_text):
-            return self._set_all()
-        m = _SET_STMT.match(sql_text)
-        if m:
-            self.set_option(m.group(1), m.group(2).strip("'\""))
-            return self.spark.sql("SELECT 1 AS status")
-        m = _EXPLAIN_STMT.match(sql_text)
-        if m:
-            # runs BEFORE namespace resolution: the renderer needs the
-            # query's original db-qualified spellings for node labels
-            # and the missing-stats header
-            from incubator_impala_spark import impala_explain
-
-            lines = impala_explain.render_explain(
-                self, m.group("body"), self.explain_level)
-            return rows_df(
-                self.spark, [(ln,) for ln in lines], "explain_string string")
-        self._refresh_overlays()
-        for name, ov in list(self.array_overlays.items()):
-            from incubator_impala_spark import array_resolution
-
-            try:
-                array_resolution.resolve_array_view(
-                    self.spark, ov["location"], ov["array_col"],
-                    ov["elem_fields"], self.parquet_resolution,
-                    self.parquet_array_res,
-                ).createOrReplaceTempView(name)
-            except (AnalysisException, ValueError, OSError):  # re-resolved next stmt
-                pass
-        if any(rec.acid or rec.rowid for rec in self.tables.values()):
-            # ACID snapshot views rebuild before the statement plans;
-            # row__id references swap to the shadow views (acid.py)
-            from incubator_impala_spark import acid
-
-            sql_text = acid.prepare(self, sql_text)
-        if any(rec.mixed for rec in self.tables.values()):
-            # per-partition mixed-format tables: SELECTs read through
-            # a freshly-built dispatch view, DDL/DML drops the shadow
-            # (mixedformat.refresh_views); must run before the scan
-            # checks so avro-reconciliation errors are registered
-            from incubator_impala_spark import mixedformat
-
-            mixedformat.refresh_views(self, sql_text)
-        if self.scan_checks and (
-                self.abort_on_error
-                or any(c.get("always")
-                       for c in self.scan_checks.values())):
-            # checked-table scan validation (scan_errors.py): raise
-            # the reference-shaped abort before planning; "always"
-            # checks model unmaskable metadata errors (bad footer
-            # magic, disabled scanner plugins)
-            from incubator_impala_spark import scan_errors
-
-            scan_errors.check_query(self, sql_text)
-        # SHOW CREATE TABLE/VIEW renderer + CREATE-time facet
-        # recording (showcreate.py) — runs on the pre-resolution text
-        # so the record keeps the user's logical names and Impala-form
-        # clauses the dialect shim would translate away
-        from incubator_impala_spark import showcreate
-
-        handled = showcreate.handle(self, sql_text)
-        if handled is not None:
-            return handled
-        m = _CREATE_DROP.match(sql_text)
-        if m:
-            return self._sql_create_drop(m)
-        return self._sql_stmt(sql_text)
-
-    def _sql_create_drop(self, m: re.Match) -> DataFrame:
-        """Run a CREATE or DROP of a table or view. It replaces the
-        object's catalog record (stats.py) only when it takes effect:
-        the record goes before the statement runs and comes back when
-        the statement fails or the dropped object is still there, and
-        an IF NOT EXISTS no-op over an existing object keeps it (the
-        reference reflects the actual catalog). A CREATE that takes
-        effect records its SORT BY and SHOW CREATE facets; a DROP TABLE
-        first clears the warehouse directory of a table the catalog
-        does not know. An ACID table is its record: its DROP TABLE
-        removes the views and files of the record taken off
-        (acid._drop), and a DROP VIEW naming it is refused with the
-        record in place, as for any table."""
-        from incubator_impala_spark import showcreate
-        from incubator_impala_spark.namespaces import refuse_drop_view
-
-        sql_text = m.string
-        name = self.ns.resolve(m.group("name")).replace("`", "")
-        create = m.group("op").lower() == "create"
-        if create and m.group("ine"):
-            try:
-                if self.spark.catalog.tableExists(name) \
-                        or stats.peek(self, name).acid is not None:
-                    return self._sql_stmt(sql_text)
-            except AnalysisException:  # unresolvable name: create
-                pass
-        elif not create and m.group("kind").lower() == "table":
-            self.clear_orphan(name)
-        elif not create and stats.peek(self, name).acid is not None:
-            return refuse_drop_view(self.spark, m.group("name"),
-                                    m.group("ine"))
-        old = stats.drop(self, name)
-        if not create and old is not None and old.acid is not None:
-            from incubator_impala_spark import acid
-
-            return acid._drop(self, old.acid)
-        try:
-            out = self._sql_stmt(sql_text)
-        except Exception:
-            stats.put(self, name, old)
-            raise
-        if create:
-            sm = _CREATE_SORT.match(sql_text)
-            if sm:
-                cols = [c.strip().strip("`")
-                        for c in sm.group("cols").split(",") if c.strip()]
-                stats.table(self, sm.group("tbl")).sort = (
-                    cols, (sm.group("ord") or "LEXICAL").upper())
-            showcreate.record_create(self, sql_text)
-        elif self.spark.catalog.tableExists(name):
-            # a DROP that left the object in place (DROP VIEW IF
-            # EXISTS naming a table)
-            stats.put(self, name, old)
-        return out
+        """Classify the statement, run the hooks of its kind, and call
+        its row of the dispatch table (statements.py)."""
+        stmt = statements.classify(self, sql_text)
+        for hook in stmt.row.hooks:
+            hook(self, stmt)
+        return stmt.row(self, stmt)
 
     def clear_orphan(self, tbl: str) -> None:
         """Remove the warehouse directory a managed table named `tbl`
@@ -483,106 +309,58 @@ class Engine:
                             *([] if db == "default" else [f"{db}.db"]),
                             name)
 
-    def _sql_stmt(self, sql_text: str) -> DataFrame:
-        am = re.match(
-            r"(?is)^\s*ANALYZE\s+TABLE\s+(?P<tbl>[\w.]+)\s*"
-            r"(?:PARTITION\s*\([^)]*\)\s*)?"
-            r"COMPUTE\s+STATISTICS\s+FOR\s+COLUMNS\s*;?\s*$",
-            sql_text)
-        if am:
-            # Hive's bare ANALYZE ... FOR COLUMNS (the
-            # clear-statsaccurate staging runs it through this
-            # engine): compute the stats and record Hive's
-            # COLUMN_STATS_ACCURATE marker, which an engine-side
-            # INSERT then clears
-            tbl = am.group("tbl")
-            try:
-                self.spark.sql(self.ns.resolve(
-                    f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                    f"FOR ALL COLUMNS"))
-            except _SPARK_ERR:
-                pass
-            rec = stats.table(self, tbl)
-            if rec.create is None:
-                rec.create = {"kind": "table", "external": True,
-                              "display": tbl}
-            rec.create.setdefault("tblproperties", {})[
-                "COLUMN_STATS_ACCURATE"] = \
-                '{\\"BASIC_STATS\\":\\"true\\"}'
-            return rows_df(
-                self.spark, [("Updated table stats.",)], "summary string")
-        # namespace shim: engine-owned db references become physical
-        # (mangled) names; db-scoped DDL returns its summary rows here
-        sql_text = self.ns.resolve(sql_text)
-        if any(rec.acid for rec in self.tables.values()) \
-                or "transactional" in sql_text.lower() \
-                or self.default_transactional_type:
-            # ACID statement surface (acid.py): transactional CREATEs
-            # and every statement touching a registered ACID table
-            from incubator_impala_spark import acid
 
-            handled = acid.handle(self, sql_text)
-            if handled is not None:
-                return handled
-        handled = self.ns.handle(self, sql_text)
-        if handled is not None:
-            return handled
-        # stale-avro-metadata registry (avro_stale.py): its DDL runs
-        # BEFORE altertable (the registered tables exist only there,
-        # not in the Spark catalog)
-        from incubator_impala_spark import altertable, avro_stale
+    def _analyze(self, stmt) -> DataFrame | None:
+        """Hive's bare ANALYZE ... FOR COLUMNS (the clear-statsaccurate
+        staging runs it through this engine): compute the stats and
+        record Hive's COLUMN_STATS_ACCURATE marker, which an
+        engine-side INSERT then clears."""
+        am = _ANALYZE.match(stmt.rest)
+        if am is None:
+            return None
+        tbl = am.group("tbl")
+        try:
+            self.spark.sql(self.ns.resolve(
+                f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
+                f"FOR ALL COLUMNS"))
+        except _SPARK_ERR:
+            pass
+        rec = stats.table(self, tbl)
+        if rec.create is None:
+            rec.create = {"kind": "table", "external": True,
+                          "display": tbl}
+        rec.create.setdefault("tblproperties", {})[
+            "COLUMN_STATS_ACCURATE"] = \
+            '{\\"BASIC_STATS\\":\\"true\\"}'
+        return summary(self.spark, "Updated table stats.")
 
-        handled = avro_stale.handle(self, sql_text)
-        if handled is not None:
-            return handled
-        avro_stale.check_query(self, sql_text)
+    def _set_column_stats(self, stmt) -> DataFrame | None:
+        """AlterTableSetColumnStats.java: manual per-column stats; -1
+        resets a value to unknown."""
+        m = _SET_COLUMN_STATS.match(stmt.tail)
+        if m is None:
+            return None
+        st = stats.record(self, m.group("tbl")).cols.setdefault(
+            m.group("col").strip("`").lower(), {})
+        names = {"numdvs": "ndv", "numnulls": "nulls",
+                 "maxsize": "max", "avgsize": "avg",
+                 "numtrues": "trues", "numfalses": "falses"}
+        for item in m.group("kv").split(","):
+            if "=" not in item:
+                continue
+            k, v = item.split("=", 1)
+            k = k.strip().strip("'\"").lower()
+            v = v.strip().strip("'\"")
+            if k in names:
+                st[names[k]] = float(v) if k == "avgsize" else int(v)
+        return summary(self.spark, "Column stats have been set.")
 
-        handled = altertable.handle(self, sql_text)
-        if handled is not None:
-            return handled
-        m = re.match(r"(?is)^\s*SHOW\s+PARTITIONS\s+"
-                     r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
-        if m:
-            return partitions.show_partitions(self, m.group(1))
-        m = re.match(r"(?is)^\s*SHOW\s+COLUMN\s+STATS\s+"
-                     r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
-        if m:
-            return self._show_column_stats(m.group(1))
-        m = re.match(r"(?is)^\s*SHOW\s+TABLE\s+STATS\s+"
-                     r"(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$", sql_text)
-        if m:
-            return partitions.show_table_stats(self, m.group(1))
-        m = re.match(
-            r"(?is)^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
-            r"SET\s+COLUMN\s+STATS\s+(?P<col>`?\w+`?)\s*"
-            r"\((?P<kv>[^)]*)\)\s*;?\s*$", sql_text)
-        if m:
-            # AlterTableSetColumnStats.java: manual per-column stats;
-            # -1 resets a value to unknown
-            st = stats.record(self, m.group("tbl")).cols.setdefault(
-                m.group("col").strip("`").lower(), {})
-            names = {"numdvs": "ndv", "numnulls": "nulls",
-                     "maxsize": "max", "avgsize": "avg",
-                     "numtrues": "trues", "numfalses": "falses"}
-            for item in m.group("kv").split(","):
-                if "=" not in item:
-                    continue
-                k, v = item.split("=", 1)
-                k = k.strip().strip("'\"").lower()
-                v = v.strip().strip("'\"")
-                if k in names:
-                    st[names[k]] = float(v) if k == "avgsize" \
-                        else int(v)
-            return rows_df(
-                self.spark, [("Column stats have been set.",)],
-                "summary string")
-        m = re.match(r"(?is)^\s*SHOW\s+FILES\s+IN\s+([A-Za-z_][\w.]*)"
-                     r"(?:\s+PARTITION\s*\((?P<spec>(?:[^()]|"
-                     r"\([^()]*\))*)\))?\s*;?\s*$", sql_text)
-        if m:
-            return partitions.show_files(self, m.group(1),
-                                         m.group("spec"))
-        m = _DESCRIBE_FMT.match(sql_text)
+    def _describe(self, stmt) -> DataFrame | None:
+        """DESCRIBE FORMATTED of a table with a recorded SORT BY, and
+        plain DESCRIBE <path>; other forms run as translated by the
+        dialect."""
+        tail = stmt.tail
+        m = _DESCRIBE_FMT.match(tail)
         sort = m and stats.peek(self, m.group(1)).sort
         if sort:
             base = self.spark.sql(f"DESCRIBE TABLE EXTENDED {m.group(1)}")
@@ -592,155 +370,128 @@ class Engine:
                 ("", "sort.order".ljust(20), order.ljust(20))],
                 base.schema)
             return base.unionByName(extra)
-        m = _COMPUTE_STATS_STMT.match(sql_text)
-        if m:
-            return self._compute_stats(m)
-        m = _DESCRIBE_PATH.match(sql_text)
-        if m:
-            from incubator_impala_spark.describe import describe_df
+        m = _DESCRIBE_PATH.match(tail)
+        if m is None:
+            return None
+        from incubator_impala_spark.describe import describe_df
 
-            if re.match(r"(?i)^(?:functional_orc_def\.)?\w+"
-                        r"\.row__id$", m.group(1)):
-                # the synthetic transactional struct on a full-ACID
-                # table (describe-path.test; Path.java ROW__ID
-                # registration — fixed five-field shape)
-                return rows_df(self.spark, [
-                    ("operation", "int", ""),
-                    ("originaltransaction", "bigint", ""),
-                    ("bucket", "int", ""),
-                    ("rowid", "bigint", ""),
-                    ("currenttransaction", "bigint", "")],
-                    "name string, type string, comment string")
-            # db-qualifier conventions match the query path: functional
-            # variants resolve to the flat fixture views
-            path = re.sub(r"^functional(_\w+)?\.", "", m.group(1))
-            return describe_df(self.spark, path)
-        m = _CTAS_STMT.match(sql_text)
+        if re.match(r"(?i)^(?:functional_orc_def\.)?\w+"
+                    r"\.row__id$", m.group(1)):
+            # the synthetic transactional struct on a full-ACID
+            # table (describe-path.test; Path.java ROW__ID
+            # registration — fixed five-field shape)
+            return rows_df(self.spark, [
+                ("operation", "int", ""),
+                ("originaltransaction", "bigint", ""),
+                ("bucket", "int", ""),
+                ("rowid", "bigint", ""),
+                ("currenttransaction", "bigint", "")],
+                "name string, type string, comment string")
+        # db-qualifier conventions match the query path: functional
+        # variants resolve to the flat fixture views
+        path = re.sub(r"^functional(_\w+)?\.", "", m.group(1))
+        return describe_df(self.spark, path)
+
+    def _create_table(self, stmt) -> DataFrame | None:
+        """CREATE TABLE: a transactional table (acid.py), a stale-Avro
+        registry entry (avro_stale.py), CTAS, the Avro forms, LIKE
+        PARQUET|ORC 'file', LIKE <table>, or a plain CREATE, which
+        returns the reference's DDL summary row."""
+        from incubator_impala_spark import acid, avro_stale
+
+        out = acid.handle(self, stmt)
+        if out is not None:
+            return out
+        tail = stmt.tail
+        if stmt.target is not None:
+            self.ns.record_table(
+                self.ns.resolve(stmt.target).replace("`", ""))
+        out = avro_stale.create(self, tail)
+        if out is not None:
+            return out
+        m = None if stmt.group("ext") else _CTAS.match(tail)
         if m:
             if m.group("ine") and self.spark.catalog.tableExists(
                     m.group("tbl")):
                 n = 0  # IF NOT EXISTS on an existing table: no insert
             else:
-                stmt = self._ctas_ts_rewrite(m) or sql_text
-                self.spark.sql(self.translate(stmt))
+                text = self._ctas_ts_rewrite(
+                    stmt.text[:stmt.head.end("kw")] + m.group("pre"),
+                    m.group("body")) or stmt.resolved
+                self.spark.sql(self.translate(text))
                 # CTAS runs as ExecutedCommandExec (no write metrics),
                 # so the summary count comes from the fresh table —
                 # parquet count(*) folds to footer row counts
                 n = self.spark.table(m.group("tbl")).count()
-            return rows_df(
-                self.spark, [(f"Inserted {n} row(s)",)], "summary string")
-        m = _DROP_STATS_STMT.match(sql_text)
-        if m:
-            tbl, spec = m.group("tbl"), (m.group("part") or "").strip()
-            rec = stats.get(self, tbl)
-            if not spec:
-                stats.clear(self, tbl)
-            elif rec.cover:
-                # a partition-scoped DROP INCREMENTAL STATS keeps the
-                # table-level stats; it shrinks the cover, and the
-                # reference derives table-level column stats by
-                # merging per-partition incremental sketches, so that
-                # shifts them (DIALECT.md
-                # incremental-colstats-aggregation, closed r8). The
-                # partitions are chosen as COMPUTE chooses them.
-                try:
-                    hit = {partitions.part_suffix(kv) for _, kv in
-                           partitions.match_partitions(self, tbl, spec)}
-                    dropped = {
-                        p for p in rec.cover if p in hit or
-                        partitions.part_suffix(
-                            partitions.parse_suffix(p)) in hit}
-                    if dropped:
-                        rec.cover -= dropped
-                        rec.incremental -= dropped
-                        stats.refresh_incremental(
-                            self, tbl,
-                            partitions.partition_columns(self, tbl))
-                except (*_SPARK_ANY, KeyError):
-                    pass  # table dropped / cover emptied
-            return rows_df(
-                self.spark, [("Stats have been dropped.",)], "summary string")
-        lm = re.match(
-            r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
-            r"(?:\((?P<cols>[\s\S]*?)\)\s*)?"
-            r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-            r"(?:STORED\s+AS\s+AVRO\b|WITH\s+SERDEPROPERTIES\b)"
-            r"[\s\S]*?avro\.schema\.literal'\s*=\s*'(?P<lit>[^']*)'"
-            r"[\s\S]*$", sql_text)
-        if lm and not re.search(r"\bAS\s+SELECT\b", sql_text,
-                                re.IGNORECASE):
+            return summary(self.spark, f"Inserted {n} row(s)")
+        if _AS_SELECT.search(tail):
+            return None   # not a CTAS this engine parses: Spark's
+        if stmt.group("ine") and self.spark.catalog.tableExists(
+                self.ns.resolve(stmt.target)):
+            return summary(self.spark, "Table already exists.")
+        lm = _AVRO_LITERAL.match(tail)
+        if lm:
             return self.create_avro_from_literal(
                 lm.group("tbl"), lm.group("lit"), lm.group("cols"),
                 lm.group("part"))
-        m = _CREATE_AVRO.match(sql_text)
-        if m and not re.search(r"\bAS\s+SELECT\b|avro\.schema",
-                               sql_text, re.IGNORECASE):
-            handled = self._create_avro(m)
-            if handled is not None:
-                return handled
-        m = _CREATE_LIKE_PARQUET.match(sql_text)
+        m = _CREATE_AVRO.match(tail)
+        if m and not re.search(r"avro\.schema", tail, re.IGNORECASE):
+            out = self._create_avro(m)
+            if out is not None:
+                return out
+        m = _CREATE_LIKE_PARQUET.match(tail)
         if m:
             return self._create_like_parquet(m)
-        m = _CREATE_LIKE.match(sql_text)
+        m = _CREATE_LIKE.match(tail)
         if m:
             return self._create_like(m)
-        m = _CREATE_TABLE_PLAIN.match(sql_text)
-        if m:
-            im = re.match(
-                r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-                r"IF\s+NOT\s+EXISTS\s+([A-Za-z_][\w.]*)",
-                sql_text, re.IGNORECASE)
-            if im and self.spark.catalog.tableExists(im.group(1)):
-                return rows_df(
-                    self.spark, [("Table already exists.",)], "summary string")
-            self.spark.sql(self.translate(sql_text))
-            return rows_df(
-                self.spark, [("Table has been created.",)], "summary string")
-        m = _TRUNCATE_STMT.match(sql_text)
-        if m:
-            tbl = m.group("tbl")
-            if not self.spark.catalog.tableExists(tbl):
-                if m.group("ife"):
-                    return rows_df(
-                        self.spark, [("Table does not exist.",)],
-                        "summary string")
-                raise ValueError(f"Table does not exist: {tbl}")
-            self.spark.sql(f"TRUNCATE TABLE {tbl}")
-            # TRUNCATE drops the table AND column stats with the data
+        self.spark.sql(self.translate(stmt.resolved))
+        return summary(self.spark, "Table has been created.")
+
+    def _drop_stats(self, m: re.Match) -> DataFrame:
+        """DROP [INCREMENTAL] STATS t [PARTITION (spec)]: clears the
+        incremental-stats cover so the next compute recounts."""
+        tbl, spec = m.group("tbl"), (m.group("part") or "").strip()
+        rec = stats.get(self, tbl)
+        if not spec:
             stats.clear(self, tbl)
-            return rows_df(
-                self.spark, [("Table has been truncated.",)], "summary string")
-        # INSERT detection runs on hint-stripped text (the reference
-        # allows /*+ clustered,shuffle */ between the target and the
-        # select) and handles the WITH-prefix form by folding the
-        # leading CTEs into the body
-        ins_text = dialect.strip_plan_hints(sql_text)
-        cte_prefix = ""
-        if re.match(r"^\s*with\b", ins_text, re.IGNORECASE):
-            # INSERT at paren depth 0 after the CTE list
-            depth0 = sqlscan.top_level(ins_text)
-            im = re.search(r"\binsert\b", depth0, re.IGNORECASE)
-            if im:
-                cte_prefix = ins_text[:im.start()].rstrip()
-                ins_text = ins_text[im.start():]
-        m = _INSERT_STMT.match(ins_text)
-        if m:
-            return self._insert(m, cte_prefix)
-        granted = self.grants.handle(self.spark, sql_text)
-        if granted is not None:
-            return granted
-        m = _LOAD_DATA.match(sql_text)
-        if m:
-            return self._load_data(
-                m.group("path"), m.group("tbl"),
-                overwrite=bool(m.group("over")),
-                partition=m.group("part"),
-            )
+        elif rec.cover:
+            # a partition-scoped DROP INCREMENTAL STATS keeps the
+            # table-level stats; it shrinks the cover, and the
+            # reference derives table-level column stats by merging
+            # per-partition incremental sketches, so that shifts them
+            # (DIALECT.md incremental-colstats-aggregation, closed
+            # r8). The partitions are chosen as COMPUTE chooses them.
+            try:
+                dropped = rec.cover & {
+                    p for p, _ in
+                    partitions.match_partitions(self, tbl, spec)}
+                if dropped:
+                    rec.cover -= dropped
+                    rec.incremental -= dropped
+                    stats.refresh_incremental(
+                        self, tbl, partitions.partition_columns(self, tbl))
+            except (*_SPARK_ANY, KeyError):
+                pass  # table dropped / cover emptied
+        return summary(self.spark, "Stats have been dropped.")
+
+    def _truncate(self, m: re.Match) -> DataFrame:
+        tbl = m.group("tbl")
+        if not self.spark.catalog.tableExists(tbl):
+            if m.group("ife"):
+                return summary(self.spark, "Table does not exist.")
+            raise ValueError(f"Table does not exist: {tbl}")
+        self.spark.sql(f"TRUNCATE TABLE {tbl}")
+        # TRUNCATE drops the table AND column stats with the data
+        stats.clear(self, tbl)
+        return summary(self.spark, "Table has been truncated.")
+
+    def _query(self, sql_text: str) -> DataFrame:
+        """A statement no row handles: the dialect first (plan hints
+        stripped, macros expanded), then collection-path resolution on
+        the cleaned text, then Spark."""
         from incubator_impala_spark import nested_paths
 
-        # dialect first (plan hints stripped, macros expanded), then
-        # collection-path resolution on the cleaned text
         translated = self.translate(sql_text)
         if self.appx_count_distinct:
             def _acd(a):
@@ -877,24 +628,22 @@ class Engine:
     def _table_bytes(self, tbl: str) -> int | None:
         """Total visible data bytes under the table location (the
         totalSize stat COMPUTE STATS records alongside numRows)."""
-        import os as _os
-
         try:
             loc = self._table_location(tbl)
         except _SPARK_ERR:
             return None
-        if not loc or not _os.path.isdir(loc):
+        if not loc or not os.path.isdir(loc):
             return None
         total = 0
-        for root, dirs, files in _os.walk(loc):
+        for root, dirs, files in os.walk(loc):
             dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
             for f in files:
                 if not f.startswith((".", "_")) \
                         and not f.endswith(".crc"):
-                    total += _os.path.getsize(_os.path.join(root, f))
+                    total += os.path.getsize(os.path.join(root, f))
         return total
 
-    def _compute_stats(self, m: re.Match) -> DataFrame:
+    def _compute_stats(self, m: re.Match, inc: bool) -> DataFrame:
         """COMPUTE STATS veneer: runs Spark's ANALYZE (footer counts +
         per-column min/max/ndv/null stats into the catalog — what the
         planner consumes) and returns the reference's summary row
@@ -926,10 +675,9 @@ class Engine:
             pass          # temp-view fixtures: stats are advisory
         parts = {raw for raw, _ in partitions.list_partitions(self, tbl)} \
             if pcols else set()
-        hit = {partitions.part_suffix(kv) for _, kv in
-               partitions.match_partitions(self, tbl, spec)} \
+        hit = {p for p, _ in partitions.match_partitions(self, tbl, spec)} \
             if spec and pcols else set()
-        rerun = bool(pcols and m.group("inc")
+        rerun = bool(pcols and inc
                      and stats.get(self, tbl).cover is not None)
         # extrapolation tables store ONLY the table-level row count
         # (ComputeStatsStmt: "Updated 1 partition(s)"), never
@@ -966,7 +714,7 @@ class Engine:
                 n_parts = len(hit)
                 rec.cover = (rec.cover or set()) | hit
                 rec.rows = sum(rec.parts.values())
-                if m.group("inc"):
+                if inc:
                     rec.incremental |= hit
                     try:
                         stats.refresh_incremental(self, tbl, pcols)
@@ -979,10 +727,8 @@ class Engine:
                 rec.cover = parts
                 rec.incremental |= new
                 if n_parts == 0:
-                    return rows_df(
-                        self.spark, [("No partitions selected for "
-                                      "incremental stats update.",)],
-                        "summary string")
+                    return summary(self.spark, "No partitions selected "
+                                   "for incremental stats update.")
             elif extrap:
                 n_parts = 1
                 rec.cover, rec.incremental = parts, set()
@@ -992,10 +738,9 @@ class Engine:
                 rec.cover = parts
                 # incremental compute marks every partition's cover;
                 # a full compute REPLACES incremental stats (flag off)
-                rec.incremental = set(parts) if m.group("inc") else set()
-        return rows_df(
-            self.spark, [(f"Updated {n_parts} partition(s) and "
-                          f"{len(wanted)} column(s).",)], "summary string")
+                rec.incremental = set(parts) if inc else set()
+        return summary(self.spark, f"Updated {n_parts} partition(s) and "
+                                   f"{len(wanted)} column(s).")
 
     def _create_like_parquet(self, m: re.Match) -> DataFrame:
         """CREATE TABLE LIKE PARQUET|ORC 'file': clone the file
@@ -1006,15 +751,10 @@ class Engine:
         data file in the same directory), then by basename against the
         reference's testdata (the files the load scripts would have
         staged)."""
-        import os
-
         fmt = (m.group("fmt") or "PARQUET").upper()
         reader = (self.spark.read.orc if fmt == "ORC"
                   else self.spark.read.parquet)
         tbl, path = m.group("tbl"), m.group("path")
-        if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return rows_df(
-                self.spark, [("Table already exists.",)], "summary string")
         if not os.path.exists(path):
             cands = []
             wh = self._resolve_fs_path(path)
@@ -1090,8 +830,7 @@ class Engine:
                 ]).write.insertInto(tbl)
             except _SPARK_ANY:  # no staged data at the location
                 pass
-        return rows_df(
-            self.spark, [("Table has been created.",)], "summary string")
+        return summary(self.spark, "Table has been created.")
 
     @staticmethod
     def _avro_type(sql_type: str) -> str:
@@ -1143,51 +882,17 @@ class Engine:
             defs.append(f"`{f['name']}` {typ} COMMENT '{comment}'")
         self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         self.clear_orphan(tbl)
-        pclause = ""
-        if part and part.strip():
-            pnames = []
-            for item in sqlscan.split_top(part, angle=True):
-                pm2 = re.match(r"\s*`?(\w+)`?\s+(\S+)", item)
-                if pm2:
-                    defs.append(f"`{pm2.group(1)}` {pm2.group(2)}")
-                    pnames.append(pm2.group(1))
-            if pnames:
-                pclause = f" PARTITIONED BY ({', '.join(pnames)})"
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({', '.join(defs)}) "
-            f"USING parquet{pclause}")
-        stats.table(self, tbl).avro = True
-        return rows_df(
-            self.spark, [("Table has been created.",)], "summary string")
+        self._create_avro_table(tbl, defs, part)
+        return summary(self.spark, "Table has been created.")
 
-    def _create_avro(self, m: re.Match) -> DataFrame:
-        """CREATE TABLE ... STORED AS AVRO without an explicit Avro
-        schema (see _CREATE_AVRO). The converted schema is created as
-        a managed parquet table — the storage format is an engine
-        detail; the reference-visible surface is the converted column
-        types and 'from deserializer' comments."""
-        tbl = m.group("tbl")
-        if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return rows_df(
-                self.spark, [("Table already exists.",)], "summary string")
-        col_re = re.compile(
-            r"^\s*(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s+"
-            r"(?P<type>[\s\S]*?)"
-            r"(?:\s+COMMENT\s+'(?P<cm>(?:[^']|'')*)')?\s*$",
-            re.IGNORECASE)
-        defs = []
-        for item in sqlscan.split_top(m.group("cols"), angle=True):
-            cm = col_re.match(item)
-            if not cm:
-                return None  # unparsed column def: fall through
-            comment = (cm.group("cm") or "from deserializer") \
-                .replace("'", "''")
-            defs.append(f"`{cm.group('name')}` "
-                        f"{self._avro_type(cm.group('type'))} "
-                        f"COMMENT '{comment}'")
+    def _create_avro_table(self, tbl: str, defs: list,
+                           part: str | None) -> list:
+        """Create the converted Avro schema `defs` as a managed parquet
+        table (the storage format is an engine detail), partitioned by
+        the `name type` items of `part`; returns the partition keys."""
         pnames = []
-        for item in sqlscan.split_top(m.group("part") or "", angle=True):
-            cm = col_re.match(item)
+        for item in sqlscan.split_top(part or "", angle=True):
+            cm = _AVRO_COL.match(item)
             if cm:
                 defs.append(f"`{cm.group('name')}` {cm.group('type')}")
                 pnames.append(cm.group("name"))
@@ -1196,6 +901,26 @@ class Engine:
         self.spark.sql(f"CREATE TABLE {tbl} ({', '.join(defs)}) "
                        f"USING parquet{part}")
         stats.table(self, tbl).avro = True
+        return pnames
+
+    def _create_avro(self, m: re.Match) -> DataFrame:
+        """CREATE TABLE ... STORED AS AVRO without an explicit Avro
+        schema (see _CREATE_AVRO). The converted schema is created as
+        a managed parquet table — the storage format is an engine
+        detail; the reference-visible surface is the converted column
+        types and 'from deserializer' comments."""
+        tbl = m.group("tbl")
+        defs = []
+        for item in sqlscan.split_top(m.group("cols"), angle=True):
+            cm = _AVRO_COL.match(item)
+            if not cm:
+                return None  # unparsed column def: fall through
+            comment = (cm.group("cm") or "from deserializer") \
+                .replace("'", "''")
+            defs.append(f"`{cm.group('name')}` "
+                        f"{self._avro_type(cm.group('type'))} "
+                        f"COMMENT '{comment}'")
+        pnames = self._create_avro_table(tbl, defs, m.group("part"))
         # EXTERNAL ... LOCATION over existing avro container files:
         # adopt the data (avro-schema-changes.test
         # avro_alter_table_add_new_column over tinytable_avro)
@@ -1210,8 +935,7 @@ class Engine:
 
                 avro_io.read_avro(self.spark, loc) \
                     .write.insertInto(tbl)
-        return rows_df(
-            self.spark, [("Table has been created.",)], "summary string")
+        return summary(self.spark, "Table has been created.")
 
     def _create_like(self, m: re.Match) -> DataFrame:
         """CREATE TABLE LIKE: clone the source's schema and partition
@@ -1221,17 +945,13 @@ class Engine:
         columns (sources/functional.py PARTITIONED_BY)."""
         tbl = m.group("tbl")
         src = re.sub(r"^functional(_\w+)?\.", "", m.group("src"))
-        if m.group("ine") and self.spark.catalog.tableExists(tbl):
-            return rows_df(
-                self.spark, [("Table already exists.",)], "summary string")
         if tbl.split(".")[-1].lower() == src.split(".")[-1].lower() \
                 and self.spark.catalog.tableExists(tbl):
             # self-LIKE of a template target (the harness resolves
             # `functional.X` to the local X): fresh-create semantics
             # without destroying the source — truncate in place
             self.spark.sql(f"TRUNCATE TABLE {tbl}")
-            return rows_df(
-                self.spark, [("Table has been created.",)], "summary string")
+            return summary(self.spark, "Table has been created.")
         # the clone inherits the source's layout (CreateTableLikeStmt
         # copies sort.columns — IMPALA-4166); an explicit SORT BY is
         # recorded over it once the CREATE succeeds
@@ -1280,10 +1000,9 @@ class Engine:
             # files (the reference reads them in place) — populate the
             # clone with the source rows so reads match
             self.spark.table(src).write.insertInto(tbl)
-        return rows_df(
-            self.spark, [("Table has been created.",)], "summary string")
+        return summary(self.spark, "Table has been created.")
 
-    def _insert(self, m: re.Match, cte_prefix: str = "") -> DataFrame:
+    def _insert(self, ins) -> DataFrame:
         """INSERT INTO/OVERWRITE via a DataFrame write, returning the
         reference's summary rows: per modified partition
         `k1=v1/k2=v2/: N` (InsertStmt summary as impala-shell prints
@@ -1296,7 +1015,7 @@ class Engine:
         matching the reference's static-partition overwrite)."""
         from pyspark.sql import functions as F
 
-        tbl = m.group("tbl")
+        tbl = ins.tbl
         # an engine-side write invalidates Hive-computed column stats:
         # the reference clears COLUMN_STATS_ACCURATE on INSERT
         # (clear-statsaccurate.test; CatalogOpExecutor unsets the
@@ -1304,46 +1023,22 @@ class Engine:
         meta = stats.peek(self, tbl).create
         if meta:
             meta.get("tblproperties", {}).pop("COLUMN_STATS_ACCURATE", None)
-        overwrite = m.group("mode").upper() == "OVERWRITE"
-        # `insert into t()` with no source: one all-default row
-        # (InsertStmt with an empty permutation and no query)
-        body = m.group("body") or "select 1 as __dummy__"
-        if re.match(r"^\s*values\b", body, re.IGNORECASE):
-            body = "select * from (" + body + ") __v"
-        if cte_prefix:
-            # `with t1 as (..) insert .. [with t2 as (..)] select` —
-            # fold the prefix CTEs into the body's WITH list
-            bm = re.match(r"^\s*with\b", body, re.IGNORECASE)
-            if bm:
-                body = cte_prefix + ", " + body[bm.end():]
-            else:
-                body = cte_prefix + " " + body
-        df = self.spark.sql(self.translate(body))
+        overwrite = ins.overwrite
+        df = self.spark.sql(self.translate(ins.body))
 
         target = self.spark.table(tbl)
         tcols = target.columns
         ttypes = dict(zip(tcols, [f.dataType.simpleString()
                                   for f in target.schema.fields]))
         pcols = partitions.partition_columns(self, tbl)
-        static: dict[str, str] = {}
-        dyn: list[str] = []
-        for item in sqlscan.split_top(m.group("part") or ""):
-            if "=" in item:
-                k, v = item.split("=", 1)
-                # the value may be an Impala expression (char casts…)
-                static[k.strip().strip("`").lower()] = (
-                    dialect.rewrite_char_casts(v.strip()))
-            else:
-                dyn.append(item.strip("`").lower())
+        # a static value may be an Impala expression (char casts…)
+        static = {k: dialect.rewrite_char_casts(v)
+                  for k, v in ins.static.items()}
         # columns the SELECT supplies, in order; with a column
         # permutation the dynamic partition keys append after the
         # listed columns (InsertStmt.java permutation rules)
-        cols_g = m.group("cols")
-        if cols_g is not None:  # () is a valid EMPTY permutation
-            listed = [c for c in
-                      (x.strip().strip("`").lower()
-                       for x in cols_g.split(","))
-                      if c] + dyn
+        if ins.cols is not None:
+            listed = ins.cols + ins.dyn
         else:
             listed = [c.lower() for c in tcols if c.lower() not in static]
         if listed:
@@ -1374,7 +1069,9 @@ class Engine:
             # a few rows: sorted on the driver in Spark's ascending
             # order (NULL first, NaN after every number)
             counts = sorted(
-                final.groupBy(*pcols).count().collect(),
+                final.groupBy(*pcols).count().select("*", *[
+                    F.col(f"`{c}`").cast("string").alias(f"__dir_{c}")
+                    for c in pcols]).collect(),
                 key=lambda r: [(r[c] is not None, r[c] != r[c], r[c])
                                for c in pcols])
 
@@ -1389,13 +1086,7 @@ class Engine:
                 if v != v:
                     return "NaN"   # Spark's directory spelling
                 if isinstance(v, str):
-                    # Hive FileUtils.escapePathName's exact char set
-                    # (space, +, etc. stay literal)
-                    return "".join(
-                        f"%{ord(ch):02X}"
-                        if ch in '"#%\'*/:=?\\{[]^' or ord(ch) < 0x20
-                        else ch
-                        for ch in v)
+                    return partitions.escape_value(v)
                 if isinstance(v, float):
                     # partition dirs print floats shortest-form
                     # (float_col=0, not 0.0)
@@ -1408,9 +1099,10 @@ class Engine:
                      + f"/: {r['count']}",)
                     for r in counts]
             # modified partitions lose their incremental-stats cover
-            # (the next COMPUTE INCREMENTAL STATS recounts them)
-            touched = {"/".join(f"{c}={fmt(r[c])}" for c in pcols)
-                       for r in counts}
+            # (the next COMPUTE INCREMENTAL STATS recounts them), named
+            # as their directories are: the key values cast to strings
+            touched = {partitions.part_suffix(
+                {c: r[f"__dir_{c}"] for c in pcols}) for r in counts}
             cover = stats.get(self, tbl).cover
             if cover is not None:
                 cover -= touched
@@ -1580,7 +1272,7 @@ class Engine:
             pass
         msg = (f"Loaded {len(files)} file(s). "
                f"Total files in destination location: {total}")
-        return rows_df(self.spark, [(msg,)], "summary string")
+        return summary(self.spark, msg)
 
     def explain(self, sql_text: str, mode: str = "formatted") -> str:
         """EXPLAIN surface (reference: sql-parser.cup:765-775)."""

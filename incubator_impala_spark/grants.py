@@ -38,48 +38,26 @@ _OBJ = (
     r"|URI\s+'(?P<uri>[^']*)')"
 )
 
-CREATE_ROLE = re.compile(
-    r"^\s*CREATE\s+ROLE\s+(?P<role>[A-Za-z_][\w]*)\s*;?\s*$", re.IGNORECASE
-)
-DROP_ROLE = re.compile(
-    r"^\s*DROP\s+ROLE\s+(?P<role>[A-Za-z_][\w]*)\s*;?\s*$", re.IGNORECASE
-)
-GRANT_ROLE = re.compile(
-    r"^\s*GRANT\s+ROLE\s+(?P<role>[A-Za-z_][\w]*)\s+TO\s+GROUP\s+"
-    r"(?P<group>[A-Za-z_][\w]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-REVOKE_ROLE = re.compile(
-    r"^\s*REVOKE\s+ROLE\s+(?P<role>[A-Za-z_][\w]*)\s+FROM\s+GROUP\s+"
-    r"(?P<group>[A-Za-z_][\w]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-GRANT_PRIV = re.compile(
-    r"^\s*GRANT\s+(?P<priv>" + _PRIV + r")\s+ON\s+" + _OBJ
-    + r"\s+TO\s+(?:ROLE\s+)?(?P<role>[A-Za-z_][\w]*)"
-    r"(?P<wgo>\s+WITH\s+GRANT\s+OPTION)?\s*;?\s*$",
-    re.IGNORECASE,
-)
-REVOKE_PRIV = re.compile(
-    r"^\s*REVOKE\s+(?:GRANT\s+OPTION\s+FOR\s+)?(?P<priv>" + _PRIV
-    + r")\s+ON\s+" + _OBJ
-    + r"\s+FROM\s+(?:ROLE\s+)?(?P<role>[A-Za-z_][\w]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-SHOW_ROLES = re.compile(r"^\s*SHOW\s+ROLES\s*;?\s*$", re.IGNORECASE)
-SHOW_CURRENT_ROLES = re.compile(
-    r"^\s*SHOW\s+CURRENT\s+ROLES\s*;?\s*$", re.IGNORECASE
-)
-SHOW_ROLE_GRANT_GROUP = re.compile(
-    r"^\s*SHOW\s+ROLE\s+GRANT\s+GROUP\s+(?P<group>[A-Za-z_][\w]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-SHOW_GRANT = re.compile(
-    r"^\s*SHOW\s+GRANT\s+(?P<ptype>ROLE|USER|GROUP)\s+"
-    r"(?P<principal>[A-Za-z_][\w]*)"
-    r"(?P<onclause>\s+ON\s+" + _OBJ + r")?\s*;?\s*$",
-    re.IGNORECASE,
-)
+# What follows each statement head: the parts of the rows statements.py
+# compiles (it matches the heads)
+_NAME = r"(?P<{}>[A-Za-z_][\w]*)"
+_END = r"\s*;?\s*$"
+ROLE = r"\s+" + _NAME.format("role") + _END
+GRANT_ROLE, REVOKE_ROLE = (
+    r"\s+" + _NAME.format("role") + rf"\s+{to}\s+GROUP\s+"
+    + _NAME.format("group") + _END for to in ("TO", "FROM"))
+GRANT = (
+    r"\s+(?P<priv>" + _PRIV + r")\s+ON\s+" + _OBJ
+    + r"\s+TO\s+(?:ROLE\s+)?" + _NAME.format("role")
+    + r"(?P<wgo>\s+WITH\s+GRANT\s+OPTION)?" + _END)
+REVOKE = (
+    r"\s+(?:GRANT\s+OPTION\s+FOR\s+)?(?P<priv>" + _PRIV + r")\s+ON\s+"
+    + _OBJ + r"\s+FROM\s+(?:ROLE\s+)?" + _NAME.format("role") + _END)
+NOTHING = _END
+GROUP = r"\s+GROUP\s+" + _NAME.format("group") + _END
+PRINCIPAL = (
+    r"\s+(?P<ptype>ROLE|USER|GROUP)\s+" + _NAME.format("principal")
+    + r"(?P<onclause>\s+ON\s+" + _OBJ + r")?" + _END)
 
 # SHOW GRANT output shape (ShowGrantPrincipalStmt.java result set)
 GRANT_COLUMNS = [
@@ -109,71 +87,61 @@ class GrantRegistry:
     # (role, scope, name, priv) -> grant_option
     privs: dict = field(default_factory=dict)
 
-    def handle(self, spark, sql: str):
-        """Try the statement against the auth grammar; a DataFrame if
-        handled, None if it isn't an authorization statement."""
-        m = CREATE_ROLE.match(sql)
-        if m:
-            self.roles.add(m.group("role").lower())
-            return self._status(spark)
-        m = DROP_ROLE.match(sql)
-        if m:
-            role = m.group("role").lower()
-            self.roles.discard(role)
-            for rs in self.group_roles.values():
-                rs.discard(role)
-            self.privs = {k: v for k, v in self.privs.items() if k[0] != role}
-            return self._status(spark)
-        m = GRANT_ROLE.match(sql)
-        if m:
-            role = m.group("role").lower()
-            if role not in self.roles:
-                raise ValueError(f"role does not exist: {role}")
-            self.group_roles.setdefault(m.group("group").lower(), set()).add(role)
-            return self._status(spark)
-        m = REVOKE_ROLE.match(sql)
-        if m:
-            self.group_roles.setdefault(
-                m.group("group").lower(), set()
-            ).discard(m.group("role").lower())
-            return self._status(spark)
-        m = GRANT_PRIV.match(sql)
-        if m:
-            role = m.group("role").lower()
-            if role not in self.roles:
-                raise ValueError(f"role does not exist: {role}")
-            scope, name = _obj(m)
-            key = (role, scope, name, m.group("priv").lower())
-            self.privs[key] = bool(m.group("wgo"))
-            return self._status(spark)
-        m = REVOKE_PRIV.match(sql)
-        if m:
-            scope, name = _obj(m)
-            self.privs.pop(
-                (m.group("role").lower(), scope, name,
-                 m.group("priv").lower()),
-                None,
-            )
-            return self._status(spark)
-        m = SHOW_ROLES.match(sql) or SHOW_CURRENT_ROLES.match(sql)
-        if m:
-            rows = [(r,) for r in sorted(self.roles)]
-            return rows_df(spark, rows, "role_name string")
-        m = SHOW_ROLE_GRANT_GROUP.match(sql)
-        if m:
-            rows = [
-                (r,)
-                for r in sorted(
-                    self.group_roles.get(m.group("group").lower(), set())
-                )
-            ]
-            return rows_df(spark, rows, "role_name string")
-        m = SHOW_GRANT.match(sql)
-        if m:
-            return self._show_grant(spark, m)
-        return None
+    # -- statements (rows of statements.ROWS) ---------------------------
 
-    def _show_grant(self, spark, m: re.Match):
+    def create_role(self, engine, stmt, m: re.Match):
+        self.roles.add(m.group("role").lower())
+        return self._status(engine.spark)
+
+    def drop_role(self, engine, stmt, m: re.Match):
+        role = m.group("role").lower()
+        self.roles.discard(role)
+        for rs in self.group_roles.values():
+            rs.discard(role)
+        self.privs = {k: v for k, v in self.privs.items() if k[0] != role}
+        return self._status(engine.spark)
+
+    def grant_role(self, engine, stmt, m: re.Match):
+        role = m.group("role").lower()
+        if role not in self.roles:
+            raise ValueError(f"role does not exist: {role}")
+        self.group_roles.setdefault(m.group("group").lower(), set()).add(role)
+        return self._status(engine.spark)
+
+    def revoke_role(self, engine, stmt, m: re.Match):
+        self.group_roles.setdefault(
+            m.group("group").lower(), set()
+        ).discard(m.group("role").lower())
+        return self._status(engine.spark)
+
+    def grant(self, engine, stmt, m: re.Match):
+        role = m.group("role").lower()
+        if role not in self.roles:
+            raise ValueError(f"role does not exist: {role}")
+        scope, name = _obj(m)
+        key = (role, scope, name, m.group("priv").lower())
+        self.privs[key] = bool(m.group("wgo"))
+        return self._status(engine.spark)
+
+    def revoke(self, engine, stmt, m: re.Match):
+        scope, name = _obj(m)
+        self.privs.pop(
+            (m.group("role").lower(), scope, name,
+             m.group("priv").lower()),
+            None,
+        )
+        return self._status(engine.spark)
+
+    def show_roles(self, engine, stmt, m: re.Match):
+        rows = [(r,) for r in sorted(self.roles)]
+        return rows_df(engine.spark, rows, "role_name string")
+
+    def show_role_grant(self, engine, stmt, m: re.Match):
+        roles = self.group_roles.get(m.group("group").lower(), set())
+        return rows_df(engine.spark, [(r,) for r in sorted(roles)],
+                       "role_name string")
+
+    def show_grant(self, engine, stmt, m: re.Match):
         ptype = m.group("ptype").upper()
         principal = m.group("principal").lower()
         if ptype == "ROLE":
@@ -198,7 +166,7 @@ class GrantRegistry:
             "principal_type string, principal_name string, scope string, "
             "name string, privilege string, grant_option boolean"
         )
-        return rows_df(spark, rows, schema)
+        return rows_df(engine.spark, rows, schema)
 
     @staticmethod
     def _status(spark):

@@ -83,30 +83,25 @@ def maybe_activate(engine, tbl: str) -> None:
         rec.mixed = True
 
 
-_DML = re.compile(r"(?is)^\s*(insert|alter|drop|create|truncate|"
-                  r"load|refresh|invalidate|compute|describe|show|"
-                  r"upsert|update|delete)\b")
-
-
-def refresh_views(engine, sql_text: str) -> None:
-    """engine.sql pre-pass: SELECT statements get fresh dispatch
-    views for every referenced mixed table; any other statement drops
-    the shadow so it operates on the catalog object itself."""
+def refresh_views(engine, sql_text: str, scan: bool) -> None:
+    """engine.sql pre-pass: a statement that reads rows (`scan`) gets
+    a fresh dispatch view for every referenced mixed table; DDL and
+    writes drop the shadow so they operate on the catalog object
+    itself."""
     low = sqlscan.shadow(sql_text).lower()
     for k in [k for k, rec in engine.tables.items() if rec.mixed]:
         phys = stats.view_name(k)
         if not re.search(rf"\b{re.escape(phys)}\b", low):
             continue
-        if _DML.match(sql_text):
+        if not scan:
             engine.spark.catalog.dropTempView(phys)
             continue
         build_view(engine, phys)
 
 
-def _effective(engine, phys: str, kv: dict) -> tuple[str, str]:
+def _effective(engine, phys: str, suffix: str) -> tuple[str, str]:
     """(format, location) for one partition after ALTER overrides."""
     rec = stats.peek(engine, phys)
-    suffix = _parts.part_suffix(kv)
     loc = rec.locations.get(suffix) \
         or _parts._part_dir(engine, phys, suffix)
     fmt = rec.formats.get(suffix)
@@ -142,13 +137,12 @@ def build_view(engine, phys: str) -> None:
     # set is a handful of partitions, the base leg is the fleet)
     over, legs = [], []
     bad_parts: list[tuple[dict, str]] = []
-    for _, kv in _parts.list_partitions(engine, phys):
-        suffix = _parts.part_suffix(kv)
+    for suffix, kv in _parts.list_partitions(engine, phys):
         fmt = (rec.formats.get(suffix) or base).upper()
         if suffix not in rec.locations and fmt == base:
             continue
         over.append(kv)
-        _, loc = _effective(engine, phys, kv)
+        _, loc = _effective(engine, phys, suffix)
         files = _parts._files_in(loc)
         leg = None
         if not files:
@@ -183,8 +177,6 @@ def build_view(engine, phys: str) -> None:
         df = df.unionByName(leg)
     df.createOrReplaceTempView(phys)
     # pruning-aware reconciliation error for unresolvable partitions
-    from incubator_impala_spark import scan_errors as se
-
     checks = engine.scan_checks
     if bad_parts:
         checks[phys.lower()] = {

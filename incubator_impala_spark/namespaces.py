@@ -16,9 +16,10 @@ is served by a lightweight namespace registry instead:
   the mangled physical names (literal-safe: matching runs on the
   sqlscan shadow), so SELECT/INSERT/DESCRIBE statements
   flow through the normal engine path unchanged.
-* ``handle()`` intercepts the DDL statements themselves — CREATE/DROP
-  DATABASE, CREATE/ALTER/DROP VIEW, RENAME, SHOW TABLES/DATABASES,
-  USE — and returns the reference's exact summary rows
+* one method per DDL statement — CREATE/DROP DATABASE, CREATE/ALTER/
+  DROP VIEW, RENAME, SHOW TABLES/DATABASES, USE, the function DDL —
+  serves its row of the statement table (statements.py) and returns
+  the reference's exact summary rows
   (CatalogOpExecutor.java strings; ShowTablesStmt single-column
   output).
 
@@ -33,90 +34,70 @@ import re
 from pyspark.errors import PySparkException
 
 from incubator_impala_spark import dialect, partitions, sqlscan, stats
-from incubator_impala_spark.session import rows_df
+from incubator_impala_spark.session import rows_df, summary
 
 __all__ = ["Namespaces"]
 
 
-_CREATE_DB = re.compile(
-    r"^\s*CREATE\s+(?:DATABASE|SCHEMA)\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+# What follows each statement head (statements.py matches the heads):
+# the public patterns are the parts of rows statements.py compiles, the
+# private ones the tails these methods parse themselves
+CREATE_DB = (
+    r"\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s*"
     r"(?:COMMENT\s+(?P<q>['\"])(?P<comment>.*?)(?P=q)\s*)?"
     r"(?:LOCATION\s+(?P<lq>['\"])(?P<loc>[^'\"]*)(?P=lq)\s*)?"
     r"(?:MANAGEDLOCATION\s+(?P<mq>['\"])(?P<mloc>[^'\"]*)(?P=mq)\s*)?"
-    r"(?:WITH\s+DBPROPERTIES\s*\((?P<props>[^)]*)\)\s*)?;?\s*$",
-    re.IGNORECASE)
-_DESCRIBE_DB = re.compile(
-    r"^\s*DESCRIBE\s+(?:DATABASE|SCHEMA)\s+"
-    r"(?P<ext>EXTENDED\s+|FORMATTED\s+)?"
-    r"(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s*;?\s*$",
-    re.IGNORECASE)
-_DROP_DB = re.compile(
-    r"^\s*DROP\s+(?:DATABASE|SCHEMA)\s+(?P<ife>IF\s+EXISTS\s+)?"
+    r"(?:WITH\s+DBPROPERTIES\s*\((?P<props>[^)]*)\)\s*)?;?\s*$")
+DESCRIBE_DB = (
+    r"\s+(?P<ext>EXTENDED\s+|FORMATTED\s+)?"
+    r"(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s*;?\s*$")
+DROP_DB = (
+    r"\s+(?P<ife>IF\s+EXISTS\s+)?"
     r"(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s*"
-    r"(?P<mode>CASCADE|RESTRICT)?\s*;?\s*$",
-    re.IGNORECASE)
-_SHOW_DBS = re.compile(
-    r"^\s*SHOW\s+(?:DATABASES|SCHEMAS)"
-    r"(?:\s+LIKE)?(?:\s+(?P<q>['\"])(?P<pat>[^'\"]*)(?P=q))?\s*;?\s*$",
-    re.IGNORECASE)
-_SHOW_TABLES = re.compile(
-    r"^\s*SHOW\s+TABLES"
-    r"(?:\s+IN\s+(?P<db>[A-Za-z_]\w*))?"
-    r"(?:\s+LIKE)?(?:\s+(?P<q>['\"])(?P<pat>[^'\"]*)(?P=q))?\s*;?\s*$",
-    re.IGNORECASE)
-_USE = re.compile(r"^\s*USE\s+(`?)(?P<name>[A-Za-z_]\w*)\1\s*;?\s*$",
-                  re.IGNORECASE)
+    r"(?P<mode>CASCADE|RESTRICT)?\s*;?\s*$")
+_PATTERN = r"(?:\s+(?P<q>['\"])(?P<pat>[^'\"]*)(?P=q))?\s*;?\s*$"
+SHOW_DBS = r"(?:\s+LIKE)?" + _PATTERN
+SHOW_TABLES = (
+    r"(?:\s+IN\s+(?P<db>[A-Za-z_]\w*))?(?:\s+LIKE)?" + _PATTERN)
+USE = r"\s+(`?)(?P<name>[A-Za-z_]\w*)\1\s*;?\s*$"
+_OBJ = r"[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?"
 # CREATE VIEW v [(col [COMMENT 'c'], ...)] AS body / ALTER VIEW ... AS
 _CREATE_VIEW = re.compile(
-    r"^\s*(?P<op>CREATE|ALTER)\s+VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*"
+    r"\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    rf"(?P<name>{_OBJ})\s*"
     r"(?:\((?P<cols>[^()]*(?:\([^()]*\)[^()]*)*)\)\s*)?"
     r"AS\s+(?P<body>[\s\S]+)$",
     re.IGNORECASE)
 _RENAME = re.compile(
-    r"^\s*ALTER\s+(?P<kind>VIEW|TABLE)\s+"
-    r"(?P<src>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s+RENAME\s+TO\s+"
-    r"(?P<dst>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*;?\s*$",
+    rf"\s+(?P<src>{_OBJ})\s+RENAME\s+TO\s+(?P<dst>{_OBJ})\s*;?\s*$",
     re.IGNORECASE)
 _DROP_VIEW = re.compile(
-    r"^\s*DROP\s+VIEW\s+(?P<ife>IF\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*;?\s*$",
+    rf"\s+(?P<ife>IF\s+EXISTS\s+)?(?P<name>{_OBJ})\s*;?\s*$",
     re.IGNORECASE)
 _DROP_TABLE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?P<ife>IF\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*"
+    rf"\s+(?P<ife>IF\s+EXISTS\s+)?(?P<name>{_OBJ})\s*"
     r"(?:PURGE\s*)?;?\s*$",
-    re.IGNORECASE)
-_CREATE_TABLE_NAME = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)",
     re.IGNORECASE)
 # native/Java UDF+UDA DDL (CreateUdfStmt.java / CreateUdaStmt.java).
 # The .so binaries are the reference's C++ test UDFs — unloadable
 # here, so the DDL is catalog surface only: recorded with its exact
 # signature for SHOW FUNCTIONS, never executed.
-_CREATE_FN = re.compile(
-    r"^\s*CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*"
+CREATE_FN = (
+    r"\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    rf"(?P<name>{_OBJ})\s*"
     r"(?:\((?P<args>[^)]*)\)\s*)?"
     r"(?:RETURNS\s+(?P<ret>[A-Za-z_]\w*(?:\([^)]*\))?)\s*)?"
     r"(?:INTERMEDIATE\s+\S+\s*)?"
     r"LOCATION\s+'(?P<loc>[^']*)'"
-    r"[\s\S]*$",
-    re.IGNORECASE)
-_DROP_FN = re.compile(
-    r"^\s*DROP\s+(?P<agg>AGGREGATE\s+)?FUNCTION\s+"
-    r"(?P<ife>IF\s+EXISTS\s+)?"
-    r"(?P<name>[A-Za-z_][\w]*(?:\.[A-Za-z_]\w*)?)\s*"
-    r"(?:\((?P<args>[^)]*)\)\s*)?;?\s*$",
-    re.IGNORECASE)
-_SHOW_FNS = re.compile(
-    r"^\s*SHOW\s+(?P<kind>AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS"
+    r"[\s\S]*$")
+DROP_FN = (
+    r"\s+(?P<ife>IF\s+EXISTS\s+)?"
+    rf"(?P<name>{_OBJ})\s*"
+    r"(?:\((?P<args>[^)]*)\)\s*)?;?\s*$")
+SHOW_FNS = (
     r"(?:\s+IN\s+(?P<db>[A-Za-z_]\w*))?"
-    r"(?:\s+(?:LIKE\s+)?(?P<q>['\"])(?P<pat>[^'\"]*)(?P=q))?\s*;?\s*$",
-    re.IGNORECASE)
+    r"(?:\s+(?:LIKE\s+)?(?P<q>['\"])(?P<pat>[^'\"]*)(?P=q))?\s*;?\s*$")
 
 # databases the engine serves without a registry entry: the flat
 # default plus the fixture workloads' db names (every variant resolves
@@ -162,8 +143,7 @@ def refuse_drop_view(spark, name: str, if_exists):
     """DROP VIEW naming a table leaves the table in place: an error,
     or with IF EXISTS a summary row (CatalogOpExecutor)."""
     if if_exists:
-        return rows_df(spark, [("Drop view is not allowed on a table.",)],
-                       "summary string")
+        return summary(spark, "Drop view is not allowed on a table.")
     raise ValueError(f"DROP VIEW not allowed on a table: {name}")
 
 
@@ -257,170 +237,131 @@ class Namespaces:
             return self.current, name.lower()
         return None, name.lower()
 
-    # -- statement handling ---------------------------------------------
+    # -- statements (rows of statements.ROWS; None: run as a query) -----
 
-    def handle(self, engine, sql_text: str):
-        """Intercept namespace DDL on the already-resolve()d text;
-        returns a summary DataFrame or None to fall through."""
-        spark = engine.spark
+    def create_db(self, engine, stmt, m):
+        name = m.group("name").lower()
+        if name in self.dbs:
+            if m.group("ine"):
+                return summary(engine.spark, "Database already exists.")
+            raise ValueError(f"Database already exists: {name}")
+        self.dbs[name] = {}
+        self.comments[name] = m.group("comment") or ""
+        if m.group("loc"):
+            self.locations[name] = m.group("loc")
+        if m.group("props"):
+            self.dbprops[name] = dict(re.findall(
+                r"'([^']*)'\s*=\s*'([^']*)'", m.group("props")))
+        # a MANAGEDLOCATION clause is accepted but not displayed:
+        # Hive ignores it (HIVE-24175) and the reference's
+        # describe-db.test pins the default managed location
+        return summary(engine.spark, "Database has been created.")
 
-        def summary(*rows):
-            return rows_df(spark, [(r,) for r in rows], "summary string")
-
-        m = _CREATE_DB.match(sql_text)
-        if m:
-            name = m.group("name").lower()
-            if name in self.dbs:
-                if m.group("ine"):
-                    return summary("Database already exists.")
-                raise ValueError(f"Database already exists: {name}")
-            self.dbs[name] = {}
-            self.comments[name] = m.group("comment") or ""
-            if m.group("loc"):
-                self.locations[name] = m.group("loc")
-            if m.group("props"):
-                self.dbprops[name] = dict(re.findall(
-                    r"'([^']*)'\s*=\s*'([^']*)'", m.group("props")))
-            # a MANAGEDLOCATION clause is accepted but not displayed:
-            # Hive ignores it (HIVE-24175) and the reference's
-            # describe-db.test pins the default managed location
-            return summary("Database has been created.")
-        m = _DROP_DB.match(sql_text)
-        if m:
-            name = m.group("name").lower()
-            if name not in self.dbs:
-                if m.group("ife"):
-                    return summary("Database does not exist.")
-                raise ValueError(f"Database does not exist: {name}")
-            if self.dbs[name] and not (m.group("mode") or ""
-                                       ).upper() == "CASCADE":
-                raise ValueError(
-                    f"Cannot drop non-empty database: {name}")
-            for obj, info in list(self.dbs[name].items()):
-                self._drop_object(engine, name, obj, info)
-            del self.dbs[name]
-            self.comments.pop(name, None)
-            self.locations.pop(name, None)
-            self.dbprops.pop(name, None)
-            self.fns.pop(name, None)
-            if self.current == name:
-                self.current = None
-            return summary("Database has been dropped.")
-        m = _DESCRIBE_DB.match(sql_text)
-        if m:
-            return self._describe_db(engine, m)
-        m = _SHOW_DBS.match(sql_text)
-        if m:
-            pat = impala_pattern(m.group("pat")) if m.group("pat") \
-                else None
-            names = sorted(set(self.dbs) | set(STANDING_DBS))
-            rows = [(n, self.comments.get(n, STANDING_DBS.get(n, "")))
-                    for n in names if pat is None or pat.match(n)]
-            return rows_df(spark, rows, "name string, comment string")
-        m = _USE.match(sql_text)
-        if m:
-            name = m.group("name").lower()
-            self.current = name if name in self.dbs else None
-            return rows_df(spark, [], "status string")
-        m = _CREATE_FN.match(sql_text)
-        if m:
-            return self._create_fn(engine, m)
-        m = _SHOW_FNS.match(sql_text)
-        if m:
-            db = (m.group("db") or self.current or "").lower()
-            if db == "_impala_builtins":
-                # built-in introspection by Impala signature is oos
-                # (this engine's builtins are Spark's); empty listing
-                return rows_df(
-                    spark, [], "`return type` string, signature string, "
-                        "`binary type` string, `is persistent` string")
-            if db not in self.fns and db not in self.dbs:
-                return None          # built-in listing: dialect path
-            want_agg = (m.group("kind") or "").strip().upper()
-            rows = []
-            pat = impala_pattern(m.group("pat")) if m.group("pat") \
-                else None
-            for (fname, sig), info in self.fns.get(db, {}).items():
-                if want_agg == "AGGREGATE" and not info["agg"]:
-                    continue
-                if want_agg in ("", None) and info["agg"]:
-                    continue
-                if want_agg == "ANALYTIC":
-                    continue         # UDFs are never analytic
-                if pat is not None and not pat.match(fname):
-                    continue
-                rows.append((info["ret"], sig, info["binary"], "true"))
-            schema = ("`return type` string, signature string, "
-                      "`binary type` string, `is persistent` string")
-            return rows_df(spark, rows, schema)
-        m = _DROP_FN.match(sql_text)
-        if m:
-            db, fname = self.split(m.group("name"))
-            db = db or self.current
-            if db in self.fns:
-                sig = _sig(fname, m.group("args"))
-                hits = [k for k in self.fns[db]
-                        if k[0] == fname and
-                        (m.group("args") is None or k[1] == sig)]
-                if hits:
-                    for k in hits:
-                        del self.fns[db][k]
-                    return summary("Function has been dropped.")
+    def drop_db(self, engine, stmt, m):
+        name = m.group("name").lower()
+        if name not in self.dbs:
             if m.group("ife"):
-                return summary("Function does not exist.")
-            return None              # built-in drop: dialect path
-        m = _SHOW_TABLES.match(sql_text)
-        if m:
-            db = (m.group("db") or "").lower()
-            if not db and self.current:
-                db = self.current
-            if db in self.dbs:
-                # purge entries whose CREATE failed after registration
-                # (the record is written before the statement runs)
-                reg = self.dbs[db]
-                for obj in list(reg):
-                    phys = reg[obj].get("phys") or self.mangle(db, obj)
-                    if not spark.catalog.tableExists(phys):
-                        del reg[obj]
-                names = sorted(reg)
-            else:
-                # flat catalog: session temp views + managed tables,
-                # minus the mangled physical names of engine dbs
-                names = sorted(
-                    t.name for t in spark.catalog.listTables()
-                    if self.split(t.name)[0] is None)
-            if m.group("pat") is not None:
-                pat = impala_pattern(m.group("pat"))
-                names = [n for n in names if pat.match(n)]
-            return rows_df(spark, [(n,) for n in names], "name string")
-        m = _RENAME.match(sql_text)
-        if m:
-            return self._rename(engine, m)
-        m = _CREATE_VIEW.match(sql_text)
-        if m:
-            return self._create_view(engine, m)
-        m = _DROP_VIEW.match(sql_text)
-        if m:
-            return self._drop_view(engine, m)
-        m = _DROP_TABLE.match(sql_text)
-        if m:
-            return self._drop_table(engine, m)
-        m = _CREATE_TABLE_NAME.match(sql_text)
-        if m:
-            # not intercepted — just recorded, so SHOW TABLES / DROP
-            # guards know the object; the engine's normal CREATE path
-            # runs it. The matched spelling IS the physical name
-            # (qualified references were resolved to mangled form
-            # before handle()).
-            name = m.group("name")
-            db, obj = self.split(name)
-            if db is not None:
-                self.register(db, obj, "table", name)
-            elif self.current and "." not in name:
-                self.register(self.current, obj, "table", name)
-        return None
+                return summary(engine.spark, "Database does not exist.")
+            raise ValueError(f"Database does not exist: {name}")
+        if self.dbs[name] and not (m.group("mode") or ""
+                                   ).upper() == "CASCADE":
+            raise ValueError(
+                f"Cannot drop non-empty database: {name}")
+        for obj, info in list(self.dbs[name].items()):
+            self._drop_object(engine, name, obj, info)
+        del self.dbs[name]
+        self.comments.pop(name, None)
+        self.locations.pop(name, None)
+        self.dbprops.pop(name, None)
+        self.fns.pop(name, None)
+        if self.current == name:
+            self.current = None
+        return summary(engine.spark, "Database has been dropped.")
 
-    def _describe_db(self, engine, m: re.Match):
+    def show_dbs(self, engine, stmt, m):
+        pat = impala_pattern(m.group("pat")) if m.group("pat") else None
+        names = sorted(set(self.dbs) | set(STANDING_DBS))
+        rows = [(n, self.comments.get(n, STANDING_DBS.get(n, "")))
+                for n in names if pat is None or pat.match(n)]
+        return rows_df(engine.spark, rows, "name string, comment string")
+
+    def use(self, engine, stmt, m):
+        name = m.group("name").lower()
+        self.current = name if name in self.dbs else None
+        return rows_df(engine.spark, [], "status string")
+
+    def show_fns(self, engine, stmt, m):
+        schema = ("`return type` string, signature string, "
+                  "`binary type` string, `is persistent` string")
+        db = (m.group("db") or self.current or "").lower()
+        if db == "_impala_builtins":
+            # built-in introspection by Impala signature is oos
+            # (this engine's builtins are Spark's); empty listing
+            return rows_df(engine.spark, [], schema)
+        if db not in self.fns and db not in self.dbs:
+            return None          # built-in listing: dialect path
+        want = (stmt.group("fkind") or "").strip().upper()
+        pat = impala_pattern(m.group("pat")) if m.group("pat") else None
+        # UDFs are never analytic
+        rows = [(info["ret"], sig, info["binary"], "true")
+                for (fname, sig), info in self.fns.get(db, {}).items()
+                if want != "ANALYTIC"
+                and info["agg"] == (want == "AGGREGATE")
+                and (pat is None or pat.match(fname))]
+        return rows_df(engine.spark, rows, schema)
+
+    def drop_fn(self, engine, stmt, m):
+        db, fname = self.split(m.group("name"))
+        db = db or self.current
+        if db in self.fns:
+            sig = _sig(fname, m.group("args"))
+            hits = [k for k in self.fns[db]
+                    if k[0] == fname and
+                    (m.group("args") is None or k[1] == sig)]
+            if hits:
+                for k in hits:
+                    del self.fns[db][k]
+                return summary(engine.spark, "Function has been dropped.")
+        if m.group("ife"):
+            return summary(engine.spark, "Function does not exist.")
+        return None              # built-in drop: dialect path
+
+    def show_tables(self, engine, stmt, m):
+        spark = engine.spark
+        db = (m.group("db") or "").lower()
+        if not db and self.current:
+            db = self.current
+        if db in self.dbs:
+            # purge entries whose CREATE failed after registration
+            # (the record is written before the statement runs)
+            reg = self.dbs[db]
+            for obj in list(reg):
+                phys = reg[obj].get("phys") or self.mangle(db, obj)
+                if not spark.catalog.tableExists(phys):
+                    del reg[obj]
+            names = sorted(reg)
+        else:
+            # flat catalog: session temp views + managed tables,
+            # minus the mangled physical names of engine dbs
+            names = sorted(
+                t.name for t in spark.catalog.listTables()
+                if self.split(t.name)[0] is None)
+        if m.group("pat") is not None:
+            pat = impala_pattern(m.group("pat"))
+            names = [n for n in names if pat.match(n)]
+        return rows_df(spark, [(n,) for n in names], "name string")
+
+    def record_table(self, name: str) -> None:
+        """Record the table a CREATE TABLE names (its resolved, physical
+        name), so SHOW TABLES / DROP guards know the object; the
+        engine's CREATE path runs it."""
+        db, obj = self.split(name)
+        if db is not None:
+            self.register(db, obj, "table", name)
+        elif self.current and "." not in name:
+            self.register(self.current, obj, "table", name)
+
+    def describe_db(self, engine, stmt, m: re.Match):
         """Impala's DESCRIBE DATABASE [EXTENDED|FORMATTED] output
         (fe/src/main/java/org/apache/impala/analysis/DescribeDbStmt
         .java; result rows shaped by the frontend's
@@ -473,7 +414,7 @@ class Namespaces:
             stats.drop(engine, phys)
             engine.spark.catalog.dropTempView(phys)
 
-    def _create_fn(self, engine, m: re.Match):
+    def create_fn(self, engine, stmt, m):
         db, fname = self.split(m.group("name"))
         db = db or self.current or "default"
         sig = _sig(fname, m.group("args"))
@@ -484,9 +425,7 @@ class Namespaces:
         key = (fname, sig)
         if key in reg:
             if m.group("ine"):
-                return rows_df(
-                    engine.spark, [("Function already exists.",)],
-                    "summary string")
+                return summary(engine.spark, "Function already exists.")
             raise ValueError(f"Function already exists: {sig}")
         # Java UDF type surface (FunctionsUtil / AnalysisException in
         # the reference FE, pinned by java-udf.test blocks 35-36):
@@ -499,18 +438,19 @@ class Namespaces:
                         f"AnalysisException: Type {t} is not "
                         f"supported for Java UDFs.")
         ret = (m.group("ret") or "STRING").upper()
-        reg[key] = {"ret": ret, "agg": bool(m.group("agg")),
+        agg = bool(stmt.group("agg"))
+        reg[key] = {"ret": ret, "agg": agg,
                     "binary": binary}
         # real call-through when the jar is locally resolvable AND the
         # session can host Hive-bridge UDFs (hive catalog): ADD JAR +
         # CREATE TEMPORARY FUNCTION, so load-java-udfs.test's DDL
         # genuinely loads the functions it declares. Plain in-memory
         # sessions keep the catalog-surface-only behavior.
-        if binary == "JAVA" and not m.group("agg"):
+        if binary == "JAVA" and not agg:
             import os as _os
 
             sym = re.search(r"(?i)symbol\s*=\s*'([^']+)'",
-                            m.group(0) or "")
+                            m.group(0))
             jar = engine._resolve_fs_path(m.group("loc"))
             if sym and _os.path.exists(jar) and engine.spark.conf.get(
                     "spark.sql.catalogImplementation", "in-memory") \
@@ -521,20 +461,21 @@ class Namespaces:
                 engine.spark.sql(
                     f"CREATE OR REPLACE TEMPORARY FUNCTION {fname} "
                     f"AS '{sym.group(1)}'")
-        return rows_df(
-            engine.spark, [("Function has been created.",)], "summary string")
+        return summary(engine.spark, "Function has been created.")
 
-    def _create_view(self, engine, m: re.Match):
+    def create_view(self, engine, stmt):
         from pyspark.sql import functions as F
 
+        m = _CREATE_VIEW.match(stmt.tail)
+        if m is None:
+            return None
         spark = engine.spark
         name = m.group("name")
         db, obj = self.split(name)
-        alter = m.group("op").upper() == "ALTER"
+        alter = stmt.kind == "alter_view"
         info = self.dbs[db].get(obj) if db is not None else None
         if not alter and info is not None and m.group("ine"):
-            return rows_df(
-                spark, [("View already exists.",)], "summary string")
+            return summary(spark, "View already exists.")
         body = m.group("body").strip().rstrip(";")
         # functional fixture qualifiers resolve to the flat views
         # (same convention as the engine's DESCRIBE path); ns.resolve
@@ -580,9 +521,12 @@ class Namespaces:
             self.register(db, obj, "view", phys)
         msg = "View has been altered." if alter else \
             "View has been created."
-        return rows_df(spark, [(msg,)], "summary string")
+        return summary(spark, msg)
 
-    def _rename(self, engine, m: re.Match):
+    def rename(self, engine, stmt):
+        m = _RENAME.match(stmt.tail)
+        if m is None:
+            return None
         spark = engine.spark
         src, dst = m.group("src"), m.group("dst")
         sdb, sobj = self.split(src)
@@ -627,29 +571,32 @@ class Namespaces:
             self.dbs[sdb].pop(sobj, None)
         if ddb is not None:
             self.register(ddb, dobj, info.get("kind", "table"), new)
-        return rows_df(
-            spark, [("Renaming was successful.",)], "summary string")
+        return summary(spark, "Renaming was successful.")
 
-    def _drop_view(self, engine, m: re.Match):
+    def drop_view(self, engine, stmt):
+        m = _DROP_VIEW.match(stmt.tail)
+        if m is None:
+            return None
         spark = engine.spark
         db, obj = self.split(m.group("name"))
         info = self.dbs[db].get(obj) if db is not None else None
         if info is None:
             phys = self.mangle(db, obj) if db is not None else obj
             if db is None and spark.catalog.dropTempView(phys):
-                return rows_df(
-                    spark, [("View has been dropped.",)], "summary string")
+                return summary(spark, "View has been dropped.")
             if m.group("ife"):
-                return rows_df(
-                    spark, [("View does not exist.",)], "summary string")
+                return summary(spark, "View does not exist.")
             raise ValueError(f"View does not exist: {m.group('name')}")
         if info.get("kind") == "table":
             return refuse_drop_view(spark, m.group("name"), m.group("ife"))
         self._drop_object(engine, db, obj, info)
         del self.dbs[db][obj]
-        return rows_df(spark, [("View has been dropped.",)], "summary string")
+        return summary(spark, "View has been dropped.")
 
-    def _drop_table(self, engine, m: re.Match):
+    def drop_table(self, engine, stmt):
+        m = _DROP_TABLE.match(stmt.tail)
+        if m is None:
+            return None
         spark = engine.spark
         name = m.group("name")
         db, obj = self.split(name)
@@ -657,9 +604,7 @@ class Namespaces:
         if db is not None and info is not None \
                 and info.get("kind") == "view":
             if m.group("ife"):
-                return rows_df(
-                    spark, [("Drop table is not allowed on a view.",)],
-                    "summary string")
+                return summary(spark, "Drop table is not allowed on a view.")
             raise ValueError("DROP TABLE not allowed on a view: "
                              f"{name}")
         phys = (info or {}).get("phys") or \
@@ -671,14 +616,12 @@ class Namespaces:
                     dbpart = name.split(".", 1)[0].lower()
                     if dbpart not in STANDING_DBS \
                             and not spark.catalog.databaseExists(dbpart):
-                        return rows_df(
-                            spark, [(f"Database does not exist: {dbpart}",)],
-                            "summary string")
-                return rows_df(
-                    spark, [("Table does not exist.",)], "summary string")
+                        return summary(
+                            spark, f"Database does not exist: {dbpart}")
+                return summary(spark, "Table does not exist.")
             # fall through to Spark for its native error
             return None
         spark.sql(f"DROP TABLE {phys}")
         if db is not None:
             self.dbs[db].pop(obj, None)
-        return rows_df(spark, [("Table has been dropped.",)], "summary string")
+        return summary(spark, "Table has been dropped.")

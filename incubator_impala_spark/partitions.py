@@ -167,9 +167,23 @@ def match_partitions(engine, tbl: str,
     return [parts[r[0]] for r in hit]
 
 
+# Hive's FileUtils.escapePathName set, as Spark escapes partition
+# directory names
+_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(i) for i in range(1, 32)}
+
+
+def escape_value(v: str) -> str:
+    """A partition key value as its directory name spells it."""
+    return "".join(f"%{ord(ch):02X}" if ch in _ESCAPED else ch for ch in v)
+
+
 def part_suffix(kv: dict) -> str:
+    """`k=v/k2=v2`, the partition's directory spelling: the one key of
+    its per-partition state (row counts, incremental-stats cover,
+    format and location overrides)."""
     return "/".join(
-        f"{k}={_NULL_DIR if v is None else v}" for k, v in kv.items())
+        f"{k}={_NULL_DIR if v in (None, '') else escape_value(str(v))}"
+        for k, v in kv.items())
 
 
 def drop_spec(kv: dict) -> str:
@@ -288,9 +302,8 @@ def show_partitions(engine, tbl: str) -> DataFrame:
         return max(1, round(nbytes * nrows_stat / stat_bytes))
 
     rows, tot_files, tot_size = [], 0, 0
-    for raw, kv in parts:
-        suffix = part_suffix(kv)
-        files = files_in(os.path.join(loc, raw))
+    for suffix, kv in parts:
+        files = files_in(os.path.join(loc, suffix))
         size = sum(s for _, s in files)
         tot_files += len(files)
         tot_size += size
@@ -337,10 +350,9 @@ def show_files(engine, tbl: str, spec: str | None) -> DataFrame:
     parts = (match_partitions(engine, tbl, spec)
              if partition_columns(engine, tbl) else [("", {})])
     loc, files_in, _, base = _source(engine, tbl)
-    rows = [(f"{base}/{path}", _human(s), suffix)
-            for raw, kv in parts
-            for suffix in [part_suffix(kv)]
-            for f, s in files_in(os.path.join(loc, raw))
+    rows = [(f"{base}/{path}", _human(s), urllib.parse.unquote(suffix))
+            for suffix, _ in parts
+            for f, s in files_in(os.path.join(loc, suffix))
             for path in ["/".join(x for x in (suffix, f) if x)]]
     return rows_df(engine.spark, rows,
                    "Path string, Size string, Partition string")

@@ -738,9 +738,12 @@ def register_text_check(engine, name: str, path: str,
     }
 
 
-def check_query(engine, sql_text: str) -> None:
+def check_query(engine, sql_text: str, sink_end: int, reads: bool) -> None:
     """Engine hook: raise the reference-shaped scan error when an
-    abort-mode query references a checked table."""
+    abort-mode statement references a checked table. `sql_text[:
+    sink_end]` is an INSERT's head and target, a sink rather than a
+    scan; `reads` says the statement is a query or an INSERT, whose
+    scans pruning can narrow."""
     checks = engine.scan_checks
     if not checks:
         return
@@ -750,11 +753,11 @@ def check_query(engine, sql_text: str) -> None:
     # match on the neutralized shadow (string literals and comments
     # blanked) so a checked-table name inside a literal or comment
     # doesn't spuriously trigger the abort validation (ADVICE r8);
-    # an INSERT's target clause is a sink, not a scan — strip it so
-    # INSERT INTO <checked> SELECT ... doesn't trigger the validation
+    # an INSERT's target is stripped so INSERT INTO <checked>
+    # SELECT ... doesn't trigger the validation
     low = sqlscan.shadow(sql_text).lower()
-    low = re.sub(r"^\s*insert\s+(?:into|overwrite)\s+(?:table\s+)?"
-                 r"[`\w.]+", " ", low)
+    if sink_end:
+        low = " " + low[sink_end:]
     for name, info in checks.items():
         if not (abort or info.get("always")):
             continue
@@ -769,29 +772,22 @@ def check_query(engine, sql_text: str) -> None:
                 if msg:
                     raise ScanError(msg)
             continue
-        if info["kind"] == "plugin_text":
+        if info["kind"] in ("plugin_text", "format_partition"):
+            # a disabled scanner plugin, or a mixed-format partition
+            # with an unresolvable schema (mixedformat._avro_reconcile,
+            # checked only when the statement scans: DDL like
+            # DROP/ALTER names the table without reading it): an error
+            # iff pruning keeps the partition
+            if info["kind"] == "format_partition" and not reads:
+                continue
             wheres = _top_level_wheres(sql_text) or [None]
-            for values, plugin in info["bad_parts"]:
+            for values, what in info["bad_parts"]:
                 if any(_partition_survives(engine.spark, values, w)
                        for w in wheres):
                     raise ScanError(
-                        f"Scanner plugin '{plugin}' is not one of "
+                        what if info["kind"] == "format_partition" else
+                        f"Scanner plugin '{what}' is not one of "
                         f"the enabled plugins: ''")
-            continue
-        if info["kind"] == "format_partition":
-            # mixed-format partition with an unresolvable schema
-            # (mixedformat._avro_reconcile): error iff the statement
-            # actually scans (DDL like DROP/ALTER names the table
-            # without reading it) and pruning keeps the partition,
-            # same contract as plugin_text
-            if not re.match(r"(?is)\s*(select|with|values|insert)\b",
-                            sql_text):
-                continue
-            wheres = _top_level_wheres(sql_text) or [None]
-            for values, msg in info["bad_parts"]:
-                if any(_partition_survives(engine.spark, values, w)
-                       for w in wheres):
-                    raise ScanError(msg)
             continue
         if info["kind"] == "text":
             if not engine.strict_mode:
@@ -804,18 +800,10 @@ def check_query(engine, sql_text: str) -> None:
             msg = None
             for p in info["paths"]:
                 display = f"{info['display_dir']}/{os.path.basename(p)}"
-                if info["check"] == "footer":
-                    msg = check_footer(p, display)
-                elif info["check"] == "codec":
-                    msg = check_codec(p, display)
+                if info["check"] in _FILE_CHECKS:
+                    msg = _FILE_CHECKS[info["check"]](p, display)
                 elif info["check"] == "orc_date":
                     msg = info.get("msg")
-                elif info["check"] == "def_levels":
-                    msg = check_def_levels(p, display)
-                elif info["check"] == "dict_page":
-                    msg = check_dict_page(p, display)
-                elif info["check"] == "decode":
-                    msg = check_decodable(p, display)
                 elif info["check"] == "ts_range":
                     msg = check_int96_range(p, display,
                                             info["ts_col"],
@@ -823,13 +811,9 @@ def check_query(engine, sql_text: str) -> None:
                 elif info["check"] == "counts":
                     import pyarrow.parquet as pq
 
-                    tops = {c.path_in_schema.split(".")[0].lower()
-                            for c in [
-                                pq.ParquetFile(p).metadata
-                                .row_group(0).column(i)
-                                for i in range(
-                                    pq.ParquetFile(p).metadata
-                                    .row_group(0).num_columns)]}
+                    rg = pq.ParquetFile(p).metadata.row_group(0)
+                    tops = {rg.column(i).path_in_schema.split(".")[0]
+                            .lower() for i in range(rg.num_columns)}
                     cols = {t for t in tops
                             if re.search(rf"\b{t}\b", low)} or None
                     msg = check_column_counts(p, display, cols)
@@ -837,6 +821,12 @@ def check_query(engine, sql_text: str) -> None:
                     break
         if msg:
             raise ScanError(msg)
+
+
+# the per-file checks that need only the file and its display path
+_FILE_CHECKS = {"footer": check_footer, "codec": check_codec,
+                "def_levels": check_def_levels, "dict_page": check_dict_page,
+                "decode": check_decodable}
 
 
 class ScanError(Exception):

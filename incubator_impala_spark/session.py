@@ -134,6 +134,11 @@ def rows_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
+def summary(spark: SparkSession, text: str) -> DataFrame:
+    """The one-row `summary` result of a DDL/DML statement."""
+    return rows_df(spark, [(text,)], "summary string")
+
+
 def get_spark(app_name: str = "incubator-impala-spark",
               cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned local session used by tests & bench."""

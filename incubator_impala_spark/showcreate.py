@@ -78,12 +78,6 @@ def impala_type(dt) -> str:
 # CREATE-time recording
 # ---------------------------------------------------------------------------
 
-_CREATE_HEAD = re.compile(
-    r"(?is)^\s*create\s+(?P<ext>external\s+)?(?P<kind>table|view)\s+"
-    r"(?:if\s+not\s+exists\s+)?"
-    r"(?P<name>`?[A-Za-z_]\w*`?(?:\.`?[A-Za-z_]\w*`?)?)\s*"
-    r"(?P<rest>[\s\S]*)$")
-
 _ROW_FORMAT = re.compile(
     r"(?is)\brow\s+format\s+delimited"
     r"(?:\s+fields\s+terminated\s+by\s+(?P<sep>'[^']*'))?"
@@ -96,27 +90,25 @@ def _parse_props(raw: str) -> dict:
                            raw))
 
 
-def record_create(engine, sql_text: str) -> None:
-    """Parse the Impala-form facets of a CREATE TABLE/VIEW and store
-    them on the engine for later SHOW CREATE rendering. Never raises —
-    an unparseable statement simply renders from catalog fallbacks."""
+def record_create(engine, stmt) -> None:
+    """Parse the Impala-form facets of a CREATE TABLE/VIEW (a
+    classified statement, statements.py) and store them on the engine
+    for later SHOW CREATE rendering. Never raises — an unparseable
+    statement simply renders from catalog fallbacks."""
     try:
-        _record_create(engine, sql_text)
+        _record_create(engine, stmt)
     except Exception:  # noqa: BLE001 — recording is best-effort
         pass
 
 
-def _record_create(engine, sql_text: str) -> None:
-    m = _CREATE_HEAD.match(sql_text)
-    if m is None:
+def _record_create(engine, stmt) -> None:
+    if stmt.target is None:
         return
-    shadow = sqlscan.shadow(sql_text)
-    rest_off = m.start("rest")
-    rest_shadow = shadow[rest_off:]
-    rest = sql_text[rest_off:]
-    meta: dict = {"kind": m.group("kind").lower(),
-                  "external": bool(m.group("ext")),
-                  "display": m.group("name").replace("`", "")}
+    rest = stmt.text[stmt.head.end("target"):].lstrip()
+    rest_shadow = sqlscan.shadow(rest)
+    meta: dict = {"kind": stmt.kind.removeprefix("create_"),
+                  "external": bool(stmt.group("ext")),
+                  "display": stmt.target.replace("`", "")}
 
     # leading parenthesized list (columns for TABLE, aliases for VIEW)
     cols_raw = None
@@ -144,7 +136,7 @@ def _record_create(engine, sql_text: str) -> None:
                 if im:
                     meta["aliases"].append(im.group(2))
         meta["body"] = tail[am.end():].strip().rstrip(";")
-        stats.table(engine, m.group("name")).create = meta
+        stats.table(engine, stmt.target).create = meta
         return
 
     # TABLE facets
@@ -217,7 +209,7 @@ def _record_create(engine, sql_text: str) -> None:
         meta["tblproperties"] = _parse_props(tail[tm.end():close])
     meta["ctas"] = bool(re.search(r"(?is)\bas\s+select\b",
                                   sqlscan.top_level(tail_shadow)))
-    stats.table(engine, m.group("name")).create = meta
+    stats.table(engine, stmt.target).create = meta
 
 
 # ---------------------------------------------------------------------------
@@ -426,18 +418,18 @@ def _render_table(engine, display: str, meta: dict | None,
 # Statement dispatch
 # ---------------------------------------------------------------------------
 
+# what follows SHOW CREATE TABLE|VIEW (statements.py matches the head)
 _SHOW_CREATE = re.compile(
-    r"(?is)^\s*show\s+create\s+(?:table|view)\s+"
-    r"(?P<name>`?[A-Za-z_]\w*`?(?:\.`?[A-Za-z_]\w*`?)?)\s*;?\s*$")
+    r"(?is)\s+(?P<name>`?[A-Za-z_]\w*`?(?:\.`?[A-Za-z_]\w*`?)?)\s*;?\s*$")
 
 
-def handle(engine, sql_text: str):
+def handle(engine, rest: str):
     """SHOW CREATE TABLE|VIEW <name> -> one-row DataFrame, or None.
 
     Both spellings work on both object kinds, as in the reference
     (show-create-table.test: 'SHOW CREATE VIEW should also work on
     tables')."""
-    m = _SHOW_CREATE.match(sql_text)
+    m = _SHOW_CREATE.match(rest)
     if m is None:
         return None
     text = render(engine, m.group("name"))

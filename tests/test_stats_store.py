@@ -328,3 +328,48 @@ def test_drop_incremental_stats_by_predicate_keeps_other_partitions(eng):
     x = _col_stats(eng, "sst_pred")["x"]
     assert (x["#Distinct Values"], x["#Nulls"]) == (1, 0)
     eng.sql("DROP TABLE sst_pred")
+
+
+def test_escaped_partition_keys_keep_one_spelling(eng):
+    # `a/b` and `c:d` name their directories `y=a%2Fb` and `y=c%3Ad`;
+    # per-partition stats are kept under that one spelling
+    _recreate(eng, "sst_esc", "(x INT) PARTITIONED BY (y STRING) "
+                              "STORED AS PARQUET")
+    eng.sql("INSERT INTO sst_esc PARTITION (y) "
+            "VALUES (1, 'a/b'), (2, 'c:d'), (3, 'e')")
+    eng.sql("COMPUTE INCREMENTAL STATS sst_esc")
+    parts = _part_stats(eng, "sst_esc")
+    assert {y: (p["#Rows"], p["Incremental stats"])
+            for y, p in parts.items() if y != "Total"} == {
+        "a/b": (1, "true"), "c:d": (1, "true"), "e": (1, "true")}
+    assert parts["a/b"]["Location"].endswith("/sst_esc/y=a%2Fb")
+    paths = [r["Path"] for r in
+             eng.sql("SHOW FILES IN sst_esc PARTITION (y='c:d')").collect()]
+    assert len(paths) == 1 and "/sst_esc/y=c%3Ad/" in paths[0]
+    eng.sql("DROP INCREMENTAL STATS sst_esc PARTITION (y='a/b')")
+    eng.sql("COMPUTE INCREMENTAL STATS sst_esc PARTITION (y='c:d')")
+    parts = _part_stats(eng, "sst_esc")
+    assert [parts[y]["Incremental stats"] for y in ("a/b", "c:d", "e")] \
+        == ["false", "true", "true"]
+    eng.sql("DROP TABLE sst_esc")
+
+
+def test_insert_into_a_float_partition_drops_its_incremental_cover(eng):
+    # the float partition's directory is `f=1.0`; the INSERT summary
+    # prints it `f=1`, but the cover is kept under the directory name
+    _recreate(eng, "sst_flt", "(x INT) PARTITIONED BY (f DOUBLE) "
+                              "STORED AS PARQUET")
+    eng.sql("INSERT INTO sst_flt PARTITION (f) VALUES (1, 0.5), (2, 1.0)")
+    eng.sql("COMPUTE INCREMENTAL STATS sst_flt")
+    assert [tuple(r) for r in eng.sql(
+        "INSERT INTO sst_flt PARTITION (f) VALUES (3, 1.0)").collect()] \
+        == [("f=1/: 1",)]
+    assert eng.sql("COMPUTE INCREMENTAL STATS sst_flt").collect()[0][0] \
+        == "Updated 1 partition(s) and 1 column(s)."
+    assert _part_stats_by(eng, "sst_flt", "f")["1.0"]["#Rows"] == 2
+    eng.sql("DROP TABLE sst_flt")
+
+
+def _part_stats_by(eng, tbl: str, key: str) -> dict:
+    return {r[key]: r.asDict()
+            for r in eng.sql(f"SHOW TABLE STATS {tbl}").collect()}
