@@ -1000,7 +1000,7 @@ def _create(engine, stmt, insert_only: bool, hive: bool):
                 "AnalysisException: INSERT not supported on full "
                 f"transactional (ACID) table: {display}")
         body = re.sub(r"(?is)^\s*AS\b", "", ctas_body).strip()
-        df = engine.spark.sql(engine.translate(body))
+        df = engine.spark.sql(engine.translate_query(body))
         pnames = [p.strip().strip("`").lower()
                   for p in (m.group("part") or "").split(",")
                   if p.strip()]
@@ -1050,7 +1050,7 @@ def _insert_acid(engine, t: AcidTable, ins, hive: bool):
     def build_df():
         # source columns by position: a generated name (`0.5`, `1.50`)
         # or a repeated one does not resolve as a column reference
-        src = engine.spark.sql(engine.translate(ins.body))
+        src = engine.spark.sql(engine.translate_query(ins.body))
         src = src.toDF(*[f"_c{i}" for i in range(len(src.columns))])
         listed = list(ins.cols or [])
         pnames = [p for p, _ in t.pcols]
@@ -1241,7 +1241,7 @@ def _hive_delete(engine, t: AcidTable, where: str | None):
             continue
         if where:
             df.createOrReplaceTempView("__acid_del_src__")
-            df = engine.spark.sql(engine.translate(
+            df = engine.spark.sql(engine.translate_query(
                 f"select * from __acid_del_src__ where {where}"))
         keys = df.select(
             F.lit(2).cast("int").alias("_acid_operation"),
@@ -1282,7 +1282,7 @@ def _hive_update(engine, t: AcidTable, sets: str,
             continue
         df.createOrReplaceTempView("__acid_upd_src__")
         cond = f" where {where}" if where else ""
-        matched = engine.spark.sql(engine.translate(
+        matched = engine.spark.sql(engine.translate_query(
             f"select * from __acid_upd_src__{cond}"))
         matched = matched.localCheckpoint(eager=True)
         if matched.isEmpty():
@@ -1330,7 +1330,7 @@ def _hive_plain_insert(engine, ins, stmt: str):
         # statement to engine.sql verbatim — reassembling it from
         # match groups would drop PARTITION clauses / column lists
         return engine.sql(stmt)
-    df = spark.sql(engine.translate(ins.body))
+    df = spark.sql(engine.translate_query(ins.body))
     target = spark.table(tbl)
     static = {k: v.strip("'\"") for k, v in ins.static.items()}
     cols = [c for c in target.columns if c.lower() not in static]

@@ -195,7 +195,7 @@ def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
         if not re.fullmatch(r"-?\d+(\.\d+)?|'(?:[^']|'')*'|NULL", v,
                             re.IGNORECASE):
             row = engine.spark.sql(
-                "SELECT " + engine.translate(v)).collect()[0][0]
+                "SELECT " + engine.translate_query(v)).collect()[0][0]
             v = "NULL" if row is None else \
                 "'" + str(row).replace("'", "''") + "'" \
                 if isinstance(row, str) else str(row)
@@ -405,7 +405,7 @@ def handle(engine, stmt) -> DataFrame | None:
         from incubator_impala_spark import partitions
 
         matched = partitions.match_partitions(
-            engine, tbl, engine.translate(pm.group("spec")))
+            engine, tbl, engine.translate_query(pm.group("spec")))
         rec = stats.peek(engine, tbl)
         for suffix, kv in matched:
             spark.sql(f"ALTER TABLE {tbl} DROP PARTITION "
@@ -443,7 +443,7 @@ def handle(engine, stmt) -> DataFrame | None:
             from incubator_impala_spark import partitions
 
             matched = [p for p, _ in partitions.match_partitions(
-                engine, tbl, engine.translate(sm.group("spec")))]
+                engine, tbl, engine.translate_query(sm.group("spec")))]
             lp = re.match(r"^\s*PARTITION\s*\([^)]*(?:\([^)]*\)[^)]*)*\)"
                           r"\s+SET\s+LOCATION\s+'(?P<loc>[^']*)'",
                           rest, re.IGNORECASE)

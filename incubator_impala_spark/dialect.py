@@ -497,15 +497,49 @@ def rewrite_cast_format(sql: str, now=None) -> str:
     return "".join(out)
 
 
-# Statement-level translations (reference grammar sql-parser.cup):
-# COMPUTE [INCREMENTAL] STATS t (ComputeStatsStmt.java) → ANALYZE TABLE.
-_COMPUTE_STATS = re.compile(
-    r"^\s*COMPUTE\s+(?:INCREMENTAL\s+)?STATS\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-    re.IGNORECASE,
-)
 # DIV keyword: Impala integer division (ArithmeticExpr.java:41-43) —
 # Spark spells it `div` too, so only normalization is needed; kept as a
 # documented no-op hook.
+
+# Statement-level spellings (reference grammar sql-parser.cup): the
+# Spark text of a statement whose head statements.py matched, built
+# from what follows that head; None when it does not parse.
+_ONE_TABLE = re.compile(r"\s+([A-Za-z_][\w.]*)\s*;?\s*$")
+
+
+def compute_stats_stmt(tail: str) -> str | None:
+    """COMPUTE [INCREMENTAL] STATS t (ComputeStatsStmt.java)."""
+    m = _ONE_TABLE.match(tail)
+    return m and f"ANALYZE TABLE {m.group(1)} COMPUTE STATISTICS " \
+        "FOR ALL COLUMNS"
+
+
+def describe_extended_stmt(tail: str) -> str | None:
+    """SHOW TABLE STATS t and SHOW COLUMN STATS t (ShowStatsStmt.java):
+    the closest Spark shape is the extended describe, whose Statistics
+    row carries the ANALYZE-computed numbers."""
+    m = _ONE_TABLE.match(tail)
+    return m and f"DESCRIBE TABLE EXTENDED {m.group(1)}"
+
+
+def describe_formatted_stmt(tail: str) -> str | None:
+    """DESCRIBE FORMATTED t."""
+    m = re.match(r"(?i)\s+FORMATTED(\s+[A-Za-z_][\w.]*\s*;?\s*$)", tail)
+    return m and describe_extended_stmt(m.group(1))
+
+
+def refresh_stmt(tail: str, invalidate: bool) -> str | None:
+    """REFRESH t and INVALIDATE METADATA [t] (ResetMetadataStmt): both
+    map to Spark's metadata refresh — Spark has no separate
+    loaded-vs-unloaded catalog state to invalidate. The global
+    INVALIDATE METADATA flushes the whole catalog cache; CLEAR CACHE
+    is Spark's whole-cache analogue."""
+    m = _ONE_TABLE.match(tail)
+    if m:
+        return f"REFRESH TABLE {m.group(1)}"
+    return "CLEAR CACHE" if invalidate and re.fullmatch(r"\s*;?\s*", tail) \
+        else None
+
 
 # Function DDL (reference: CreateUdfStmt.java, CreateUdaStmt.java,
 # ShowFunctionsStmt.java, DropFunctionStmt.java; grammar
@@ -520,8 +554,7 @@ _COMPUTE_STATS = re.compile(
 # own SQL-body form (CREATE FUNCTION ... RETURNS ... RETURN expr)
 # passes through untranslated — a beyond-reference bonus surface.
 _CREATE_FUNCTION = re.compile(
-    r"^\s*CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[A-Za-z_][\w.]*)\s*"
+    r"\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[A-Za-z_][\w.]*)\s*"
     r"(?:\((?P<args>[^)]*)\))?\s*"
     r"(?:RETURNS\s+(?P<ret>[A-Za-z0-9_()<>,\s]+?)\s+)?"
     r"LOCATION\s+'(?P<loc>[^']*)'\s+SYMBOL\s*=\s*'(?P<sym>[^']+)'"
@@ -529,101 +562,47 @@ _CREATE_FUNCTION = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _SHOW_FUNCTIONS = re.compile(
-    r"^\s*SHOW\s+(?:AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS"
     r"(?:\s+IN\s+(?P<db>[A-Za-z_][\w]*))?"
     r"(?:\s+(?:LIKE\s+)?'(?P<pat>[^']*)')?\s*;?\s*$",
     re.IGNORECASE,
 )
 _DROP_FUNCTION = re.compile(
-    r"^\s*DROP\s+(?:AGGREGATE\s+)?FUNCTION\s+(?P<ie>IF\s+EXISTS\s+)?"
+    r"\s+(?P<ie>IF\s+EXISTS\s+)?"
     r"(?P<name>[A-Za-z_][\w.]*)\s*(?:\([^)]*\))?\s*;?\s*$",
     re.IGNORECASE,
 )
 
-# Catalog/admin statements (reference analysis classes in
-# fe/src/main/java/org/apache/impala/analysis/): Impala spellings that
-# Spark writes differently. REFRESH and INVALIDATE METADATA both map
-# to Spark's metadata refresh — Spark has no separate
-# loaded-vs-unloaded catalog state to invalidate (ResetMetadataStmt).
-_SIMPLE_STMTS: list[tuple[re.Pattern, str]] = [
-    (
-        re.compile(
-            r"^\s*INVALIDATE\s+METADATA\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-            re.IGNORECASE,
-        ),
-        "REFRESH TABLE {0}",
-    ),
-    # the global form (ResetMetadataStmt with no table): flushes the
-    # whole catalog cache; Spark's whole-cache analogue
-    (
-        re.compile(r"^\s*INVALIDATE\s+METADATA\s*;?\s*$", re.IGNORECASE),
-        "CLEAR CACHE",
-    ),
-    (
-        re.compile(r"^\s*REFRESH\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.IGNORECASE),
-        "REFRESH TABLE {0}",
-    ),
-    (
-        re.compile(
-            r"^\s*DESCRIBE\s+FORMATTED\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-            re.IGNORECASE,
-        ),
-        "DESCRIBE TABLE EXTENDED {0}",
-    ),
-    # SHOW TABLE STATS t (ShowStatsStmt.java): the closest Spark shape
-    # is the extended describe, whose Statistics row carries the
-    # ANALYZE-computed numbers.
-    (
-        re.compile(
-            r"^\s*SHOW\s+TABLE\s+STATS\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-            re.IGNORECASE,
-        ),
-        "DESCRIBE TABLE EXTENDED {0}",
-    ),
-    (
-        re.compile(
-            r"^\s*SHOW\s+COLUMN\s+STATS\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-            re.IGNORECASE,
-        ),
-        "DESCRIBE TABLE EXTENDED {0}",
-    ),
-]
+
+def create_function_stmt(tail: str) -> str | None:
+    m = _CREATE_FUNCTION.match(tail)
+    if m is None:
+        return None
+    import os
+
+    ine = "IF NOT EXISTS " if m.group("ine") else ""
+    loc = m.group("loc")
+    using = f" USING JAR '{loc}'" \
+        if loc.endswith(".jar") and os.path.exists(loc) else ""
+    return (f"CREATE TEMPORARY FUNCTION {ine}{m.group('name')} "
+            f"AS '{m.group('sym')}'{using}")
 
 
-def translate_statement(sql: str) -> str | None:
-    """Translate a whole statement if it's a recognized DDL/admin form;
-    None if it's an ordinary query (expression-level pipeline applies)."""
-    m = _COMPUTE_STATS.match(sql)
-    if m:
-        return f"ANALYZE TABLE {m.group(1)} COMPUTE STATISTICS FOR ALL COLUMNS"
-    m = _CREATE_FUNCTION.match(sql)
-    if m:
-        import os
+def show_functions_stmt(tail: str) -> str | None:
+    m = _SHOW_FUNCTIONS.match(tail)
+    if m is None:
+        return None
+    # keep the db qualifier (ADVICE r2: it was silently dropped)
+    in_db = f" IN {m.group('db')}" if m.group("db") else ""
+    like = f" LIKE '{m.group('pat')}'" if m.group("pat") else ""
+    return f"SHOW USER FUNCTIONS{in_db}{like}"
 
-        ine = "IF NOT EXISTS " if m.group("ine") else ""
-        using = ""
-        loc = m.group("loc")
-        if loc.endswith(".jar") and os.path.exists(loc):
-            using = f" USING JAR '{loc}'"
-        return (
-            f"CREATE TEMPORARY FUNCTION {ine}{m.group('name')} "
-            f"AS '{m.group('sym')}'{using}"
-        )
-    m = _SHOW_FUNCTIONS.match(sql)
-    if m:
-        # keep the db qualifier (ADVICE r2: it was silently dropped)
-        in_db = f" IN {m.group('db')}" if m.group("db") else ""
-        like = f" LIKE '{m.group('pat')}'" if m.group("pat") else ""
-        return f"SHOW USER FUNCTIONS{in_db}{like}"
-    m = _DROP_FUNCTION.match(sql)
-    if m:
-        ie = "IF EXISTS " if m.group("ie") else ""
-        return f"DROP TEMPORARY FUNCTION {ie}{m.group('name')}"
-    for pat, template in _SIMPLE_STMTS:
-        m = pat.match(sql)
-        if m:
-            return template.format(*m.groups())
-    return None
+
+def drop_function_stmt(tail: str) -> str | None:
+    m = _DROP_FUNCTION.match(tail)
+    if m is None:
+        return None
+    ie = "IF EXISTS " if m.group("ie") else ""
+    return f"DROP TEMPORARY FUNCTION {ie}{m.group('name')}"
 
 
 _PLAN_HINT = re.compile(
@@ -1574,9 +1553,6 @@ def translate(sql: str, macros: dict | None = None, now=None,
     (decimal-operators-ir.cc CAST_DECIMAL_TO_INT `is_decimal_v2 ?
     ROUND : TRUNCATE`) — Spark's native behavior, so the rounding
     rewrite is simply skipped."""
-    stmt = translate_statement(sql)
-    if stmt is not None:
-        return stmt
     sql = strip_plan_hints(sql)
     # Impala's grammar accepts a STRING LITERAL as a column alias
     # (select_list_item ::= expr [AS] (IDENT | STRING_LITERAL) —

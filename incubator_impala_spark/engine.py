@@ -40,7 +40,7 @@ from incubator_impala_spark.sources.tables import register_tables
 # heads).
 # plain DESCRIBE <path> — Impala's three-column column listing incl.
 # paths into complex types (describe.py). FORMATTED/EXTENDED keep the
-# Spark extended-describe mapping in dialect._SIMPLE_STMTS.
+# Spark extended-describe mapping (dialect.describe_formatted_stmt).
 _DESCRIBE_PATH = re.compile(
     r"\s+(?!FORMATTED\b|EXTENDED\b|TABLE\b|DATABASE\b)"
     r"((?:`[^`]+`|[A-Za-z_]\w*)(?:\.(?:`[^`]+`|[A-Za-z_]\w*))*)\s*;?\s*$",
@@ -165,7 +165,15 @@ class Engine:
         register_tables(self.spark, sf_dir)
 
     def translate(self, sql_text: str) -> str:
-        """Impala SQL → Spark SQL (dialect shim only, no execution)."""
+        """Impala SQL → Spark SQL, no execution: the Spark spelling of
+        a statement a row of the dispatch table translates, else the
+        query pipeline."""
+        return statements.translate_statement(sql_text) \
+            or self.translate_query(sql_text)
+
+    def translate_query(self, sql_text: str) -> str:
+        """The dialect's query pipeline (dialect shim only, no
+        execution)."""
         macros = MACROS if self.exact_ndv else MACROS_SCALE
         return dialect.translate(sql_text, macros, now=self.now,
                                  decimal_v2=self.decimal_v2)
@@ -207,7 +215,7 @@ class Engine:
         from pyspark.sql.types import TimestampType
 
         try:
-            schema = self.spark.sql(self.translate(
+            schema = self.spark.sql(self.translate_query(
                 f"SELECT * FROM ({body}) __pqt_probe__")).schema
         except (AnalysisException, ValueError):  # probe-only
             return None
@@ -418,7 +426,7 @@ class Engine:
                 text = self._ctas_ts_rewrite(
                     stmt.text[:stmt.head.end("kw")] + m.group("pre"),
                     m.group("body")) or stmt.resolved
-                self.spark.sql(self.translate(text))
+                self.spark.sql(self.translate_query(text))
                 # CTAS runs as ExecutedCommandExec (no write metrics),
                 # so the summary count comes from the fresh table —
                 # parquet count(*) folds to footer row counts
@@ -445,7 +453,7 @@ class Engine:
         m = _CREATE_LIKE.match(tail)
         if m:
             return self._create_like(m)
-        self.spark.sql(self.translate(stmt.resolved))
+        self.spark.sql(self.translate_query(stmt.resolved))
         return summary(self.spark, "Table has been created.")
 
     def _drop_stats(self, m: re.Match) -> DataFrame:
@@ -488,11 +496,15 @@ class Engine:
 
     def _query(self, sql_text: str) -> DataFrame:
         """A statement no row handles: the dialect first (plan hints
-        stripped, macros expanded), then collection-path resolution on
-        the cleaned text, then Spark."""
+        stripped, macros expanded), then `_run`."""
+        return self._run(self.translate_query(sql_text))
+
+    def _run(self, translated: str) -> DataFrame:
+        """Spark text through the session-dependent rewrites
+        (APPX_COUNT_DISTINCT, local time zone, collection paths,
+        DECIMAL_V2 avg typing), then Spark."""
         from incubator_impala_spark import nested_paths
 
-        translated = self.translate(sql_text)
         if self.appx_count_distinct:
             def _acd(a):
                 m2 = re.match(r"(?is)^\s*distinct\s+(.+)$", a[0]) \
@@ -1024,7 +1036,7 @@ class Engine:
         if meta:
             meta.get("tblproperties", {}).pop("COLUMN_STATS_ACCURATE", None)
         overwrite = ins.overwrite
-        df = self.spark.sql(self.translate(ins.body))
+        df = self.spark.sql(self.translate_query(ins.body))
 
         target = self.spark.table(tbl)
         tcols = target.columns

@@ -83,17 +83,18 @@ def maybe_activate(engine, tbl: str) -> None:
         rec.mixed = True
 
 
-def refresh_views(engine, sql_text: str, scan: bool) -> None:
+def refresh_views(engine, sql_text: str, scan: bool,
+                  target: "stats.TableRecord | None" = None) -> None:
     """engine.sql pre-pass: a statement that reads rows (`scan`) gets
-    a fresh dispatch view for every referenced mixed table; DDL and
-    writes drop the shadow so they operate on the catalog object
-    itself."""
+    a fresh dispatch view for every referenced mixed table but its
+    `target` record (an INSERT's sink); DDL, writes and that target
+    drop the shadow so they operate on the catalog object itself."""
     low = sqlscan.shadow(sql_text).lower()
-    for k in [k for k, rec in engine.tables.items() if rec.mixed]:
+    for k, rec in [(k, r) for k, r in engine.tables.items() if r.mixed]:
         phys = stats.view_name(k)
         if not re.search(rf"\b{re.escape(phys)}\b", low):
             continue
-        if not scan:
+        if not scan or rec is target:
             engine.spark.catalog.dropTempView(phys)
             continue
         build_view(engine, phys)

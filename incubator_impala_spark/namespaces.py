@@ -486,7 +486,7 @@ class Namespaces:
             exec_body = dialect._shadow_sub(
                 re.compile(r"\bfunctional(_\w+)?\.", re.IGNORECASE),
                 "", body)
-        df = spark.sql(engine.translate(exec_body))
+        df = spark.sql(engine.translate_query(exec_body))
         # explicit column list: rename positionally, carry COMMENTs;
         # otherwise strip inherited metadata (a view does not inherit
         # base-column comments — CreateOrAlterViewStmtBase.java)

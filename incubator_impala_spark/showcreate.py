@@ -273,7 +273,7 @@ def _expand_view_body(engine, meta: dict, simple_name: str) -> str:
         re.compile(r"(?<![\w`.$])(_\w+)\b"),
         lambda m2: "`" + m2.group(1) + "`", body)
     exec_body = re.sub(r"(?i)\bfunctional(_\w+)?\.", "", body)
-    schema = engine.spark.sql(engine.translate(
+    schema = engine.spark.sql(engine.translate_query(
         f"SELECT * FROM ({exec_body}) __scv_probe__")).schema
     v = quote_ident(simple_name)
     items = []

@@ -9,8 +9,9 @@ a `Stmt`: its kind, target table and that table's catalog record.
 `Engine.sql` runs the three.
 
 * Heads are matched only here. A handler gets the parts of what
-  follows the head (`Stmt.tail`, engine-owned database names
-  resolved); a None from it runs the statement as a query.
+  follows the head (`Stmt.tail`; the statement is resolved to
+  engine-owned database names once, in `classify`); a None from it
+  runs the statement as a query.
 * For INSERT, TRUNCATE, ALTER TABLE, DROP STATS, REFRESH, DROP TABLE
   and DROP VIEW the target's record picks the ACID variant
   (`acid.handle`).
@@ -40,9 +41,22 @@ class Stmt:
     text: str            # from the head on; acid.prepare may rewrite it
     lead: str            # the comments and blanks before the head
     head: re.Match       # the row's match on the shadow of `text`
-    ns: object           # the engine's Namespaces, for `tail`
     target: str | None = None
     record: stats.TableRecord | None = None
+    resolved: str = ""   # `text`, engine-owned database names resolved
+    tail: str = ""       # what follows the head's keywords in `resolved`
+
+    def resolve(self, resolve=str, text: str | None = None) -> None:
+        """Set `text` and resolve it once with `resolve` (the engine's
+        `Namespaces.resolve`). The head's keywords name no table and
+        stay as written; a WITH list before an INSERT is resolved with
+        the rest."""
+        if text is not None:
+            self.text = text
+        s, e = self.head.span("kw")
+        self.tail = resolve(self.text[e:])
+        self.resolved = (resolve(self.text[:s]) if s else "") \
+            + self.text[s:e] + self.tail
 
     def group(self, name: str) -> str | None:
         """A group of the head match, sliced from `text`; None when
@@ -59,17 +73,8 @@ class Stmt:
 
     @property
     def rest(self) -> str:
-        """What follows the head's keywords."""
+        """What follows the head's keywords, as written."""
         return self.text[self.head.end("kw"):]
-
-    @property
-    def tail(self) -> str:
-        """`rest` with engine-owned database names resolved."""
-        return self.ns.resolve(self.rest)
-
-    @property
-    def resolved(self) -> str:
-        return self.text[:self.head.end("kw")] + self.tail
 
 
 # ---------------------------------------------------------------------
@@ -82,15 +87,18 @@ def _overlays(engine, stmt):
 
 def _acid_views(engine, stmt):
     if any(rec.acid or rec.rowid for rec in engine.tables.values()):
-        stmt.text = acid.prepare(engine, stmt.text)
+        text = acid.prepare(engine, stmt.text)
+        if text != stmt.text:
+            stmt.resolve(engine.ns.resolve, text)
 
 
 def _mixed(scan: bool):
-    """Mixed-format tables: a read gets their dispatch views, DDL and
-    writes drop them and act on the catalog table."""
+    """Mixed-format tables: the tables a statement reads get their
+    dispatch views; DDL, writes and an INSERT's target drop them and
+    act on the catalog table."""
     def hook(engine, stmt):
         if any(rec.mixed for rec in engine.tables.values()):
-            mixedformat.refresh_views(engine, stmt.text, scan)
+            mixedformat.refresh_views(engine, stmt.text, scan, stmt.record)
 
     return hook
 
@@ -113,7 +121,7 @@ def _avro_stale(engine, stmt):
 
 
 # statements that name tables without reading rows; statements that
-# write rows; statements that read them
+# write rows; statements that read them (an INSERT reads its sources)
 DDL = (_overlays, _acid_views, _mixed(False), _scan_checks)
 WRITE = DDL + (_avro_stale,)
 READ = (_overlays, _acid_views, _mixed(True), _scan_checks, _avro_stale)
@@ -126,7 +134,7 @@ READ = (_overlays, _acid_views, _mixed(True), _scan_checks, _avro_stale)
 
 def query(engine, stmt, m=None):
     """The default row: the statement as a query."""
-    return engine._query(engine.ns.resolve(stmt.lead + stmt.text))
+    return engine._query(stmt.lead + stmt.resolved)
 
 
 def _set(engine, stmt, m):
@@ -305,6 +313,9 @@ class Row:
     hooks: tuple = ()
     parts: re.Pattern | None = None   # over `Stmt.tail`
     acid: bool = False    # the target's ACID state picks acid.handle
+    # (Stmt) -> the statement's Spark spelling (dialect.py), for what
+    # the handler leaves to Spark; None runs it as a query
+    spark: Callable | None = None
 
     def __call__(self, engine, stmt):
         if self.acid and stmt.acid is not None:
@@ -312,7 +323,10 @@ class Row:
         m = self.parts.match(stmt.tail) if self.parts else None
         out = None if self.parts and m is None else \
             self.handler(engine, stmt, m)
-        return query(engine, stmt) if out is None else out
+        if out is None:
+            text = self.spark and self.spark(stmt)
+            out = engine._run(text) if text else query(engine, stmt)
+        return out
 
 
 # a target table: backticked or bare parts, dot-separated
@@ -323,10 +337,15 @@ _TABLE = r"\s+(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$"
 
 
 def _row(kind, head, handler=query, hooks=(), target=None, parts=None,
-         acid=False):
+         acid=False, spark=None):
     pat = f"(?P<kw>{head})" + (f"(?:{target})?" if target else "")
     return Row(kind, re.compile(pat, re.IGNORECASE), handler, hooks,
-               parts and re.compile(parts, re.IGNORECASE), acid)
+               parts and re.compile(parts, re.IGNORECASE), acid, spark)
+
+
+def _tail(spelling):
+    """A row's Spark spelling built from the statement's tail."""
+    return lambda stmt: spelling(stmt.tail)
 
 
 def _ns(name: str, parts: str, registry: str = "ns"):
@@ -341,7 +360,7 @@ def _auth(name: str, parts: str):
     return _ns(name, parts, "grants")
 
 
-_INSERT_ROW = _row("insert", r"INSERT\b", _insert, WRITE,
+_INSERT_ROW = _row("insert", r"INSERT\b", _insert, READ,
                    r"\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?" + _NAME)
 _INSERT_HEAD = _INSERT_ROW.head
 
@@ -372,12 +391,15 @@ ROWS = [
          **_ns("show_dbs", namespaces.SHOW_DBS)),
     _row("use", r"USE\b", **_ns("use", namespaces.USE)),
     _row("create_function", r"CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\b",
-         **_ns("create_fn", namespaces.CREATE_FN)),
+         **_ns("create_fn", namespaces.CREATE_FN),
+         spark=_tail(dialect.create_function_stmt)),
     _row("show_functions",
          r"SHOW\s+(?P<fkind>AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS\b",
-         **_ns("show_fns", namespaces.SHOW_FNS)),
+         **_ns("show_fns", namespaces.SHOW_FNS),
+         spark=_tail(dialect.show_functions_stmt)),
     _row("drop_function", r"DROP\s+(?:AGGREGATE\s+)?FUNCTION\b",
-         **_ns("drop_fn", namespaces.DROP_FN)),
+         **_ns("drop_fn", namespaces.DROP_FN),
+         spark=_tail(dialect.drop_function_stmt)),
     _row("show_tables", r"SHOW\s+TABLES\b",
          **_ns("show_tables", namespaces.SHOW_TABLES)),
     _row("alter_view", r"ALTER\s+VIEW\b", _first(
@@ -392,10 +414,10 @@ ROWS = [
          DDL, _T, parts=_TABLE),
     _row("show_column_stats", r"SHOW\s+COLUMN\s+STATS\b",
          lambda e, s, m: e._show_column_stats(m.group(1)), DDL, _T,
-         parts=_TABLE),
+         parts=_TABLE, spark=_tail(dialect.describe_extended_stmt)),
     _row("show_table_stats", r"SHOW\s+TABLE\s+STATS\b",
          lambda e, s, m: partitions.show_table_stats(e, m.group(1)),
-         DDL, _T, parts=_TABLE),
+         DDL, _T, parts=_TABLE, spark=_tail(dialect.describe_extended_stmt)),
     _row("show_files", r"SHOW\s+FILES\s+IN\b",
          lambda e, s, m: partitions.show_files(e, m.group(1),
                                                m.group("spec")), DDL, _T,
@@ -403,14 +425,16 @@ ROWS = [
                r"(?:[^()]|\([^()]*\))*)\))?\s*;?\s*$"),
     _row("describe_db", r"DESCRIBE\s+(?:DATABASE|SCHEMA)\b",
          **_ns("describe_db", namespaces.DESCRIBE_DB)),
-    _row("describe", r"DESCRIBE\b", lambda e, s, m: e._describe(s), DDL),
+    _row("describe", r"DESCRIBE\b", lambda e, s, m: e._describe(s), DDL,
+         spark=_tail(dialect.describe_formatted_stmt)),
     # COMPUTE [INCREMENTAL] STATS t [(col, ...)] [PARTITION (spec)]
     # (ComputeStatsStmt.java)
     _row("compute_stats", r"COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\b",
          lambda e, s, m: e._compute_stats(m, bool(s.group("inc"))),
          WRITE, _T, parts=r"\s+(?P<tbl>`[\w.]+`|[A-Za-z_][\w.]*)\s*"
                r"(?:\((?P<cols>[^)]*)\)\s*)?"
-               r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$"),
+               r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$",
+         spark=_tail(dialect.compute_stats_stmt)),
     _row("drop_stats", r"DROP\s+(?:INCREMENTAL\s+)?STATS\b",
          lambda e, s, m: e._drop_stats(m), DDL, _T,
          parts=r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s*(?:PARTITION\s*\("
@@ -420,8 +444,10 @@ ROWS = [
          parts=r"\s+(?:TABLE\s+)?(?P<ife>IF\s+EXISTS\s+)?"
                r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$", acid=True),
     _INSERT_ROW,
-    _row("refresh", r"(?:REFRESH|INVALIDATE\s+METADATA)\b",
-         lambda e, s, m: avro_stale.refresh(e, s), DDL, _T, acid=True),
+    _row("refresh", r"(?:REFRESH|(?P<inv>INVALIDATE\s+METADATA))\b",
+         lambda e, s, m: avro_stale.refresh(e, s), DDL, _T, acid=True,
+         spark=lambda s: dialect.refresh_stmt(s.tail,
+                                              bool(s.group("inv")))),
     # LOAD DATA INPATH 'p' [OVERWRITE] INTO TABLE t [PARTITION (k=v,..)]
     # (LoadDataStmt.java)
     _row("load", r"LOAD\b", lambda e, s, m: e._load_data(
@@ -457,10 +483,10 @@ ROWS = [
 KINDS = {row.kind: row for row in ROWS}
 
 
-def classify(engine, sql_text: str) -> Stmt:
-    """The statement's row, head match, target and the target's
-    record. Leading comments are skipped; keywords inside literals,
-    comments and backticks never count."""
+def parse(sql_text: str) -> Stmt:
+    """The statement's row and head match, its text unresolved.
+    Leading comments are skipped; keywords inside literals, comments
+    and backticks never count."""
     sh = sqlscan.shadow(sql_text, idents=False)
     start = len(sh) - len(sh.lstrip())
     text, sh = sql_text[start:], sh[start:]
@@ -473,6 +499,23 @@ def classify(engine, sql_text: str) -> Stmt:
     target = m.groupdict().get("target")
     if target is not None:
         target = text[m.start("target"):m.end("target")]
-    rec = stats.peek(engine, target) if target else None
-    return Stmt(row.kind, row, text, sql_text[:start], m, engine.ns, target,
-                rec)
+    return Stmt(row.kind, row, text, sql_text[:start], m, target)
+
+
+def classify(engine, sql_text: str) -> Stmt:
+    """The statement's row, head match, target and the target's
+    record, resolved to the engine's databases."""
+    stmt = parse(sql_text)
+    if stmt.target:
+        stmt.record = stats.peek(engine, stmt.target)
+    stmt.resolve(engine.ns.resolve)
+    return stmt
+
+
+def translate_statement(sql_text: str) -> str | None:
+    """The Spark spelling of a statement a row translates (function
+    DDL, REFRESH and INVALIDATE METADATA, DESCRIBE FORMATTED, COMPUTE
+    STATS, SHOW TABLE/COLUMN STATS); None for the rest."""
+    stmt = parse(sql_text)
+    stmt.resolve()
+    return stmt.row.spark(stmt) if stmt.row.spark else None

@@ -182,13 +182,13 @@ def agg_df(engine, df: DataFrame, wanted: list, types: dict,
     """The one-scan COMPUTE STATS aggregate over `df` (unexecuted).
 
     Without partition columns it is one row over the whole of `df`.
-    With them it groups by the sets (`pcols`) and (): one row per
-    partition and one grand-total row, told apart by `__gid__` (0 for
-    a partition). Every row carries the same aggregates, so the
-    grand total holds the table-level column stats and each partition
-    row its #Rows — the reference's per-partition and table-level
-    child queries in one scan. An empty `df` yields no grand-total
-    row.
+    With them it groups by the sets (`pcols`, as `__dir_<col>`
+    strings) and (): one row per partition and one grand-total row,
+    told apart by `__gid__` (0 for a partition). Every row carries the
+    same aggregates, so the grand total holds the table-level column
+    stats and each partition row its #Rows — the reference's
+    per-partition and table-level child queries in one scan. An empty
+    `df` yields no grand-total row.
 
     NDV expression per EXACT_NDV (DIALECT.md): the default is Spark's
     JVM HLL++ at the reference's precision 10 (`approx_count_distinct`
@@ -215,8 +215,13 @@ def agg_df(engine, df: DataFrame, wanted: list, types: dict,
                      F.avg(F.length(c)).alias(f"avg_{c}")]
     if not pcols:
         return df.agg(*aggs)
-    return df.groupingSets([list(pcols), []], *pcols).agg(
-        F.grouping_id().alias("__gid__"), *aggs)
+    # grouped on the keys' string casts, Spark's spelling of their
+    # partition directories (`true`, `NaN`, `1.0E20`)
+    keys = [f"__dir_{c}" for c in pcols]
+    return df.select("*", *[F.col(f"`{c}`").cast("string").alias(k)
+                            for c, k in zip(pcols, keys)]) \
+        .groupingSets([keys, []], *keys).agg(
+            F.grouping_id().alias("__gid__"), *aggs)
 
 
 def compute(engine, name: str, df: DataFrame, wanted: list,
@@ -237,8 +242,8 @@ def compute(engine, name: str, df: DataFrame, wanted: list,
         rec.parts.update(dict.fromkeys(listed, 0))
         for r in rows:
             if not r["__gid__"]:
-                rec.parts[part_suffix({c: r[c] for c in pcols})] = \
-                    r["__nrows__"]
+                rec.parts[part_suffix({c: r[f"__dir_{c}"]
+                                       for c in pcols})] = r["__nrows__"]
     # grouping sets emit no grand total over empty input: all zeros
     row = next((r for r in rows if not pcols or r["__gid__"]), None) \
         or dict.fromkeys(agg.columns, 0)

@@ -47,7 +47,7 @@ from dataclasses import dataclass, field
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
-from incubator_impala_spark import acid, options, sqlscan, stats
+from incubator_impala_spark import acid, options, sqlscan, stats, statements
 
 # catalog/DDL probe guard: Spark analysis errors + JVM-side failures
 # surfacing through the py4j bridge
@@ -496,23 +496,30 @@ def types_compatible(expected: list[str], actual: list[str]) -> bool:
 # --------------------------------------------------------------------------
 # execution
 
-_RUNNABLE = re.compile(
-    r"^[\s(]*(select|with|values|describe|explain|"
-    r"show\s+partitions|show\s+files|show\s+column\s+stats|"
-    r"show\s+table\s+stats|"
-    r"invalidate\s+metadata|refresh|"
-    r"create\s+(?:external\s+)?table|"
-    r"insert\s+(?:into|overwrite)|drop\s+table|"
-    r"truncate|alter\s+table|use|"
-    r"show\s+(?:tables|databases|schemas)|"
-    r"show\s+(?:aggregate\s+|analytic\s+)?functions|"
-    r"create\s+(?:database|schema|view)|"
-    r"drop\s+(?:database|schema|view)|alter\s+view|"
-    r"create\s+(?:aggregate\s+)?function|drop\s+function|"
-    r"compute\s+(?:incremental\s+)?stats|"
-    r"drop\s+(?:incremental\s+)?stats|load\s+data|"
-    r"show\s+create\s+(?:table|view))\b",
-    re.IGNORECASE)
+# the kinds (statements.py) of the statements the harness runs
+_RUNNABLE = frozenset((
+    "query", "insert", "describe", "describe_db", "explain",
+    "show_partitions", "show_files", "show_column_stats",
+    "show_table_stats", "refresh", "create_table", "drop_table",
+    "truncate", "alter_table", "use", "show_tables", "show_dbs",
+    "show_functions", "create_db", "create_view", "drop_db", "drop_view",
+    "alter_view", "create_function", "drop_function", "compute_stats",
+    "drop_stats", "load", "show_create", "set", "set_all"))
+
+
+def _parse(s: str) -> "statements.Stmt":
+    """The engine's reading of a statement's head; a statement wrapped
+    in parentheses is read at its first keyword."""
+    return statements.parse(s.lstrip("( \t\r\n"))
+
+
+def _set_option(s: str) -> tuple[str, str] | None:
+    """(name, value) of a `SET name=value` statement, else None."""
+    p = _parse(s)
+    return (p.group("name"), p.group("value").strip("'\"")) \
+        if p.kind == "set" else None
+
+
 _VAR = re.compile(r"\$[A-Z][A-Z0-9_]*")
 
 
@@ -798,14 +805,12 @@ def run_blocks(engine, blocks: list[Block], *,
     return out
 
 
-_SIDE_EFFECT = re.compile(
-    r"(?im)^[\s(]*(create\s+(?:external\s+)?table|alter\s+table|insert\s+(?:into|overwrite)|"
-    r"drop\s+table|truncate|use|create\s+(?:database|schema|view)|"
-    r"drop\s+(?:database|schema|view)|alter\s+view|"
-    r"create\s+(?:aggregate\s+)?function|drop\s+function|"
-    r"compute\s+(?:incremental\s+)?stats|"
-    r"drop\s+(?:incremental\s+)?stats|"
-    r"invalidate\s+metadata|refresh)\b")
+# the kinds of the statements that change what later blocks see
+_SIDE_EFFECT = frozenset((
+    "create_table", "alter_table", "insert", "drop_table", "truncate",
+    "use", "create_db", "create_view", "drop_db", "drop_view", "alter_view",
+    "create_function", "drop_function", "compute_stats", "drop_stats",
+    "refresh"))
 
 
 _LOCATION_CLAUSE = re.compile(
@@ -819,9 +824,7 @@ def _strip_location(stmt: str, engine=None) -> str:
     managed object, so the clause is dropped (with EXTERNAL, which
     Spark ties to LOCATION). Harness-level adaptation only — the
     engine keeps LOCATION."""
-    if not re.match(
-            r"\s*create\s+(external\s+)?table\b",
-            stmt, re.IGNORECASE):
+    if _parse(stmt).kind != "create_table":
         # CREATE DATABASE/SCHEMA LOCATION is display-only metadata in
         # the namespace registry (DESCRIBE DATABASE renders it; no
         # files are touched) — keep it (create-database.test)
@@ -881,14 +884,12 @@ def _preclear_create(engine, s: str) -> None:
     """A PLAIN create (no IF NOT EXISTS) asserts the table is fresh:
     clear a leftover (catalog entry AND orphan warehouse dir) from an
     earlier failed run before running it."""
-    cm = re.match(
-        r"(?is)\s*create\s+(?:external\s+)?table\s+"
-        r"(?!if\s+not\s+exists\b)(`[\w.]+`|[A-Za-z_][\w.]*)", s)
-    if not cm:
+    p = _parse(s)
+    if p.kind != "create_table" or p.group("ine") or not p.target:
         return
-    name = cm.group(1)
-    lm = re.match(rf"(?is)\s*create\s+(?:external\s+)?table\s+"
-                  rf"{re.escape(name)}\s+like\s+([A-Za-z_][\w.]*)", s)
+    name = p.target
+    lm = re.match(r"(?is)\s+like\s+([A-Za-z_][\w.]*)",
+                  p.text[p.head.end("target"):])
     if lm and lm.group(1).split(".")[-1].lower() == \
             name.split(".")[-1].lower():
         # self-LIKE (template-target recreation): dropping first would
@@ -917,7 +918,7 @@ def _rewrite_stmt(s: str, rewrite, table_rewrites: dict | None) -> str:
     dataset, so every variant's qualifier resolves to the flat fixture
     views; then per-file table-name rewrites and the optional spelling
     fixer."""
-    if re.match(r"(?i)\s*explain\b", s):
+    if _parse(s).kind == "explain":
         # EXPLAIN keeps its original qualified spellings: the renderer
         # resolves standing-db qualifiers itself and uses them for
         # scan labels and the missing-stats header (impala_explain.py).
@@ -962,9 +963,6 @@ def _query_vars(text: str) -> bool:
     stripped = "\n".join(ln for ln in text.split("\n")
                          if not ln.lstrip().startswith("#"))
     return _VAR.search(stripped) is not None
-
-
-_SET_NAME = re.compile(r"(?i)^\s*set\s+([A-Za-z_][\w.]*)\s*=")
 
 
 def _option_snapshot(engine, names: list) -> dict | None:
@@ -1033,13 +1031,12 @@ def _run_catch(engine, b: Block, rewrite, table_rewrites) \
     sql_stmts = [_rewrite_stmt(s, rewrite, table_rewrites)
                  for s in stmts]
     snap = _option_snapshot(
-        engine, [m.group(1) for s in sql_stmts
-                 if (m := _SET_NAME.match(s))])
+        engine, [o[0] for s in sql_stmts if (o := _set_option(s))])
     err = None
     try:
         df = None
         for s in sql_stmts:
-            if s.lower().startswith("set "):
+            if _parse(s).kind in ("set", "set_all"):
                 engine.sql(s)
             else:
                 df = engine.sql(s)
@@ -1094,10 +1091,9 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
                 if g:
                     nums.append(int(g[-1]))
         stmts = [s for s in _split_statements(b.query)]
-        if nums and re.match(r"(?is)^\s*select\b", stmts[-1]):
+        if nums and _parse(stmts[-1]).group("kw").upper() == "SELECT":
             snap = _option_snapshot(
-                engine, [m.group(1) for s in stmts
-                         if (m := _SET_NAME.match(s))])
+                engine, [o[0] for s in stmts if (o := _set_option(s))])
             try:
                 df = None
                 for s in stmts:
@@ -1122,17 +1118,16 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
         # reference harness runs every block; later blocks read the
         # tables these populate) — verification is skipped, errors are
         # surfaced so a broken setup fails loudly at the source block
-        if (_SIDE_EFFECT.search(b.query)
+        if (any(_parse(s).kind in _SIDE_EFFECT
+                for s in _split_statements(b.query))
                 and not _query_vars(_strip_location_all(b.query))
                 and not re.search(r"\b(tpch|tpcds)\w*\.", b.query,
                                   re.IGNORECASE)):
             stmts = [_strip_location(x, engine)
                      for x in _split_statements(b.query)]
-            if all(_RUNNABLE.match(s) or s.lower().startswith("set ")
-                   for s in stmts):
+            if all(_parse(s).kind in _RUNNABLE for s in stmts):
                 snap = _option_snapshot(
-                    engine, [m.group(1) for s in stmts
-                             if (m := _SET_NAME.match(s))])
+                    engine, [o[0] for s in stmts if (o := _set_option(s))])
                 try:
                     for s in stmts:
                         s = _rewrite_stmt(s, rewrite, table_rewrites)
@@ -1158,11 +1153,10 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
             return BlockResult(b.index, "skip", "profile-aggregation")
     stmts = [_strip_location(x, engine)
              for x in _split_statements(b.query)]
-    if not all(_RUNNABLE.match(s) or s.lower().startswith("set ")
-               for s in stmts):
+    if not all(_parse(s).kind in _RUNNABLE for s in stmts):
         return BlockResult(b.index, "skip", "non-query-statement")
-    if any(re.match(r"(?i)set\s+decimal_v2\s*=\s*(false|0)", s)
-           for s in stmts):
+    if any((o := _set_option(s)) and o[0].lower() == "decimal_v2"
+           and o[1].lower() in ("false", "0") for s in stmts):
         # DECIMAL V1 is the reference's deprecated legacy mode; the
         # engine's V1 mode covers CAST truncation (SET DECIMAL_V2=0,
         # tpcds legacy-corpus oracle tier), but these functional
@@ -1184,7 +1178,7 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
                  r"(?:customer|region|supplier|part)\b)"
                  r"(tpch|tpcds)\w*\.", " ".join(sql_stmts),
                  re.IGNORECASE) \
-            and not re.match(r"(?i)\s*explain\b", b.query):
+            and _parse(b.query).kind != "explain":
         # other-workload dbs at the reference's load scale; their
         # expected rows assume SF1 data this fixture doesn't carry —
         # checked AFTER table_rewrites, so a file whose rewrites map
@@ -1194,14 +1188,12 @@ def _run_one(engine, b: Block, rewrite, table_rewrites,
         # tpch_nested_customer.c_orders must not re-trip the skip)
         return BlockResult(b.index, "skip", "other-workload-db")
     snap = _option_snapshot(
-        engine, [m.group(1) for s in sql_stmts
-                 if (m := _SET_NAME.match(s))])
+        engine, [o[0] for s in sql_stmts if (o := _set_option(s))])
     try:
         df = None
         for s in sql_stmts:
             _preclear_create(engine, s)
-            if s.lower().startswith("set ") \
-                    and not re.match(r"(?i)\s*set\s+all\s*$", s):
+            if _parse(s).kind == "set":
                 engine.sql(s)
             else:
                 df = engine.sql(s)  # `set all` RETURNS the listing

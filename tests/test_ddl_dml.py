@@ -176,20 +176,20 @@ def test_hive_java_udf_call_through():
 import sys
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
-from incubator_impala_spark import dialect
+from incubator_impala_spark.statements import translate_statement
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.catalogImplementation", "hive")
          .config("spark.sql.warehouse.dir", "/tmp/hive_udf_wh")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-stmt = dialect.translate(
+stmt = translate_statement(
     "CREATE FUNCTION hive_upper LOCATION '' "
     "SYMBOL='org.apache.hadoop.hive.ql.udf.generic.GenericUDFUpper'")
 assert stmt == "CREATE TEMPORARY FUNCTION hive_upper AS " \\
     "'org.apache.hadoop.hive.ql.udf.generic.GenericUDFUpper'", stmt
 spark.sql(stmt)
 assert spark.sql("SELECT hive_upper('abc') AS v").collect()[0].v == "ABC"
-spark.sql(dialect.translate("DROP FUNCTION hive_upper()"))
+spark.sql(translate_statement("DROP FUNCTION hive_upper()"))
 print("HIVE_UDF_OK")
 """
     res = subprocess.run(

@@ -262,9 +262,11 @@ def test_cast_format_varchar_with_length():
 
 
 def test_show_functions_in_db_keeps_qualifier():
-    assert dialect.translate_statement("SHOW FUNCTIONS IN mydb") == (
+    from incubator_impala_spark.statements import translate_statement
+
+    assert translate_statement("SHOW FUNCTIONS IN mydb") == (
         "SHOW USER FUNCTIONS IN mydb"
     )
-    assert dialect.translate_statement("SHOW FUNCTIONS IN mydb 'foo*'") == (
+    assert translate_statement("SHOW FUNCTIONS IN mydb 'foo*'") == (
         "SHOW USER FUNCTIONS IN mydb LIKE 'foo*'"
     )

@@ -89,3 +89,29 @@ def test_compatible_avro_partition_union(engine, avro_dir):
                   engine.sql("select * from mixok2").collect())
     assert rows == [(1, 2, "a", 1), (9, 9, "x", 2)]
     engine.sql("drop table mixok2")
+
+
+@pytest.mark.parametrize("text", [
+    "insert into mixdst select * from mixsrc",
+    "with c as (select * from mixsrc) insert into mixdst select * from c",
+])
+def test_insert_reads_a_mixed_source_through_its_dispatch(engine, avro_dir,
+                                                          text):
+    # an INSERT's sources read every partition, the overridden Avro one
+    # too; its target is the catalog table
+    _fresh(engine, "mixsrc", "int")
+    engine.sql(f"alter table mixsrc partition (p=2) "
+               f"set location '{avro_dir}'")
+    engine.sql("drop table if exists mixdst")
+    engine.sql("create table mixdst (i int, t int, s string, p int) "
+               "stored as parquet")
+    assert engine.sql(text).collect()[0][0] == ": 2"
+    assert sorted(tuple(r) for r in
+                  engine.sql("select * from mixdst").collect()) == [
+        (1, 2, "a", 1), (9, 9, "x", 2)]
+    engine.sql("insert into mixsrc partition (p=1) values (3, 4, 'b')")
+    assert sorted(tuple(r) for r in
+                  engine.sql("select * from mixsrc").collect()) == [
+        (1, 2, "a", 1), (3, 4, "b", 1), (9, 9, "x", 2)]
+    engine.sql("drop table mixdst")
+    engine.sql("drop table mixsrc")

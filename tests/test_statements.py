@@ -94,6 +94,17 @@ def test_classify_record_and_parts():
         "select 1 as __dummy__"
 
 
+def test_statement_spellings():
+    from incubator_impala_spark.statements import translate_statement
+
+    assert translate_statement("-- c\nINVALIDATE METADATA") == "CLEAR CACHE"
+    assert translate_statement("refresh d.t;") == "REFRESH TABLE d.t"
+    assert translate_statement("REFRESH") is None
+    assert translate_statement("COMPUTE INCREMENTAL STATS d.t") == \
+        "ANALYZE TABLE d.t COMPUTE STATISTICS FOR ALL COLUMNS"
+    assert translate_statement("SELECT 'REFRESH t'") is None
+
+
 def test_every_row_has_a_case():
     from incubator_impala_spark import statements
 
@@ -309,3 +320,24 @@ def test_record_picks_the_acid_variant(eng, text, expected):
             eng.sql(text)
     else:
         assert _rows(eng, text) == expected
+
+
+# ---------------------------------------------------------------------
+# a WITH list before an INSERT names engine-owned databases
+# ---------------------------------------------------------------------
+
+@pytest.mark.parametrize("use, src", [(None, "stc_db.src"),
+                                      ("stc_db", "src")])
+def test_with_led_insert_resolves_its_with_list(eng, use, src):
+    _reset(eng)
+    eng.sql("CREATE DATABASE stc_db")
+    eng.sql("CREATE TABLE stc_db.src (a INT) STORED AS PARQUET")
+    eng.sql("INSERT INTO stc_db.src VALUES (7), (8)")
+    eng.sql(f"CREATE TABLE {_PLAIN}")
+    if use:
+        eng.sql(f"USE {use}")
+    assert _rows(eng, f"WITH c AS (SELECT * FROM {src}) "
+                      f"INSERT INTO default.stc_t SELECT * FROM c") == [
+        (": 2",)]
+    eng.sql("USE default")
+    assert sorted(_rows(eng, "SELECT a FROM stc_t")) == [(7,), (8,)]

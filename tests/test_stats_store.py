@@ -352,6 +352,17 @@ def test_escaped_partition_keys_keep_one_spelling(eng):
     assert [parts[y]["Incremental stats"] for y in ("a/b", "c:d", "e")] \
         == ["false", "true", "true"]
     eng.sql("DROP TABLE sst_esc")
+    # a BOOLEAN key's directory is `y=true`, a DOUBLE NaN's `y=NaN`
+    for typ, vals in (("BOOLEAN", "(1, true), (2, true), (3, false)"),
+                      ("DOUBLE", "(1, cast('nan' as double)), (2, 1e20), "
+                                 "(3, 1e20)")):
+        _recreate(eng, "sst_esc", f"(x INT) PARTITIONED BY (y {typ}) "
+                                  "STORED AS PARQUET")
+        eng.sql(f"INSERT INTO sst_esc PARTITION (y) VALUES {vals}")
+        eng.sql("COMPUTE STATS sst_esc")
+        assert sorted(p["#Rows"] for y, p in _part_stats(eng, "sst_esc")
+                      .items() if y != "Total") == [1, 2]
+    eng.sql("DROP TABLE sst_esc")
 
 
 def test_insert_into_a_float_partition_drops_its_incremental_cover(eng):
