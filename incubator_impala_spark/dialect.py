@@ -501,49 +501,10 @@ def rewrite_cast_format(sql: str, now=None) -> str:
 # Spark spells it `div` too, so only normalization is needed; kept as a
 # documented no-op hook.
 
-# Statement-level spellings (reference grammar sql-parser.cup): the
-# Spark text of a statement whose head statements.py matched, built
-# from what follows that head; None when it does not parse.
-_ONE_TABLE = re.compile(r"\s+([A-Za-z_][\w.]*)\s*;?\s*$")
-
-
-def compute_stats_stmt(tail: str) -> str | None:
-    """COMPUTE [INCREMENTAL] STATS t (ComputeStatsStmt.java)."""
-    m = _ONE_TABLE.match(tail)
-    return m and f"ANALYZE TABLE {m.group(1)} COMPUTE STATISTICS " \
-        "FOR ALL COLUMNS"
-
-
-def describe_extended_stmt(tail: str) -> str | None:
-    """SHOW TABLE STATS t and SHOW COLUMN STATS t (ShowStatsStmt.java):
-    the closest Spark shape is the extended describe, whose Statistics
-    row carries the ANALYZE-computed numbers."""
-    m = _ONE_TABLE.match(tail)
-    return m and f"DESCRIBE TABLE EXTENDED {m.group(1)}"
-
-
-def describe_formatted_stmt(tail: str) -> str | None:
-    """DESCRIBE FORMATTED t."""
-    m = re.match(r"(?i)\s+FORMATTED(\s+[A-Za-z_][\w.]*\s*;?\s*$)", tail)
-    return m and describe_extended_stmt(m.group(1))
-
-
-def refresh_stmt(tail: str, invalidate: bool) -> str | None:
-    """REFRESH t and INVALIDATE METADATA [t] (ResetMetadataStmt): both
-    map to Spark's metadata refresh — Spark has no separate
-    loaded-vs-unloaded catalog state to invalidate. The global
-    INVALIDATE METADATA flushes the whole catalog cache; CLEAR CACHE
-    is Spark's whole-cache analogue."""
-    m = _ONE_TABLE.match(tail)
-    if m:
-        return f"REFRESH TABLE {m.group(1)}"
-    return "CLEAR CACHE" if invalidate and re.fullmatch(r"\s*;?\s*", tail) \
-        else None
-
-
 # Function DDL (reference: CreateUdfStmt.java, CreateUdaStmt.java,
 # ShowFunctionsStmt.java, DropFunctionStmt.java; grammar
-# sql-parser.cup `create_udf_stmt`). Impala's native-library form
+# sql-parser.cup `create_udf_stmt`), spelled from what follows the
+# head statements.py matched. Impala's native-library form
 #   CREATE FUNCTION name(INT, STRING) RETURNS INT
 #     LOCATION '/lib.so|jar' SYMBOL='ClassOrSymbol'
 # becomes Spark's Hive-UDF call-through

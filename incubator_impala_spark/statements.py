@@ -343,9 +343,24 @@ def _row(kind, head, handler=query, hooks=(), target=None, parts=None,
                parts and re.compile(parts, re.IGNORECASE), acid, spark)
 
 
-def _tail(spelling):
-    """A row's Spark spelling built from the statement's tail."""
-    return lambda stmt: spelling(stmt.tail)
+# one table name, the whole tail
+_ONE = re.compile(r"\s+([A-Za-z_][\w.]*)\s*;?\s*$")
+
+
+def _spell(template, pattern=_ONE):
+    """A row's Spark spelling: `template` filled from the groups of
+    `pattern` over the statement's tail; None when it does not match."""
+    return lambda stmt: (m := pattern.match(stmt.tail)) \
+        and template.format(*m.groups())
+
+
+def _refresh(stmt):
+    """REFRESH t and INVALIDATE METADATA [t] (ResetMetadataStmt): Spark
+    has no loaded-vs-unloaded catalog state to invalidate, so both are
+    its metadata refresh; the global form flushes the whole cache."""
+    if stmt.group("inv") and re.fullmatch(r"\s*;?\s*", stmt.tail):
+        return "CLEAR CACHE"
+    return _spell("REFRESH TABLE {0}")(stmt)
 
 
 def _ns(name: str, parts: str, registry: str = "ns"):
@@ -392,14 +407,14 @@ ROWS = [
     _row("use", r"USE\b", **_ns("use", namespaces.USE)),
     _row("create_function", r"CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\b",
          **_ns("create_fn", namespaces.CREATE_FN),
-         spark=_tail(dialect.create_function_stmt)),
+         spark=lambda s: dialect.create_function_stmt(s.tail)),
     _row("show_functions",
          r"SHOW\s+(?P<fkind>AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS\b",
          **_ns("show_fns", namespaces.SHOW_FNS),
-         spark=_tail(dialect.show_functions_stmt)),
+         spark=lambda s: dialect.show_functions_stmt(s.tail)),
     _row("drop_function", r"DROP\s+(?:AGGREGATE\s+)?FUNCTION\b",
          **_ns("drop_fn", namespaces.DROP_FN),
-         spark=_tail(dialect.drop_function_stmt)),
+         spark=lambda s: dialect.drop_function_stmt(s.tail)),
     _row("show_tables", r"SHOW\s+TABLES\b",
          **_ns("show_tables", namespaces.SHOW_TABLES)),
     _row("alter_view", r"ALTER\s+VIEW\b", _first(
@@ -412,12 +427,15 @@ ROWS = [
     _row("show_partitions", r"SHOW\s+PARTITIONS\b",
          lambda e, s, m: partitions.show_partitions(e, m.group(1)),
          DDL, _T, parts=_TABLE),
+    # SHOW TABLE/COLUMN STATS t (ShowStatsStmt.java): Spark's closest
+    # shape is the extended describe, whose Statistics row carries the
+    # ANALYZE-computed numbers
     _row("show_column_stats", r"SHOW\s+COLUMN\s+STATS\b",
          lambda e, s, m: e._show_column_stats(m.group(1)), DDL, _T,
-         parts=_TABLE, spark=_tail(dialect.describe_extended_stmt)),
+         parts=_TABLE, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
     _row("show_table_stats", r"SHOW\s+TABLE\s+STATS\b",
          lambda e, s, m: partitions.show_table_stats(e, m.group(1)),
-         DDL, _T, parts=_TABLE, spark=_tail(dialect.describe_extended_stmt)),
+         DDL, _T, parts=_TABLE, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
     _row("show_files", r"SHOW\s+FILES\s+IN\b",
          lambda e, s, m: partitions.show_files(e, m.group(1),
                                                m.group("spec")), DDL, _T,
@@ -426,7 +444,8 @@ ROWS = [
     _row("describe_db", r"DESCRIBE\s+(?:DATABASE|SCHEMA)\b",
          **_ns("describe_db", namespaces.DESCRIBE_DB)),
     _row("describe", r"DESCRIBE\b", lambda e, s, m: e._describe(s), DDL,
-         spark=_tail(dialect.describe_formatted_stmt)),
+         spark=_spell("DESCRIBE TABLE EXTENDED {0}", re.compile(
+             r"\s+FORMATTED" + _ONE.pattern, re.IGNORECASE))),
     # COMPUTE [INCREMENTAL] STATS t [(col, ...)] [PARTITION (spec)]
     # (ComputeStatsStmt.java)
     _row("compute_stats", r"COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\b",
@@ -434,7 +453,8 @@ ROWS = [
          WRITE, _T, parts=r"\s+(?P<tbl>`[\w.]+`|[A-Za-z_][\w.]*)\s*"
                r"(?:\((?P<cols>[^)]*)\)\s*)?"
                r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$",
-         spark=_tail(dialect.compute_stats_stmt)),
+         spark=_spell("ANALYZE TABLE {0} COMPUTE STATISTICS "
+                      "FOR ALL COLUMNS")),
     _row("drop_stats", r"DROP\s+(?:INCREMENTAL\s+)?STATS\b",
          lambda e, s, m: e._drop_stats(m), DDL, _T,
          parts=r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s*(?:PARTITION\s*\("
@@ -446,8 +466,7 @@ ROWS = [
     _INSERT_ROW,
     _row("refresh", r"(?:REFRESH|(?P<inv>INVALIDATE\s+METADATA))\b",
          lambda e, s, m: avro_stale.refresh(e, s), DDL, _T, acid=True,
-         spark=lambda s: dialect.refresh_stmt(s.tail,
-                                              bool(s.group("inv")))),
+         spark=_refresh),
     # LOAD DATA INPATH 'p' [OVERWRITE] INTO TABLE t [PARTITION (k=v,..)]
     # (LoadDataStmt.java)
     _row("load", r"LOAD\b", lambda e, s, m: e._load_data(
