@@ -66,7 +66,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
-from incubator_impala_spark import dialect, sqlscan, stats
+from incubator_impala_spark import dialect, partitions, sqlscan, stats
 from incubator_impala_spark.namespaces import refuse_drop_view
 from incubator_impala_spark.partitions import partition_columns
 from incubator_impala_spark.session import rows_df, summary
@@ -169,22 +169,31 @@ _BASE_RE = re.compile(r"^base_(\d+)(?:_v\d+)?$")
 _ORIG_NAME = re.compile(r"^(\d+)_\d+$")
 
 
-def _leaf_dirs(t: AcidTable) -> list:
-    """(suffix, real_dir) per partition leaf ('' for unpartitioned).
-    Registered partitions are included even when empty on disk."""
-    if not t.pcols:
-        return [("", t.location)]
+def _leaves(root: str, depth: int) -> dict:
+    """{suffix: directory} of the `k=v` directories `depth` levels
+    under `root` (Spark's and Hive's partition layout)."""
     leaves = {}
-    def walk(d: str, depth: int, parts: list) -> None:
-        if depth == len(t.pcols):
+
+    def walk(d: str, parts: list) -> None:
+        if len(parts) == depth:
             leaves["/".join(parts)] = d
             return
         if not os.path.isdir(d):
             return
         for e in sorted(os.listdir(d)):
             if "=" in e and os.path.isdir(os.path.join(d, e)):
-                walk(os.path.join(d, e), depth + 1, parts + [e])
-    walk(t.location, 0, [])
+                walk(os.path.join(d, e), parts + [e])
+
+    walk(root, [])
+    return leaves
+
+
+def _leaf_dirs(t: AcidTable) -> list:
+    """(suffix, real_dir) per partition leaf ('' for unpartitioned).
+    Registered partitions are included even when empty on disk."""
+    if not t.pcols:
+        return [("", t.location)]
+    leaves = _leaves(t.location, len(t.pcols))
     for suffix in t.partitions:
         leaves.setdefault(suffix,
                           os.path.join(t.location, suffix))
@@ -541,14 +550,9 @@ def _read_leaf(engine, t: AcidTable, suffix: str, leaf: str,
                          "transactional tables")
     # partition values as typed literal columns (partition pruning on
     # the view folds these to constants)
-    kvs = dict(item.split("=", 1) for item in suffix.split("/")) \
-        if suffix else {}
+    kvs = partitions.parse_suffix(suffix)
     for pname, ptype in t.pcols:
-        v = kvs.get(pname)
-        df = df.withColumn(
-            pname,
-            (F.lit(None) if v in (None, "__HIVE_DEFAULT_PARTITION__")
-             else F.lit(v)).cast(ptype))
+        df = df.withColumn(pname, F.lit(kvs.get(pname)).cast(ptype))
     return df
 
 
@@ -617,18 +621,26 @@ def _writer(df, t: AcidTable):
     return df.write.format(t.fmt)
 
 
-def _move_leaf_files(src: str, dest: str, start: int = 0) -> int:
-    """Move data files from a Spark output dir into an ACID dir with
-    Hive-style names 0000NN_0."""
+def _move_leaf_files(src: str, dest: str, *,
+                     copies: bool = False) -> None:
+    """Move data files from a Spark output dir into `dest` with
+    Hive-style names 0000NN_0, replacing a file of that name (a
+    repeated compaction rewrites its own base).  With `copies`, a
+    taken name gets 0000NN_0_copy_M instead, as Hive names a plain
+    table's new files."""
     os.makedirs(dest, exist_ok=True)
-    n = start
+    n = 0
     for f in sorted(os.listdir(src)):
         p = os.path.join(src, f)
         if f.startswith((".", "_")) or not os.path.isfile(p):
             continue
-        shutil.move(p, os.path.join(dest, f"{n:06d}_0"))
+        name = target = os.path.join(dest, f"{n:06d}_0")
+        c = 1
+        while copies and os.path.exists(target):
+            target = f"{name}_copy_{c}"
+            c += 1
+        shutil.move(p, target)
         n += 1
-    return n
 
 
 def write_rows(engine, t: AcidTable, df, wid: int, *,
@@ -675,23 +687,12 @@ def write_rows(engine, t: AcidTable, df, wid: int, *,
         pnames = [p for p, _ in t.pcols]
         _writer(df.repartition(1) if single else df,
                 t).partitionBy(*pnames).save(tmp)
-        # walk written leaves; move files into <leaf>/<ddir>/
-        def walk(d: str, parts: list) -> None:
-            subdirs = [e for e in sorted(os.listdir(d))
-                       if "=" in e
-                       and os.path.isdir(os.path.join(d, e))]
-            if len(parts) == len(pnames):
-                suffix = "/".join(parts)
-                dest = os.path.join(t.location, suffix, ddir)
-                _move_leaf_files(d, dest)
-                affected.append(suffix)
-                t.partitions.add(suffix)
-                return
-            for e in subdirs:
-                walk(os.path.join(d, e), parts + [e])
-        if os.path.isdir(tmp):
-            walk(tmp, [])
-        if static_leaf and static_leaf not in affected:
+        # move each written leaf's files into <leaf>/<ddir>/
+        for suffix, d in _leaves(tmp, len(pnames)).items():
+            _move_leaf_files(d, os.path.join(t.location, suffix, ddir))
+            affected.append(suffix)
+            t.partitions.add(suffix)
+        if static_leaf and not affected:
             # a fully-static spec with an empty source still claims
             # its partition (empty base/delta dir)
             os.makedirs(os.path.join(t.location, static_leaf, ddir),
@@ -1044,42 +1045,10 @@ def _insert_acid(engine, t: AcidTable, ins, hive: bool):
         w = _alloc(t)
         t.aborted.add(w)
         raise ValueError(f"Query aborted:Debug Action: {dbg}")
-    static = {k: v.strip("'\"") for k, v in ins.static.items()}
-    dyn = ins.dyn
 
     def build_df():
-        # source columns by position: a generated name (`0.5`, `1.50`)
-        # or a repeated one does not resolve as a column reference
         src = engine.spark.sql(engine.translate_query(ins.body))
-        src = src.toDF(*[f"_c{i}" for i in range(len(src.columns))])
-        listed = list(ins.cols or [])
-        pnames = [p for p, _ in t.pcols]
-        types = dict(t.cols + t.pcols)
-        if not listed:
-            listed = [c for c, _ in t.cols] + \
-                [p for p in (dyn or
-                             [p for p in pnames
-                              if p not in static])]
-            listed = listed[:len(src.columns)]
-        sel = {}
-        for i, name in enumerate(listed):
-            if i < len(src.columns):
-                sel[name] = F.col(f"_c{i}") \
-                    .cast(types.get(name, "string"))
-        out = src.select(*[c.alias(n) for n, c in sel.items()]) \
-            if sel else src
-        for cname, cty in t.cols:
-            if cname not in sel:
-                out = out.withColumn(
-                    cname, F.lit(None).cast(cty))
-        for pname, pty in t.pcols:
-            if pname in static:
-                out = out.withColumn(
-                    pname, F.lit(static[pname]).cast(pty))
-            elif pname not in sel:
-                out = out.withColumn(pname, F.lit(None).cast(pty))
-        return out.select(*[c for c, _ in t.cols],
-                          *[p for p, _ in t.pcols])
+        return ins.project(src, t.cols + t.pcols)
 
     if hive:
         df = _with_hive_views(engine, build_df)
@@ -1088,10 +1057,12 @@ def _insert_acid(engine, t: AcidTable, ins, hive: bool):
     overwrite = ins.overwrite
     w = _alloc(t)
     static_leaf = None
-    if t.pcols and static and all(
-            p in static for p, _ in t.pcols):
-        static_leaf = "/".join(
-            f"{p}={static[p]}" for p, _ in t.pcols)
+    if t.pcols and all(p in ins.static for p, _ in t.pcols):
+        try:
+            static_leaf = partitions.spec_suffix(
+                ins.static, [p for p, _ in t.pcols])
+        except ValueError:  # an expression: only a written row names it
+            pass
     n = df.count()
     write_rows(engine, t, df, w, overwrite=overwrite,
                static_leaf=static_leaf,
@@ -1184,14 +1155,12 @@ def hive_sql(engine, text: str):
                 return _promote(engine, m.group("tbl"), props)
         m = _HIVE_COMPACT.match(tail)
         if m and t is not None:
-            suffix = None
-            if m.group("spec"):
-                suffix = _spec_suffix(t, m.group("spec"))
-            compact(engine, t, suffix)
+            compact(engine, t, m.group("spec") and _spec_suffix(
+                engine, t, m.group("spec")))
             return summary(engine.spark, "Compaction enqueued.")
         m = _ADD_PART.match(tail)
         if m and t is not None:
-            suffix = _spec_suffix(t, m.group("spec"))
+            suffix = _spec_suffix(engine, t, m.group("spec"))
             t.partitions.add(suffix)
             os.makedirs(os.path.join(t.location, suffix), exist_ok=True)
             return summary(engine.spark, "New partition has been added.")
@@ -1205,7 +1174,7 @@ def hive_sql(engine, text: str):
             return _hive_update(engine, t, m.group("sets"),
                                 m.group("where"))
     elif stmt.kind == "insert":
-        ins = statements.parse_insert(stmt.resolved)
+        ins = statements.parse_insert(stmt)
         if ins is not None:
             if t is not None:
                 return _insert_acid(engine, t, ins, hive=True)
@@ -1217,11 +1186,10 @@ def hive_sql(engine, text: str):
     return engine.sql(text)
 
 
-def _spec_suffix(t: AcidTable, spec: str) -> str:
+def _spec_suffix(engine, t: AcidTable, spec: str) -> str:
     """The leaf directory of a `k=v, ...` partition spec."""
-    kvs = {k.strip().strip("`").lower(): v.strip().strip("'\"")
-           for k, v in (i.split("=", 1) for i in spec.split(","))}
-    return "/".join(f"{p}={kvs[p]}" for p, _ in t.pcols if p in kvs)
+    return partitions.spec_suffix(partitions.fold_spec(engine, spec),
+                                  [p for p, _ in t.pcols])
 
 
 def _hive_visible(t: AcidTable) -> tuple:
@@ -1271,10 +1239,7 @@ def _hive_update(engine, t: AcidTable, sets: str,
             "UPDATE is only supported on full ACID tables")
     hw, exc = _hive_visible(t)
     w = _alloc(t)
-    assigns = {}
-    for item in re.split(r",(?![^()]*\))", sets):
-        k, v = item.split("=", 1)
-        assigns[k.strip().strip("`").lower()] = v.strip()
+    assigns = partitions.parse_spec(sets)   # `col = expr, ...`
     for suffix, leaf in _leaf_dirs(t):
         df = _read_leaf(engine, t, suffix, leaf, hw, exc,
                         with_rowid=True)
@@ -1308,8 +1273,7 @@ def _hive_update(engine, t: AcidTable, sets: str,
             else:
                 sel.append(F.col(cname))
         new_rows = matched.select(*sel)
-        kvs = dict(i.split("=", 1) for i in suffix.split("/")) \
-            if suffix else {}
+        kvs = partitions.parse_suffix(suffix)
         for pname, pty in t.pcols:
             new_rows = new_rows.withColumn(
                 pname, F.lit(kvs.get(pname)).cast(pty))
@@ -1322,7 +1286,8 @@ def _hive_update(engine, t: AcidTable, sets: str,
 def _hive_plain_insert(engine, ins, stmt: str):
     """Hive INSERT (its parts `ins`, statements.Insert) into a non-ACID
     table: write Hive-named files (0000NN_0 / _copy_M) into the table's
-    directory so a later ACID upgrade sees them as original files."""
+    directory, or its partitions' directories, so a later ACID upgrade
+    sees them as original files."""
     spark = engine.spark
     tbl = ins.tbl
     if not spark.catalog.tableExists(tbl):
@@ -1330,42 +1295,27 @@ def _hive_plain_insert(engine, ins, stmt: str):
         # statement to engine.sql verbatim — reassembling it from
         # match groups would drop PARTITION clauses / column lists
         return engine.sql(stmt)
-    df = spark.sql(engine.translate_query(ins.body))
-    target = spark.table(tbl)
-    static = {k: v.strip("'\"") for k, v in ins.static.items()}
-    cols = [c for c in target.columns if c.lower() not in static]
-    df = df.toDF(*cols[:len(df.columns)])
-    types = {f.name: f.dataType for f in target.schema.fields}
-    for c in cols:
-        df = df.withColumn(c, F.col(c).cast(types[c]))
+    df = ins.project(spark.sql(engine.translate_query(ins.body)),
+                     [(f.name, f.dataType.simpleString())
+                      for f in spark.table(tbl).schema.fields])
+    pcols = partition_columns(engine, tbl)
     loc = engine._table_location(tbl)
-    if static:
-        # static-partition Hive insert: files land in the partition
-        # subdirectory (the partition columns stay directory-encoded)
-        suffix = "/".join(f"{k}={v}" for k, v in static.items())
-        loc = os.path.join(loc, suffix)
-        os.makedirs(loc, exist_ok=True)
     provider = _table_provider(engine, tbl)
     tmp = os.path.join(loc, "_tmp_hive_insert")
     shutil.rmtree(tmp, ignore_errors=True)
     w = df.repartition(1).write
     if provider == "csv":
         w = w.options(sep="\x01", nullValue="\\N")
+    if pcols:
+        w = w.partitionBy(*pcols)
     w.format(provider).save(tmp)
-    n = 0
-    for f in sorted(os.listdir(tmp)):
-        p = os.path.join(tmp, f)
-        if f.startswith((".", "_")) or not os.path.isfile(p):
-            continue
-        name = f"{n:06d}_0"
-        dest = os.path.join(loc, name)
-        c = 1
-        while os.path.exists(dest):
-            dest = os.path.join(loc, f"{name}_copy_{c}")
-            c += 1
-        shutil.move(p, dest)
-        n += 1
+    for suffix, d in _leaves(tmp, len(pcols)).items():
+        _move_leaf_files(d, os.path.join(loc, suffix), copies=True)
     shutil.rmtree(tmp, ignore_errors=True)
+    if pcols:
+        # the catalog lists a partitioned table's partitions: register
+        # the directories the insert created
+        spark.catalog.recoverPartitions(tbl)
     spark.catalog.refreshTable(tbl)
     return summary(engine.spark, "Inserted rows.")
 

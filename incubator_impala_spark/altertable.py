@@ -29,7 +29,7 @@ from pyspark.errors.exceptions.base import (
 )
 from pyspark.sql import DataFrame, functions as F
 
-from incubator_impala_spark import sqlscan, stats
+from incubator_impala_spark import partitions, sqlscan, stats
 from incubator_impala_spark.session import summary
 
 __all__ = ["handle"]
@@ -184,23 +184,6 @@ def _recreate(engine, tbl: str, exprs: list) -> None:
         # the catalog's rename does not carry partition entries over;
         # rebuild them from the moved directories
         spark.sql(f"MSCK REPAIR TABLE {tbl}")
-
-
-def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
-    """Partition spec with constant-folded values as SQL literals."""
-    items = []
-    for item in sqlscan.split_top(spec):
-        k, v = item.split("=", 1)
-        v = v.strip()
-        if not re.fullmatch(r"-?\d+(\.\d+)?|'(?:[^']|'')*'|NULL", v,
-                            re.IGNORECASE):
-            row = engine.spark.sql(
-                "SELECT " + engine.translate_query(v)).collect()[0][0]
-            v = "NULL" if row is None else \
-                "'" + str(row).replace("'", "''") + "'" \
-                if isinstance(row, str) else str(row)
-        items.append((k.strip().strip("`"), v))
-    return items
 
 
 def _map_sort_cols(engine, tbl: str, fn) -> None:
@@ -382,16 +365,15 @@ def handle(engine, stmt) -> DataFrame | None:
         specs = re.findall(r"PARTITION\s*\(((?:[^()]|\([^()]*\))*)\)",
                            rest, re.IGNORECASE)
         for raw in specs:
-            spec = _fold_spec(engine, raw)
-            sql_spec = ", ".join(f"`{k}`={v}" for k, v in spec)
+            sql_spec = partitions.spec_sql(partitions.fold_spec(engine, raw))
             kw = "IF NOT EXISTS " if ine else ""
             spark.sql(
                 f"ALTER TABLE {tbl} ADD {kw}PARTITION ({sql_spec})")
         return summary(
             spark, "New partition has been added to the table.")
     if pm:
-        spec = _fold_spec(engine, pm.group("spec"))
-        sql_spec = ", ".join(f"`{k}`={v}" for k, v in spec)
+        sql_spec = partitions.spec_sql(
+            partitions.fold_spec(engine, pm.group("spec")))
         ine = "IF NOT EXISTS " if pm.group("ine") else ""
         spark.sql(f"ALTER TABLE {tbl} ADD {ine}PARTITION ({sql_spec})")
         return summary(
@@ -402,8 +384,6 @@ def handle(engine, stmt) -> DataFrame | None:
         # every spec form — exact, NULL-valued, or comparison
         # predicates — evaluates against the catalog's partition list
         # (AlterTableDropPartitionStmt); metadata-sized
-        from incubator_impala_spark import partitions
-
         matched = partitions.match_partitions(
             engine, tbl, engine.translate_query(pm.group("spec")))
         rec = stats.peek(engine, tbl)
@@ -440,8 +420,6 @@ def handle(engine, stmt) -> DataFrame | None:
             if nm:
                 stats.record(engine, tbl).rows = int(nm.group(1))
         if sm.group("spec"):
-            from incubator_impala_spark import partitions
-
             matched = [p for p, _ in partitions.match_partitions(
                 engine, tbl, engine.translate_query(sm.group("spec")))]
             lp = re.match(r"^\s*PARTITION\s*\([^)]*(?:\([^)]*\)[^)]*)*\)"

@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import re
 
-from incubator_impala_spark import sqlscan
+from incubator_impala_spark import partitions, sqlscan
 from incubator_impala_spark.session import rows_df, summary
 
 # what follows CREATE [EXTERNAL] TABLE, ALTER TABLE and REFRESH /
@@ -83,16 +83,15 @@ def create(engine, tail: str):
 def alter(engine, stmt):
     """ALTER TABLE SET FILEFORMAT AVRO (the entry goes stale) or ADD
     PARTITION of a registered table; None otherwise."""
-    info = engine.avro_stale.get(_key(engine.ns.resolve(stmt.target or "")))
+    info = engine.avro_stale.get(_key(stmt.name or ""))
     if info is not None and _SET_FMT.match(stmt.tail):
         info["state"] = "stale"
         return summary(engine.spark, "Updated table.")
     m = info is not None and _ADD_PART.match(stmt.tail)
     if not m:
         return None
-    spec = dict(
-        (k.strip().strip("`").lower(), v.strip().strip("'\""))
-        for k, v in (x.split("=", 1) for x in m.group("spec").split(",")))
+    spec = {k: partitions.literal(v) for k, v in
+            partitions.fold_spec(engine, m.group("spec")).items()}
     info["partitions"].append((spec, m.group("loc")))
     return summary(engine.spark,
                    "New partition has been added to the table.")
@@ -101,7 +100,7 @@ def alter(engine, stmt):
 def refresh(engine, stmt):
     """REFRESH / INVALIDATE METADATA of a registered table: load it
     under its current state; None otherwise."""
-    key = _key(engine.ns.resolve(stmt.target or ""))
+    key = _key(stmt.name or "")
     if key not in engine.avro_stale or not _TABLE.match(stmt.tail):
         return None
     _materialize(engine, engine.avro_stale[key], key)

@@ -353,13 +353,10 @@ class Engine:
         names = {"numdvs": "ndv", "numnulls": "nulls",
                  "maxsize": "max", "avgsize": "avg",
                  "numtrues": "trues", "numfalses": "falses"}
-        for item in m.group("kv").split(","):
-            if "=" not in item:
-                continue
-            k, v = item.split("=", 1)
-            k = k.strip().strip("'\"").lower()
-            v = v.strip().strip("'\"")
-            if k in names:
+        for k, v in partitions.parse_spec(m.group("kv")).items():
+            k = k.strip("'\"")
+            if k in names and v is not None:
+                v = v.strip("'\"")
                 st[names[k]] = float(v) if k == "avgsize" else int(v)
         return summary(self.spark, "Column stats have been set.")
 
@@ -411,9 +408,8 @@ class Engine:
         if out is not None:
             return out
         tail = stmt.tail
-        if stmt.target is not None:
-            self.ns.record_table(
-                self.ns.resolve(stmt.target).replace("`", ""))
+        if stmt.name is not None:
+            self.ns.record_table(stmt.name.replace("`", ""))
         out = avro_stale.create(self, tail)
         if out is not None:
             return out
@@ -434,8 +430,7 @@ class Engine:
             return summary(self.spark, f"Inserted {n} row(s)")
         if _AS_SELECT.search(tail):
             return None   # not a CTAS this engine parses: Spark's
-        if stmt.group("ine") and self.spark.catalog.tableExists(
-                self.ns.resolve(stmt.target)):
+        if stmt.group("ine") and self.spark.catalog.tableExists(stmt.name):
             return summary(self.spark, "Table already exists.")
         lm = _AVRO_LITERAL.match(tail)
         if lm:
@@ -456,10 +451,10 @@ class Engine:
         self.spark.sql(self.translate_query(stmt.resolved))
         return summary(self.spark, "Table has been created.")
 
-    def _drop_stats(self, m: re.Match) -> DataFrame:
+    def _drop_stats(self, stmt, m: re.Match) -> DataFrame:
         """DROP [INCREMENTAL] STATS t [PARTITION (spec)]: clears the
         incremental-stats cover so the next compute recounts."""
-        tbl, spec = m.group("tbl"), (m.group("part") or "").strip()
+        tbl, spec = stmt.name, (m.group("part") or "").strip()
         rec = stats.get(self, tbl)
         if not spec:
             stats.clear(self, tbl)
@@ -483,8 +478,8 @@ class Engine:
                 pass  # table dropped / cover emptied
         return summary(self.spark, "Stats have been dropped.")
 
-    def _truncate(self, m: re.Match) -> DataFrame:
-        tbl = m.group("tbl")
+    def _truncate(self, stmt, m: re.Match) -> DataFrame:
+        tbl = stmt.name
         if not self.spark.catalog.tableExists(tbl):
             if m.group("ife"):
                 return summary(self.spark, "Table does not exist.")
@@ -655,7 +650,7 @@ class Engine:
                     total += os.path.getsize(os.path.join(root, f))
         return total
 
-    def _compute_stats(self, m: re.Match, inc: bool) -> DataFrame:
+    def _compute_stats(self, stmt, m: re.Match) -> DataFrame:
         """COMPUTE STATS veneer: runs Spark's ANALYZE (footer counts +
         per-column min/max/ndv/null stats into the catalog — what the
         planner consumes) and returns the reference's summary row
@@ -663,7 +658,7 @@ class Engine:
         (ComputeStatsStmt.java; N = partitions touched, M = columns
         with fresh stats). An ACID table computes over its snapshot
         view, with its partitions and location from its record."""
-        tbl = m.group("tbl")
+        tbl, inc = stmt.name, bool(stmt.group("inc"))
         cols_g = m.group("cols")
         spec = (m.group("part") or "").strip()
         pcols = []
@@ -1018,13 +1013,12 @@ class Engine:
         """INSERT INTO/OVERWRITE via a DataFrame write, returning the
         reference's summary rows: per modified partition
         `k1=v1/k2=v2/: N` (InsertStmt summary as impala-shell prints
-        it), or `: N` for an unpartitioned table. Handles the column-
-        permutation form (listed columns map by position, unlisted
-        data columns fill with NULL — InsertStmt.java column
-        permutations) and static/dynamic PARTITION specs (a static
-        spec becomes a literal column, so OVERWRITE under Spark's
-        dynamic partition-overwrite replaces exactly that partition,
-        matching the reference's static-partition overwrite)."""
+        it), or `: N` for an unpartitioned table. The rows are the
+        source's as `Insert.project` maps them to the target's columns
+        (a static partition value becomes a column, so OVERWRITE under
+        Spark's dynamic partition-overwrite replaces exactly that
+        partition, matching the reference's static-partition
+        overwrite)."""
         from pyspark.sql import functions as F
 
         tbl = ins.tbl
@@ -1036,35 +1030,11 @@ class Engine:
         if meta:
             meta.get("tblproperties", {}).pop("COLUMN_STATS_ACCURATE", None)
         overwrite = ins.overwrite
-        df = self.spark.sql(self.translate_query(ins.body))
-
-        target = self.spark.table(tbl)
-        tcols = target.columns
-        ttypes = dict(zip(tcols, [f.dataType.simpleString()
-                                  for f in target.schema.fields]))
+        src = self.spark.sql(self.translate_query(ins.body))
+        ttypes = {f.name: f.dataType.simpleString()
+                  for f in self.spark.table(tbl).schema.fields}
         pcols = partitions.partition_columns(self, tbl)
-        # a static value may be an Impala expression (char casts…)
-        static = {k: dialect.rewrite_char_casts(v)
-                  for k, v in ins.static.items()}
-        # columns the SELECT supplies, in order; with a column
-        # permutation the dynamic partition keys append after the
-        # listed columns (InsertStmt.java permutation rules)
-        if ins.cols is not None:
-            listed = ins.cols + ins.dyn
-        else:
-            listed = [c.lower() for c in tcols if c.lower() not in static]
-        if listed:
-            df = df.toDF(*listed)
-        out = []
-        for c in tcols:
-            if c.lower() in static:
-                out.append(F.expr(static[c.lower()])
-                           .cast(ttypes[c]).alias(c))
-            elif c.lower() in listed:
-                out.append(F.col(c.lower()).cast(ttypes[c]).alias(c))
-            else:
-                out.append(F.lit(None).cast(ttypes[c]).alias(c))
-        final = df.select(out)
+        final = ins.project(src, list(ttypes.items()))
         # serialization.null.format tables: writing the null-format
         # string stores NULL (the reference's text serde round-trip;
         # nullformat_custom carries 'xyz')
@@ -1087,27 +1057,9 @@ class Engine:
                 key=lambda r: [(r[c] is not None, r[c] != r[c], r[c])
                                for c in pcols])
 
-            def fmt(v):
-                # NULL and '' partition keys land in Hive's default
-                # partition; string values print URL-escaped exactly
-                # as they name partition directories (Hive
-                # FileUtils.escapePathName, mirrored by the
-                # reference's summary)
-                if v is None or v == "":
-                    return "__HIVE_DEFAULT_PARTITION__"
-                if v != v:
-                    return "NaN"   # Spark's directory spelling
-                if isinstance(v, str):
-                    return partitions.escape_value(v)
-                if isinstance(v, float):
-                    # partition dirs print floats shortest-form
-                    # (float_col=0, not 0.0)
-                    return f"{v:g}"
-                return str(v)
-
             # an insert that modified no partition prints nothing
             # (the reference's summary is the per-partition map)
-            rows = [("/".join(f"{c}={fmt(r[c])}" for c in pcols)
+            rows = [(partitions.summary_suffix({c: r[c] for c in pcols})
                      + f"/: {r['count']}",)
                     for r in counts]
             # modified partitions lose their incremental-stats cover
@@ -1236,10 +1188,12 @@ class Engine:
         src = self._resolve_fs_path(path.strip())
         dest = self._table_location(table)
         if partition:
-            for item in partition.split(","):
-                k, v = item.split("=", 1)
-                dest = os.path.join(
-                    dest, f"{k.strip()}={v.strip().strip(chr(39))}")
+            # the directory names the keys in the table's order (a
+            # temp-view-backed table names none: the spec's order)
+            spec = partitions.fold_spec(self, partition)
+            dest = os.path.join(dest, partitions.spec_suffix(
+                spec, partitions.partition_columns(self, table)
+                or list(spec)))
         os.makedirs(dest, exist_ok=True)
         if os.path.isdir(src):
             files = sorted(
@@ -1275,7 +1229,7 @@ class Engine:
             # directory once the partition is registered
             try:
                 self.spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS "
-                               f"PARTITION ({partition})")
+                               f"PARTITION ({partitions.spec_sql(spec)})")
             except AnalysisException:  # path-discovered tables
                 pass
         try:

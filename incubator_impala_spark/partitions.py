@@ -116,13 +116,82 @@ def list_partitions(engine, tbl: str) -> list[tuple[str, dict]]:
 
 
 def parse_suffix(suffix: str) -> dict:
-    """`k=v/k2=v2` directory spelling → {col: value-or-None}."""
+    """`k=v/k2=v2` directory spelling → {col: value-or-None}; {} for
+    the unpartitioned ''."""
     kv = {}
-    for item in suffix.split("/"):
+    for item in filter(None, suffix.split("/")):
         k, v = item.split("=", 1)
         v = urllib.parse.unquote(v)
         kv[k] = None if v == _NULL_DIR else v
     return kv
+
+
+def parse_spec(spec: str | None) -> dict:
+    """`k=v, k2, ...` partition spec (InsertStmt, LoadDataStmt, ALTER
+    TABLE ... PARTITION; an UPDATE's SET list and ALTER TABLE ... SET
+    COLUMN STATS' property list have its shape) → {key:
+    value text, None for a key without a value (a dynamic key)}; keys
+    lower-case, backticks dropped."""
+    kv = {}
+    for item in sqlscan.split_top(spec or ""):
+        k, eq, v = item.partition("=")
+        kv[k.strip().strip("`").lower()] = v.strip() if eq else None
+    return kv
+
+
+def fold_spec(engine, spec: str) -> dict:
+    """A `k=v, ...` partition spec whose values are constant
+    expressions (PartitionSpec) → {key: SQL literal}: a literal stays
+    as written, an expression folds through Spark."""
+    kv = parse_spec(spec)
+    for k, v in kv.items():
+        if v is None:
+            raise ValueError(
+                f"Syntax error: no value for partition key '{k}'")
+        if re.fullmatch(r"-?\d+(\.\d+)?|'(?:[^']|'')*'|NULL", v,
+                        re.IGNORECASE):
+            continue
+        x = engine.spark.sql(
+            "SELECT " + engine.translate_query(v)).collect()[0][0]
+        kv[k] = "NULL" if x is None else str(x) \
+            if isinstance(x, (bool, int, float, Decimal)) \
+            else "'" + str(x).replace("'", "''") + "'"
+    return kv
+
+
+def spec_sql(kv: dict) -> str:
+    """A folded spec (fold_spec) as the inside of Spark's PARTITION
+    clause."""
+    return ", ".join(f"`{k}`={v}" for k, v in kv.items())
+
+
+_LITERAL = re.compile(
+    r"""'(?P<sq>(?:[^'\\]|''|\\.)*)'|"(?P<dq>(?:[^"\\]|""|\\.)*)"|"""
+    r"[-+]?(?:\d+\.?\d*|\.\d+)(?:e[-+]?\d+)?|true|false|(?P<null>null)",
+    re.IGNORECASE | re.DOTALL)
+
+
+def literal(text: str) -> str | None:
+    """A partition value written as a literal → the value its
+    directory spells (None for NULL); ValueError for an expression,
+    whose value only Spark knows."""
+    m = _LITERAL.fullmatch(text.strip())
+    if m is None:
+        raise ValueError(f"not a literal partition value: {text}")
+    if m.group("null"):
+        return None
+    s = m.group("sq") if m.group("sq") is not None else m.group("dq")
+    if s is None:       # a number or a boolean
+        return m.group().lower()
+    q = m.group()[0]
+    return re.sub(r"\\(.)", r"\1", s.replace(q * 2, q))
+
+
+def spec_suffix(spec: dict, keys: list[str]) -> str:
+    """The directory of the partition a spec of literal values names
+    (parse_spec), its keys in the table's order `keys`."""
+    return part_suffix({k: literal(spec[k.lower()]) for k in keys
+                        if k.lower() in spec})
 
 
 def _translate_pred(spec: str) -> str:
@@ -184,6 +253,15 @@ def part_suffix(kv: dict) -> str:
     return "/".join(
         f"{k}={_NULL_DIR if v in (None, '') else escape_value(str(v))}"
         for k, v in kv.items())
+
+
+def summary_suffix(kv: dict) -> str:
+    """The INSERT summary's name of a written partition ({col: typed
+    value}): its directory spelling, a float key shortest-form (`f=0`
+    where the directory is `f=0.0`), as impala-shell prints it."""
+    return part_suffix({k: ("NaN" if v != v else f"{v:g}")
+                        if isinstance(v, float) else v
+                        for k, v in kv.items()})
 
 
 def drop_spec(kv: dict) -> str:

@@ -28,16 +28,20 @@ import re
 import struct
 
 from py4j.protocol import Py4JJavaError
-from pyarrow.lib import ArrowException
 from pyspark.errors import PySparkException
 
 from incubator_impala_spark import sqlscan
 from incubator_impala_spark.session import rows_df
 
-# the typed failure surfaces of a corrupt-file probe: pyarrow decode
-# errors (ArrowInvalid/ArrowIOError subclass ArrowException) and
-# filesystem errors
-_DECODE_ERR = (ArrowException, OSError)
+
+def _decode_err() -> tuple:
+    """The typed failure surfaces of a corrupt-file probe: pyarrow
+    decode errors (ArrowInvalid/ArrowIOError subclass ArrowException)
+    and filesystem errors. pyarrow is imported when a probe fails, so
+    importing the engine does not load it."""
+    from pyarrow.lib import ArrowException
+
+    return ArrowException, OSError
 
 # ---------------------------------------------------------------------------
 # thrift compact-protocol reader (just enough for parquet PageHeader)
@@ -254,7 +258,7 @@ def check_footer(path: str, display: str) -> str | None:
 
     try:
         pq.ParquetFile(path).metadata
-    except _DECODE_ERR as exc:
+    except _decode_err() as exc:
         return (f"File '{display}' of length {size} bytes has invalid "
                 f"file metadata at file offset {size - 8 - flen}, "
                 f"Error = couldn't deserialize thrift msg: {exc}")
@@ -416,7 +420,7 @@ def check_decodable(path: str, display: str) -> str | None:
     try:
         pf.read()
         return None
-    except _DECODE_ERR:
+    except _decode_err():
         kind = "dictionary-encoded value" \
             if cm.dictionary_page_offset is not None else "value"
         return (f"File '{display}' is corrupt: error decoding {kind} "
@@ -546,7 +550,7 @@ def register_parquet_check(engine, name: str, paths: list[str],
             # continue contract returns the decodable rows, so the
             # view materializes from the page-decoded data
             dfs.append(spark.createDataFrame(t.to_pandas(), schema))
-        except (*_DECODE_ERR, ValueError, TypeError,
+        except (*_decode_err(), ValueError, TypeError,
                 PySparkException, Py4JJavaError):
             pass  # continue-mode file skip
     if dfs:

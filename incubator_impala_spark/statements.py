@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from incubator_impala_spark import (
     acid, altertable, avro_stale, dialect, grants, mixedformat, namespaces,
@@ -44,7 +45,10 @@ class Stmt:
     target: str | None = None
     record: stats.TableRecord | None = None
     resolved: str = ""   # `text`, engine-owned database names resolved
+    before: str = ""     # what precedes the head's keywords in `resolved`
     tail: str = ""       # what follows the head's keywords in `resolved`
+    after: str = ""      # what follows the head (and target) in `resolved`
+    name: str | None = None  # `target`, resolved
 
     def resolve(self, resolve=str, text: str | None = None) -> None:
         """Set `text` and resolve it once with `resolve` (the engine's
@@ -53,10 +57,13 @@ class Stmt:
         the rest."""
         if text is not None:
             self.text = text
+        self.name = self.target and resolve(self.target)
         s, e = self.head.span("kw")
-        self.tail = resolve(self.text[e:])
-        self.resolved = (resolve(self.text[:s]) if s else "") \
-            + self.text[s:e] + self.tail
+        h = self.head.end()
+        self.before = resolve(self.text[:s]) if s else ""
+        self.after = resolve(self.text[h:])
+        self.tail = (resolve(self.text[e:h]) if h > e else "") + self.after
+        self.resolved = self.before + self.text[s:e] + self.tail
 
     def group(self, name: str) -> str | None:
         """A group of the head match, sliced from `text`; None when
@@ -171,7 +178,7 @@ def _create_drop(inner):
     def run(engine, stmt, m):
         if stmt.target is None:
             return inner(engine, stmt)
-        name = engine.ns.resolve(stmt.target).replace("`", "")
+        name = stmt.name.replace("`", "")
         create = stmt.kind.startswith("create")
         if create and stmt.group("ine"):
             try:
@@ -220,12 +227,10 @@ def _first(*handlers):
     return run
 
 
-# INSERT INTO/OVERWRITE with optional column permutation and PARTITION
-# clause (reference InsertStmt.java), what follows INSERT
+# what follows an INSERT's target: the optional column permutation and
+# PARTITION clause, then the source (reference InsertStmt.java)
 _INSERT_PARTS = re.compile(
-    r"\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
+    r"\s*(?:\((?P<cols>[^)]*)\)\s*)?"
     # static partition values may be expressions with nested calls —
     # two paren levels covers cast('x' as char(5))
     r"(?:PARTITION\s*\((?P<part>(?:[^()]|\((?:[^()]|\([^()]*\))*\))*)\)"
@@ -257,43 +262,61 @@ class Insert:
     dyn: list
     body: str
 
+    def project(self, src, target: list):
+        """The source's rows as the target's columns (`target`, its
+        (name, type) pairs in table order), by InsertStmt's rules, for
+        every writer: the source gives the permutation's columns, then
+        the dynamic partition keys; without a permutation, every column
+        no static value sets, in table order. A source that gives more
+        or fewer columns is an error. A static value is an Impala
+        expression; a column nothing gives is NULL."""
+        static = {k: dialect.rewrite_char_casts(v)
+                  for k, v in self.static.items()}
+        if self.cols is not None:
+            listed = self.cols + self.dyn
+        else:
+            listed = [c.lower() for c, _ in target
+                      if c.lower() not in static]
+        if listed:
+            src = src.toDF(*listed)
+        out = []
+        for c, ty in target:
+            k = c.lower()
+            col = (F.expr(static[k]) if k in static
+                   else F.col(k) if k in listed else F.lit(None))
+            out.append(col.cast(ty).alias(c))
+        return src.select(out)
 
-def parse_insert(text: str) -> Insert | None:
-    """The parts of an INSERT, parsed with plan hints stripped (the
-    reference allows /*+ clustered,shuffle */ between the target and
-    the select); None when it does not parse."""
-    text = dialect.strip_plan_hints(text)
-    at = _insert_at(text) or len(text) - len(text.lstrip())
-    h = _INSERT_HEAD.match(sqlscan.shadow(text, idents=False), at)
-    m = h and _INSERT_PARTS.match(text, h.end("kw"))
+
+def parse_insert(stmt: Stmt) -> Insert | None:
+    """The parts of an INSERT (a classified `Stmt`) from what follows
+    its target, parsed with plan hints stripped (the reference allows
+    /*+ clustered,shuffle */ between the target and the select); None
+    when it does not parse."""
+    m = stmt.name and _INSERT_PARTS.match(
+        dialect.strip_plan_hints(stmt.after))
     if not m:
         return None
-    static, dyn = {}, []
-    for item in sqlscan.split_top(m.group("part") or ""):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            static[k.strip().strip("`").lower()] = v.strip()
-        else:
-            dyn.append(item.strip("`").lower())
+    spec = partitions.parse_spec(m.group("part"))
     cols = m.group("cols")
     if cols is not None:    # () is a valid EMPTY permutation
-        cols = [c for c in (x.strip().strip("`").lower()
-                            for x in cols.split(",")) if c]
+        cols = [c.strip("`").lower() for c in sqlscan.split_top(cols)]
     body = m.group("body") or "select 1 as __dummy__"
     if re.match(r"(?i)\s*values\b", body):
         body = "select * from (" + body + ") __v"
-    cte = text[:at].strip()
+    cte = dialect.strip_plan_hints(stmt.before).strip()
     if cte:
         # `with t1 as (..) insert .. [with t2 as (..)] select` — fold
         # the prefix CTEs into the body's WITH list
         bm = _WITH.match(body)
         body = cte + (", " + body[bm.end():] if bm else " " + body)
-    return Insert(m.group("tbl"), m.group("mode").upper() == "OVERWRITE",
-                  cols, static, dyn, body)
+    return Insert(stmt.name, stmt.group("mode").upper() == "OVERWRITE",
+                  cols, {k: v for k, v in spec.items() if v is not None},
+                  [k for k, v in spec.items() if v is None], body)
 
 
 def _insert(engine, stmt, m):
-    ins = parse_insert(stmt.resolved)
+    ins = parse_insert(stmt)
     if ins is None:
         return None
     if stmt.acid is not None:
@@ -329,8 +352,11 @@ class Row:
         return out
 
 
-# a target table: backticked or bare parts, dot-separated
-_NAME = r"(?P<target>(?:`[^`]*`|\w+)(?:\.(?:`[^`]*`|\w+))*)"
+# a target table: backticked or bare parts, dot-separated; a parts
+# pattern skips it (`_SKIP`), its handler takes `Stmt.name`
+_TARGET = r"(?:`[^`]*`|\w+)(?:\.(?:`[^`]*`|\w+))*"
+_NAME = f"(?P<target>{_TARGET})"
+_SKIP = r"\s+" + _TARGET
 _IF = r"\s+(?P<ine>IF\s+(?:NOT\s+)?EXISTS\s+)?" + _NAME
 _T = r"\s+" + _NAME
 _TABLE = r"\s+(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$"
@@ -376,8 +402,7 @@ def _auth(name: str, parts: str):
 
 
 _INSERT_ROW = _row("insert", r"INSERT\b", _insert, READ,
-                   r"\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?" + _NAME)
-_INSERT_HEAD = _INSERT_ROW.head
+                   r"\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?" + _NAME)
 
 ROWS = [
     _row("set_all", r"SET\s+ALL\s*;?\s*$", lambda e, s, m: e._set_all()),
@@ -449,20 +474,19 @@ ROWS = [
     # COMPUTE [INCREMENTAL] STATS t [(col, ...)] [PARTITION (spec)]
     # (ComputeStatsStmt.java)
     _row("compute_stats", r"COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\b",
-         lambda e, s, m: e._compute_stats(m, bool(s.group("inc"))),
-         WRITE, _T, parts=r"\s+(?P<tbl>`[\w.]+`|[A-Za-z_][\w.]*)\s*"
-               r"(?:\((?P<cols>[^)]*)\)\s*)?"
+         lambda e, s, m: e._compute_stats(s, m), WRITE, _T,
+         parts=_SKIP + r"\s*(?:\((?P<cols>[^)]*)\)\s*)?"
                r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?;?\s*$",
          spark=_spell("ANALYZE TABLE {0} COMPUTE STATISTICS "
                       "FOR ALL COLUMNS")),
     _row("drop_stats", r"DROP\s+(?:INCREMENTAL\s+)?STATS\b",
-         lambda e, s, m: e._drop_stats(m), DDL, _T,
-         parts=r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s*(?:PARTITION\s*\("
-               r"(?P<part>[^)]*)\)\s*)?;?\s*$", acid=True),
-    _row("truncate", r"TRUNCATE\b", lambda e, s, m: e._truncate(m), WRITE,
-         r"(?:\s+TABLE)?\s+(?:IF\s+EXISTS\s+)?" + _NAME,
-         parts=r"\s+(?:TABLE\s+)?(?P<ife>IF\s+EXISTS\s+)?"
-               r"(?P<tbl>[A-Za-z_][\w.]*)\s*;?\s*$", acid=True),
+         lambda e, s, m: e._drop_stats(s, m), DDL, _T,
+         parts=_SKIP + r"\s*(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?"
+               r";?\s*$", acid=True),
+    _row("truncate", r"TRUNCATE\b", lambda e, s, m: e._truncate(s, m),
+         WRITE, r"(?:\s+TABLE)?\s+(?:IF\s+EXISTS\s+)?" + _NAME,
+         parts=r"(?:\s+TABLE)?(?P<ife>\s+IF\s+EXISTS)?" + _SKIP
+               + r"\s*;?\s*$", acid=True),
     _INSERT_ROW,
     _row("refresh", r"(?:REFRESH|(?P<inv>INVALIDATE\s+METADATA))\b",
          lambda e, s, m: avro_stale.refresh(e, s), DDL, _T, acid=True,
@@ -470,12 +494,12 @@ ROWS = [
     # LOAD DATA INPATH 'p' [OVERWRITE] INTO TABLE t [PARTITION (k=v,..)]
     # (LoadDataStmt.java)
     _row("load", r"LOAD\b", lambda e, s, m: e._load_data(
-        m.group("path"), m.group("tbl"), overwrite=bool(m.group("over")),
+        m.group("path"), s.name, overwrite=bool(m.group("over")),
         partition=m.group("part")), WRITE,
-        parts=r"\s+DATA\s+INPATH\s+'(?P<path>[^']+)'\s+"
-              r"(?P<over>OVERWRITE\s+)?INTO\s+TABLE\s+"
-              r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
-              r"(?:PARTITION\s*\((?P<part>[^)]*)\))?\s*;?\s*$"),
+        r"\s+DATA\s+INPATH\s+'[^']*'\s+(?:OVERWRITE\s+)?INTO\s+TABLE"
+        + _T, parts=r"\s+DATA\s+INPATH\s+'(?P<path>[^']+)'\s+"
+                    r"(?P<over>OVERWRITE\s+)?INTO\s+TABLE" + _SKIP
+                    + r"\s*(?:PARTITION\s*\((?P<part>[^)]*)\))?\s*;?\s*$"),
     _row("create_role", r"CREATE\s+ROLE\b",
          **_auth("create_role", grants.ROLE)),
     _row("drop_role", r"DROP\s+ROLE\b", **_auth("drop_role", grants.ROLE)),

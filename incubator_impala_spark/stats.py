@@ -26,7 +26,6 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -286,15 +285,13 @@ def refresh_incremental(engine, tbl: str, pcols: list) -> None:
     if not rec.cover:
         rec.cols.clear()
         return
+    from incubator_impala_spark.partitions import parse_suffix
+
     preds = []
     for suffix in rec.cover:
         conj = []
-        for k, v in (x.split("=", 1) for x in suffix.split("/")):
-            # directory spellings are URL-escaped and NULL is
-            # __HIVE_DEFAULT_PARTITION__ — compare against the
-            # real column values
-            v = unquote(v)
-            if v == "__HIVE_DEFAULT_PARTITION__":
+        for k, v in parse_suffix(suffix).items():
+            if v is None:
                 conj.append(f"`{k}` IS NULL")
             else:
                 esc = v.replace("\\", "\\\\").replace("'", "\\'")

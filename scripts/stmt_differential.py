@@ -3,12 +3,15 @@
 issues against two checkouts and compare rows and error texts.
 
     # 1. record every top-level Engine.sql / Engine.hive_sql text the
-    #    tests issue, with its test file and engine
+    #    tests issue, with its test file and engine; the tests' temporary
+    #    files (staged Avro, mixed-format and LOAD DATA inputs the texts
+    #    point at) are kept in texts.basetemp/ beside the output
     python scripts/stmt_differential.py record --out texts.jsonl -- \\
         tests/ -q -p no:cacheprovider
     # 2. replay them per test file, in a fresh session, on each checkout
     #    (run each from a scratch directory: tables land in its
-    #    spark-warehouse)
+    #    spark-warehouse; a replay moves the LOAD DATA sources it
+    #    loads, so restore texts.basetemp/ from a copy between the two)
     python scripts/stmt_differential.py replay --repo OLD \\
         --texts texts.jsonl --out old.jsonl
     python scripts/stmt_differential.py replay --repo NEW \\
@@ -86,7 +89,9 @@ class Recorder:
 def record(args) -> int:
     import pytest
 
-    return pytest.main(args.pytest, plugins=[Recorder(args.out)])
+    base = os.path.splitext(os.path.abspath(args.out))[0] + ".basetemp"
+    return pytest.main(args.pytest + ["--basetemp", base],
+                       plugins=[Recorder(args.out)])
 
 
 # what differs from run to run: JVM object and expression ids, file

@@ -217,6 +217,34 @@ def test_compaction_preserves_open_write_ids(acid_engine):
         eng.ns.current = None
 
 
+@pytest.mark.parametrize("props", [
+    "'transactional'='true'",
+    "'transactional'='true', 'transactional_properties'='insert_only'",
+])
+def test_repeated_compaction_keeps_row_count(acid_engine, props):
+    """A second major compaction with no write in between names the
+    same base_<hw>_v<vtxn> directory; it must rewrite that base's
+    files, not add copies beside them that the scan reads twice."""
+    eng = acid_engine
+    db = "qacid_compacttwice"
+    eng.sql(f"drop database if exists {db} cascade")
+    eng.sql(f"create database {db}")
+    eng.ns.current = db
+    try:
+        eng.sql("create table twice (i int) stored as orc "
+                f"tblproperties({props})")
+        eng.hive_sql("insert into twice values (1), (2)")
+        for _ in range(2):
+            eng.hive_sql("alter table twice compact 'major' and wait")
+            eng.sql("refresh twice")
+            got = sorted(r["i"] for r in
+                         eng.sql("select i from twice").collect())
+            assert got == [1, 2]
+    finally:
+        eng.sql(f"drop database if exists {db} cascade")
+        eng.ns.current = None
+
+
 def test_full_acid_ctas_rejected_engine_side(acid_engine):
     """CTAS into a full-ACID table is an INSERT under analysis; the
     reference rejects it (InsertStmt.ensureTableNotFullAcid) and no

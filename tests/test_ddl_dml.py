@@ -253,6 +253,39 @@ def test_load_data_unpartitioned(spark, engine, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ld_flat")
 
 
+def test_partition_spec_folds_constant_expressions(spark, engine, tmp_path):
+    """A partition spec value may be a constant expression
+    (PartitionSpec): LOAD DATA and ADD PARTITION of an Avro-registered
+    table fold it to its value; a key with no value is an error."""
+    from incubator_impala_spark import avro_stale
+
+    spark.sql("DROP TABLE IF EXISTS ld_fold")
+    spark.sql("CREATE TABLE ld_fold (x INT, p STRING) USING parquet "
+              "PARTITIONED BY (p)")
+    try:
+        staged = str(tmp_path / "fold")
+        spark.range(3).selectExpr("CAST(id AS INT) AS x").write.parquet(staged)
+        engine.sql(f"LOAD DATA INPATH '{staged}' INTO TABLE ld_fold "
+                   "PARTITION (p=1+1)")
+        assert [tuple(r) for r in spark.sql(
+            "SELECT p, count(*) FROM ld_fold GROUP BY p").collect()] == [
+            ("2", 3)]
+        schema = tmp_path / "av.json"
+        schema.write_text('{"type": "record", "name": "r", "fields": '
+                          '[{"name": "a", "type": "int"}]}')
+        engine.sql("CREATE TABLE ld_av (a INT) PARTITIONED BY (y INT) "
+                   f"TBLPROPERTIES ('avro.schema.url'='{schema}')")
+        engine.sql("ALTER TABLE ld_av ADD PARTITION (y=1+1) "
+                   f"LOCATION '{tmp_path}/y2'")
+        info = engine.avro_stale[avro_stale._key("ld_av")]
+        assert info["partitions"] == [({"y": "2"}, f"{tmp_path}/y2")]
+        with pytest.raises(ValueError, match="no value for partition key"):
+            engine.sql("ALTER TABLE ld_av ADD PARTITION (y)")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ld_fold")
+        engine.avro_stale.pop(avro_stale._key("ld_av"), None)
+
+
 def test_alter_table_add_partition_visibility(spark, engine):
     spark.sql("DROP TABLE IF EXISTS ap_pt")
     spark.sql(

@@ -10,10 +10,16 @@
   it (CREATE, INSERT, and DROP TABLE of an insert-only ACID table).
 - The target's record picks the ACID variant of INSERT, TRUNCATE,
   REFRESH, ALTER TABLE, DROP STATS and DROP TABLE.
+- The write rows (INSERT, TRUNCATE, COMPUTE STATS, DROP STATS) take the
+  classified target, so a backticked one runs as a bare one does.
+- Importing the engine does not load pyarrow.
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import types
 
 import pytest
@@ -83,14 +89,15 @@ def test_classify_record_and_parts():
     assert statements.classify(eng, "SELECT * FROM t").record is None
     inc = statements.classify(eng, "COMPUTE INCREMENTAL STATS t")
     assert inc.group("inc") and inc.group("ext") is None
-    ins = statements.parse_insert(
-        "WITH c AS (SELECT 1 a) INSERT INTO t (b) PARTITION (p=1, q) "
-        "/* +noclustered */ VALUES (2)")
+    ins = statements.parse_insert(statements.classify(
+        eng, "WITH c AS (SELECT 1 a) INSERT INTO t (b) PARTITION (p=1, q) "
+        "/* +noclustered */ VALUES (2)"))
     assert (ins.tbl, ins.overwrite, ins.cols, ins.static, ins.dyn) == (
         "t", False, ["b"], {"p": "1"}, ["q"])
     assert ins.body == ("WITH c AS (SELECT 1 a) select * from "
                         "(VALUES (2)) __v")
-    assert statements.parse_insert("INSERT OVERWRITE t").body == \
+    assert statements.parse_insert(statements.classify(
+        eng, "INSERT OVERWRITE t")).body == \
         "select 1 as __dummy__"
 
 
@@ -341,3 +348,36 @@ def test_with_led_insert_resolves_its_with_list(eng, use, src):
         (": 2",)]
     eng.sql("USE default")
     assert sorted(_rows(eng, "SELECT a FROM stc_t")) == [(7,), (8,)]
+
+
+# ---------------------------------------------------------------------
+# backticked write targets
+# ---------------------------------------------------------------------
+
+@pytest.mark.parametrize("text, expected", [
+    ("INSERT INTO `stc_db`.`stc_t` VALUES (1)", [(": 1",)]),
+    ("INSERT INTO `stc_t` VALUES (1)", [(": 1",)]),
+    ("INSERT INTO `stc_acid` VALUES (1)", [("Inserted 1 row(s)",)]),
+    ("TRUNCATE TABLE `stc_t`", [("Table has been truncated.",)]),
+    ("COMPUTE STATS `stc_db`.`stc_t`",
+     [("Updated 1 partition(s) and 1 column(s).",)]),
+    ("DROP STATS `stc_t`", [("Stats have been dropped.",)]),
+])
+def test_backticked_write_targets(eng, text, expected):
+    _reset(eng)
+    eng.sql("CREATE DATABASE stc_db")
+    for t in ("stc_db.stc_t", "stc_t"):
+        eng.sql(f"CREATE TABLE {t} (a INT) STORED AS PARQUET")
+    eng.sql(f"CREATE TABLE stc_acid (a INT) STORED AS PARQUET {_ACID}")
+    assert _rows(eng, text) == expected
+
+
+def test_importing_the_engine_does_not_load_pyarrow():
+    # pyarrow loads when a scan-error probe fails, not with the engine
+    code = ("import sys, incubator_impala_spark.engine; "
+            "print('pyarrow' in sys.modules)")
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True, cwd=os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))))
+    assert out.stdout.strip() == "False"

@@ -12,7 +12,8 @@ STATS:
 - a partitioned insert-only ACID table's key columns get the values a
   plain table's get, from the partition list, and its SHOW PARTITIONS,
   SHOW TABLE STATS and COMPUTE [INCREMENTAL] STATS summaries match the
-  plain table's;
+  plain table's, string keys whose directory names are escaped
+  included;
 - partitions list in typed key order, NaN above every number and
   NULL last, for ACID and plain tables alike;
 - DROP DATABASE ... CASCADE drops an ACID table with its state, and
@@ -363,6 +364,32 @@ def test_escaped_partition_keys_keep_one_spelling(eng):
         assert sorted(p["#Rows"] for y, p in _part_stats(eng, "sst_esc")
                       .items() if y != "Total") == [1, 2]
     eng.sql("DROP TABLE sst_esc")
+
+
+def test_acid_escaped_partition_keys_match_plain_table(eng):
+    # an ACID table names the directories of `a/b` (static) and `c:d`
+    # (dynamic) `y=a%2Fb` and `y=c%3Ad`, as a plain table does, and its
+    # view reads the keys back unescaped
+    cols = "(x INT) PARTITIONED BY (y STRING) STORED AS PARQUET"
+    _recreate(eng, "sst_acide", f"{cols} {_ACID}")
+    _recreate(eng, "sst_flate", cols)
+    out = {}
+    for tbl in ("sst_acide", "sst_flate"):
+        eng.sql(f"INSERT INTO {tbl} PARTITION (y='a/b') VALUES (1)")
+        eng.sql(f"INSERT INTO {tbl} PARTITION (y) VALUES (2, 'c:d')")
+        out[tbl] = (
+            sorted(tuple(r) for r in
+                   eng.sql(f"SELECT x, y FROM {tbl}").collect()),
+            _listing(eng, f"SHOW PARTITIONS {tbl}"),
+            eng.sql(f"COMPUTE INCREMENTAL STATS {tbl}").collect()[0][0],
+            _listing(eng, f"SHOW PARTITIONS {tbl}"))
+    assert out["sst_acide"][0] == [(1, "a/b"), (2, "c:d")]
+    assert out["sst_acide"][2] == "Updated 2 partition(s) and 1 column(s)."
+    assert [r["Incremental stats"] for r in out["sst_acide"][3]][:2] == [
+        "true", "true"]
+    assert out["sst_acide"] == out["sst_flate"]
+    for tbl in ("sst_acide", "sst_flate"):
+        eng.sql(f"DROP TABLE {tbl}")
 
 
 def test_insert_into_a_float_partition_drops_its_incremental_cover(eng):
