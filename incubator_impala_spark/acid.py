@@ -794,27 +794,16 @@ def compact(engine, t: AcidTable, suffix: str | None) -> None:
 # statement grammar
 # ---------------------------------------------------------------------
 
-# What follows a statement head (statements.py matches the heads)
-_TBLPROPS = re.compile(r"(?is)\bTBLPROPERTIES\s*\((?P<kv>[^)]*)\)")
-# CREATE [EXTERNAL] TABLE
-_CREATE_TBL = re.compile(
-    r"(?is)\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[^()]*(?:\([^()]*\)[^()]*)*)\)\s*)?"
-    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-    r"(?:CLUSTERED\s+BY[^)]*\)\s*INTO\s+\d+\s+BUCKETS\s*)?"
-    r"(?:ROW\s+FORMAT\s+[^;]*?)?"
-    r"(?:STORED\s+AS\s+(?P<fmt>\w+)\s*)?"
-    r"(?:LOCATION\s+'[^']*'\s*)?"
-    r"(?:TBLPROPERTIES\s*\([^)]*\)\s*)?"
-    r"(?:(?P<ctas>AS\b[\s\S]*))?;?\s*$")
-# ALTER TABLE (Hive side)
+# What follows a statement head (statements.py matches the heads and
+# reads a CREATE TABLE). ALTER TABLE (Hive side), matched with
+# sqlscan.match:
 _HIVE_SET_PROPS = re.compile(
     r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
     r"SET\s+TBLPROPERTIES\s*\((?P<kv>[^)]*)\)\s*;?\s*$")
 _HIVE_COMPACT = re.compile(
     r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
     r"(?:PARTITION\s*\((?P<spec>[^)]*)\)\s*)?"
-    r"COMPACT\s+'(?P<kind>major|minor)'(?:\s+AND\s+WAIT)?\s*;?\s*$")
+    r"COMPACT\s+'(?P<kind>[^']*)'(?:\s+AND\s+WAIT)?\s*;?\s*$")
 _ADD_PART = re.compile(
     r"(?is)\s+(?P<tbl>[A-Za-z_][\w.]*)\s+"
     r"ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION\s*"
@@ -829,41 +818,33 @@ _HIVE_UPDATE = re.compile(
     r"(?:\s+WHERE\s+(?P<where>[\s\S]*?))?\s*;?\s*$")
 
 
-def _props_of(sql_text: str) -> dict:
-    m = _TBLPROPS.search(sql_text)
-    if not m:
-        return {}
-    props = {}
-    for item in re.findall(r"'([^']*)'\s*=\s*'([^']*)'",
-                           m.group("kv")):
-        props[item[0].lower()] = item[1].lower()
-    return props
+def _transactional(engine, stmt) -> tuple | None:
+    """(its parts, insert_only) when a CREATE TABLE (not LIKE) makes
+    an ACID table: TBLPROPERTIES ('transactional'='true'), or no
+    'transactional'='false' under DEFAULT_TRANSACTIONAL_TYPE
+    insert_only."""
+    from incubator_impala_spark.statements import parse_create
 
-
-def _is_transactional(engine, sql_text: str) -> tuple | None:
-    """(insert_only: bool) when the CREATE makes an ACID table."""
-    props = _props_of(sql_text)
-    if props.get("transactional") == "true":
-        return (props.get("transactional_properties")
-                == "insert_only",)
-    if props.get("transactional") == "false":
+    c = parse_create(stmt)
+    if c is None or c.like or c.like_fmt:
         return None
-    if engine.default_transactional_type == "insert_only":
-        return (True,)
+    props = {k: v.lower() for k, v in c.props.items()}
+    flag = props.get("transactional")
+    if flag == "true":
+        return c, props.get("transactional_properties") == "insert_only"
+    if flag != "false" and engine.default_transactional_type == "insert_only":
+        return c, True
     return None
 
 
-def _parse_cols(text: str | None) -> list:
-    cols = []
-    for item in re.split(r",(?![^()]*\))", text or ""):
-        toks = item.split()
-        if not toks:
-            continue
-        name = toks[0].strip("`").lower()
-        ty = " ".join(toks[1:]).lower() or "string"
-        ty = re.sub(r"\s+comment\s+'[^']*'", "", ty).strip()
-        cols.append((name, _SPARK_TYPES.get(ty, ty)))
-    return cols
+def _cols(cols: list | None) -> list:
+    """(name, Spark type) of parsed column definitions; a partition
+    column named without a type is a string."""
+    out = []
+    for name, ty, _ in cols or []:
+        ty = (ty or "string").lower()
+        out.append((name.lower(), _SPARK_TYPES.get(ty, ty)))
+    return out
 
 
 
@@ -871,9 +852,7 @@ def _register(engine, display: str, phys: str, db: str | None,
               cols: list, pcols: list, insert_only: bool, fmt: str,
               location: str | None = None,
               fixture: bool = False) -> AcidTable:
-    loc = location or os.path.join(
-        engine._warehouse_dir(), "managed",
-        f"{db or 'default'}.db", phys.split("__")[-1])
+    loc = location or _managed_dir(engine, db, phys)
     os.makedirs(loc, exist_ok=True)
     t = AcidTable(display=display, phys=phys, db=db, location=loc,
                   cols=cols, pcols=pcols, insert_only=insert_only,
@@ -890,6 +869,20 @@ def _register(engine, display: str, phys: str, db: str | None,
                      [display, display.split(".")[-1]],
                      [c for c, _ in cols + pcols])
     return t
+
+
+def _managed_dir(engine, db: str | None, phys: str) -> str:
+    return os.path.join(engine._warehouse_dir(), "managed",
+                        f"{db or 'default'}.db", phys.split("__")[-1])
+
+
+def clear_orphan(engine, name: str) -> None:
+    """Remove the directory an ACID table named `name` (resolved)
+    would occupy, for a DROP TABLE of a name no record holds: a table
+    an earlier session made leaves its base and delta directories
+    there, and a table re-created under the name would read them."""
+    _, phys, db = _split_name(engine, name)
+    shutil.rmtree(_managed_dir(engine, db, phys), ignore_errors=True)
 
 
 def _split_name(engine, raw: str) -> tuple:
@@ -916,9 +909,8 @@ def handle(engine, stmt, ins=None):
     COMPUTE STATS are the plain tables' (partitions.py,
     Engine._compute_stats) over the snapshot's files."""
     if stmt.kind == "create_table":
-        flav = _is_transactional(engine, stmt.tail)
-        return None if flav is None else _create(
-            engine, stmt, insert_only=flav[0], hive=False)
+        acid = _transactional(engine, stmt)
+        return acid and _create(engine, stmt, *acid, hive=False)
     t = stmt.acid
     if stmt.kind in ("alter_table", "drop_stats"):
         what = "ALTER TABLE" if stmt.kind == "alter_table" else "DROP STATS"
@@ -978,21 +970,19 @@ def _drop(engine, t: AcidTable):
     return summary(engine.spark, "Table has been dropped.")
 
 
-def _create(engine, stmt, insert_only: bool, hive: bool):
-    m = _CREATE_TBL.match(stmt.tail)
-    if not m:
-        return None
-    display, phys, db = _split_name(engine, m.group("tbl"))
-    if m.group("ine") and stats.peek(engine, phys).acid is not None:
+def _create(engine, stmt, c, insert_only: bool, hive: bool):
+    """CREATE TABLE of an ACID table (its parts `c`,
+    statements.Create)."""
+    display, phys, db = _split_name(engine, c.name)
+    if c.ine and stats.peek(engine, phys).acid is not None:
         return summary(engine.spark, "Table already exists.")
-    fmt = (m.group("fmt") or "").lower()
+    fmt = (c.stored_as or "").lower()
     fmt = {"textfile": "text", "orc": "orc",
            "parquet": "parquet", "": ""}.get(fmt, fmt)
     if not insert_only and fmt in ("", "text"):
         fmt = "orc"        # full ACID is ORC-only in the reference
     fmt = fmt or "text"    # Impala's default table format
-    ctas_body = m.group("ctas")
-    if ctas_body is not None:
+    if c.body is not None:
         if not insert_only and not hive:
             # CTAS is an INSERT under analysis; the reference rejects
             # it on full-ACID targets before creating the table
@@ -1000,11 +990,8 @@ def _create(engine, stmt, insert_only: bool, hive: bool):
             raise ValueError(
                 "AnalysisException: INSERT not supported on full "
                 f"transactional (ACID) table: {display}")
-        body = re.sub(r"(?is)^\s*AS\b", "", ctas_body).strip()
-        df = engine.spark.sql(engine.translate_query(body))
-        pnames = [p.strip().strip("`").lower()
-                  for p in (m.group("part") or "").split(",")
-                  if p.strip()]
+        df = engine.spark.sql(engine.translate_query(c.body))
+        pnames = [n.lower() for n, _, _ in c.part or []]
         cols = [(f.name.lower(), f.dataType.simpleString())
                 for f in df.schema.fields
                 if f.name.lower() not in pnames]
@@ -1024,8 +1011,7 @@ def _create(engine, stmt, insert_only: bool, hive: bool):
             acid_cols=not t.insert_only, nrows=n)
         refresh_views(engine)
         return summary(engine.spark, f"Inserted {n} row(s)")
-    cols = _parse_cols(m.group("cols"))
-    pcols = _parse_cols(m.group("part"))
+    cols, pcols = _cols(c.cols), _cols(c.part)
     _register(engine, display, phys, db, cols, pcols,
               insert_only, fmt)
     refresh_views(engine)
@@ -1141,11 +1127,9 @@ def hive_sql(engine, text: str):
     stmt = statements.classify(engine, engine.ns.resolve(text))
     t, tail = stmt.acid, stmt.tail
     if stmt.kind == "create_table":
-        flav = _is_transactional(engine, tail)
-        if flav is not None:
-            out = _create(engine, stmt, insert_only=flav[0], hive=True)
-            if out is not None:
-                return out
+        acid = _transactional(engine, stmt)
+        if acid is not None:
+            return _create(engine, stmt, *acid, hive=True)
     elif stmt.kind == "alter_table":
         m = _HIVE_SET_PROPS.match(tail)
         if m:
@@ -1153,12 +1137,13 @@ def hive_sql(engine, text: str):
                 r"'([^']*)'\s*=\s*'([^']*)'", m.group("kv"))}
             if props.get("transactional") == "true":
                 return _promote(engine, m.group("tbl"), props)
-        m = _HIVE_COMPACT.match(tail)
-        if m and t is not None:
+        m = sqlscan.match(_HIVE_COMPACT, tail)
+        if m and t is not None \
+                and m.group("kind").lower() in ("major", "minor"):
             compact(engine, t, m.group("spec") and _spec_suffix(
                 engine, t, m.group("spec")))
             return summary(engine.spark, "Compaction enqueued.")
-        m = _ADD_PART.match(tail)
+        m = sqlscan.match(_ADD_PART, tail)
         if m and t is not None:
             suffix = _spec_suffix(engine, t, m.group("spec"))
             t.partitions.add(suffix)

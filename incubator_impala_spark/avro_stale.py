@@ -33,16 +33,9 @@ import re
 from incubator_impala_spark import partitions, sqlscan
 from incubator_impala_spark.session import rows_df, summary
 
-# what follows CREATE [EXTERNAL] TABLE, ALTER TABLE and REFRESH /
-# INVALIDATE METADATA (statements.py matches the heads)
-_CREATE = re.compile(
-    r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"\((?P<cols>[\s\S]*?)\)\s*"
-    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-    r"(?:LOCATION\s+'(?P<loc>[^']*)'\s*)?"
-    r"TBLPROPERTIES\s*\(\s*'avro\.schema\.url'\s*=\s*"
-    r"'(?P<url>[^']*)'\s*\)\s*;?\s*$",
-    re.IGNORECASE)
+# what follows ALTER TABLE and REFRESH / INVALIDATE METADATA
+# (statements.py matches the heads and reads a CREATE TABLE; the
+# ALTER parts are matched with sqlscan.match)
 _SET_FMT = re.compile(
     r"\s+[A-Za-z_][\w.]*\s+"
     r"(?:PARTITION\s*\([^)]*\)\s+)?SET\s+FILEFORMAT\s+AVRO\s*;?\s*$",
@@ -62,18 +55,22 @@ def _key(tbl: str) -> str:
     return tbl.strip("`").split(".")[-1].lower()
 
 
-def create(engine, tail: str):
-    """CREATE TABLE ... TBLPROPERTIES ('avro.schema.url'=...): a new
-    registry entry, still text; None for any other CREATE."""
-    m = _CREATE.match(tail)
-    if m is None:
+def create(engine, c):
+    """CREATE TABLE (cols) [PARTITIONED BY] [LOCATION] TBLPROPERTIES
+    ('avro.schema.url'=...), its only property, with no format (its
+    parts `c`, statements.Create): a new registry entry, still text;
+    None for any other CREATE."""
+    props = c.props
+    if c.cols is None or list(props) != ["avro.schema.url"] or c.ine \
+            or c.serde is not None or any((
+                c.sort, c.comment, c.row_format, c.stored_as, c.clustered,
+                c.like, c.like_fmt, c.body)):
         return None
-    engine.avro_stale[_key(m.group("tbl"))] = {
-        "display": m.group("tbl"),
-        "cols": m.group("cols"),
-        "part": m.group("part"),
-        "location": m.group("loc"),
-        "url": m.group("url"),
+    engine.avro_stale[_key(c.name)] = {
+        "display": c.name,
+        "part": c.part,
+        "location": c.location and sqlscan.unquote(c.location),
+        "url": props["avro.schema.url"],
         "partitions": [],
         "state": "text",
     }
@@ -84,10 +81,10 @@ def alter(engine, stmt):
     """ALTER TABLE SET FILEFORMAT AVRO (the entry goes stale) or ADD
     PARTITION of a registered table; None otherwise."""
     info = engine.avro_stale.get(_key(stmt.name or ""))
-    if info is not None and _SET_FMT.match(stmt.tail):
+    if info is not None and sqlscan.match(_SET_FMT, stmt.tail):
         info["state"] = "stale"
         return summary(engine.spark, "Updated table.")
-    m = info is not None and _ADD_PART.match(stmt.tail)
+    m = info is not None and sqlscan.match(_ADD_PART, stmt.tail)
     if not m:
         return None
     spec = {k: partitions.literal(v) for k, v in
@@ -120,12 +117,7 @@ def _materialize(engine, info: dict, name: str) -> None:
         parts.append(({}, info["location"]))
     parts += [(spec, loc) for spec, loc in info["partitions"] if loc]
     dfs = []
-    pcols = []
-    for item in (info["part"] or "").split(","):
-        toks = item.split()
-        if toks:
-            pcols.append((toks[0].strip("`"),
-                          " ".join(toks[1:]) or "string"))
+    pcols = [(n, t or "string") for n, t, _ in info["part"] or []]
     for spec, loc in parts:
         df = avro_io.read_avro(
             spark, engine._resolve_fs_path(loc), reader)

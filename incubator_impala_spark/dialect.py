@@ -1259,99 +1259,6 @@ def rewrite_decimal_avg(sql: str, schema_of) -> str:
             + sql[list_end:])
 
 
-_CREATE_TABLE_HEAD = re.compile(
-    r"^\s*create\s+(?:external\s+)?table\s+(?:if\s+not\s+exists\s+)?"
-    r"[A-Za-z_][\w.]*\s*\(", re.IGNORECASE)
-_PARTITIONED_BY = re.compile(r"\s*partitioned\s+by\s*\(", re.IGNORECASE)
-
-
-def rewrite_create_partitioned(sql: str) -> str:
-    """Hive/Impala CREATE TABLE declares partition columns with types
-    OUTSIDE the column list (`(a int) partitioned by (p int)`); Spark's
-    USING-table form wants them inside with a name-only PARTITIONED BY
-    (`(a int, p int) ... partitioned by (p)`). Rewrites when the
-    partition items carry types; leaves name-only lists alone."""
-    shadow = sqlscan.shadow(sql)
-    m = _CREATE_TABLE_HEAD.match(shadow)
-    # index of the column list's ')'
-    cols_end = sqlscan.close_paren(shadow, m.end() - 1) if m else -1
-    pm = _PARTITIONED_BY.match(shadow, cols_end + 1) \
-        if cols_end >= 0 else None
-    j = sqlscan.close_paren(shadow, pm.end() - 1) if pm else -1
-    if j < 0:
-        return sql
-    items = sqlscan.split_top(sql[pm.end():j])
-    typed = [it for it in items if len(it.split()) >= 2]
-    if len(typed) != len(items):
-        return sql  # already name-only
-    names = ", ".join(it.split()[0] for it in items)
-    # the name-only clause goes to the END of the statement: Spark's
-    # grammar puts the USING provider (what STORED AS becomes)
-    # directly after the column list, and the remaining createTable
-    # clauses are order-free
-    tail = sql[j + 1:].rstrip().rstrip(";")
-    return (sql[:cols_end] + ", " + ", ".join(items) + ")"
-            + tail + " partitioned by (" + names + ")")
-
-
-_ROW_FORMAT = re.compile(
-    r"\s+ROW\s+FORMAT\s+DELIMITED"
-    r"(?:\s+FIELDS\s+TERMINATED\s+BY\s+(?P<sep>'[^']*'))?"
-    r"(?:\s+ESCAPED\s+BY\s+(?P<esc>'[^']*'))?"
-    r"(?:\s+LINES\s+TERMINATED\s+BY\s+'[^']*')?",
-    re.IGNORECASE)
-
-
-def rewrite_row_format(sql: str) -> str:
-    """Hive/Impala ``ROW FORMAT DELIMITED ...`` on CREATE TABLE →
-    Spark's csv source with matching OPTIONS (the USING-form grammar
-    has no ROW FORMAT). Clause order is free in Spark 3's createTable
-    grammar, so the USING lands at the end when the statement had no
-    STORED AS (text is the reference's default format)."""
-    shadow = sqlscan.shadow(sql)
-    if not re.match(r"\s*create\s+(external\s+)?table\b", shadow,
-                    re.IGNORECASE):
-        return sql
-    m = _ROW_FORMAT.search(shadow)
-    if not m:
-        return sql
-    # text-table semantics: whitespace kept verbatim (the csv writer
-    # trims by default), NULL spelled \N (the reference's text null
-    # sequence) so empty string and NULL stay distinct
-    # (emptyValue stays default: the writer quotes '' so it reads
-    # back distinct from the \N null marker)
-    opts = ["ignoreLeadingWhiteSpace='false'",
-            "ignoreTrailingWhiteSpace='false'",
-            "nullValue='\\\\N'"]
-    if m.group("sep"):
-        opts.append("sep=" + sql[m.start("sep"):m.end("sep")])
-    if m.group("esc"):
-        opts.append("escape=" + sql[m.start("esc"):m.end("esc")])
-    opt_str = f" options ({', '.join(opts)})" if opts else ""
-    rest = sql[:m.start()] + " " + sql[m.end():]
-    # a WITH SERDEPROPERTIES clause alongside ROW FORMAT DELIMITED
-    # carries the same delimiters (Hive stores both); keeping it would
-    # later map to a SECOND options clause (DUPLICATE_CLAUSES) — drop
-    # it, the row-format options already encode the serde
-    shadow2 = sqlscan.shadow(rest)
-    wm = re.search(r"\bwith\s+serdeproperties\s*\(", shadow2,
-                   re.IGNORECASE)
-    j = sqlscan.close_paren(shadow2, wm.end() - 1) if wm else -1
-    if j >= 0:
-        rest = rest[:wm.start()] + " " + rest[j + 1:]
-    shadow2 = sqlscan.shadow(rest)
-    sm = re.search(r"\bstored\s+as\s+textfile\b", shadow2,
-                   re.IGNORECASE)
-    if sm:
-        rest = (rest[:sm.start()] + "using csv" + opt_str
-                + rest[sm.end():])
-    elif re.search(r"\bstored\s+as\b", shadow2, re.IGNORECASE):
-        pass  # non-text format: delimiters are meaningless, drop them
-    else:
-        rest = rest.rstrip().rstrip(";") + " using csv" + opt_str
-    return rest
-
-
 def rewrite_local_tz(sql: str, tz: str) -> str:
     """``use_local_tz_for_unix_timestamp_conversions=1`` semantics
     (reference flag/query option, be/src/exprs/timestamp-functions*):
@@ -1390,124 +1297,11 @@ def rewrite_local_tz(sql: str, tz: str) -> str:
     return sql
 
 
-def rewrite_create_sort_by(sql: str) -> str:
-    """CREATE TABLE ``SORT BY [ZORDER|LEXICAL] (cols)`` is a
-    within-file layout hint (IMPALA-4166/IMPALA-10233) with no
-    query-visible semantics; dropped (the sink's PartialSort covers
-    clustered writes)."""
-    shadow = sqlscan.shadow(sql)
-    if not re.match(r"\s*create\s+(external\s+)?table\b", shadow,
-                    re.IGNORECASE):
-        return sql
-    m = re.search(r"\s+sort\s+by\s*(?:zorder\s*|lexical\s*)?"
-                  r"\([^)]*\)", shadow, re.IGNORECASE)
-    if not m:
-        return sql
-    return sql[:m.start()] + " " + sql[m.end():]
-
-
-def rewrite_ctas_clause_order(sql: str) -> str:
-    """Impala CTAS writes ``partitioned by (...) stored as fmt as
-    select``; after the STORED AS→USING mapping Spark needs the USING
-    before the PARTITIONED BY (grammar: provider precedes the
-    order-free clause list). Swaps them when needed."""
-    shadow = sqlscan.shadow(sql)
-    if not re.match(r"\s*create\s+(external\s+)?table\b", shadow,
-                    re.IGNORECASE):
-        return sql
-    pm = re.search(r"\bpartitioned\s+by\s*\([^)]*\)", shadow,
-                   re.IGNORECASE)
-    um = re.search(r"\busing\s+\w+(\s+options\s*\([^)]*\))?", shadow,
-                   re.IGNORECASE)
-    if not pm or not um or pm.start() > um.start():
-        return sql
-    part = sql[pm.start():pm.end()]
-    rest = sql[:pm.start()] + sql[pm.end():]
-    # re-locate the using clause in the spliced text
-    shift = pm.end() - pm.start()
-    ins = um.end() - shift
-    return rest[:ins] + " " + part + rest[ins:]
-
-
-def rewrite_create_using_position(sql: str) -> str:
-    """Move a CREATE TABLE's ``USING <provider> [OPTIONS (...)]`` to
-    directly after the column list (or the table name when there is
-    none). Spark's grammar wants the provider BEFORE the order-free
-    clause list, but the STORED AS→USING mapping leaves it wherever
-    STORED AS sat — which breaks when COMMENT/LOCATION/TBLPROPERTIES
-    precede it (e.g. ``(cols) PARTITIONED BY ... COMMENT ... STORED AS
-    TEXTFILE``). LIKE-form creates are untouched."""
-    shadow = sqlscan.shadow(sql)
-    hm = re.match(r"\s*create\s+(?:external\s+)?table\s+"
-                  r"(?:if\s+not\s+exists\s+)?`?[\w.]+`?\s*",
-                  shadow, re.IGNORECASE)
-    if not hm or re.search(r"\blike\b", shadow, re.IGNORECASE):
-        return sql
-    um = re.search(r"\busing\s+\w+"
-                   r"(\s+options\s*\((?:[^()]|\([^()]*\))*\))?",
-                   shadow, re.IGNORECASE)
-    if not um:
-        return sql
-    insert_at = hm.end()
-    if insert_at < len(shadow) and shadow[insert_at] == "(":
-        close = sqlscan.close_paren(shadow, insert_at)
-        if close >= 0:
-            insert_at = close + 1
-    if um.start() <= insert_at:
-        return sql  # already directly after the header
-    using = sql[um.start():um.end()]
-    rest = sql[:um.start()] + " " + sql[um.end():]
-    return (rest[:insert_at] + " " + using + rest[insert_at:])
-
-
-def rewrite_create_default_text(sql: str) -> str:
-    """Impala's default table format is TEXT (no STORED AS clause ⇒
-    text, fields terminated by \\x01); Spark's is parquet. A plain
-    CREATE TABLE with an explicit scalar-only column list and no
-    format/provider clause gets the text default so file listings
-    (SHOW TABLE STATS sizes, SHOW FILES) match the reference's
-    (corrupt-stats.test pins 24B text partitions). Complex-typed,
-    LIKE-form, and CTAS creates keep Spark's native default — the csv
-    source cannot store collections, and CTAS summaries lean on
-    parquet footer counts."""
-    shadow = sqlscan.shadow(sql)
-    hm = re.match(r"\s*create\s+(?:external\s+)?table\s+"
-                  r"(?:if\s+not\s+exists\s+)?`?[\w.]+`?\s*",
-                  shadow, re.IGNORECASE)
-    if not hm or hm.end() >= len(shadow) or shadow[hm.end()] != "(":
-        return sql
-    if re.search(r"\b(like|using|stored\s+as|row\s+format|"
-                  r"serdeproperties|options|as\s+select)\b",
-                 shadow, re.IGNORECASE):
-        return sql
-    j = sqlscan.close_paren(shadow, hm.end())
-    if j < 0:
-        return sql
-    cols = sql[hm.end() + 1:j]
-    if re.search(r"(?i)\b(array|map|struct)\s*<", cols) \
-            or "<" in cols:
-        return sql
-    if re.search(r"(?i)\b(date|timestamp)\b", cols):
-        # csv round-trips of DATE/TIMESTAMP hit the legacy-calendar
-        # rebase for pre-Gregorian values; those tables keep the
-        # binary (parquet) default so values stay bit-exact
-        return sql
-    sep = chr(1)  # Impala's text default field terminator \x01
-    return (sql.rstrip().rstrip(";")
-            + f" using csv options (sep='{sep}', "
-              "ignoreLeadingWhiteSpace='false', "
-              "ignoreTrailingWhiteSpace='false', "
-              # no emptyValue override: Spark csv's defaults write ''
-              # as quoted "" and read "" back as '' (probed on 4.1),
-              # preserving Impala's ''-vs-\N distinction; an explicit
-              # emptyValue='' would write bare-empty fields that read
-              # back as NULL (ADVICE r8 verified not applicable)
-              "nullValue='\\\\N')")
-
-
 def translate(sql: str, macros: dict | None = None, now=None,
               decimal_v2: bool = True) -> str:
-    """Full Impala→Spark translation pipeline. `now` feeds the FORMAT
+    """The Impala→Spark query pipeline (a CREATE TABLE's clauses are
+    statements.parse_create's; its Spark spelling comes through here
+    for the CTAS query). `now` feeds the FORMAT
     clause's century-inference rules (NOW_STRING query option).
     ``decimal_v2=False`` selects the reference's legacy DECIMAL V1
     cast semantics: decimal→integer casts TRUNCATE
@@ -1547,41 +1341,6 @@ def translate(sql: str, macros: dict | None = None, now=None,
     sql = clamp_offset(sql)
     sql = rewrite_postfix_factorial(sql)
     sql = rewrite_posix_classes(sql)
-    sql = rewrite_row_format(sql)
-    # Impala `WITH SERDEPROPERTIES (...)` -> Spark OPTIONS (the USING
-    # grammar has no serde clause; OPTIONS coexists with an explicit
-    # TBLPROPERTIES clause where TBLPROPERTIES would collide)
-    sql = _shadow_sub(
-        re.compile(r"\bwith\s+serdeproperties\b", re.IGNORECASE),
-        "options", sql)
-    sql = rewrite_create_sort_by(sql)
-    sql = rewrite_create_partitioned(sql)
-    # Hive-style STORED AS on CREATE TABLE → Spark USING (no Hive
-    # catalog in a plain session); textfile maps to the csv source,
-    # whose \x01 defaults the formats module applies elsewhere
-    sql = _shadow_sub(
-        re.compile(r"\bstored\s+as\s+(parquetfile|parquet|orcfile|orc|"
-                   r"avrofile|avro|textfile|rcfile|sequencefile)\b",
-                   re.IGNORECASE),
-        lambda m: "using " + {"textfile": "csv", "rcfile": "csv",
-                              "sequencefile": "csv",
-                              # Impala's legacy long spellings
-                              # (sql-parser.cup file_format_val)
-                              "parquetfile": "parquet",
-                              "orcfile": "orc",
-                              "avrofile": "avro"}.get(
-                                  m.group(1).lower(), m.group(1).lower()),
-        sql)
-    sql = rewrite_ctas_clause_order(sql)
-    sql = rewrite_create_default_text(sql)
-    sql = rewrite_create_using_position(sql)
-    # Impala/Hive allow EXTERNAL without LOCATION (external.table.purge
-    # managed-external); Spark requires LOCATION for EXTERNAL — the
-    # managed table has identical query-facing semantics
-    if not re.search(r"(?i)\blocation\s*'", sqlscan.shadow(sql)):
-        sql = _shadow_sub(
-            re.compile(r"\bcreate\s+external\s+table\b", re.IGNORECASE),
-            "create table", sql)
     # Impala aliases: REAL is DOUBLE (Spark's REAL is FLOAT); `&&` is
     # logical AND (`||` is NOT mapped — it is concat in Spark texts).
     # All three run on the literal-blind shadow: 'a&&b' is data.

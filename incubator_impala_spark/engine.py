@@ -55,70 +55,6 @@ _ANALYZE = re.compile(
 _SET_COLUMN_STATS = re.compile(
     r"\s+(?P<tbl>[A-Za-z_][\w.]*)\s+SET\s+COLUMN\s+STATS\s+"
     r"(?P<col>`?\w+`?)\s*\((?P<kv>[^)]*)\)\s*;?\s*$", re.IGNORECASE)
-# The CREATE TABLE variants, what follows CREATE [EXTERNAL] TABLE.
-# CTAS returns 'Inserted N row(s)' (impala-shell surface). N comes
-# from Spark's own DataWritingCommand metric — no extra job.
-_CTAS = re.compile(
-    r"(?P<pre>\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)[\s\S]*?\bAS)\s*"
-    r"(?P<body>\(?\s*(?:SELECT|WITH)\b[\s\S]*)$",
-    re.IGNORECASE,
-)
-_AS_SELECT = re.compile(r"\bAS\s+SELECT\b", re.IGNORECASE)
-_AVRO_LITERAL = re.compile(
-    r"(?is)\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"(?:\((?P<cols>[\s\S]*?)\)\s*)?"
-    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-    r"(?:STORED\s+AS\s+AVRO\b|WITH\s+SERDEPROPERTIES\b)"
-    r"[\s\S]*?avro\.schema\.literal'\s*=\s*'(?P<lit>[^']*)'"
-    r"[\s\S]*$")
-# CREATE TABLE t LIKE PARQUET 'path' — schema inferred from the file
-# footer (CreateTableLikeFileStmt.java). Unreachable warehouse paths
-# fall back to a basename lookup in the reference's testdata dirs.
-_CREATE_LIKE_PARQUET = re.compile(
-    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s+LIKE\s+(?P<fmt>PARQUET|ORC)\s+"
-    r"'(?P<path>[^']+)'"
-    r"(?:\s+PARTITIONED\s+BY\s*\((?P<part>[^)]*)\))?"
-    r"(?:\s+STORED\s+AS\s+\w+)?"
-    r"(?:\s+LOCATION\s+'(?P<loc>[^']+)')?"
-    r"[\s\S]*$",
-    re.IGNORECASE,
-)
-# CREATE TABLE t (cols) ... STORED AS AVRO with no explicit Avro
-# schema: the reference infers the Avro schema from the column defs
-# and CONVERTS the table schema to what Avro can carry
-# (fe/src/main/java/org/apache/impala/analysis/CreateTableStmt.java
-# analyzeAvroSchema + util/AvroSchemaConverter: TINYINT/SMALLINT ->
-# INT, TIMESTAMP -> STRING; CHAR/VARCHAR/DECIMAL/complex preserved),
-# stamping 'from deserializer' on columns without an explicit comment.
-_CREATE_AVRO = re.compile(
-    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
-    r"\((?P<cols>[\s\S]*?)\)\s*"
-    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-    r"STORED\s+AS\s+AVRO\b(?P<tail>[\s\S]*)$",
-    re.IGNORECASE,
-)
-# one `name type [COMMENT 'c']` column definition
-_AVRO_COL = re.compile(
-    r"^\s*(?P<bq>`?)(?P<name>[A-Za-z_]\w*)(?P=bq)\s+(?P<type>[\s\S]*?)"
-    r"(?:\s+COMMENT\s+'(?P<cm>(?:[^']|'')*)')?\s*$", re.IGNORECASE)
-
-# CREATE TABLE t LIKE src [STORED AS fmt] — clone schema + partition
-# spec, no data (CreateTableLikeStmt.java). The fixture relations are
-# temp views, so the clone is built from the source schema rather than
-# Spark's native LIKE (which requires a catalog table).
-_CREATE_LIKE = re.compile(
-    r"\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>[A-Za-z_][\w.]*)\s+"
-    r"(?:SORT\s+BY\s*(?:ZORDER\s*|LEXICAL\s*)?\([^)]*\)\s*)?"
-    r"LIKE\s+(?P<src>[A-Za-z_][\w.]*)"
-    r"[\s\S]*$",
-    re.IGNORECASE,
-)
-
-
 class Engine:
     """A SQL engine with the reference's dialect & function surface.
 
@@ -202,7 +138,7 @@ class Engine:
             opt.on_set(self)
         return bool(opt.attr or opt.conf)
 
-    def _ctas_ts_rewrite(self, pre: str, body: str) -> str | None:
+    def _ctas_ts_body(self, body: str) -> str | None:
         """PARQUET_TIMESTAMP_TYPE write semantics for CTAS (reference
         be/src/exec/parquet/hdfs-parquet-table-writer.cc: INT64_MILLIS
         truncates to milliseconds; INT64_NANOS stores NULL outside the
@@ -236,8 +172,7 @@ class Engine:
                     f"TIMESTAMP'1677-09-21 00:12:43.145225' AND "
                     f"TIMESTAMP'2262-04-11 23:47:16.854775' "
                     f"THEN {q} END AS {q}")
-        return (f"{pre} SELECT {', '.join(exprs)} "
-                f"FROM ({body}) __pqt_ts__")
+        return f"SELECT {', '.join(exprs)} FROM ({body}) __pqt_ts__"
 
     def _refresh_overlays(self) -> None:
         """Re-project overlay tables (metadata-only ALTERed parquet
@@ -323,7 +258,7 @@ class Engine:
         staging runs it through this engine): compute the stats and
         record Hive's COLUMN_STATS_ACCURATE marker, which an
         engine-side INSERT then clears."""
-        am = _ANALYZE.match(stmt.rest)
+        am = sqlscan.match(_ANALYZE, stmt.rest)
         if am is None:
             return None
         tbl = am.group("tbl")
@@ -398,57 +333,51 @@ class Engine:
         return describe_df(self.spark, path)
 
     def _create_table(self, stmt) -> DataFrame | None:
-        """CREATE TABLE: a transactional table (acid.py), a stale-Avro
-        registry entry (avro_stale.py), CTAS, the Avro forms, LIKE
-        PARQUET|ORC 'file', LIKE <table>, or a plain CREATE, which
-        returns the reference's DDL summary row."""
+        """CREATE TABLE, from its parts (statements.parse_create): a
+        transactional table (acid.py), a stale-Avro registry entry
+        (avro_stale.py), CTAS, the Avro forms, LIKE PARQUET|ORC 'file',
+        LIKE <table>, or a plain CREATE, which returns the reference's
+        DDL summary row. None (run as written) when it does not parse."""
         from incubator_impala_spark import acid, avro_stale
 
         out = acid.handle(self, stmt)
         if out is not None:
             return out
-        tail = stmt.tail
         if stmt.name is not None:
             self.ns.record_table(stmt.name.replace("`", ""))
-        out = avro_stale.create(self, tail)
+        c = statements.parse_create(stmt)
+        if c is None:
+            return None
+        out = avro_stale.create(self, c)
         if out is not None:
             return out
-        m = None if stmt.group("ext") else _CTAS.match(tail)
-        if m:
-            if m.group("ine") and self.spark.catalog.tableExists(
-                    m.group("tbl")):
+        if c.body is not None:
+            # CTAS returns 'Inserted N row(s)' (impala-shell surface)
+            if c.ine and self.spark.catalog.tableExists(c.name):
                 n = 0  # IF NOT EXISTS on an existing table: no insert
             else:
-                text = self._ctas_ts_rewrite(
-                    stmt.text[:stmt.head.end("kw")] + m.group("pre"),
-                    m.group("body")) or stmt.resolved
-                self.spark.sql(self.translate_query(text))
+                self.spark.sql(self.translate_query(
+                    c.spark(self._ctas_ts_body(c.body))))
                 # CTAS runs as ExecutedCommandExec (no write metrics),
                 # so the summary count comes from the fresh table —
                 # parquet count(*) folds to footer row counts
-                n = self.spark.table(m.group("tbl")).count()
+                n = self.spark.table(c.name).count()
             return summary(self.spark, f"Inserted {n} row(s)")
-        if _AS_SELECT.search(tail):
-            return None   # not a CTAS this engine parses: Spark's
-        if stmt.group("ine") and self.spark.catalog.tableExists(stmt.name):
+        if c.ine and self.spark.catalog.tableExists(c.name):
             return summary(self.spark, "Table already exists.")
-        lm = _AVRO_LITERAL.match(tail)
-        if lm:
-            return self.create_avro_from_literal(
-                lm.group("tbl"), lm.group("lit"), lm.group("cols"),
-                lm.group("part"))
-        m = _CREATE_AVRO.match(tail)
-        if m and not re.search(r"avro\.schema", tail, re.IGNORECASE):
-            out = self._create_avro(m)
-            if out is not None:
-                return out
-        m = _CREATE_LIKE_PARQUET.match(tail)
-        if m:
-            return self._create_like_parquet(m)
-        m = _CREATE_LIKE.match(tail)
-        if m:
-            return self._create_like(m)
-        self.spark.sql(self.translate_query(stmt.resolved))
+        fmt = (c.stored_as or "").upper()
+        literal = c.props.get("avro.schema.literal")
+        if literal is not None and (fmt == "AVRO" or c.serde is not None):
+            return self.create_avro_from_literal(c.name, literal, c.cols,
+                                                 c.part)
+        if fmt == "AVRO" and c.cols and all(t for _, t, _ in c.cols) \
+                and not any(k.startswith("avro.schema") for k in c.props):
+            return self._create_avro(c)
+        if c.like_fmt:
+            return self._create_like_parquet(c)
+        if c.like:
+            return self._create_like(c)
+        self.spark.sql(self.translate_query(c.spark()))
         return summary(self.spark, "Table has been created.")
 
     def _drop_stats(self, stmt, m: re.Match) -> DataFrame:
@@ -749,7 +678,7 @@ class Engine:
         return summary(self.spark, f"Updated {n_parts} partition(s) and "
                                    f"{len(wanted)} column(s).")
 
-    def _create_like_parquet(self, m: re.Match) -> DataFrame:
+    def _create_like_parquet(self, c) -> DataFrame:
         """CREATE TABLE LIKE PARQUET|ORC 'file': clone the file
         footer's schema into an empty managed table
         (CreateTableLikeFileStmt.java). Unreachable test-warehouse
@@ -758,10 +687,10 @@ class Engine:
         data file in the same directory), then by basename against the
         reference's testdata (the files the load scripts would have
         staged)."""
-        fmt = (m.group("fmt") or "PARQUET").upper()
+        fmt = c.like_fmt.upper()
         reader = (self.spark.read.orc if fmt == "ORC"
                   else self.spark.read.parquet)
-        tbl, path = m.group("tbl"), m.group("path")
+        tbl, path = c.name, sqlscan.unquote(c.like_path)
         if not os.path.exists(path):
             cands = []
             wh = self._resolve_fs_path(path)
@@ -810,19 +739,14 @@ class Engine:
             f"COMMENT 'Inferred from {fmt_disp} file.'"
             for f in src.schema.fields)
         part = ""
-        if m.group("part"):
-            items = sqlscan.split_top(m.group("part"))
-            typed = [i for i in items if len(i.split()) >= 2]
-            if typed:
-                cols_ddl += ", " + ", ".join(items)
-                part = (" PARTITIONED BY ("
-                        + ", ".join(i.split()[0] for i in items) + ")")
-            else:
-                part = f" PARTITIONED BY ({', '.join(items)})"
+        if c.part:
+            cols_ddl += "".join(f", `{n}` {t}" for n, t, _ in c.part if t)
+            part = (" PARTITIONED BY ("
+                    + ", ".join(f"`{n}`" for n, _, _ in c.part) + ")")
         self.spark.sql(
             f"CREATE TABLE {tbl} ({cols_ddl}) "
             f"USING {fmt.lower()}{part}")
-        if m.group("loc") and not m.group("part"):
+        if c.location and not c.part:
             # external LOCATION over staged data: the created table
             # reads those rows (loaded here since the warehouse path
             # resolves to the reference's testdata copy)
@@ -855,14 +779,15 @@ class Engine:
         return t
 
     def create_avro_from_literal(self, tbl: str, literal: str,
-                                 coldefs: str | None,
-                                 part: str | None = None) -> DataFrame:
+                                 cols: list | None = None,
+                                 part: list | None = None) -> DataFrame:
         """CREATE/ALTER with `avro.schema.literal`: the AVRO SCHEMA is
         the table schema (AvroSchemaParser/AvroSchemaUtils — names,
         types, and `doc` comments come from the literal), EXCEPT that
         CHAR/VARCHAR column-definition types are kept positionally
         (IMPALA-3687: avro stores them as string; the coldef preserves
-        the length)."""
+        the length). `cols` and `part` are parsed column definitions
+        (statements.Create)."""
         import json as _json
 
         from incubator_impala_spark.sources.avro_io import (
@@ -870,14 +795,7 @@ class Engine:
         )
 
         fields = _json.loads(literal)["fields"]
-        cd_types: list[str] = []
-        if coldefs:
-            col_re = re.compile(
-                r"^\s*`?(?P<name>[A-Za-z_]\w*)`?\s+(?P<type>[\w()<>, ]+?)"
-                r"(?:\s+COMMENT\s+'(?:[^']|'')*')?\s*$", re.IGNORECASE)
-            for item in sqlscan.split_top(coldefs, angle=True):
-                cm = col_re.match(item)
-                cd_types.append(cm.group("type").strip() if cm else "")
+        cd_types = [t or "" for _, t, _ in cols or []]
         defs = []
         for i, f in enumerate(fields):
             typ = avro_field_spark_type(f["type"])
@@ -893,16 +811,15 @@ class Engine:
         return summary(self.spark, "Table has been created.")
 
     def _create_avro_table(self, tbl: str, defs: list,
-                           part: str | None) -> list:
+                           part: list | None) -> list:
         """Create the converted Avro schema `defs` as a managed parquet
         table (the storage format is an engine detail), partitioned by
-        the `name type` items of `part`; returns the partition keys."""
+        the typed partition columns `part`; returns their names."""
         pnames = []
-        for item in sqlscan.split_top(part or "", angle=True):
-            cm = _AVRO_COL.match(item)
-            if cm:
-                defs.append(f"`{cm.group('name')}` {cm.group('type')}")
-                pnames.append(cm.group("name"))
+        for n, t, _ in part or []:
+            if t:
+                defs.append(f"`{n}` {t}")
+                pnames.append(n)
         part = (f" PARTITIONED BY ({', '.join(pnames)})"
                 if pnames else "")
         self.spark.sql(f"CREATE TABLE {tbl} ({', '.join(defs)}) "
@@ -910,33 +827,27 @@ class Engine:
         stats.table(self, tbl).avro = True
         return pnames
 
-    def _create_avro(self, m: re.Match) -> DataFrame:
+    def _create_avro(self, c) -> DataFrame:
         """CREATE TABLE ... STORED AS AVRO without an explicit Avro
-        schema (see _CREATE_AVRO). The converted schema is created as
-        a managed parquet table — the storage format is an engine
-        detail; the reference-visible surface is the converted column
-        types and 'from deserializer' comments."""
-        tbl = m.group("tbl")
-        defs = []
-        for item in sqlscan.split_top(m.group("cols"), angle=True):
-            cm = _AVRO_COL.match(item)
-            if not cm:
-                return None  # unparsed column def: fall through
-            comment = (cm.group("cm") or "from deserializer") \
-                .replace("'", "''")
-            defs.append(f"`{cm.group('name')}` "
-                        f"{self._avro_type(cm.group('type'))} "
-                        f"COMMENT '{comment}'")
-        pnames = self._create_avro_table(tbl, defs, m.group("part"))
+        schema: the reference infers the Avro schema from the column
+        definitions and CONVERTS the table schema to what Avro can
+        carry (CreateTableStmt.analyzeAvroSchema, AvroSchemaConverter:
+        TINYINT/SMALLINT -> INT, TIMESTAMP -> STRING), stamping 'from
+        deserializer' on columns without a comment. The converted
+        schema is created as a managed parquet table — the storage
+        format is an engine detail."""
+        tbl = c.name
+        defs = [f"`{n}` {self._avro_type(t)} COMMENT '" + (
+                    sqlscan.unquote(cm) if cm else "from deserializer")
+                .replace("'", "''") + "'" for n, t, cm in c.cols]
+        pnames = self._create_avro_table(tbl, defs, c.part)
         # EXTERNAL ... LOCATION over existing avro container files:
         # adopt the data (avro-schema-changes.test
         # avro_alter_table_add_new_column over tinytable_avro)
-        lm = re.search(r"(?is)\blocation\s+'([^']+)'",
-                       m.group("tail") or "")
-        if lm and not pnames:
+        if c.location and not pnames:
             import glob as _glob
 
-            loc = self._resolve_fs_path(lm.group(1))
+            loc = self._resolve_fs_path(sqlscan.unquote(c.location))
             if _glob.glob(os.path.join(loc, "*.avro")):
                 from incubator_impala_spark.sources import avro_io
 
@@ -944,14 +855,14 @@ class Engine:
                     .write.insertInto(tbl)
         return summary(self.spark, "Table has been created.")
 
-    def _create_like(self, m: re.Match) -> DataFrame:
+    def _create_like(self, c) -> DataFrame:
         """CREATE TABLE LIKE: clone the source's schema and partition
         spec into an empty managed parquet table. Partition columns
         come from the catalog when the source is a real table, else
         from the functional schema template's declared partition
         columns (sources/functional.py PARTITIONED_BY)."""
-        tbl = m.group("tbl")
-        src = re.sub(r"^functional(_\w+)?\.", "", m.group("src"))
+        tbl = c.name
+        src = re.sub(r"^functional(_\w+)?\.", "", c.like)
         if tbl.split(".")[-1].lower() == src.split(".")[-1].lower() \
                 and self.spark.catalog.tableExists(tbl):
             # self-LIKE of a template target (the harness resolves
@@ -986,8 +897,7 @@ class Engine:
 
                 pcols = [c for c in PARTITIONED_BY.get(src.lower(), [])
                          if c in df.columns]
-            avro = bool(re.search(r"\bSTORED\s+AS\s+AVRO\b", m.string,
-                                  re.IGNORECASE))
+            avro = (c.stored_as or "").upper() == "AVRO"
             cols_ddl = ", ".join(
                 f"`{f.name}` " +
                 (self._avro_type(f.dataType.simpleString())
@@ -998,10 +908,8 @@ class Engine:
                     if pcols else "")
             self.spark.sql(
                 f"CREATE TABLE {tbl} ({cols_ddl}) USING parquet{part}")
-        lm = re.search(r"\bLOCATION\s+'(?P<loc>[^']*)'", m.string,
-                       re.IGNORECASE)
-        if lm and src.split(".")[-1].lower().lstrip("_") in \
-                os.path.basename(lm.group("loc")).lower():
+        if c.location and src.split(".")[-1].lower().lstrip("_") in \
+                os.path.basename(sqlscan.unquote(c.location)).lower():
             # EXTERNAL ... LOCATION pointing at the source table's own
             # warehouse dir: the new table adopts the existing data
             # files (the reference reads them in place) — populate the

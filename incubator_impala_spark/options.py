@@ -158,7 +158,7 @@ OPTIONS: dict[str, Option] = {o.name: o for o in [
     Option("now_string", "now", "",
            lambda v: datetime.datetime.fromisoformat(v) if v else None),
     # TParquetTimestampType: INT64_MILLIS/NANOS change what a CTAS
-    # stores (Engine._ctas_ts_rewrite)
+    # stores (Engine._ctas_ts_body)
     Option("parquet_timestamp_type", "parquet_ts_type", "INT96_NANOS",
            str.upper),
     # COUNT(DISTINCT x) → NDV(x) (AppxCountDistinctRule)

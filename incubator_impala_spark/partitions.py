@@ -273,7 +273,7 @@ def drop_spec(kv: dict) -> str:
 
 def _display_location(engine, tbl: str, suffix: str = "") -> str:
     db = engine.ns.current or "default"
-    name = tbl.split(".")[-1].lower()
+    name = tbl.replace("`", "").split(".")[-1].lower()
     # the qscratch_ prefix is harness plumbing (a file-created table
     # shadowing a fixture name) — the displayed location carries the
     # table's logical name, like the reference warehouse

@@ -9,9 +9,10 @@ engine-side contract implemented here.
 
 Spark's own `SHOW CREATE TABLE` prints the USING-provider form and
 loses the Impala-form facets (STORED AS spelling, ROW FORMAT
-delimiters, EXTERNAL-ness, SORT BY) that the dialect shim translates
-away, so the engine records those facets at CREATE time
-(`record_create`) and renders from the record plus the LIVE catalog
+delimiters, EXTERNAL-ness, SORT BY) that the Spark spelling of a
+CREATE leaves out, so the engine records those facets at CREATE time
+(`record_create`, from statements.parse_create's parts) and renders
+from the record plus the LIVE catalog
 schema (so ALTER ADD COLUMNS etc. are reflected). Tables render in the
 reference's Hive-3 style: managed tables print as
 `CREATE EXTERNAL TABLE ... TBLPROPERTIES ('external.table.purge'=
@@ -78,40 +79,52 @@ def impala_type(dt) -> str:
 # CREATE-time recording
 # ---------------------------------------------------------------------------
 
-_ROW_FORMAT = re.compile(
-    r"(?is)\brow\s+format\s+delimited"
-    r"(?:\s+fields\s+terminated\s+by\s+(?P<sep>'[^']*'))?"
-    r"(?:\s+escaped\s+by\s+(?P<esc>'[^']*'))?"
-    r"(?:\s+lines\s+terminated\s+by\s+(?P<lin>'[^']*'))?")
-
-
-def _parse_props(raw: str) -> dict:
-    return dict(re.findall(r"'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'",
-                           raw))
-
-
 def record_create(engine, stmt) -> None:
-    """Parse the Impala-form facets of a CREATE TABLE/VIEW (a
-    classified statement, statements.py) and store them on the engine
-    for later SHOW CREATE rendering. Never raises — an unparseable
-    statement simply renders from catalog fallbacks."""
-    try:
-        _record_create(engine, stmt)
-    except Exception:  # noqa: BLE001 — recording is best-effort
-        pass
-
-
-def _record_create(engine, stmt) -> None:
+    """Store the Impala-form facets of a CREATE TABLE/VIEW (a
+    classified statement, statements.py) on its record for later SHOW
+    CREATE rendering: a table's parts as statements.parse_create reads
+    them (its SORT BY on the record's `sort`), a view's column aliases
+    and body."""
     if stmt.target is None:
         return
-    rest = stmt.text[stmt.head.end("target"):].lstrip()
-    rest_shadow = sqlscan.shadow(rest)
+    rec = stats.table(engine, stmt.target)
     meta: dict = {"kind": stmt.kind.removeprefix("create_"),
                   "external": bool(stmt.group("ext")),
                   "display": stmt.target.replace("`", "")}
+    if meta["kind"] == "view":
+        if _record_view(stmt, meta):
+            rec.create = meta
+        return
+    from incubator_impala_spark.statements import parse_create, properties
 
-    # leading parenthesized list (columns for TABLE, aliases for VIEW)
-    cols_raw = None
+    c = parse_create(stmt)
+    if c is None:
+        return
+    lit = sqlscan.unquote
+    if c.cols is not None:
+        meta["columns"] = [(n, t, cm and lit(cm)) for n, t, cm in c.cols]
+    if c.part is not None:
+        meta["partitions"] = [(n, t, cm and lit(cm))
+                              for n, t, cm in c.part]
+    if c.sort:
+        rec.sort = c.sort
+    if c.comment:
+        meta["comment"] = lit(c.comment)
+    if c.row_format is not None:
+        meta["row_format"] = {k: lit(v) for k, v in c.row_format.items()}
+    if c.stored_as:
+        meta["format"] = c.stored_as.upper()
+    if c.tblprops is not None:
+        meta["tblproperties"] = properties(c.tblprops)
+    rec.create = meta
+
+
+def _record_view(stmt, meta: dict) -> bool:
+    """A CREATE VIEW's column aliases and body; False when it has no
+    AS."""
+    rest = stmt.text[stmt.head.end("target"):].lstrip()
+    rest_shadow = sqlscan.shadow(rest)
+    cols_raw, tail_shadow, tail = None, rest_shadow, rest
     lead = re.match(r"\s*\(", rest_shadow)
     if lead:
         close = sqlscan.close_paren(rest_shadow, lead.end() - 1)
@@ -119,97 +132,18 @@ def _record_create(engine, stmt) -> None:
             cols_raw = rest[lead.end():close]
             tail_shadow = rest_shadow[close + 1:]
             tail = rest[close + 1:]
-        else:
-            tail_shadow, tail = rest_shadow, rest
-    else:
-        tail_shadow, tail = rest_shadow, rest
-
-    if meta["kind"] == "view":
-        am = re.search(r"(?is)\bas\b", tail_shadow)
-        if am is None:
-            return
-        meta["aliases"] = None
-        if cols_raw is not None:
-            meta["aliases"] = []
-            for item in sqlscan.split_top(cols_raw):
-                im = re.match(r"\s*(`?)([A-Za-z_]\w*)\1", item)
-                if im:
-                    meta["aliases"].append(im.group(2))
-        meta["body"] = tail[am.end():].strip().rstrip(";")
-        stats.table(engine, stmt.target).create = meta
-        return
-
-    # TABLE facets
+    am = re.search(r"(?is)\bas\b", tail_shadow)
+    if am is None:
+        return False
+    meta["aliases"] = None
     if cols_raw is not None:
-        cols = []
+        meta["aliases"] = []
         for item in sqlscan.split_top(cols_raw):
-            cm = re.match(
-                r"(?is)\s*(`?)(?P<name>[A-Za-z_]\w*)\1\s+"
-                r"(?P<type>[\s\S]+?)"
-                r"(?:\s+comment\s+'(?P<cmt>(?:[^']|'')*)')?\s*$",
-                item)
-            if cm is None:
-                cols = None
-                break
-            cols.append((cm.group("name"), cm.group("type").strip(),
-                         cm.group("cmt")))
-        meta["columns"] = cols
-    pm = re.search(r"(?is)\bpartitioned\s+by\s*\(", tail_shadow)
-    if pm:
-        close = sqlscan.close_paren(tail_shadow, pm.end() - 1)
-        parts = []
-        for item in sqlscan.split_top(tail[pm.end():close]):
-            toks = item.split()
-            if not toks:
-                continue
-            nm = toks[0].strip("`")
-            ty = " ".join(toks[1:]) or None
-            cmt = None
-            cm = re.match(
-                r"(?is)\s*(`?)(\w+)\1\s+(?P<type>[\s\S]+?)"
-                r"\s+comment\s+'(?P<cmt>(?:[^']|'')*)'\s*$", item)
-            if cm:
-                ty, cmt = cm.group("type").strip(), cm.group("cmt")
-            parts.append((nm, ty, cmt))
-        meta["partitions"] = parts
-    sm = re.search(
-        r"(?is)\bsort\s+by\s+(?P<ord>lexical\s+|zorder\s+)?\(",
-        tail_shadow)
-    if sm:
-        close = sqlscan.close_paren(tail_shadow, sm.end() - 1)
-        meta["sort_cols"] = [c.strip().strip("`") for c in
-                             tail[sm.end():close].split(",")
-                             if c.strip()]
-        meta["sort_order"] = (sm.group("ord") or "LEXICAL") \
-            .strip().upper()
-    # table COMMENT: at clause level (not inside parens). The
-    # length-preserving paren strip blanks literals too, so the
-    # keyword is found on the stripped text and the literal is read
-    # from the original at the same offset.
-    top = sqlscan.top_level(tail_shadow)
-    for cm in re.finditer(r"(?is)\bcomment\b", top):
-        j = cm.end()
-        while j < len(tail) and tail[j].isspace():
-            j += 1
-        lit = re.match(r"'((?:[^']|'')*)'", tail[j:])
-        if lit:
-            meta["comment"] = lit.group(1)
-            break
-    rm = _ROW_FORMAT.search(tail_shadow)
-    if rm:
-        meta["row_format"] = {
-            k: tail[rm.start(k) + 1:rm.end(k) - 1]
-            for k in ("sep", "esc", "lin") if rm.group(k)}
-    fm = re.search(r"(?is)\bstored\s+as\s+(\w+)", tail_shadow)
-    if fm:
-        meta["format"] = fm.group(1).upper()
-    tm = re.search(r"(?is)\btblproperties\s*\(", tail_shadow)
-    if tm:
-        close = sqlscan.close_paren(tail_shadow, tm.end() - 1)
-        meta["tblproperties"] = _parse_props(tail[tm.end():close])
-    meta["ctas"] = bool(re.search(r"(?is)\bas\s+select\b",
-                                  sqlscan.top_level(tail_shadow)))
-    stats.table(engine, stmt.target).create = meta
+            im = re.match(r"\s*(`?)([A-Za-z_]\w*)\1", item)
+            if im:
+                meta["aliases"].append(im.group(2))
+    meta["body"] = tail[am.end():].strip().rstrip(";")
+    return True
 
 
 # ---------------------------------------------------------------------------
@@ -363,13 +297,8 @@ def _render_table(engine, display: str, meta: dict | None,
         out.append("PARTITIONED BY (")
         out.append(",\n".join(plines))
         out.append(")")
-    sort_cols, sort_order = meta.get("sort_cols"), \
-        meta.get("sort_order")
-    if not sort_cols and sort:
-        sort_cols, sort_order = sort
-    if sort_cols:
-        out.append(f"SORT BY {sort_order or 'LEXICAL'} "
-                   f"({', '.join(sort_cols)})")
+    if sort:
+        out.append(f"SORT BY {sort[1]} ({', '.join(sort[0])})")
     if meta.get("comment"):
         out.append(f"COMMENT '{meta['comment']}'")
     rf = meta.get("row_format")

@@ -98,6 +98,54 @@ def close_paren(sql: str, open_idx: int) -> int:
     return -1
 
 
+def unquote(token: str) -> str:
+    """A literal's or backticked identifier's text as written, without
+    its quotes."""
+    return token[1:-1] if token[:1] in "'\"`" else token
+
+
+def nested(sql: str) -> str:
+    """The shadow of `sql`, backtick identifiers kept, with every
+    parenthesized span that sits inside another blanked, parens
+    included: a pattern's `\\((?P<g>[^)]*)\\)` then spans a whole
+    parenthesized list (a PARTITION spec such as `(p=upper('c'))`)
+    however deep it nests."""
+    sh = shadow(sql, idents=False)
+    out, depth, start = list(sh), 0, 0
+    for m in _PARENS.finditer(sh):
+        if m.group() == "(":
+            depth += 1
+            if depth == 2:
+                start = m.start()
+        elif depth:
+            depth -= 1
+            if depth == 1:
+                out[start:m.end()] = " " * (m.end() - start)
+    if depth >= 2:
+        out[start:] = " " * (len(sh) - start)
+    return "".join(out)
+
+
+class Sliced:
+    """A match taken on a same-length shadow of `text`; its groups
+    are sliced from `text` as written."""
+
+    def __init__(self, m: re.Match, text: str):
+        self.m, self.text = m, text
+
+    def group(self, g=0) -> str | None:
+        s, e = self.m.span(g)
+        return self.text[s:e] if s >= 0 else None
+
+
+def match(pattern: re.Pattern, text: str) -> Sliced | None:
+    """`pattern` matched at the start of `text` on its `nested` shadow:
+    keywords inside literals and comments never count, and a
+    parenthesized group nests."""
+    m = pattern.match(nested(text))
+    return m and Sliced(m, text)
+
+
 def split_top(text: str, angle: bool = False) -> list[str]:
     """Split `text` on commas outside parens, brackets, literals and
     comments; items come back stripped, empty ones dropped.

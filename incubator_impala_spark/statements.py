@@ -9,9 +9,12 @@ a `Stmt`: its kind, target table and that table's catalog record.
 `Engine.sql` runs the three.
 
 * Heads are matched only here. A handler gets the parts of what
-  follows the head (`Stmt.tail`; the statement is resolved to
-  engine-owned database names once, in `classify`); a None from it
-  runs the statement as a query.
+  follows the head (`Stmt.tail`, matched with `sqlscan.match`, so a
+  parenthesized list such as a PARTITION spec nests; the statement is
+  resolved to engine-owned database names once, in `classify`); a
+  None from it runs the statement as a query.
+* A CREATE TABLE's clauses are read once, by `parse_create`, into a
+  `Create` every consumer reads; `Create.spark` is its Spark spelling.
 * For INSERT, TRUNCATE, ALTER TABLE, DROP STATS, REFRESH, DROP TABLE
   and DROP VIEW the target's record picks the ACID variant
   (`acid.handle`).
@@ -35,6 +38,10 @@ from incubator_impala_spark import (
 from incubator_impala_spark.session import rows_df
 
 
+# a table name: backticked or bare parts, dot-separated
+_TARGET = r"(?:`[^`]*`|\w+)(?:\.(?:`[^`]*`|\w+))*"
+
+
 @dataclass
 class Stmt:
     kind: str
@@ -49,6 +56,8 @@ class Stmt:
     tail: str = ""       # what follows the head's keywords in `resolved`
     after: str = ""      # what follows the head (and target) in `resolved`
     name: str | None = None  # `target`, resolved
+    resolver: Callable = str  # what resolved it
+    create: "Create | None" = None  # parse_create's parts, once read
 
     def resolve(self, resolve=str, text: str | None = None) -> None:
         """Set `text` and resolve it once with `resolve` (the engine's
@@ -57,6 +66,7 @@ class Stmt:
         the rest."""
         if text is not None:
             self.text = text
+        self.resolver, self.create = resolve, None
         self.name = self.target and resolve(self.target)
         s, e = self.head.span("kw")
         h = self.head.end()
@@ -161,20 +171,16 @@ def _explain(engine, stmt, m):
                    "explain_string string")
 
 
-_SORT_BY = re.compile(
-    r"\bSORT\s+BY\s*(?P<ord>ZORDER|LEXICAL)?\s*\((?P<cols>[^)]*)\)",
-    re.IGNORECASE)
-
-
 def _create_drop(inner):
     """A CREATE or DROP of a table or view, run by `inner`. It replaces
     the object's catalog record only when it takes effect: the record
     goes before the statement runs and comes back when the statement
     fails or the dropped object is still there, and an IF NOT EXISTS
     no-op over an existing object keeps it (the reference reflects the
-    actual catalog). A CREATE that takes effect records its SORT BY
-    and SHOW CREATE facets; a DROP TABLE first clears the warehouse
-    directory of a table the catalog does not know."""
+    actual catalog). A CREATE that takes effect records its SHOW
+    CREATE facets and SORT BY; a DROP TABLE first clears the
+    warehouse directories of a table neither the catalog nor a record
+    knows."""
     def run(engine, stmt, m):
         if stmt.target is None:
             return inner(engine, stmt)
@@ -189,6 +195,7 @@ def _create_drop(inner):
                 pass
         elif stmt.kind == "drop_table":
             engine.clear_orphan(name)
+            acid.clear_orphan(engine, stmt.name)
         old = stats.drop(engine, name)
         try:
             out = inner(engine, stmt)
@@ -198,13 +205,6 @@ def _create_drop(inner):
             stats.put(engine, name, old)
             raise
         if create:
-            sm = _SORT_BY.search(stmt.rest) \
-                if stmt.kind == "create_table" else None
-            if sm:
-                cols = [c.strip().strip("`")
-                        for c in sm.group("cols").split(",") if c.strip()]
-                stats.table(engine, stmt.target).sort = (
-                    cols, (sm.group("ord") or "LEXICAL").upper())
             showcreate.record_create(engine, stmt)
         elif engine.spark.catalog.tableExists(name):
             # a DROP that left the object in place (DROP VIEW IF EXISTS
@@ -231,10 +231,7 @@ def _first(*handlers):
 # PARTITION clause, then the source (reference InsertStmt.java)
 _INSERT_PARTS = re.compile(
     r"\s*(?:\((?P<cols>[^)]*)\)\s*)?"
-    # static partition values may be expressions with nested calls —
-    # two paren levels covers cast('x' as char(5))
-    r"(?:PARTITION\s*\((?P<part>(?:[^()]|\((?:[^()]|\([^()]*\))*\))*)\)"
-    r"\s*)?"
+    r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?"
     r"(?P<body>(?:SELECT|WITH|VALUES)\b[\s\S]*)?$",
     re.IGNORECASE)
 _WITH = re.compile(r"\s*WITH\b", re.IGNORECASE)
@@ -293,8 +290,8 @@ def parse_insert(stmt: Stmt) -> Insert | None:
     its target, parsed with plan hints stripped (the reference allows
     /*+ clustered,shuffle */ between the target and the select); None
     when it does not parse."""
-    m = stmt.name and _INSERT_PARTS.match(
-        dialect.strip_plan_hints(stmt.after))
+    m = stmt.name and sqlscan.match(
+        _INSERT_PARTS, dialect.strip_plan_hints(stmt.after))
     if not m:
         return None
     spec = partitions.parse_spec(m.group("part"))
@@ -325,6 +322,245 @@ def _insert(engine, stmt, m):
 
 
 # ---------------------------------------------------------------------
+# CREATE TABLE
+# ---------------------------------------------------------------------
+
+_LIT = r"(?:'[^']*'|\"[^\"]*\")"   # a literal, on the shadow
+# one clause after the column list, in any order (sql-parser.cup
+# create_tbl_stmt, tbl_def_with(out)_col_defs, tbl_options; Spark's
+# USING and OPTIONS as well); a clause that opens a parenthesized list
+# ends at its `(`
+_CLAUSE = re.compile(
+    r"\s*(?:(?P<part>PARTITIONED\s+BY\s*\()"
+    r"|(?P<sort>SORT\s+BY\s*(?:(?P<ord>ZORDER|LEXICAL)\s*)?\()"
+    rf"|COMMENT\s+(?P<comment>{_LIT})"
+    r"|(?P<row_format>ROW\s+FORMAT\s+DELIMITED"
+    rf"(?:\s+FIELDS\s+TERMINATED\s+BY\s+(?P<sep>{_LIT}))?"
+    rf"(?:\s+ESCAPED\s+BY\s+(?P<esc>{_LIT}))?"
+    rf"(?:\s+LINES\s+TERMINATED\s+BY\s+(?P<lin>{_LIT}))?)"
+    r"|(?P<serde>(?:WITH\s+SERDEPROPERTIES|OPTIONS)\s*\()"
+    r"|STORED\s+AS\s+(?P<stored_as>\w+)|USING\s+(?P<using>\w+)"
+    r"|(?P<clustered>CLUSTERED\s+BY\s*\([^)]*\)"
+    r"(?:\s*SORTED\s+BY\s*\([^)]*\))?\s*INTO\s+\d+\s+BUCKETS)"
+    rf"|LOCATION\s+(?P<location>{_LIT})"
+    r"|(?P<tblprops>TBLPROPERTIES\s*\()"
+    rf"|LIKE\s+(?:(?P<like_fmt>PARQUET|ORC)\s+(?P<like_path>{_LIT})"
+    rf"|(?P<like>{_TARGET}))"
+    r"|(?P<body>AS\b))", re.IGNORECASE)
+# one column: name, type, COMMENT; a partition column may be a name
+_COLUMN = re.compile(
+    r"(?P<name>`[^`]*`|\w+)(?:\s+(?P<type>\S.*?))??"
+    rf"(?:\s+COMMENT\s+(?P<comment>{_LIT}))?\s*$",
+    re.IGNORECASE | re.DOTALL)
+_PROPERTY = re.compile(rf"({_LIT})\s*=\s*({_LIT})")
+_PROVIDERS = {"parquet": "parquet", "parquetfile": "parquet",
+              "orc": "orc", "orcfile": "orc", "avro": "avro",
+              "avrofile": "avro", "textfile": "csv", "rcfile": "csv",
+              "sequencefile": "csv"}
+# text-table semantics on Spark's csv source: whitespace kept verbatim
+# (the csv writer trims by default), NULL spelled \N (the reference's
+# text null sequence), so '' and NULL stay distinct (Spark's csv
+# writes '' quoted and reads it back as '')
+_TEXT_OPTIONS = ("ignoreLeadingWhiteSpace='false', "
+                 "ignoreTrailingWhiteSpace='false', nullValue='\\\\N'")
+
+
+def properties(raw: str | None) -> dict:
+    """The `'k'='v', ...` pairs of a property list, each as written
+    without its quotes."""
+    sh = sqlscan.shadow(raw or "")
+    return {sqlscan.unquote(raw[m.start(1):m.end(1)]):
+            sqlscan.unquote(raw[m.start(2):m.end(2)])
+            for m in _PROPERTY.finditer(sh)}
+
+
+def _columns(raw: str) -> list | None:
+    """(name, type or None, COMMENT literal or None) per item."""
+    out = []
+    for item in sqlscan.split_top(raw, angle=True):
+        m = sqlscan.match(_COLUMN, item)
+        if m is None:
+            return None
+        out.append((sqlscan.unquote(m.group("name")), m.group("type"),
+                    m.group("comment")))
+    return out
+
+
+@dataclass
+class Create:
+    """A CREATE TABLE's parts (CreateTableStmt / TableDef): names and
+    types as written, literals with their quotes, property lists as
+    the text between their parens, the target, LIKE source and CTAS
+    query resolved."""
+    name: str
+    external: bool = False
+    ine: bool = False
+    cols: list | None = None        # [(name, type, comment)]
+    part: list | None = None        # [(name, type or None, comment)]
+    sort: tuple | None = None       # ([names], 'LEXICAL' | 'ZORDER')
+    comment: str | None = None
+    row_format: dict | None = None  # {'sep'|'esc'|'lin': literal}
+    serde: str | None = None        # or Spark's OPTIONS
+    stored_as: str | None = None
+    using: str | None = None        # Spark's provider
+    clustered: str | None = None
+    location: str | None = None
+    tblprops: str | None = None
+    like: str | None = None
+    like_fmt: str | None = None
+    like_path: str | None = None
+    body: str | None = None
+
+    @property
+    def props(self) -> dict:
+        """SERDEPROPERTIES and TBLPROPERTIES, keys lower-cased."""
+        return {k.lower(): v for raw in (self.serde, self.tblprops)
+                for k, v in properties(raw).items()}
+
+    def _provider(self) -> tuple[str | None, str | None]:
+        """(Spark provider, OPTIONS text). Spark's USING is kept. ROW
+        FORMAT DELIMITED makes a text table the csv source with its
+        delimiters; another STORED AS format drops them. WITH
+        SERDEPROPERTIES are the OPTIONS otherwise. With neither clause nor STORED AS, a table of
+        scalar columns takes Impala's TEXT default ('\\x01' fields);
+        DATE and TIMESTAMP columns keep Spark's parquet default (the
+        csv source rebases pre-Gregorian values), so do complex types
+        (csv cannot store them), CTAS and LIKE."""
+        fmt = self.stored_as and self.stored_as.lower()
+        rf = self.row_format
+        if self.using:
+            return self.using, self.serde
+        if rf is not None and fmt in (None, "textfile"):
+            return "csv", ", ".join(
+                [_TEXT_OPTIONS] + [f"{o}={rf[k]}" for k, o in
+                                   (("sep", "sep"), ("esc", "escape"))
+                                   if k in rf])
+        options = self.serde if rf is None else None
+        if fmt is not None:
+            return _PROVIDERS.get(fmt), options
+        types = [t or "" for _, t, _ in (self.cols or []) +
+                 (self.part or [])]
+        if options is None and rf is None and self.cols \
+                and self.body is None and self.like is None \
+                and not any("<" in t or re.search(
+                    r"(?i)\b(date|timestamp)\b", t) for t in types):
+            return "csv", f"sep='\x01', {_TEXT_OPTIONS}"
+        return None, options
+
+    def spark(self, body: str | None = None) -> str | None:
+        """Spark's CREATE TABLE for these parts (`body` in place of the
+        CTAS query): the provider and OPTIONS from STORED AS, ROW
+        FORMAT, SERDEPROPERTIES or the TEXT default; typed partition
+        columns join the column list and PARTITIONED BY names them;
+        SORT BY is a layout hint and is left out; EXTERNAL without
+        LOCATION is a managed table. None for LIKE PARQUET|ORC,
+        which Spark cannot spell."""
+        if self.like_fmt:
+            return None
+        out = ["CREATE " + ("EXTERNAL " if self.external and self.location
+                            else "") + "TABLE "
+               + ("IF NOT EXISTS " if self.ine else "") + self.name]
+        if self.like:
+            out.append(f"LIKE {self.like}")
+        cols, names = list(self.cols or []), None
+        if self.part:
+            cols += [p for p in self.part if p[1]]
+            names = ", ".join(_quote(p[0]) for p in self.part)
+        if cols:
+            out.append("(" + ", ".join(
+                f"{_quote(n)} {t or ''}"
+                + (f" COMMENT {c}" if c else "") for n, t, c in cols) + ")")
+        provider, options = self._provider()
+        if provider:
+            out.append(f"USING {provider}")
+        elif self.stored_as:
+            out.append(f"STORED AS {self.stored_as}")
+        if options is not None:
+            out.append(f"OPTIONS ({options})")
+        if names:
+            out.append(f"PARTITIONED BY ({names})")
+        for kw, v in (("", self.clustered), ("COMMENT ", self.comment),
+                      ("LOCATION ", self.location)):
+            if v:
+                out.append(kw + v)
+        if self.tblprops is not None:
+            out.append(f"TBLPROPERTIES ({self.tblprops})")
+        body = body or self.body
+        if body is not None:
+            out.append(f"AS {body}")
+        return " ".join(out)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def parse_create(stmt: Stmt) -> Create | None:
+    """The parts of a CREATE TABLE (a classified `Stmt`), read once
+    from what follows its target as written; the LIKE source and the
+    CTAS query are resolved as the statement is. None when it does
+    not parse: an unknown or repeated clause, an unclosed list."""
+    if stmt.create is not None or stmt.kind != "create_table" \
+            or stmt.name is None:
+        return stmt.create
+    text = stmt.text[stmt.head.end():]
+    sh = sqlscan.shadow(text, idents=False)
+    c = Create(stmt.name, bool(stmt.group("ext")), bool(stmt.group("ine")))
+    pos, seen = 0, set()
+    m = re.match(r"\s*\(", sh)
+    if m:
+        end = sqlscan.close_paren(sh, m.end() - 1)
+        c.cols = end > 0 and _columns(text[m.end():end])
+        if not c.cols:
+            return None
+        pos = end + 1
+    while not re.fullmatch(r"\s*;?\s*", sh[pos:]):
+        m = _CLAUSE.match(sh, pos)
+        if m is None:
+            return None
+        key = next(k for k in ("part", "sort", "comment", "row_format",
+                               "serde", "stored_as", "using", "clustered",
+                               "location", "tblprops", "like_fmt",
+                               "like", "body") if m.group(k))
+        clause = {"like_fmt": "like", "using": "stored_as"}.get(key, key)
+        if clause in seen:
+            return None
+        seen.add(clause)
+        pos = m.end()
+        if key == "body":
+            end = len(sh[pos:].rstrip().rstrip(";").rstrip()) + pos
+            c.body = stmt.resolver(text[pos:end].strip())
+            break
+        if sh[pos - 1] == "(":
+            end = sqlscan.close_paren(sh, pos - 1)
+            if end < 0:
+                return None
+            inner, pos = text[m.end():end], end + 1
+            if key == "part":
+                c.part = _columns(inner)
+                # typed (Hive) or name-only (CTAS, Spark), not both
+                if not c.part or len({t is None for _, t, _ in c.part}) > 1:
+                    return None
+            elif key == "sort":
+                c.sort = ([sqlscan.unquote(n)
+                           for n in sqlscan.split_top(inner)],
+                          (m.group("ord") or "LEXICAL").upper())
+            else:
+                setattr(c, key, inner)
+        elif key == "row_format":
+            c.row_format = {k: text[m.start(k):m.end(k)]
+                            for k in ("sep", "esc", "lin") if m.group(k)}
+        else:   # one literal or word; LIKE PARQUET|ORC takes a path
+            for k in (key, "like_path"):
+                if m.group(k) is not None:
+                    setattr(c, k, text[m.start(k):m.end(k)])
+    if c.like:
+        c.like = stmt.resolver(c.like)
+    stmt.create = c
+    return c
+
+
+# ---------------------------------------------------------------------
 # the table
 # ---------------------------------------------------------------------
 
@@ -334,7 +570,7 @@ class Row:
     head: re.Pattern      # the keywords (group `kw`), then the target
     handler: Callable     # (engine, Stmt, parts) -> DataFrame | None
     hooks: tuple = ()
-    parts: re.Pattern | None = None   # over `Stmt.tail`
+    parts: re.Pattern | None = None   # over `Stmt.tail` (sqlscan.match)
     acid: bool = False    # the target's ACID state picks acid.handle
     # (Stmt) -> the statement's Spark spelling (dialect.py), for what
     # the handler leaves to Spark; None runs it as a query
@@ -343,7 +579,7 @@ class Row:
     def __call__(self, engine, stmt):
         if self.acid and stmt.acid is not None:
             return acid.handle(engine, stmt)
-        m = self.parts.match(stmt.tail) if self.parts else None
+        m = sqlscan.match(self.parts, stmt.tail) if self.parts else None
         out = None if self.parts and m is None else \
             self.handler(engine, stmt, m)
         if out is None:
@@ -352,14 +588,14 @@ class Row:
         return out
 
 
-# a target table: backticked or bare parts, dot-separated; a parts
-# pattern skips it (`_SKIP`), its handler takes `Stmt.name`
-_TARGET = r"(?:`[^`]*`|\w+)(?:\.(?:`[^`]*`|\w+))*"
+# a parts pattern skips the target (`_SKIP`), its handler takes
+# `Stmt.name`
 _NAME = f"(?P<target>{_TARGET})"
 _SKIP = r"\s+" + _TARGET
 _IF = r"\s+(?P<ine>IF\s+(?:NOT\s+)?EXISTS\s+)?" + _NAME
 _T = r"\s+" + _NAME
-_TABLE = r"\s+(`[\w.]+`|[A-Za-z_][\w.]*)\s*;?\s*$"
+_END = r"\s*;?\s*$"
+_ONLY = _SKIP + _END   # the target, nothing after it
 
 
 def _row(kind, head, handler=query, hooks=(), target=None, parts=None,
@@ -369,22 +605,18 @@ def _row(kind, head, handler=query, hooks=(), target=None, parts=None,
                parts and re.compile(parts, re.IGNORECASE), acid, spark)
 
 
-# one table name, the whole tail
-_ONE = re.compile(r"\s+([A-Za-z_][\w.]*)\s*;?\s*$")
-
-
-def _spell(template, pattern=_ONE):
-    """A row's Spark spelling: `template` filled from the groups of
-    `pattern` over the statement's tail; None when it does not match."""
-    return lambda stmt: (m := pattern.match(stmt.tail)) \
-        and template.format(*m.groups())
+def _spell(template):
+    """A row's Spark spelling: `template` filled with the target
+    (`Stmt.name`) when nothing follows it; None otherwise."""
+    return lambda stmt: stmt.name and re.match(_ONLY, stmt.tail) \
+        and template.format(stmt.name)
 
 
 def _refresh(stmt):
     """REFRESH t and INVALIDATE METADATA [t] (ResetMetadataStmt): Spark
     has no loaded-vs-unloaded catalog state to invalidate, so both are
     its metadata refresh; the global form flushes the whole cache."""
-    if stmt.group("inv") and re.fullmatch(r"\s*;?\s*", stmt.tail):
+    if stmt.group("inv") and re.fullmatch(_END, stmt.tail):
         return "CLEAR CACHE"
     return _spell("REFRESH TABLE {0}")(stmt)
 
@@ -413,7 +645,8 @@ ROWS = [
     _row("show_create", r"SHOW\s+CREATE\s+(?:TABLE|VIEW)\b",
          lambda e, s, m: showcreate.handle(e, s.rest), DDL),
     _row("create_table", r"CREATE\s+(?P<ext>EXTERNAL\s+)?TABLE\b",
-         _create_drop(lambda e, s: e._create_table(s)), DDL, _IF),
+         _create_drop(lambda e, s: e._create_table(s)), DDL, _IF,
+         spark=lambda s: (c := parse_create(s)) and c.spark()),
     _row("create_view", r"CREATE\s+(?:EXTERNAL\s+)?VIEW\b",
          _create_drop(lambda e, s: e.ns.create_view(e, s)), DDL, _IF),
     _row("drop_table", r"DROP\s+(?:EXTERNAL\s+)?TABLE\b",
@@ -450,27 +683,27 @@ ROWS = [
         lambda e, s: altertable.handle(e, s),
         lambda e, s: e._set_column_stats(s)), DDL, _T, acid=True),
     _row("show_partitions", r"SHOW\s+PARTITIONS\b",
-         lambda e, s, m: partitions.show_partitions(e, m.group(1)),
-         DDL, _T, parts=_TABLE),
+         lambda e, s, m: partitions.show_partitions(e, s.name),
+         DDL, _T, parts=_ONLY),
     # SHOW TABLE/COLUMN STATS t (ShowStatsStmt.java): Spark's closest
     # shape is the extended describe, whose Statistics row carries the
     # ANALYZE-computed numbers
     _row("show_column_stats", r"SHOW\s+COLUMN\s+STATS\b",
-         lambda e, s, m: e._show_column_stats(m.group(1)), DDL, _T,
-         parts=_TABLE, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
+         lambda e, s, m: e._show_column_stats(s.name), DDL, _T,
+         parts=_ONLY, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
     _row("show_table_stats", r"SHOW\s+TABLE\s+STATS\b",
-         lambda e, s, m: partitions.show_table_stats(e, m.group(1)),
-         DDL, _T, parts=_TABLE, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
+         lambda e, s, m: partitions.show_table_stats(e, s.name),
+         DDL, _T, parts=_ONLY, spark=_spell("DESCRIBE TABLE EXTENDED {0}")),
     _row("show_files", r"SHOW\s+FILES\s+IN\b",
-         lambda e, s, m: partitions.show_files(e, m.group(1),
-                                               m.group("spec")), DDL, _T,
-         parts=r"\s+([A-Za-z_][\w.]*)(?:\s+PARTITION\s*\((?P<spec>"
-               r"(?:[^()]|\([^()]*\))*)\))?\s*;?\s*$"),
+         lambda e, s, m: partitions.show_files(e, s.name, m.group("spec")),
+         DDL, _T, parts=_SKIP + r"(?:\s+PARTITION\s*\((?P<spec>[^)]*)\))?"
+                          + _END),
     _row("describe_db", r"DESCRIBE\s+(?:DATABASE|SCHEMA)\b",
          **_ns("describe_db", namespaces.DESCRIBE_DB)),
     _row("describe", r"DESCRIBE\b", lambda e, s, m: e._describe(s), DDL,
-         spark=_spell("DESCRIBE TABLE EXTENDED {0}", re.compile(
-             r"\s+FORMATTED" + _ONE.pattern, re.IGNORECASE))),
+         spark=lambda s: (m := re.match(
+             r"(?i)\s+FORMATTED\s+([A-Za-z_][\w.]*)" + _END, s.tail))
+         and f"DESCRIBE TABLE EXTENDED {m.group(1)}"),
     # COMPUTE [INCREMENTAL] STATS t [(col, ...)] [PARTITION (spec)]
     # (ComputeStatsStmt.java)
     _row("compute_stats", r"COMPUTE\s+(?P<inc>INCREMENTAL\s+)?STATS\b",
@@ -556,9 +789,10 @@ def classify(engine, sql_text: str) -> Stmt:
 
 
 def translate_statement(sql_text: str) -> str | None:
-    """The Spark spelling of a statement a row translates (function
-    DDL, REFRESH and INVALIDATE METADATA, DESCRIBE FORMATTED, COMPUTE
-    STATS, SHOW TABLE/COLUMN STATS); None for the rest."""
+    """The Spark spelling of a statement a row translates (CREATE
+    TABLE, function DDL, REFRESH and INVALIDATE METADATA, DESCRIBE
+    FORMATTED, COMPUTE STATS, SHOW TABLE/COLUMN STATS); None for the
+    rest."""
     stmt = parse(sql_text)
     stmt.resolve()
     return stmt.row.spark(stmt) if stmt.row.spark else None

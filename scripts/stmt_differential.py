@@ -22,7 +22,10 @@ issues against two checkouts and compare rows and error texts.
 `--extra FILE` appends statement sessions of its own (one JSON object
 per line: {"file": session name, "text": statement}), such as a
 perfbench load session. An outcome is the result's schema and rows
-(each value's repr), or the error's class and message. What varies
+(each value's repr), or the error's class and message; a CREATE TABLE
+that succeeds adds the created table's catalog facts (DESCRIBE TABLE
+EXTENDED: provider, schema, partition columns, storage and table
+properties; Location left out, Created Time masked). What varies
 from run to run is masked: JVM object and plan expression ids (they
 count py4j calls), file UUIDs, creation times, sampling seeds and the
 replay's working directory.
@@ -122,8 +125,20 @@ def _fresh(base):
     return spark
 
 
+def _catalog(eng, stmt) -> list:
+    """The created table's DESCRIBE TABLE EXTENDED rows, masked."""
+    name = eng.ns.resolve(stmt.target)
+    try:
+        rows = eng.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    except Exception as e:  # noqa: BLE001 — the outcome compared
+        return [_mask(f"{type(e).__name__}: {e}")]
+    return [_mask(repr(tuple(row))) for row in rows
+            if row[0] != "Location"]
+
+
 def replay(args) -> int:
     sys.path.insert(0, os.path.abspath(args.repo))
+    from incubator_impala_spark import statements
     from incubator_impala_spark.engine import Engine
     from incubator_impala_spark.session import get_spark
 
@@ -151,6 +166,9 @@ def replay(args) -> int:
                 res["schema"] = df.schema.simpleString()
                 res["rows"] = [_mask(repr(tuple(row)))
                                for row in df.collect()]
+                stmt = statements.parse(r["text"])
+                if stmt.kind == "create_table" and stmt.target:
+                    res["catalog"] = _catalog(eng, stmt)
             except Exception as e:  # noqa: BLE001 — the outcome compared
                 res["error"] = _mask(f"{type(e).__name__}: {e}")
             out.write(json.dumps(res) + "\n")
@@ -162,7 +180,7 @@ def replay(args) -> int:
 def compare(args) -> int:
     old = [json.loads(ln) for ln in open(args.old)]
     new = [json.loads(ln) for ln in open(args.new)]
-    keys = ("schema", "rows", "error")
+    keys = ("schema", "rows", "error", "catalog")
     diffs = 0
     for a, b in zip(old, new):
         assert (a["file"], a["text"]) == (b["file"], b["text"])

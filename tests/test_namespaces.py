@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from incubator_impala_spark import dialect
+from incubator_impala_spark import dialect, statements
 from incubator_impala_spark.namespaces import impala_pattern, _sig
 
 
@@ -190,7 +190,7 @@ def test_create_table_like_partitioned(ns_engine, spark):
 
 
 def test_row_format_rewrite():
-    out = dialect.translate(
+    out = statements.translate_statement(
         "create table t (a int, b string) row format delimited "
         "fields terminated by '|' stored as textfile")
     assert "row format" not in out.lower()
@@ -202,7 +202,7 @@ def test_row_format_rewrite():
 
 
 def test_ctas_clause_order():
-    out = dialect.translate(
+    out = statements.translate_statement(
         "create table t partitioned by (year, month) "
         "stored as parquet as select * from x")
     iu = out.lower().index("using parquet")
@@ -211,6 +211,6 @@ def test_ctas_clause_order():
 
 
 def test_create_sort_by_stripped():
-    out = dialect.translate(
+    out = statements.translate_statement(
         "create table t (i int) sort by zorder (i) stored as parquet")
     assert "sort by" not in out.lower()

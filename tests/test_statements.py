@@ -10,8 +10,15 @@
   it (CREATE, INSERT, and DROP TABLE of an insert-only ACID table).
 - The target's record picks the ACID variant of INSERT, TRUNCATE,
   REFRESH, ALTER TABLE, DROP STATS and DROP TABLE.
-- The write rows (INSERT, TRUNCATE, COMPUTE STATS, DROP STATS) take the
-  classified target, so a backticked one runs as a bare one does.
+- The write rows (INSERT, TRUNCATE, COMPUTE STATS, DROP STATS) and the
+  SHOW rows take the classified target, so a backticked one runs as a
+  bare one does.
+- `parse_create` reads a CREATE TABLE's clauses in any order, blind to
+  literals and comments, and `Create.spark` spells it for Spark (no
+  Spark needed).
+- A PARTITION spec nests: LOAD DATA and COMPUTE INCREMENTAL STATS fold
+  `PARTITION (p=upper('c'))`.
+- DROP TABLE of an ACID table an earlier session made clears its files.
 - Importing the engine does not load pyarrow.
 """
 
@@ -110,6 +117,130 @@ def test_statement_spellings():
     assert translate_statement("COMPUTE INCREMENTAL STATS d.t") == \
         "ANALYZE TABLE d.t COMPUTE STATISTICS FOR ALL COLUMNS"
     assert translate_statement("SELECT 'REFRESH t'") is None
+
+
+# ---------------------------------------------------------------------
+# CREATE TABLE parts (no Spark)
+# ---------------------------------------------------------------------
+
+def _create(text):
+    from incubator_impala_spark import statements
+
+    stmt = statements.parse(text)
+    stmt.resolve()
+    return statements.parse_create(stmt)
+
+
+_CLAUSES = ["PARTITIONED BY (p INT COMMENT 'key')", "SORT BY (a)",
+            "COMMENT 'tbl'", "ROW FORMAT DELIMITED FIELDS TERMINATED BY ','",
+            "WITH SERDEPROPERTIES ('k'='v')", "STORED AS TEXTFILE",
+            "LOCATION '/w/t'", "TBLPROPERTIES ('x'='y')"]
+
+
+@pytest.mark.parametrize("order", [_CLAUSES, _CLAUSES[::-1],
+                                   _CLAUSES[3:] + _CLAUSES[:3]])
+def test_create_clauses_in_any_order(order):
+    c = _create("CREATE EXTERNAL TABLE IF NOT EXISTS t (a INT) "
+                + " ".join(order))
+    assert (c.name, c.external, c.ine) == ("t", True, True)
+    assert c.cols == [("a", "INT", None)]
+    assert c.part == [("p", "INT", "'key'")]
+    assert c.sort == (["a"], "LEXICAL")
+    assert (c.comment, c.row_format, c.serde, c.stored_as, c.location,
+            c.tblprops) == ("'tbl'", {"sep": "','"}, "'k'='v'", "TEXTFILE",
+                            "'/w/t'", "'x'='y'")
+    assert c.props == {"k": "v", "x": "y"}
+
+
+@pytest.mark.parametrize("text, parts", [
+    # keywords inside literals and comments are data
+    ("CREATE TABLE t (a INT COMMENT 'STORED AS ORC, b') "
+     "/* LOCATION '/x' */ COMMENT 'AS SELECT 1' -- SORT BY (a)\n"
+     "STORED AS PARQUET",
+     dict(cols=[("a", "INT", "'STORED AS ORC, b'")], location=None,
+          comment="'AS SELECT 1'", sort=None, body=None)),
+    # backticked and db-qualified names
+    ("CREATE TABLE `db`.`t` (`my col` INT, `select` STRING) "
+     "SORT BY ZORDER (`my col`)",
+     dict(name="`db`.`t`", cols=[("my col", "INT", None),
+                                 ("select", "STRING", None)],
+          sort=(["my col"], "ZORDER"))),
+    ("create table db.t (a int)", dict(name="db.t")),
+    # nested types
+    ("CREATE TABLE t (s STRUCT<a:DECIMAL(5,2), b:STRING COMMENT 'x'>, "
+     "m MAP<STRING,ARRAY<INT>> COMMENT 'c')",
+     dict(cols=[("s", "STRUCT<a:DECIMAL(5,2), b:STRING COMMENT 'x'>",
+                 None), ("m", "MAP<STRING,ARRAY<INT>>", "'c'")])),
+    # partition columns with comments
+    ("CREATE TABLE t (a INT) PARTITIONED BY (y INT COMMENT 'year', "
+     "d DECIMAL(9, 2) COMMENT 'd')",
+     dict(part=[("y", "INT", "'year'"), ("d", "DECIMAL(9, 2)", "'d'")])),
+    # CTAS with a name-only PARTITIONED BY
+    ("CREATE TABLE t PARTITIONED BY (y, m) STORED AS PARQUET AS "
+     "SELECT * FROM src WHERE s = 'AS' ;",
+     dict(cols=None, part=[("y", None, None), ("m", None, None)],
+          body="SELECT * FROM src WHERE s = 'AS'")),
+    # both LIKE forms
+    ("CREATE TABLE t LIKE db.src STORED AS PARQUET LOCATION '/l'",
+     dict(like="db.src", stored_as="PARQUET", location="'/l'")),
+    ("CREATE TABLE t LIKE PARQUET '/f/0.parq' PARTITIONED BY (p INT)",
+     dict(like=None, like_fmt="PARQUET", like_path="'/f/0.parq'",
+          part=[("p", "INT", None)])),
+])
+def test_parse_create(text, parts):
+    c = _create(text)
+    assert {k: getattr(c, k) for k in parts} == parts
+
+
+@pytest.mark.parametrize("text", [
+    "CREATE TABLE t (a INT) CACHED IN 'pool'",           # no such clause
+    "CREATE TABLE t (a INT) STORED AS ORC STORED AS PARQUET",  # repeated
+    "CREATE TABLE t (a INT) PARTITIONED BY (p INT, q)",  # typed and not
+    "CREATE TABLE t (a INT",                             # unclosed
+])
+def test_parse_create_refuses(text):
+    assert _create(text) is None
+
+
+@pytest.mark.parametrize("text, spark", [
+    ("create table t (a int) partitioned by (p string comment 'k') "
+     "stored as parquet",
+     "CREATE TABLE t (`a` int, `p` string COMMENT 'k') USING parquet "
+     "PARTITIONED BY (`p`)"),
+    ("CREATE EXTERNAL TABLE t (a INT) STORED AS ORC",
+     "CREATE TABLE t (`a` INT) USING orc"),
+    ("CREATE EXTERNAL TABLE t (a INT) STORED AS ORC LOCATION '/l'",
+     "CREATE EXTERNAL TABLE t (`a` INT) USING orc LOCATION '/l'"),
+    ("CREATE TABLE t (a INT) ROW FORMAT DELIMITED FIELDS TERMINATED BY '|' "
+     "ESCAPED BY '\\\\' WITH SERDEPROPERTIES ('k'='v')",
+     "CREATE TABLE t (`a` INT) USING csv OPTIONS (ignoreLeadingWhiteSpace="
+     "'false', ignoreTrailingWhiteSpace='false', nullValue='\\\\N', "
+     "sep='|', escape='\\\\')"),
+    ("CREATE TABLE t (a INT) COMMENT 'c'",
+     "CREATE TABLE t (`a` INT) USING csv OPTIONS (sep='\x01', "
+     "ignoreLeadingWhiteSpace='false', ignoreTrailingWhiteSpace='false', "
+     "nullValue='\\\\N') COMMENT 'c'"),
+    ("CREATE TABLE t (a INT, d DATE)", "CREATE TABLE t (`a` INT, `d` DATE)"),
+    # the TEXT default looks at the types, not at a comment's words
+    ("CREATE TABLE t (a INT COMMENT 'a date')",
+     "CREATE TABLE t (`a` INT COMMENT 'a date') USING csv OPTIONS "
+     "(sep='\x01', ignoreLeadingWhiteSpace='false', "
+     "ignoreTrailingWhiteSpace='false', nullValue='\\\\N')"),
+    ("CREATE TABLE t (a INT) WITH SERDEPROPERTIES ('k'='v') "
+     "STORED AS AVRO TBLPROPERTIES ('x'='y')",
+     "CREATE TABLE t (`a` INT) USING avro OPTIONS ('k'='v') "
+     "TBLPROPERTIES ('x'='y')"),
+    ("CREATE TABLE IF NOT EXISTS t LIKE s", "CREATE TABLE IF NOT EXISTS t "
+     "LIKE s"),
+    # Spark's own spelling passes through
+    ("CREATE TABLE d.t (x INT) USING csv OPTIONS (sep=',')",
+     "CREATE TABLE d.t (`x` INT) USING csv OPTIONS (sep=',')"),
+    ("CREATE TABLE t LIKE PARQUET '/f'", None),
+])
+def test_create_spark_spelling(text, spark):
+    from incubator_impala_spark.statements import translate_statement
+
+    assert translate_statement(text) == spark
 
 
 def test_every_row_has_a_case():
@@ -381,3 +512,99 @@ def test_importing_the_engine_does_not_load_pyarrow():
         check=True, cwd=os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))))
     assert out.stdout.strip() == "False"
+
+
+# ---------------------------------------------------------------------
+# the SHOW rows take the classified target
+# ---------------------------------------------------------------------
+
+@pytest.mark.parametrize("show", ["SHOW TABLE STATS", "SHOW COLUMN STATS",
+                                  "SHOW PARTITIONS", "SHOW FILES IN"])
+def test_backticked_show_targets(eng, show):
+    _reset(eng)
+    eng.sql("CREATE TABLE stc_p (a INT) PARTITIONED BY (y INT) "
+            "STORED AS PARQUET")
+    eng.sql("INSERT INTO stc_p PARTITION (y=1) VALUES (5)")
+    assert _rows(eng, f"{show} `default`.`stc_p`") == \
+        _rows(eng, f"{show} stc_p")
+
+
+# ---------------------------------------------------------------------
+# a PARTITION spec nests
+# ---------------------------------------------------------------------
+
+def test_partition_spec_with_nested_parens(eng, tmp_path):
+    _reset(eng)
+    eng.sql("CREATE TABLE stc_p (a INT) PARTITIONED BY (p STRING) "
+            "STORED AS PARQUET")
+    eng.spark.range(3).selectExpr("cast(id as int) a") \
+        .coalesce(1).write.parquet(str(tmp_path / "src"))
+    assert _rows(eng, f"LOAD DATA INPATH '{tmp_path / 'src'}' INTO TABLE "
+                      f"stc_p PARTITION (p=upper('c'))")[0][0].startswith(
+        "Loaded 1 file(s).")
+    assert sorted(_rows(eng, "SELECT a, p FROM stc_p")) == [
+        (0, "C"), (1, "C"), (2, "C")]
+    assert _rows(eng, "COMPUTE INCREMENTAL STATS stc_p "
+                      "PARTITION (p=upper('c'))") == [
+        ("Updated 1 partition(s) and 1 column(s).",)]
+    assert [r[:2] for r in _rows(eng, "SHOW PARTITIONS stc_p")] == [
+        ("C", 3), ("Total", 3)]
+
+
+# ---------------------------------------------------------------------
+# DROP TABLE of an ACID table no record holds
+# ---------------------------------------------------------------------
+
+def test_drop_clears_acid_files_of_an_earlier_session(eng):
+    from incubator_impala_spark.engine import Engine
+
+    _reset(eng)
+    first = Engine(eng.spark.newSession())
+    first.sql(f"CREATE TABLE stc_acid (a INT) STORED AS PARQUET {_ACID}")
+    first.sql("INSERT INTO stc_acid VALUES (1)")
+    first.sql("TRUNCATE TABLE stc_acid")
+    second = Engine(eng.spark.newSession())
+    second.sql("DROP TABLE IF EXISTS stc_acid")
+    second.sql(f"CREATE TABLE stc_acid (a INT) STORED AS PARQUET {_ACID}")
+    # two writes: the earlier session's base_2 would cover both
+    second.sql("INSERT INTO stc_acid VALUES (2)")
+    second.sql("INSERT INTO stc_acid VALUES (3)")
+    try:
+        assert sorted(_rows(second, "SELECT a FROM stc_acid")) == [
+            (2,), (3,)]
+    finally:
+        second.sql("DROP TABLE stc_acid")
+
+
+# ---------------------------------------------------------------------
+# CREATE TABLE from its parts
+# ---------------------------------------------------------------------
+
+@pytest.mark.parametrize("text", [
+    "CREATE TABLE stc_t AS VALUES (1, 'a'), (2, 'b')",
+    "CREATE EXTERNAL TABLE stc_t AS SELECT 1 AS _c0, 'a' AS _c1 "
+    "UNION ALL SELECT 2, 'b'",
+])
+def test_ctas_counts_its_rows(eng, text):
+    _reset(eng)
+    assert _rows(eng, text) == [("Inserted 2 row(s)",)]
+    assert sorted(_rows(eng, "SELECT _c0, _c1 FROM stc_t")) == [
+        (1, "a"), (2, "b")]
+
+
+def test_create_column_named_like_a_table_under_use(eng):
+    # a column definition names no table: `t` stays `t` under USE
+    _reset(eng)
+    eng.sql("CREATE DATABASE stc_db")
+    eng.sql("CREATE TABLE stc_db.t (a INT) STORED AS PARQUET")
+    eng.sql("USE stc_db")
+    eng.sql("CREATE TABLE stc_t (t INT) STORED AS PARQUET")
+    eng.sql("USE default")
+    assert eng.spark.table("stc_t").columns == ["t"]
+
+
+def test_unparsed_create_runs_as_written(eng):
+    _reset(eng)
+    with pytest.raises(Exception,
+                       match=r"CREATE TABLE stc_t \(a INT\) CACHED IN"):
+        eng.sql("CREATE TABLE stc_t (a INT) CACHED IN 'pool'")
